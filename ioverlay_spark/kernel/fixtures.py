@@ -52,10 +52,6 @@ def load_fixture(index: int, fixture_dir: str = FIXTURE_DIR) -> dict:
     return out
 
 
-def fixture_count(fixture_dir: str = FIXTURE_DIR) -> int:
-    return len([n for n in os.listdir(fixture_dir) if n.startswith("test_")])
-
-
 def _canon_ring(ring: np.ndarray) -> tuple:
     pts = [(int(x), int(y)) for x, y in ring]
     k = min(range(len(pts)), key=lambda i: pts[i])

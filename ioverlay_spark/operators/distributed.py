@@ -78,16 +78,6 @@ def merge_segments_df(segs: DataFrame, extra_aggs: dict[str, str] | None = None)
     )
 
 
-def _cell_cover_expr(level_col_free: int, grid_min: int, cell_size: int):
-    """sequence of covered cell columns for a segment bbox."""
-    return (
-        f"sequence( (least(ax, bx) - {grid_min}) DIV {cell_size},"
-        f" (greatest(ax, bx) - {grid_min}) DIV {cell_size} )",
-        f"sequence( (least(ay, by) - {grid_min}) DIV {cell_size},"
-        f" (greatest(ay, by) - {grid_min}) DIV {cell_size} )",
-    )
-
-
 _PAIR_BLOCK = int(os.environ.get("SPARK_GRAFT_PAIR_BLOCK", "4000000"))
 
 
@@ -599,19 +589,10 @@ def split_segments_df(
     spark_parts = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     from ..session import audit_desc
 
-    mx2_range = None  # global doubled-x range (splitting never leaves the bbox)
-    cmax_global = None
     for rnd in range(max_rounds):
         if bounds is None:
             audit_desc(segs.sparkSession, f"split:bounds r{rnd}")
             bounds = _count_and_bounds(segs)  # one scalar job: count + bbox
-        if mx2_range is None:
-            mx2_range = (2 * bounds[1], 2 * bounds[2])
-            # global coordinate cap for downstream dtype narrowing: splitting
-            # never leaves the input bbox and snap-rounded marks move <= 1
-            cmax_global = (
-                max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4])) + 2
-            )
         last_n = bounds[0]
         # parallelism floor: crossing-DENSE inputs (few long segments, many
         # intersections) would otherwise land in one cell and serialize the
@@ -727,9 +708,6 @@ def split_segments_df(
     if n_hint is None:
         n_hint = last_n
     segs._ioverlay_n_segments = n_hint  # fills sizing hint (skips a count job)
-    segs._ioverlay_mx2_range = mx2_range  # strip-rank outer bucket bounds
-    if cmax_global is not None:
-        segs._ioverlay_cmax = cmax_global  # bbox cap for dtype narrowing
     return segs
 
 
@@ -762,47 +740,52 @@ _FILL_ARROW_SCHEMA = pa.schema(
     ]
 )
 
-# boundary-filtered fill output: extraction reads only coordinates + fill
-# bits, so the pushed-down-boundary path drops subj/clip from the kernel's
-# Arrow emit, the checkpoint and every downstream shuffle (2/7 of the bytes)
-FILL_BOUNDARY_SCHEMA = StructType(
+# boundary-blob fill output (compute_fills_df with boundary_rule): ONE row per
+# fill reduce partition holding the partition's whole boundary set as a raw
+# buffer — ax|ay|bx|by (cnt each, wc-byte words) then fill (cnt uint8). cnt and
+# cmax ride as columns so extract's metadata job is a trivial sum/max over
+# ~n_partitions rows instead of a scan of millions.
+BOUNDARY_BLOB_SCHEMA = StructType(
     [
-        StructField("ax", LongType()),
-        StructField("ay", LongType()),
-        StructField("bx", LongType()),
-        StructField("by", LongType()),
-        StructField("fill", IntegerType()),
-    ]
-)
-
-_FILL_BOUNDARY_ARROW_SCHEMA = pa.schema(
-    [
-        ("ax", pa.int64()),
-        ("ay", pa.int64()),
-        ("bx", pa.int64()),
-        ("by", pa.int64()),
-        ("fill", pa.int32()),
+        StructField("cnt", LongType()),
+        StructField("wc", IntegerType()),  # coord word size: 4 or 8
+        StructField("cmax", LongType()),
+        StructField("xyf", BinaryType()),
     ]
 )
 
 
-def _fill_strips_sorted(
-    ax, ay, bx, by, subj, clip, is_home, s, fill_rule, boundary_rule,
-    boundary_blob=False,
-):
-    """Shared strip-fill core: arrays already sorted by strip id `s`; runs the
-    windowed fill per contiguous strip slice and yields the output batches
-    (boundary-filtered when boundary_rule is set). Used by both the row-explode
-    (_strip_fill_iter) and the packed-chain (_packed_fill_iter) shuffles.
+def _boundary_blob_batch(ax, ay, bx, by, fill) -> pa.RecordBatch:
+    """Pack one boundary set into a single BOUNDARY_BLOB_SCHEMA row. Coordinate
+    words narrow to int32 when the actual values fit (the reader re-widens)."""
+    cmax = max(int(np.abs(c).max(initial=0)) for c in (ax, ay, bx, by))
+    cdt = np.int32 if cmax < 2**31 else np.int64
+    blob = (
+        b"".join(c.astype(cdt, copy=False).tobytes() for c in (ax, ay, bx, by))
+        + fill.astype(np.uint8, copy=False).tobytes()
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([len(ax)], type=pa.int64()),
+            pa.array([cdt().itemsize], type=pa.int32()),
+            pa.array([cmax], type=pa.int64()),
+            pa.array([blob], type=pa.binary()),
+        ],
+        names=["cnt", "wc", "cmax", "xyf"],
+    )
 
-    boundary_blob=True (requires boundary_rule): instead of per-segment rows,
-    emit ONE BOUNDARY_BLOB_SCHEMA row for the whole partition — the kernel
+
+def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, boundary_rule):
+    """Strip-fill core: arrays already sorted by strip id `s`; runs the
+    windowed fill per contiguous strip slice and keeps the home-strip rows.
+
+    Without boundary_rule it yields FILL_SCHEMA batches, one row per segment.
+    With boundary_rule it keeps only that rule's result-boundary segments and
+    yields ONE BOUNDARY_BLOB_SCHEMA row for the whole partition: the kernel
     already holds the boundary set as numpy arrays, so packing here costs one
-    concatenate+tobytes and NO extra Arrow crossing (unlike the retired
-    post-checkpoint pack stage, BENCH.md round-5 closing #2). The downstream
-    64->1 exchange into the fused extract then moves ~n_partitions blob rows
-    instead of millions of segment rows, and the boundary checkpoint stores
-    binary blobs instead of per-row UnsafeRows."""
+    concatenate+tobytes and no extra Arrow crossing. The downstream 64->1
+    exchange into the fused extract then moves ~n_partitions blob rows
+    instead of millions of segment rows."""
     from ..kernel.extract import boundary_mask
     from ..kernel.fill import compute_fills_windowed
     from ..kernel.segments import Segments
@@ -829,7 +812,7 @@ def _fill_strips_sorted(
                 (
                     ax[lo:hi][mask], ay[lo:hi][mask],
                     bx[lo:hi][mask], by[lo:hi][mask],
-                    fills[mask].astype(np.uint8 if boundary_blob else np.int32),
+                    fills[mask].astype(np.uint8),
                 )
             )
         else:
@@ -843,46 +826,13 @@ def _fill_strips_sorted(
             )
     if not outs:
         return
-    if boundary_blob:
-        AX, AY, BX, BY, FL = (
-            np.concatenate([o[k] for o in outs]) for k in range(5)
-        )
-        cmax = max(int(np.abs(c).max(initial=0)) for c in (AX, AY, BX, BY))
-        cdt = np.int32 if cmax < 2**31 else np.int64
-        blob = (
-            b"".join(c.astype(cdt, copy=False).tobytes() for c in (AX, AY, BX, BY))
-            + FL.tobytes()
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([len(AX)], type=pa.int64()),
-                pa.array([cdt().itemsize], type=pa.int32()),
-                pa.array([cmax], type=pa.int64()),
-                pa.array([blob], type=pa.binary()),
-            ],
-            names=["cnt", "wc", "cmax", "xyf"],
-        )
-        return
-    schema = (
-        _FILL_BOUNDARY_ARROW_SCHEMA if boundary_rule is not None else _FILL_ARROW_SCHEMA
-    )
     cols = [np.concatenate([o[k] for o in outs]) for k in range(len(outs[0]))]
-    yield from pa.Table.from_arrays([pa.array(c) for c in cols], schema=schema).to_batches()
-
-
-# boundary-blob fill output (compute_fills_df boundary_blob=True): ONE row per
-# fill reduce partition holding the partition's whole boundary set as a raw
-# buffer — ax|ay|bx|by (cnt each, wc-byte words) then fill (cnt uint8). cnt and
-# cmax ride as columns so extract's metadata job is a trivial sum/max over
-# ~n_partitions rows instead of a scan of millions.
-BOUNDARY_BLOB_SCHEMA = StructType(
-    [
-        StructField("cnt", LongType()),
-        StructField("wc", IntegerType()),  # coord word size: 4 or 8
-        StructField("cmax", LongType()),
-        StructField("xyf", BinaryType()),
-    ]
-)
+    if boundary_rule is not None:
+        yield _boundary_blob_batch(*cols)
+        return
+    yield from pa.Table.from_arrays(
+        [pa.array(c) for c in cols], schema=_FILL_ARROW_SCHEMA
+    ).to_batches()
 
 
 # packed strip-chain shuffle rows: one row per (upstream partition, strip)
@@ -904,9 +854,11 @@ PACKED_STRIP_SCHEMA = StructType(
 
 def _pack_strips_iter(edges):
     """Map-side pack stage (mapInArrow): compute each segment's strip span
-    (np.searchsorted against the driver's quantile edges — same count-of-
-    edges<=v semantics as _strip_rank_expr), explode via np.repeat, sort by
-    strip ONCE, and emit one binary-blob row per strip present in the
+    (np.searchsorted against the driver's quantile edges: the strip of a
+    doubled-x value is the count of edges <= it, monotone, so the span
+    [strip(2ax), strip(2bx)] always holds the home strip(ax + bx); with no
+    edges every segment sits in strip 0 as home), explode via np.repeat,
+    sort by strip ONCE, and emit one binary-blob row per strip present in the
     partition. Coord/winding words narrow to int32 per partition when the
     actual values fit (the reader re-widens; fill math is unchanged)."""
     E = np.asarray(edges, dtype=np.int64)
@@ -1052,14 +1004,15 @@ def _pack_arrays(ax, ay, bx, by, subj, clip, E):
 
 
 
-def _packed_fill_iter(
-    fill_rule: FillRule,
-    boundary_rule: OverlayRule | None = None,
-    boundary_blob: bool = False,
-):
+def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = None):
     """Reduce-side unpack + fill (mapInArrow over PACKED_STRIP_SCHEMA rows):
     parse each blob row back to arrays (np.frombuffer memcpy), concatenate the
-    rows of each strip in strip order, and run the shared strip-fill core."""
+    rows of each strip in strip order, and run the strip-fill core.
+
+    Per strip: windings of home segments against ALL segments crossing the
+    strip (compute fills on the union, keep rows for home segments only).
+    allow_sweep=False — a strip group is a SUBSET of the global segment set,
+    and only the ray-at-midpoint fill formulations are subset-safe."""
 
     def it(batches):
         chunks = list(batches)
@@ -1099,109 +1052,10 @@ def _packed_fill_iter(
             np.concatenate(p_su), np.concatenate(p_cl),
             np.concatenate(p_hm).astype(bool),
             np.concatenate(p_s),
-            fill_rule, boundary_rule, boundary_blob,
+            fill_rule, boundary_rule,
         )
 
     return it
-
-
-def _strip_fill_iter(
-    fill_rule: FillRule,
-    boundary_rule: OverlayRule | None = None,
-    boundary_blob: bool = False,
-):
-    """Partition-level strip fill (mapInArrow): the partition holds whole
-    strips (repartition on the strip key); the python side sorts by strip ONCE
-    (numpy, vectorized) and runs the windowed fill kernel per contiguous strip
-    slice. Replaces a grouped-map applyInPandas — the grouped-map plan sorts
-    every partition JVM-side and pays per-group Arrow overhead; here the rows
-    cross into python once per PARTITION.
-
-    Per strip: windings of home segments against ALL segments crossing the
-    strip (compute fills on the union, keep rows for home segments only).
-    allow_sweep=False — a strip group is a SUBSET of the global segment set,
-    and only the ray-at-midpoint fill formulations are subset-safe.
-
-    boundary_rule: extraction's boundary filter pushed into the kernel — the
-    stage ships only result-boundary rows (extract takes pre_filtered=True)."""
-
-    def it(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
-        if not len(tbl):
-            return
-
-        def col(name, dtype=np.int64):
-            return tbl.column(name).to_numpy(zero_copy_only=False).astype(
-                dtype, copy=False
-            )
-
-        strip = col("strip", np.int64)
-        order = np.argsort(strip, kind="stable")
-        yield from _fill_strips_sorted(
-            col("ax")[order], col("ay")[order], col("bx")[order], col("by")[order],
-            col("subj")[order], col("clip")[order], col("is_home", bool)[order],
-            strip[order], fill_rule, boundary_rule, boundary_blob,
-        )
-
-    return it
-
-
-def _bsearch_rank_expr(vexpr: str, edges: list[int]) -> str:
-    """SQL for `np.searchsorted(edges, vexpr, side="right")`: a balanced
-    nested-IF tree returning the count of edges <= value. log2(len(edges))
-    comparisons per row, fully codegen-able — no python in the plan.
-
-    Keep the tree SMALL (<= ~15 edges): the generated Java contains every
-    branch, and past ~60 IF nodes the method exceeds HotSpot's huge-method
-    JIT limit — the expression then runs in the bytecode interpreter
-    (measured 15x: 0.33 s vs 4.7/5.3 s for 15/63/255 edges over 16.8 M rows).
-    Larger strip counts go through _strip_rank_expr's two-level scheme."""
-
-    def gen(lo: int, hi: int) -> str:
-        if lo == hi:
-            return str(lo)
-        mid = (lo + hi) // 2
-        return (
-            f"(IF(({vexpr}) < {int(edges[mid])}L, "
-            f"{gen(lo, mid)}, {gen(mid + 1, hi)}))"
-        )
-
-    return gen(0, len(edges))
-
-
-def _strip_rank_expr(vexpr: str, edges: list[int], lo2: int, hi2: int) -> str:
-    """Strip index for large strip counts: a JIT-sized coarse quantile rank
-    (<= 15-edge IF tree) times a uniform arithmetic subdivision of the coarse
-    bucket's value range. Strip edges only steer LOAD BALANCE — fill values
-    are exact for any monotone bucketization (each segment is still evaluated
-    against everything crossing its home strip) — so snapping the fine level
-    to uniform-within-bucket trades nothing but balance granularity, and the
-    coarse level still absorbs global skew. Monotone in vexpr (coarse rank is
-    monotone; the fine term is clamped to its bucket), so s_lo <= s_mid <=
-    s_hi holds and sequence(s_lo, s_hi) always covers the home strip.
-    lo2/hi2: global doubled-x data range (outermost bucket bounds). All fine
-    arithmetic runs in DOUBLE: the int64 difference could overflow at the
-    +-2^62 coordinate extremes, and balance needs no exactness."""
-    if len(edges) <= 15:
-        return _bsearch_rank_expr(vexpr, edges)
-    k = -(-(len(edges) + 1) // 16)  # fine subdivisions per coarse bucket
-    coarse = edges[k - 1 :: k][:15]
-    lows = [lo2] + coarse
-    highs = coarse + [hi2]
-    lo_arr = "array(" + ", ".join(f"{int(v)}L" for v in lows) + ")"
-    hi_arr = "array(" + ", ".join(f"{int(v)}L" for v in highs) + ")"
-    c = _bsearch_rank_expr(vexpr, coarse)
-    return (
-        f"(({c}) * {k} + least({k - 1}, greatest(0, CAST(floor("
-        f"(CAST({vexpr} AS DOUBLE) - CAST(element_at({lo_arr}, ({c}) + 1) AS DOUBLE))"
-        f" * {k} / greatest(1.0D,"
-        f" CAST(element_at({hi_arr}, ({c}) + 1) AS DOUBLE)"
-        f" - CAST(element_at({lo_arr}, ({c}) + 1) AS DOUBLE))"
-        f") AS INT))))"
-    )
 
 
 def compute_fills_df(
@@ -1209,27 +1063,25 @@ def compute_fills_df(
     fill_rule: FillRule = FillRule.EVEN_ODD,
     n_strips: int | None = None,
     boundary_rule: OverlayRule | None = None,
-    boundary_blob: bool = False,
 ) -> DataFrame:
     """Distributed winding classification: strip-partition the x-axis on midpoint
-    quantiles; every segment is exploded into each strip it crosses and evaluated
+    quantiles; every segment is copied into each strip it crosses and evaluated
     (ray-cast at its own midpoint) in its home strip only.
 
     Correct because: the downward ray at the segment's midpoint x* only crosses
     segments whose x-span contains x*, and every such segment also crosses the home
     strip, hence is present in the group.
 
-    boundary_rule: when the caller extracts ONE overlay rule next, the
-    extraction's boundary filter is pushed into the fill kernel — the stage
-    emits only result-boundary segments (extract_shapes_df then takes
-    pre_filtered=True).
+    Plan: a pack mapInArrow (strip spans, the copy per strip and the home flag
+    in numpy; one binary row per upstream partition and strip) -> ONE hash
+    exchange on the strip key -> the fill mapInArrow. When the split fixpoint
+    left its terminal apply lazy (`_ioverlay_apply_inputs`), the pack stage
+    runs that apply in numpy too.
 
-    boundary_blob: emit BOUNDARY_BLOB_SCHEMA rows (one per reduce partition)
-    instead of per-segment rows — the fill kernel packs its boundary output
-    in-kernel, so the extract checkpoint + 64->1 fused exchange carry blob
-    rows (extract_shapes_df must be told packed_boundary=True)."""
-    if boundary_blob and boundary_rule is None:
-        raise ValueError("boundary_blob requires boundary_rule")
+    Output: FILL_SCHEMA rows, one per segment. With boundary_rule (the ONE
+    overlay rule the caller extracts next) the fill kernel keeps only that
+    rule's result-boundary segments and emits them as BOUNDARY_BLOB_SCHEMA
+    rows, one per reduce partition — extract_shapes_df reads either form."""
     spark = segs.sparkSession
     n = getattr(segs, "_ioverlay_n_segments", None)
     if n is None and n_strips is None:
@@ -1239,8 +1091,7 @@ def compute_fills_df(
         # term; per-strip constants are negligible beyond ~2k segments
         n_strips = max(1, min(1024, n // 2000))
     hint_edges = getattr(segs, "_ioverlay_strip_mx2_edges", None)
-    mx2_range = getattr(segs, "_ioverlay_mx2_range", None)
-    cmax_cap = getattr(segs, "_ioverlay_cmax", None)
+    edges: list[int] = []
     if n_strips > 1 and hint_edges:
         # edges precomputed by the split fixpoint's probe (mark-x quantiles,
         # doubled) — zero extra jobs; downsample evenly to the strip budget
@@ -1270,23 +1121,10 @@ def compute_fills_df(
                 vals, [i / n_strips for i in range(1, n_strips)], method="lower"
             )
             edges = sorted(set(int(q) for q in qs))
-            mx2_range = (int(vals.min()), int(vals.max()))
-        else:
-            edges = []
-    else:
-        edges = []
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    packed = (
-        bool(edges)
-        and os.environ.get("SPARK_GRAFT_FILL_PACKED", "1") != "0"
-    )
     apply_inputs = getattr(segs, "_ioverlay_apply_inputs", None)
-    if (
-        packed
-        and apply_inputs is not None
-        and os.environ.get("SPARK_GRAFT_APPLY_FUSED", "1") != "0"
-    ):
+    if apply_inputs is not None:
         # FUSED terminal apply + pack (see _apply_pack_strips_iter): join the
         # grouped packed mark keys onto the pre-round segments and run the
         # chain explode in numpy inside the pack stage, skipping the JVM
@@ -1295,113 +1133,21 @@ def compute_fills_df(
         # (AQE would coalesce the join output by BYTES and serialize it).
         segs_round, marks = apply_inputs
         grouped = marks.groupBy("_sid").agg(F.collect_set("k").alias("mks"))
-        j = (
+        packed = (
             segs_round.join(grouped, "_sid", "left")
             .drop("_sid")
             .repartition(n_part)
-        )
-        return (
-            j.mapInArrow(_apply_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
-            .repartition(n_part, "strip")
-            .mapInArrow(
-                _packed_fill_iter(fill_rule, boundary_rule, boundary_blob),
-                schema=BOUNDARY_BLOB_SCHEMA
-                if boundary_blob
-                else (
-                    FILL_BOUNDARY_SCHEMA if boundary_rule is not None else FILL_SCHEMA
-                ),
-            )
-        )
-    if packed:
-        # PACKED strip-chain shuffle (VERDICT r04 #4): the strip span, the
-        # explode, and the is_home flag all move python-side into one
-        # mapInArrow pack stage that emits a single binary-blob row per
-        # (upstream partition, strip) — the strip hash shuffle then carries
-        # thousands of blob rows instead of millions of segment rows (same
-        # payload bytes, none of the per-row serialization, no codegen
-        # bsearch over every exploded row). The reduce side parses the blobs
-        # (np.frombuffer memcpy) and runs the same strip-fill core.
-        return (
-            segs.select("ax", "ay", "bx", "by", "subj", "clip")
-            .mapInArrow(_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
-            .repartition(n_part, "strip")
-            .mapInArrow(
-                _packed_fill_iter(fill_rule, boundary_rule, boundary_blob),
-                schema=BOUNDARY_BLOB_SCHEMA
-                if boundary_blob
-                else (
-                    FILL_BOUNDARY_SCHEMA if boundary_rule is not None else FILL_SCHEMA
-                ),
-            )
-        )
-    if edges:
-        # strip index of a doubled-x value: a pure Column expression inside
-        # whole-stage codegen. This replaces, in order of history: an
-        # interpreted `size(filter(...))` HOF (O(n_strips) per row, VERDICT
-        # r02 Wrong #4), then an Arrow pandas_udf — correct but it broke the
-        # stage's codegen pipeline with a JVM->python->JVM round trip for
-        # every post-split row — then a single 255-edge nested-IF tree, whose
-        # generated method exceeded HotSpot's JIT size limit and ran
-        # INTERPRETED (~85 s of CPU per 16.8 M rows; the two-level scheme in
-        # _strip_rank_expr is ~10x). The outer bucket bounds come from the
-        # split fixpoint's bbox (or the sample's min/max); a missing range
-        # falls back to the edge span, which only costs balance at the tails.
-        if mx2_range is None:
-            span = max(1, int(edges[-1]) - int(edges[0]))
-            mx2_range = (int(edges[0]) - span, int(edges[-1]) + span)
-        segs = segs.select(
-            "*",
-            F.expr(_strip_rank_expr("2 * ax", edges, *mx2_range)).cast("int").alias("s_lo"),
-            F.expr(_strip_rank_expr("2 * bx", edges, *mx2_range)).cast("int").alias("s_hi"),
-            F.expr(_strip_rank_expr("ax + bx", edges, *mx2_range)).cast("int").alias("s_mid"),
+            .mapInArrow(_apply_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
         )
     else:
-        segs = (
-            segs.withColumn("s_lo", F.lit(0))
-            .withColumn("s_hi", F.lit(0))
-            .withColumn("s_mid", F.lit(0))
+        packed = segs.select(*SEG_COLS).mapInArrow(
+            _pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA
         )
-    # narrow the strip shuffle when the known bbox allows: coordinates to
-    # int32 (gated on the split fixpoint's full x+y coordinate cap — NOT
-    # mx2_range, which bounds only x) and winding counts to int32 (|subj| of a
-    # merged row is bounded by the number of coincident inputs, hence by the
-    # segment count — the gate requires that count to be known and < 2^31).
-    # The strip kernel's column intake upcasts back to int64, so fill math is
-    # unchanged; this halves the stage's shuffle write/read + Arrow bytes
-    # (the n=1024 lines_net fill map stage ships ~100 MB).
-    if (
-        cmax_cap is not None
-        and int(cmax_cap) < (1 << 31) - 1
-        and n is not None
-        and int(n) < (1 << 31) - 1
-    ):
-        out_cols = [
-            F.col("ax").cast("int").alias("ax"),
-            F.col("ay").cast("int").alias("ay"),
-            F.col("bx").cast("int").alias("bx"),
-            F.col("by").cast("int").alias("by"),
-            F.col("subj").cast("int").alias("subj"),
-            F.col("clip").cast("int").alias("clip"),
-            F.col("strip").cast("int").alias("strip"),
-            F.col("is_home"),
-        ]
-    else:
-        out_cols = ["ax", "ay", "bx", "by", "subj", "clip", "strip", "is_home"]
-    with_strips = (
-        segs.withColumn("strip", F.explode(F.expr("sequence(s_lo, s_hi)")))
-        .withColumn("is_home", F.col("strip") == F.col("s_mid"))
-        .select(*out_cols)
-    )
-    return (
-        # ONE hash shuffle on the strip key; strips are grouped python-side
-        # inside the partition (see _strip_fill_iter)
-        with_strips.repartition(n_part, "strip")
-        .mapInArrow(
-            _strip_fill_iter(fill_rule, boundary_rule, boundary_blob),
-            schema=BOUNDARY_BLOB_SCHEMA
-            if boundary_blob
-            else (FILL_BOUNDARY_SCHEMA if boundary_rule is not None else FILL_SCHEMA),
-        )
+    # the strip hash shuffle carries thousands of blob rows instead of millions
+    # of segment rows (same payload bytes, none of the per-row serialization)
+    return packed.repartition(n_part, "strip").mapInArrow(
+        _packed_fill_iter(fill_rule, boundary_rule),
+        schema=FILL_SCHEMA if boundary_rule is None else BOUNDARY_BLOB_SCHEMA,
     )
 
 
@@ -1532,24 +1278,15 @@ def distributed_overlay(
     # boundary rows leave the fill kernel as per-partition binary blobs (the
     # kernel already holds them as numpy arrays — packing there is free and
     # the checkpoint + fused 64->1 exchange then carry ~n_partitions rows
-    # instead of millions; SPARK_GRAFT_BOUNDARY_BLOB=0 restores the row feed)
-    blob = os.environ.get("SPARK_GRAFT_BOUNDARY_BLOB", "1") != "0"
-    fills = compute_fills_df(
-        split, fill_rule, boundary_rule=rule, boundary_blob=blob
-    )
-    # splitting never leaves the input bbox, so the merge-stage bounds cap the
-    # coordinates of every downstream row — extract can skip its max scan
-    cmax_hint = max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4]))
+    # instead of millions)
+    fills = compute_fills_df(split, fill_rule, boundary_rule=rule)
     return extract_shapes_df(
         fills,
         rule,
         options,
-        pre_filtered=True,
-        cmax_hint=cmax_hint,
         # post-split row count UPPER BOUND >= boundary rows: when it already
-        # clears the fused cap, extract skips its count job (one barrier less)
+        # clears the fused cap, extract skips its metadata job (one barrier less)
         n_edges_hint=getattr(split, "_ioverlay_n_segments", None),
-        packed_boundary=blob,
     )
 
 

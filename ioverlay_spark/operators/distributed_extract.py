@@ -21,15 +21,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
 )
 
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
+from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch
 
 
 def boundary_segments_df(fills: DataFrame, rule: OverlayRule) -> DataFrame:
@@ -274,13 +273,8 @@ def _extract_rings_core(
     fills_arr: np.ndarray,
     salt: int,
     threads: int = 1,
-    flat_out: bool = False,
 ) -> pa.Table:
     """Shared walk + Arrow emission over (component-labeled) boundary segments.
-
-    flat_out=True returns the flat numpy buffers
-    (comp, hole, a2, anchor_x, anchor_y, lens, x_vals, y_vals) instead of the
-    assembled Arrow table — the ring-blob fused output packs them directly.
 
     threads > 1 splits the components into contiguous chunks walked on a
     thread pool — exact: components never share an endpoint, so every
@@ -559,8 +553,6 @@ def _extract_rings_core(
             y_vals = np.concatenate(
                 [y_vals] + [np.asarray(p, np.int64) for p in out_ptsy]
             )
-        if flat_out:
-            return comp_out, hole_out, a2_out, ax_out, ay_out, lens, x_vals, y_vals
         nring = len(comp_out)
         if nring == 0:
             return _RINGS_ARROW_SCHEMA.empty_table()
@@ -585,35 +577,6 @@ def _extract_rings_core(
 _NODE_CAP = 1 << 30  # same bound as kernel.batch._COORD_CAP: packing is exact below it
 
 
-def _fused_extract_kernel(rule: OverlayRule, options: OverlayOptions):
-    """Single-task CC + walk FUSION for small boundary sets: one applyInPandas
-    group receives the whole boundary set, labels components in-kernel
-    (numpy union-find, the same _cc_label_arrays the one-task CC path uses)
-    and walks rings immediately via the shared _extract_kernel body.
-
-    Vs the broadcast-CC path this removes, per overlay: the edge shuffle to the
-    CC task, the node->component broadcast build, the map-side hash join and
-    the salt re-shuffle of the boundary set — the boundary rows move through
-    exactly ONE shuffle (into this task). The walk serializes on one core, but
-    below the dispatch cap the vectorized walk is ~1-2 s while the removed
-    plumbing costs more (lines_net audit, BENCH.md round 4).
-
-    Node ids: 2^30-biased packing when coordinates fit (exact), else local
-    dense ids from np.unique over the endpoint rows — exact at any width, no
-    _wide_node_ids join needed on this path."""
-    def run(tbl: pa.Table) -> pa.Table:
-        if not len(tbl):
-            return _RINGS_ARROW_SCHEMA.empty_table()
-        ax = _col_np(tbl, "ax")
-        ay = _col_np(tbl, "ay")
-        bx = _col_np(tbl, "bx")
-        by = _col_np(tbl, "by")
-        fills_arr = _col_np(tbl, "fill", np.uint8)
-        return _fused_extract_arrays(rule, options, ax, ay, bx, by, fills_arr)
-
-    return run
-
-
 def _fused_extract_arrays(
     rule: OverlayRule,
     options: OverlayOptions,
@@ -622,10 +585,20 @@ def _fused_extract_arrays(
     bx: np.ndarray,
     by: np.ndarray,
     fills_arr: np.ndarray,
-    flat_out: bool = False,
 ) -> pa.Table:
-    """Array-form body of the fused single-task extract (shared by the Arrow
-    row feed and the packed-blob feed)."""
+    """Single-task CC + walk FUSION for boundary sets up to the fused cap: one
+    task receives the whole boundary set, labels components in-kernel (numpy
+    union-find, the same _cc_label_arrays the one-task CC path uses) and walks
+    rings immediately via the shared _extract_rings_core.
+
+    Vs the broadcast-CC path this removes, per overlay: the edge shuffle to the
+    CC task, the node->component broadcast build, the map-side hash join and
+    the salt re-shuffle of the boundary set — the boundary blobs move through
+    exactly ONE shuffle (into this task).
+
+    Node ids: 2^30-biased packing when coordinates fit (exact), else local
+    dense ids from np.unique over the endpoint rows — exact at any width, no
+    _wide_node_ids join needed on this path."""
     cmax = max(
         int(np.abs(ax).max()), int(np.abs(ay).max()),
         int(np.abs(bx).max()), int(np.abs(by).max()),
@@ -648,7 +621,7 @@ def _fused_extract_arrays(
     ) or min(8, os.cpu_count() or 1)
     return _extract_rings_core(
         rule, options, comp_of_u, ax, ay, bx, by, fills_arr, 0,
-        threads=threads, flat_out=flat_out,
+        threads=threads,
     )
 
 
@@ -704,135 +677,6 @@ def _fused_extract_blob_iter(rule: OverlayRule, options: OverlayOptions):
     return it
 
 
-# fused-extract ring output as per-chunk blobs: the single fused task emits
-# ~RING_BLOB_CHUNKS binary rows instead of millions of list-typed ring rows,
-# so the Arrow->JVM row conversion and the rings checkpoint write happen on a
-# parallel unpack stage instead of serializing on the one task.
-RING_BLOB_SCHEMA = StructType(
-    [
-        StructField("cnt", LongType()),    # rings in this chunk
-        StructField("npts", LongType()),   # total points in this chunk
-        StructField("wc", IntegerType()),  # pts word size: 4 or 8
-        StructField("base", LongType()),   # first ring_id of the chunk
-        StructField("meta", BinaryType()),  # comp|a2|anchx|anchy i64*4cnt, lens i32, hole u8
-        StructField("pts", BinaryType()),   # x_vals|y_vals (npts each, wc-byte words)
-    ]
-)
-
-_RING_BLOB_CHUNKS = int(os.environ.get("SPARK_GRAFT_RING_BLOB_CHUNKS", "64"))
-
-
-def _flat_rings_to_blob_batches(flat, chunks: int):
-    """Chunk the walk's flat ring buffers on ring boundaries and yield
-    RING_BLOB batches (tobytes memcpy per chunk)."""
-    comp_out, hole_out, a2_out, ax_out, ay_out, lens, x_vals, y_vals = flat
-    nring = len(comp_out)
-    if nring == 0:
-        return
-    offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-    cmax = max(
-        int(np.abs(x_vals).max(initial=0)), int(np.abs(y_vals).max(initial=0))
-    )
-    cdt = np.int32 if cmax < 2**31 else np.int64
-    cuts = np.unique(np.linspace(0, nring, min(chunks, nring) + 1).astype(np.int64))
-    cols = {k: [] for k in ("cnt", "npts", "wc", "base", "meta", "pts")}
-    for r0, r1 in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
-        o0, o1 = int(offs[r0]), int(offs[r1])
-        meta = (
-            b"".join(
-                a[r0:r1].astype(np.int64, copy=False).tobytes()
-                for a in (comp_out, a2_out, ax_out, ay_out)
-            )
-            + lens[r0:r1].astype(np.int32, copy=False).tobytes()
-            + hole_out[r0:r1].astype(np.uint8).tobytes()
-        )
-        pts = (
-            x_vals[o0:o1].astype(cdt, copy=False).tobytes()
-            + y_vals[o0:o1].astype(cdt, copy=False).tobytes()
-        )
-        cols["cnt"].append(r1 - r0)
-        cols["npts"].append(o1 - o0)
-        cols["wc"].append(cdt().itemsize)
-        cols["base"].append(r0 + 1)
-        cols["meta"].append(meta)
-        cols["pts"].append(pts)
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(np.asarray(cols["cnt"], np.int64)),
-            pa.array(np.asarray(cols["npts"], np.int64)),
-            pa.array(np.asarray(cols["wc"], np.int32)),
-            pa.array(np.asarray(cols["base"], np.int64)),
-            pa.array(cols["meta"], type=pa.binary()),
-            pa.array(cols["pts"], type=pa.binary()),
-        ],
-        names=["cnt", "npts", "wc", "base", "meta", "pts"],
-    )
-
-
-def _fused_extract_ringblob_iter(rule: OverlayRule, options: OverlayOptions):
-    """Fused CC+walk over BOUNDARY_BLOB rows, emitting RING_BLOB chunks."""
-
-    def it(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
-        if not len(tbl):
-            return
-        ax, ay, bx, by, fl = _blob_boundary_arrays(tbl)
-        if not len(ax):
-            return
-        flat = _fused_extract_arrays(rule, options, ax, ay, bx, by, fl, flat_out=True)
-        yield from _flat_rings_to_blob_batches(flat, _RING_BLOB_CHUNKS)
-
-    return it
-
-
-def _ringblob_rows_iter(batches):
-    """Parallel unpack of RING_BLOB chunks back to RINGS_SCHEMA rows — runs
-    after a repartition so the list-array build + row conversion + checkpoint
-    write spread across the executor instead of the one fused task."""
-    for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        for r in range(len(tbl)):
-            cnt = int(tbl.column("cnt")[r].as_py())
-            npts = int(tbl.column("npts")[r].as_py())
-            w = int(tbl.column("wc")[r].as_py())
-            base = int(tbl.column("base")[r].as_py())
-            meta = tbl.column("meta")[r].as_py()
-            pts = tbl.column("pts")[r].as_py()
-            comp = np.frombuffer(meta, np.int64, count=cnt)
-            a2 = np.frombuffer(meta, np.int64, count=cnt, offset=8 * cnt)
-            anx = np.frombuffer(meta, np.int64, count=cnt, offset=16 * cnt)
-            any_ = np.frombuffer(meta, np.int64, count=cnt, offset=24 * cnt)
-            lens = np.frombuffer(meta, np.int32, count=cnt, offset=32 * cnt)
-            hole = np.frombuffer(meta, np.uint8, count=cnt, offset=36 * cnt)
-            cdt = np.int32 if w == 4 else np.int64
-            xv = np.frombuffer(pts, cdt, count=npts).astype(np.int64, copy=False)
-            yv = np.frombuffer(pts, cdt, offset=npts * w, count=npts).astype(
-                np.int64, copy=False
-            )
-            offs = pa.array(
-                np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(comp),
-                    pa.array(base + np.arange(cnt, dtype=np.int64)),
-                    pa.array(hole.astype(bool)),
-                    pa.ListArray.from_arrays(offs, pa.array(xv)),
-                    pa.ListArray.from_arrays(offs, pa.array(yv)),
-                    pa.array(a2),
-                    pa.array(anx),
-                    pa.array(any_),
-                ],
-                names=[
-                    "component", "ring_id", "is_hole", "pts_x", "pts_y",
-                    "area2", "anchor_x", "anchor_y",
-                ],
-            )
-
-
 def _blob_rows_iter(batches):
     """Unpack BOUNDARY_BLOB_SCHEMA rows back to the per-segment row feed
     (ax, ay, bx, by, fill) — the giant-boundary fallback where the salted
@@ -856,85 +700,20 @@ def _blob_rows_iter(batches):
         )
 
 
-_PACKED_BOUNDARY_SCHEMA = "n long, blob binary"
-
-
-def _pack_boundary_kernel(coord_bytes: int):
-    """Per-partition boundary pack: the fused extract's repartition(1) would
-    ship millions of 5-column UnsafeRows through the JVM shuffle and convert
-    them row->Arrow onto ONE python worker — both serialize on that worker's
-    stage. Packing each upstream partition's columns into a single binary blob
-    row (ax|ay|bx|by|fill, numpy buffers end-to-end) makes the exchange carry
-    ~one row per partition at the same payload bytes, and the single task's
-    ingest becomes np.frombuffer slices instead of a row parse. Same trick as
-    the packed strip-chain fill shuffle (BENCH.md round 5 #2) — but measured
-    a LOSS on this feed (see _extract_packed): kept env-gated off."""
-    cdt = np.int32 if coord_bytes == 4 else np.int64
-
-    def it(batches):
-        cols: dict[str, list[np.ndarray]] = {
-            k: [] for k in ("ax", "ay", "bx", "by", "fill")
-        }
-        n = 0
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            t = pa.Table.from_batches([rb])
-            n += rb.num_rows
-            for k in ("ax", "ay", "bx", "by"):
-                cols[k].append(_col_np(t, k).astype(cdt, copy=False))
-            cols["fill"].append(_col_np(t, "fill", np.uint8))
-        if not n:
-            return
-        blob = b"".join(
-            np.concatenate(cols[k]).tobytes()
-            for k in ("ax", "ay", "bx", "by", "fill")
-        )
-        yield pa.RecordBatch.from_pydict(
-            {"n": pa.array([n], pa.int64()), "blob": pa.array([blob], pa.binary())}
-        )
-
-    return it
-
-
-def _fused_extract_packed_kernel(
-    rule: OverlayRule, options: OverlayOptions, coord_bytes: int
-):
-    """Unpack the per-partition boundary blobs (zero-copy np.frombuffer
-    slices) and run the fused CC+walk on the concatenated arrays."""
-    cdt = np.int32 if coord_bytes == 4 else np.int64
-
-    def it(batches):
-        parts: list[tuple[np.ndarray, ...]] = []
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            t = pa.Table.from_batches([rb])
-            ns = t.column("n").to_pylist()
-            col = t.column("blob")
-            for ci, chunk in enumerate(col.chunks if hasattr(col, "chunks") else [col]):
-                for i in range(len(chunk)):
-                    sc = chunk[i]
-                    buf = sc.as_buffer() if hasattr(sc, "as_buffer") else sc.as_py()
-                    n = ns.pop(0)
-                    cb = n * coord_bytes
-                    arrs = tuple(
-                        np.frombuffer(buf, dtype=cdt, count=n, offset=j * cb)
-                        for j in range(4)
-                    ) + (np.frombuffer(buf, dtype=np.uint8, count=n, offset=4 * cb),)
-                    parts.append(arrs)
-        if not parts:
-            return
-        ax, ay, bx, by = (
-            np.concatenate([p[j] for p in parts]).astype(np.int64, copy=False)
-            for j in range(4)
-        )
-        fills_arr = np.concatenate([p[4] for p in parts])
-        yield from _fused_extract_arrays(
-            rule, options, ax, ay, bx, by, fills_arr
-        ).to_batches()
-
-    return it
+def _pack_boundary_rows_iter(batches):
+    """Pack one partition's boundary rows (ax, ay, bx, by, fill) into a single
+    BOUNDARY_BLOB_SCHEMA row — the inverse of _blob_rows_iter, so FILL_SCHEMA
+    input reaches the same blob-fed extract as the fill kernel's own pack."""
+    chunks = list(batches)
+    if not chunks:
+        return
+    tbl = pa.Table.from_batches(chunks)
+    if not len(tbl):
+        return
+    yield _boundary_blob_batch(
+        _col_np(tbl, "ax"), _col_np(tbl, "ay"), _col_np(tbl, "bx"), _col_np(tbl, "by"),
+        _col_np(tbl, "fill", np.uint8),
+    )
 
 
 def _node_expr(x: str, y: str) -> F.Column:
@@ -1079,40 +858,9 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
 # it the broadcast-CC (<=_CC_LOCAL_EDGES comp map) and iterative-CC plans
 # take over
 _FUSED_EXTRACT_CAP = int(os.environ.get("SPARK_GRAFT_FUSED_EXTRACT_EDGES", "8000000"))
-# 1 = run the fused kernel driver-side (toArrow + createDataFrame) instead of
-# on one python worker behind repartition(1); A/B toggle, see BENCH.md round 5
-_FUSED_DRIVER_SIDE = os.environ.get("SPARK_GRAFT_FUSED_DRIVER", "0") == "1"
-
-
-def _extract_packed() -> bool:
-    # packed boundary transfer into the fused task — measured NOT a win here
-    # (unlike the fill shuffle): the boundary feed is already int32-narrowed
-    # and single-pass, so packing adds a second python Arrow round-trip that
-    # costs more than the per-row exchange it removes (same-session A/B at
-    # lines_net n=1024: legacy best 6.19 s vs packed best 8.77 s; BENCH.md
-    # round 5). Default OFF; kept env-gated for A/B and the differential.
-    return os.environ.get("SPARK_GRAFT_EXTRACT_PACKED", "0") == "1"
 # edge count up to which CC runs as ONE union-find task and its comp map is
 # broadcast back (the map is <= 2 longs per edge: ~16 bytes/edge)
 _CC_LOCAL_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000"))
-
-
-def _narrow_boundary(b: DataFrame, cmax) -> DataFrame:
-    """Narrow the fused single-task transfer: the shuffle read + Arrow IPC
-    into the one python worker serialize on its core, so bytes there are
-    wall-clock. Coordinates fit int32 whenever the known cap allows (cmax is
-    exact or an upper bound) and fill is 4 bits; _col_np upcasts back to
-    int64/uint8 in-kernel, so the kernel math is unchanged (A/B: ~33% off the
-    n=1024 lines_net fused stage minima, BENCH.md round-4 fifth pass)."""
-    if cmax is None or int(cmax) >= (1 << 31) - 1:
-        return b
-    return b.select(
-        F.col("ax").cast("int").alias("ax"),
-        F.col("ay").cast("int").alias("ay"),
-        F.col("bx").cast("int").alias("bx"),
-        F.col("by").cast("int").alias("by"),
-        F.col("fill").cast("tinyint").alias("fill"),
-    )
 
 
 def extract_shapes_df(
@@ -1120,184 +868,68 @@ def extract_shapes_df(
     rule: OverlayRule,
     options: OverlayOptions = OverlayOptions(),
     band_bits: int = 13,
-    pre_filtered: bool = False,
-    cmax_hint: int | None = None,
     n_edges_hint: int | None = None,
-    packed_boundary: bool = False,
 ) -> DataFrame:
     """Full distributed extraction. Returns rings with resolved shape ids:
     (shape_id, ring_id, is_hole, pts_x, pts_y, area2).
 
-    pre_filtered=True: the caller already pushed the boundary filter for
-    `rule` into the fill stage (compute_fills_df boundary_rule) — skip the
-    redundant filter pass here.
+    fills: BOUNDARY_BLOB_SCHEMA rows (compute_fills_df with boundary_rule=rule:
+    the fill kernel already kept only this rule's boundary and packed it),
+    recognized by their `xyf` column, or FILL_SCHEMA rows, which are filtered
+    to the boundary of `rule` and packed here. Either way the checkpoint and
+    the fused 64->1 exchange carry one binary blob per partition, and the
+    metadata job is a sum/max over those rows.
 
-    cmax_hint: an UPPER BOUND on |coordinates| when the caller knows one (the
-    overlay pipeline's global bbox — splitting never leaves it); saves the
-    per-row max scan in the metadata job (count-only agg instead).
-
-    packed_boundary: fills is BOUNDARY_BLOB_SCHEMA rows (compute_fills_df
-    boundary_blob=True, implies pre_filtered semantics) — the checkpoint and
-    the fused 64->1 exchange carry one binary blob per fill partition instead
-    of per-segment rows, and the metadata job is a sum/max over those rows."""
+    n_edges_hint: an UPPER BOUND on the boundary row count when the caller
+    knows one (the overlay pipeline's post-split row count). When it already
+    clears the fused cap, the dispatch is decided without any job at all."""
     from ..session import audit_desc
 
-    if packed_boundary and not pre_filtered:
-        raise ValueError("packed_boundary requires pre_filtered fills")
     audit_desc(fills.sparkSession, "fill+boundary:ckpt")
-    if packed_boundary:
-        b = fills.localCheckpoint(eager=True)
-    else:
-        b = (
-            (fills if pre_filtered else boundary_segments_df(fills, rule))
-            # extraction reads only coordinates + fill bits: prune before the
-            # checkpoint so subj/clip never enter it or the downstream shuffles
+    if "xyf" not in fills.columns:
+        # extraction reads only coordinates + fill bits: subj/clip never
+        # enter the checkpoint or the downstream shuffles
+        fills = (
+            boundary_segments_df(fills, rule)
             .select("ax", "ay", "bx", "by", "fill")
-            .localCheckpoint(eager=True)
+            .mapInArrow(_pack_boundary_rows_iter, schema=BOUNDARY_BLOB_SCHEMA)
         )
+    b = fills.localCheckpoint(eager=True)
 
     # one metadata job: coordinate cap for node-id packing AND the edge count
-    # (reused as the CC dispatch bound, saving its limit-probe job).
-    # n_edges_hint: an UPPER BOUND on the row count — when it already clears
-    # the fused cap the dispatch is decided without any job at all (the exact
-    # count only matters when the bound exceeds the cap, where boundary
-    # filtering may still have cut the true count below it).
-    if cmax_hint is not None and n_edges_hint is not None and (
-        n_edges_hint <= _FUSED_EXTRACT_CAP
-    ):
-        n_edges = n_edges_hint
-        cmax = cmax_hint
-    elif packed_boundary:
-        # blob metadata rides as columns: the agg touches ~n_partitions rows
+    # (reused as the CC dispatch bound, saving its limit-probe job) — skipped
+    # when the caller's bound already picks the fused plan (the exact count
+    # only matters when the bound exceeds the cap, where boundary filtering
+    # may still have cut the true count below it). The salted plan, the only
+    # reader of cmax, is reached only after this job.
+    n_edges = n_edges_hint
+    if n_edges is None or n_edges > _FUSED_EXTRACT_CAP:
         audit_desc(fills.sparkSession, "extract:blob meta")
-        meta = b.agg(
-            F.max("cmax").alias("m"), F.sum("cnt").alias("n")
-        ).first()
-        cmax = cmax_hint if cmax_hint is not None else meta["m"]
-        n_edges = int(meta["n"] or 0)
-    elif cmax_hint is not None:
-        audit_desc(fills.sparkSession, "extract:count")
-        n_edges = b.count()
-        cmax = cmax_hint
-    else:
-        audit_desc(fills.sparkSession, "extract:meta")
-        meta = b.agg(
-            F.max(
-                F.greatest(
-                    F.abs("ax"), F.abs("ay"), F.abs("bx"), F.abs("by")
-                )
-            ).alias("m"),
-            F.count("*").alias("n"),
-        ).first()
-        cmax, n_edges = meta["m"], int(meta["n"])
-    if packed_boundary and n_edges <= _FUSED_EXTRACT_CAP:
-        # blob feed straight into the fused task: the exchange moves
-        # ~n_partitions binary rows (same payload bytes as the row feed, none
-        # of the per-row serialization); the task unpacks via np.frombuffer
+        meta = b.agg(F.max("cmax").alias("m"), F.sum("cnt").alias("n")).first()
+        cmax, n_edges = meta["m"], int(meta["n"] or 0)
+    if n_edges <= _FUSED_EXTRACT_CAP:
+        # blob feed straight into ONE task that does CC + walk fused (node ids,
+        # labels and the vectorized component walk all in-kernel): the
+        # exchange moves ~n_partitions binary rows, no comp-map broadcast or
+        # salt re-shuffle, and the task unpacks via np.frombuffer.
+        # repartition(1) + mapInArrow instead of a constant-key grouped map:
+        # the grouped-map plan SORTS the partition by its key before grouping
+        # (measured ~6 s vs ~1 s for a 1 M-row noop); repartition(1), not
+        # coalesce(1): the 64-way shuffle write parallelizes and it cannot
+        # infect upstream lineage. Differential-tested equal to the salted path.
         audit_desc(fills.sparkSession, "extract:fused blob walk+ckpt")
-        if _FUSED_DRIVER_SIDE:
-            ax, ay, bx, by, fl = _blob_boundary_arrays(b.toArrow())
-            out = _fused_extract_arrays(rule, options, ax, ay, bx, by, fl)
-            rings = fills.sparkSession.createDataFrame(out).localCheckpoint(eager=True)
-            return _bind_and_project(rings)
-        if os.environ.get("SPARK_GRAFT_RING_BLOB", "0") == "1":
-            # A/B toggle, default OFF: ring output leaves the fused task as
-            # ~64 binary chunk rows; a repartitioned unpack stage rebuilds the
-            # ring rows so the Arrow->JVM row conversion + checkpoint write
-            # parallelize instead of serializing on the one fused task.
-            # Measured NOT a win at lines_net n=512 (22.1/37.5 s vs 15.2/21.7 s
-            # same-window) and a wash at n=1024 (43.2/71.8 vs 45.6/65.0): the
-            # extra blob shuffle + per-chunk rebuild costs about what the
-            # parallel conversion saves, because the plain path's single-task
-            # Arrow emission is already columnar and the checkpoint write
-            # overlaps the walk's batch yield. Kept for re-measurement on
-            # healthy windows (the differential below covers it).
-            n_part = int(fills.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            rings = (
-                b.repartition(1)
-                .mapInArrow(
-                    _fused_extract_ringblob_iter(rule, options),
-                    schema=RING_BLOB_SCHEMA,
-                )
-                .repartition(min(n_part, _RING_BLOB_CHUNKS))
-                .mapInArrow(_ringblob_rows_iter, schema=RINGS_SCHEMA)
-                .localCheckpoint(eager=True)
-            )
-            return _bind_and_project(rings)
         rings = (
             b.repartition(1)
             .mapInArrow(_fused_extract_blob_iter(rule, options), schema=RINGS_SCHEMA)
             .localCheckpoint(eager=True)
         )
         return _bind_and_project(rings)
-    if packed_boundary:
-        # giant boundary set: unpack the blobs back to the per-segment row
-        # feed for the salted multi-task plan below (rare — the fused cap is
-        # 8 M edges; the unpack is a memcpy map over the checkpointed blobs)
-        b = b.mapInArrow(
-            _blob_rows_iter, schema="ax long, ay long, bx long, by long, fill int"
-        )
-    if n_edges <= _FUSED_EXTRACT_CAP:
-        # small boundary set: ONE task does CC + walk fused (node ids, labels
-        # and the vectorized component walk all in-kernel) — the boundary rows
-        # move through exactly one shuffle, no comp-map broadcast or salt
-        # re-shuffle. repartition(1) + mapInArrow instead of a constant-key
-        # grouped map: the grouped-map plan SORTS the partition by its key
-        # before grouping (measured ~6 s vs ~1 s for a 1 M-row noop).
-        # Differential-tested equal to the distributed path.
-        kern = _fused_extract_kernel(rule, options)
-
-        def it(batches):
-            chunks = list(batches)
-            if chunks:
-                yield from kern(pa.Table.from_batches(chunks)).to_batches()
-
-        audit_desc(fills.sparkSession, "extract:fused walk+ckpt")
-        if _extract_packed() and not _FUSED_DRIVER_SIDE:
-            # packed transfer (env-gated A/B, default OFF — measured slower
-            # than the narrowed row feed, see _extract_packed): per-partition
-            # numpy blobs instead of per-row UnsafeRows through the 64->1
-            # exchange; see _pack_boundary_kernel.
-            coord_bytes = 4 if (cmax is not None and int(cmax) < (1 << 31) - 1) else 8
-            rings = (
-                _narrow_boundary(b, cmax)
-                .mapInArrow(
-                    _pack_boundary_kernel(coord_bytes),
-                    schema=_PACKED_BOUNDARY_SCHEMA,
-                )
-                .repartition(1)
-                .mapInArrow(
-                    _fused_extract_packed_kernel(rule, options, coord_bytes),
-                    schema=RINGS_SCHEMA,
-                )
-                .localCheckpoint(eager=True)
-            )
-            return _bind_and_project(rings)
-        bn = _narrow_boundary(b, cmax)
-        if _FUSED_DRIVER_SIDE:
-            # A/B alternative: run the fused kernel on the DRIVER python
-            # process instead of a lone python worker. toArrow() pulls the
-            # boundary blocks straight from the fill tasks (no 64->1 shuffle
-            # round), the kernel threads out on the driver, and the ring
-            # table re-enters the JVM once via createDataFrame. Same bytes
-            # over Arrow either way; what this removes is the single-task
-            # shuffle write/read and the cold python-worker first-touch.
-            tbl = bn.toArrow()
-            out = kern(tbl)
-            rings = (
-                fills.sparkSession.createDataFrame(out)
-                .localCheckpoint(eager=True)
-            )
-            return _bind_and_project(rings)
-        rings = (
-            # repartition(1), not coalesce(1): measured equal-or-faster (the
-            # 64-way shuffle write parallelizes; coalesce serializes the block
-            # reads into the one task) and it cannot infect upstream lineage
-            bn.repartition(1)
-            .mapInArrow(it, schema=RINGS_SCHEMA)
-            .localCheckpoint(eager=True)
-        )
-        return _bind_and_project(rings)
+    # giant boundary set: unpack the blobs back to the per-segment row feed
+    # for the salted multi-task plan below (rare — the fused cap is 8 M
+    # edges; the unpack is a memcpy map over the checkpointed blobs)
+    b = b.mapInArrow(
+        _blob_rows_iter, schema="ax long, ay long, bx long, by long, fill int"
+    )
     # matches the CC dispatch below: the single-task union-find at 4M edges is
     # a ~300MB working set (8M node ids + labels), well inside one executor,
     # and its comp map (~64MB) is still broadcast-friendly

@@ -157,15 +157,6 @@ def overlay_pairs(
     )
 
 
-def contours_to_geoms_rows(pair_id, role, contours) -> list[tuple]:
-    """Helper: python-side construction of geoms rows from (n,2) arrays."""
-    rows = []
-    for i, ring in enumerate(contours):
-        ring = np.asarray(ring, dtype=np.int64)
-        rows.append((pair_id, role, 0, i, ring[:, 0].tolist(), ring[:, 1].tolist()))
-    return rows
-
-
 def overlay_rows(
     rows: DataFrame,
     rules: list[str | OverlayRule],

@@ -106,21 +106,6 @@ def tile_assign(rects: DataFrame, level: int = 5) -> DataFrame:
     )
 
 
-def knn_brute(points: DataFrame, centers: DataFrame, k: int = 3) -> DataFrame:
-    """Exact kNN by cross join + window top-k (baseline; O(P*C) — use knn_cell_ring
-    at scale). centers: (r_id, cx2, cy2) doubled coordinates."""
-    d = points.crossJoin(centers).select(
-        "p_id",
-        "r_id",
-        (
-            (2 * F.col("px") - F.col("cx2")) * (2 * F.col("px") - F.col("cx2"))
-            + (2 * F.col("py") - F.col("cy2")) * (2 * F.col("py") - F.col("cy2"))
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("p_id").orderBy("d2", "r_id")
-    return d.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
-
-
 def rect_centers(rects: DataFrame, level: int = 6) -> DataFrame:
     """(r_id, cx2, cy2, cell) doubled-coordinate centers with their cell at `level`."""
     c = rects.select(

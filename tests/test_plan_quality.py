@@ -126,16 +126,6 @@ def test_embed_knn_stays_jvm(spark):
     )
 
 
-def test_ivf_assign_broadcasts_centroids(spark):
-    from ioverlay_spark.operators.similarity import ivf_assign, ivf_centroids
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = ivf_assign(emb, ivf_centroids(emb, 8))
-    p = plan_str(df)
-    assert "BroadcastExchange" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_dim_join_broadcasts(spark):
     import ioverlay_spark.queries as q
 
@@ -188,6 +178,7 @@ def test_ivf_assign_broadcasts_centroids(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     df = ivf_assign(emb, ivf_centroids(emb, 8))
     p = plan_str(df)
+    assert "BroadcastExchange" in p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -221,46 +212,25 @@ def test_apply_marks_plan_has_no_quadratic_array_ops(spark):
 
 
 def test_strip_assignment_has_no_interpreted_filter(spark):
-    """Fill-stage plan shape tripwires, both shuffle forms.
-
-    PACKED (default): pack mapInArrow -> ONE hash exchange on the blob rows ->
-    fill mapInArrow. Exactly two python nodes, no interpreted per-strip HOF
-    (VERDICT r02 Wrong #4), no row-explode (Generate) anywhere — the explode
-    happens in numpy inside the pack stage.
-
-    LEGACY (SPARK_GRAFT_FILL_PACKED=0): the strip index must stay a generated
-    nested-IF binary search (pure codegen Column expression) with exactly one
-    python node — never an Arrow pandas_udf ahead of the shuffle (it broke the
-    map-side stage's codegen with a JVM->python->JVM round trip per row)."""
-    import os
-
+    """Fill-stage plan shape tripwire, for one strip and for several: pack
+    mapInArrow -> ONE hash exchange on the blob rows -> fill mapInArrow.
+    Exactly two python nodes, no interpreted per-strip HOF (VERDICT r02 Wrong
+    #4), no row-explode (Generate) anywhere — the copy per strip happens in
+    numpy inside the pack stage."""
     from ioverlay_spark.operators.distributed import compute_fills_df
 
     segs = spark.createDataFrame(
         [(0, 0, 100, 100, 1, 0), (0, 100, 100, 0, 1, 0)],
         ["ax", "ay", "bx", "by", "subj", "clip"],
     )
-    df = compute_fills_df(segs, n_strips=2)
-    phys = plan_str(df)
-    for bad in ("ArrayFilter", "ArrayExists", "filter(", "exists("):
-        assert bad not in phys
-    # packed default: two python crossings (pack, fill), no JVM row explode,
-    # one exchange carrying the packed blob rows
-    assert phys.count("MapInArrow") == 2, phys
-    assert phys.count("EvalPython") == 0, phys
-    assert "Generate" not in phys, phys
-    assert phys.count("Exchange") == 1, phys
-
-    os.environ["SPARK_GRAFT_FILL_PACKED"] = "0"
-    try:
-        df_legacy = compute_fills_df(segs, n_strips=2)
-        phys_l = plan_str(df_legacy)
+    for n_strips in (1, 2):
+        phys = plan_str(compute_fills_df(segs, n_strips=n_strips))
         for bad in ("ArrayFilter", "ArrayExists", "filter(", "exists("):
-            assert bad not in phys_l
-        assert phys_l.count("MapInArrow") == 1, phys_l
-        assert phys_l.count("EvalPython") == 0, phys_l
-    finally:
-        os.environ.pop("SPARK_GRAFT_FILL_PACKED", None)
+            assert bad not in phys
+        assert phys.count("MapInArrow") == 2, phys
+        assert phys.count("EvalPython") == 0, phys
+        assert "Generate" not in phys, phys
+        assert phys.count("Exchange") == 1, phys
 
 
 def test_cluster_overlay_plan_shape(spark):
