@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -353,6 +354,13 @@ def run_suite(cpus: int, overlay_only: bool = False) -> dict:
     }
 
 
+def _median_attempt_efficiency(timesN: list[float], times4N: list[float]) -> float:
+    """True median (even count: mean of the middle two) of the attempt ratios."""
+    return round(
+        statistics.median(round(a / (4 * b), 3) for a, b in zip(timesN, times4N)), 3
+    )
+
+
 def main():
     if len(sys.argv) > 1 and sys.argv[1] == "--worker":
         overlay_only = "--scale" in sys.argv
@@ -424,10 +432,7 @@ def main():
                 "flagship": flagship,
             }
         )
-        srt = sorted(
-            round(a / (4 * b), 3) for a, b in zip(timesN, times4N)
-        )
-        median_now = srt[len(srt) // 2]
+        median_now = _median_attempt_efficiency(timesN, times4N)
         if (
             attempt + 1 >= min_attempts
             and best_halves >= 0.8
@@ -455,7 +460,7 @@ def main():
             "interleaved half order cancels drift); see attempts for the full "
             "distribution"
         ),
-        "median_attempt_efficiency": ratios[len(ratios) // 2],
+        "median_attempt_efficiency": _median_attempt_efficiency(timesN, times4N),
         f"local{SCALE_N}_overlay_secs_all": [round(t, 3) for t in timesN],
         f"local{4 * SCALE_N}_overlay_secs_all": [round(t, 3) for t in times4N],
         f"local{SCALE_N}_queries": results[SCALE_N]["queries"],

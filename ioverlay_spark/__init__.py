@@ -8,8 +8,10 @@ rounds. See SURVEY.md for the blueprint.
 """
 
 from .memtune import tune_allocator as _tune_allocator
+from .zipcache import install as _install_zipcache
 
 _tune_allocator()  # slow-demand-paging hosts: keep kernel temp pages (memtune.py)
+_install_zipcache()  # python workers: no zip directory re-read per task (zipcache.py)
 
 from .options import (
     ALL_RULES,

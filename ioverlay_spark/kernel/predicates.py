@@ -100,7 +100,7 @@ def relate(
     segs = sort_and_merge(
         Segments.concat([build_segments(subj, True), build_segments(clip, False)])
     )
-    segs = split_segments(segs)
+    segs = split_segments(segs, threads=1)  # runs per pair inside relate_df tasks
     fills = compute_fills_windowed(segs, fill_rule)
     return Relation(segs, fills)
 

@@ -320,23 +320,25 @@ def _candidate_pairs_grid(
     return np.concatenate(chunks, axis=0)
 
 
-def _candidate_pairs(segs: Segments) -> np.ndarray:
+def _candidate_pairs(segs: Segments, threads: int | None = None) -> np.ndarray:
     """All index pairs (i<j) with overlapping bounding boxes.
 
     Dispatcher: big jobs run x-strip-parallel (k independent enumerations on
     threads, emit-once across strips via the bbox-intersection min-corner rule
     — same idea as the within-grid emit-once below); everything else runs the
-    single-threaded core."""
+    single-threaded core. threads=None sizes the pools from the host; callers
+    inside a Spark task pass threads=1 (every executor core already runs a
+    task), which never starts a thread pool."""
     n = len(segs)
     if n >= 48_000:
-        k = int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0")) or min(
+        k = threads or int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0")) or min(
             8, os.cpu_count() or 1
         )
         if k > 1:
             out = _candidate_pairs_strips(segs, k)
             if out is not None:
                 return out
-    return _candidate_pairs_core(segs)
+    return _candidate_pairs_core(segs, threads=threads)
 
 
 def _candidate_pairs_strips(segs: Segments, k: int) -> np.ndarray | None:
@@ -579,11 +581,14 @@ def _apply_marks_ref(segs: Segments, marks: list[tuple[int, int, int]]) -> Segme
     return Segments.concat([base, extra])
 
 
-def split_segments(segs: Segments, start: int = 0, step: int = 1, max_rounds: int = 64) -> Segments:
+def split_segments(
+    segs: Segments, start: int = 0, step: int = 1, max_rounds: int = 64, threads: int | None = None
+) -> Segments:
     """Run the snap-radius fixpoint loop to an intersection-free merged segment set.
 
     Radius progression 2^(start + k*step) capped at 2^60, matching Precision::HIGH
-    defaults (iOverlay/src/core/solver.rs:47-51, iOverlay/src/split/snap_radius.rs)."""
+    defaults (iOverlay/src/core/solver.rs:47-51, iOverlay/src/split/snap_radius.rs).
+    `threads` goes to the pair enumeration (see _candidate_pairs)."""
     segs = sort_and_merge(segs)
     # vectorized exact solver (cross_vec) needs every diff product to fit int64;
     # splitting only creates points inside existing bboxes, so check the cap once
@@ -602,7 +607,7 @@ def split_segments(segs: Segments, start: int = 0, step: int = 1, max_rounds: in
         if len(segs) < 2:
             return segs
         radius = 1 << exp
-        pairs = _candidate_pairs(segs)
+        pairs = _candidate_pairs(segs, threads)
         marks: list[tuple[int, int, int]] | tuple = []
         n_marks = 0
         need_fix = False

@@ -24,7 +24,7 @@ from .overlay import build_graph
 
 def _polygon_segments(body: list[np.ndarray], fill_rule: FillRule) -> Segments:
     segs = sort_and_merge(build_segments(body, True))
-    return split_segments(segs)
+    return split_segments(segs, threads=1)  # runs per job inside Spark tasks
 
 
 def _winding_below(segs: Segments, X2: int, Y2: int) -> int:

@@ -169,7 +169,7 @@ def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
         if wide:
             from .split import _candidate_pairs
 
-            for i, j in _candidate_pairs(segs):
+            for i, j in _candidate_pairs(segs, threads=1):
                 pm, rnd = cross_pair(
                     (int(segs.ax[i]), int(segs.ay[i]), int(segs.bx[i]), int(segs.by[i])),
                     (int(segs.ax[j]), int(segs.ay[j]), int(segs.bx[j]), int(segs.by[j])),

@@ -138,6 +138,8 @@ def cluster_labels_df(
         import numpy as np
         import pyarrow as pa
 
+        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
+
         for rb in it:
             ncols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
             nrows = rb.num_rows

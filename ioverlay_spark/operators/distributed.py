@@ -601,7 +601,11 @@ def split_segments_df(
         cells_per_axis = max(floor, int((bounds[0] / max(target_per_cell, 1)) ** 0.5))
         # packed marks/chains need every coordinate (incl. snap-rounded marks,
         # which stay within the bbox ±1) under the 2^30 cap; _sid gives the
-        # kernel a 1-long segment key (deterministic: segs is checkpointed)
+        # kernel a 1-long segment key. It is not materialized: every job that
+        # reads segs_round re-evaluates monotonically_increasing_id, the fused
+        # fill too (compute_fills_df joins segs_round to the marks in a later
+        # job). The ids agree only because segs is the localCheckpointed (or
+        # parquet-read) frame, whose partitions and row order are fixed.
         cmax_round = max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4]))
         packed_round = cmax_round < (1 << 30) - 2
         segs_round = (

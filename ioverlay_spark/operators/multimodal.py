@@ -92,6 +92,8 @@ def extract_features(media: DataFrame) -> DataFrame:
     ship_package(media.sparkSession)
 
     def kernel(batches):
+        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
+
         # whole-batch decode: one concatenated uint8 buffer + per-row offsets;
         # sums and 4-bucket histograms via bincount over row-composed keys (no
         # per-row python loop — VERDICT r03 #6). Exact: uint8 sums stay far

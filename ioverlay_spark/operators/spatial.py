@@ -169,6 +169,8 @@ def knn_broadcast_grid(
     bc = spark.sparkContext.broadcast((c_id, c_x2, c_y2, starts, ends))
 
     def kernel(batches):
+        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
+
         cid, cx2, cy2, st, en = bc.value
 
         def gather_block(pcx, pcy, h):

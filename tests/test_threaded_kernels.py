@@ -183,20 +183,27 @@ def test_candidate_pairs_strips_matches_core():
     SET (emit-once across strips via the bbox-intersection min-corner rule)."""
     from ioverlay_spark.kernel import split as sp
 
-    def canon(p):
-        if not len(p):
-            return p
-        return p[np.lexsort((p[:, 1], p[:, 0]))]
-
     segs = _spiralish(30_000)
-    pc = canon(sp._candidate_pairs_core(segs))
+    pc = _canon_pairs(sp._candidate_pairs_core(segs))
     for k in (2, 8):
         ps = sp._candidate_pairs_strips(segs, k)
         assert ps is not None
-        assert np.array_equal(pc, canon(ps))
-    # randomized mixed-length soup (verticals, duplicates, skew)
+        assert np.array_equal(pc, _canon_pairs(ps))
+    s = _random_soup(60_000)
+    pc = _canon_pairs(sp._candidate_pairs_core(s))
+    ps = sp._candidate_pairs_strips(s, 8)
+    assert ps is not None and np.array_equal(pc, _canon_pairs(ps))
+
+
+def _canon_pairs(p: np.ndarray) -> np.ndarray:
+    if not len(p):
+        return p
+    return p[np.lexsort((p[:, 1], p[:, 0]))]
+
+
+def _random_soup(n: int) -> Segments:
+    """Randomized mixed-length segments (verticals, duplicates, skew), sorted."""
     rng = np.random.default_rng(11)
-    n = 60_000
     ax = rng.integers(0, 1 << 20, n)
     ln = rng.integers(0, 1 << 12, n)
     ay = rng.integers(0, 1 << 20, n)
@@ -204,7 +211,25 @@ def test_candidate_pairs_strips_matches_core():
         ax, ay, ax + ln, ay + rng.integers(-(1 << 8), 1 << 8, n),
         np.ones(n, dtype=np.int64), np.zeros(n, dtype=np.int64),
     )
-    s = s.take(np.lexsort((s.by, s.bx, s.ay, s.ax)))
-    pc = canon(sp._candidate_pairs_core(s))
-    ps = sp._candidate_pairs_strips(s, 8)
-    assert ps is not None and np.array_equal(pc, canon(ps))
+    return s.take(np.lexsort((s.by, s.bx, s.ay, s.ax)))
+
+
+def test_candidate_pairs_single_thread_starts_no_pool(monkeypatch):
+    """threads=1 (the setting for callers inside a Spark task, where every
+    executor core already runs a task) enumerates on the calling thread only,
+    and returns exactly the pair set of the default dispatch."""
+    import concurrent.futures
+
+    from ioverlay_spark.kernel import split as sp
+
+    s = _random_soup(60_000)
+    assert len(s) >= 48_000  # large enough for the strip-parallel dispatch
+    want = sp._candidate_pairs(s)
+
+    def no_pool(*args, **kwargs):
+        raise AssertionError("threads=1 started a thread pool")
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", no_pool)
+    got = sp._candidate_pairs(s, threads=1)
+    assert want.shape == got.shape
+    assert np.array_equal(_canon_pairs(want), _canon_pairs(got))
