@@ -80,12 +80,12 @@ giant = labels.where(F.col("cluster_npts") > 200_000).limit(1).count()
 t5b = time.perf_counter()
 print(f"giant probe {t5b-t5:.2f}s giants={giant}")
 
-from ioverlay_spark.operators.overlay_df import overlay_grouped_rows
+from ioverlay_spark.operators.overlay_df import overlay_pairs
 from ioverlay_spark.options import DEFAULT_OPTIONS
 
 small_labels = F.broadcast(labels.where(F.col("cluster_npts") <= 200_000).select("cid", "cluster"))
 smalls = src.join(small_labels, "cid")
-out = overlay_grouped_rows(
+out = overlay_pairs(
     smalls.select(F.col("cluster").alias("pair_id"), "role", "pts_x", "pts_y"),
     [OverlayRule.UNION],
     FillRule.NON_ZERO,

@@ -11,8 +11,13 @@ tests/test_batch_kernel.py).
 
 This is the engine's List-solver analog of the reference's job-level parallelism
 (rayon over jobs), re-expressed as data-level batching inside one Arrow batch:
-the Spark operator hands a bucket of pairs to one applyInPandas call, which lands
-here (operators/overlay_df.py).
+the Spark operators (operators/overlay_df.py) decode each Arrow batch of jobs to
+the flat ring layout and call overlay_batch_flat_out here.
+
+Every batch entry point ends in overlay_batch_flat_out, whose output is the
+reference's FlatContoursBuffer shape (one points buffer plus per-ring job,
+shape, contour, length and area2 arrays); overlay_batch is a thin adapter from
+(subj_rings, clip_rings) job lists to it and back to per-job Shapes.
 
 Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
   ingest/clean  — vectorized dirty-ring detection; only dirty rings take the scalar
@@ -22,7 +27,9 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
                   vectorized orientation-sign prefilter; the exact python-int cross
                   solver (split.cross_pair) runs only on truly interacting pairs
   fill (A10)    — per-tile compute_fills over contiguous slices
-  extract       — per-tile scalar walk (already per-job work)
+  extract       — vectorized degree-2 walk over the whole batch; tiles with pinch
+                  points replay the scalar trigger loop, and tiles neither can serve
+                  take the per-tile scalar walk
 """
 
 from __future__ import annotations
@@ -42,20 +49,18 @@ Shapes = list[list[np.ndarray]]
 _COORD_CAP = 1 << 30  # beyond this, scalar path (object-int math) is required
 
 
-def _scalar_batch(jobs, rules, fill_rule, options, with_areas: bool = False) -> list[dict]:
+def _scalar_batch(jobs, rules, fill_rule, options) -> list[dict]:
+    """Per-job scalar kernel: [{rule: (shapes, areas)}] for each job."""
+    from .extract import ring_area2
+
     out = []
     for subj, clip in jobs:
         g = build_graph(subj, clip, fill_rule, options)
-        if with_areas:
-            from .extract import ring_area2
-
-            res = {}
-            for rule in rules:
-                shapes = g.extract(rule)
-                res[rule] = (shapes, [[int(ring_area2(r)) for r in s] for s in shapes])
-            out.append(res)
-        else:
-            out.append({rule: g.extract(rule) for rule in rules})
+        res = {}
+        for rule in rules:
+            shapes = g.extract(rule)
+            res[rule] = (shapes, [[int(ring_area2(r)) for r in s] for s in shapes])
+        out.append(res)
     return out
 
 
@@ -349,45 +354,23 @@ def vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options=DEFAUL
     )
 
 
-def _batch_tiled_segments(jobs, options):
-    """Shared ingest + tile placement: jobs' rings -> one raw normalized Segments
-    set with each job translated into its own disjoint x-tile.
-
-    Returns (Segments, off, y0, W), the string _EMPTY (no segments at all), or
-    None (huge coords / overflow risk: caller must take the scalar path)."""
-    nj = len(jobs)
-    # ---- ingest + clean -----------------------------------------------------
-    ring_pts: list[np.ndarray] = []
+def _flatten_jobs(jobs):
+    """(subj_rings, clip_rings) jobs -> the flat ring layout (P, counts,
+    ring_job, ring_subj) every batch entry point feeds the kernel."""
+    rings: list = []
     ring_job: list[int] = []
     ring_subj: list[bool] = []
     for jid, (subj, clip) in enumerate(jobs):
-        for r in subj:
-            ring_pts.append(np.asarray(r, dtype=np.int64).reshape(-1, 2))
-            ring_job.append(jid)
-            ring_subj.append(True)
-        for r in clip:
-            ring_pts.append(np.asarray(r, dtype=np.int64).reshape(-1, 2))
-            ring_job.append(jid)
-            ring_subj.append(False)
-    nr = len(ring_pts)
-    if nr == 0:
-        return _EMPTY
-    t = vectorized_ring_segments(ring_pts, ring_job, ring_subj, options)
-    if t is None:
-        return None
-    if t == _EMPTY:
-        return _EMPTY
-    return _tile_place(t, nj)
-
-
-def _batch_tiled_segments_flat(P, counts, ring_job, ring_subj, nj, options):
-    """_batch_tiled_segments over the flat ring layout (no per-job python loop)."""
-    t = vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options)
-    if t is None:
-        return None
-    if t == _EMPTY:
-        return _EMPTY
-    return _tile_place(t, nj)
+        n0 = len(rings)
+        rings.extend(subj)
+        ns = len(rings) - n0
+        rings.extend(clip)
+        ring_job.extend([jid] * (len(rings) - n0))
+        ring_subj.extend([True] * ns + [False] * (len(rings) - n0 - ns))
+    rings = [np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in rings]
+    counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
+    P = np.concatenate(rings) if rings else np.empty((0, 2), dtype=np.int64)
+    return P, counts, np.asarray(ring_job, dtype=np.int64), np.asarray(ring_subj, dtype=bool)
 
 
 def _tile_place(t, nj):
@@ -416,17 +399,17 @@ def _tile_place(t, nj):
     return Segments(ax, ay, bx, by, subj, clip), off, y0, W
 
 
-def _graph_batch_parts(jobs, fill_rule, options):
-    """One tiled split+fill pass over a whole batch. Returns
-    (segs, all_fills, starts, off, y0) in TILED coordinates, _EMPTY, or None."""
-    t = _batch_tiled_segments(jobs, options)
-    return _split_fill_parts(t, len(jobs), fill_rule)
-
-
-def _split_fill_parts(t, nj, fill_rule):
-    """Split + fill over tiled segments (shared tail of the jobs/flat ingests)."""
+def _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options):
+    """Ingest + tile placement + split + fill: one tiled pass over a whole
+    batch in the flat ring layout. Returns (segs, all_fills, starts, off, y0)
+    in TILED coordinates, _EMPTY, or None (huge coords / overflow risk: caller
+    must take the scalar path)."""
+    t = vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options)
     if t is None or t == _EMPTY:
         return t
+    t = _tile_place(t, nj)
+    if t is None:
+        return None
     raw, off, y0, W = t
     segs = _split_batch(raw)
     n = len(segs)
@@ -447,7 +430,7 @@ def graph_batch(
     one tiled _split_batch + _fills_batch pass. Returns None when the batch needs
     the scalar path (caller falls back to per-job build_graph)."""
     nj = len(jobs)
-    t = _graph_batch_parts(jobs, fill_rule, options)
+    t = _tiled_graph(*_flatten_jobs(jobs), nj, fill_rule, options)
     if t is None:
         return None
     empty = Segments(*[np.empty(0, dtype=np.int64)] * 6)
@@ -990,16 +973,17 @@ def _fast_contours_batch(
     return tile_fast, ring_data
 
 
-def _finalize_fast(ring_data, options, with_areas: bool = False) -> dict[int, Shapes]:
-    """Vectorized validate + classify for the fast-walk ring buffers: rings are
-    grouped by length into regular (k, L) blocks, duplicate/collinear-vertex
-    detection and the shoelace area run as array ops, and only DIRTY rings (rare)
-    take the scalar simplify path. Hole binding runs per tile only when a tile
-    actually has holes. Output equals extract_shapes over the same contours."""
+def _finalize_fast(ring_data, options) -> dict[int, tuple]:
+    """Vectorized validate + classify for the fast-walk rings of the slots
+    _finalize_fast_flat cannot serve (dirty rings, multi-hull hole binding):
+    {slot: (shapes, areas)}. Rings are grouped by length into regular (k, L)
+    blocks, duplicate/collinear-vertex detection and the shoelace area run as
+    array ops, and only DIRTY rings take the scalar simplify path. Output
+    equals extract_shapes(..., with_areas=True) over the same contours."""
     from .extract import bind_holes, ring_area2, simplify_ring
 
-    empty = ([], []) if with_areas else []
-    out: dict[int, list] = {int(sl): empty for sl in ring_data["fast_slots"]}
+    empty = ([], [])
+    out: dict[int, tuple] = {int(sl): empty for sl in ring_data["fast_slots"]}
     n = len(ring_data["slot"])
     if n == 0:
         return {sl: empty for sl in out}
@@ -1065,20 +1049,14 @@ def _finalize_fast(ring_data, options, with_areas: bool = False) -> dict[int, Sh
         hulls = sorted(hulls_by_slot.get(sl, []), key=lambda t: t[0])
         holes = sorted(holes_by_slot.get(sl, []), key=lambda t: t[0])
         if not holes:
-            if with_areas:
-                out[sl] = ([[arr] for _, arr, _ in hulls], [[a2] for _, _, a2 in hulls])
-            else:
-                out[sl] = [[arr] for _, arr, _ in hulls]
+            out[sl] = ([[arr] for _, arr, _ in hulls], [[a2] for _, _, a2 in hulls])
             continue
         amap = {id(arr): a2 for _, arr, a2 in hulls + holes}
         shapes = bind_holes([h for _, h, _ in hulls], [h for _, h, _ in holes])
-        if with_areas:
-            out[sl] = (
-                [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes],
-                [[amap[id(r)] for r in shape] for shape in shapes],
-            )
-        else:
-            out[sl] = [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes]
+        out[sl] = (
+            [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes],
+            [[amap[id(r)] for r in shape] for shape in shapes],
+        )
     return out
 
 
@@ -1086,8 +1064,8 @@ def _finalize_fast(ring_data, options, with_areas: bool = False) -> dict[int, Sh
 # (job, shape_id, contour_idx, lens, pts, area2) arrays instead of per-ring
 # python lists/dicts: the emission side of the Arrow workers and the scalar
 # one-shot API were ~30-40% per-ring python at 10^6-ring batches (round-5
-# scenario profile). Semantics are identical to _finalize_fast + the callers'
-# flatten loops — differential-tested against them over the fixture corpus.
+# scenario profile). Ring sets, order and areas equal the per-job scalar
+# kernel's (differential-tested in tests/test_batch_flat_out.py).
 
 _FLAT_EMPTY = (
     np.empty(0, dtype=np.int64),
@@ -1270,8 +1248,11 @@ def _finalize_fast_flat(ring_data, options):
     return flat, fb_slots
 
 
-def _overlay_tail_flat(t, nj, rules, options, fast_extract):
-    """_overlay_tail producing {rule: flat tuple} (sorted by job/shape/contour)."""
+def _overlay_tail_flat(t, nj, rules, options):
+    """Extraction over split+filled tiled parts -> {rule: flat tuple} sorted by
+    (job, shape, contour). Per rule, the vectorized degree-2 walk serves every
+    tile it can (_finalize_fast_flat, with _finalize_fast for its fallback
+    slots); the remaining tiles take the scalar walk."""
     if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
     segs, all_fills, starts, off, y0 = t
@@ -1283,10 +1264,6 @@ def _overlay_tail_flat(t, nj, rules, options, fast_extract):
     per_rule: dict = {}
     fast_mask: dict = {}
     for rule in rules:
-        if not fast_extract:
-            fast_mask[rule] = np.zeros(nj, dtype=bool)
-            per_rule[rule] = [_FLAT_EMPTY]
-            continue
         tile_fast, ring_data = _fast_contours_batch(
             segs, rule_masks[rule], all_fills, starts, rule, clockwise_output, off, y0
         )
@@ -1302,7 +1279,7 @@ def _overlay_tail_flat(t, nj, rules, options, fast_extract):
                 k: (fb_slots if k == "fast_slots" else v[sel])
                 for k, v in ring_data.items()
             }
-            per_slot = _finalize_fast(sub, options, with_areas=True)
+            per_slot = _finalize_fast(sub, options)
             parts.append(
                 _shapes_to_flat([(int(sl), per_slot[int(sl)]) for sl in fb_slots])
             )
@@ -1314,6 +1291,9 @@ def _overlay_tail_flat(t, nj, rules, options, fast_extract):
     nonempty = np.diff(starts) > 0
     slow_slots = np.flatnonzero(any_slow & nonempty)
     if len(slow_slots):
+        # job-local endpoint lists for EVERY link, adjusted batch-wide in numpy;
+        # per tile these are list slices feeding ONE _LinkGraph shared by every
+        # rule's walk (dead links pre-visited per rule)
         from .extract import _LinkGraph, finalize_contours, walk_contours
 
         link_off = np.repeat(off, np.diff(starts))
@@ -1349,83 +1329,36 @@ def overlay_batch_flat_out(
     rules: list,
     fill_rule: FillRule = FillRule.EVEN_ODD,
     options: OverlayOptions = DEFAULT_OPTIONS,
-    fast_extract: bool | None = None,
 ) -> dict:
-    """overlay_batch_flat with FLAT output: {rule: (job, shape_id, contour_idx,
-    lens, pts, area2)} where pts is the (sum(lens), 2) int64 concatenation of
-    every output ring in (job, shape_id, contour_idx) order. Ring sets are
-    identical to overlay_batch_flat(..., with_areas=True) over the same input;
-    jobs need not be pre-sorted in ring_job."""
-    if fast_extract is None:
-        fast_extract = FAST_EXTRACT_DEFAULT
+    """Batch overlay over the FLAT ring layout: P is the (total_pts, 2) int64
+    stack of every ring's points, counts/ring_job/ring_subj are per ring (the
+    shape Arrow list columns decode to with zero per-row Python). Returns
+    {rule: (job, shape_id, contour_idx, lens, pts, area2)} where pts is the
+    (sum(lens), 2) int64 concatenation of every output ring in (job, shape_id,
+    contour_idx) order. Each job's rings and areas equal the per-job scalar
+    kernel's (build_graph + extract_shapes(..., with_areas=True)); jobs need
+    not be pre-sorted in ring_job. Falls back to the scalar kernel per job
+    when coordinates are large enough to need python-int math batch-wide."""
     rules = [OverlayRule(r) for r in rules]
     if nj == 0:
         return {rule: _FLAT_EMPTY for rule in rules}
     t = None
     if nj > 1:
-        t = _split_fill_parts(
-            _batch_tiled_segments_flat(P, counts, ring_job, ring_subj, nj, options),
-            nj, fill_rule,
-        )
+        t = _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options)
     if nj == 1 or t is None:
         res = _scalar_batch(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj),
-            rules, fill_rule, options, with_areas=True,
+            _jobs_from_flat(P, counts, ring_job, ring_subj, nj), rules, fill_rule, options
         )
         return {
             rule: _shapes_to_flat([(j, res[j][rule]) for j in range(nj)])
             for rule in rules
         }
-    return _overlay_tail_flat(t, nj, rules, options, fast_extract)
-
-
-# The vectorized degree-2 walk trades python time for MEMORY BANDWIDTH. Round 2
-# measured it LOSING the 4->16-worker scaling on this one-bus box (0.906 ->
-# 0.743: 16 workers' int64 streaming ops saturated the shared memory bus) and
-# set the default off. The round-4 int32 narrow mode (ids + span-relative
-# coordinates at half the word size) restores it: audits/walk_scaling_probe.py
-# reads scalar 23.2k/82.5k jobs/s (4/16 procs, eff 0.888) vs fast 34.9k/117.3k
-# (eff 0.840) — the fast walk wins ~42% at BOTH parallelism levels with scaling
-# above the 0.8 bar, so it is the default everywhere. Pinch/crossing tiles
-# (boundary degree > 2) are served by the exact scalar-trigger replay in
-# _sim_walk_tiles rather than the full scalar fallback.
-FAST_EXTRACT_DEFAULT = True
-
-
-@gc_paused_fn
-def overlay_batch(
-    jobs: list[tuple[list[np.ndarray], list[np.ndarray]]],
-    rules: list[OverlayRule],
-    fill_rule: FillRule = FillRule.EVEN_ODD,
-    options: OverlayOptions = DEFAULT_OPTIONS,
-    fast_extract: bool | None = None,
-    with_areas: bool = False,
-) -> list[dict[OverlayRule, Shapes]]:
-    """Run a batch of (subj_rings, clip_rings) jobs; returns per-job {rule: shapes}.
-
-    Bit-identical to per-job kernel runs (tiles are disjoint in x, so no stage ever
-    pairs segments across jobs). Falls back to the scalar path when coordinates are
-    large enough to need python-int math batch-wide. fast_extract enables the
-    vectorized degree-2 ring walk (see FAST_EXTRACT_DEFAULT). with_areas=True
-    returns {rule: (shapes, areas)} with the validation scan's per-ring signed
-    area2 — emitting consumers should use it instead of re-walking each ring."""
-    if fast_extract is None:
-        fast_extract = FAST_EXTRACT_DEFAULT
-    rules = [OverlayRule(r) for r in rules]
-    nj = len(jobs)
-    if nj == 0:
-        return []
-    if nj == 1:
-        return _scalar_batch(jobs, rules, fill_rule, options, with_areas=with_areas)
-    t = _graph_batch_parts(jobs, fill_rule, options)
-    if t is None:
-        return _scalar_batch(jobs, rules, fill_rule, options, with_areas=with_areas)
-    return _overlay_tail(t, nj, rules, options, fast_extract, with_areas)
+    return _overlay_tail_flat(t, nj, rules, options)
 
 
 def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
     """Reassemble (subj_rings, clip_rings) jobs from the flat ring layout — only
-    for the rare scalar fallback (coords beyond _COORD_CAP)."""
+    for the scalar fallback (one job, or coords beyond _COORD_CAP)."""
     S = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
     jobs: list[tuple[list, list]] = [([], []) for _ in range(nj)]
     for r in range(len(counts)):
@@ -1434,106 +1367,49 @@ def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
     return jobs
 
 
+def _flat_to_job_shapes(flat, nj: int) -> list[Shapes]:
+    """(job, sid, cidx, lens, pts, a2) sorted by job -> per-job Shapes lists
+    (rings are views of one contiguous buffer; shape boundaries at
+    contour_idx == 0)."""
+    job, _, cidx, lens, pts, _ = flat
+    out: list[Shapes] = [[] for _ in range(nj)]
+    if len(lens) == 0:
+        return out
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    # direct slicing, not np.split: array_split creates each sub-array through
+    # a python _wrapfunc/swapaxes pair — ~2.5x slower per ring at 100k+ rings
+    # (profiled on the windows scenario, 30% of the one-shot wall)
+    ob = offs.tolist()
+    last: list = []
+    for i, (j, first) in enumerate(zip(job.tolist(), (cidx == 0).tolist())):
+        r = pts[ob[i]:ob[i + 1]]
+        if first:
+            last = [r]
+            out[j].append(last)
+        else:
+            last.append(r)
+    return out
+
+
 @gc_paused_fn
-def overlay_batch_flat(
-    P: np.ndarray,
-    counts: np.ndarray,
-    ring_job: np.ndarray,
-    ring_subj: np.ndarray,
-    nj: int,
+def overlay_batch(
+    jobs: list[tuple[list[np.ndarray], list[np.ndarray]]],
     rules: list[OverlayRule],
     fill_rule: FillRule = FillRule.EVEN_ODD,
     options: OverlayOptions = DEFAULT_OPTIONS,
-    fast_extract: bool | None = None,
-    with_areas: bool = False,
 ) -> list[dict[OverlayRule, Shapes]]:
-    """overlay_batch over the FLAT ring layout: P = (total_pts, 2) int64 stack of
-    all rings' points, counts/ring_job/ring_subj per ring. This is the zero-
-    per-row ingest for Arrow list columns (offsets+values straight from the
-    RecordBatch) — results are identical to overlay_batch over the same rings."""
-    if fast_extract is None:
-        fast_extract = FAST_EXTRACT_DEFAULT
+    """Run a batch of (subj_rings, clip_rings) jobs; returns per-job {rule: shapes}.
+
+    Bit-identical to per-job kernel runs (tiles are disjoint in x, so no stage ever
+    pairs segments across jobs). A thin adapter over overlay_batch_flat_out: the
+    jobs are flattened to the flat ring layout and each rule's flat output is
+    split back into per-job Shapes."""
     rules = [OverlayRule(r) for r in rules]
-    if nj == 0:
-        return []
-    if nj == 1:
-        return _scalar_batch(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj),
-            rules, fill_rule, options, with_areas=with_areas,
-        )
-    t = _split_fill_parts(
-        _batch_tiled_segments_flat(P, counts, ring_job, ring_subj, nj, options),
-        nj, fill_rule,
-    )
-    if t is None:
-        return _scalar_batch(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj),
-            rules, fill_rule, options, with_areas=with_areas,
-        )
-    return _overlay_tail(t, nj, rules, options, fast_extract, with_areas)
-
-
-def _overlay_tail(t, nj, rules, options, fast_extract, with_areas):
-    """Extraction over split+filled tiled parts (shared by the jobs/flat entries)."""
-    _mt = (lambda: ([], [])) if with_areas else (lambda: [])
-    results: list[dict[OverlayRule, Shapes]] = [
-        {rule: _mt() for rule in rules} for _ in range(nj)
-    ]
-    if t == _EMPTY:
-        return results
-    segs, all_fills, starts, off, y0 = t
-    # boundary masks per rule, computed ONCE over the whole batch and sliced per tile
-    from ..options import ContourDirection
-    from .extract import boundary_mask
-
-    clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
-    rule_masks = {rule: boundary_mask(all_fills, rule) for rule in rules}
-    # vectorized degree-2 walk + finalize over the whole batch per rule; tiles it
-    # cannot serve (pinch points / huge rings) fall back to the scalar walk below
-    fast_shapes: dict[OverlayRule, dict[int, Shapes]] = {}
-    fast_mask: dict[OverlayRule, np.ndarray] = {}
+    nj = len(jobs)
+    res = overlay_batch_flat_out(*_flatten_jobs(jobs), nj, rules, fill_rule, options)
+    out: list[dict[OverlayRule, Shapes]] = [{} for _ in range(nj)]
     for rule in rules:
-        if not fast_extract:
-            fast_mask[rule] = np.zeros(nj, dtype=bool)
-            fast_shapes[rule] = {}
-            continue
-        tile_fast, ring_data = _fast_contours_batch(
-            segs, rule_masks[rule], all_fills, starts, rule, clockwise_output, off, y0
-        )
-        fast_mask[rule] = tile_fast
-        if ring_data is None:
-            fast_shapes[rule] = {}
-        else:
-            fast_shapes[rule] = _finalize_fast(ring_data, options, with_areas=with_areas)
-    any_slow = ~np.ones(nj, dtype=bool)
-    for rule in rules:
-        any_slow |= ~fast_mask[rule]
-    if any_slow.any():
-        # job-local endpoint lists for EVERY link, adjusted batch-wide in numpy
-        # (per-tile numpy slicing + zipping was ~15% of the batch wall);
-        # per tile these are O(1)-ish list slices feeding ONE _LinkGraph shared
-        # by every rule's walk (dead links pre-visited per rule)
-        from .extract import _LinkGraph, finalize_contours, walk_contours
-
-        link_off = np.repeat(off, np.diff(starts))
-        all_pa = list(zip((segs.ax - link_off).tolist(), (segs.ay + y0).tolist()))
-        all_pb = list(zip((segs.bx - link_off).tolist(), (segs.by + y0).tolist()))
-        all_fl = all_fills.tolist()
-    clockwise = clockwise_output
-    for slot in range(nj):
-        lo, hi = int(starts[slot]), int(starts[slot + 1])
-        if lo == hi:
-            continue
-        if any_slow[slot]:
-            g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
-        for rule in rules:
-            if fast_mask[rule][slot]:
-                results[slot][rule] = fast_shapes[rule].get(slot, _mt())
-            else:
-                contours = walk_contours(
-                    None, None, rule, clockwise, rule_masks[rule][lo:hi], g
-                )
-                results[slot][rule] = finalize_contours(
-                    contours, options, with_areas=with_areas
-                )
-    return results
+        for d, shapes in zip(out, _flat_to_job_shapes(res[rule], nj)):
+            d[rule] = shapes
+    return out

@@ -104,18 +104,15 @@ def overlay(
     the reference contract (its own fixture comparator is order-canonical,
     iOverlay/tests/util.rs) — consumers must not index output positionally."""
     if len(subj) + len(clip) >= CLUSTER_MIN_RINGS:
+        from .batch import _flat_to_job_shapes, _flatten_jobs, overlay_batch_flat_out
         from .cluster import cluster_labels
 
         # flat end-to-end: one concatenate + per-ring bboxes, labels as the
         # ring->job map, the batch kernel's flat ingest/emit — no per-ring
         # python job lists anywhere (they were ~30% of large one-shots and made
         # every GC pass O(rings))
-        rings = [np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in subj] + [
-            np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in clip
-        ]
-        nr = len(rings)
-        counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=nr)
-        P = np.concatenate(rings) if nr else np.empty((0, 2), dtype=np.int64)
+        P, counts, _, ring_subj = _flatten_jobs([(subj, clip)])
+        nr = len(counts)
         starts = np.zeros(nr, dtype=np.int64)
         np.cumsum(counts[:-1], out=starts[1:])
         ok = counts > 0
@@ -127,40 +124,12 @@ def overlay(
             maxy = np.maximum.reduceat(P[:, 1], red)
             labels = cluster_labels(minx, miny, maxx, maxy)
             if labels is not None:
-                from .batch import overlay_batch_flat_out
-
-                ring_subj = np.zeros(nr, dtype=bool)
-                ring_subj[: len(subj)] = True
+                nj = int(labels.max()) + 1
                 flat = overlay_batch_flat_out(
-                    P, counts, labels, ring_subj, int(labels.max()) + 1,
-                    [rule], fill_rule, options,
+                    P, counts, labels, ring_subj, nj, [rule], fill_rule, options
                 )[rule]
-                return _flat_to_shapes(flat)
+                return [s for job in _flat_to_job_shapes(flat, nj) for s in job]
     return build_graph(subj, clip, fill_rule, options).extract(rule)
-
-
-def _flat_to_shapes(flat) -> Shapes:
-    """(job, sid, cidx, lens, pts, a2) -> the Shapes list API (rings are views
-    of one contiguous buffer; shape boundaries at contour_idx == 0)."""
-    _, _, cidx, lens, pts, _ = flat
-    if len(lens) == 0:
-        return []
-    offs = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    # direct slicing, not np.split: array_split creates each sub-array through
-    # a python _wrapfunc/swapaxes pair — ~2.5x slower per ring at 100k+ rings
-    # (profiled on the windows scenario, 30% of the one-shot wall)
-    ob = offs.tolist()
-    out: Shapes = []
-    last = None
-    for i, first in enumerate((cidx == 0).tolist()):
-        r = pts[ob[i]:ob[i + 1]]
-        if first:
-            last = [r]
-            out.append(last)
-        else:
-            last.append(r)
-    return out
 
 
 def simplify(

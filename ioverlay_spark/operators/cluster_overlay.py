@@ -19,7 +19,7 @@ relational patterns:
                                                            below the threshold,
                                                            alternating stars
                                                            above)
-           --repartition(cluster) . mapInArrow-->        (overlay_grouped_rows,
+           --repartition(cluster) . mapInArrow-->        (overlay_pairs,
                                                            the flagship batch
                                                            worker on the flat
                                                            Arrow ring layout)
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..options import DEFAULT_OPTIONS, FillRule, OverlayOptions, OverlayRule
 from .distributed_extract import connected_components
-from .overlay_df import overlay_grouped_rows
+from .overlay_df import overlay_pairs
 
 # cells holding more than this many contours take the star-guard path (anchor
 # edges instead of all-pairs) — over-merging dense regions into one cluster is
@@ -320,7 +320,7 @@ def cluster_overlay(
         smalls = src.where(F.size("pts_x") <= giant_points_cap).select(
             F.col("cid").alias("pair_id"), "role", "pts_x", "pts_y"
         )
-        grouped = overlay_grouped_rows(
+        grouped = overlay_pairs(
             smalls, [rule], fill_rule, options, pre_grouped=True
         )
     else:
@@ -335,7 +335,7 @@ def cluster_overlay(
         if n_labels <= 8_000_000:
             small_labels = F.broadcast(small_labels)
         smalls = src.join(small_labels, "cid")
-        grouped = overlay_grouped_rows(
+        grouped = overlay_pairs(
             smalls.select(
                 F.col("cluster").alias("pair_id"), "role", "pts_x", "pts_y"
             ),

@@ -27,7 +27,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1158,29 +1157,34 @@ def compute_fills_df(
 def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: OverlayOptions):
     """One-task exact kernel over a merged segment set: split fixpoint + fill +
     extract + hole binding, all in numpy/python — the List-solver analog.
+    A mapInArrow iterator: the caller's repartition(1) hands it every segment.
 
     Uses the BATCHED split/fill machinery (vectorized candidate prefilter; exact
     python-int cross solver only on interacting pairs — bit-identical to the
     scalar kernel, differential-tested) treating the whole job as one tile;
     falls back to the scalar python-int path when coordinates exceed the
     int64-safe range."""
-    from ..kernel.batch import _COORD_CAP, _fills_batch, _split_batch
+    from ..kernel.batch import _COORD_CAP, _shapes_to_flat, _split_batch
     from ..kernel.extract import extract_shapes
     from ..kernel.fill import compute_fills_windowed as kernel_fills
     from ..kernel.segments import Segments
     from ..kernel.split import split_segments as kernel_split
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(it):
+        batches = list(it)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        if tbl.num_rows == 0:
+            return
         segs = Segments(
-            pdf["ax"].to_numpy(np.int64),
-            pdf["ay"].to_numpy(np.int64),
-            pdf["bx"].to_numpy(np.int64),
-            pdf["by"].to_numpy(np.int64),
-            pdf["subj"].to_numpy(np.int64),
-            pdf["clip"].to_numpy(np.int64),
+            *(
+                tbl.column(c).to_numpy().astype(np.int64, copy=False)
+                for c in ("ax", "ay", "bx", "by", "subj", "clip")
+            )
         )
         coords = [segs.ax, segs.ay, segs.bx, segs.by]
-        cmax = max((int(np.abs(c).max()) for c in coords if len(c)), default=0)
+        cmax = max(int(np.abs(c).max()) for c in coords)
         if cmax < _COORD_CAP:
             segs = _split_batch(segs)  # vectorized prefilter + exact solver
         else:
@@ -1188,24 +1192,21 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
         # fill: the x-windowed midpoint ray-cast (O(n * local density) — exact,
         # differential-tested against the dense kernel)
         fills = kernel_fills(segs, fill_rule)
-        shapes, areas = extract_shapes(segs, fills, rule, options, with_areas=True)
-        rows = []
-        rid = 0
-        for si, (shape, s_areas) in enumerate(zip(shapes, areas)):
-            for ri, (ring, a2) in enumerate(zip(shape, s_areas)):
-                rows.append(
-                    (
-                        si,
-                        rid,
-                        ri > 0,
-                        [int(p[0]) for p in ring],
-                        [int(p[1]) for p in ring],
-                        a2,
-                    )
-                )
-                rid += 1
-        return pd.DataFrame(
-            rows, columns=["shape_id", "ring_id", "is_hole", "pts_x", "pts_y", "area2"]
+        shapes_areas = extract_shapes(segs, fills, rule, options, with_areas=True)
+        _, sid, cidx, lens, pts, a2 = _shapes_to_flat([(0, shapes_areas)])
+        offs = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offs[1:])
+        po = pa.array(offs.astype(np.int32))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(sid),
+                pa.array(np.arange(len(sid), dtype=np.int64)),
+                pa.array(cidx > 0),
+                pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 0]))),
+                pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 1]))),
+                pa.array(a2),
+            ],
+            names=["shape_id", "ring_id", "is_hole", "pts_x", "pts_y", "area2"],
         )
 
     return run
@@ -1231,7 +1232,7 @@ def distributed_overlay(
     (sum of c·(c−1)/2 over a 32×32 grid-cover histogram). The pair bound matters
     because post-merge size says nothing about post-SPLIT size — a lines-net of
     2n long strips is only 8n segments but explodes into n² crossings, which
-    would OOM a single task at scale. Both small → one applyInPandas task runs
+    would OOM a single task at scale. Both small → one mapInArrow task runs
     the exact kernel (split + fill + extract + hole binding) in one job; either
     large (or force_distributed) → the fully distributed fixpoint / x-strip fill
     / component extraction pipeline. Differential tests assert the paths agree.
@@ -1263,12 +1264,10 @@ def distributed_overlay(
         # the one-task kernel's O(n*m) fill must survive, not the input size
         est_out = bounds[0] + 2 * est_pairs
         if est_out <= pair_threshold:
-            return (
-                merged.withColumn("_g", F.lit(0))
-                .groupBy("_g")
-                .applyInPandas(
-                    _local_overlay_kernel(rule, fill_rule, options), schema=RINGS_OUT_SCHEMA
-                )
+            # repartition(1) + mapInArrow, not a constant-key grouped map: the
+            # grouped-map plan sorts the partition by its key before grouping
+            return merged.repartition(1).mapInArrow(
+                _local_overlay_kernel(rule, fill_rule, options), schema=RINGS_OUT_SCHEMA
             )
     split = split_segments_df(
         merged,

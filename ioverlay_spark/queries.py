@@ -393,8 +393,8 @@ def _clip_rect_exprs(id_col: str, dialect: str) -> dict[str, str]:
 @_register("overlay_rect_intersect")
 def _q_overlay_rect_intersect():
     """Boolean INTERSECT of rect pairs (subject = doc rect, clip = shifted/resized
-    copy) run through the full distributed kernel
-    (groupBy(pair_id).applyInPandas); oracle is the exact closed-form rectangle
+    copy) run through overlay_pairs (repartition by pair_id, then the flat batch
+    kernel in mapInArrow); oracle is the exact closed-form rectangle
     intersection area."""
 
     def spark_fn(spark, sf_dir):

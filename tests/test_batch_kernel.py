@@ -113,23 +113,17 @@ def test_batch_passes_executed_golden_fixtures():
                 assert shapes_match_any(r[rule], variants), f"fixture {i} rule {rule.value}"
 
 
-def test_fast_extract_bit_identical_to_scalar_walk():
-    """The vectorized degree-2 walk (fast_extract=True, off by default on local
-    mode for memory-bandwidth scaling reasons) must match the scalar walk
-    bit-for-bit across rules, including XOR's full fallback and hole-bearing
-    tiles."""
-    import numpy as np
-
-    from ioverlay_spark.kernel.batch import overlay_batch
-    from ioverlay_spark.options import FillRule, OverlayRule
-
+def test_batch_shifted_rects_with_holes():
+    """Shifted rect pairs, every fifth subject with a hole: the vectorized
+    degree-2 walk serves the INTERSECT/UNION/DIFFERENCE tiles, XOR's crossing
+    tiles take the exact scalar-trigger replay, and hole-bearing tiles the
+    hole binding — all bit-identical to the per-job scalar kernel."""
     rng = np.random.default_rng(23)
     jobs = []
     for k in range(250):
         x1, y1 = int(rng.integers(0, 1 << 18)), int(rng.integers(0, 1 << 18))
         w, h = int(rng.integers(64, 2048)), int(rng.integers(64, 2048))
-        dx, dy = w // 3, h // 3
-        subj = [np.array([[x1, y1], [x1 + w, y1], [x1 + w, y1 + h], [x1, y1 + h]], np.int64)]
+        subj = [rect(x1, y1, w, h)]
         if k % 5 == 0:  # nested: union has a hole
             subj.append(
                 np.array(
@@ -142,18 +136,5 @@ def test_fast_extract_bit_identical_to_scalar_walk():
                     np.int64,
                 )
             )
-        clip = [
-            np.array(
-                [[x1 + dx, y1 + dy], [x1 + w + dx, y1 + dy], [x1 + w + dx, y1 + h + dy], [x1 + dx, y1 + h + dy]],
-                np.int64,
-            )
-        ]
-        jobs.append((subj, clip))
-    rules = [OverlayRule.INTERSECT, OverlayRule.UNION, OverlayRule.XOR, OverlayRule.DIFFERENCE]
-    slow = overlay_batch(jobs, rules, FillRule.EVEN_ODD, fast_extract=False)
-    fast = overlay_batch(jobs, rules, FillRule.EVEN_ODD, fast_extract=True)
-    for i, (a, b) in enumerate(zip(slow, fast)):
-        for rule in rules:
-            ka = [[r.tolist() for r in shape] for shape in a[rule]]
-            kb = [[r.tolist() for r in shape] for shape in b[rule]]
-            assert ka == kb, f"job {i} rule {rule} diverged"
+        jobs.append((subj, [rect(x1 + w // 3, y1 + h // 3, w, h)]))
+    assert_batch_equals_scalar(jobs, FillRule.EVEN_ODD)

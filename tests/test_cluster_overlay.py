@@ -99,37 +99,40 @@ def test_cluster_labels_df_windows(spark):
     assert all(len(v) == 2 for v in by_cluster.values())
 
 
-def test_overlay_grouped_rows_matches_overlay_pairs(spark):
-    # the flat-Arrow grouped path is bit-identical to the applyInPandas
-    # grouped path (same kernel underneath)
-    from ioverlay_spark.operators.overlay_df import overlay_grouped_rows, overlay_pairs
-    from ioverlay_spark.options import OverlayRule
+def test_overlay_pairs_matches_scalar_kernel(spark):
+    # Spark overlay_pairs (repartition by pair_id + flat mapInArrow batch
+    # kernel) vs the scalar kernel run per pair: exact rows, shape/contour
+    # numbering and area2 included
+    from ioverlay_spark.kernel.extract import extract_shapes
+    from ioverlay_spark.operators.overlay_df import overlay_pairs
+    from ioverlay_spark.options import DEFAULT_OPTIONS
 
+    rules = [OverlayRule.DIFFERENCE, OverlayRule.XOR]
     subj, clip = scenarios.windows(6)
     rows = []
-    for i, r in enumerate(subj):
-        rows.append((i % 9, "subject", r[:, 0].tolist(), r[:, 1].tolist()))
-    for i, r in enumerate(clip):
-        rows.append((i % 9, "clip", r[:, 0].tolist(), r[:, 1].tolist()))
+    jobs: dict = {}
+    for role, rings in (("subject", subj), ("clip", clip)):
+        for i, r in enumerate(rings):
+            rows.append((i % 9, role, r[:, 0].tolist(), r[:, 1].tolist()))
+            jobs.setdefault(i % 9, ([], []))[role == "clip"].append(r)
     df = spark.createDataFrame(rows, ["pair_id", "role", "pts_x", "pts_y"])
 
-    def canon_rows(collected):
-        return sorted(
-            (r.pair_id, r.rule, r.shape_id, r.contour_idx, tuple(r.pts_x), tuple(r.pts_y), r.area2)
-            for r in collected
-        )
-
-    got = canon_rows(
-        overlay_grouped_rows(df, [OverlayRule.DIFFERENCE], FillRule.NON_ZERO).collect()
+    got = sorted(
+        (r.pair_id, r.rule, r.shape_id, r.contour_idx, tuple(r.pts_x), tuple(r.pts_y), r.area2)
+        for r in overlay_pairs(df, rules, FillRule.NON_ZERO).collect()
     )
-    exp = canon_rows(
-        overlay_pairs(
-            df.selectExpr("pair_id", "role", "CAST(0 AS BIGINT) shape_id",
-                          "CAST(0 AS INT) contour_idx", "pts_x", "pts_y"),
-            [OverlayRule.DIFFERENCE], FillRule.NON_ZERO,
-        ).collect()
-    )
-    assert got == exp and len(got) > 0
+    exp = []
+    for pid, (s_rings, c_rings) in jobs.items():
+        g = build_graph(s_rings, c_rings, FillRule.NON_ZERO)
+        for rule in rules:
+            shapes, areas = extract_shapes(
+                g.segments, g.fills, rule, DEFAULT_OPTIONS, with_areas=True
+            )
+            for sid, (shape, s_areas) in enumerate(zip(shapes, areas)):
+                for cid, (ring, a2) in enumerate(zip(shape, s_areas)):
+                    exp.append((pid, rule.value, sid, cid, tuple(ring[:, 0].tolist()),
+                                tuple(ring[:, 1].tolist()), int(a2)))
+    assert got == sorted(exp) and len(got) > 0
 
 
 def test_floor_div_exact_beyond_double(spark):

@@ -299,9 +299,12 @@ def test_distributed_extract_matches_kernel_areas(spark, board, rule_name):
     assert set(pdf.loc[pdf["is_hole"], "shape_id"]).issubset(hull_ids)
     # strategy dispatch: the small-path one-task kernel must agree with the
     # fully distributed plan (areas + hole structure)
-    small = distributed_overlay(
+    small_df = distributed_overlay(
         contours_to_segments_df(spark, df), rule, FillRule.EVEN_ODD
-    ).toPandas()
+    )
+    plan = small_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" not in plan, plan
+    small = small_df.toPandas()
     assert sorted(small["area2"].tolist()) == got
     assert sorted(small["is_hole"].tolist()) == sorted(pdf["is_hole"].tolist())
 

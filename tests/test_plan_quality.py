@@ -91,8 +91,12 @@ def test_overlay_pairs_single_shuffle(spark):
     df = overlay_pairs(geoms, rules=["union"])
     p = plan_str(df)
     assert p.count("Exchange hashpartitioning") == 1, (
-        "exactly one hash shuffle (the bucket repartition) expected:\n" + p
+        "exactly one hash shuffle (the pair_id repartition) expected:\n" + p
     )
+    # a flat mapInArrow over the shuffled partitions: no grouped pandas map,
+    # and no sort ahead of it
+    assert "MapInArrow" in p, p
+    assert "FlatMapGroupsInPandas" not in p and "Sort" not in p, p
 
 
 def test_cell_index_wholestage_codegen(spark):
