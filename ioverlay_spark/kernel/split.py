@@ -14,7 +14,7 @@ Candidate-pair generation is vectorized (x-sweep + bbox masks). Exact math runs
 through the vectorized int64 solver (cross_vec.cross_pairs_batch) whenever every
 coordinate is under 2^30; beyond that it falls back to the python-int scalar
 `cross_pair` per candidate pair. At Spark scale this same kernel runs per grid
-cell inside applyInPandas (SURVEY.md A6).
+cell inside applyInArrow (SURVEY.md A6).
 """
 
 from __future__ import annotations
@@ -454,7 +454,9 @@ def _candidate_pairs_core(segs: Segments, threads: int | None = None) -> np.ndar
     return np.concatenate(out, axis=0)
 
 
-def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
+def _apply_marks(
+    segs: Segments, marks: list[tuple[int, int, int]], parents: bool = False
+) -> Segments | tuple[Segments, np.ndarray]:
     """Split segments at their marks; sub-marks ordered along the segment
     (iOverlay/src/split/solver.rs:158-302): x ascending, y toward b at equal x.
     Degenerate sub-segments (marks equal to an endpoint, duplicates) dropped.
@@ -465,14 +467,14 @@ def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
 
     marks is either a list of (seg_idx, x, y) tuples (scalar path) or a
     (seg_idx, x, y) triple of int64 arrays (the vectorized solver's native
-    output — no per-mark python round-trip)."""
+    output — no per-mark python round-trip).
+
+    parents=True also returns, for every output row, the index of the input
+    segment it came from (kept rows, then each sub-segment's parent): callers
+    carrying per-segment payload copy it onto the output with one take."""
     if isinstance(marks, tuple):
         mi, mx, my = (np.asarray(a, dtype=np.int64) for a in marks)
-        if len(mi) == 0:
-            return segs
     else:
-        if not len(marks):
-            return segs
         m = np.asarray(marks, dtype=np.int64).reshape(-1, 3)
         mi, mx, my = m[:, 0], m[:, 1], m[:, 2]
     # drop marks at the segment's own endpoints
@@ -487,7 +489,7 @@ def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
     keep_mask[endpoint_only] = True
     mi, mx, my = mi[~at_end], mx[~at_end], my[~at_end]
     if len(mi) == 0:
-        return segs
+        return (segs, np.arange(len(segs), dtype=np.int64)) if parents else segs
     # order along the segment, then dedupe identical (seg, point) triples
     ysign = np.where(segs.by[mi] >= segs.ay[mi], 1, -1)
     order = np.lexsort((ysign * my, mx, mi))
@@ -519,8 +521,9 @@ def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
     inner = idx != bounds[chain + 1] - 1
     ax0, ay0 = px[:-1][inner], py[:-1][inner]
     bx0, by0 = px[1:][inner], py[1:][inner]
-    so = segs.subj[seg_ids[chain[inner]]]
-    co = segs.clip[seg_ids[chain[inner]]]
+    parent = seg_ids[chain[inner]]
+    so = segs.subj[parent]
+    co = segs.clip[parent]
     # re-normalize: original direction a->b is "forward"; a sub-segment keeps
     # the original count if still forward after a<b normalization, else negates
     fwd = (ax0 < bx0) | ((ax0 == bx0) & (ay0 < by0))
@@ -529,7 +532,7 @@ def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
     nbx = np.where(fwd, bx0, ax0)
     nby = np.where(fwd, by0, ay0)
     nz = (nax != nbx) | (nay != nby)
-    base = segs.take(np.flatnonzero(keep_mask))
+    kept = np.flatnonzero(keep_mask)
     extra = Segments(
         nax[nz],
         nay[nz],
@@ -538,7 +541,8 @@ def _apply_marks(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:
         np.where(fwd, so, -so)[nz],
         np.where(fwd, co, -co)[nz],
     )
-    return Segments.concat([base, extra])
+    out = Segments.concat([segs.take(kept), extra])
+    return (out, np.concatenate([kept, parent[nz]])) if parents else out
 
 
 def _apply_marks_ref(segs: Segments, marks: list[tuple[int, int, int]]) -> Segments:

@@ -4,11 +4,13 @@ When a single overlay job has millions of segments, the per-pair kernel cannot h
 it; this pipeline distributes every stage of the reference algorithm:
 
   A1/A2  sort+merge          -> groupBy(a,b).sum(counts), drop zeros (hash agg)
-  A6/A7  split               -> grid-cell explode -> per-cell pandas kernel finds
-                                exact intersection marks -> global mark dedup
-  A8     apply marks         -> PURE Column ops: collect+sort marks per segment,
-                                explode sub-segment chain (no Python in the path)
-  A9     snap fixpoint       -> driver loop; each round is one Spark job
+  A6/A7  split               -> grid-cell explode -> per-cell Arrow kernel finds
+                                exact intersection marks
+  A8     apply marks         -> collect_set the marks per segment, join them on,
+                                then ONE numpy kernel (kernel/split._apply_marks)
+                                per Arrow batch splits each segment at its marks
+  A9     snap fixpoint       -> driver loop; each round is one Spark job; the
+                                result (SplitResult) goes to the fill stage
   A10    fill                -> x-strip explode -> per-strip vectorized ray-cast
                                 winding (each segment evaluated in its midpoint
                                 strip against all segments crossing that strip)
@@ -19,15 +21,16 @@ it; this pipeline distributes every stage of the reference algorithm:
                                 max_by), hole->hole chains resolved on the driver
 
 Skew: per-cell segment histograms pick the grid level; cells exceeding the hot
-threshold are salted to a finer sub-grid before the pandas kernel (north rule).
+threshold are salted to a finer sub-grid before the Arrow kernel (north rule).
 """
 
 from __future__ import annotations
 
-import os
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -40,10 +43,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel.split import cross_pair
+from ..kernel.segments import Segments
+from ..kernel.split import _apply_marks, cross_pair
 from ..options import FillRule, OverlayOptions, OverlayRule
 
 SEG_COLS = ["ax", "ay", "bx", "by", "subj", "clip"]
+
+# packed along-segment mark key (every coordinate under 2^30):
+# k = (px + _KB) * _KS + (py' + _KB), py' = py when by >= ay else -py, so the
+# lexicographic order of k is the order of the marks along their segment
+_KB = 1 << 30
+_KS = 1 << 31
 
 MARKS_SCHEMA = StructType(
     [
@@ -77,7 +87,7 @@ def merge_segments_df(segs: DataFrame, extra_aggs: dict[str, str] | None = None)
     )
 
 
-_PAIR_BLOCK = int(os.environ.get("SPARK_GRAFT_PAIR_BLOCK", "4000000"))
+_PAIR_BLOCK = 4_000_000  # max raw candidate pairs per block in _find_marks_kernel
 
 
 _MARKS_ARROW_SCHEMA = pa.schema(
@@ -113,6 +123,11 @@ MARKS_PACKED_SCHEMA = StructType(
 )
 
 
+def _np_col(tbl, name: str) -> np.ndarray:
+    """One Arrow table/batch column as an int64 numpy array."""
+    return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
 def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
     """Per-cell exact pairwise crossing detection (A6/A7): vectorized candidate
     window + orientation-sign prefilter (kernel/batch.interacting_mask, incl. the
@@ -128,19 +143,14 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
     packed=False emits marks keyed by segment coordinates (8 columns).
     packed=True (callers that guarantee in-cap coordinates AND ship a stable
     `_sid` per segment) emits 4 columns: (_sid, k) where k is the packed
-    along-segment chain key apply_marks_df sorts by — the mark set is the
-    round's largest dataset, and halving its width halves the checkpoint,
-    shuffle and agg bytes. Arrow-native either way."""
+    along-segment mark key (_KB/_KS above) — the mark set is the round's
+    largest dataset, and halving its width halves the checkpoint, shuffle and
+    agg bytes. Arrow-native either way."""
     from ..kernel.batch import _COORD_CAP, interacting_mask
     from ..kernel.cross_vec import cross_pairs_batch
 
-    def col(name):
-        return tbl.column(name).to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False
-        )
-
-    ax, ay, bx, by = col("ax"), col("ay"), col("bx"), col("by")
-    sid = col("_sid") if packed else None
+    ax, ay, bx, by = (_np_col(tbl, c) for c in ("ax", "ay", "bx", "by"))
+    sid = _np_col(tbl, "_sid") if packed else None
     n = len(ax)
     rows = []  # scalar-path rows (wide coords only)
     outs = []  # vectorized-path column blocks
@@ -211,11 +221,8 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
                 if len(pid):
                     si = np.where(which == 0, i_rep[pid], j[pid])
                     if packed:
-                        # the packed along-segment chain key (see
-                        # apply_marks_df): (px, py-toward-b) lex order
-                        C = 1 << 30
                         ypos = by[si] >= ay[si]
-                        k = (mx + C) * (1 << 31) + (np.where(ypos, my, -my) + C)
+                        k = (mx + _KB) * _KS + (np.where(ypos, my, -my) + _KB)
                         outs.append((sid[si], k, rnd, coll[pid]))
                     else:
                         outs.append(
@@ -355,16 +362,13 @@ def split_round(
     cells_per_axis: int,
     hot_threshold: int = 20000,
     bounds: tuple[int, int, int, int, int] | None = None,
-    dedup: bool = True,
     packed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """One split round: returns (marks_df, stats). Hot cells are salted to a 4x4
     finer sub-grid via salted_cover (only hot-cell segments re-explode).
 
-    dedup=False skips the dropDuplicates shuffle — apply_marks_df's collect_set
-    dedupes per segment anyway, so the fixpoint passes False and saves one full
-    shuffle of the mark set per round (duplicates exist only for pairs spanning
-    cell borders, a thin sliver of the cover).
+    Marks are not deduplicated here: a pair spanning a cell border is found
+    once per shared cell, and apply_marks_df's collect_set dedupes per segment.
 
     packed=True requires `segs` to carry a stable `_sid` column and every
     coordinate under the 2^30 cap; marks come back as (_sid, k) — half the
@@ -383,11 +387,69 @@ def split_round(
         lambda tbl: _find_marks_kernel(tbl, packed=packed),
         schema=MARKS_PACKED_SCHEMA if packed else MARKS_SCHEMA,
     )
-    if dedup:
-        marks = marks.dropDuplicates(
-            ["_sid", "k"] if packed else ["ax", "ay", "bx", "by", "px", "py"]
-        )
     return marks, loads
+
+
+def _join_marks(segs: DataFrame, marks: DataFrame) -> DataFrame:
+    """Group a round's marks per segment and LEFT-join them onto the segments
+    as `mks`. The marks' schema picks the form: packed keys (array<bigint>)
+    joined on the segment's `_sid` when the marks carry it, else (px, py)
+    structs joined on the four coordinates. collect_set dedupes each
+    segment's marks (a pair spanning a cell border is found in every shared
+    cell)."""
+    if "_sid" in marks.columns:
+        grouped = marks.groupBy("_sid").agg(F.collect_set("k").alias("mks"))
+        return segs.join(grouped, "_sid", "left")
+    keys = ["ax", "ay", "bx", "by"]
+    grouped = marks.groupBy(*keys).agg(F.collect_set(F.struct("px", "py")).alias("mks"))
+    return segs.join(grouped, keys, "left")
+
+
+def _apply_mark_lists(tbl, payload: tuple[str, ...] | list[str] = ()):
+    """Decode + apply (A8) over Arrow rows that carry their marks in `mks`
+    (see _join_marks): returns the split segments and, when `payload` names
+    columns, those columns copied onto every sub-segment from its parent row
+    (the reference's default split hook, iOverlay/src/core/edge_data.rs:5-19).
+
+    Packed keys decode as px = k DIV _KS - _KB, py' = k MOD _KS - _KB,
+    py = py' when by >= ay else -py'. The split itself is the numpy
+    _apply_marks kernel: it drops marks at the endpoints and duplicates,
+    orders each chain along its segment and renormalizes direction/counts."""
+    ay, by = _np_col(tbl, "ay"), _np_col(tbl, "by")
+    segs = Segments(
+        _np_col(tbl, "ax"), ay, _np_col(tbl, "bx"), by,
+        _np_col(tbl, "subj"), _np_col(tbl, "clip"),
+    )
+    mks = tbl.column("mks")
+    lens = pc.fill_null(pc.list_value_length(mks), 0).to_numpy(zero_copy_only=False)
+    mi = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+    flat = pc.list_flatten(mks)
+    if pa.types.is_struct(flat.type):
+        px = pc.struct_field(flat, "px").to_numpy(zero_copy_only=False)
+        py = pc.struct_field(flat, "py").to_numpy(zero_copy_only=False)
+    else:
+        k = flat.to_numpy(zero_copy_only=False)
+        px = k // _KS - _KB
+        pyt = k % _KS - _KB
+        py = np.where(by[mi] >= ay[mi], pyt, -pyt)
+    segs, parent = _apply_marks(segs, (mi, px, py), parents=True)
+    return segs, (tbl.select(list(payload)).take(parent) if payload else None)
+
+
+def _apply_marks_iter(payload: list[str]):
+    """mapInArrow body of apply_marks_df: one _apply_mark_lists per batch."""
+
+    def it(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            segs, extra = _apply_mark_lists(b, payload)
+            cols = [pa.array(getattr(segs, c)) for c in SEG_COLS]
+            if extra is not None:
+                cols += extra.columns
+            yield pa.RecordBatch.from_arrays(cols, names=SEG_COLS + payload)
+
+    return it
 
 
 def apply_marks_df(
@@ -396,13 +458,15 @@ def apply_marks_df(
     extra_aggs: dict[str, str] | None = None,
     skip_final_merge: bool = False,
     explode_partitions: int | None = None,
-    packed: bool = False,
 ) -> DataFrame:
-    """A8 as pure Column ops: group marks per segment, sort along the segment,
-    explode the sub-segment chain, renormalize direction/counts, re-merge.
+    """A8: join each segment's marks onto it (_join_marks), split it in numpy
+    (one mapInArrow over the joined rows, _apply_mark_lists), re-merge.
 
-    Payload columns (extra_aggs keys) are duplicated onto every sub-segment — the
-    reference's default split hook (iOverlay/src/core/edge_data.rs:5-19).
+    Marks come either packed, (_sid, k) from split_round(packed=True) with
+    `segs` carrying the same `_sid`, or keyed by coordinates, (ax, ay, bx, by,
+    px, py). Payload columns (extra_aggs keys) are duplicated onto every
+    sub-segment — the reference's default split hook
+    (iOverlay/src/core/edge_data.rs:5-19).
 
     skip_final_merge=True drops the closing coincident-merge groupBy (a full
     shuffle of the post-split set). Callers may set it ONLY when the round's
@@ -413,143 +477,41 @@ def apply_marks_df(
 
     explode_partitions: when chains are LONG (few segments carrying many marks
     each — the crossing-dense shape), the mark agg's output is only a few rows
-    of fat arrays, AQE coalesces it to a handful of partitions, and the chain
-    explode + every downstream map stage serialize on them (measured 17
-    partitions for a 2.1 M-mark lines_net round). Callers that detect the
-    long-chain regime pass the shuffle-partition count here to re-spread the
-    joined rows BEFORE the explode (a cheap shuffle: one row per segment).
-
-    packed=True (callers that KNOW |coords| < 2^30, the engine's int64-product
-    cap): each mark packs into ONE BIGINT whose lexicographic order is exactly
-    the along-segment order ((px, py-toward-b) — the CASE folds the direction
-    sign into the key), so the agg collects primitive longs, array_sort
-    compares longs (codegen, no struct comparators), and the chain unpacks
-    with pure arithmetic after the explode. The wide-coordinate fallback keeps
-    the struct formulation."""
-    C = 1 << 30
-    TC = 1 << 31
-    sid_marks = packed and "_sid" in marks.columns
-    if sid_marks:
-        # kernel already emitted the packed chain key, keyed by the caller's
-        # stable segment id: group + join on ONE long
-        grouped = marks.groupBy("_sid").agg(F.collect_set("k").alias("mks"))
-        j = segs.join(grouped, "_sid", "left").drop("_sid")
-    elif packed:
-        key = f"(px + {C}) * {TC} + (CASE WHEN by >= ay THEN py ELSE -py END + {C})"
-        grouped = marks.groupBy("ax", "ay", "bx", "by").agg(
-            F.expr(f"collect_set({key})").alias("mks")
-        )
-        j = segs.join(grouped, ["ax", "ay", "bx", "by"], "left")
-    else:
-        grouped = marks.groupBy("ax", "ay", "bx", "by").agg(
-            F.collect_set(F.struct("px", "py")).alias("mks")
-        )
-        j = segs.join(grouped, ["ax", "ay", "bx", "by"], "left")
+    of fat arrays, AQE coalesces it to a handful of partitions, and the apply
+    + every downstream map stage serialize on them (measured 17 partitions for
+    a 2.1 M-mark lines_net round). Callers that detect the long-chain regime
+    pass the shuffle-partition count here to re-spread the joined rows BEFORE
+    the apply (a cheap shuffle: one row per segment)."""
+    payload = list(extra_aggs or {})
+    j = _join_marks(segs, marks).select(*SEG_COLS, *payload, "mks")
     if explode_partitions:
         j = j.repartition(explode_partitions)
-
-    # sort key: x asc, then y toward b (sign of by-ay); marks equal to endpoints
-    # drop via an O(n) filter — collect_set already guarantees uniqueness, and
-    # the array_distinct this replaces is O(n^2) interpreted struct comparisons
-    # (measured: a 2.1M-mark lines_net round spent ~60 s in it — ~1.1 billion
-    # comparisons over 512-mark chains). The sort uses DEFAULT ordering
-    # (packed: primitive longs; wide: a computed struct key field) — a
-    # comparator lambda here would be interpreted per comparison (no codegen)
-    # and dominates wall-clock when segments carry hundreds of marks.
-    if packed:
-        ka = f"((ax + {C}) * {TC} + (CASE WHEN by >= ay THEN ay ELSE -ay END + {C}))"
-        kb = f"((bx + {C}) * {TC} + (CASE WHEN by >= ay THEN by ELSE -by END + {C}))"
-        chain = f"""
-          concat(
-            array({ka}),
-            array_sort(filter(coalesce(mks, array()),
-                              k -> k != {ka} AND k != {kb})),
-            array({kb})
-          )
-        """
-        pair_struct = "(p, q) -> struct(p AS p, q AS q)"
-    else:
-        chain = """
-          concat(
-            array(struct(ax AS px, ay AS py)),
-            transform(
-              array_sort(
-                transform(
-                  filter(coalesce(mks, array()),
-                         m -> NOT ((m.px = ax AND m.py = ay) OR (m.px = bx AND m.py = by))),
-                  m -> struct(m.px AS px,
-                              CASE WHEN by >= ay THEN m.py ELSE -m.py END AS k,
-                              m.py AS py))
-              ),
-              s -> struct(s.px AS px, s.py AS py)
-            ),
-            array(struct(bx AS px, by AS py))
-          )
-        """
-        pair_struct = "(p, q) -> struct(p.px AS px, p.py AS py, q.px AS qx, q.py AS qy)"
-    # Pair CONSECUTIVE chain points MAP-SIDE: zip the chain with itself shifted
-    # by one (two slices) — no window, so each split round drops a per-segment
-    # shuffle+sort stage. Two Catalyst traps drive the exact shape of this
-    # expression: (a) indexing chain[i] inside a transform re-inlines and
-    # re-evaluates the whole sort/dedup chain PER ELEMENT ACCESS (measured 378 s
-    # for 512 segments x 256 marks); (b) naive arrays_zip(slice(chain,..),
-    # slice(chain,..)) inlines it 4x per row after projection collapse. Binding
-    # the chain to a lambda variable via transform(array(<chain>), ch -> ...)
-    # evaluates it exactly ONCE per row; inside the lambda `ch` is a variable
-    # reference, not a re-inlined expression. Adjacent chain elements are
-    # distinct by construction (unique mark set + endpoint filter), so no
-    # p != q filter is needed.
-    pairs = f"""
-    flatten(transform(array({chain}), ch ->
-      zip_with(slice(ch, 1, size(ch) - 1), slice(ch, 2, size(ch)),
-               {pair_struct})))
-    """
-    if packed:
-        paired = j.select(
-            "subj",
-            "clip",
-            *[F.col(c) for c in (extra_aggs or {})],
-            (F.col("by") >= F.col("ay")).alias("_ypos"),
-            F.explode(F.expr(pairs)).alias("e"),
-        )
-        # arithmetic unpack (p >= 0, so % is already the floor remainder)
-        pxs = F.expr(f"e.p DIV {TC} - {C}")
-        pyt = F.expr(f"e.p % {TC} - {C}")
-        qxs = F.expr(f"e.q DIV {TC} - {C}")
-        qyt = F.expr(f"e.q % {TC} - {C}")
-        pys = F.when(F.col("_ypos"), pyt).otherwise(-pyt)
-        qys = F.when(F.col("_ypos"), qyt).otherwise(-qyt)
-    else:
-        paired = j.select(
-            "subj",
-            "clip",
-            *[F.col(c) for c in (extra_aggs or {})],
-            F.explode(F.expr(pairs)).alias("e"),
-        )
-        pxs, pys = F.col("e.px"), F.col("e.py")
-        qxs, qys = F.col("e.qx"), F.col("e.qy")
-    paired = paired.select(
-        "subj",
-        "clip",
-        *[F.col(c) for c in (extra_aggs or {})],
-        pxs.alias("_px"),
-        pys.alias("_py"),
-        qxs.alias("_qx"),
-        qys.alias("_qy"),
+    schema = StructType(
+        [StructField(c, LongType()) for c in SEG_COLS] + [segs.schema[c] for c in payload]
     )
-    fwd = F.expr("_px < _qx OR (_px = _qx AND _py < _qy)")
-    out = paired.select(
-        F.when(fwd, F.col("_px")).otherwise(F.col("_qx")).alias("ax"),
-        F.when(fwd, F.col("_py")).otherwise(F.col("_qy")).alias("ay"),
-        F.when(fwd, F.col("_qx")).otherwise(F.col("_px")).alias("bx"),
-        F.when(fwd, F.col("_qy")).otherwise(F.col("_py")).alias("by"),
-        F.when(fwd, F.col("subj")).otherwise(-F.col("subj")).alias("subj"),
-        F.when(fwd, F.col("clip")).otherwise(-F.col("clip")).alias("clip"),
-        *[F.col(c) for c in (extra_aggs or {})],
-    )
+    out = j.mapInArrow(_apply_marks_iter(payload), schema=schema)
     if skip_final_merge:
         return out
     return merge_segments_df(out, extra_aggs)
+
+
+@dataclass(frozen=True)
+class SplitResult:
+    """What the split fixpoint (split_segments_df) hands the fill stage.
+
+    segs: the split, intersection-free segment set.
+    n_segments: an upper bound on segs' row count, or None when unknown — fill
+        strip sizing and extract's fused-cap check use it instead of a count.
+    strip_edges: doubled-x fill strip edges from the terminal round's mark
+        quantiles, or None (the fill stage then samples its own).
+    pending: (segments, marks) of a terminal round whose apply was left to the
+        fill stage's pack, which runs it in the same numpy kernel; `segs` is
+        that apply as a lazy DataFrame for any other consumer."""
+
+    segs: DataFrame
+    n_segments: int | None = None
+    strip_edges: list[int] | None = None
+    pending: tuple[DataFrame, DataFrame] | None = None
 
 
 def split_segments_df(
@@ -561,7 +523,7 @@ def split_segments_df(
     pre_merged: bool = False,
     bounds: tuple[int, int, int, int, int] | None = None,
     checkpoint_last: bool = True,
-) -> DataFrame:
+) -> SplitResult:
     """A9 fixpoint: repeat split rounds until no marks (rounded intersections can
     move sub-segments onto new crossings). Each round localCheckpoints (or writes a
     durable checkpoint when checkpoint_dir is set). pre_merged=True skips the
@@ -571,20 +533,22 @@ def split_segments_df(
 
     checkpoint_last=False: the TERMINAL round's apply is returned LAZY (its
     inputs — the round's marks and the pre-round segments — are both
-    checkpointed, so the lineage stays shallow). A single-consumer caller
-    (the overlay pipeline: the fill stage's shuffle is the only action) then
-    streams the chain explode straight into its shuffle write instead of
-    materializing the post-split set twice. Multi-action callers keep the
-    default.
+    checkpointed, so the lineage stays shallow). When that apply needs no
+    closing merge and carries no payload, the result's `pending` hands its
+    inputs to compute_fills_df, whose pack stage then runs the apply itself
+    instead of materializing the post-split set. Multi-action callers keep
+    the default.
 
-    The terminal probe also records approx midpoint quantiles of the round's
-    marks on the result (_ioverlay_strip_mx2_edges) — the fill stage reuses
-    them as strip edges instead of running its own sampling job."""
+    The terminal probe also returns approx quantiles of the round's mark x
+    (SplitResult.strip_edges) — the fill stage reuses them as strip edges
+    instead of running its own sampling job."""
     if not pre_merged:
         segs = merge_segments_df(segs, extra_aggs).localCheckpoint(eager=True)
         bounds = None  # caller bounds described the pre-merge set
     last_n = None
     n_hint = None  # upper bound on the output row count (fills sizing hint)
+    strip_edges = None
+    pending = None
     spark_parts = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     from ..session import audit_desc
 
@@ -601,10 +565,11 @@ def split_segments_df(
         # packed marks/chains need every coordinate (incl. snap-rounded marks,
         # which stay within the bbox ±1) under the 2^30 cap; _sid gives the
         # kernel a 1-long segment key. It is not materialized: every job that
-        # reads segs_round re-evaluates monotonically_increasing_id, the fused
-        # fill too (compute_fills_df joins segs_round to the marks in a later
-        # job). The ids agree only because segs is the localCheckpointed (or
-        # parquet-read) frame, whose partitions and row order are fixed.
+        # reads segs_round re-evaluates monotonically_increasing_id, the fill
+        # pack too (compute_fills_df joins a pending segs_round to the marks
+        # in a later job). The ids agree only because segs is the
+        # localCheckpointed (or parquet-read) frame, whose partitions and row
+        # order are fixed.
         cmax_round = max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4]))
         packed_round = cmax_round < (1 << 30) - 2
         segs_round = (
@@ -612,9 +577,7 @@ def split_segments_df(
             if packed_round
             else segs
         )
-        marks, _ = split_round(
-            segs_round, cells_per_axis, bounds=bounds, dedup=False, packed=packed_round
-        )
+        marks, _ = split_round(segs_round, cells_per_axis, bounds=bounds, packed=packed_round)
         audit_desc(segs.sparkSession, f"split:kernel+ckpt r{rnd}")
         marks = marks.localCheckpoint(eager=True)
         # ONE probe job for emptiness + the two termination flags (was three
@@ -635,7 +598,7 @@ def split_segments_df(
         # added ~1.9 s to the probe at 2 M marks, 255 adds ~0.3 s) and ~256
         # strips keep every strip kernel comfortably sized.
         fracs = ", ".join(str(i / 256) for i in range(1, 256))
-        px_expr = f"k DIV {1 << 31} - {1 << 30}" if packed_round else "px"
+        px_expr = f"k DIV {_KS} - {_KB}" if packed_round else "px"
         # quantiles over a ~5% row sample INSIDE the same agg (percentile_approx
         # skips NULLs): the summary insert per row was ~0.5 s at 2 M marks and
         # scales linearly — a sample steers load balance just as well (strip
@@ -657,16 +620,13 @@ def split_segments_df(
         if probe["n"] == 0:
             n_hint = last_n  # exact: nothing was applied this round
             break
-        strip_edges = (
-            sorted(set(2 * int(q) for q in probe["pq"])) if probe["pq"] else None
-        )
         need_fix = bool(probe["any_round"])
         has_col = bool(probe["any_col"])
         n_marks = int(probe["n"])
         pre_count = bounds[0]
         # long-chain regime (see apply_marks_df): many marks over few segments
         # means the mark agg output is a few fat-array rows that AQE coalesces,
-        # serializing the explode — re-spread it. When segments outnumber
+        # serializing the apply — re-spread it. When segments outnumber
         # chains the agg output is already wide; skip the extra shuffle.
         explode_parts = (
             spark_parts
@@ -679,7 +639,6 @@ def split_segments_df(
             extra_aggs,
             skip_final_merge=not need_fix and not has_col,
             explode_partitions=explode_parts,
-            packed=packed_round,
         )
         terminal = not need_fix
         if checkpoint_dir is not None:
@@ -696,22 +655,16 @@ def split_segments_df(
             # parent, so pre-count + mark rows bounds the output — close enough
             # for the fills stage's strip sizing without a count job
             n_hint = pre_count + n_marks
-            segs._ioverlay_strip_mx2_edges = strip_edges
-            if (
-                not checkpoint_last
-                and checkpoint_dir is None
-                and packed_round
-                and not has_col
-                and not extra_aggs
-            ):
-                # fill-stage fusion inputs (compute_fills_df): both are
-                # checkpointed, so the fused apply+pack plan stays shallow
-                segs._ioverlay_apply_inputs = (segs_round, marks)
+            if probe["pq"]:
+                strip_edges = sorted(set(2 * int(q) for q in probe["pq"]))
+            if not checkpoint_last and checkpoint_dir is None and not has_col and not extra_aggs:
+                # both inputs are checkpointed, so the fill plan that applies
+                # them stays shallow
+                pending = (segs_round, marks)
             break
     if n_hint is None:
         n_hint = last_n
-    segs._ioverlay_n_segments = n_hint  # fills sizing hint (skips a count job)
-    return segs
+    return SplitResult(segs, n_hint, strip_edges, pending)
 
 
 # ---------------------------------------------------------------------------------
@@ -791,7 +744,6 @@ def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, bound
     instead of millions of segment rows."""
     from ..kernel.extract import boundary_mask
     from ..kernel.fill import compute_fills_windowed
-    from ..kernel.segments import Segments
 
     starts = np.flatnonzero(np.concatenate([[True], s[1:] != s[:-1]]))
     bounds = np.append(starts, len(s))
@@ -863,7 +815,11 @@ def _pack_strips_iter(edges):
     edges every segment sits in strip 0 as home), explode via np.repeat,
     sort by strip ONCE, and emit one binary-blob row per strip present in the
     partition. Coord/winding words narrow to int32 per partition when the
-    actual values fit (the reader re-widens; fill math is unchanged)."""
+    actual values fit (the reader re-widens; fill math is unchanged).
+
+    Rows that carry pending marks (`mks`, a SplitResult.pending joined by
+    _join_marks) are split first by the same numpy apply as apply_marks_df,
+    so the terminal round's apply needs no stage of its own."""
     E = np.asarray(edges, dtype=np.int64)
 
     def it(batches):
@@ -873,82 +829,19 @@ def _pack_strips_iter(edges):
         tbl = pa.Table.from_batches(chunks)
         if not len(tbl):
             return
-
-        def col(name):
-            return tbl.column(name).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-
-        yield from _pack_arrays(
-            col("ax"), col("ay"), col("bx"), col("by"),
-            col("subj"), col("clip"), E,
-        )
+        if "mks" in tbl.column_names:
+            segs, _ = _apply_mark_lists(tbl)
+        else:
+            segs = Segments(*(_np_col(tbl, c) for c in SEG_COLS))
+        yield _pack_arrays(segs, E)
 
     return it
 
 
-def _apply_pack_strips_iter(edges):
-    """FUSED terminal apply + strip pack (mapInArrow): input rows are the
-    pre-split segments LEFT-JOINED with their grouped packed mark keys
-    (`mks: array<bigint>`, the collect_set of apply_marks_df's packed chain
-    key). The chain sort, endpoint filter, explode and direction/count
-    renormalization all run in numpy via the scalar `_apply_marks` kernel
-    (kernel/split.py — the differential-tested vectorized apply), replacing
-    apply_marks_df's JVM array_sort + zip_with + Generate pipeline, which was
-    the dominant cost of the terminal fill job on crossing-dense inputs
-    (lines_net n=1024: the fused apply+fill job spent ~10 of its 13 s in the
-    chain machinery while the python pack+fill kernels cost ~5 s of CPU
-    TOTAL — audits, round 5 closing). The packed key decodes exactly as
-    apply_marks_df does: px = k DIV 2^31 - 2^30, py' = k % 2^31 - 2^30,
-    py = py' when by >= ay else -py'."""
-    import pyarrow.compute as pc
-
-    E = np.asarray(edges, dtype=np.int64)
-    TC = 1 << 31
-    C = 1 << 30
-
-    def it(batches):
-        from ..kernel.segments import Segments
-        from ..kernel.split import _apply_marks
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
-        if not len(tbl):
-            return
-
-        def col(name):
-            return tbl.column(name).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-
-        ax, ay, bx, by = col("ax"), col("ay"), col("bx"), col("by")
-        subj, clip = col("subj"), col("clip")
-        mks = tbl.column("mks")
-        lens = pc.fill_null(pc.list_value_length(mks), 0).to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64, copy=False)
-        segs = Segments(ax, ay, bx, by, subj, clip)
-        if int(lens.sum()) > 0:
-            k = pc.list_flatten(mks).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            mi = np.repeat(np.arange(len(ax), dtype=np.int64), lens)
-            px = k // TC - C
-            pyt = k % TC - C
-            py = np.where(by[mi] >= ay[mi], pyt, -pyt)
-            segs = _apply_marks(segs, (mi, px, py))
-        yield from _pack_arrays(
-            segs.ax, segs.ay, segs.bx, segs.by, segs.subj, segs.clip, E
-        )
-
-    return it
-
-
-def _pack_arrays(ax, ay, bx, by, subj, clip, E):
-    """Shared pack core: strip spans + explode + per-strip blob rows (see
-    _pack_strips_iter). Yields one PACKED_STRIP_SCHEMA RecordBatch."""
+def _pack_arrays(segs: Segments, E: np.ndarray) -> pa.RecordBatch:
+    """Pack core of _pack_strips_iter: strip spans + explode + one
+    PACKED_STRIP_SCHEMA row per strip present."""
+    ax, ay, bx, by, subj, clip = segs.ax, segs.ay, segs.bx, segs.by, segs.subj, segs.clip
     s_lo = np.searchsorted(E, 2 * ax, side="right")
     s_hi = np.searchsorted(E, 2 * bx, side="right")
     s_mid = np.searchsorted(E, ax + bx, side="right")
@@ -992,7 +885,7 @@ def _pack_arrays(ax, ay, bx, by, subj, clip, E):
         r_sc.append(np.concatenate([SU[lo:hi], CL[lo:hi]]).tobytes())
         r_hm.append(HM[lo:hi].tobytes())
     k = len(r_strip)
-    yield pa.RecordBatch.from_arrays(
+    return pa.RecordBatch.from_arrays(
         [
             pa.array(np.asarray(r_strip, dtype=np.int32)),
             pa.array(np.asarray(r_cnt, dtype=np.int64)),
@@ -1004,7 +897,6 @@ def _pack_arrays(ax, ay, bx, by, subj, clip, E):
         ],
         names=["strip", "cnt", "wc", "ww", "xy", "sc", "hm"],
     )
-
 
 
 def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = None):
@@ -1062,7 +954,7 @@ def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = N
 
 
 def compute_fills_df(
-    segs: DataFrame,
+    segs: SplitResult | DataFrame,
     fill_rule: FillRule = FillRule.EVEN_ODD,
     n_strips: int | None = None,
     boundary_rule: OverlayRule | None = None,
@@ -1078,22 +970,27 @@ def compute_fills_df(
     Plan: a pack mapInArrow (strip spans, the copy per strip and the home flag
     in numpy; one binary row per upstream partition and strip) -> ONE hash
     exchange on the strip key -> the fill mapInArrow. When the split fixpoint
-    left its terminal apply lazy (`_ioverlay_apply_inputs`), the pack stage
-    runs that apply in numpy too.
+    left its terminal apply to this stage (SplitResult.pending), the pack
+    stage runs that apply in numpy too.
+
+    segs: split_segments_df's SplitResult, whose segment-count bound and strip
+    edges save the sizing jobs, or a plain segment DataFrame.
 
     Output: FILL_SCHEMA rows, one per segment. With boundary_rule (the ONE
     overlay rule the caller extracts next) the fill kernel keeps only that
     rule's result-boundary segments and emits them as BOUNDARY_BLOB_SCHEMA
     rows, one per reduce partition — extract_shapes_df reads either form."""
+    split = segs if isinstance(segs, SplitResult) else SplitResult(segs)
+    segs = split.segs
     spark = segs.sparkSession
-    n = getattr(segs, "_ioverlay_n_segments", None)
+    n = split.n_segments
     if n is None and n_strips is None:
         n = segs.count()
     if n_strips is None:
         # strip kernels are O(n_strip * m_strip): finer strips cut the quadratic
         # term; per-strip constants are negligible beyond ~2k segments
         n_strips = max(1, min(1024, n // 2000))
-    hint_edges = getattr(segs, "_ioverlay_strip_mx2_edges", None)
+    hint_edges = split.strip_edges
     edges: list[int] = []
     if n_strips > 1 and hint_edges:
         # edges precomputed by the split fixpoint's probe (mark-x quantiles,
@@ -1126,26 +1023,15 @@ def compute_fills_df(
             edges = sorted(set(int(q) for q in qs))
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    apply_inputs = getattr(segs, "_ioverlay_apply_inputs", None)
-    if apply_inputs is not None:
-        # FUSED terminal apply + pack (see _apply_pack_strips_iter): join the
-        # grouped packed mark keys onto the pre-round segments and run the
-        # chain explode in numpy inside the pack stage, skipping the JVM
-        # array_sort/zip_with/Generate pipeline entirely. The explicit
-        # repartition spreads the fat mks-array rows before the python stage
-        # (AQE would coalesce the join output by BYTES and serialize it).
-        segs_round, marks = apply_inputs
-        grouped = marks.groupBy("_sid").agg(F.collect_set("k").alias("mks"))
-        packed = (
-            segs_round.join(grouped, "_sid", "left")
-            .drop("_sid")
-            .repartition(n_part)
-            .mapInArrow(_apply_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
-        )
+    if split.pending is not None:
+        # terminal apply + pack in one python stage: join the pending marks
+        # onto the pre-round segments; the explicit repartition spreads the
+        # fat mks-array rows before it (AQE would coalesce the join output by
+        # BYTES and serialize the apply)
+        rows = _join_marks(*split.pending).select(*SEG_COLS, "mks").repartition(n_part)
     else:
-        packed = segs.select(*SEG_COLS).mapInArrow(
-            _pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA
-        )
+        rows = segs.select(*SEG_COLS)
+    packed = rows.mapInArrow(_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
     # the strip hash shuffle carries thousands of blob rows instead of millions
     # of segment rows (same payload bytes, none of the per-row serialization)
     return packed.repartition(n_part, "strip").mapInArrow(
@@ -1167,7 +1053,6 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
     from ..kernel.batch import _COORD_CAP, _shapes_to_flat, _split_batch
     from ..kernel.extract import extract_shapes
     from ..kernel.fill import compute_fills_windowed as kernel_fills
-    from ..kernel.segments import Segments
     from ..kernel.split import split_segments as kernel_split
 
     def run(it):
@@ -1275,7 +1160,7 @@ def distributed_overlay(
         pre_merged=True,
         bounds=bounds,
         # the fill stage's shuffle is the sole consumer of the terminal apply:
-        # stream the chain explode straight into the shuffle write
+        # its pack stage runs it (SplitResult.pending)
         checkpoint_last=False,
     )
     # boundary rows leave the fill kernel as per-partition binary blobs (the
@@ -1289,7 +1174,7 @@ def distributed_overlay(
         options,
         # post-split row count UPPER BOUND >= boundary rows: when it already
         # clears the fused cap, extract skips its metadata job (one barrier less)
-        n_edges_hint=getattr(split, "_ioverlay_n_segments", None),
+        n_edges_hint=split.n_segments,
     )
 
 

@@ -857,10 +857,10 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
 # node ids + labels + ring buffers) — comfortably inside one executor; beyond
 # it the broadcast-CC (<=_CC_LOCAL_EDGES comp map) and iterative-CC plans
 # take over
-_FUSED_EXTRACT_CAP = int(os.environ.get("SPARK_GRAFT_FUSED_EXTRACT_EDGES", "8000000"))
+_FUSED_EXTRACT_CAP = 8_000_000
 # edge count up to which CC runs as ONE union-find task and its comp map is
 # broadcast back (the map is <= 2 longs per edge: ~16 bytes/edge)
-_CC_LOCAL_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000"))
+_CC_LOCAL_EDGES = 4_000_000
 
 
 def extract_shapes_df(

@@ -9,9 +9,10 @@ build_shape_vectors, iOverlay/src/vector/extract.rs).
 
 Spark-first expression: payload = extra columns on the segments DataFrame; the merge
 hook = a SQL aggregate expression applied in the coincident-merge groupBy; the split
-hook = column duplication in the sub-segment explode (both inside
-operators/distributed.py). Fills are computed on de-payloaded geometry and joined
-back by segment coordinates (exact: (a, b) is unique after merge).
+hook = the apply kernel copying each parent row's payload onto its sub-segments
+(one Arrow take; both inside operators/distributed.py). Fills are computed on
+de-payloaded geometry and joined back by segment coordinates (exact: (a, b) is
+unique after merge).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..options import FillRule, OverlayRule
-from .distributed import SEG_COLS, compute_fills_df, split_segments_df
+from .distributed import compute_fills_df, split_segments_df
 from .distributed_extract import boundary_segments_df
 
 KEYS = ["ax", "ay", "bx", "by"]
@@ -39,8 +40,8 @@ def edge_overlay_links(
     if extra_aggs is None:
         extra_aggs = {"data": "bit_or(data)"}
     split = split_segments_df(segs, extra_aggs=extra_aggs)
-    fills = compute_fills_df(split.select(*SEG_COLS), fill_rule)
-    payload = split.select(*KEYS, *extra_aggs.keys())
+    fills = compute_fills_df(split, fill_rule)
+    payload = split.segs.select(*KEYS, *extra_aggs.keys())
     return fills.join(payload, KEYS, "left")
 
 

@@ -135,7 +135,7 @@ def test_distributed_split_merge_matches_kernel(spark, board):
     from ioverlay_spark.operators.distributed import contours_to_segments_df, split_segments_df
 
     segs_df = contours_to_segments_df(spark, df)
-    out = split_segments_df(segs_df).toPandas()
+    out = split_segments_df(segs_df).segs.toPandas()
 
     ker = _kernel_split(subj, clip)
     got = sorted(map(tuple, out[["ax", "ay", "bx", "by", "subj", "clip"]].to_numpy().tolist()))
@@ -209,7 +209,7 @@ def test_packed_fill_matches_kernel(spark, board):
         df = spark.createDataFrame(
             rings_to_contours_rows(s_s, c_s), ["role", "cid", "pts_x", "pts_y"]
         )
-        split = split_segments_df(contours_to_segments_df(spark, df)).localCheckpoint()
+        split = split_segments_df(contours_to_segments_df(spark, df)).segs.localCheckpoint()
         for br in (None, OverlayRule.UNION):
             fills = compute_fills_df(split, FillRule.EVEN_ODD, n_strips=5, boundary_rule=br)
             got = fill_rows(fills)
@@ -261,7 +261,7 @@ def test_distributed_fills_match_kernel_long_chords(spark):
     )
     split = split_segments_df(contours_to_segments_df(spark, df))
     fills = compute_fills_df(split, FillRule.NON_ZERO, n_strips=5).toPandas()
-    pdf = split.toPandas()
+    pdf = split.segs.toPandas()
     from ioverlay_spark.kernel.segments import Segments
 
     ker = Segments(
@@ -548,10 +548,10 @@ def test_distributed_extract_wide_coordinates(spark, off):
 
 
 def test_fused_apply_pack_plan_and_fills(spark):
-    """Fill-level check of the lazy-terminal path: the fused apply inputs
-    attach on the eligible terminal round, the fill plan has no Generate (the
-    chain explode runs in numpy inside the pack stage), and the boundary blobs
-    hold exactly the scalar kernel's boundary fills."""
+    """Fill-level check of the lazy-terminal path: the eligible terminal
+    round hands its apply to the fill stage (SplitResult.pending), the fill
+    plan has no Generate (the apply runs in numpy inside the pack stage), and
+    the boundary blobs hold exactly the scalar kernel's boundary fills."""
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         compute_fills_df,
@@ -570,7 +570,7 @@ def test_fused_apply_pack_plan_and_fills(spark):
     split = split_segments_df(
         merged, pre_merged=True, bounds=bounds, checkpoint_last=False
     )
-    assert getattr(split, "_ioverlay_apply_inputs", None) is not None
+    assert split.pending is not None
 
     fills = compute_fills_df(split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT)
     plan = fills._jdf.queryExecution().executedPlan().toString()

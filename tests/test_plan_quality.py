@@ -187,32 +187,33 @@ def test_ivf_assign_broadcasts_centroids(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_apply_marks_plan_has_no_quadratic_array_ops(spark):
-    """Tripwire for the Catalyst pathology class that cost 378 s / 60 s in round
-    3 (BENCH.md): array_distinct / array_contains over struct arrays are O(n^2)
-    INTERPRETED scans per element, and re-inlined transform chains re-evaluate
-    the whole sort/dedup expression per element access. The optimized plan of
-    apply_marks_df must contain neither an ArrayDistinct/ArrayContains node nor
-    a window exchange (the pairing is map-side zip_with)."""
+def test_apply_marks_plan_is_one_arrow_map(spark):
+    """Plan tripwire for A8: apply_marks_df is collect_set + join + ONE
+    mapInArrow running the numpy apply. No JVM chain machinery may come back:
+    no array_sort / zip_with (the per-row chain sort and pairing), no Generate
+    (the sub-segment explode) and no Window (a lead()-style pairing). Checked
+    for both mark forms: coordinate-keyed and packed (_sid, k)."""
     from ioverlay_spark.operators.distributed import apply_marks_df
 
     segs = spark.createDataFrame(
         [(0, 0, 100, 100, 1, 0)], ["ax", "ay", "bx", "by", "subj", "clip"]
     )
-    marks = spark.createDataFrame(
+    wide = spark.createDataFrame(
         [(0, 0, 100, 100, 50, 50, False, False)],
         ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"],
     )
-    df = apply_marks_df(segs, marks)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    phys = plan_str(df)
-    for bad in ("array_distinct", "array_contains", "ArrayDistinct", "ArrayContains"):
-        assert bad not in opt and bad not in phys
-    # the chain must be built ONCE per row: exactly one array_sort evaluation
-    # (a re-inlined chain shows up as several, one per element access)
-    assert opt.count("array_sort") <= 1
-    # pairing is map-side: no Window operator in the physical plan
-    assert "Window" not in phys
+    packed = spark.createDataFrame(
+        [(0, ((50 + (1 << 30)) << 31) + 50 + (1 << 30), False, False)],
+        ["_sid", "k", "is_round", "col_ovl"],
+    )
+    for s, marks in ((segs, wide), (segs.withColumn("_sid", F.lit(0).cast("long")), packed)):
+        df = apply_marks_df(s, marks)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        phys = plan_str(df)
+        assert phys.count("MapInArrow") == 1, phys
+        for bad in ("Generate", "array_sort", "ArraySort", "zip_with", "ZipWith", "Window"):
+            assert bad not in opt and bad not in phys, bad
+        assert sorted(map(tuple, df.collect())) == [(0, 0, 50, 50, 1, 0), (50, 50, 100, 100, 1, 0)]
 
 
 def test_strip_assignment_has_no_interpreted_filter(spark):
