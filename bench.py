@@ -124,6 +124,35 @@ def wait_for_healthy_host(max_probes: int = 5, cooldown_s: int = 25) -> dict:
     return hc
 
 
+def _tree_cpu_s() -> float:
+    """CPU seconds (user + system, reaped children included) of this process
+    and every live descendant — the driver, the JVM and its Python workers —
+    read from /proc; 0.0 where /proc is unavailable."""
+    try:
+        tick = os.sysconf("SC_CLK_TCK")
+        kids: dict[int, list[int]] = {}
+        ticks: dict[int, int] = {}
+        for d in os.listdir("/proc"):
+            if not d.isdigit():
+                continue
+            try:
+                with open(f"/proc/{d}/stat") as f:
+                    st = f.read()
+            except OSError:
+                continue  # exited while we scanned
+            rest = st[st.rfind(")") + 2 :].split()
+            kids.setdefault(int(rest[1]), []).append(int(d))
+            ticks[int(d)] = sum(int(v) for v in rest[11:15])  # utime stime cutime cstime
+    except (OSError, ValueError):
+        return 0.0
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo.extend(kids.get(pid, ()))
+    return total / tick
+
+
 def run_suite(cpus: int, overlay_only: bool = False) -> dict:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -178,6 +207,7 @@ def run_suite(cpus: int, overlay_only: bool = False) -> dict:
     )
 
     timings: dict[str, float] = {}
+    cpu_secs: dict[str, float] = {}  # process-tree CPU of the run kept in timings
     counts: dict[str, int] = {}
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     scale_runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "1"))
@@ -198,10 +228,12 @@ def run_suite(cpus: int, overlay_only: bool = False) -> dict:
             runs = 2
         best = None
         for _ in range(runs):
-            t0 = time.time()
+            t0, c0 = time.time(), _tree_cpu_s()
             counts[name] = fn()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+            dt, cpu = time.time() - t0, _tree_cpu_s() - c0
+            if best is None or dt < best:
+                best = dt
+                cpu_secs[name] = round(cpu, 3)
         timings[name] = round(best, 3)
 
     # --- overlay: rowwise zero-shuffle, 3 rules from one graph build per pair ---
@@ -277,6 +309,7 @@ def run_suite(cpus: int, overlay_only: bool = False) -> dict:
             "cpus": cpus,
             "total_sec": total,
             "queries": timings,
+            "queries_cpu_sec": cpu_secs,
             "counts": counts,
             "scale_reps": reps,
             "overlay_jobs": n_jobs,
@@ -411,6 +444,8 @@ def main():
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1000"))
     timesN: list[float] = []
     times4N: list[float] = []
+    cpuN: list[float] = []  # process-tree CPU seconds of each timed half
+    cpu4N: list[float] = []
     attempts_log = []
     last = {}  # most recent worker result per level (for queries/counts echo)
     for attempt in range(max_attempts):
@@ -421,6 +456,9 @@ def main():
             (times4N if cpus == 4 * SCALE_N else timesN).append(
                 last[cpus]["queries"]["overlay"]
             )
+            (cpu4N if cpus == 4 * SCALE_N else cpuN).append(
+                last[cpus]["queries_cpu_sec"]["overlay"]
+            )
         flagship = round(timesN[-1] / (4 * times4N[-1]), 3)
         best_halves = round(min(timesN) / (4 * min(times4N)), 3)
         attempts_log.append(
@@ -429,6 +467,8 @@ def main():
                 "order": f"local[{halves[0]}] first",
                 f"local{SCALE_N}_overlay_sec": timesN[-1],
                 f"local{4 * SCALE_N}_overlay_sec": times4N[-1],
+                f"local{SCALE_N}_overlay_cpu_sec": cpuN[-1],
+                f"local{4 * SCALE_N}_overlay_cpu_sec": cpu4N[-1],
                 "flagship": flagship,
             }
         )
@@ -463,6 +503,11 @@ def main():
         "median_attempt_efficiency": _median_attempt_efficiency(timesN, times4N),
         f"local{SCALE_N}_overlay_secs_all": [round(t, 3) for t in timesN],
         f"local{4 * SCALE_N}_overlay_secs_all": [round(t, 3) for t in times4N],
+        # CPU next to wall: host noise inflates wall, CPU time much less; a
+        # half whose CPU grew with its wall did more work, one whose CPU held
+        # still waited
+        f"local{SCALE_N}_overlay_cpu_secs_all": cpuN,
+        f"local{4 * SCALE_N}_overlay_cpu_secs_all": cpu4N,
         f"local{SCALE_N}_queries": results[SCALE_N]["queries"],
         f"local{4 * SCALE_N}_queries": results[4 * SCALE_N]["queries"],
         "attempts": attempts_log,
@@ -527,6 +572,9 @@ def main():
             ),
             f"local{SCALE_N}_sec": round(tN, 3),
             f"local{4 * SCALE_N}_sec": round(t4N, 3),
+            # CPU of the attempts whose walls are the per-half minima above
+            f"local{SCALE_N}_cpu_sec": cpuN[timesN.index(tN)],
+            f"local{4 * SCALE_N}_cpu_sec": cpu4N[times4N.index(t4N)],
             "efficiency": scaling["efficiency"],
             "median_attempt_efficiency": scaling["median_attempt_efficiency"],
             "attempt_ratios": ratios,

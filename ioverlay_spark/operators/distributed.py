@@ -6,11 +6,13 @@ it; this pipeline distributes every stage of the reference algorithm:
   A1/A2  sort+merge          -> groupBy(a,b).sum(counts), drop zeros (hash agg)
   A6/A7  split               -> grid-cell explode -> per-cell Arrow kernel finds
                                 exact intersection marks
-  A8     apply marks         -> collect_set the marks per segment, join them on,
-                                then ONE numpy kernel (kernel/split._apply_marks)
-                                per Arrow batch splits each segment at its marks
-  A9     snap fixpoint       -> driver loop; each round is one Spark job; the
-                                result (SplitResult) goes to the fill stage
+  A8     apply marks         -> segment rows union mark rows, ONE hash exchange
+                                on the mark key, then ONE numpy kernel
+                                (kernel/split._apply_marks) per partition matches
+                                and splits each segment at its marks
+  A9     snap fixpoint       -> driver loop; counts, bounds and the termination
+                                probe are observed on the rounds' checkpoints, no
+                                jobs of their own; SplitResult goes to the fill
   A10    fill                -> x-strip explode -> per-strip vectorized ray-cast
                                 winding (each segment evaluated in its midpoint
                                 strip against all segments crossing that strip)
@@ -31,7 +33,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -128,7 +130,7 @@ def _np_col(tbl, name: str) -> np.ndarray:
     return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
 
-def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
+def _find_marks_kernel(tbl: pa.Table, packed: bool = False, radius: int = 2) -> pa.Table:
     """Per-cell exact pairwise crossing detection (A6/A7): vectorized candidate
     window + orientation-sign prefilter (kernel/batch.interacting_mask, incl. the
     collinear-overlap refinement that keeps same-line chains from flooding the
@@ -145,7 +147,10 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
     `_sid` per segment) emits 4 columns: (_sid, k) where k is the packed
     along-segment mark key (_KB/_KS above) — the mark set is the round's
     largest dataset, and halving its width halves the checkpoint, shuffle and
-    agg bytes. Arrow-native either way."""
+    agg bytes. Arrow-native either way.
+
+    radius: the snap radius (squared distance) of rounded marks to segment
+    endpoints, kernel/split.cross_pair's."""
     from ..kernel.batch import _COORD_CAP, interacting_mask
     from ..kernel.cross_vec import cross_pairs_batch
 
@@ -209,14 +214,14 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
                 for i, jj in zip(i_rep.tolist(), j.tolist()):
                     ti = (int(ax[i]), int(ay[i]), int(bx[i]), int(by[i]))
                     tj = (int(ax[jj]), int(ay[jj]), int(bx[jj]), int(by[jj]))
-                    pm, rnd = cross_pair(ti, tj, 2)
+                    pm, rnd = cross_pair(ti, tj, radius)
                     for which, x, y in pm:
                         t = ti if which == 0 else tj
                         rows.append((t[0], t[1], t[2], t[3], x, y, rnd, True))
             else:
                 pid, which, mx, my, rnd = cross_pairs_batch(
                     ax[i_rep], ay[i_rep], bx[i_rep], by[i_rep],
-                    ax[j], ay[j], bx[j], by[j], 2,
+                    ax[j], ay[j], bx[j], by[j], radius,
                 )
                 if len(pid):
                     si = np.where(which == 0, i_rep[pid], j[pid])
@@ -266,23 +271,45 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False) -> pa.Table:
     )
 
 
-def _count_and_bounds(segs: DataFrame):
-    """ONE scalar agg job: (n, x0, x1, y0, y1) — shared by cell sizing, cover and
-    strip planning so each split round launches a single metadata action."""
-    row = segs.agg(
+def _bounds_aggs() -> list:
+    """Count + bbox aggregates of a segment set: (n, x0, x1, y0, y1)."""
+    return [
         F.count("*").alias("n"),
         F.min(F.least("ax", "bx")).alias("x0"),
         F.max(F.greatest("ax", "bx")).alias("x1"),
         F.min(F.least("ay", "by")).alias("y0"),
         F.max(F.greatest("ay", "by")).alias("y1"),
-    ).first()
-    return (
-        int(row["n"]),
-        int(row["x0"] or 0),
-        int(row["x1"] or 0),
-        int(row["y0"] or 0),
-        int(row["y1"] or 0),
-    )
+    ]
+
+
+def _count_and_bounds(segs: DataFrame, observed: dict | None = None):
+    """(n, x0, x1, y0, y1) of a segment set: ONE scalar agg job, or none when
+    a checkpoint already observed the _bounds_aggs (`observed`)."""
+    row = observed if observed is not None else segs.agg(*_bounds_aggs()).first()
+    return tuple(int(row[c] or 0) for c in ("n", "x0", "x1", "y0", "y1"))
+
+
+def _checkpoint_observed(df: DataFrame, aggs: list, path: str | None = None):
+    """Materialize `df` (eager localCheckpoint, or parquet write + read at
+    `path`) and compute `aggs` over the same rows in the same job
+    (Dataset.observe): a count, bbox or probe costs no action of its own.
+    Returns (checkpointed frame, {alias: value}); an empty frame observes
+    count 0 and NULL min/max."""
+    obs = Observation()
+    df = df.observe(obs, *aggs)
+    if path is None:
+        return df.localCheckpoint(eager=True), obs.get
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path), obs.get
+
+
+def _checkpoint_segments(segs: DataFrame, path: str | None = None):
+    """_checkpoint_observed for a segment set: stores a `_sid` row key (the
+    packed marks' segment id, stable because it is stored, not re-evaluated)
+    and returns the frame with its _count_and_bounds tuple."""
+    segs = segs.withColumn("_sid", F.monotonically_increasing_id())
+    segs, m = _checkpoint_observed(segs, _bounds_aggs(), path)
+    return segs, _count_and_bounds(segs, m)
 
 
 def salted_cover(
@@ -363,16 +390,18 @@ def split_round(
     hot_threshold: int = 20000,
     bounds: tuple[int, int, int, int, int] | None = None,
     packed: bool = False,
+    radius: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
     """One split round: returns (marks_df, stats). Hot cells are salted to a 4x4
     finer sub-grid via salted_cover (only hot-cell segments re-explode).
 
     Marks are not deduplicated here: a pair spanning a cell border is found
-    once per shared cell, and apply_marks_df's collect_set dedupes per segment.
+    once per shared cell, and the apply kernel drops duplicate marks.
 
     packed=True requires `segs` to carry a stable `_sid` column and every
     coordinate under the 2^30 cap; marks come back as (_sid, k) — half the
-    bytes of the coordinate-keyed schema (see _find_marks_kernel)."""
+    bytes of the coordinate-keyed schema (see _find_marks_kernel). radius is
+    the round's snap radius (split_segments_df grows it as the kernel does)."""
     cover, loads = salted_cover(segs, cells_per_axis, hot_threshold, bounds)
     # Explicit repartition on the GROUP KEY ahead of the grouped kernel:
     # HashPartitioning(keys, n) satisfies the groupBy's ClusteredDistribution,
@@ -384,72 +413,80 @@ def split_round(
     n_part = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cover = cover.repartition(n_part, "cx", "cy", "sx", "sy")
     marks = cover.groupBy("cx", "cy", "sx", "sy").applyInArrow(
-        lambda tbl: _find_marks_kernel(tbl, packed=packed),
+        lambda tbl: _find_marks_kernel(tbl, packed=packed, radius=radius),
         schema=MARKS_PACKED_SCHEMA if packed else MARKS_SCHEMA,
     )
     return marks, loads
 
 
-def _join_marks(segs: DataFrame, marks: DataFrame) -> DataFrame:
-    """Group a round's marks per segment and LEFT-join them onto the segments
-    as `mks`. The marks' schema picks the form: packed keys (array<bigint>)
-    joined on the segment's `_sid` when the marks carry it, else (px, py)
-    structs joined on the four coordinates. collect_set dedupes each
-    segment's marks (a pair spanning a cell border is found in every shared
-    cell)."""
-    if "_sid" in marks.columns:
-        grouped = marks.groupBy("_sid").agg(F.collect_set("k").alias("mks"))
-        return segs.join(grouped, "_sid", "left")
-    keys = ["ax", "ay", "bx", "by"]
-    grouped = marks.groupBy(*keys).agg(F.collect_set(F.struct("px", "py")).alias("mks"))
-    return segs.join(grouped, keys, "left")
+def _union_marks(
+    segs: DataFrame, marks: DataFrame, payload: list[str] | tuple[str, ...] = ()
+) -> tuple[DataFrame, list[str]]:
+    """ONE exchange that brings every segment and its marks together: segment
+    rows (mark columns null) union mark rows (segment columns null), hashed on
+    the mark key — `_sid` for packed (_sid, k) marks, else the four
+    coordinates. The explicit partition count keeps AQE from coalescing the
+    apply into a few tasks. Returns (rows, key) for _apply_union."""
+    packed = "_sid" in marks.columns
+    key = ["_sid"] if packed else ["ax", "ay", "bx", "by"]
+    seg_rows = segs.select(*SEG_COLS, *payload, *(["_sid"] if packed else []))
+    mark_rows = marks.select(*key, *(["k"] if packed else ["px", "py"]))
+    rows = seg_rows.unionByName(mark_rows, allowMissingColumns=True)
+    n_part = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return rows.repartition(n_part, *key), key
 
 
-def _apply_mark_lists(tbl, payload: tuple[str, ...] | list[str] = ()):
-    """Decode + apply (A8) over Arrow rows that carry their marks in `mks`
-    (see _join_marks): returns the split segments and, when `payload` names
-    columns, those columns copied onto every sub-segment from its parent row
-    (the reference's default split hook, iOverlay/src/core/edge_data.rs:5-19).
+def _apply_union(tbl: pa.Table, key: list[str], payload: list[str] | tuple[str, ...] = ()):
+    """Match + apply (A8) over one partition of _union_marks rows (segment
+    rows have a non-null `subj`): returns the split segments and the
+    `payload` columns copied onto every sub-segment from its parent (the
+    reference's default split hook, iOverlay/src/core/edge_data.rs:5-19).
 
-    Packed keys decode as px = k DIV _KS - _KB, py' = k MOD _KS - _KB,
-    py = py' when by >= ay else -py'. The split itself is the numpy
-    _apply_marks kernel: it drops marks at the endpoints and duplicates,
-    orders each chain along its segment and renormalizes direction/counts."""
-    ay, by = _np_col(tbl, "ay"), _np_col(tbl, "by")
-    segs = Segments(
-        _np_col(tbl, "ax"), ay, _np_col(tbl, "bx"), by,
-        _np_col(tbl, "subj"), _np_col(tbl, "clip"),
-    )
-    mks = tbl.column("mks")
-    lens = pc.fill_null(pc.list_value_length(mks), 0).to_numpy(zero_copy_only=False)
-    mi = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
-    flat = pc.list_flatten(mks)
-    if pa.types.is_struct(flat.type):
-        px = pc.struct_field(flat, "px").to_numpy(zero_copy_only=False)
-        py = pc.struct_field(flat, "py").to_numpy(zero_copy_only=False)
-    else:
-        k = flat.to_numpy(zero_copy_only=False)
+    Marks find their segments by an Arrow hash join on `key`; packed keys
+    decode as px = k DIV _KS - _KB, py' = k MOD _KS - _KB, py = py' when
+    by >= ay else -py'. The numpy _apply_marks kernel drops endpoint and
+    duplicate marks (a pair spanning a cell border is found in every shared
+    cell), orders each chain along its segment and renormalizes it."""
+    is_seg = pc.is_valid(tbl.column("subj"))
+    seg_t = tbl.filter(is_seg)
+    segs = Segments(*(_np_col(seg_t, c) for c in SEG_COLS))
+    ay, by = segs.ay, segs.by
+    packed = "k" in tbl.column_names
+    index = seg_t.select(key).append_column("_i", pa.array(np.arange(len(seg_t))))
+    hit = tbl.filter(pc.invert(is_seg)).select(key + (["k"] if packed else ["px", "py"]))
+    hit = hit.join(index, key, join_type="inner", use_threads=False)
+    mi = _np_col(hit, "_i")
+    if packed:
+        k = _np_col(hit, "k")
         px = k // _KS - _KB
         pyt = k % _KS - _KB
         py = np.where(by[mi] >= ay[mi], pyt, -pyt)
+    else:
+        px, py = _np_col(hit, "px"), _np_col(hit, "py")
     segs, parent = _apply_marks(segs, (mi, px, py), parents=True)
-    return segs, (tbl.select(list(payload)).take(parent) if payload else None)
+    return segs, (seg_t.select(list(payload)).take(parent) if payload else None)
 
 
-def _apply_marks_iter(payload: list[str]):
-    """mapInArrow body of apply_marks_df: one _apply_mark_lists per batch."""
+def _apply_rows(rows: DataFrame, key: list[str], payload: list[StructField] = ()) -> DataFrame:
+    """The apply stage over _union_marks rows: one mapInArrow running
+    _apply_union per partition (a segment and its marks may arrive in
+    different Arrow batches), emitting SEG_COLS + the `payload` fields."""
+    names = [f.name for f in payload]
 
     def it(batches):
-        for b in batches:
-            if not b.num_rows:
-                continue
-            segs, extra = _apply_mark_lists(b, payload)
-            cols = [pa.array(getattr(segs, c)) for c in SEG_COLS]
-            if extra is not None:
-                cols += extra.columns
-            yield pa.RecordBatch.from_arrays(cols, names=SEG_COLS + payload)
+        chunks = list(batches)
+        if not chunks:
+            return
+        segs, extra = _apply_union(pa.Table.from_batches(chunks), key, names)
+        if not len(segs):
+            return
+        cols = [pa.array(getattr(segs, c)) for c in SEG_COLS]
+        if extra is not None:
+            cols += extra.columns
+        yield from pa.Table.from_arrays(cols, names=SEG_COLS + names).to_batches()
 
-    return it
+    schema = StructType([StructField(c, LongType()) for c in SEG_COLS] + list(payload))
+    return rows.mapInArrow(it, schema=schema)
 
 
 def apply_marks_df(
@@ -457,10 +494,10 @@ def apply_marks_df(
     marks: DataFrame,
     extra_aggs: dict[str, str] | None = None,
     skip_final_merge: bool = False,
-    explode_partitions: int | None = None,
 ) -> DataFrame:
-    """A8: join each segment's marks onto it (_join_marks), split it in numpy
-    (one mapInArrow over the joined rows, _apply_mark_lists), re-merge.
+    """A8: one exchange brings each segment and its marks together
+    (_union_marks), one mapInArrow matches and splits them in numpy
+    (_apply_union), then the closing coincident merge.
 
     Marks come either packed, (_sid, k) from split_round(packed=True) with
     `segs` carrying the same `_sid`, or keyed by coordinates, (ax, ay, bx, by,
@@ -473,23 +510,9 @@ def apply_marks_df(
     marks contain no collinear-overlap pairs AND no snap-rounded marks:
     sub-segments lie on their parent's line, so coincidences require a
     collinear-overlap parent pair, and rounding can move points onto new
-    coincidences (the fixpoint's next round handles those through its merge).
-
-    explode_partitions: when chains are LONG (few segments carrying many marks
-    each — the crossing-dense shape), the mark agg's output is only a few rows
-    of fat arrays, AQE coalesces it to a handful of partitions, and the apply
-    + every downstream map stage serialize on them (measured 17 partitions for
-    a 2.1 M-mark lines_net round). Callers that detect the long-chain regime
-    pass the shuffle-partition count here to re-spread the joined rows BEFORE
-    the apply (a cheap shuffle: one row per segment)."""
+    coincidences (the fixpoint's next round handles those through its merge)."""
     payload = list(extra_aggs or {})
-    j = _join_marks(segs, marks).select(*SEG_COLS, *payload, "mks")
-    if explode_partitions:
-        j = j.repartition(explode_partitions)
-    schema = StructType(
-        [StructField(c, LongType()) for c in SEG_COLS] + [segs.schema[c] for c in payload]
-    )
-    out = j.mapInArrow(_apply_marks_iter(payload), schema=schema)
+    out = _apply_rows(*_union_marks(segs, marks, payload), [segs.schema[c] for c in payload])
     if skip_final_merge:
         return out
     return merge_segments_df(out, extra_aggs)
@@ -504,14 +527,14 @@ class SplitResult:
         strip sizing and extract's fused-cap check use it instead of a count.
     strip_edges: doubled-x fill strip edges from the terminal round's mark
         quantiles, or None (the fill stage then samples its own).
-    pending: (segments, marks) of a terminal round whose apply was left to the
-        fill stage's pack, which runs it in the same numpy kernel; `segs` is
-        that apply as a lazy DataFrame for any other consumer."""
+    pending: the _union_marks (rows, key) of a terminal round whose apply was
+        left to the fill stage's pack, which runs it in the same numpy kernel;
+        `segs` is that apply as a lazy DataFrame for any other consumer."""
 
     segs: DataFrame
     n_segments: int | None = None
     strip_edges: list[int] | None = None
-    pending: tuple[DataFrame, DataFrame] | None = None
+    pending: tuple[DataFrame, list[str]] | None = None
 
 
 def split_segments_df(
@@ -525,11 +548,14 @@ def split_segments_df(
     checkpoint_last: bool = True,
 ) -> SplitResult:
     """A9 fixpoint: repeat split rounds until no marks (rounded intersections can
-    move sub-segments onto new crossings). Each round localCheckpoints (or writes a
-    durable checkpoint when checkpoint_dir is set). pre_merged=True skips the
-    initial coincident-merge job when the caller already ran it; `bounds` (the
-    _count_and_bounds tuple of the input) skips round 0's metadata job when the
-    caller already measured it.
+    move sub-segments onto new crossings). Each round checkpoints its marks and,
+    unless it is a lazy terminal round, its applied segments (parquet under
+    checkpoint_dir when set). No round runs a metadata job: the termination
+    probe is observed on the marks checkpoint, the next round's count + bbox
+    on the apply checkpoint, which also stores the packed marks' `_sid` key
+    (_checkpoint_segments). The input is checkpointed so after its merge;
+    pre_merged=True skips the merge, and a pre-merged input that already
+    stores `_sid` is used as is, with `bounds` (its _count_and_bounds) if given.
 
     checkpoint_last=False: the TERMINAL round's apply is returned LAZY (its
     inputs — the round's marks and the pre-round segments — are both
@@ -542,46 +568,36 @@ def split_segments_df(
     The terminal probe also returns approx quantiles of the round's mark x
     (SplitResult.strip_edges) — the fill stage reuses them as strip edges
     instead of running its own sampling job."""
-    if not pre_merged:
-        segs = merge_segments_df(segs, extra_aggs).localCheckpoint(eager=True)
-        bounds = None  # caller bounds described the pre-merge set
-    last_n = None
-    n_hint = None  # upper bound on the output row count (fills sizing hint)
-    strip_edges = None
-    pending = None
-    spark_parts = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     from ..session import audit_desc
 
+    if not pre_merged:
+        segs, bounds = _checkpoint_segments(merge_segments_df(segs, extra_aggs))
+    elif "_sid" not in segs.columns:
+        segs, bounds = _checkpoint_segments(segs)
+    elif bounds is None:
+        audit_desc(segs.sparkSession, "split:bounds")
+        bounds = _count_and_bounds(segs)
+    n_hint = bounds[0]  # upper bound on the output row count (fills sizing hint)
+    strip_edges = None
+    pending = None
+
     for rnd in range(max_rounds):
-        if bounds is None:
-            audit_desc(segs.sparkSession, f"split:bounds r{rnd}")
-            bounds = _count_and_bounds(segs)  # one scalar job: count + bbox
-        last_n = bounds[0]
         # parallelism floor: crossing-DENSE inputs (few long segments, many
         # intersections) would otherwise land in one cell and serialize the
         # exact solver; extra cover rows are cheap, idle cells cost nothing
         floor = 8 if bounds[0] >= 64 else 1
         cells_per_axis = max(floor, int((bounds[0] / max(target_per_cell, 1)) ** 0.5))
-        # packed marks/chains need every coordinate (incl. snap-rounded marks,
-        # which stay within the bbox ±1) under the 2^30 cap; _sid gives the
-        # kernel a 1-long segment key. It is not materialized: every job that
-        # reads segs_round re-evaluates monotonically_increasing_id, the fill
-        # pack too (compute_fills_df joins a pending segs_round to the marks
-        # in a later job). The ids agree only because segs is the
-        # localCheckpointed (or parquet-read) frame, whose partitions and row
-        # order are fixed.
+        # packed marks need every coordinate (incl. snap-rounded marks, which
+        # stay within the bbox ±1) under the 2^30 cap; the stored _sid gives
+        # them a 1-long segment key
         cmax_round = max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4]))
         packed_round = cmax_round < (1 << 30) - 2
-        segs_round = (
-            segs.withColumn("_sid", F.monotonically_increasing_id())
-            if packed_round
-            else segs
+        # the scalar kernel's snap radius progression: 2^round, capped at 2^60
+        marks, _ = split_round(
+            segs, cells_per_axis, bounds=bounds, packed=packed_round, radius=1 << min(rnd, 60)
         )
-        marks, _ = split_round(segs_round, cells_per_axis, bounds=bounds, packed=packed_round)
-        audit_desc(segs.sparkSession, f"split:kernel+ckpt r{rnd}")
-        marks = marks.localCheckpoint(eager=True)
-        # ONE probe job for emptiness + the two termination flags (was three
-        # separate actions per round):
+        # the probe rides on the marks checkpoint:
+        #  - n == 0: nothing to apply, the fixpoint is reached;
         #  - need_fix (scalar split.split_segments rule): marks that are ALL
         #    exact split segments at points exactly ON them, so no new
         #    crossings can appear — apply and stop without a verification
@@ -599,72 +615,57 @@ def split_segments_df(
         # strips keep every strip kernel comfortably sized.
         fracs = ", ".join(str(i / 256) for i in range(1, 256))
         px_expr = f"k DIV {_KS} - {_KB}" if packed_round else "px"
-        # quantiles over a ~5% row sample INSIDE the same agg (percentile_approx
-        # skips NULLs): the summary insert per row was ~0.5 s at 2 M marks and
-        # scales linearly — a sample steers load balance just as well (strip
-        # edges carry no correctness weight). The sample predicate hashes the
-        # mark itself (rand() is rejected inside aggregates and would not be
-        # deterministic anyway).
+        # quantiles over a ~5% row sample (percentile_approx skips NULLs): the
+        # summary insert per row was ~0.5 s at 2 M marks and scales linearly —
+        # a sample steers load balance just as well (strip edges carry no
+        # correctness weight). The sample predicate hashes the mark itself, so
+        # it is deterministic (rand() is rejected inside aggregates).
         sample_cols = "k, _sid" if packed_round else "px, py, ax, ay"
-        audit_desc(segs.sparkSession, f"split:probe r{rnd}")
-        probe = marks.agg(
-            F.count("*").alias("n"),
-            F.max("is_round").alias("any_round"),
-            F.max("col_ovl").alias("any_col"),
-            F.expr(
-                f"percentile_approx("
-                f"IF(pmod(hash({sample_cols}), 20) = 0, {px_expr}, NULL),"
-                f" array({fracs}), 100)"
-            ).alias("pq"),
-        ).first()
-        if probe["n"] == 0:
-            n_hint = last_n  # exact: nothing was applied this round
-            break
+        audit_desc(segs.sparkSession, f"split:kernel+ckpt r{rnd}")
+        marks, probe = _checkpoint_observed(
+            marks,
+            [
+                F.count("*").alias("n"),
+                F.max("is_round").alias("any_round"),
+                F.max("col_ovl").alias("any_col"),
+                F.expr(
+                    f"percentile_approx("
+                    f"IF(pmod(hash({sample_cols}), 20) = 0, {px_expr}, NULL),"
+                    f" array({fracs}), 100)"
+                ).alias("pq"),
+            ],
+        )
+        n_marks = int(probe["n"])
+        if n_marks == 0:
+            break  # n_hint is exact: nothing was applied this round
         need_fix = bool(probe["any_round"])
         has_col = bool(probe["any_col"])
-        n_marks = int(probe["n"])
-        pre_count = bounds[0]
-        # long-chain regime (see apply_marks_df): many marks over few segments
-        # means the mark agg output is a few fat-array rows that AQE coalesces,
-        # serializing the apply — re-spread it. When segments outnumber
-        # chains the agg output is already wide; skip the extra shuffle.
-        explode_parts = (
-            spark_parts
-            if n_marks >= 250_000 and bounds[0] <= n_marks // 4
-            else None
-        )
-        segs = apply_marks_df(
-            segs_round,
-            marks,
-            extra_aggs,
-            skip_final_merge=not need_fix and not has_col,
-            explode_partitions=explode_parts,
-        )
         terminal = not need_fix
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/split_r{rnd}"
-            segs.write.mode("overwrite").parquet(path)
-            segs = segs.sparkSession.read.parquet(path)
-        elif not (terminal and not checkpoint_last):
-            audit_desc(segs.sparkSession, f"split:apply+ckpt r{rnd}")
-            segs = segs.localCheckpoint(eager=True)
-        last_n = None  # marks were applied after the count; stale
-        bounds = None
-        if terminal:
-            # terminal round: each mark row adds at most one sub-segment to one
-            # parent, so pre-count + mark rows bounds the output — close enough
-            # for the fills stage's strip sizing without a count job
-            n_hint = pre_count + n_marks
-            if probe["pq"]:
-                strip_edges = sorted(set(2 * int(q) for q in probe["pq"]))
-            if not checkpoint_last and checkpoint_dir is None and not has_col and not extra_aggs:
-                # both inputs are checkpointed, so the fill plan that applies
-                # them stays shallow
-                pending = (segs_round, marks)
+        if terminal and probe["pq"]:
+            strip_edges = sorted(set(2 * int(q) for q in probe["pq"]))
+        lazy = terminal and not checkpoint_last and checkpoint_dir is None
+        if lazy and not has_col and not extra_aggs:
+            # both inputs are checkpointed, so the fill plan that applies them
+            # stays shallow
+            pending = _union_marks(segs, marks)
+            applied = _apply_rows(*pending)
+        else:
+            applied = apply_marks_df(
+                segs, marks, extra_aggs, skip_final_merge=not need_fix and not has_col
+            )
+        if lazy:
+            # each mark row adds at most one sub-segment to one parent, so
+            # pre-count + mark rows bounds the lazy output
+            n_hint += n_marks
+            segs = applied
             break
-    if n_hint is None:
-        n_hint = last_n
-    return SplitResult(segs, n_hint, strip_edges, pending)
+        path = None if checkpoint_dir is None else f"{checkpoint_dir}/split_r{rnd}"
+        audit_desc(segs.sparkSession, f"split:apply+ckpt r{rnd}")
+        segs, bounds = _checkpoint_segments(applied, path)
+        n_hint = bounds[0]
+        if terminal:
+            break
+    return SplitResult(segs.drop("_sid"), n_hint, strip_edges, pending)
 
 
 # ---------------------------------------------------------------------------------
@@ -699,7 +700,7 @@ _FILL_ARROW_SCHEMA = pa.schema(
 # boundary-blob fill output (compute_fills_df with boundary_rule): ONE row per
 # fill reduce partition holding the partition's whole boundary set as a raw
 # buffer — ax|ay|bx|by (cnt each, wc-byte words) then fill (cnt uint8). cnt and
-# cmax ride as columns so extract's metadata job is a trivial sum/max over
+# cmax ride as columns so extract's metadata is a trivial sum/max over
 # ~n_partitions rows instead of a scan of millions.
 BOUNDARY_BLOB_SCHEMA = StructType(
     [
@@ -807,7 +808,7 @@ PACKED_STRIP_SCHEMA = StructType(
 )
 
 
-def _pack_strips_iter(edges):
+def _pack_strips_iter(edges, key: list[str] | None = None):
     """Map-side pack stage (mapInArrow): compute each segment's strip span
     (np.searchsorted against the driver's quantile edges: the strip of a
     doubled-x value is the count of edges <= it, monotone, so the span
@@ -817,9 +818,10 @@ def _pack_strips_iter(edges):
     partition. Coord/winding words narrow to int32 per partition when the
     actual values fit (the reader re-widens; fill math is unchanged).
 
-    Rows that carry pending marks (`mks`, a SplitResult.pending joined by
-    _join_marks) are split first by the same numpy apply as apply_marks_df,
-    so the terminal round's apply needs no stage of its own."""
+    With `key`, the rows are a SplitResult.pending in _union_marks form
+    (segment rows and mark rows, partitioned on `key`): the same numpy apply
+    as apply_marks_df splits them first, so the terminal round's apply needs
+    no stage of its own."""
     E = np.asarray(edges, dtype=np.int64)
 
     def it(batches):
@@ -829,8 +831,8 @@ def _pack_strips_iter(edges):
         tbl = pa.Table.from_batches(chunks)
         if not len(tbl):
             return
-        if "mks" in tbl.column_names:
-            segs, _ = _apply_mark_lists(tbl)
+        if key:
+            segs, _ = _apply_union(tbl, key)
         else:
             segs = Segments(*(_np_col(tbl, c) for c in SEG_COLS))
         yield _pack_arrays(segs, E)
@@ -1023,15 +1025,14 @@ def compute_fills_df(
             edges = sorted(set(int(q) for q in qs))
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    key = None
     if split.pending is not None:
-        # terminal apply + pack in one python stage: join the pending marks
-        # onto the pre-round segments; the explicit repartition spreads the
-        # fat mks-array rows before it (AQE would coalesce the join output by
-        # BYTES and serialize the apply)
-        rows = _join_marks(*split.pending).select(*SEG_COLS, "mks").repartition(n_part)
+        # terminal apply + pack in one python stage, behind the one exchange
+        # that brings each pre-round segment and its pending marks together
+        rows, key = split.pending
     else:
         rows = segs.select(*SEG_COLS)
-    packed = rows.mapInArrow(_pack_strips_iter(edges), schema=PACKED_STRIP_SCHEMA)
+    packed = rows.mapInArrow(_pack_strips_iter(edges, key), schema=PACKED_STRIP_SCHEMA)
     # the strip hash shuffle carries thousands of blob rows instead of millions
     # of segment rows (same payload bytes, none of the per-row serialization)
     return packed.repartition(n_part, "strip").mapInArrow(
@@ -1133,9 +1134,9 @@ def distributed_overlay(
     if options is None:
         options = OverlayOptions()
     audit_desc(segs.sparkSession, "merge+ckpt")
-    merged = merge_segments_df(segs).localCheckpoint(eager=True)
-    audit_desc(segs.sparkSession, "merge:bounds")
-    bounds = _count_and_bounds(merged)
+    # the merge checkpoint also observes the count + bbox and stores the
+    # split's `_sid` key
+    merged, bounds = _checkpoint_segments(merge_segments_df(segs))
     if not force_distributed and bounds[0] <= small_threshold:
         cover, _ = salted_cover(merged, cells_per_axis=32, hot_threshold=1 << 62, bounds=bounds)
         est_pairs = int(
@@ -1151,7 +1152,7 @@ def distributed_overlay(
         if est_out <= pair_threshold:
             # repartition(1) + mapInArrow, not a constant-key grouped map: the
             # grouped-map plan sorts the partition by its key before grouping
-            return merged.repartition(1).mapInArrow(
+            return merged.select(*SEG_COLS).repartition(1).mapInArrow(
                 _local_overlay_kernel(rule, fill_rule, options), schema=RINGS_OUT_SCHEMA
             )
     split = split_segments_df(
@@ -1165,7 +1166,7 @@ def distributed_overlay(
     )
     # boundary rows leave the fill kernel as per-partition binary blobs (the
     # kernel already holds them as numpy arrays — packing there is free and
-    # the checkpoint + fused 64->1 exchange then carry ~n_partitions rows
+    # the fused 64->1 exchange then carries ~n_partitions rows
     # instead of millions)
     fills = compute_fills_df(split, fill_rule, boundary_rule=rule)
     return extract_shapes_df(
@@ -1173,7 +1174,7 @@ def distributed_overlay(
         rule,
         options,
         # post-split row count UPPER BOUND >= boundary rows: when it already
-        # clears the fused cap, extract skips its metadata job (one barrier less)
+        # clears the fused cap, extract needs no metadata and no fills checkpoint
         n_edges_hint=split.n_segments,
     )
 

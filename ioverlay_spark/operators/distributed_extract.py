@@ -28,7 +28,7 @@ from pyspark.sql.types import (
 )
 
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
-from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch
+from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch, _checkpoint_observed
 
 
 def boundary_segments_df(fills: DataFrame, rule: OverlayRule) -> DataFrame:
@@ -876,16 +876,17 @@ def extract_shapes_df(
     fills: BOUNDARY_BLOB_SCHEMA rows (compute_fills_df with boundary_rule=rule:
     the fill kernel already kept only this rule's boundary and packed it),
     recognized by their `xyf` column, or FILL_SCHEMA rows, which are filtered
-    to the boundary of `rule` and packed here. Either way the checkpoint and
-    the fused 64->1 exchange carry one binary blob per partition, and the
-    metadata job is a sum/max over those rows.
+    to the boundary of `rule` and packed here. Either way the fused 64->1
+    exchange carries one binary blob per partition, and the metadata, when
+    needed, is a sum/max over those rows observed on their checkpoint.
 
     n_edges_hint: an UPPER BOUND on the boundary row count when the caller
     knows one (the overlay pipeline's post-split row count). When it already
-    clears the fused cap, the dispatch is decided without any job at all."""
+    clears the fused cap, the dispatch is decided without any job at all, and
+    the fused walk, the blobs' only reader, consumes the fill plan directly:
+    the fill stage and the walk run as one job with no checkpoint between."""
     from ..session import audit_desc
 
-    audit_desc(fills.sparkSession, "fill+boundary:ckpt")
     if "xyf" not in fills.columns:
         # extraction reads only coordinates + fill bits: subj/clip never
         # enter the checkpoint or the downstream shuffles
@@ -894,18 +895,17 @@ def extract_shapes_df(
             .select("ax", "ay", "bx", "by", "fill")
             .mapInArrow(_pack_boundary_rows_iter, schema=BOUNDARY_BLOB_SCHEMA)
         )
-    b = fills.localCheckpoint(eager=True)
-
-    # one metadata job: coordinate cap for node-id packing AND the edge count
-    # (reused as the CC dispatch bound, saving its limit-probe job) — skipped
-    # when the caller's bound already picks the fused plan (the exact count
-    # only matters when the bound exceeds the cap, where boundary filtering
-    # may still have cut the true count below it). The salted plan, the only
-    # reader of cmax, is reached only after this job.
+    b = fills
     n_edges = n_edges_hint
     if n_edges is None or n_edges > _FUSED_EXTRACT_CAP:
-        audit_desc(fills.sparkSession, "extract:blob meta")
-        meta = b.agg(F.max("cmax").alias("m"), F.sum("cnt").alias("n")).first()
+        # the exact edge count (the fused/salted dispatch and the CC bound:
+        # boundary filtering may have cut the true count below the cap) and
+        # the coordinate cap for node-id packing, observed on the checkpoint
+        # that the dispatch needs anyway
+        audit_desc(fills.sparkSession, "fill+boundary:ckpt")
+        b, meta = _checkpoint_observed(
+            fills, [F.max("cmax").alias("m"), F.sum("cnt").alias("n")]
+        )
         cmax, n_edges = meta["m"], int(meta["n"] or 0)
     if n_edges <= _FUSED_EXTRACT_CAP:
         # blob feed straight into ONE task that does CC + walk fused (node ids,
@@ -918,10 +918,8 @@ def extract_shapes_df(
         # coalesce(1): the 64-way shuffle write parallelizes and it cannot
         # infect upstream lineage. Differential-tested equal to the salted path.
         audit_desc(fills.sparkSession, "extract:fused blob walk+ckpt")
-        rings = (
-            b.repartition(1)
-            .mapInArrow(_fused_extract_blob_iter(rule, options), schema=RINGS_SCHEMA)
-            .localCheckpoint(eager=True)
+        rings = b.repartition(1).mapInArrow(
+            _fused_extract_blob_iter(rule, options), schema=RINGS_SCHEMA
         )
         return _bind_and_project(rings)
     # giant boundary set: unpack the blobs back to the per-segment row feed
@@ -968,20 +966,18 @@ def extract_shapes_df(
         labeled.withColumn("_salt", F.pmod(F.hash("component"), F.lit(8 * n_part)))
         .groupBy("_salt")
         .applyInArrow(_extract_kernel(rule, options), schema=RINGS_SCHEMA)
-        .localCheckpoint(eager=True)
     )
     return _bind_and_project(rings)
 
 
 def _bind_and_project(rings: DataFrame) -> DataFrame:
-    """Shared tail of both extract plans: hole->hull binding + final shape-id
-    projection over the checkpointed raw rings."""
-    from ..session import audit_desc
-
+    """Shared tail of both extract plans: checkpoint the raw rings (observing
+    their hole count in the same job), then hole->hull binding + the final
+    shape-id projection."""
+    rings, m = _checkpoint_observed(rings, [F.count_if("is_hole").alias("holes")])
     hulls = rings.where(~F.col("is_hole"))
     holes = rings.where(F.col("is_hole"))
-    audit_desc(rings.sparkSession, "extract:holes probe")
-    if holes.isEmpty():
+    if not m["holes"]:
         return rings.select(
             F.col("ring_id").alias("shape_id"), "ring_id", "is_hole", "pts_x", "pts_y", "area2"
         )

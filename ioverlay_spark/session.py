@@ -57,9 +57,9 @@ def ship_package(spark: SparkSession) -> None:
 def audit_desc(spark: SparkSession, label: str) -> None:
     """Name the NEXT Spark jobs for event-log audits (audits/lines_net_jobs.py).
 
-    No-op unless IOVERLAY_AUDIT_JOBDESC is set: job descriptions are
-    driver-global state, so the library only touches them when an audit
-    explicitly asks for stage attribution."""
+    No-op unless IOVERLAY_AUDIT_JOBDESC is set: the description is a local
+    property of the calling thread, but there it replaces the caller's own (a
+    setJobGroup label too), so the library only sets it when an audit asks."""
     if os.environ.get("IOVERLAY_AUDIT_JOBDESC"):
         spark.sparkContext.setJobDescription(label)
 

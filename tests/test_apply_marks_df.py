@@ -106,7 +106,6 @@ def test_apply_marks_df_matches_reference(spark, form):
                 yt = y if segs.by[i] >= segs.ay[i] else -y
                 rows.append((i, (x + KB) * KS + (yt + KB), False, False))
             mark_df = spark.createDataFrame(rows, ["_sid", "k", "is_round", "col_ovl"])
-            parts = None
         else:
             seg_df = spark.createDataFrame(_seg_rows(segs, data, False), cols)
             rows = [
@@ -117,14 +116,7 @@ def test_apply_marks_df_matches_reference(spark, form):
             mark_df = spark.createDataFrame(
                 rows, ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"]
             )
-            parts = 3  # the long-chain repartition ahead of the apply
-        out = apply_marks_df(
-            seg_df,
-            mark_df,
-            {"data": "max(data)"},
-            skip_final_merge=True,
-            explode_partitions=parts,
-        )
+        out = apply_marks_df(seg_df, mark_df, {"data": "max(data)"}, skip_final_merge=True)
         assert out.columns == cols
         got = sorted(tuple(int(v) for v in r) for r in out.collect())
         want = _expected(segs, data, marks)

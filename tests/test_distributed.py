@@ -578,3 +578,136 @@ def test_fused_apply_pack_plan_and_fills(spark):
     got = fill_rows(fills)
     assert len(got) > 0
     assert got == kernel_fill_rows(subj, clip, FillRule.EVEN_ODD, OverlayRule.INTERSECT)
+
+
+def snap_case(shift: int = 0):
+    """Seeded star polygons whose edges cross at non-integer points: the first
+    split round snap-rounds its marks, so the fixpoint runs a second round."""
+    rng = np.random.default_rng(11)
+
+    def star(cx, cy):
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 7))
+        rad = rng.uniform(8, 30, 7)
+        pts = np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
+        return [(int(x) + shift, int(y) + shift) for x, y in np.round(pts)]
+
+    subj = [star(30, 30), star(55, 40)]
+    clip = [star(40, 50), star(45, 25)]
+    return subj, clip
+
+
+def _segments_df(spark, subj, clip):
+    from ioverlay_spark.operators.distributed import contours_to_segments_df
+
+    df = spark.createDataFrame(
+        rings_to_contours_rows(subj, clip), ["role", "cid", "pts_x", "pts_y"]
+    )
+    return contours_to_segments_df(spark, df)
+
+
+@pytest.mark.parametrize("case", ["no_marks", "empty", "snap_two_rounds", "checkpoint_dir", "wide_2e40"])
+def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_path, case):
+    """Edge cases of the observed checkpoints and the one-exchange mark
+    apply, each against the scalar kernel: a split that finds no marks (the
+    fixpoint stops on the observed count 0), no segments at all, a
+    snap-rounding input that needs a second round (a non-terminal apply and
+    its observed bounds; the rounds must grow the snap radius as the kernel
+    does), the same through parquet checkpoints (checkpoint_dir) and shifted
+    by 2^40 (coordinate-keyed marks)."""
+    import ioverlay_spark.operators.distributed as dist
+    from ioverlay_spark.options import FillRule, OverlayRule
+
+    rounds = []
+    real_split_round = dist.split_round
+
+    def counting_split_round(*args, **kwargs):
+        rounds.append(kwargs.get("packed"))
+        return real_split_round(*args, **kwargs)
+
+    monkeypatch.setattr(dist, "split_round", counting_split_round)
+    rule, ckpt = OverlayRule.XOR, None
+    if case == "no_marks":
+        subj = [[(0, 0), (10, 0), (10, 10), (0, 10)]]
+        clip = [[(20, 0), (30, 0), (30, 10), (20, 10)]]
+    elif case == "empty":
+        subj, clip = [], []
+    else:
+        subj, clip = snap_case(1 << 40 if case == "wide_2e40" else 0)
+        if case == "checkpoint_dir":
+            ckpt = str(tmp_path)
+    if subj:
+        segs = _segments_df(spark, subj, clip)
+    else:
+        segs = spark.createDataFrame(
+            [], "ax long, ay long, bx long, by long, subj long, clip long"
+        )
+    out = dist.distributed_overlay(
+        segs, rule, FillRule.EVEN_ODD, checkpoint_dir=ckpt, force_distributed=True
+    ).toPandas()
+    exp = kernel_rings(subj, clip, rule, FillRule.EVEN_ODD)
+    assert ring_multiset(out) == exp
+    assert_holes_bound(out)
+    if case in ("no_marks", "empty"):
+        assert len(rounds) == 1
+    else:
+        assert len(exp) > 0 and len(rounds) >= 2
+        assert rounds[0] is (case != "wide_2e40")
+    if case == "checkpoint_dir":
+        assert (tmp_path / "split_r0").is_dir()
+
+
+@pytest.mark.parametrize("form", ["packed", "wide"])
+def test_apply_marks_df_payload_matches_reference(spark, form):
+    """The one-exchange apply against the scalar walk _apply_marks_ref with a
+    string payload column: every sub-segment carries its parent's payload,
+    unmarked segments pass through, marks whose key matches no segment are
+    ignored, and a segment whose marks arrive in a different Arrow batch
+    (many marks per segment) is still split at all of them."""
+    from ioverlay_spark.kernel.segments import Segments
+    from ioverlay_spark.kernel.split import _apply_marks_ref
+    from ioverlay_spark.operators.distributed import _KB, _KS, apply_marks_df
+
+    shift = 0 if form == "packed" else 1 << 40
+    rng = np.random.default_rng(3)
+    segs = [(0, 0, 1000, 0), (0, 0, 0, 1000), (0, 0, 600, 900), (5, 900, 905, 0), (7, 7, 9, 9)]
+    segs = [tuple(v + shift for v in s) for s in segs]
+    counts = [(1, 0), (0, -1), (2, 1), (1, 1), (1, 0)]
+    tags = ["a", "bb", "ccc", "dddd", "e"]
+    marks = []  # (seg index, x, y)
+    for x in rng.integers(1, 1000, 3000).tolist():
+        marks.append((0, shift + x, shift))  # a long chain: 3000 marks, repeats
+    for y in (10, 500, 500, 999):
+        marks.append((1, shift, shift + y))
+    for t in (1, 2, 3):
+        marks.append((2, shift + 200 * t, shift + 300 * t))
+    marks.append((3, shift + 5, shift + 900))  # an endpoint mark only
+    rows = [s + c + (tag,) for s, c, tag in zip(segs, counts, tags)]
+    cols = ["ax", "ay", "bx", "by", "subj", "clip", "tag"]
+    if form == "packed":
+        seg_df = spark.createDataFrame(
+            [r + (100 + i,) for i, r in enumerate(rows)], cols + ["_sid"]
+        )
+        mrows = []
+        for i, x, y in marks + [(7, 3, 3)]:  # _sid 107 matches no segment
+            ay, by = (segs[i][1], segs[i][3]) if i < len(segs) else (0, 1)
+            yt = y if by >= ay else -y
+            mrows.append((100 + i, (x + _KB) * _KS + (yt + _KB), False, False))
+        mark_df = spark.createDataFrame(mrows, ["_sid", "k", "is_round", "col_ovl"])
+    else:
+        seg_df = spark.createDataFrame(rows, cols)
+        mrows = [segs[i] + (x, y, False, False) for i, x, y in marks]
+        mrows.append((shift, shift, shift + 1, shift + 1, shift, shift, False, False))
+        mark_df = spark.createDataFrame(
+            mrows, ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"]
+        )
+    out = apply_marks_df(seg_df, mark_df, {"tag": "max(tag)"}, skip_final_merge=True)
+    got = sorted(tuple(r) for r in out.collect())
+
+    want = []
+    for i, (s, c) in enumerate(zip(segs, counts)):
+        one = Segments(*(np.array([v], dtype=np.int64) for v in s + c))
+        ref = _apply_marks_ref(one, [(0, x, y) for j, x, y in marks if j == i])
+        for r in zip(ref.ax, ref.ay, ref.bx, ref.by, ref.subj, ref.clip):
+            want.append(tuple(int(v) for v in r) + (tags[i],))
+    assert got == sorted(want)
+    assert len(got) > 900

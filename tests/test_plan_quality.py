@@ -188,7 +188,7 @@ def test_ivf_assign_broadcasts_centroids(spark):
 
 
 def test_apply_marks_plan_is_one_arrow_map(spark):
-    """Plan tripwire for A8: apply_marks_df is collect_set + join + ONE
+    """Plan tripwire for A8: apply_marks_df is a union + ONE exchange + ONE
     mapInArrow running the numpy apply. No JVM chain machinery may come back:
     no array_sort / zip_with (the per-row chain sort and pairing), no Generate
     (the sub-segment explode) and no Window (a lead()-style pairing). Checked
@@ -260,3 +260,61 @@ def test_cluster_overlay_plan_shape(spark):
     exchanges = [l for l in p.splitlines() if "Exchange hashpartitioning" in l]
     assert len(exchanges) == 1, exchanges
     assert "pair_id" in exchanges[0]
+
+
+def test_pending_apply_plan_reads_stored_segment_ids(spark):
+    """The split materializes `_sid` in the checkpoints it already runs, so
+    the fill plan that runs a pending terminal apply reads the stored ids:
+    no monotonically_increasing_id is re-evaluated in a later job."""
+    from ioverlay_spark.operators.distributed import compute_fills_df, split_segments_df
+
+    rows = [(0, y, 40, y, 1, 0) for y in range(2, 40, 4)]
+    rows += [(x, 0, x, 40, 0, 1) for x in range(1, 40, 4)]
+    segs = spark.createDataFrame(rows, ["ax", "ay", "bx", "by", "subj", "clip"])
+    split = split_segments_df(segs, checkpoint_last=False)
+    assert split.pending is not None
+    fills = compute_fills_df(split)
+    opt = fills._jdf.queryExecution().optimizedPlan().toString()
+    for p in (plan_str(fills), opt):
+        assert "monotonically_increasing_id" not in p, p
+
+
+def test_lines_net_overlay_job_count(spark):
+    """Job-count tripwire: one distributed lines_net(48, 20) overlay plus a
+    collect runs in 9 Spark jobs: merge checkpoint 2, split 2 (cover shuffle,
+    marks checkpoint), pending apply + strip fill + fused walk 4 (three
+    exchanges and the rings checkpoint) and the collect 1. Before the count,
+    bbox, probe and hole checks were observed on those checkpoints, the fills
+    checkpoint dropped and the mark apply made one exchange, the same call
+    ran 18. The rings must still be the scalar kernel's, so the count cannot
+    be bought with a wrong answer."""
+    import pandas as pd
+    from test_distributed import kernel_rings, lines_net, ring_multiset, rings_to_contours_rows
+
+    from ioverlay_spark.operators.distributed import (
+        contours_to_segments_df,
+        distributed_overlay,
+    )
+    from ioverlay_spark.options import FillRule, OverlayRule
+
+    subj, clip = lines_net(48, 20)
+    df = spark.createDataFrame(
+        rings_to_contours_rows(subj, clip), ["role", "cid", "pts_x", "pts_y"]
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "lines_net_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        rows = distributed_overlay(
+            contours_to_segments_df(spark, df),
+            OverlayRule.INTERSECT,
+            FillRule.EVEN_ODD,
+            force_distributed=True,
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = ring_multiset(pd.DataFrame([r.asDict() for r in rows]))
+    assert got == kernel_rings(subj, clip, OverlayRule.INTERSECT, FillRule.EVEN_ODD)
+    assert n_jobs == 9, n_jobs
