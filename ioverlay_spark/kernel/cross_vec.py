@@ -8,8 +8,10 @@ ground truth, mirrored from iOverlay/src/split/cross_solver.rs:76-311):
     general case rounds half away from zero on magnitudes
   - snap-to-near-endpoint within `radius` for rounded crossings
 
-Precondition: |coords| < 2^30 (the batch `_COORD_CAP`), so endpoint diffs are
-< 2^31 and every product of two diffs fits int64. The one i128 spot is the
+Precondition (pair-local): each pair's bboxes overlap and every segment's x/y
+extent is < 2^30, so every difference between the pair's endpoint coordinates
+is < 2^31 at any absolute position and every product of two diffs fits int64
+(split.split_segments checks this once per call). The one i128 spot is the
 general-case `kx = |a1x| * |xy_b|` (up to ~2^93): rows where it would overflow
 int64 are masked out and routed through the scalar python-int `_cross_point` —
 on real inputs these are vanishingly rare (VERDICT r02 Wrong #2 / SURVEY §2.2 A7).
@@ -66,7 +68,7 @@ class _MarkAcc:
 
 def cross_pairs_batch(tax, tay, tbx, tby, oax, oay, obx, oby, radius: int):
     """Vectorized `cross_pair` over paired endpoint arrays (both segments a<b
-    normalized, |coords| < 2^30).
+    normalized, bboxes overlapping, x/y extents < 2^30).
 
     Returns (pair_idx, which, mx, my, is_round) flat mark arrays: mark k applies
     to pair `pair_idx[k]`, on the target segment when which==0 else the other.

@@ -107,15 +107,7 @@ def _is_inside(w: np.ndarray, rule: FillRule) -> np.ndarray:
 def compute_fills(segs: Segments, fill_rule: FillRule) -> np.ndarray:
     """4-bit SegmentFill per segment (uint8)."""
     bot_s, bot_c = _windings_below(segs)
-    top_s = bot_s + segs.subj
-    top_c = bot_c + segs.clip
-    fill = (
-        _is_inside(top_s, fill_rule).astype(np.uint8) * SUBJ_TOP
-        | _is_inside(bot_s, fill_rule).astype(np.uint8) * SUBJ_BOTTOM
-        | _is_inside(top_c, fill_rule).astype(np.uint8) * CLIP_TOP
-        | _is_inside(bot_c, fill_rule).astype(np.uint8) * CLIP_BOTTOM
-    )
-    return fill
+    return _fill_bits(segs, bot_s, bot_c, fill_rule)
 
 
 def _windings_sweep(segs: Segments) -> tuple[np.ndarray, np.ndarray]:
@@ -261,9 +253,6 @@ def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
     distributed strip fill) pass threads=1 explicitly."""
     if threads is not None and threads > 0:
         return threads
-    env = int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0"))
-    if env > 0:
-        return env
     if n_pairs < 1_500_000:
         return 1
     return min(8, os.cpu_count() or 1)
@@ -654,8 +643,7 @@ def compute_fills_segtree(
     # job is big enough to amortize the pool (the Spark strip fill passes
     # threads=1 and keeps the single tree — each task owns one core there)
     k = threads if threads and threads > 0 else (
-        int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0"))
-        or (min(8, os.cpu_count() or 1) if len(segs) >= 48_000 else 1)
+        min(8, os.cpu_count() or 1) if len(segs) >= 48_000 else 1
     )
     if k > 1 and len(segs) >= 48_000:
         res = _windings_segtree_strips(segs, k)
@@ -682,207 +670,29 @@ def compute_fills_sweep(segs: Segments, fill_rule: FillRule) -> np.ndarray:
     return _fill_bits(segs, wind_s, wind_c, fill_rule)
 
 
-def _windings_grouped(
-    tax: np.ndarray,
-    tay: np.ndarray,
-    tbx: np.ndarray,
-    tby: np.ndarray,
-    subj: np.ndarray,
-    clip: np.ndarray,
-    uxi: np.ndarray,
-    inv: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Bottom windings when rays share few distinct x positions (uxi = unique
-    doubled-midpoint Xi, inv = per-segment index into uxi).
-
-    For a fixed ray x = Xi/2, a non-vertical candidate t (x-span containing Xi)
-    is below a ray at doubled-y Y exactly when num_t < Y * dt_t (dt > 0), i.e.
-    Y >= floor(num_t / dt_t) + 1 — an exact INTEGER activation threshold
-    (floor-div rounds toward -inf, so negative numerators are handled). Sorting
-    thresholds once per unique Xi turns every ray's winding into prefix-sum +
-    searchsorted: O(U*n + P log P) total instead of the dense O(n*m) pair
-    matrix, a ~100x kernel cut on grid-like strips where U is tiny (lines_net,
-    rect/tile workloads — BENCH.md). Exact: same integer predicate as
-    _windings_below, differential-tested."""
-    n = len(tax)
-    wind_s = np.zeros(n, dtype=np.int64)
-    wind_c = np.zeros(n, dtype=np.int64)
-    nonvert = tbx > tax
-    t_ax2 = 2 * tax[nonvert]
-    t_bx2 = 2 * tbx[nonvert]
-    t_ay = tay[nonvert]
-    t_dt = (tbx - tax)[nonvert]
-    t_dy = (tby - tay)[nonvert]
-    t_subj = subj[nonvert]
-    t_clip = clip[nonvert]
-    Y = tay + tby
-    # group rays by unique Xi via one argsort (not U passes of inv == k)
-    ray_order = np.argsort(inv, kind="stable")
-    grp = np.searchsorted(inv[ray_order], np.arange(len(uxi) + 1))
-    for k, xi in enumerate(uxi.tolist()):
-        rays = ray_order[grp[k] : grp[k + 1]]
-        cand = np.flatnonzero((t_ax2 <= xi) & (xi < t_bx2))
-        if len(cand) == 0 or len(rays) == 0:
-            continue
-        num = 2 * t_ay[cand] * t_dt[cand] + t_dy[cand] * (xi - t_ax2[cand])
-        thr = num // t_dt[cand] + 1
-        order = np.argsort(thr, kind="stable")
-        thr = thr[order]
-        ps = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(t_subj[cand][order])])
-        pc = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(t_clip[cand][order])])
-        pos = np.searchsorted(thr, Y[rays], side="right")
-        wind_s[rays] = ps[pos]
-        wind_c[rays] = pc[pos]
-    return wind_s, wind_c
-
-
 def compute_fills_windowed(
     segs: Segments,
     fill_rule: FillRule,
     allow_sweep: bool = True,
     threads: int | None = None,
 ) -> np.ndarray:
-    """compute_fills with an x-window candidate bound: the downward ray at a
-    segment's doubled midpoint Xi only crosses segments t with
-    2*ax[t] <= Xi < 2*bx[t], and since bx[t] <= ax[t] + maxlen within a
-    length class, every candidate satisfies 2*ax[t] > Xi - 2*maxlen. Sorting
-    each power-of-8 length class by ax turns its candidate set into a
-    contiguous window — O(n * local density) instead of the dense O(n * m)
-    chunks of _windings_below, and within ~1.5x of the true active-pair floor
-    on mixed-length inputs (spiral audit, BENCH.md). EXACT same output
-    (differential-tested); this is what makes the x-strip fill survive
-    crossing-dense inputs where splitting leaves millions of short segments
-    (lines_net, BENCH.md)."""
-    n = len(segs)
-    if n == 0:
+    """Fill dispatcher. The segment tree serves every set whose products fit
+    int64 (4*extent^2 < 2^62, the gate _windings_segtree assumes). Wider sets
+    take an exact python-int pass: the O(n log n) sweep on a whole set, or the
+    dense object-int ray-cast when allow_sweep=False (the sweep is not valid on
+    strip SUBSETS — BENCH.md round-3 subset trap)."""
+    if len(segs) == 0:
         return np.zeros(0, dtype=np.uint8)
-    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-    x0 = min(ax.min(), bx.min())
-    y0 = min(ay.min(), by.min())
+    x0 = min(int(segs.ax.min()), int(segs.bx.min()))
+    y0 = min(int(segs.ay.min()), int(segs.by.min()))
     extent = max(
-        int(bx.max() - x0), int(by.max() - y0), int(ay.max() - y0), 1
+        int(segs.bx.max()) - x0,
+        int(segs.ay.max()) - y0,
+        int(segs.by.max()) - y0,
+        1,
     )
-    if 4 * extent * extent >= (1 << 62):
-        if allow_sweep:
-            # python-int sweep: exact at any scale and O(n log n), vs the
-            # dense object-int matrix the windowed path would otherwise need
-            return compute_fills_sweep(segs, fill_rule)
-        return compute_fills(segs, fill_rule)  # object-int path
-    # grouped-by-ray-x path: when rays share few distinct midpoints (grid-like
-    # data — exactly the shape that lands in narrow x-strips of the distributed
-    # fill), per-unique-Xi sorted activation thresholds beat both the dense
-    # matrix and the window; the U*8 <= n gate bounds its O(U*n) candidate scans
-    tax_all, tay_all = ax - x0, ay - y0
-    tbx_all, tby_all = bx - x0, by - y0
-    uxi, inv = np.unique(tax_all + tbx_all, return_inverse=True)
-    if len(uxi) * 8 <= n:
-        wind_s, wind_c = _windings_grouped(
-            tax_all, tay_all, tbx_all, tby_all, segs.subj, segs.clip, uxi, inv
-        )
-        top_s = wind_s + segs.subj
-        top_c = wind_c + segs.clip
-        return (
-            _is_inside(top_s, fill_rule).astype(np.uint8) * SUBJ_TOP
-            | _is_inside(wind_s, fill_rule).astype(np.uint8) * SUBJ_BOTTOM
-            | _is_inside(top_c, fill_rule).astype(np.uint8) * CLIP_TOP
-            | _is_inside(wind_c, fill_rule).astype(np.uint8) * CLIP_BOTTOM
-        )
-    # length-class windows: ONE global-maxlen window overshoots badly when span
-    # lengths are mixed (spiral: median chord 24x shorter than the longest), so
-    # non-vertical segments are bucketed into power-of-8 x-length classes, each
-    # searched with its own window. Candidate totals are measured up front and
-    # the dense kernel kept when it is genuinely cheaper (e.g. inside one
-    # x-strip of the distributed fill, where the strip IS the window).
-    tax, tay = tax_all, tay_all
-    tbx, tby = tbx_all, tby_all
-    Xi = tax + tbx
-    Yi = tay + tby
-    wind_s = np.zeros(n, dtype=np.int64)
-    wind_c = np.zeros(n, dtype=np.int64)
-    nv = np.flatnonzero(tbx > tax)
-    if len(nv):
-        L = (tbx - tax)[nv]
-        cls = (np.frexp(L.astype(np.float64))[1] - 1) // 3  # floor(log2 L) // 3
-        # dispatch estimate on a strided ray SAMPLE: est only chooses among
-        # exact paths, and the full searchsorted over every ray was the single
-        # biggest line of the spiral's fill (0.17 s of a 1.06 s fill — BENCH.md
-        # round 5). The window path below re-runs the search over all rays for
-        # the classes it actually scans.
-        stride = 16 if n >= 200_000 else 1
-        Xi_s = Xi[::stride]
-        sorted_classes = []
-        est = 0
-        for cval in np.unique(cls):
-            idx = nv[cls == cval]
-            idx = idx[np.argsort(tax[idx], kind="stable")]
-            sax2 = 2 * tax[idx]
-            wlen = 2 * int((tbx[idx] - tax[idx]).max())
-            lo_s = np.searchsorted(sax2, Xi_s - wlen, side="left")
-            hi_s = np.searchsorted(sax2, Xi_s, side="right")
-            est += int(np.maximum(hi_s - lo_s, 0).sum()) * stride
-            sorted_classes.append((idx, sax2, wlen, lo_s, hi_s))
-        if 2 * est >= n * len(nv):
-            return compute_fills(segs, fill_rule)
-        if est > 32 * n:
-            # dense active sets (spiral-like bands): the vectorized segment
-            # tree (O((n+q) log^2 n), _windings_segtree) beats the O(est)
-            # candidate scan; unlike the python sweep it is ray-at-midpoint
-            # semantics, so it is valid on strip SUBSETS too (the
-            # allow_sweep=False callers) — the r03 sweep-subset trap does not
-            # apply. Crossover estimate: the windowed scan costs ~est
-            # gather-heavy pair evals while the segtree costs ~(n+q)·log²n
-            # lighter ones; at the measured constants (spiral audit: segtree
-            # 2.9 s at 393k segs vs windowed 15.2 s at est/n≈156) the
-            # break-even sits near est/n ≈ 32.
-            return compute_fills_segtree(segs, fill_rule, threads=threads)
-        block = 4_000_000
-        for idx, sax2, wlen, lo_s, hi_s in sorted_classes:
-            if stride == 1:
-                lo, hi = lo_s, hi_s
-            else:
-                lo = np.searchsorted(sax2, Xi - wlen, side="left")
-                hi = np.searchsorted(sax2, Xi, side="right")
-            counts = np.maximum(hi - lo, 0)
-            cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-            start = 0
-            while start < n:
-                stop = int(np.searchsorted(cum, cum[start] + block, side="left"))
-                stop = min(max(stop, start + 1), n)
-                c = counts[start:stop]
-                total = int(c.sum())
-                base = cum[start]
-                qlo = start
-                start = stop
-                if total == 0:
-                    continue
-                q = np.repeat(np.arange(qlo, stop, dtype=np.int64), c)
-                t = idx[np.arange(total, dtype=np.int64) - (cum[q] - base) + lo[q]]
-                m = Xi[q] < 2 * tbx[t]
-                q, t = q[m], t[m]
-                if len(q) == 0:
-                    continue
-                dtt = tbx[t] - tax[t]
-                num = 2 * tay[t] * dtt + (tby[t] - tay[t]) * (Xi[q] - 2 * tax[t])
-                below = num < Yi[q] * dtt
-                q, t = q[below], t[below]
-                if len(q) == 0:
-                    continue
-                # bincount beats np.add.at ~10x (buffered C loop); winding sums
-                # are far below 2^53 so the float64 accumulation is exact
-                qr = q - qlo
-                span = stop - qlo
-                wind_s[qlo:stop] += np.bincount(
-                    qr, weights=segs.subj[t], minlength=span
-                ).astype(np.int64)
-                wind_c[qlo:stop] += np.bincount(
-                    qr, weights=segs.clip[t], minlength=span
-                ).astype(np.int64)
-
-    top_s = wind_s + segs.subj
-    top_c = wind_c + segs.clip
-    return (
-        _is_inside(top_s, fill_rule).astype(np.uint8) * SUBJ_TOP
-        | _is_inside(wind_s, fill_rule).astype(np.uint8) * SUBJ_BOTTOM
-        | _is_inside(top_c, fill_rule).astype(np.uint8) * CLIP_TOP
-        | _is_inside(wind_c, fill_rule).astype(np.uint8) * CLIP_BOTTOM
-    )
+    if 4 * extent * extent < (1 << 62):
+        return compute_fills_segtree(segs, fill_rule, threads=threads)
+    if allow_sweep:
+        return compute_fills_sweep(segs, fill_rule)
+    return compute_fills(segs, fill_rule)

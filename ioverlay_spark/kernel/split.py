@@ -12,9 +12,9 @@ Semantics match the reference split stage:
 
 Candidate-pair generation is vectorized (x-sweep + bbox masks). Exact math runs
 through the vectorized int64 solver (cross_vec.cross_pairs_batch) whenever every
-coordinate is under 2^30; beyond that it falls back to the python-int scalar
-`cross_pair` per candidate pair. At Spark scale this same kernel runs per grid
-cell inside applyInArrow (SURVEY.md A6).
+segment's x/y extent is under 2^30, at any absolute position; beyond that it
+falls back to the python-int scalar `cross_pair` per candidate pair. At Spark
+scale this same kernel runs per grid cell inside applyInArrow (SURVEY.md A6).
 """
 
 from __future__ import annotations
@@ -258,11 +258,8 @@ def _candidate_pairs_grid(
     # chunk budget: small enough that a big job yields ~3 chunks per worker
     # thread (the mask work releases the GIL, see below) while keeping each
     # chunk's materialized index arrays bounded (~2M rows max either way)
-    env_k = int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0"))
     if threads is not None and threads > 0:
         k = threads  # caller already runs inside a pool (strip-parallel path)
-    elif env_k > 0:
-        k = env_k
     elif ptot >= 600_000:
         k = min(8, os.cpu_count() or 1)
     else:
@@ -331,9 +328,7 @@ def _candidate_pairs(segs: Segments, threads: int | None = None) -> np.ndarray:
     task), which never starts a thread pool."""
     n = len(segs)
     if n >= 48_000:
-        k = threads or int(os.environ.get("SPARK_GRAFT_FILL_THREADS", "0")) or min(
-            8, os.cpu_count() or 1
-        )
+        k = threads or min(8, os.cpu_count() or 1)
         if k > 1:
             out = _candidate_pairs_strips(segs, k)
             if out is not None:
@@ -594,18 +589,18 @@ def split_segments(
     defaults (iOverlay/src/core/solver.rs:47-51, iOverlay/src/split/snap_radius.rs).
     `threads` goes to the pair enumeration (see _candidate_pairs)."""
     segs = sort_and_merge(segs)
-    # vectorized exact solver (cross_vec) needs every diff product to fit int64;
-    # splitting only creates points inside existing bboxes, so check the cap once
-    cap = 1 << 30
-    vec_ok = len(segs) == 0 or (
-        max(
-            int(np.abs(segs.ax).max()),
-            int(np.abs(segs.ay).max()),
-            int(np.abs(segs.bx).max()),
-            int(np.abs(segs.by).max()),
-        )
-        < cap
-    )
+    # the vectorized exact solver (cross_vec) needs every product of two
+    # pair-local differences to fit int64: candidate pairs overlap in their
+    # bboxes, so with every segment's x/y extent < 2^30 each difference is
+    # < 2^31 at any absolute position. Splitting only shortens segments, so
+    # check the bound once (extents in uint64: exact for any int64 endpoints)
+    def _extent(a, b):
+        lo, hi = np.minimum(a, b).view(np.uint64), np.maximum(a, b).view(np.uint64)
+        return int((hi - lo).max())
+
+    vec_ok = len(segs) == 0 or max(
+        _extent(segs.ax, segs.bx), _extent(segs.ay, segs.by)
+    ) < (1 << 30)
     exp = start
     for _ in range(max_rounds):
         if len(segs) < 2:

@@ -16,7 +16,6 @@ import numpy as np
 
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
 from .extract import bind_holes, ring_area2, simplify_ring
-from .fill import compute_fills
 from .segments import Segments, build_segments, sort_and_merge
 from .split import cross_pair, split_segments
 from .overlay import build_graph
@@ -259,12 +258,12 @@ def clip_paths_batch(
     is_closed_path: bool = False,
 ) -> list[list[np.ndarray]]:
     """Batched clip_path: each job is translated into its own disjoint x-tile,
-    the polygon split fixpoint runs ONCE over all bodies (kernel/batch._split_batch,
+    the polygon split fixpoint runs ONCE over all bodies (split_segments,
     bit-identical per tile), and the per-sub-edge O(edges x segments) python loops
     of the scalar kernel (_split_path_edges / _winding_below / _on_polygon_boundary)
     become windowed vectorized passes. Bit-identical to per-job clip_path
     (differential-tested); falls back to the scalar path on huge coordinates."""
-    from .batch import _COORD_CAP, _split_batch
+    from .batch import _COORD_CAP
 
     nj = len(jobs)
     if nj == 0:
@@ -331,8 +330,9 @@ def clip_paths_batch(
     off = np.arange(nj, dtype=np.int64) * W + 2 - minx
 
     # tiled body segments -> one split fixpoint over the whole batch
-    segs = _split_batch(
-        Segments(sax + off[sjob], say - y0, sbx + off[sjob], sby - y0, ssubj, sclip)
+    segs = split_segments(
+        Segments(sax + off[sjob], say - y0, sbx + off[sjob], sby - y0, ssubj, sclip),
+        threads=1,
     )
     ns = len(segs)
     if ns == 0:

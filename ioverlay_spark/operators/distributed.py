@@ -734,7 +734,8 @@ def _boundary_blob_batch(ax, ay, bx, by, fill) -> pa.RecordBatch:
 
 def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, boundary_rule):
     """Strip-fill core: arrays already sorted by strip id `s`; runs the
-    windowed fill per contiguous strip slice and keeps the home-strip rows.
+    subset-safe fill dispatcher (kernel/fill.compute_fills_windowed) per
+    contiguous strip slice and keeps the home-strip rows.
 
     Without boundary_rule it yields FILL_SCHEMA batches, one row per segment.
     With boundary_rule it keeps only that rule's result-boundary segments and
@@ -1046,15 +1047,13 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
     extract + hole binding, all in numpy/python — the List-solver analog.
     A mapInArrow iterator: the caller's repartition(1) hands it every segment.
 
-    Uses the BATCHED split/fill machinery (vectorized candidate prefilter; exact
-    python-int cross solver only on interacting pairs — bit-identical to the
-    scalar kernel, differential-tested) treating the whole job as one tile;
-    falls back to the scalar python-int path when coordinates exceed the
-    int64-safe range."""
-    from ..kernel.batch import _COORD_CAP, _shapes_to_flat, _split_batch
+    Runs the scalar kernel's stages on the whole set: split_segments (the
+    vectorized exact solver, python-int past its int64 bound) and the fill
+    dispatcher compute_fills_windowed."""
+    from ..kernel.batch import _shapes_to_flat
     from ..kernel.extract import extract_shapes
-    from ..kernel.fill import compute_fills_windowed as kernel_fills
-    from ..kernel.split import split_segments as kernel_split
+    from ..kernel.fill import compute_fills_windowed
+    from ..kernel.split import split_segments
 
     def run(it):
         batches = list(it)
@@ -1069,15 +1068,8 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
                 for c in ("ax", "ay", "bx", "by", "subj", "clip")
             )
         )
-        coords = [segs.ax, segs.ay, segs.bx, segs.by]
-        cmax = max(int(np.abs(c).max()) for c in coords)
-        if cmax < _COORD_CAP:
-            segs = _split_batch(segs)  # vectorized prefilter + exact solver
-        else:
-            segs = kernel_split(segs)  # python-int path for huge coordinates
-        # fill: the x-windowed midpoint ray-cast (O(n * local density) — exact,
-        # differential-tested against the dense kernel)
-        fills = kernel_fills(segs, fill_rule)
+        segs = split_segments(segs, threads=1)
+        fills = compute_fills_windowed(segs, fill_rule)
         shapes_areas = extract_shapes(segs, fills, rule, options, with_areas=True)
         _, sid, cidx, lens, pts, a2 = _shapes_to_flat([(0, shapes_areas)])
         offs = np.zeros(len(lens) + 1, dtype=np.int64)

@@ -616,9 +616,7 @@ def _fused_extract_arrays(
     comp_of_u = nodes[parent[np.searchsorted(nodes, u)]]
     # this kernel owns the ONE task of its stage (repartition(1)) — the
     # rest of the executor is idle, so the component walk threads out
-    threads = int(
-        os.environ.get("SPARK_GRAFT_EXTRACT_THREADS", "0")
-    ) or min(8, os.cpu_count() or 1)
+    threads = min(8, os.cpu_count() or 1)
     return _extract_rings_core(
         rule, options, comp_of_u, ax, ay, bx, by, fills_arr, 0,
         threads=threads,

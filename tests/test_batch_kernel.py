@@ -6,13 +6,14 @@ fixtures run as one batch per fill-rule group."""
 
 import math
 import random
+from pathlib import Path
 
 import numpy as np
 import pytest
 
 from ioverlay_spark.kernel.batch import overlay_batch
 from ioverlay_spark.kernel.overlay import build_graph
-from ioverlay_spark.kernel.fixtures import load_fixture, shapes_match_any
+from ioverlay_spark.kernel.fixtures import FIXTURE_DIR, load_fixture, shapes_match_any
 from ioverlay_spark.options import ALL_RULES, FillRule, OverlayOptions
 
 RULES = list(ALL_RULES)
@@ -97,6 +98,9 @@ def test_batch_result_independent_of_batch_composition():
             ]
 
 
+@pytest.mark.skipif(
+    not Path(FIXTURE_DIR).exists(), reason=f"fixture corpus {FIXTURE_DIR} not available"
+)
 def test_batch_passes_executed_golden_fixtures():
     """All reference-executed fixtures, grouped by fill rule, run as batches."""
     executed = list(range(144)) + [150, 151, 152]

@@ -151,7 +151,11 @@ def test_segtree_fills_match_dense():
     r03 sweep-subset trap must not apply to it)."""
     import numpy as np
 
-    from ioverlay_spark.kernel.fill import compute_fills, compute_fills_segtree
+    from ioverlay_spark.kernel.fill import (
+        compute_fills,
+        compute_fills_segtree,
+        compute_fills_windowed,
+    )
     from ioverlay_spark.kernel.segments import Segments, build_segments
     from ioverlay_spark.kernel.split import split_segments
     from ioverlay_spark.options import FillRule
@@ -187,6 +191,89 @@ def test_segtree_fills_match_dense():
                 compute_fills(sub, FillRule.NON_ZERO),
                 compute_fills_segtree(sub, FillRule.NON_ZERO),
             )
+
+    # the dispatcher's branches: grid-like x-strip subsets (few distinct ray
+    # x positions per strip), then a set whose true extent is >= 2^30, where
+    # the int64 gate routes to the sweep (whole set) or dense pass (subset)
+    def lines_net(n, a=20):
+        w, s = a // 2, a * n // 2
+        at = -s + w // 2 + a * np.arange(n)
+        subj = [np.array([[x, -s], [x + w, -s], [x + w, s], [x, s]]) for x in at]
+        clip = [np.array([[-s, y], [s, y], [s, y + w], [-s, y + w]]) for y in at]
+        return split_segments(
+            Segments.concat([build_segments(subj, True), build_segments(clip, False)])
+        )
+
+    net = lines_net(32)
+    X2 = net.ax + net.bx
+    edges = np.quantile(X2, np.linspace(0, 1, 9)[1:-1]).astype(np.int64)
+    strip = np.searchsorted(edges, X2, side="right")
+    lo_e = np.concatenate([[X2.min() - 1], edges])
+    hi_e = np.concatenate([edges, [X2.max() + 1]])
+    for k in range(len(lo_e)):
+        keep = np.flatnonzero(
+            ((2 * net.bx > lo_e[k]) & (2 * net.ax < hi_e[k])) | (strip == k)
+        )
+        sub = net.take(keep)
+        for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO):
+            dense = compute_fills(sub, fr)
+            assert np.array_equal(dense, compute_fills_segtree(sub, fr))
+            assert np.array_equal(
+                dense, compute_fills_windowed(sub, fr, allow_sweep=False, threads=1)
+            )
+    net = lines_net(8)
+    wide = Segments(
+        net.ax << 30, net.ay << 30, net.bx << 30, net.by << 30, net.subj, net.clip
+    )
+    for fr in FillRule:
+        dense = compute_fills(wide, fr)
+        for allow_sweep in (True, False):
+            assert np.array_equal(
+                dense, compute_fills_windowed(wide, fr, allow_sweep=allow_sweep)
+            )
+
+
+def test_split_vec_gate_is_pair_local(monkeypatch):
+    """split_segments' vectorized solver gate is the pair-local bound (every
+    segment's x/y extent < 2^30), not an absolute-coordinate cap: a small soup
+    translated to 2^40 or 2^59 - 2^20 splits to exactly the translated result
+    of the untranslated soup, with no python-int cross_pair call."""
+    import ioverlay_spark.kernel.split as sp
+    from ioverlay_spark.kernel.segments import Segments
+
+    calls = [0]
+    scalar = sp.cross_pair
+
+    def counted(*a):
+        calls[0] += 1
+        return scalar(*a)
+
+    monkeypatch.setattr(sp, "cross_pair", counted)
+    rng = np.random.default_rng(29)
+    for span in (50, 5_000, 1 << 20):
+        for _ in range(6):
+            mk = lambda: rng.integers(-span, span, (int(rng.integers(3, 13)), 2))
+            nring = int(rng.integers(2, 6))
+            soup = Segments.concat(
+                [
+                    build_segments([mk() for _ in range(nring)], True),
+                    build_segments([mk() for _ in range(nring)], False),
+                ]
+            )
+            base = split_segments(soup)
+            for t in (1 << 40, (1 << 59) - (1 << 20)):
+                moved = Segments(
+                    soup.ax + t, soup.ay + t, soup.bx + t, soup.by + t,
+                    soup.subj, soup.clip,
+                )
+                got = split_segments(moved)
+                for g, b in zip(
+                    (got.ax, got.ay, got.bx, got.by), (base.ax, base.ay, base.bx, base.by)
+                ):
+                    assert np.array_equal(g, b + t)
+                assert np.array_equal(got.subj, base.subj)
+                assert np.array_equal(got.clip, base.clip)
+    assert calls[0] == 0
 
 
 def test_sweep_fills_match_dense():

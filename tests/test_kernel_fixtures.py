@@ -7,15 +7,22 @@ overlay rules, comparing with a rotation-invariant, variant-accepting,
 order-canonicalizing comparator (iOverlay/tests/util.rs:8-60 analog).
 """
 
+from pathlib import Path
+
 import pytest
 
 from ioverlay_spark.kernel import build_graph
 from ioverlay_spark.kernel.fixtures import (
+    FIXTURE_DIR,
     canonical,
     load_fixture,
     shapes_match_any,
 )
 from ioverlay_spark.options import OverlayOptions
+
+pytestmark = pytest.mark.skipif(
+    not Path(FIXTURE_DIR).exists(), reason=f"fixture corpus {FIXTURE_DIR} not available"
+)
 
 EXECUTED = list(range(144)) + [150, 151, 152]
 

@@ -19,6 +19,10 @@ from ioverlay_spark.options import FillRule
 
 FIXTURE_DIR = "/root/reference/iOverlay/tests/string"
 
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(FIXTURE_DIR), reason=f"fixture corpus {FIXTURE_DIR} not available"
+)
+
 
 def load(i):
     with open(os.path.join(FIXTURE_DIR, f"test_{i}.json")) as f:
@@ -76,8 +80,10 @@ def paths_match_any(got, variants):
     return False
 
 
-INDICES = sorted(
-    int(f[5:-5]) for f in os.listdir(FIXTURE_DIR) if f.startswith("test_")
+INDICES = (
+    sorted(int(f[5:-5]) for f in os.listdir(FIXTURE_DIR) if f.startswith("test_"))
+    if os.path.isdir(FIXTURE_DIR)
+    else []
 )
 
 
