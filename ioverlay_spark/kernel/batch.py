@@ -27,14 +27,36 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
   fill (A10)    — _fills_batch: the midpoint ray-cast windowed by tile
   extract       — vectorized degree-2 walk over the whole batch; tiles with pinch
                   points replay the scalar trigger loop, and tiles neither can serve
-                  take the per-tile scalar walk
+                  take the per-tile scalar walk; every walked ring then takes one
+                  extract.validate_rings pass (A20) and the flat hole binding
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..options import DEFAULT_OPTIONS, FillRule, OverlayOptions, OverlayRule
+from ..options import (
+    DEFAULT_OPTIONS,
+    ContourDirection,
+    FillRule,
+    OverlayOptions,
+    OverlayRule,
+)
+from .extract import (
+    RingSet,
+    _LinkGraph,
+    bind_holes,
+    boundary_mask,
+    concat_rings,
+    pack_rings,
+    ring_area2,
+    ring_gather_index,
+    ring_starts,
+    rule_inside,
+    take_rings,
+    validate_rings,
+    walk_contours,
+)
 from .overlay import build_graph
 from .segments import Segments, build_segments
 from .split import split_segments
@@ -47,7 +69,6 @@ _COORD_CAP = 1 << 30  # beyond this, scalar path (object-int math) is required
 
 def _scalar_batch(jobs, rules, fill_rule, options) -> list[dict]:
     """Per-job scalar kernel: [{rule: (shapes, areas)}] for each job."""
-    from .extract import ring_area2
 
     out = []
     for subj, clip in jobs:
@@ -58,29 +79,6 @@ def _scalar_batch(jobs, rules, fill_rule, options) -> list[dict]:
             res[rule] = (shapes, [[int(ring_area2(r)) for r in s] for s in shapes])
         out.append(res)
     return out
-
-
-def _candidates_vec(segs: Segments) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized bbox-overlap candidate pairs (i < j). Precondition: sorted by a."""
-    n = len(segs)
-    if n < 2:
-        z = np.empty(0, dtype=np.int64)
-        return z, z
-    ax, bx = segs.ax, segs.bx
-    his = np.searchsorted(ax, bx, side="right")
-    i0 = np.arange(n, dtype=np.int64)
-    counts = np.maximum(his - i0 - 1, 0)
-    total = int(counts.sum())
-    if total == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z
-    i_rep = np.repeat(i0, counts)
-    cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-    j = np.arange(total, dtype=np.int64) - cum[i_rep] + i_rep + 1
-    ymin = np.minimum(segs.ay, segs.by)
-    ymax = np.maximum(segs.ay, segs.by)
-    m = (ymin[j] <= ymax[i_rep]) & (ymax[j] >= ymin[i_rep])
-    return i_rep[m], j[m]
 
 
 def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = False):
@@ -121,13 +119,6 @@ def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = Fa
         # line) — callers use this to skip the post-apply coincident merge
         return keep, coll
     return keep
-
-
-def _interacting(segs: Segments, i: np.ndarray, j: np.ndarray) -> np.ndarray:
-    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-    return interacting_mask(
-        ax[i], ay[i], bx[i], by[i], ax[j], ay[j], bx[j], by[j]
-    )
 
 
 def _fills_batch(segs: Segments, fill_rule: FillRule, tile_lo: np.ndarray) -> np.ndarray:
@@ -208,6 +199,7 @@ def _fills_batch(segs: Segments, fill_rule: FillRule, tile_lo: np.ndarray) -> np
 
 
 _EMPTY = "empty"
+_NO_RINGS = pack_rings([])
 
 
 def vectorized_ring_segments(ring_pts, ring_job, ring_subj, options=DEFAULT_OPTIONS):
@@ -415,12 +407,12 @@ def _sim_walk_tiles(
     dependent — next_link's rotation is the current ring's direction and both
     scans filter by visited — so it cannot be a precomputed permutation; but
     these tiles are tiny (a handful of rings each), the replay is plain python
-    over prefetched lists, and ring validation/areas still run vectorized in
-    _finalize_fast. Any unusual shape (dead end, over-cap ring) bails the tile
+    over prefetched lists, and ring validation still runs vectorized in
+    validate_rings. Any unusual shape (dead end, over-cap ring) bails the tile
     to the scalar path, which guarantees identical output.
 
-    Returns (slot, rank, hole, first_pts, lens, buf_x, buf_y) for the walked
-    rings, in TILED coordinates (caller converts per job), or None."""
+    Returns (slot, rank, hole, lens, x, y) for the walked rings, points in CSR
+    form and TILED coordinates (caller converts per job), or None."""
     cwo = bool(clockwise_output)
     m = len(lax)
     AX = lax.tolist()
@@ -507,8 +499,6 @@ def _sim_walk_tiles(
     o_rank: list[int] = []
     o_hole: list[bool] = []
     o_len: list[int] = []
-    fx: list[int] = []
-    fy: list[int] = []
     flat_x: list[int] = []
     flat_y: list[int] = []
     for ti, lo_t, hi_t in zip(tiles.tolist(), lo_all, hi_all):
@@ -523,11 +513,11 @@ def _sim_walk_tiles(
             hole_f = FTL[top]
             dflag = hole_f == cwo
             if dflag:
-                px, py = BX[top], BY[top]
+                rx, ry = [BX[top]], [BY[top]]
                 nd = AN[top]
                 last_nd = BN[top]
             else:
-                px, py = AX[top], AY[top]
+                rx, ry = [AX[top]], [AY[top]]
                 nd = BN[top]
                 last_nd = AN[top]
             VIS[top] = 1
@@ -536,8 +526,6 @@ def _sim_walk_tiles(
                 bail = True  # isolated degenerate pair
                 break
             lk = top
-            rx: list[int] = []
-            ry: list[int] = []
             guard = max_ring + 4
             ok = True
             while lk != last_link:
@@ -555,45 +543,29 @@ def _sim_walk_tiles(
                 an = AN[lk]
                 nd = BN[lk] if an == nd else an
                 VIS[lk] = 1
-            if not ok or len(rx) + 1 > max_ring:
+            if not ok or len(rx) > max_ring:
                 bail = True  # over-cap or pathological: whole tile -> scalar
                 break
             o_slot.append(ti)
             o_rank.append(rank_c)
             o_hole.append(hole_f)
-            o_len.append(len(rx) + 1)
-            fx.append(px)
-            fy.append(py)
+            o_len.append(len(rx))
             flat_x.extend(rx)
             flat_y.extend(ry)
             rank_c += 1
         if bail:
             tile_fast[ti] = False
             del o_slot[n0:], o_rank[n0:], o_hole[n0:], o_len[n0:]
-            del fx[n0:], fy[n0:], flat_x[f0:], flat_y[f0:]
-    k = len(o_slot)
-    if k == 0:
+            del flat_x[f0:], flat_y[f0:]
+    if not o_slot:
         return None
-    lens = np.asarray(o_len, dtype=np.int64)
-    w = int(lens.max())
-    bx = np.zeros((k, w), dtype=np.int64)
-    by = np.zeros((k, w), dtype=np.int64)
-    vx = np.asarray(flat_x, dtype=np.int64)
-    vy = np.asarray(flat_y, dtype=np.int64)
-    row = np.repeat(np.arange(k), lens - 1)
-    offs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens - 1)])
-    col = np.arange(len(vx)) - offs[row]
-    bx[row, col] = vx
-    by[row, col] = vy
-    first_pts = np.stack([np.asarray(fx, dtype=np.int64), np.asarray(fy, dtype=np.int64)], axis=1)
     return (
         np.asarray(o_slot, dtype=np.int64),
         np.asarray(o_rank, dtype=np.int64),
         np.asarray(o_hole, dtype=bool),
-        first_pts,
-        lens,
-        bx,
-        by,
+        np.asarray(o_len, dtype=np.int64),
+        np.asarray(flat_x, dtype=np.int64),
+        np.asarray(flat_y, dtype=np.int64),
     )
 
 
@@ -610,15 +582,15 @@ def _fast_contours_batch(
     tested); tiles with any higher-degree node, a self-referential node, or a
     ring longer than max_ring are reported for the scalar path.
 
-    Returns (tile_fast: bool per slot, contours: dict slot -> [(ring, hole)])."""
-    from .extract import rule_inside
+    Returns (tile_fast: bool per slot, the fast slots' rings as a RingSet in
+    per-job coordinates and scalar walk order: by slot, then trigger order)."""
 
     pos = np.flatnonzero(mask)
     m = len(pos)
     nslots = len(starts) - 1
     tile_fast = np.ones(nslots, dtype=bool)
     if m == 0:
-        return tile_fast, None
+        return tile_fast, _NO_RINGS
     lax, lay = segs.ax[pos], segs.ay[pos]
     lbx, lby = segs.bx[pos], segs.by[pos]
     lfill = fills[pos]
@@ -712,7 +684,7 @@ def _fast_contours_batch(
 
     if not tile_fast.any() or not tile_fast[link_slot].any():
         tile_fast[:] = False
-        return tile_fast, None
+        return tile_fast, _NO_RINGS
 
     # directed edges: id = 2*link + bit, bit=0 -> to_node = a_node, bit=1 ->
     # b_node. A directed edge's id IS its link's entry id at its to_node, so
@@ -751,16 +723,7 @@ def _fast_contours_batch(
         start_links = start_links[~sim_tile[link_slot[start_links]]]
 
     s = start_links
-    lens = ring_len[s]
-    # ring-buffer memory guard: (nrings x L_max) pairs; overly long rings
-    # beyond the budget take the scalar walk
-    cap = min(max_ring, max(256, 32_000_000 // max(len(s), 1)))
-    big = s[lens > cap]
-    if len(big):
-        tile_fast[np.unique(link_slot[big])] = False
-        fast_links = tile_fast[link_slot]
-        s = s[fast_links[s]]
-        lens = ring_len[s]
+    lens = ring_len[s].astype(np.int64)
     nrings = len(s)
 
     if nrings:
@@ -788,18 +751,17 @@ def _fast_contours_batch(
         hole = rule_inside(s_top, c_top, rule)
         d = hole == clockwise_output
         # first ring point + starting directed edge
-        first_x = np.where(d, lbx[top], lax[top])
-        first_y = np.where(d, lby[top], lay[top])
+        first_node = np.where(d, b_node[top], a_node[top])
         cur = np.where(d, 2 * top + 0, 2 * top + 1)  # toward a_node when d
         L_max = int(lens.max())
     else:
         hole = np.empty(0, dtype=bool)
-        first_x = first_y = np.empty(0, dtype=np.int64)
+        first_node = np.empty(0, dtype=idt)
         L_max = 1
 
     # node point lookup (any entry of the node); narrow mode stores coordinates
     # relative to (mnx, mny) in int32 — converted back to per-job int64 after
-    # the walk, so downstream (finalize) sees identical values
+    # the walk, so downstream (validation) sees identical values
     cdt = np.int32 if narrow else np.int64
     node_x = np.zeros(n_nodes, dtype=cdt)
     node_y = np.zeros(n_nodes, dtype=cdt)
@@ -810,26 +772,34 @@ def _fast_contours_batch(
         node_x[inv] = ends[:, 0]
         node_y[inv] = ends[:, 1]
 
-    buf_x = np.zeros((nrings, L_max), dtype=cdt)
-    buf_y = np.zeros((nrings, L_max), dtype=cdt)
-    if nrings == 0:
-        pass
-    elif L_max <= 64:
-        # short rings (the common batch shape): per-step column writes
-        for step in range(L_max - 1):
+    if L_max <= 64:
+        # short rings (the common batch shape): per-step column writes into a
+        # (rings x L_max) buffer, then one mask compress to CSR
+        buf_x = np.empty((nrings, L_max), dtype=cdt)
+        buf_y = np.empty((nrings, L_max), dtype=cdt)
+        buf_x[:, 0] = node_x[first_node]
+        buf_y[:, 0] = node_y[first_node]
+        for step in range(1, L_max):
             tn = to_node[cur]
             buf_x[:, step] = node_x[tn]
             buf_y[:, step] = node_y[tn]
             cur = perm[cur]
+        pm = np.arange(L_max) < lens[:, None]
+        x, y = buf_x[pm], buf_y[pm]
     else:
         # LONG rings (e.g. one 400k-point spiral ring): the per-step python
         # loop would run L_max iterations, so compute each directed edge's
         # RANK from its ring's start edge by pointer-doubling list ranking
-        # (O(m log m) vectorized) and scatter points into the buffers.
+        # (O(m log m) vectorized) and scatter points straight to CSR.
         # Ranks follow the INVERSE permutation from each edge back to its
         # ring's absorbing start edge; the reverse-direction orbit of a ring
         # shares its label but never reaches the absorbing edge, so its
         # ranks blow past the ring length and the <= L-2 filter drops it.
+        pos = ring_starts(lens)
+        x = np.empty(int(lens.sum()), dtype=cdt)
+        y = np.empty(len(x), dtype=cdt)
+        x[pos] = node_x[first_node]
+        y[pos] = node_y[first_node]
         m2 = 2 * m
         ids2 = np.arange(m2, dtype=idt)
         ip = np.empty(m2, dtype=idt)
@@ -847,24 +817,16 @@ def _fast_contours_batch(
         ok[ok] &= dist[ok] <= lens[rows_e[ok]] - 2
         ee = np.flatnonzero(ok)
         tn = to_node[ee]
-        buf_x[rows_e[ee], dist[ee]] = node_x[tn]
-        buf_y[rows_e[ee], dist[ee]] = node_y[tn]
+        at = pos[rows_e[ee]] + 1 + dist[ee]
+        x[at] = node_x[tn]
+        y[at] = node_y[tn]
 
-    # back to per-job coordinates (vectorized); emission order = scalar walk
-    # order (ascending start link within each slot)
-    r_slot = link_slot[s]
-    first_x = first_x - off[r_slot]
-    first_y = first_y + y0
-    if narrow:
-        # int32 relative -> int64 per-job (broadcast with an int64 operand
-        # forces the widening; padding beyond each ring's length is unused)
-        buf_x = buf_x + (mnx - off[r_slot])[:, None]
-        buf_y = np.add(buf_y, mny + y0, dtype=np.int64)
-    else:
-        buf_x = buf_x - off[r_slot][:, None]
-        buf_y = buf_y + np.int64(y0)
-    emit_rank = s.astype(np.int64)
-    lens = lens.astype(np.int64)
+    # back to per-job int64 coordinates; rings are in scalar walk order
+    # (ascending start link, so by slot too)
+    r_slot = link_slot[s].astype(np.int64)
+    x = np.repeat((mnx if narrow else 0) - off[r_slot], lens) + x
+    y = np.add(y, (mny if narrow else 0) + y0, dtype=np.int64)
+    rings = RingSet(r_slot, hole, lens, x, y)
 
     # ---- order-sensitive tiles: exact replay of the scalar trigger loop -----
     if (sim_tile & tile_fast).any():
@@ -876,138 +838,19 @@ def _fast_contours_batch(
             clockwise_output, max_ring,
         )
         if sim is not None:
-            s_slot, s_rank, s_hole, s_first, s_lens, s_bx, s_by = sim
-            k = len(s_slot)
-            if k:
-                Lm = max(L_max, int(s_lens.max()))
-                if Lm > L_max:
-                    pad = np.zeros((nrings, Lm), dtype=buf_x.dtype)
-                    pad[:, :L_max] = buf_x
-                    buf_x = pad
-                    pad = np.zeros((nrings, Lm), dtype=buf_y.dtype)
-                    pad[:, :L_max] = buf_y
-                    buf_y = pad
-                elif s_bx.shape[1] < Lm:
-                    pad = np.zeros((k, Lm), dtype=np.int64)
-                    pad[:, : s_bx.shape[1]] = s_bx
-                    s_bx = pad
-                    pad = np.zeros((k, Lm), dtype=np.int64)
-                    pad[:, : s_by.shape[1]] = s_by
-                    s_by = pad
-                s_bx = s_bx - off[s_slot][:, None]
-                s_by = s_by + np.int64(y0)
-                r_slot = np.concatenate([r_slot, s_slot])
-                hole = np.concatenate([hole, s_hole])
-                lens = np.concatenate([lens, s_lens])
-                first_x = np.concatenate([first_x, s_first[:, 0] - off[s_slot]])
-                first_y = np.concatenate([first_y, s_first[:, 1] + y0])
-                buf_x = np.concatenate([np.asarray(buf_x, dtype=np.int64), s_bx])
-                buf_y = np.concatenate([np.asarray(buf_y, dtype=np.int64), s_by])
-                emit_rank = np.concatenate([emit_rank, s_rank])
-
-    if len(r_slot) == 0:
-        return tile_fast, None
-    # emission order = scalar trigger order: ascending start link per slot
-    # (sim tiles recorded their replayed trigger rank)
-    order_r = np.lexsort((emit_rank, r_slot))
-    ring_data = {
-        "slot": r_slot[order_r],
-        "hole": hole[order_r],
-        "len": lens[order_r],
-        "first_x": first_x[order_r],
-        "first_y": first_y[order_r],
-        "buf_x": buf_x[order_r],
-        "buf_y": buf_y[order_r],
-        "fast_slots": np.flatnonzero(tile_fast),
-    }
-    return tile_fast, ring_data
-
-
-def _finalize_fast(ring_data, options) -> dict[int, tuple]:
-    """Vectorized validate + classify for the fast-walk rings of the slots
-    _finalize_fast_flat cannot serve (dirty rings, multi-hull hole binding):
-    {slot: (shapes, areas)}. Rings are grouped by length into regular (k, L)
-    blocks, duplicate/collinear-vertex detection and the shoelace area run as
-    array ops, and only DIRTY rings take the scalar simplify path. Output
-    equals extract_shapes(..., with_areas=True) over the same contours."""
-    from .extract import bind_holes, ring_area2, simplify_ring
-
-    empty = ([], [])
-    out: dict[int, tuple] = {int(sl): empty for sl in ring_data["fast_slots"]}
-    n = len(ring_data["slot"])
-    if n == 0:
-        return {sl: empty for sl in out}
-    hulls_by_slot: dict[int, list] = {}
-    holes_by_slot: dict[int, list] = {}
-    min_area2 = 2 * options.min_output_area
-    simplify = not options.preserve_output_collinear
-
-    lens = ring_data["len"]
-    for L in np.unique(lens).tolist():
-        sel = np.flatnonzero(lens == L)
-        k = len(sel)
-        block = np.empty((k, L, 2), dtype=np.int64)
-        block[:, 0, 0] = ring_data["first_x"][sel]
-        block[:, 0, 1] = ring_data["first_y"][sel]
-        if L > 1:
-            block[:, 1:, 0] = ring_data["buf_x"][sel, : L - 1]
-            block[:, 1:, 1] = ring_data["buf_y"][sel, : L - 1]
-        prv = np.roll(block, 1, axis=1)
-        nxt = np.roll(block, -1, axis=1)
-        if simplify:
-            dup = np.all(block == prv, axis=2).any(axis=1)
-            a = block - prv
-            b = nxt - block
-            cr = a[:, :, 0] * b[:, :, 1] - a[:, :, 1] * b[:, :, 0]
-            dirty = dup | (cr == 0).any(axis=1) | (L < 3)
-        else:
-            dirty = np.zeros(k, dtype=bool)
-        # int64 shoelace guard: route the whole L-group to the exact python-int
-        # path when term sums could overflow (scalar ring_area2 is object-int)
-        mx = int(np.abs(block).max(initial=0))
-        if L * mx * mx >= (1 << 62):
-            dirty[:] = True
-        # shoelace (valid for clean rings; dirty recomputed after simplify)
-        x = block[:, :, 0]
-        y = block[:, :, 1]
-        a2 = (x * np.roll(y, -1, axis=1)).sum(axis=1) - (
-            np.roll(x, -1, axis=1) * y
-        ).sum(axis=1)
-
-        slots = ring_data["slot"][sel]
-        holes_f = ring_data["hole"][sel]
-        for t in range(k):
-            ri = int(sel[t])
-            if dirty[t]:
-                ring = list(map(tuple, block[t].tolist()))
-                if simplify:
-                    ring = simplify_ring(ring)
-                if len(ring) < 3:
-                    continue
-                ra2 = ring_area2(ring)
-                arr = np.array(ring, dtype=np.int64)
-            else:
-                ra2 = int(a2[t])
-                arr = block[t]
-            if ra2 == 0 or (min_area2 > 0 and abs(ra2) < min_area2):
-                continue
-            sl = int(slots[t])
-            tgt = holes_by_slot if holes_f[t] else hulls_by_slot
-            tgt.setdefault(sl, []).append((ri, arr, int(ra2)))
-
-    for sl in out:
-        hulls = sorted(hulls_by_slot.get(sl, []), key=lambda t: t[0])
-        holes = sorted(holes_by_slot.get(sl, []), key=lambda t: t[0])
-        if not holes:
-            out[sl] = ([[arr] for _, arr, _ in hulls], [[a2] for _, _, a2 in hulls])
-            continue
-        amap = {id(arr): a2 for _, arr, a2 in hulls + holes}
-        shapes = bind_holes([h for _, h, _ in hulls], [h for _, h, _ in holes])
-        out[sl] = (
-            [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes],
-            [[amap[id(r)] for r in shape] for shape in shapes],
-        )
-    return out
+            s_slot, s_rank, s_hole, s_lens, s_x, s_y = sim
+            rings = RingSet(
+                np.concatenate([r_slot, s_slot]),
+                np.concatenate([hole, s_hole]),
+                np.concatenate([lens, s_lens]),
+                np.concatenate([x, s_x - np.repeat(off[s_slot], s_lens)]),
+                np.concatenate([y, s_y + y0]),
+            )
+            # scalar trigger order: ascending start link per slot (sim tiles
+            # recorded their replayed trigger rank)
+            emit_rank = np.concatenate([s.astype(np.int64), s_rank])
+            rings = take_rings(rings, np.lexsort((emit_rank, rings.slot)))
+    return tile_fast, rings
 
 
 # ---- FLAT output tail ------------------------------------------------------
@@ -1025,18 +868,6 @@ _FLAT_EMPTY = (
     np.empty((0, 2), dtype=np.int64),
     np.empty(0, dtype=np.int64),
 )
-
-
-def _flat_gather_rings(pts_src, src_pos, lens):
-    """Gather rings (src_pos[i] start, lens[i] points each) out of pts_src into
-    one contiguous (sum(lens), 2) buffer, in the given ring order."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    out_start = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=out_start[1:])
-    idx = np.repeat(src_pos - out_start, lens) + np.arange(total, dtype=np.int64)
-    return pts_src[idx]
 
 
 def _shapes_to_flat(slot_shapes):
@@ -1065,175 +896,70 @@ def _shapes_to_flat(slot_shapes):
     )
 
 
-def _merge_flat(parts):
-    """Concatenate flat tuples and re-sort rings by (job, shape, contour)."""
-    parts = [p for p in parts if len(p[0])]
-    if not parts:
-        return _FLAT_EMPTY
-    if len(parts) == 1:
-        return parts[0]
-    slot = np.concatenate([p[0] for p in parts])
-    sid = np.concatenate([p[1] for p in parts])
-    cidx = np.concatenate([p[2] for p in parts])
-    lens = np.concatenate([p[3] for p in parts])
-    a2 = np.concatenate([p[5] for p in parts])
-    pts = np.concatenate([p[4] for p in parts])
-    # ring start offsets into the concatenated pts, pre-sort
-    src_pos = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=src_pos[1:])
-    order = np.lexsort((cidx, sid, slot))
-    return (
-        slot[order],
-        sid[order],
-        cidx[order],
-        lens[order],
-        _flat_gather_rings(pts, src_pos[order], lens[order]),
-        a2[order],
-    )
+def _bind_flat(rings, a2, nj, fast_slot):
+    """Hole binding of validated rings straight to the FLAT tuple (slot,
+    shape_id, contour_idx, lens, pts, area2) sorted by (slot, shape, contour).
 
-
-def _finalize_fast_flat(ring_data, options):
-    """Vectorized validate + classify straight to FLAT arrays.
-
-    Returns (flat, fb_slots): flat = (slot, shape_id, contour_idx, lens, pts,
-    area2) sorted by (slot, shape, contour), covering every fast slot this path
-    can serve exactly; fb_slots = fast slots it cannot (a dirty ring needing the
-    scalar simplify, or hole binding beyond the single-hull case) — the caller
-    must finalize those via _finalize_fast and merge. Output rings for served
-    slots equal _finalize_fast's exactly: hulls in emission order = shapes;
-    single-hull slots bind every hole to the hull in emission order (bind_holes
-    with one hull resolves every hole to it — anchors of walk-emitted holes lie
-    strictly inside the lone hull on degree-2 tiles)."""
-    slot = ring_data["slot"]
+    Each slot's hulls, in walk order, are its shapes. Where a slot has holes
+    and at most one hull, and the fast walk served it, the binding is
+    vectorized: every hole goes to the lone hull (bind_holes with one hull
+    resolves every hole to it — walk-emitted holes lie strictly inside it)
+    and holes without a hull are dropped, as bind_holes drops them. Slots with
+    holes and several hulls, or walked by the scalar walk, run bind_holes."""
+    slot, hole, lens, x, y = rings
     n = len(slot)
     if n == 0:
-        return _FLAT_EMPTY, np.empty(0, dtype=np.int64)
-    hole = ring_data["hole"]
-    lens = ring_data["len"]
-    min_area2 = 2 * options.min_output_area
-    simplify = not options.preserve_output_collinear
-
-    a2_all = np.empty(n, dtype=np.int64)
-    dirty_all = np.zeros(n, dtype=bool)
-    pos = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=pos[1:])
-    pts_src = np.empty((int(lens.sum()), 2), dtype=np.int64)
-    for L in np.unique(lens).tolist():
-        sel = np.flatnonzero(lens == L)
-        k = len(sel)
-        block = np.empty((k, L, 2), dtype=np.int64)
-        block[:, 0, 0] = ring_data["first_x"][sel]
-        block[:, 0, 1] = ring_data["first_y"][sel]
-        if L > 1:
-            block[:, 1:, 0] = ring_data["buf_x"][sel, : L - 1]
-            block[:, 1:, 1] = ring_data["buf_y"][sel, : L - 1]
-        if simplify:
-            prv = np.roll(block, 1, axis=1)
-            nxt = np.roll(block, -1, axis=1)
-            dup = np.all(block == prv, axis=2).any(axis=1)
-            a = block - prv
-            b = nxt - block
-            cr = a[:, :, 0] * b[:, :, 1] - a[:, :, 1] * b[:, :, 0]
-            dirty = dup | (cr == 0).any(axis=1) | (L < 3)
-        else:
-            dirty = np.zeros(k, dtype=bool)
-        mx = int(np.abs(block).max(initial=0))
-        if L * mx * mx >= (1 << 62):
-            dirty[:] = True
-        x = block[:, :, 0]
-        y = block[:, :, 1]
-        a2 = (x * np.roll(y, -1, axis=1)).sum(axis=1) - (
-            np.roll(x, -1, axis=1) * y
-        ).sum(axis=1)
-        a2_all[sel] = a2
-        dirty_all[sel] = dirty
-        idx = (pos[sel][:, None] + np.arange(L, dtype=np.int64)).ravel()
-        pts_src[idx] = block.reshape(-1, 2)
-
-    keep = ~dirty_all & (a2_all != 0)
-    if min_area2 > 0:
-        keep &= np.abs(a2_all) >= min_area2
-
-    # dense slot index (slot is sorted ascending)
-    sb = np.empty(n, dtype=bool)
-    sb[0] = True
-    np.not_equal(slot[1:], slot[:-1], out=sb[1:])
-    sidx = np.cumsum(sb) - 1
-    ns = int(sidx[-1]) + 1
-    slot_of = slot[sb]
-    has_dirty = np.bincount(sidx[dirty_all], minlength=ns) > 0
-    hulls_kept = np.bincount(sidx[keep & ~hole], minlength=ns)
-    holes_kept = np.bincount(sidx[keep & hole], minlength=ns)
-    fb_mask = has_dirty | ((holes_kept > 0) & (hulls_kept > 1))
-    fb_slots = slot_of[fb_mask]
-    # orphan holes (every hull of the slot dropped): bind_holes drops them
-    keep &= ~(hole & (hulls_kept[sidx] == 0))
-    emit = keep & ~fb_mask[sidx]
-    e = np.flatnonzero(emit)
-    if len(e) == 0:
-        return _FLAT_EMPTY, fb_slots
-    # (slot, hole, emission rank) order: hulls first — matches _finalize_fast's
-    # per-slot [hulls by rank, then bound holes by rank]
-    eo = e[np.lexsort((e, hole[e], sidx[e]))]
-    sidx_eo = sidx[eo]
-    gb = np.empty(len(eo), dtype=bool)
-    gb[0] = True
-    np.not_equal(sidx_eo[1:], sidx_eo[:-1], out=gb[1:])
-    gstart = np.flatnonzero(gb)
-    gid = np.cumsum(gb) - 1
-    rank_in_slot = np.arange(len(eo), dtype=np.int64) - gstart[gid]
-    hole_eo = hole[eo]
-    hk = hulls_kept[sidx_eo]
-    sid = np.where(hole_eo, 0, rank_in_slot)
-    cidx = np.where(hole_eo, rank_in_slot - hk + 1, 0)
-    lens_eo = lens[eo].astype(np.int64, copy=False)
-    flat = (
-        slot[eo],
-        sid.astype(np.int64, copy=False),
-        cidx.astype(np.int64, copy=False),
-        lens_eo,
-        _flat_gather_rings(pts_src, pos[eo], lens_eo),
-        a2_all[eo],
-    )
-    return flat, fb_slots
+        return _FLAT_EMPTY
+    hulls = np.bincount(slot[~hole], minlength=nj)
+    holes = np.bincount(slot[hole], minlength=nj)
+    # rank within the slot in (hulls, then holes; walk order) order
+    order = np.lexsort((hole, slot))
+    so = slot[order]
+    rank = np.empty(n, dtype=np.int64)
+    rank[order] = np.arange(n) - np.searchsorted(so, so)
+    sid = np.where(hole, 0, rank)
+    cidx = np.where(hole, rank - hulls[slot] + 1, 0)
+    keep = ~hole | (hulls[slot] > 0)
+    pos = ring_starts(lens)
+    for sl in np.flatnonzero((holes > 0) & ((hulls > 1) | ~fast_slot)).tolist():
+        lo, hi = np.searchsorted(so, [sl, sl + 1])
+        members = order[lo:hi].tolist()
+        ring = {}
+        for i in members:
+            sl_i = slice(pos[i], pos[i] + lens[i])
+            ring[i] = list(zip(x[sl_i].tolist(), y[sl_i].tolist()))
+        ids = {id(r): i for i, r in ring.items()}
+        shapes = bind_holes(
+            [ring[i] for i in members if not hole[i]], [ring[i] for i in members if hole[i]]
+        )
+        keep[members] = False
+        for k, shape in enumerate(shapes):
+            for c, r in enumerate(shape):
+                i = ids[id(r)]
+                sid[i], cidx[i], keep[i] = k, c, True
+    e = np.flatnonzero(keep)
+    o = e[np.lexsort((cidx[e], sid[e], slot[e]))]
+    pi = ring_gather_index(pos[o], lens[o])
+    return slot[o], sid[o], cidx[o], lens[o], np.stack([x[pi], y[pi]], axis=1), a2[o]
 
 
 def _overlay_tail_flat(t, nj, rules, options):
     """Extraction over split+filled tiled parts -> {rule: flat tuple} sorted by
     (job, shape, contour). Per rule, the vectorized degree-2 walk serves every
-    tile it can (_finalize_fast_flat, with _finalize_fast for its fallback
-    slots); the remaining tiles take the scalar walk."""
+    tile it can and the scalar walk the rest; all walked rings then take one
+    validate_rings pass and _bind_flat."""
     if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
     segs, all_fills, starts, off, y0 = t
-    from ..options import ContourDirection
-    from .extract import boundary_mask
-
     clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
     rule_masks = {rule: boundary_mask(all_fills, rule) for rule in rules}
-    per_rule: dict = {}
+    walked: dict = {}
     fast_mask: dict = {}
     for rule in rules:
-        tile_fast, ring_data = _fast_contours_batch(
+        fast_mask[rule], rings = _fast_contours_batch(
             segs, rule_masks[rule], all_fills, starts, rule, clockwise_output, off, y0
         )
-        fast_mask[rule] = tile_fast
-        if ring_data is None:
-            per_rule[rule] = [_FLAT_EMPTY]
-            continue
-        flat, fb_slots = _finalize_fast_flat(ring_data, options)
-        parts = [flat]
-        if len(fb_slots):
-            sel = np.isin(ring_data["slot"], fb_slots)
-            sub = {
-                k: (fb_slots if k == "fast_slots" else v[sel])
-                for k, v in ring_data.items()
-            }
-            per_slot = _finalize_fast(sub, options)
-            parts.append(
-                _shapes_to_flat([(int(sl), per_slot[int(sl)]) for sl in fb_slots])
-            )
-        per_rule[rule] = parts
+        walked[rule] = [rings]
 
     any_slow = np.zeros(nj, dtype=bool)
     for rule in rules:
@@ -1244,13 +970,11 @@ def _overlay_tail_flat(t, nj, rules, options):
         # job-local endpoint lists for EVERY link, adjusted batch-wide in numpy;
         # per tile these are list slices feeding ONE _LinkGraph shared by every
         # rule's walk (dead links pre-visited per rule)
-        from .extract import _LinkGraph, finalize_contours, walk_contours
-
         link_off = np.repeat(off, np.diff(starts))
         all_pa = list(zip((segs.ax - link_off).tolist(), (segs.ay + y0).tolist()))
         all_pb = list(zip((segs.bx - link_off).tolist(), (segs.by + y0).tolist()))
         all_fl = all_fills.tolist()
-        slow_acc: dict = {rule: [] for rule in rules}
+        slow_acc: dict = {rule: ([], []) for rule in rules}
         for slot in slow_slots.tolist():
             lo, hi = int(starts[slot]), int(starts[slot + 1])
             g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
@@ -1260,13 +984,16 @@ def _overlay_tail_flat(t, nj, rules, options):
                 contours = walk_contours(
                     None, None, rule, clockwise_output, rule_masks[rule][lo:hi], g
                 )
-                slow_acc[rule].append(
-                    (slot, finalize_contours(contours, options, with_areas=True))
-                )
+                slow_acc[rule][0].extend(contours)
+                slow_acc[rule][1].extend([slot] * len(contours))
         for rule in rules:
-            if slow_acc[rule]:
-                per_rule[rule].append(_shapes_to_flat(slow_acc[rule]))
-    return {rule: _merge_flat(per_rule[rule]) for rule in rules}
+            walked[rule].append(pack_rings(*slow_acc[rule]))
+    return {
+        rule: _bind_flat(
+            *validate_rings(concat_rings(walked[rule]), options), nj, fast_mask[rule]
+        )
+        for rule in rules
+    }
 
 
 @gc_paused_fn
@@ -1286,9 +1013,10 @@ def overlay_batch_flat_out(
     {rule: (job, shape_id, contour_idx, lens, pts, area2)} where pts is the
     (sum(lens), 2) int64 concatenation of every output ring in (job, shape_id,
     contour_idx) order. Each job's rings and areas equal the per-job scalar
-    kernel's (build_graph + extract_shapes(..., with_areas=True)); jobs need
-    not be pre-sorted in ring_job. Falls back to the scalar kernel per job
-    when coordinates are large enough to need python-int math batch-wide."""
+    kernel's (build_graph + extract_shapes(..., with_areas=True)): both check
+    their walked rings with extract.validate_rings. Jobs need not be
+    pre-sorted in ring_job. Falls back to the scalar kernel per job when
+    coordinates are large enough to need python-int math batch-wide."""
     rules = [OverlayRule(r) for r in rules]
     if nj == 0:
         return {rule: _FLAT_EMPTY for rule in rules}

@@ -18,6 +18,8 @@ Faithful re-derivation of the reference's extraction semantics:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from ..options import ContourDirection, OverlayOptions, OverlayRule
@@ -297,55 +299,6 @@ def ring_area2(pts) -> int:
     return s
 
 
-def _ring_scan(pts) -> tuple[int, bool]:
-    """One fused pass: (shoelace*2, no-degenerate-vertices). Duplicate and
-    collinear drops never change the shoelace sum, so when the ring is clean
-    (the common case) this replaces a simplify_ring pass AND ring_area2; when
-    it is not, the area still stands for the simplified ring."""
-    n = len(pts)
-    s = 0
-    clean = True
-    p0 = pts[n - 2]
-    p1 = pts[n - 1]
-    for i in range(n):
-        p2 = pts[i]
-        s += p1[0] * p2[1] - p2[0] * p1[1]
-        if clean and (
-            p1 == p0
-            or (p1[0] - p0[0]) * (p2[1] - p1[1])
-            == (p1[1] - p0[1]) * (p2[0] - p1[0])
-        ):
-            clean = False
-        p0 = p1
-        p1 = p2
-    return s, clean
-
-
-def _ring_scan_np(arr: np.ndarray) -> tuple[int, bool]:
-    """Vectorized _ring_scan for long ndarray rings — exact: shoelace terms are
-    int64 (|term| <= 2*mx^2 < 2^61 under the coordinate guard) and the running
-    sum, which CAN overflow int64 at 400k terms, is split into hi/lo 32-bit
-    halves summed separately (each bounded by n*2^32) and recombined as python
-    ints. Same vertex checks as the scalar scan (dup + collinear cross)."""
-    x = arr[:, 0]
-    y = arr[:, 1]
-    mx = int(np.abs(arr).max(initial=0))
-    if 4 * mx * mx >= (1 << 62):
-        return _ring_scan([tuple(p) for p in arr.tolist()])
-    x1 = np.roll(x, -1)
-    y1 = np.roll(y, -1)
-    terms = x * y1 - x1 * y
-    hi = terms >> 32
-    lo = terms - (hi << 32)
-    s = (int(hi.sum()) << 32) + int(lo.sum())
-    x0 = np.roll(x, 1)
-    y0 = np.roll(y, 1)
-    if ((x == x0) & (y == y0)).any():
-        return s, False
-    cr = (x - x0) * (y1 - y) - (y - y0) * (x1 - x)
-    return s, not bool((cr == 0).any())
-
-
 def simplify_ring(pts: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """Drop repeated and collinear vertices (reference contour validation,
     iOverlay/src/core/extract.rs:312-333)."""
@@ -469,130 +422,202 @@ def bind_holes(hulls: list, holes: list) -> list[list]:
     return shapes
 
 
+class RingSet(NamedTuple):
+    """Walked rings in CSR form: one flat x/y point array holding every ring's
+    points contiguously in walk order (ring i starts at sum(lens[:i]); every
+    ring has at least one point), plus each ring's slot (job or component id)
+    and the walk's hole flag. The vectorized degree-2 walk
+    (batch._fast_contours_batch) emits it directly, the scalar walk through
+    pack_rings, and validate_rings checks it for every extract stage."""
+
+    slot: np.ndarray  # int64 per ring
+    hole: np.ndarray  # bool per ring
+    lens: np.ndarray  # int64 per ring
+    x: np.ndarray  # int64 per point
+    y: np.ndarray  # int64 per point
+
+
+def ring_starts(lens: np.ndarray) -> np.ndarray:
+    """Each ring's first point index in a CSR point array."""
+    pos = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=pos[1:])
+    return pos
+
+
+def ring_gather_index(pos: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Point indices of the rings starting at pos[i] with lens[i] points,
+    concatenated in the given ring order."""
+    return np.repeat(pos - ring_starts(lens), lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
+
+
+def take_rings(rings: RingSet, idx: np.ndarray) -> RingSet:
+    """The rings at idx, in that order."""
+    lens = rings.lens[idx]
+    pi = ring_gather_index(ring_starts(rings.lens)[idx], lens)
+    return RingSet(rings.slot[idx], rings.hole[idx], lens, rings.x[pi], rings.y[pi])
+
+
+def concat_rings(parts: list[RingSet]) -> RingSet:
+    return RingSet(*(np.concatenate(col) for col in zip(*parts)))
+
+
+def pack_rings(contours: list, slots=None) -> RingSet:
+    """walk_contours' [(ring_points, is_hole)] as a RingSet; slots gives each
+    contour's slot (default 0)."""
+    n = len(contours)
+    pts = np.array(
+        [p for ring, _ in contours for p in ring], dtype=np.int64
+    ).reshape(-1, 2)
+    return RingSet(
+        np.zeros(n, dtype=np.int64) if slots is None else np.asarray(slots, dtype=np.int64),
+        np.fromiter((h for _, h in contours), dtype=bool, count=n),
+        np.fromiter((len(r) for r, _ in contours), dtype=np.int64, count=n),
+        pts[:, 0],
+        pts[:, 1],
+    )
+
+
+def _validate_ring(ring, options: OverlayOptions):
+    """Scalar reference validation of one ring (python ints, any coordinate
+    width): (validated ring, area2), or None when the ring is dropped."""
+    if not options.preserve_output_collinear:
+        ring = simplify_ring(list(map(tuple, ring)))
+    if len(ring) < 3:
+        return None
+    a2 = ring_area2(ring)
+    if a2 == 0 or (options.min_output_area > 0 and abs(a2) < 2 * options.min_output_area):
+        return None
+    return ring, a2
+
+
+def validate_rings(rings: RingSet, options: OverlayOptions) -> tuple[RingSet, np.ndarray]:
+    """Reference contour validation (iOverlay/src/core/extract.rs:312-333) of a
+    whole RingSet in one segmented numpy pass: rings under 3 points, with zero
+    area or under options.min_output_area are dropped, and (unless
+    preserve_output_collinear) rings with a duplicate or collinear vertex are
+    simplified. Returns the kept rings in input order, simplified ones
+    substituted, and their signed shoelace area2 (CCW positive).
+
+    Exactness: while a ring's |coords| are < 2^30 (4*mx^2 < 2^62), every
+    shoelace term and collinearity cross is exact in int64, and the per-ring
+    term sum is taken in 32-bit hi/lo halves whose sums cannot overflow at any
+    ring length; the high word then tells exactly whether area2 fits int64.
+    Dirty rings, rings past that coordinate bound and rings whose area2 does
+    not fit take the scalar _validate_ring (python ints). Dropping a duplicate
+    or collinear vertex never changes the shoelace sum."""
+    lens = rings.lens
+    n = len(lens)
+    if n == 0:
+        return rings, np.empty(0, dtype=np.int64)
+    x, y = rings.x, rings.y
+    pos = ring_starts(lens)
+    last = pos + lens - 1
+    nxt = np.arange(1, len(x) + 1, dtype=np.int64)
+    nxt[last] = pos
+    x1, y1 = x[nxt], y[nxt]
+    terms = x * y1 - x1 * y
+    hi = terms >> 32
+    lo = np.add.reduceat(terms - (hi << 32), pos)
+    hi = np.add.reduceat(hi, pos) + (lo >> 32)
+    a2 = (hi << 32) + (lo & 0xFFFFFFFF)
+    mx = np.maximum.reduceat(np.maximum(np.abs(x), np.abs(y)), pos)
+    scalar = (mx >= 1 << 30) | (hi < -(1 << 31)) | (hi >= 1 << 31)
+    if not options.preserve_output_collinear:
+        prv = np.arange(-1, len(x) - 1, dtype=np.int64)
+        prv[pos] = last
+        cr = (x - x[prv]) * (y1 - y) - (y - y[prv]) * (x1 - x)
+        bad = np.flatnonzero(cr == 0)  # duplicates included: they cross to 0
+        scalar[np.searchsorted(pos, bad, side="right") - 1] = True
+    long_enough = lens >= 3
+    keep = long_enough & ~scalar & (a2 != 0)
+    if options.min_output_area > 0:
+        keep &= np.abs(a2) >= 2 * options.min_output_area
+
+    redo = {}
+    for i in np.flatnonzero(scalar & long_enough).tolist():
+        lo_i, hi_i = int(pos[i]), int(pos[i] + lens[i])
+        v = _validate_ring(
+            list(zip(x[lo_i:hi_i].tolist(), y[lo_i:hi_i].tolist())), options
+        )
+        if v is not None:
+            redo[i] = v
+    src, new_lens = pos, lens
+    if redo:
+        # simplified rings go after the input points; the gather below keeps
+        # input order
+        if any(not -(1 << 63) <= ra2 < 1 << 63 for _, ra2 in redo.values()):
+            a2 = a2.astype(object)
+        src, new_lens = pos.copy(), lens.copy()
+        xs, ys = [x], [y]
+        base = len(x)
+        for i, (ring, ra2) in redo.items():
+            keep[i] = True
+            a2[i] = ra2
+            src[i], new_lens[i] = base, len(ring)
+            base += len(ring)
+            xs.append(np.array([p[0] for p in ring], dtype=np.int64))
+            ys.append(np.array([p[1] for p in ring], dtype=np.int64))
+        x, y = np.concatenate(xs), np.concatenate(ys)
+    idx = np.flatnonzero(keep)
+    if len(idx) == n and not redo:
+        return rings, a2
+    pi = ring_gather_index(src[idx], new_lens[idx])
+    return RingSet(rings.slot[idx], rings.hole[idx], new_lens[idx], x[pi], y[pi]), a2[idx]
+
+
 def extract_shapes(
     segs: Segments,
     fills: np.ndarray,
     rule: OverlayRule,
     options: OverlayOptions,
-    boundary: np.ndarray | None = None,
-    contours: list | None = None,
-    graph: "_LinkGraph | None" = None,
     with_areas: bool = False,
 ) -> list[list[np.ndarray]]:
-    """Full extraction: boundary filter -> reference walk -> validate -> hole binding.
+    """Full extraction: boundary filter -> reference walk -> validate_rings ->
+    hole binding.
 
-    Returns shapes: list of [hull, hole, hole, ...] rings as (n,2) int64 arrays
-    (with with_areas=True, a (shapes, areas) pair — see finalize_contours).
-    `contours` may carry precomputed [(ring_points, is_hole)] (the batch kernel's
-    vectorized degree-2 walk) — must equal walk_contours' output exactly."""
+    Returns shapes: list of [hull, hole, hole, ...] rings as (n,2) int64 arrays.
+    with_areas=True returns a (shapes, areas) pair instead, areas holding each
+    ring's signed shoelace area2 in the shapes structure — the validation pass
+    computes it anyway, so consumers that emit area columns take it here
+    instead of re-walking every ring."""
     clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
-    if contours is None and graph is None and len(segs) >= 4096:
+    rings = None
+    if len(segs) >= 4096:
         # big single-job graphs (e.g. a spiral's 400k-link ring): try the
-        # vectorized degree-2 walk before the per-link python loop; pinch
-        # nodes / degenerate incidences return None and fall through
-        contours = _fast_walk_contours(segs, fills, rule, clockwise_output, boundary)
-    if contours is None:
-        contours = walk_contours(segs, fills, rule, clockwise_output, boundary, graph)
-    return finalize_contours(contours, options, with_areas=with_areas)
+        # vectorized degree-2 walk before the per-link python loop; graphs it
+        # cannot serve return None and fall through
+        rings = _fast_walk_contours(segs, fills, rule, clockwise_output)
+    if rings is None:
+        rings = pack_rings(walk_contours(segs, fills, rule, clockwise_output))
+    rings, a2 = validate_rings(rings, options)
+    pts = np.stack([rings.x, rings.y], axis=1)
+    ends = np.cumsum(rings.lens).tolist()
+    arrs = [pts[e - ln:e] for e, ln in zip(ends, rings.lens.tolist())]
+    hole = rings.hole.tolist()
+    shapes = bind_holes(
+        [r for r, h in zip(arrs, hole) if not h], [r for r, h in zip(arrs, hole) if h]
+    )
+    if not with_areas:
+        return shapes
+    amap = {id(r): a for r, a in zip(arrs, a2.tolist())}
+    return shapes, [[amap[id(r)] for r in shape] for shape in shapes]
 
 
-def _fast_walk_contours(segs, fills, rule, clockwise_output, boundary):
-    """walk_contours-identical [(ring, hole)] via the batch kernel's vectorized
-    degree-2 walk over ONE whole segment set (single slot, unbounded ring
-    length — long rings take its list-ranking branch), or None when the graph
-    has nodes the fast walk cannot serve (the caller then runs the scalar
-    walk)."""
+def _fast_walk_contours(segs, fills, rule, clockwise_output) -> RingSet | None:
+    """walk_contours' rings as a RingSet (slot 0, identical rings in identical
+    order) via the batch kernel's vectorized degree-2 walk over ONE whole
+    segment set (unbounded ring length — long rings take its list-ranking
+    branch), or None when the graph has nodes the fast walk cannot serve (the
+    caller then runs the scalar walk)."""
     from .batch import _fast_contours_batch
 
-    mask = boundary_mask(fills, rule) if boundary is None else boundary
-    if not mask.any():
-        return []
-    starts = np.array([0, len(segs)], dtype=np.int64)
-    tile_fast, ring_data = _fast_contours_batch(
-        segs, mask, fills, starts, rule, clockwise_output,
-        np.zeros(1, dtype=np.int64), 0, max_ring=1 << 62,
+    tile_fast, rings = _fast_contours_batch(
+        segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)], dtype=np.int64),
+        rule, clockwise_output, np.zeros(1, dtype=np.int64), 0, max_ring=1 << 62,
     )
-    if not tile_fast[0]:
-        return None
-    if ring_data is None:
-        return []
-    out = []
-    for i in range(len(ring_data["slot"])):
-        L = int(ring_data["len"][i])
-        if L >= 4096:
-            # long rings stay numpy end-to-end: finalize_contours scans them
-            # vectorized (_ring_scan_np) and emits the array without a copy —
-            # the list-of-tuples round trip cost ~0.3 s on a 400k-point ring
-            arr = np.empty((L, 2), dtype=np.int64)
-            arr[0, 0] = ring_data["first_x"][i]
-            arr[0, 1] = ring_data["first_y"][i]
-            arr[1:, 0] = ring_data["buf_x"][i, : L - 1]
-            arr[1:, 1] = ring_data["buf_y"][i, : L - 1]
-            out.append((arr, bool(ring_data["hole"][i])))
-            continue
-        ring = [(int(ring_data["first_x"][i]), int(ring_data["first_y"][i]))]
-        ring.extend(
-            zip(
-                ring_data["buf_x"][i, : L - 1].tolist(),
-                ring_data["buf_y"][i, : L - 1].tolist(),
-            )
-        )
-        out.append((ring, bool(ring_data["hole"][i])))
-    return out
-
-
-def finalize_contours(
-    contours: list, options: OverlayOptions, with_areas: bool = False
-) -> list[list[np.ndarray]]:
-    """Validate walked contours (dedupe/collinear, min-area) and bind holes —
-    the back half of extract_shapes, callable directly when the caller already
-    ran the walk (the batch kernel walks with a shared per-tile graph).
-
-    with_areas=True additionally returns the per-ring signed shoelace area2
-    aligned with the shapes structure — the validation scan computes it anyway
-    (dup/collinear drops never change the shoelace sum), so consumers that
-    emit area columns should take it here instead of re-walking every ring."""
-    hulls: list[list[tuple[int, int]]] = []
-    holes: list[list[tuple[int, int]]] = []
-    min_area2 = 2 * options.min_output_area
-    amap: dict[int, int] = {}
-    for ring, hole in contours:
-        if len(ring) < 3:
-            continue
-        is_np = isinstance(ring, np.ndarray)
-        if not options.preserve_output_collinear:
-            a2, ring_clean = _ring_scan_np(ring) if is_np else _ring_scan(ring)
-            if not ring_clean:
-                ring = simplify_ring(
-                    [tuple(p) for p in ring.tolist()] if is_np else list(ring)
-                )
-                if len(ring) < 3:
-                    continue
-        elif is_np:
-            a2 = _ring_scan_np(ring)[0]
-        else:
-            a2 = ring_area2(ring)
-        if a2 == 0 or (min_area2 > 0 and abs(a2) < min_area2):
-            continue
-        if with_areas:
-            amap[id(ring)] = int(a2)
-        if hole:
-            holes.append(ring)
-        else:
-            hulls.append(ring)
-
-    shapes = bind_holes(hulls, holes)
-    out = [
-        [
-            ring if isinstance(ring, np.ndarray) else np.array(ring, dtype=np.int64)
-            for ring in shape
-        ]
-        for shape in shapes
-    ]
-    if not with_areas:
-        return out
-    areas = [[amap[id(ring)] for ring in shape] for shape in shapes]
-    return out, areas
+    return rings if tile_fast[0] else None
 
 
 class _StartPath:
@@ -631,17 +656,6 @@ def _find_contour(g: "_LinkGraph", start: _StartPath, clockwise: bool,
         ring.append(g.node_pt[node])
         node = g.other(link, node)
         visited[link] = state
-    return ring
-
-
-def _validate_ring(ring, options: OverlayOptions):
-    if not options.preserve_output_collinear:
-        ring = simplify_ring(list(map(tuple, ring)))
-    if len(ring) < 3:
-        return None
-    a2 = ring_area2(ring)
-    if a2 == 0 or (options.min_output_area > 0 and abs(a2) < 2 * options.min_output_area):
-        return None
     return ring
 
 
@@ -693,7 +707,7 @@ def _collect_shape(g, start: _StartPath, clockwise: bool, visited,
 
     ring = _find_contour(g, start, not clockwise, _HULL_V, contour_visited)
     outer = _validate_ring(ring, options)
-    shape = [outer] if outer is not None else None
+    shape = [outer[0]] if outer is not None else None
 
     if len(ring) < original_len:
         # the tour self-touches: leftover edges are holes of this shape
@@ -710,7 +724,7 @@ def _collect_shape(g, start: _StartPath, clockwise: bool, visited,
                 if hr is None:
                     li += 1
                     continue
-                shape.append(hr)
+                shape.append(hr[0])
     return shape
 
 
@@ -772,7 +786,7 @@ def extract_shapes_ogc(
             if vr is None:
                 li += 1
                 continue
-            holes.append(vr)
+            holes.append(vr[0])
 
     if holes:
         bound = bind_holes([s[0] for s in shapes], holes)

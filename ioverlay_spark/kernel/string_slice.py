@@ -151,8 +151,9 @@ def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
     identical schedule and solver to the boolean pipeline
     (iOverlay/src/split/solver.rs, snap_radius.rs), with the string merge/invert
     algebra. Vectorized candidates + exact solver below the coordinate cap."""
-    from .batch import _candidates_vec, _interacting
+    from .batch import interacting_mask
     from .cross_vec import cross_pairs_batch
+    from .split import _candidate_pairs
 
     segs = sort_and_merge_string(segs)
     exp = 0
@@ -166,10 +167,9 @@ def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
             int(np.abs(segs.ax).max()), int(np.abs(segs.ay).max()),
             int(np.abs(segs.bx).max()), int(np.abs(segs.by).max()),
         ) >= _COORD_CAP
+        pairs = _candidate_pairs(segs, threads=1)
         if wide:
-            from .split import _candidate_pairs
-
-            for i, j in _candidate_pairs(segs, threads=1):
+            for i, j in pairs:
                 pm, rnd = cross_pair(
                     (int(segs.ax[i]), int(segs.ay[i]), int(segs.bx[i]), int(segs.by[i])),
                     (int(segs.ax[j]), int(segs.ay[j]), int(segs.bx[j]), int(segs.by[j])),
@@ -179,10 +179,12 @@ def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
                 for which, x, y in pm:
                     marks.append((int(i) if which == 0 else int(j), x, y))
         else:
-            ci, cj = _candidates_vec(segs)
-            if len(ci):
-                keep = _interacting(segs, ci, cj)
-                ci, cj = ci[keep], cj[keep]
+            ci, cj = pairs[:, 0], pairs[:, 1]
+            ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
+            keep = interacting_mask(
+                ax[ci], ay[ci], bx[ci], by[ci], ax[cj], ay[cj], bx[cj], by[cj]
+            )
+            ci, cj = ci[keep], cj[keep]
             if len(ci):
                 pid, which, mx, my, rnd = cross_pairs_batch(
                     segs.ax[ci], segs.ay[ci], segs.bx[ci], segs.by[ci],

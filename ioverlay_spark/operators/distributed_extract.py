@@ -234,9 +234,10 @@ def _extract_kernel(rule: OverlayRule, options: OverlayOptions):
     salting bounds the group count while each component is still walked alone).
 
     Arrow-native (applyInArrow): input columns land zero-copy in numpy, and the
-    rings go back as pa.ListArray built from the walk's FLAT buffers — the
-    per-ring .tolist() materialization this replaces was over half the kernel's
-    wall-clock at 262k rings (lines_net audit, BENCH.md round 4)."""
+    rings go back as pa.ListArray built straight from the validated CSR ring
+    set (_extract_rings_core) — the per-ring .tolist() materialization this
+    replaces was over half the kernel's wall-clock at 262k rings (lines_net
+    audit, BENCH.md round 4)."""
 
     def run(tbl: pa.Table) -> pa.Table:
         # globally-unique ring ids without arithmetic on component ids (packed
@@ -274,304 +275,129 @@ def _extract_rings_core(
     salt: int,
     threads: int = 1,
 ) -> pa.Table:
-    """Shared walk + Arrow emission over (component-labeled) boundary segments.
+    """Shared walk + Arrow emission over (component-labeled) boundary segments:
+    walk every component, validate_rings, take each kept ring's lexmin
+    anchor, emit Arrow.
 
     threads > 1 splits the components into contiguous chunks walked on a
     thread pool — exact: components never share an endpoint, so every
     per-component computation of the batch walk is unchanged under chunking
-    (ring ids differ only in assignment order, which nothing consumes).
-    Used by the FUSED single-task extract, where one python task owns the
-    whole boundary set while the rest of the executor sits idle; the salted
-    multi-task kernel keeps threads=1."""
+    (ring ids differ only in assignment order, which nothing consumes: a ring
+    id is an opaque key for hole binding and the shape id). Used by the FUSED
+    single-task extract, where one python task owns the whole boundary set
+    while the rest of the executor sits idle; the salted multi-task kernel
+    keeps threads=1."""
     from types import SimpleNamespace
 
     from ..kernel.batch import _fast_contours_batch
     from ..kernel.extract import (
         _LinkGraph,
         boundary_mask,
-        ring_area2,
-        simplify_ring,
+        concat_rings,
+        pack_rings,
+        ring_starts,
+        validate_rings,
         walk_contours,
     )
 
     clockwise = options.output_direction == ContourDirection.CLOCKWISE
-    min_area2 = 2 * options.min_output_area
-    simplify = not options.preserve_output_collinear
-    if True:
-        # ONE lexsort over the whole salt group + flat per-component list
-        # slices (the batch kernel's shape): a pandas groupby with per-
-        # component numpy gathers cost ~68us per 4-edge component on lines_net
-        order = np.lexsort((byv, bxv, ayv, axv, comp_arr))
-        comp_arr = comp_arr[order]
-        axv, ayv, bxv, byv = axv[order], ayv[order], bxv[order], byv[order]
-        fills_arr = fills_arr[order]
-        bmask = boundary_mask(fills_arr, rule)
-        starts = np.flatnonzero(
-            np.concatenate([[True], comp_arr[1:] != comp_arr[:-1]])
+    # ONE lexsort over the whole salt group + flat per-component list slices
+    # (the batch kernel's shape): a pandas groupby with per-component numpy
+    # gathers cost ~68us per 4-edge component on lines_net
+    order = np.lexsort((byv, bxv, ayv, axv, comp_arr))
+    comp_arr = comp_arr[order]
+    axv, ayv, bxv, byv = axv[order], ayv[order], bxv[order], byv[order]
+    fills_arr = fills_arr[order]
+    bmask = boundary_mask(fills_arr, rule)
+    starts = np.flatnonzero(np.concatenate([[True], comp_arr[1:] != comp_arr[:-1]]))
+    bounds = np.concatenate([starts, [len(comp_arr)]])
+    ncomp = len(starts)
+    comps = comp_arr[starts]
+
+    def _chunk_rings(c0: int, c1: int):
+        """Validated rings (slot = component index) + area2 of components
+        [c0, c1)."""
+        lo_r, hi_r = int(bounds[c0]), int(bounds[c1])
+        c_ax, c_ay = axv[lo_r:hi_r], ayv[lo_r:hi_r]
+        c_bx, c_by = bxv[lo_r:hi_r], byv[lo_r:hi_r]
+        c_fills, c_bmask = fills_arr[lo_r:hi_r], bmask[lo_r:hi_r]
+        c_bounds = bounds[c0 : c1 + 1] - lo_r
+        # VECTORIZED degree-2 walk via the batch kernel's _fast_contours_batch
+        # with slot = component: components never share an endpoint (they are
+        # connectivity classes over exact endpoints), so the "tiles never
+        # share points" invariant holds with zero per-slot offsets.
+        # Components it cannot serve (pinch nodes, rings > cap) take the
+        # scalar walk — bit-identical rings either way (the batch kernel's
+        # differential guarantee).
+        comp_fast, rings = _fast_contours_batch(
+            SimpleNamespace(ax=c_ax, ay=c_ay, bx=c_bx, by=c_by),
+            c_bmask, c_fills, c_bounds, rule, clockwise,
+            np.zeros(c1 - c0, dtype=np.int64), 0,
         )
-        bounds = np.concatenate([starts, [len(comp_arr)]])
-        ncomp = len(starts)
-        comps = comp_arr[starts]
-
-        # vectorized length-class blocks accumulate FLAT numpy buffers (ring
-        # values concatenated, per-ring lengths alongside) — pa.ListArray is
-        # assembled from them at the end without ever materializing python
-        # point lists. The rare scalar-path rings (pinch components, overflow
-        # guards) still collect python lists; they are appended at assembly.
-        blk_comp: list = []
-        blk_hole: list = []
-        blk_a2: list = []
-        blk_ax: list = []
-        blk_ay: list = []
-        blk_x: list = []
-        blk_y: list = []
-        blk_len: list = []
-        out_comp: list = []
-        out_hole: list = []
-        out_ptsx: list = []
-        out_ptsy: list = []
-        out_a2: list = []
-        out_ax: list = []
-        out_ay: list = []
-
-        def _chunk_work(c0: int, c1: int) -> tuple:
-            lo_r = int(bounds[c0])
-            hi_r = int(bounds[c1])
-            sl = slice(lo_r, hi_r)
-            c_axv, c_ayv = axv[sl], ayv[sl]
-            c_bxv, c_byv = bxv[sl], byv[sl]
-            c_fills = fills_arr[sl]
-            c_bmask = bmask[sl]
-            c_bounds = bounds[c0 : c1 + 1] - lo_r
-            c_comps = comps[c0:c1]
-            # VECTORIZED degree-2 walk over the chunk via the batch kernel's
-            # _fast_contours_batch with slot = component: components never
-            # share an endpoint (they are connectivity classes over exact
-            # endpoints), so the "tiles never share points" invariant holds
-            # with zero per-slot offsets. Components it cannot serve (pinch
-            # nodes, rings > cap) take the scalar walk below — bit-identical
-            # rings either way (the batch kernel's differential guarantee).
-            comp_fast, ring_data = _fast_contours_batch(
-                SimpleNamespace(ax=c_axv, ay=c_ayv, bx=c_bxv, by=c_byv),
-                c_bmask, c_fills, c_bounds, rule, clockwise,
-                np.zeros(c1 - c0, dtype=np.int64), 0,
-            )
-            return _chunk_blocks(
-                comp_fast, ring_data, c_comps, c_bounds,
-                c_axv, c_ayv, c_bxv, c_byv, c_fills, c_bmask,
-            )
-
-        def _chunk_blocks(
-            comp_fast, ring_data, comps, bounds,
-            axv, ayv, bxv, byv, fills_arr, bmask,
-        ):
-          blk_comp: list = []
-          blk_hole: list = []
-          blk_a2: list = []
-          blk_ax: list = []
-          blk_ay: list = []
-          blk_x: list = []
-          blk_y: list = []
-          blk_len: list = []
-          out_comp: list = []
-          out_hole: list = []
-          out_ptsx: list = []
-          out_ptsy: list = []
-          out_a2: list = []
-          out_ax: list = []
-          out_ay: list = []
-
-          def emit_scalar_ring(comp, ring, hole):
-            if simplify:
-                ring = simplify_ring(list(ring))
-            if len(ring) < 3:
-                return
-            a2 = ring_area2(ring)
-            if a2 == 0 or (min_area2 > 0 and abs(a2) < min_area2):
-                return
-            k = min(range(len(ring)), key=lambda t: ring[t])
-            out_comp.append(comp)
-            out_hole.append(bool(hole))
-            out_ptsx.append([p[0] for p in ring])
-            out_ptsy.append([p[1] for p in ring])
-            out_a2.append(a2)
-            out_ax.append(ring[k][0])
-            out_ay.append(ring[k][1])
-
-          if ring_data is not None:
-            # vectorized validate per ring-length block (the _finalize_fast
-            # shape, emitting raw rings + anchors instead of bound shapes)
-            r_slot = ring_data["slot"]
-            r_hole = ring_data["hole"]
-            r_len = ring_data["len"]
-            comp_of_ring = comps[r_slot]
-            for L in np.unique(r_len).tolist():
-                if L < 3:
-                    # sub-triangle rings are dropped unconditionally (simplify
-                    # cannot grow a ring), matching the scalar len<3 skip
-                    continue
-                sel = np.flatnonzero(r_len == L)
-                k = len(sel)
-                block = np.empty((k, L, 2), dtype=np.int64)
-                block[:, 0, 0] = ring_data["first_x"][sel]
-                block[:, 0, 1] = ring_data["first_y"][sel]
-                if L > 1:
-                    block[:, 1:, 0] = ring_data["buf_x"][sel, : L - 1]
-                    block[:, 1:, 1] = ring_data["buf_y"][sel, : L - 1]
-                prv = np.roll(block, 1, axis=1)
-                if simplify:
-                    nxt = np.roll(block, -1, axis=1)
-                    dup = np.all(block == prv, axis=2).any(axis=1)
-                    da = block - prv
-                    db = nxt - block
-                    cr = da[:, :, 0] * db[:, :, 1] - da[:, :, 1] * db[:, :, 0]
-                    dirty = dup | (cr == 0).any(axis=1) | (L < 3)
-                else:
-                    dirty = np.zeros(k, dtype=bool)
-                mx = int(np.abs(block).max(initial=0))
-                # int64 guards: shoelace term sums (L*mx^2) AND the anchor
-                # key product (<= 4*mx^2) route to the exact scalar path
-                if max(L, 4) * mx * mx >= (1 << 62):
-                    dirty[:] = True
-                x = block[:, :, 0]
-                y = block[:, :, 1]
-                a2v = (x * np.roll(y, -1, axis=1)).sum(axis=1) - (
-                    np.roll(x, -1, axis=1) * y
-                ).sum(axis=1)
-                # lexicographic-min anchor per clean ring, vectorized
-                kx = x - x.min(axis=1, keepdims=True)
-                ky = y - y.min(axis=1, keepdims=True)
-                am = (kx * (int(ky.max(initial=0)) + 1) + ky).argmin(axis=1)
-                rowsel = np.arange(k)
-                anch_x = x[rowsel, am]
-                anch_y = y[rowsel, am]
-                keep = ~dirty & (a2v != 0)
-                if min_area2 > 0:
-                    keep &= np.abs(a2v) >= min_area2
-                ki = np.flatnonzero(keep)
-                if len(ki):
-                    blk_comp.append(comp_of_ring[sel[ki]])
-                    blk_hole.append(np.asarray(r_hole[sel[ki]], dtype=bool))
-                    blk_a2.append(a2v[ki])
-                    blk_ax.append(anch_x[ki])
-                    blk_ay.append(anch_y[ki])
-                    blk_x.append(x[ki].ravel())
-                    blk_y.append(y[ki].ravel())
-                    blk_len.append(np.full(len(ki), L, dtype=np.int64))
-                for t in np.flatnonzero(dirty).tolist():
-                    emit_scalar_ring(
-                        int(comp_of_ring[sel[t]]),
-                        list(map(tuple, block[t].tolist())),
-                        bool(r_hole[sel[t]]),
-                    )
-
-          slow = np.flatnonzero(~comp_fast)
-          if len(slow):
-            all_pa = list(zip(axv.tolist(), ayv.tolist()))
-            all_pb = list(zip(bxv.tolist(), byv.tolist()))
-            all_fl = fills_arr.tolist()
-            comps_l = comps.tolist()
-            for ci in slow.tolist():
-                lo, hi = int(bounds[ci]), int(bounds[ci + 1])
-                comp = int(comps_l[ci])
+        parts = [rings]
+        slow = np.flatnonzero(~comp_fast).tolist()
+        if slow:
+            all_pa = list(zip(c_ax.tolist(), c_ay.tolist()))
+            all_pb = list(zip(c_bx.tolist(), c_by.tolist()))
+            all_fl = c_fills.tolist()
+            contours, slots = [], []
+            for ci in slow:
+                lo, hi = int(c_bounds[ci]), int(c_bounds[ci + 1])
                 g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
-                contours = walk_contours(None, None, rule, clockwise, bmask[lo:hi], g)
-                for ring, hole in contours:
-                    emit_scalar_ring(comp, ring, hole)
+                walked = walk_contours(None, None, rule, clockwise, c_bmask[lo:hi], g)
+                contours.extend(walked)
+                slots.extend([ci] * len(walked))
+            parts.append(pack_rings(contours, slots))
+        rings, a2 = validate_rings(concat_rings(parts), options)
+        return rings._replace(slot=rings.slot + c0), a2
 
-          return (
-              blk_comp, blk_hole, blk_a2, blk_ax, blk_ay, blk_x, blk_y,
-              blk_len, out_comp, out_hole, out_ptsx, out_ptsy, out_a2,
-              out_ax, out_ay,
-          )
-
-        k = max(1, min(int(threads), ncomp))
-        if k <= 1 or len(comp_arr) < 200_000:
-            results = [_chunk_work(0, ncomp)]
-        else:
-            # equal-ROW chunk boundaries snapped to component starts
-            cuts = np.searchsorted(
-                bounds, np.linspace(0, len(comp_arr), k + 1).astype(np.int64)
-            )
-            cuts = np.unique(np.clip(cuts, 0, ncomp))
-            if cuts[0] != 0:
-                cuts = np.concatenate([[0], cuts])
-            if cuts[-1] != ncomp:
-                cuts = np.concatenate([cuts, [ncomp]])
-            spans = list(zip(cuts[:-1].tolist(), cuts[1:].tolist()))
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(len(spans)) as ex:
-                results = list(ex.map(lambda se: _chunk_work(*se), spans))
-        for res in results:
-            (c_bc, c_bh, c_ba, c_bax, c_bay, c_bx, c_by, c_bl,
-             c_oc, c_oh, c_ox, c_oy, c_oa, c_oax, c_oay) = res
-            blk_comp.extend(c_bc)
-            blk_hole.extend(c_bh)
-            blk_a2.extend(c_ba)
-            blk_ax.extend(c_bax)
-            blk_ay.extend(c_bay)
-            blk_x.extend(c_bx)
-            blk_y.extend(c_by)
-            blk_len.extend(c_bl)
-            out_comp.extend(c_oc)
-            out_hole.extend(c_oh)
-            out_ptsx.extend(c_ox)
-            out_ptsy.extend(c_oy)
-            out_a2.extend(c_oa)
-            out_ax.extend(c_oax)
-            out_ay.extend(c_oay)
-
-        # --- Arrow assembly from flat buffers ---
-        def cat(chunks, dtype):
-            return (
-                np.concatenate(chunks).astype(dtype, copy=False)
-                if chunks
-                else np.empty(0, dtype)
-            )
-
-        comp_out = cat(blk_comp, np.int64)
-        hole_out = cat(blk_hole, bool)
-        a2_out = cat(blk_a2, np.int64)
-        ax_out = cat(blk_ax, np.int64)
-        ay_out = cat(blk_ay, np.int64)
-        lens = cat(blk_len, np.int64)
-        x_vals = cat(blk_x, np.int64)
-        y_vals = cat(blk_y, np.int64)
-        if out_comp:  # scalar-path rings (rare)
-            comp_out = np.concatenate([comp_out, np.array(out_comp, np.int64)])
-            hole_out = np.concatenate([hole_out, np.array(out_hole, bool)])
-            a2_out = np.concatenate([a2_out, np.array(out_a2, np.int64)])
-            ax_out = np.concatenate([ax_out, np.array(out_ax, np.int64)])
-            ay_out = np.concatenate([ay_out, np.array(out_ay, np.int64)])
-            lens = np.concatenate(
-                [lens, np.array([len(p) for p in out_ptsx], np.int64)]
-            )
-            x_vals = np.concatenate(
-                [x_vals] + [np.asarray(p, np.int64) for p in out_ptsx]
-            )
-            y_vals = np.concatenate(
-                [y_vals] + [np.asarray(p, np.int64) for p in out_ptsy]
-            )
-        nring = len(comp_out)
-        if nring == 0:
-            return _RINGS_ARROW_SCHEMA.empty_table()
-        ring_ids = salt * (1 << 40) + np.arange(1, nring + 1, dtype=np.int64)
-        offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
-        off_arr = pa.array(offsets)
-        return pa.Table.from_arrays(
-            [
-                pa.array(comp_out),
-                pa.array(ring_ids),
-                pa.array(hole_out),
-                pa.ListArray.from_arrays(off_arr, pa.array(x_vals)),
-                pa.ListArray.from_arrays(off_arr, pa.array(y_vals)),
-                pa.array(a2_out),
-                pa.array(ax_out),
-                pa.array(ay_out),
-            ],
-            schema=_RINGS_ARROW_SCHEMA,
+    k = max(1, min(int(threads), ncomp))
+    if k <= 1 or len(comp_arr) < 200_000:
+        results = [_chunk_rings(0, ncomp)]
+    else:
+        # equal-ROW chunk boundaries snapped to component starts
+        cuts = np.searchsorted(
+            bounds, np.linspace(0, len(comp_arr), k + 1).astype(np.int64)
         )
+        cuts = np.unique(np.clip(cuts, 0, ncomp))
+        if cuts[0] != 0:
+            cuts = np.concatenate([[0], cuts])
+        if cuts[-1] != ncomp:
+            cuts = np.concatenate([cuts, [ncomp]])
+        spans = list(zip(cuts[:-1].tolist(), cuts[1:].tolist()))
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(len(spans)) as ex:
+            results = list(ex.map(lambda se: _chunk_rings(*se), spans))
+    rings = concat_rings([r for r, _ in results])
+    nring = len(rings.lens)
+    if nring == 0:
+        return _RINGS_ARROW_SCHEMA.empty_table()
+    a2 = np.concatenate([a for _, a in results]).astype(np.int64)
+
+    # lexicographic-min anchor per ring: min x, then min y among the points
+    # at that x
+    pos = ring_starts(rings.lens)
+    x, y = rings.x, rings.y
+    anchor_x = np.minimum.reduceat(x, pos)
+    at_min = x == np.repeat(anchor_x, rings.lens)
+    anchor_y = np.minimum.reduceat(np.where(at_min, y, np.iinfo(np.int64).max), pos)
+
+    ring_ids = salt * (1 << 40) + np.arange(1, nring + 1, dtype=np.int64)
+    off_arr = pa.array(np.append(pos, len(x)).astype(np.int32))
+    return pa.Table.from_arrays(
+        [
+            pa.array(comps[rings.slot]),
+            pa.array(ring_ids),
+            pa.array(rings.hole),
+            pa.ListArray.from_arrays(off_arr, pa.array(x)),
+            pa.ListArray.from_arrays(off_arr, pa.array(y)),
+            pa.array(a2),
+            pa.array(anchor_x),
+            pa.array(anchor_y),
+        ],
+        schema=_RINGS_ARROW_SCHEMA,
+    )
 
 
 _NODE_CAP = 1 << 30  # same bound as kernel.batch._COORD_CAP: packing is exact below it
@@ -589,7 +415,7 @@ def _fused_extract_arrays(
     """Single-task CC + walk FUSION for boundary sets up to the fused cap: one
     task receives the whole boundary set, labels components in-kernel (numpy
     union-find, the same _cc_label_arrays the one-task CC path uses) and walks
-    rings immediately via the shared _extract_rings_core.
+    and validates rings immediately via the shared _extract_rings_core.
 
     Vs the broadcast-CC path this removes, per overlay: the edge shuffle to the
     CC task, the node->component broadcast build, the map-side hash join and

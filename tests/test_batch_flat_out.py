@@ -123,9 +123,9 @@ def test_flat_out_random_stars(fill_rule):
 
 
 def test_flat_out_holes_multihull_degenerate():
-    """Multi-hull-with-holes slots force _finalize_fast_flat's fb_slots path;
-    rings past the vectorized walk's 256-point cap force the scalar walk; both
-    must merge back in exact order."""
+    """Multi-hull-with-holes slots force the batch tail's per-slot bind_holes
+    binding; rings past the vectorized walk's 256-point cap force the scalar
+    walk; both must merge back in exact order."""
     rnd = random.Random(41)
     jobs = []
     for _ in range(25):

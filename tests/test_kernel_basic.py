@@ -398,6 +398,15 @@ def test_apply_marks_matches_scalar_reference():
         assert canon(_apply_marks(s, marks)) == canon(_apply_marks_ref(s, marks))
 
 
+def _ring_set_contours(rings):
+    """A RingSet as walk_contours-style [(ring_points, is_hole)]."""
+    out, o = [], 0
+    for n, hole in zip(rings.lens.tolist(), rings.hole.tolist()):
+        out.append((list(zip(rings.x[o:o + n].tolist(), rings.y[o:o + n].tolist())), hole))
+        o += n
+    return out
+
+
 def test_fast_walk_contours_matches_scalar():
     """extract_shapes' vectorized degree-2 fast walk (incl. the list-ranking
     long-ring branch, rings > 64 points) must be contour-for-contour identical
@@ -411,14 +420,13 @@ def test_fast_walk_contours_matches_scalar():
     from ioverlay_spark.options import FillRule, OverlayRule
 
     def compare(segs, fills, rule):
-        fast = _fast_walk_contours(segs, fills, rule, False, None)
+        fast = _fast_walk_contours(segs, fills, rule, False)
         walk = walk_contours(segs, fills, rule, False)
         if fast is None:
             return None
-        assert len(fast) == len(walk)
-        for a, b in zip(fast, walk):
-            assert [tuple(p) for p in a[0]] == [tuple(p) for p in b[0]]
-            assert a[1] == b[1]
+        assert _ring_set_contours(fast) == [
+            ([tuple(p) for p in ring], hole) for ring, hole in walk
+        ]
         return True
 
     # one long ring (> 64 points: exercises the list-ranking branch)
@@ -479,13 +487,12 @@ def test_fast_walk_pinch_dense_matches_scalar():
     from ioverlay_spark.options import FillRule, OverlayRule
 
     def compare(segs, fills, rule):
-        fast = _fast_walk_contours(segs, fills, rule, False, None)
+        fast = _fast_walk_contours(segs, fills, rule, False)
         walk = walk_contours(segs, fills, rule, False)
         assert fast is not None  # sim path must serve pinch graphs
-        assert len(fast) == len(walk)
-        for a, b in zip(fast, walk):
-            assert [tuple(p) for p in a[0]] == [tuple(p) for p in b[0]]
-            assert a[1] == b[1]
+        assert _ring_set_contours(fast) == [
+            ([tuple(p) for p in ring], hole) for ring, hole in walk
+        ]
 
     rng = np.random.default_rng(20260818)
     for trial in range(60):
