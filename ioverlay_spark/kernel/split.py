@@ -10,11 +10,14 @@ Semantics match the reference split stage:
 - repeat rounds while any intersection required rounding
   (iOverlay/src/split/solver_list.rs:27-64).
 
-Candidate-pair generation is vectorized (x-sweep + bbox masks). Exact math runs
-through the vectorized int64 solver (cross_vec.cross_pairs_batch) whenever every
-segment's x/y extent is under 2^30, at any absolute position; beyond that it
-falls back to the python-int scalar `cross_pair` per candidate pair. At Spark
-scale this same kernel runs per grid cell inside applyInArrow (SURVEY.md A6).
+One round's mark finding is `find_marks`: vectorized candidate-pair
+generation (x-sweep + bbox masks), then exact math through the vectorized
+int64 solver (cross_vec.cross_pairs_batch) whenever every segment's x/y
+extent is under 2^30, at any absolute position; beyond that the python-int
+scalar `cross_pair` per candidate pair. The list split (split_segments), the
+string split (string_slice.split_segments_string) and the Spark cell kernel
+(operators/distributed._find_marks_kernel, one grid cell per applyInArrow
+group, SURVEY.md A6) all call it.
 """
 
 from __future__ import annotations
@@ -156,6 +159,56 @@ def cross_pair(ti, tj, radius):
             if not _on_line(tax, tay, tbx, tby, qx, qy):
                 return [(0, qx, qy)], True
     return [(0, px, py), (1, px, py)], True
+
+
+_SOLVE_BLOCK = 1 << 21  # candidate pairs per exact-solve block (bounds peak memory)
+
+
+def find_marks(segs: Segments, radius: int, threads: int | None = None):
+    """One split round's marks: every bbox-overlapping pair (_candidate_pairs)
+    classified and intersected exactly with snap radius `radius` (cross_pair).
+    Precondition: segs sorted by (a, b). Returns flat arrays (seg_idx, mx, my,
+    is_round, col_ovl): mark k splits segment seg_idx[k] at (mx[k], my[k]);
+    col_ovl flags marks from collinear-overlap pairs, the only pairs whose
+    sub-segments can coincide after the apply.
+
+    The one int64 gate: with every segment's x/y extent < 2^30 (measured in
+    uint64, exact for any int64 endpoints), each difference between the
+    endpoints of a bbox-overlapping pair is < 2^31 at any absolute position,
+    so the vectorized solver (cross_vec.cross_pairs_batch) is exact. Past the
+    gate the python-int cross_pair solves every pair and col_ovl is True."""
+    pairs = _candidate_pairs(segs, threads)
+    ci, cj = pairs[:, 0], pairs[:, 1]
+
+    def extent(a, b):
+        lo, hi = np.minimum(a, b).view(np.uint64), np.maximum(a, b).view(np.uint64)
+        return int((hi - lo).max(initial=0))
+
+    if max(extent(segs.ax, segs.bx), extent(segs.ay, segs.by)) < (1 << 30):
+        from .batch import interacting_mask
+        from .cross_vec import cross_pairs_batch
+
+        def ends(idx):
+            return segs.ax[idx], segs.ay[idx], segs.bx[idx], segs.by[idx]
+
+        out = []
+        for s in range(0, len(pairs), _SOLVE_BLOCK):
+            bi, bj = ci[s : s + _SOLVE_BLOCK], cj[s : s + _SOLVE_BLOCK]
+            pid, which, mx, my, rnd = cross_pairs_batch(*ends(bi), *ends(bj), radius)
+            i, j = bi[pid], bj[pid]
+            _, col = interacting_mask(*ends(i), *ends(j), with_collinear=True)
+            out.append((np.where(which == 0, i, j), mx, my, rnd, col))
+        if out:
+            return tuple(np.concatenate(c) for c in zip(*out))
+        z = np.empty(0, dtype=np.int64)
+        return z, z, z, z.astype(bool), z.astype(bool)
+    rows = np.stack([segs.ax, segs.ay, segs.bx, segs.by], axis=1).tolist()
+    marks = []  # (seg_idx, x, y, is_round)
+    for i, j in pairs.tolist():
+        pm, rnd = cross_pair(tuple(rows[i]), tuple(rows[j]), radius)
+        marks += [(i if which == 0 else j, x, y, rnd) for which, x, y in pm]
+    m = np.array(marks, dtype=np.int64).reshape(-1, 4)
+    return m[:, 0], m[:, 1], m[:, 2], m[:, 3].astype(bool), np.ones(len(m), dtype=bool)
 
 
 def _candidate_pairs_grid(
@@ -589,57 +642,15 @@ def split_segments(
     defaults (iOverlay/src/core/solver.rs:47-51, iOverlay/src/split/snap_radius.rs).
     `threads` goes to the pair enumeration (see _candidate_pairs)."""
     segs = sort_and_merge(segs)
-    # the vectorized exact solver (cross_vec) needs every product of two
-    # pair-local differences to fit int64: candidate pairs overlap in their
-    # bboxes, so with every segment's x/y extent < 2^30 each difference is
-    # < 2^31 at any absolute position. Splitting only shortens segments, so
-    # check the bound once (extents in uint64: exact for any int64 endpoints)
-    def _extent(a, b):
-        lo, hi = np.minimum(a, b).view(np.uint64), np.maximum(a, b).view(np.uint64)
-        return int((hi - lo).max())
-
-    vec_ok = len(segs) == 0 or max(
-        _extent(segs.ax, segs.bx), _extent(segs.ay, segs.by)
-    ) < (1 << 30)
     exp = start
     for _ in range(max_rounds):
         if len(segs) < 2:
             return segs
-        radius = 1 << exp
-        pairs = _candidate_pairs(segs, threads)
-        marks: list[tuple[int, int, int]] | tuple = []
-        n_marks = 0
-        need_fix = False
-        if len(pairs) and vec_ok:
-            from .cross_vec import cross_pairs_batch
-
-            ci, cj = pairs[:, 0], pairs[:, 1]
-            pid, which, mx, my, rnd = cross_pairs_batch(
-                segs.ax[ci], segs.ay[ci], segs.bx[ci], segs.by[ci],
-                segs.ax[cj], segs.ay[cj], segs.bx[cj], segs.by[cj],
-                radius,
-            )
-            need_fix = bool(rnd.any())
-            seg_idx = np.where(which == 0, ci[pid], cj[pid])
-            # array triple straight into _apply_marks — no per-mark python
-            marks = (seg_idx, mx, my)
-            n_marks = len(seg_idx)
-        else:
-            seg_rows = np.stack([segs.ax, segs.ay, segs.bx, segs.by], axis=1)
-            for i, j in pairs:
-                pm, rnd = cross_pair(
-                    tuple(int(v) for v in seg_rows[i]),
-                    tuple(int(v) for v in seg_rows[j]),
-                    radius,
-                )
-                need_fix = need_fix or rnd
-                for which, x, y in pm:
-                    marks.append((int(i) if which == 0 else int(j), x, y))
-            n_marks = len(marks)
-        if not n_marks:
+        seg_idx, mx, my, rnd, _ = find_marks(segs, 1 << exp, threads)
+        if not len(seg_idx):
             return segs
-        segs = sort_and_merge(_apply_marks(segs, marks))
+        segs = sort_and_merge(_apply_marks(segs, (seg_idx, mx, my)))
         exp = min(60, exp + step)
-        if not need_fix:
+        if not rnd.any():
             return segs
     return segs

@@ -535,9 +535,9 @@ def slice_batch(
     tile the sort order, candidate set, radius schedule and walk order equal
     the scalar run (extra global rounds are no-ops for tiles whose marks have
     dried up — same argument as kernel/batch.py)."""
+    from .batch import _COORD_CAP
     from .segments import Segments
     from .string_slice import (
-        _COORD_CAP,
         build_string_segments,
         compute_string_fills,
         slice_extract,

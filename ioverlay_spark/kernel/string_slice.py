@@ -29,13 +29,11 @@ from ..options import ContourDirection, FillRule, OverlayOptions
 from .extract import _LinkGraph, _nearest_link, bind_holes, ring_area2
 from .fill import SUBJ_BOTH, SUBJ_BOTTOM, SUBJ_TOP, _is_inside, _windings_below
 from .segments import Segments, _dedup_consecutive, _drop_collinear, build_segments
-from .split import cross_pair
+from .split import find_marks
 
 # wall-direction bits (iOverlay/src/segm/string.rs:13-14)
 BACK_CLIP = 0b01
 FORWARD_CLIP = 0b10
-
-_COORD_CAP = 1 << 30  # int64-product safety bound (same as kernel.batch)
 
 
 def build_string_segments(
@@ -148,57 +146,21 @@ def _apply_marks_string(segs: Segments, marks: list[tuple[int, int, int]]) -> Se
 
 def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
     """Snap-radius split fixpoint over the COMBINED body+wall segment set —
-    identical schedule and solver to the boolean pipeline
-    (iOverlay/src/split/solver.rs, snap_radius.rs), with the string merge/invert
-    algebra. Vectorized candidates + exact solver below the coordinate cap."""
-    from .batch import interacting_mask
-    from .cross_vec import cross_pairs_batch
-    from .split import _candidate_pairs
-
+    identical schedule and mark finder (split.find_marks) to the boolean
+    pipeline (iOverlay/src/split/solver.rs, snap_radius.rs), with the string
+    merge/invert algebra."""
     segs = sort_and_merge_string(segs)
     exp = 0
     for _ in range(max_rounds):
         if len(segs) < 2:
             return segs
-        radius = 1 << exp
-        marks: list[tuple[int, int, int]] = []
-        need_fix = False
-        wide = len(segs) and max(
-            int(np.abs(segs.ax).max()), int(np.abs(segs.ay).max()),
-            int(np.abs(segs.bx).max()), int(np.abs(segs.by).max()),
-        ) >= _COORD_CAP
-        pairs = _candidate_pairs(segs, threads=1)
-        if wide:
-            for i, j in pairs:
-                pm, rnd = cross_pair(
-                    (int(segs.ax[i]), int(segs.ay[i]), int(segs.bx[i]), int(segs.by[i])),
-                    (int(segs.ax[j]), int(segs.ay[j]), int(segs.bx[j]), int(segs.by[j])),
-                    radius,
-                )
-                need_fix = need_fix or rnd
-                for which, x, y in pm:
-                    marks.append((int(i) if which == 0 else int(j), x, y))
-        else:
-            ci, cj = pairs[:, 0], pairs[:, 1]
-            ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-            keep = interacting_mask(
-                ax[ci], ay[ci], bx[ci], by[ci], ax[cj], ay[cj], bx[cj], by[cj]
-            )
-            ci, cj = ci[keep], cj[keep]
-            if len(ci):
-                pid, which, mx, my, rnd = cross_pairs_batch(
-                    segs.ax[ci], segs.ay[ci], segs.bx[ci], segs.by[ci],
-                    segs.ax[cj], segs.ay[cj], segs.bx[cj], segs.by[cj],
-                    radius,
-                )
-                need_fix = bool(rnd.any())
-                seg_idx = np.where(which == 0, ci[pid], cj[pid])
-                marks = list(zip(seg_idx.tolist(), mx.tolist(), my.tolist()))
-        if not marks:
+        seg_idx, mx, my, rnd, _ = find_marks(segs, 1 << exp, threads=1)
+        if not len(seg_idx):
             return segs
+        marks = zip(seg_idx.tolist(), mx.tolist(), my.tolist())
         segs = sort_and_merge_string(_apply_marks_string(segs, marks))
         exp = min(60, exp + 1)
-        if not need_fix:
+        if not rnd.any():
             return segs
     return segs
 

@@ -4,8 +4,9 @@ When a single overlay job has millions of segments, the per-pair kernel cannot h
 it; this pipeline distributes every stage of the reference algorithm:
 
   A1/A2  sort+merge          -> groupBy(a,b).sum(counts), drop zeros (hash agg)
-  A6/A7  split               -> grid-cell explode -> per-cell Arrow kernel finds
-                                exact intersection marks
+  A6/A7  split               -> grid-cell explode -> per-cell Arrow kernel runs
+                                the list split's mark finder
+                                (kernel/split.find_marks) on the cell's rows
   A8     apply marks         -> segment rows union mark rows, ONE hash exchange
                                 on the mark key, then ONE numpy kernel
                                 (kernel/split._apply_marks) per partition matches
@@ -46,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.segments import Segments
-from ..kernel.split import _apply_marks, cross_pair
+from ..kernel.split import _apply_marks, find_marks
 from ..options import FillRule, OverlayOptions, OverlayRule
 
 SEG_COLS = ["ax", "ay", "bx", "by", "subj", "clip"]
@@ -89,9 +90,6 @@ def merge_segments_df(segs: DataFrame, extra_aggs: dict[str, str] | None = None)
     )
 
 
-_PAIR_BLOCK = 4_000_000  # max raw candidate pairs per block in _find_marks_kernel
-
-
 _MARKS_ARROW_SCHEMA = pa.schema(
     [
         ("ax", pa.int64()),
@@ -131,16 +129,10 @@ def _np_col(tbl, name: str) -> np.ndarray:
 
 
 def _find_marks_kernel(tbl: pa.Table, packed: bool = False, radius: int = 2) -> pa.Table:
-    """Per-cell exact pairwise crossing detection (A6/A7): vectorized candidate
-    window + orientation-sign prefilter (kernel/batch.interacting_mask, incl. the
-    collinear-overlap refinement that keeps same-line chains from flooding the
-    exact solver) + the vectorized exact cross solver (kernel/cross_vec).
-
-    Pair enumeration is CHUNKED (ADVICE r02 distributed.py:108): i-rows are
-    processed in blocks bounded by a max raw-pair budget, so a crossing-dense
-    cell near the hot threshold materializes at most ~_PAIR_BLOCK-row index
-    arrays at a time instead of one O(total-pairs) allocation. Coordinates at or
-    beyond the int64-product cap (2^30) take the scalar python-int solver.
+    """Per-cell exact pairwise crossing detection (A6/A7): the cell's rows,
+    sorted by (a, b), go through the same mark finder as the list split
+    (kernel/split.find_marks: pair enumeration, one int64 gate, exact solve),
+    single-threaded since every executor core already runs a task.
 
     packed=False emits marks keyed by segment coordinates (8 columns).
     packed=True (callers that guarantee in-cap coordinates AND ship a stable
@@ -151,124 +143,17 @@ def _find_marks_kernel(tbl: pa.Table, packed: bool = False, radius: int = 2) -> 
 
     radius: the snap radius (squared distance) of rounded marks to segment
     endpoints, kernel/split.cross_pair's."""
-    from ..kernel.batch import _COORD_CAP, interacting_mask
-    from ..kernel.cross_vec import cross_pairs_batch
-
     ax, ay, bx, by = (_np_col(tbl, c) for c in ("ax", "ay", "bx", "by"))
-    sid = _np_col(tbl, "_sid") if packed else None
-    n = len(ax)
-    rows = []  # scalar-path rows (wide coords only)
-    outs = []  # vectorized-path column blocks
-    if n >= 2:
-        order = np.lexsort((by, bx, ay, ax))
-        ax, ay, bx, by = ax[order], ay[order], bx[order], by[order]
-        if packed:
-            sid = sid[order]
-        ymin = np.minimum(ay, by)
-        ymax = np.maximum(ay, by)
-        his = np.searchsorted(ax, bx, side="right")
-        i0 = np.arange(n, dtype=np.int64)
-        counts = np.maximum(his - i0 - 1, 0)
-        cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-        scalar = max(
-            abs(int(ax[0])), abs(int(ax[-1])),
-            abs(int(ay.min())), abs(int(ay.max())),
-            abs(int(bx.min())), abs(int(bx.max())),
-            abs(int(by.min())), abs(int(by.max())),
-        ) >= _COORD_CAP
-        start = 0
-        while start < n - 1:
-            stop = int(np.searchsorted(cum, cum[start] + _PAIR_BLOCK, side="left"))
-            stop = min(max(stop, start + 1), n)
-            c = counts[start:stop]
-            total = int(c.sum())
-            base = cum[start]
-            lo = start
-            start = stop
-            if total == 0:
-                continue
-            i_rep = np.repeat(np.arange(lo, stop, dtype=np.int64), c)
-            j = np.arange(total, dtype=np.int64) - (cum[i_rep] - base) + i_rep + 1
-            m = (ymin[j] <= ymax[i_rep]) & (ymax[j] >= ymin[i_rep])
-            i_rep, j = i_rep[m], j[m]
-            if len(i_rep) == 0:
-                continue
-            # drop duplicate rows of the SAME segment (exploded into a cell twice)
-            same = (
-                (ax[i_rep] == ax[j]) & (ay[i_rep] == ay[j])
-                & (bx[i_rep] == bx[j]) & (by[i_rep] == by[j])
-            )
-            i_rep, j = i_rep[~same], j[~same]
-            keep, coll = interacting_mask(
-                ax[i_rep], ay[i_rep], bx[i_rep], by[i_rep], ax[j], ay[j], bx[j], by[j],
-                with_collinear=True,
-            )
-            i_rep, j, coll = i_rep[keep], j[keep], coll[keep]
-            if len(i_rep) == 0:
-                continue
-            if scalar:
-                # wide-coordinate fallback: conservatively flag every mark as
-                # collinear-capable (the merge always runs). Unreachable in
-                # packed mode — callers choose packed only under the global
-                # coordinate cap, which bounds every cell.
-                for i, jj in zip(i_rep.tolist(), j.tolist()):
-                    ti = (int(ax[i]), int(ay[i]), int(bx[i]), int(by[i]))
-                    tj = (int(ax[jj]), int(ay[jj]), int(bx[jj]), int(by[jj]))
-                    pm, rnd = cross_pair(ti, tj, radius)
-                    for which, x, y in pm:
-                        t = ti if which == 0 else tj
-                        rows.append((t[0], t[1], t[2], t[3], x, y, rnd, True))
-            else:
-                pid, which, mx, my, rnd = cross_pairs_batch(
-                    ax[i_rep], ay[i_rep], bx[i_rep], by[i_rep],
-                    ax[j], ay[j], bx[j], by[j], radius,
-                )
-                if len(pid):
-                    si = np.where(which == 0, i_rep[pid], j[pid])
-                    if packed:
-                        ypos = by[si] >= ay[si]
-                        k = (mx + _KB) * _KS + (np.where(ypos, my, -my) + _KB)
-                        outs.append((sid[si], k, rnd, coll[pid]))
-                    else:
-                        outs.append(
-                            (ax[si], ay[si], bx[si], by[si], mx, my, rnd, coll[pid])
-                        )
+    order = np.lexsort((by, bx, ay, ax))
+    ax, ay, bx, by = ax[order], ay[order], bx[order], by[order]
+    z = np.zeros(len(ax), dtype=np.int64)
+    si, mx, my, rnd, col = find_marks(Segments(ax, ay, bx, by, z, z), radius, threads=1)
     if packed:
-        if not outs:
-            return _MARKS_PACKED_ARROW_SCHEMA.empty_table()
-        cols = [np.concatenate([np.asarray(o[k]) for o in outs]) for k in range(4)]
-        return pa.Table.from_arrays(
-            [
-                pa.array(cols[0].astype(np.int64, copy=False)),
-                pa.array(cols[1].astype(np.int64, copy=False)),
-                pa.array(cols[2].astype(bool, copy=False)),
-                pa.array(cols[3].astype(bool, copy=False)),
-            ],
-            schema=_MARKS_PACKED_ARROW_SCHEMA,
-        )
-    if rows:
-        # wide-coordinate scalar rows -> numpy blocks appended to the outs list
-        rc = list(zip(*rows))
-        outs.append(
-            tuple(np.asarray(rc[k], dtype=np.int64) for k in range(6))
-            + (np.asarray(rc[6], dtype=bool), np.asarray(rc[7], dtype=bool))
-        )
-    if not outs:
-        return _MARKS_ARROW_SCHEMA.empty_table()
-    cols = [np.concatenate([np.asarray(o[k]) for o in outs]) for k in range(8)]
-    return pa.Table.from_arrays(
-        [
-            pa.array(cols[0].astype(np.int64, copy=False)),
-            pa.array(cols[1].astype(np.int64, copy=False)),
-            pa.array(cols[2].astype(np.int64, copy=False)),
-            pa.array(cols[3].astype(np.int64, copy=False)),
-            pa.array(cols[4].astype(np.int64, copy=False)),
-            pa.array(cols[5].astype(np.int64, copy=False)),
-            pa.array(cols[6].astype(bool, copy=False)),
-            pa.array(cols[7].astype(bool, copy=False)),
-        ],
-        schema=_MARKS_ARROW_SCHEMA,
-    )
+        k = (mx + _KB) * _KS + (np.where(by[si] >= ay[si], my, -my) + _KB)
+        cols, schema = [_np_col(tbl, "_sid")[order][si], k, rnd, col], _MARKS_PACKED_ARROW_SCHEMA
+    else:
+        cols, schema = [ax[si], ay[si], bx[si], by[si], mx, my, rnd, col], _MARKS_ARROW_SCHEMA
+    return pa.Table.from_arrays([pa.array(c) for c in cols], schema=schema)
 
 
 def _bounds_aggs() -> list:
@@ -392,7 +277,8 @@ def split_round(
     packed: bool = False,
     radius: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
-    """One split round: returns (marks_df, stats). Hot cells are salted to a 4x4
+    """One split round: returns (marks, loads), the round's mark rows and
+    salted_cover's per-cell load histogram. Hot cells are salted to a 4x4
     finer sub-grid via salted_cover (only hot-cell segments re-explode).
 
     Marks are not deduplicated here: a pair spanning a cell border is found
@@ -1130,13 +1016,9 @@ def distributed_overlay(
     # split's `_sid` key
     merged, bounds = _checkpoint_segments(merge_segments_df(segs))
     if not force_distributed and bounds[0] <= small_threshold:
-        cover, _ = salted_cover(merged, cells_per_axis=32, hot_threshold=1 << 62, bounds=bounds)
+        _, loads = salted_cover(merged, cells_per_axis=32, hot_threshold=1 << 62, bounds=bounds)
         est_pairs = int(
-            cover.groupBy("cx", "cy")
-            .count()
-            .agg(F.sum(F.col("count") * (F.col("count") - 1) / 2))
-            .first()[0]
-            or 0
+            loads.agg(F.sum(F.col("count") * (F.col("count") - 1) / 2)).first()[0] or 0
         )
         # every crossing adds two sub-segments: the POST-split size bound is what
         # the one-task kernel's O(n*m) fill must survive, not the input size

@@ -2,6 +2,7 @@
 (differential test, SURVEY.md §7 hard-part (c))."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -605,7 +606,13 @@ def _segments_df(spark, subj, clip):
     return contours_to_segments_df(spark, df)
 
 
-@pytest.mark.parametrize("case", ["no_marks", "empty", "snap_two_rounds", "checkpoint_dir", "wide_2e40"])
+@pytest.mark.parametrize(
+    "case",
+    [
+        "no_marks", "empty", "snap_two_rounds", "checkpoint_dir", "wide_2e40",
+        "wide_strips_xor", "wide_strips_intersect",
+    ],
+)
 def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_path, case):
     """Edge cases of the observed checkpoints and the one-exchange mark
     apply, each against the scalar kernel: a split that finds no marks (the
@@ -613,7 +620,9 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     snap-rounding input that needs a second round (a non-terminal apply and
     its observed bounds; the rounds must grow the snap radius as the kernel
     does), the same through parquet checkpoints (checkpoint_dir) and shifted
-    by 2^40 (coordinate-keyed marks)."""
+    by 2^40 (coordinate-keyed marks), and two thin strips crossing with 2^41
+    extents (XOR and INTERSECT): their segments are past the cell kernel's
+    int64 gate, so every candidate pair must reach the python-int solver."""
     import ioverlay_spark.operators.distributed as dist
     from ioverlay_spark.options import FillRule, OverlayRule
 
@@ -631,6 +640,12 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
         clip = [[(20, 0), (30, 0), (30, 10), (20, 10)]]
     elif case == "empty":
         subj, clip = [], []
+    elif case.startswith("wide_strips"):
+        S, w = 1 << 40, 1 << 10
+        subj = [[(-S, -S), (S, S - w), (S, S), (-S, -S + w)]]
+        clip = [[(-S, S - w), (S, -S), (S, -S + w), (-S, S)]]
+        if case == "wide_strips_intersect":
+            rule = OverlayRule.INTERSECT
     else:
         subj, clip = snap_case(1 << 40 if case == "wide_2e40" else 0)
         if case == "checkpoint_dir":
@@ -651,9 +666,110 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
         assert len(rounds) == 1
     else:
         assert len(exp) > 0 and len(rounds) >= 2
-        assert rounds[0] is (case != "wide_2e40")
+        assert rounds[0] is not case.startswith("wide")
     if case == "checkpoint_dir":
         assert (tmp_path / "split_r0").is_dir()
+
+
+def _brute_marks(segs, radius):
+    """{(segment, x, y, is_round, col_ovl)} from the python-int cross_pair over
+    every bbox-overlapping pair of `segs`, a list of (ax, ay, bx, by) tuples.
+    col_ovl is the pair's collinear class below the int64 gate (every x/y
+    extent < 2^30) and True past it."""
+    from ioverlay_spark.kernel.split import _orient, cross_pair
+
+    wide = max(max(abs(s[2] - s[0]), abs(s[3] - s[1])) for s in segs) >= 1 << 30
+    out = set()
+    for i, s in enumerate(segs):
+        for t in segs[i + 1 :]:
+            if max(s[0], t[0]) <= min(s[2], t[2]) and max(
+                min(s[1], s[3]), min(t[1], t[3])
+            ) <= min(max(s[1], s[3]), max(t[1], t[3])):
+                pm, rnd = cross_pair(s, t, radius)
+                col = wide or not any(
+                    _orient(*u, *p) for u, v in ((s, t), (t, s)) for p in (v[:2], v[2:])
+                )
+                out |= {((s, t)[w], x, y, rnd, col) for w, x, y in pm}
+    return out
+
+
+def _cell_kernel_marks(segs, packed, radius, rng):
+    """_find_marks_kernel's marks over `segs` (rows shuffled) as the
+    _brute_marks set; packed marks are decoded through their `_sid`."""
+    from ioverlay_spark.operators.distributed import _KB, _KS, _find_marks_kernel
+
+    rows = [segs[i] for i in rng.permutation(len(segs))]
+    sids = (np.arange(len(rows)) * 7 + 3).tolist()
+    cols = dict(zip(("ax", "ay", "bx", "by"), map(list, zip(*rows))), _sid=sids)
+    tbl = pa.table(cols, schema=pa.schema([(c, pa.int64()) for c in cols]))
+    out = _find_marks_kernel(tbl, packed=packed, radius=radius).to_pydict()
+    if packed:
+        seg = [rows[sids.index(i)] for i in out["_sid"]]
+        yt = [k % _KS - _KB for k in out["k"]]
+        px = [k // _KS - _KB for k in out["k"]]
+        py = [y if s[3] >= s[1] else -y for s, y in zip(seg, yt)]
+    else:
+        seg = list(zip(out["ax"], out["ay"], out["bx"], out["by"]))
+        px, py = out["px"], out["py"]
+    return set(zip(seg, px, py, out["is_round"], out["col_ovl"]))
+
+
+def test_cell_kernel_matches_brute_force_cross_pair(monkeypatch):
+    """The distributed cell kernel (_find_marks_kernel), in both mark forms,
+    finds exactly the marks of the python-int cross_pair over every
+    bbox-overlapping pair: seeded random segments plus collinear chains,
+    T-junctions and a duplicated row, at 2^29, 2^33, 2^40 and 2^60 (packed
+    only where every coordinate is under 2^30 - 2). A small soup translated by
+    2^40 keeps every extent under the int64 gate, so it must give the
+    untranslated marks shifted, with no python-int cross_pair call."""
+    import ioverlay_spark.kernel.split as sp
+    from ioverlay_spark.kernel.segments import Segments, build_segments
+
+    def norm(x0, y0, x1, y1):
+        return (x0, y0, x1, y1) if (x0, y0) < (x1, y1) else (x1, y1, x0, y0)
+
+    rng = np.random.default_rng(17)
+    for e in (29, 33, 40, 60):
+        S = 1 << e
+        pts = rng.integers(-S, S, (24, 4)).tolist()
+        P = rng.integers(-S // 2, S // 2, 2)
+        d = rng.integers(-S // 16, S // 16, 2)
+        line = [(P + t * d).tolist() for t in range(9)]
+        for _ in range(6):  # collinear chains: overlaps and shared endpoints
+            t0, t1 = rng.choice(9, 2, replace=False)
+            pts.append(line[t0] + line[t1])
+        for _ in range(3):  # T-junctions on the chain's line
+            pts.append(rng.integers(-S, S, 2).tolist() + line[int(rng.integers(1, 8))])
+        segs = [norm(*map(int, p)) for p in pts if p[:2] != p[2:]]
+        segs.append(segs[0])  # the same segment twice in one cell
+        for radius in (2, 1 << 24):
+            exp = _brute_marks(segs, radius)
+            assert len(exp) > 0
+            for packed in (False, True) if S < (1 << 30) - 2 else (False,):
+                assert _cell_kernel_marks(segs, packed, radius, rng) == exp, (e, radius, packed)
+
+    # every python-int cross_pair call runs split._orient, whichever module
+    # bound the name cross_pair
+    calls = [0]
+    scalar = sp._orient
+
+    def counted(*a):
+        calls[0] += 1
+        return scalar(*a)
+
+    mk = lambda: rng.integers(-5_000, 5_000, (int(rng.integers(3, 13)), 2))
+    soup = Segments.concat(
+        [build_segments([mk() for _ in range(4)], b) for b in (True, False)]
+    )
+    segs = list(zip(soup.ax.tolist(), soup.ay.tolist(), soup.bx.tolist(), soup.by.tolist()))
+    t = 1 << 40
+    moved = [tuple(v + t for v in s) for s in segs]
+    base = _cell_kernel_marks(segs, False, 2, rng)
+    assert base == _brute_marks(segs, 2) and len(base) > 0
+    exp = {(tuple(v + t for v in s), x + t, y + t, r, c) for s, x, y, r, c in base}
+    monkeypatch.setattr(sp, "_orient", counted)
+    assert _cell_kernel_marks(moved, False, 2, rng) == exp
+    assert calls[0] == 0
 
 
 @pytest.mark.parametrize("form", ["packed", "wide"])

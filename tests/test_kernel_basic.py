@@ -234,45 +234,49 @@ def test_segtree_fills_match_dense():
 
 
 def test_split_vec_gate_is_pair_local(monkeypatch):
-    """split_segments' vectorized solver gate is the pair-local bound (every
-    segment's x/y extent < 2^30), not an absolute-coordinate cap: a small soup
-    translated to 2^40 or 2^59 - 2^20 splits to exactly the translated result
-    of the untranslated soup, with no python-int cross_pair call."""
+    """The mark finder's vectorized solver gate (split.find_marks) is the
+    pair-local bound (every segment's x/y extent < 2^30), not an
+    absolute-coordinate cap: a small soup translated to 2^40 or 2^59 - 2^20
+    splits to exactly the translated result of the untranslated soup, with no
+    python-int cross_pair call — through split_segments and, as a body+wall
+    string soup, through the string split fixpoint."""
     import ioverlay_spark.kernel.split as sp
     from ioverlay_spark.kernel.segments import Segments
+    from ioverlay_spark.kernel.string_slice import build_string_segments, split_segments_string
 
+    # every python-int cross_pair call runs split._orient, whichever module
+    # bound the name cross_pair
     calls = [0]
-    scalar = sp.cross_pair
+    scalar = sp._orient
 
     def counted(*a):
         calls[0] += 1
         return scalar(*a)
 
-    monkeypatch.setattr(sp, "cross_pair", counted)
+    monkeypatch.setattr(sp, "_orient", counted)
     rng = np.random.default_rng(29)
     for span in (50, 5_000, 1 << 20):
         for _ in range(6):
             mk = lambda: rng.integers(-span, span, (int(rng.integers(3, 13)), 2))
             nring = int(rng.integers(2, 6))
-            soup = Segments.concat(
-                [
-                    build_segments([mk() for _ in range(nring)], True),
-                    build_segments([mk() for _ in range(nring)], False),
-                ]
-            )
-            base = split_segments(soup)
-            for t in (1 << 40, (1 << 59) - (1 << 20)):
-                moved = Segments(
-                    soup.ax + t, soup.ay + t, soup.bx + t, soup.by + t,
-                    soup.subj, soup.clip,
-                )
-                got = split_segments(moved)
-                for g, b in zip(
-                    (got.ax, got.ay, got.bx, got.by), (base.ax, base.ay, base.bx, base.by)
-                ):
-                    assert np.array_equal(g, b + t)
-                assert np.array_equal(got.subj, base.subj)
-                assert np.array_equal(got.clip, base.clip)
+            body = [mk() for _ in range(nring)]
+            walls = [mk() for _ in range(nring)]
+            soup = Segments.concat([build_segments(body, True), build_segments(walls, False)])
+            strings = build_string_segments(body, walls)
+            for split, segs in ((split_segments, soup), (split_segments_string, strings)):
+                base = split(segs)
+                for t in (1 << 40, (1 << 59) - (1 << 20)):
+                    moved = Segments(
+                        segs.ax + t, segs.ay + t, segs.bx + t, segs.by + t,
+                        segs.subj, segs.clip,
+                    )
+                    got = split(moved)
+                    for g, b in zip(
+                        (got.ax, got.ay, got.bx, got.by), (base.ax, base.ay, base.bx, base.by)
+                    ):
+                        assert np.array_equal(g, b + t)
+                    assert np.array_equal(got.subj, base.subj)
+                    assert np.array_equal(got.clip, base.clip)
     assert calls[0] == 0
 
 
