@@ -2,16 +2,11 @@ import sys, time
 import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
-from pyspark.sql import SparkSession
 from test_distributed import lines_net, rings_to_contours_rows
+from ioverlay_spark.session import get_spark
 
 n = int(sys.argv[1]) if len(sys.argv) > 1 else 512
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.sql.shuffle.partitions", "64")
-         .config("spark.driver.memory", "48g")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 from ioverlay_spark.options import FillRule, OverlayRule
 from ioverlay_spark.operators.distributed import contours_to_segments_df, distributed_overlay
@@ -21,7 +16,7 @@ df = spark.createDataFrame(rings_to_contours_rows(subj, clip), ["role","cid","pt
 if "--warm" in sys.argv:
     # spin up the python worker pool + import the shipped package once (the
     # cluster steady state; bench.py's suite warm pass does the same) so the
-    # measured wall is the overlay, not 16x fork+import numpy/pandas/pyarrow
+    # measured wall is the overlay, not a per-core fork+import numpy/pandas/pyarrow
     import pandas as _pd
     def _noop(it):
         import ioverlay_spark.operators.distributed_extract  # noqa: F401

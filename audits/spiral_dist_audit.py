@@ -7,17 +7,10 @@ import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from spiral_audit import spiral
-from pyspark.sql import SparkSession
+from ioverlay_spark.session import get_spark
 
 n = int(sys.argv[1]) if len(sys.argv) > 1 else 262144
-spark = (
-    SparkSession.builder.master("local[16]")
-    .config("spark.sql.shuffle.partitions", "64")
-    .config("spark.driver.memory", "48g")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 from ioverlay_spark.functions.float_shell import NumpyFloatAdapter
 from ioverlay_spark.options import FillRule, OverlayRule

@@ -7,21 +7,29 @@ it; this pipeline distributes every stage of the reference algorithm:
   A6/A7  split               -> grid-cell explode -> per-cell Arrow kernel runs
                                 the list split's mark finder
                                 (kernel/split.find_marks) on the cell's rows
-  A8     apply marks         -> segment rows union mark rows, ONE hash exchange
-                                on the mark key, then ONE numpy kernel
-                                (kernel/split._apply_marks) per partition matches
-                                and splits each segment at its marks
+  A8     apply marks         -> (_sid, px, py) mark rows union segment rows, ONE
+                                hash exchange on the segment key `_sid`, then ONE
+                                numpy kernel (kernel/split._apply_marks) per
+                                partition matches and splits each segment at
+                                its marks
   A9     snap fixpoint       -> driver loop; counts, bounds and the termination
                                 probe are observed on the rounds' checkpoints, no
                                 jobs of their own; SplitResult goes to the fill
   A10    fill                -> x-strip explode -> per-strip vectorized ray-cast
                                 winding (each segment evaluated in its midpoint
-                                strip against all segments crossing that strip)
-  A11-13 boundary + extract  -> Column-expr filter -> connected components via
-                                alternating large-star/small-star (O(log n) rounds)
-                                -> per-component kernel walk
-  A14    hole binding        -> distributed below-anchor scan (x-band equi-join +
-                                max_by), hole->hole chains resolved on the driver
+                                strip against all segments crossing that strip);
+                                the fill kernel keeps the rule's boundary
+                                segments and packs them into binary blobs
+  A11-13 boundary + extract  -> ONE task labels components (numpy union-find)
+                                and walks every ring (fused CC + walk); past
+                                8 M boundary edges: connected components (one
+                                union-find task, or alternating
+                                large-star/small-star rounds) -> salted
+                                per-component kernel walk
+  A14    hole binding        -> distributed below-anchor scan (x-band equi-join,
+                                crossing parity + innermost argmax): a hole's
+                                innermost containing hull is its shape directly,
+                                no driver-side chain step
 
 Skew: per-cell segment histograms pick the grid level; cells exceeding the hot
 threshold are salted to a finer sub-grid before the Arrow kernel (north rule).
@@ -52,18 +60,11 @@ from ..options import FillRule, OverlayOptions, OverlayRule
 
 SEG_COLS = ["ax", "ay", "bx", "by", "subj", "clip"]
 
-# packed along-segment mark key (every coordinate under 2^30):
-# k = (px + _KB) * _KS + (py' + _KB), py' = py when by >= ay else -py, so the
-# lexicographic order of k is the order of the marks along their segment
-_KB = 1 << 30
-_KS = 1 << 31
-
+# split marks, keyed by their segment's `_sid`: the row key _checkpoint_segments
+# stores on every segment set a split round reads
 MARKS_SCHEMA = StructType(
     [
-        StructField("ax", LongType()),
-        StructField("ay", LongType()),
-        StructField("bx", LongType()),
-        StructField("by", LongType()),
+        StructField("_sid", LongType()),
         StructField("px", LongType()),
         StructField("py", LongType()),
         StructField("is_round", BooleanType()),
@@ -92,33 +93,11 @@ def merge_segments_df(segs: DataFrame, extra_aggs: dict[str, str] | None = None)
 
 _MARKS_ARROW_SCHEMA = pa.schema(
     [
-        ("ax", pa.int64()),
-        ("ay", pa.int64()),
-        ("bx", pa.int64()),
-        ("by", pa.int64()),
+        ("_sid", pa.int64()),
         ("px", pa.int64()),
         ("py", pa.int64()),
         ("is_round", pa.bool_()),
         ("col_ovl", pa.bool_()),
-    ]
-)
-
-
-_MARKS_PACKED_ARROW_SCHEMA = pa.schema(
-    [
-        ("_sid", pa.int64()),
-        ("k", pa.int64()),
-        ("is_round", pa.bool_()),
-        ("col_ovl", pa.bool_()),
-    ]
-)
-
-MARKS_PACKED_SCHEMA = StructType(
-    [
-        StructField("_sid", LongType()),
-        StructField("k", LongType()),
-        StructField("is_round", BooleanType()),
-        StructField("col_ovl", BooleanType()),
     ]
 )
 
@@ -128,32 +107,22 @@ def _np_col(tbl, name: str) -> np.ndarray:
     return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
 
-def _find_marks_kernel(tbl: pa.Table, packed: bool = False, radius: int = 2) -> pa.Table:
+def _find_marks_kernel(tbl: pa.Table, radius: int = 2) -> pa.Table:
     """Per-cell exact pairwise crossing detection (A6/A7): the cell's rows,
     sorted by (a, b), go through the same mark finder as the list split
     (kernel/split.find_marks: pair enumeration, one int64 gate, exact solve),
-    single-threaded since every executor core already runs a task.
-
-    packed=False emits marks keyed by segment coordinates (8 columns).
-    packed=True (callers that guarantee in-cap coordinates AND ship a stable
-    `_sid` per segment) emits 4 columns: (_sid, k) where k is the packed
-    along-segment mark key (_KB/_KS above) — the mark set is the round's
-    largest dataset, and halving its width halves the checkpoint, shuffle and
-    agg bytes. Arrow-native either way.
+    single-threaded since every executor core already runs a task. Emits
+    MARKS_SCHEMA rows: each mark keyed by its segment's `_sid`, Arrow-native.
 
     radius: the snap radius (squared distance) of rounded marks to segment
     endpoints, kernel/split.cross_pair's."""
     ax, ay, bx, by = (_np_col(tbl, c) for c in ("ax", "ay", "bx", "by"))
     order = np.lexsort((by, bx, ay, ax))
-    ax, ay, bx, by = ax[order], ay[order], bx[order], by[order]
     z = np.zeros(len(ax), dtype=np.int64)
-    si, mx, my, rnd, col = find_marks(Segments(ax, ay, bx, by, z, z), radius, threads=1)
-    if packed:
-        k = (mx + _KB) * _KS + (np.where(by[si] >= ay[si], my, -my) + _KB)
-        cols, schema = [_np_col(tbl, "_sid")[order][si], k, rnd, col], _MARKS_PACKED_ARROW_SCHEMA
-    else:
-        cols, schema = [ax[si], ay[si], bx[si], by[si], mx, my, rnd, col], _MARKS_ARROW_SCHEMA
-    return pa.Table.from_arrays([pa.array(c) for c in cols], schema=schema)
+    segs = Segments(ax[order], ay[order], bx[order], by[order], z, z)
+    si, mx, my, rnd, col = find_marks(segs, radius, threads=1)
+    cols = [_np_col(tbl, "_sid")[order[si]], mx, my, rnd, col]
+    return pa.Table.from_arrays([pa.array(c) for c in cols], schema=_MARKS_ARROW_SCHEMA)
 
 
 def _bounds_aggs() -> list:
@@ -190,8 +159,8 @@ def _checkpoint_observed(df: DataFrame, aggs: list, path: str | None = None):
 
 def _checkpoint_segments(segs: DataFrame, path: str | None = None):
     """_checkpoint_observed for a segment set: stores a `_sid` row key (the
-    packed marks' segment id, stable because it is stored, not re-evaluated)
-    and returns the frame with its _count_and_bounds tuple."""
+    marks' segment id, stable because it is stored, not re-evaluated) and
+    returns the frame with its _count_and_bounds tuple."""
     segs = segs.withColumn("_sid", F.monotonically_increasing_id())
     segs, m = _checkpoint_observed(segs, _bounds_aggs(), path)
     return segs, _count_and_bounds(segs, m)
@@ -274,20 +243,17 @@ def split_round(
     cells_per_axis: int,
     hot_threshold: int = 20000,
     bounds: tuple[int, int, int, int, int] | None = None,
-    packed: bool = False,
     radius: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
-    """One split round: returns (marks, loads), the round's mark rows and
-    salted_cover's per-cell load histogram. Hot cells are salted to a 4x4
-    finer sub-grid via salted_cover (only hot-cell segments re-explode).
+    """One split round over a segment set that stores its `_sid` row key
+    (_checkpoint_segments): returns (marks, loads), the round's MARKS_SCHEMA
+    rows and salted_cover's per-cell load histogram. Hot cells are salted to
+    a 4x4 finer sub-grid via salted_cover (only hot-cell segments re-explode).
 
     Marks are not deduplicated here: a pair spanning a cell border is found
-    once per shared cell, and the apply kernel drops duplicate marks.
-
-    packed=True requires `segs` to carry a stable `_sid` column and every
-    coordinate under the 2^30 cap; marks come back as (_sid, k) — half the
-    bytes of the coordinate-keyed schema (see _find_marks_kernel). radius is
-    the round's snap radius (split_segments_df grows it as the kernel does)."""
+    once per shared cell, and the apply kernel drops duplicate marks. radius
+    is the round's snap radius (split_segments_df grows it as the kernel
+    does)."""
     cover, loads = salted_cover(segs, cells_per_axis, hot_threshold, bounds)
     # Explicit repartition on the GROUP KEY ahead of the grouped kernel:
     # HashPartitioning(keys, n) satisfies the groupBy's ClusteredDistribution,
@@ -299,61 +265,46 @@ def split_round(
     n_part = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cover = cover.repartition(n_part, "cx", "cy", "sx", "sy")
     marks = cover.groupBy("cx", "cy", "sx", "sy").applyInArrow(
-        lambda tbl: _find_marks_kernel(tbl, packed=packed, radius=radius),
-        schema=MARKS_PACKED_SCHEMA if packed else MARKS_SCHEMA,
+        lambda tbl: _find_marks_kernel(tbl, radius=radius), schema=MARKS_SCHEMA
     )
     return marks, loads
 
 
 def _union_marks(
     segs: DataFrame, marks: DataFrame, payload: list[str] | tuple[str, ...] = ()
-) -> tuple[DataFrame, list[str]]:
+) -> DataFrame:
     """ONE exchange that brings every segment and its marks together: segment
     rows (mark columns null) union mark rows (segment columns null), hashed on
-    the mark key — `_sid` for packed (_sid, k) marks, else the four
-    coordinates. The explicit partition count keeps AQE from coalescing the
-    apply into a few tasks. Returns (rows, key) for _apply_union."""
-    packed = "_sid" in marks.columns
-    key = ["_sid"] if packed else ["ax", "ay", "bx", "by"]
-    seg_rows = segs.select(*SEG_COLS, *payload, *(["_sid"] if packed else []))
-    mark_rows = marks.select(*key, *(["k"] if packed else ["px", "py"]))
-    rows = seg_rows.unionByName(mark_rows, allowMissingColumns=True)
+    `_sid`. The explicit partition count keeps AQE from coalescing the apply
+    into a few tasks. The rows feed _apply_union."""
+    seg_rows = segs.select(*SEG_COLS, *payload, "_sid")
+    rows = seg_rows.unionByName(marks.select("_sid", "px", "py"), allowMissingColumns=True)
     n_part = int(segs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return rows.repartition(n_part, *key), key
+    return rows.repartition(n_part, "_sid")
 
 
-def _apply_union(tbl: pa.Table, key: list[str], payload: list[str] | tuple[str, ...] = ()):
+def _apply_union(tbl: pa.Table, payload: list[str] | tuple[str, ...] = ()):
     """Match + apply (A8) over one partition of _union_marks rows (segment
     rows have a non-null `subj`): returns the split segments and the
     `payload` columns copied onto every sub-segment from its parent (the
     reference's default split hook, iOverlay/src/core/edge_data.rs:5-19).
 
-    Marks find their segments by an Arrow hash join on `key`; packed keys
-    decode as px = k DIV _KS - _KB, py' = k MOD _KS - _KB, py = py' when
-    by >= ay else -py'. The numpy _apply_marks kernel drops endpoint and
-    duplicate marks (a pair spanning a cell border is found in every shared
-    cell), orders each chain along its segment and renormalizes it."""
+    Marks find their segments by an Arrow hash join on `_sid`. The numpy
+    _apply_marks kernel drops endpoint and duplicate marks (a pair spanning a
+    cell border is found in every shared cell), orders each chain along its
+    segment and renormalizes it."""
     is_seg = pc.is_valid(tbl.column("subj"))
     seg_t = tbl.filter(is_seg)
     segs = Segments(*(_np_col(seg_t, c) for c in SEG_COLS))
-    ay, by = segs.ay, segs.by
-    packed = "k" in tbl.column_names
-    index = seg_t.select(key).append_column("_i", pa.array(np.arange(len(seg_t))))
-    hit = tbl.filter(pc.invert(is_seg)).select(key + (["k"] if packed else ["px", "py"]))
-    hit = hit.join(index, key, join_type="inner", use_threads=False)
-    mi = _np_col(hit, "_i")
-    if packed:
-        k = _np_col(hit, "k")
-        px = k // _KS - _KB
-        pyt = k % _KS - _KB
-        py = np.where(by[mi] >= ay[mi], pyt, -pyt)
-    else:
-        px, py = _np_col(hit, "px"), _np_col(hit, "py")
-    segs, parent = _apply_marks(segs, (mi, px, py), parents=True)
+    index = seg_t.select(["_sid"]).append_column("_i", pa.array(np.arange(len(seg_t))))
+    hit = tbl.filter(pc.invert(is_seg)).select(["_sid", "px", "py"])
+    hit = hit.join(index, "_sid", join_type="inner", use_threads=False)
+    marks = (_np_col(hit, "_i"), _np_col(hit, "px"), _np_col(hit, "py"))
+    segs, parent = _apply_marks(segs, marks, parents=True)
     return segs, (seg_t.select(list(payload)).take(parent) if payload else None)
 
 
-def _apply_rows(rows: DataFrame, key: list[str], payload: list[StructField] = ()) -> DataFrame:
+def _apply_rows(rows: DataFrame, payload: list[StructField] = ()) -> DataFrame:
     """The apply stage over _union_marks rows: one mapInArrow running
     _apply_union per partition (a segment and its marks may arrive in
     different Arrow batches), emitting SEG_COLS + the `payload` fields."""
@@ -363,7 +314,7 @@ def _apply_rows(rows: DataFrame, key: list[str], payload: list[StructField] = ()
         chunks = list(batches)
         if not chunks:
             return
-        segs, extra = _apply_union(pa.Table.from_batches(chunks), key, names)
+        segs, extra = _apply_union(pa.Table.from_batches(chunks), names)
         if not len(segs):
             return
         cols = [pa.array(getattr(segs, c)) for c in SEG_COLS]
@@ -385,10 +336,9 @@ def apply_marks_df(
     (_union_marks), one mapInArrow matches and splits them in numpy
     (_apply_union), then the closing coincident merge.
 
-    Marks come either packed, (_sid, k) from split_round(packed=True) with
-    `segs` carrying the same `_sid`, or keyed by coordinates, (ax, ay, bx, by,
-    px, py). Payload columns (extra_aggs keys) are duplicated onto every
-    sub-segment — the reference's default split hook
+    Marks are MARKS_SCHEMA rows (split_round's) keyed by the `_sid` that
+    `segs` stores. Payload columns (extra_aggs keys) are duplicated onto
+    every sub-segment — the reference's default split hook
     (iOverlay/src/core/edge_data.rs:5-19).
 
     skip_final_merge=True drops the closing coincident-merge groupBy (a full
@@ -398,7 +348,7 @@ def apply_marks_df(
     collinear-overlap parent pair, and rounding can move points onto new
     coincidences (the fixpoint's next round handles those through its merge)."""
     payload = list(extra_aggs or {})
-    out = _apply_rows(*_union_marks(segs, marks, payload), [segs.schema[c] for c in payload])
+    out = _apply_rows(_union_marks(segs, marks, payload), [segs.schema[c] for c in payload])
     if skip_final_merge:
         return out
     return merge_segments_df(out, extra_aggs)
@@ -413,14 +363,14 @@ class SplitResult:
         strip sizing and extract's fused-cap check use it instead of a count.
     strip_edges: doubled-x fill strip edges from the terminal round's mark
         quantiles, or None (the fill stage then samples its own).
-    pending: the _union_marks (rows, key) of a terminal round whose apply was
-        left to the fill stage's pack, which runs it in the same numpy kernel;
+    pending: the _union_marks rows of a terminal round whose apply was left
+        to the fill stage's pack, which runs it in the same numpy kernel;
         `segs` is that apply as a lazy DataFrame for any other consumer."""
 
     segs: DataFrame
     n_segments: int | None = None
     strip_edges: list[int] | None = None
-    pending: tuple[DataFrame, list[str]] | None = None
+    pending: DataFrame | None = None
 
 
 def split_segments_df(
@@ -429,7 +379,6 @@ def split_segments_df(
     max_rounds: int = 16,
     checkpoint_dir: str | None = None,
     extra_aggs: dict[str, str] | None = None,
-    pre_merged: bool = False,
     bounds: tuple[int, int, int, int, int] | None = None,
     checkpoint_last: bool = True,
 ) -> SplitResult:
@@ -438,10 +387,10 @@ def split_segments_df(
     unless it is a lazy terminal round, its applied segments (parquet under
     checkpoint_dir when set). No round runs a metadata job: the termination
     probe is observed on the marks checkpoint, the next round's count + bbox
-    on the apply checkpoint, which also stores the packed marks' `_sid` key
-    (_checkpoint_segments). The input is checkpointed so after its merge;
-    pre_merged=True skips the merge, and a pre-merged input that already
-    stores `_sid` is used as is, with `bounds` (its _count_and_bounds) if given.
+    on the apply checkpoint, which also stores the marks' `_sid` key
+    (_checkpoint_segments). Without `bounds`, the input is merged and stored
+    by _checkpoint_segments first; with `bounds`, `segs` is already a
+    _checkpoint_segments output and `bounds` its count + bbox.
 
     checkpoint_last=False: the TERMINAL round's apply is returned LAZY (its
     inputs — the round's marks and the pre-round segments — are both
@@ -456,13 +405,8 @@ def split_segments_df(
     instead of running its own sampling job."""
     from ..session import audit_desc
 
-    if not pre_merged:
+    if bounds is None:
         segs, bounds = _checkpoint_segments(merge_segments_df(segs, extra_aggs))
-    elif "_sid" not in segs.columns:
-        segs, bounds = _checkpoint_segments(segs)
-    elif bounds is None:
-        audit_desc(segs.sparkSession, "split:bounds")
-        bounds = _count_and_bounds(segs)
     n_hint = bounds[0]  # upper bound on the output row count (fills sizing hint)
     strip_edges = None
     pending = None
@@ -473,15 +417,8 @@ def split_segments_df(
         # exact solver; extra cover rows are cheap, idle cells cost nothing
         floor = 8 if bounds[0] >= 64 else 1
         cells_per_axis = max(floor, int((bounds[0] / max(target_per_cell, 1)) ** 0.5))
-        # packed marks need every coordinate (incl. snap-rounded marks, which
-        # stay within the bbox ±1) under the 2^30 cap; the stored _sid gives
-        # them a 1-long segment key
-        cmax_round = max(abs(bounds[1]), abs(bounds[2]), abs(bounds[3]), abs(bounds[4]))
-        packed_round = cmax_round < (1 << 30) - 2
         # the scalar kernel's snap radius progression: 2^round, capped at 2^60
-        marks, _ = split_round(
-            segs, cells_per_axis, bounds=bounds, packed=packed_round, radius=1 << min(rnd, 60)
-        )
+        marks, _ = split_round(segs, cells_per_axis, bounds=bounds, radius=1 << min(rnd, 60))
         # the probe rides on the marks checkpoint:
         #  - n == 0: nothing to apply, the fixpoint is reached;
         #  - need_fix (scalar split.split_segments rule): marks that are ALL
@@ -500,13 +437,11 @@ def split_segments_df(
         # added ~1.9 s to the probe at 2 M marks, 255 adds ~0.3 s) and ~256
         # strips keep every strip kernel comfortably sized.
         fracs = ", ".join(str(i / 256) for i in range(1, 256))
-        px_expr = f"k DIV {_KS} - {_KB}" if packed_round else "px"
         # quantiles over a ~5% row sample (percentile_approx skips NULLs): the
         # summary insert per row was ~0.5 s at 2 M marks and scales linearly —
         # a sample steers load balance just as well (strip edges carry no
         # correctness weight). The sample predicate hashes the mark itself, so
         # it is deterministic (rand() is rejected inside aggregates).
-        sample_cols = "k, _sid" if packed_round else "px, py, ax, ay"
         audit_desc(segs.sparkSession, f"split:kernel+ckpt r{rnd}")
         marks, probe = _checkpoint_observed(
             marks,
@@ -516,7 +451,7 @@ def split_segments_df(
                 F.max("col_ovl").alias("any_col"),
                 F.expr(
                     f"percentile_approx("
-                    f"IF(pmod(hash({sample_cols}), 20) = 0, {px_expr}, NULL),"
+                    "IF(pmod(hash(_sid, px, py), 20) = 0, px, NULL),"
                     f" array({fracs}), 100)"
                 ).alias("pq"),
             ],
@@ -534,7 +469,7 @@ def split_segments_df(
             # both inputs are checkpointed, so the fill plan that applies them
             # stays shallow
             pending = _union_marks(segs, marks)
-            applied = _apply_rows(*pending)
+            applied = _apply_rows(pending)
         else:
             applied = apply_marks_df(
                 segs, marks, extra_aggs, skip_final_merge=not need_fix and not has_col
@@ -695,7 +630,7 @@ PACKED_STRIP_SCHEMA = StructType(
 )
 
 
-def _pack_strips_iter(edges, key: list[str] | None = None):
+def _pack_strips_iter(edges, pending: bool):
     """Map-side pack stage (mapInArrow): compute each segment's strip span
     (np.searchsorted against the driver's quantile edges: the strip of a
     doubled-x value is the count of edges <= it, monotone, so the span
@@ -705,8 +640,8 @@ def _pack_strips_iter(edges, key: list[str] | None = None):
     partition. Coord/winding words narrow to int32 per partition when the
     actual values fit (the reader re-widens; fill math is unchanged).
 
-    With `key`, the rows are a SplitResult.pending in _union_marks form
-    (segment rows and mark rows, partitioned on `key`): the same numpy apply
+    With `pending`, the rows are a SplitResult.pending in _union_marks form
+    (segment rows and mark rows, partitioned on `_sid`): the same numpy apply
     as apply_marks_df splits them first, so the terminal round's apply needs
     no stage of its own."""
     E = np.asarray(edges, dtype=np.int64)
@@ -718,8 +653,8 @@ def _pack_strips_iter(edges, key: list[str] | None = None):
         tbl = pa.Table.from_batches(chunks)
         if not len(tbl):
             return
-        if key:
-            segs, _ = _apply_union(tbl, key)
+        if pending:
+            segs, _ = _apply_union(tbl)
         else:
             segs = Segments(*(_np_col(tbl, c) for c in SEG_COLS))
         yield _pack_arrays(segs, E)
@@ -912,14 +847,11 @@ def compute_fills_df(
             edges = sorted(set(int(q) for q in qs))
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = None
-    if split.pending is not None:
-        # terminal apply + pack in one python stage, behind the one exchange
-        # that brings each pre-round segment and its pending marks together
-        rows, key = split.pending
-    else:
-        rows = segs.select(*SEG_COLS)
-    packed = rows.mapInArrow(_pack_strips_iter(edges, key), schema=PACKED_STRIP_SCHEMA)
+    pending = split.pending is not None
+    # with a pending apply: terminal apply + pack in one python stage, behind
+    # the one exchange that brings each pre-round segment and its marks together
+    rows = split.pending if pending else segs.select(*SEG_COLS)
+    packed = rows.mapInArrow(_pack_strips_iter(edges, pending), schema=PACKED_STRIP_SCHEMA)
     # the strip hash shuffle carries thousands of blob rows instead of millions
     # of segment rows (same payload bytes, none of the per-row serialization)
     return packed.repartition(n_part, "strip").mapInArrow(
@@ -1032,7 +964,6 @@ def distributed_overlay(
     split = split_segments_df(
         merged,
         checkpoint_dir=checkpoint_dir,
-        pre_merged=True,
         bounds=bounds,
         # the fill stage's shuffle is the sole consumer of the terminal apply:
         # its pack stage runs it (SplitResult.pending)

@@ -1,12 +1,18 @@
 """Distributed contour extraction for the huge-overlay pipeline (SURVEY.md A11-A14).
 
-boundary filter  -> Column expressions over the fill bits
-components       -> alternating large-star / small-star label propagation
+boundary filter  -> Column expressions over the fill bits (or the fill
+                    kernel's boundary blobs, already filtered)
+fused extract    -> up to 8 M boundary edges: ONE task labels components
+                    (numpy union-find) and walks + validates every ring
+components       -> past it: one union-find task (repartition(1).mapInArrow)
+                    or alternating large-star / small-star label propagation
                     (O(log n) rounds; each round = two joins + aggregates)
-per-component    -> groupBy(component).applyInPandas running the exact kernel walk
+per-component    -> salted groupBy(_salt).applyInArrow running the exact
+                    kernel walk on each component of the group
 hole binding     -> distributed "first segment strictly below the anchor" scan:
-                    anchors x boundary segments equi-joined on x-bands, max_by on
-                    the exact rational y-at-x, hole->hole chains resolved driver-side
+                    anchors x hull segments equi-joined on x-bands, crossing
+                    parity + max on the exact rational y-at-x; a hole's
+                    innermost containing hull is its shape, so no chain step
                     (reference ShapeBinder, iOverlay/src/bind/solver.rs:25-236)
 """
 
@@ -89,16 +95,23 @@ def _cc_label_arrays(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarr
     return nodes, parent
 
 
-def _union_find_kernel(tbl: pa.Table) -> pa.Table:
-    """Single-task connected components over one edge batch:
-    (node, component = min node id of the component). Arrow-native: the edge
-    columns come in zero-copy and the node map goes back as two flat int64
-    arrays — no pandas wrap on a path that moves millions of rows through one
-    task."""
+def _union_find_iter(batches):
+    """Single-task connected components (mapInArrow over the ONE partition
+    holding every edge): (node, component = min node id of the component).
+    Arrow-native: the edge columns come in zero-copy and the node map goes
+    back as two flat int64 arrays — no pandas wrap on a path that moves
+    millions of rows through one task."""
+    chunks = list(batches)
+    if not chunks:
+        return
+    tbl = pa.Table.from_batches(chunks)
+    if not len(tbl):
+        return
     u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     nodes, parent = _cc_label_arrays(u, v)
-    return pa.table({"node": pa.array(nodes), "component": pa.array(nodes[parent])})
+    out = pa.table({"node": pa.array(nodes), "component": pa.array(nodes[parent])})
+    yield from out.to_batches()
 
 
 def connected_components(
@@ -111,7 +124,7 @@ def connected_components(
 
     Strategy dispatch (the reference Solver's list/tree/frag idea, A3): below
     `local_threshold` edges the whole problem fits one executor task — a single
-    applyInPandas union-find (ONE job, no driver loop); above it, alternating
+    union-find task (ONE job, no driver loop); above it, alternating
     large-star/small-star label propagation (Kiveris et al.), O(log n) rounds of
     joins + aggregates, each round localCheckpointed to cut lineage. Both paths
     produce identical output (component = min node id of the component).
@@ -125,13 +138,10 @@ def connected_components(
     canon = edges.select("u", "v").where(F.col("u") != F.col("v"))
     probe = count_hint if count_hint is not None else canon.limit(local_threshold + 1).count()
     if probe <= local_threshold:
-        schema = StructType(
-            [StructField("node", LongType()), StructField("component", LongType())]
-        )
-        return (
-            canon.withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInArrow(lambda tbl: _union_find_kernel(tbl), schema=schema)
+        # repartition(1) + mapInArrow, not a constant-key grouped map: the
+        # grouped-map plan sorts the partition by its key before grouping
+        return canon.repartition(1).mapInArrow(
+            _union_find_iter, schema="node long, component long"
         )
     e = canon.distinct()
     # undirected -> keep both directions for neighborhood construction
@@ -679,12 +689,8 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
 
 # one fused task at 8M edges holds ~500MB of working arrays (input columns +
 # node ids + labels + ring buffers) — comfortably inside one executor; beyond
-# it the broadcast-CC (<=_CC_LOCAL_EDGES comp map) and iterative-CC plans
-# take over
+# it connected_components labels the edges and a salted walk takes over
 _FUSED_EXTRACT_CAP = 8_000_000
-# edge count up to which CC runs as ONE union-find task and its comp map is
-# broadcast back (the map is <= 2 longs per edge: ~16 bytes/edge)
-_CC_LOCAL_EDGES = 4_000_000
 
 
 def extract_shapes_df(
@@ -752,30 +758,15 @@ def extract_shapes_df(
     b = b.mapInArrow(
         _blob_rows_iter, schema="ax long, ay long, bx long, by long, fill int"
     )
-    # matches the CC dispatch below: the single-task union-find at 4M edges is
-    # a ~300MB working set (8M node ids + labels), well inside one executor,
-    # and its comp map (~64MB) is still broadcast-friendly
-    small_cc = n_edges <= _CC_LOCAL_EDGES
     if cmax is not None and int(cmax) >= _NODE_CAP:
         bb = _wide_node_ids(b)
-        comp = connected_components(
-            bb.select("u", "v"), local_threshold=_CC_LOCAL_EDGES, count_hint=n_edges
-        )
-        if small_cc:
-            comp = F.broadcast(comp)
+        comp = connected_components(bb.select("u", "v"), count_hint=n_edges)
         labeled = bb.join(comp, on=bb["u"] == comp["node"]).drop("node", "u", "v")
     else:
         edges = b.select(
             _node_expr("ax", "ay").alias("u"), _node_expr("bx", "by").alias("v")
         )
-        comp = connected_components(
-            edges, local_threshold=_CC_LOCAL_EDGES, count_hint=n_edges
-        )
-        if small_cc:
-            # the single-task CC output is at most 2x the edge bound — small
-            # enough to broadcast, which keeps the boundary set map-side (its
-            # only remaining shuffle is the salt groupBy below)
-            comp = F.broadcast(comp)
+        comp = connected_components(edges, count_hint=n_edges)
         labeled = (
             b.withColumn("u", _node_expr("ax", "ay"))
             .join(comp, on=F.col("u") == comp["node"])

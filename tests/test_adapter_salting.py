@@ -47,7 +47,11 @@ def test_salting_growth_proportional_to_hot_share(spark):
     identical to an unsalted (huge-threshold) round. split_round does not
     dedupe (a pair is found once per shared cell), so the marks compare as
     sets."""
-    from ioverlay_spark.operators.distributed import salted_cover, split_round
+    from ioverlay_spark.operators.distributed import (
+        _checkpoint_segments,
+        salted_cover,
+        split_round,
+    )
 
     # one dense bundle in the lower-left cell + a sparse far-away diagonal field
     rows = []
@@ -69,8 +73,10 @@ def test_salting_growth_proportional_to_hot_share(spark):
     assert n_salted < n_plain + 16 * hot_rows + 1
     assert n_plain >= 80  # sanity: every segment covered at least once
 
-    marks_salted, _ = split_round(df, cells_per_axis=32, hot_threshold=8)
-    marks_plain, _ = split_round(df, cells_per_axis=32, hot_threshold=10**9)
+    # split rounds read the `_sid` row key their marks refer to
+    sdf, _ = _checkpoint_segments(df)
+    marks_salted, _ = split_round(sdf, cells_per_axis=32, hot_threshold=8)
+    marks_plain, _ = split_round(sdf, cells_per_axis=32, hot_threshold=10**9)
     a = set(map(tuple, marks_salted.collect()))
     b = set(map(tuple, marks_plain.collect()))
     assert a == b and len(a) > 0
@@ -82,6 +88,7 @@ def test_split_round_salting_triggers_and_stays_correct(spark):
     from ioverlay_spark.kernel import build_segments, sort_and_merge, split_segments
     from ioverlay_spark.kernel.segments import Segments
     from ioverlay_spark.operators.distributed import (
+        _checkpoint_segments,
         apply_marks_df,
         merge_segments_df,
         split_round,
@@ -102,15 +109,16 @@ def test_split_round_salting_triggers_and_stays_correct(spark):
         )
     ]
     df = spark.createDataFrame(rows, ["ax", "ay", "bx", "by", "subj", "clip"])
-    segs = merge_segments_df(df).localCheckpoint(eager=True)
-    for _ in range(8):
-        marks, loads = split_round(segs, cells_per_axis=2, hot_threshold=4)
+    segs, _ = _checkpoint_segments(merge_segments_df(df))
+    for rnd in range(8):
+        # the fixpoint's snap radius progression, 2^round
+        marks, loads = split_round(segs, cells_per_axis=2, hot_threshold=4, radius=1 << rnd)
         # the salting branch must actually engage on this input
         assert loads.where(F.col("count") > 4).count() >= 1
         marks = marks.localCheckpoint(eager=True)
         if marks.isEmpty():
             break
-        segs = apply_marks_df(segs, marks).localCheckpoint(eager=True)
+        segs, _ = _checkpoint_segments(apply_marks_df(segs, marks))
 
     got = sorted(
         (r["ax"], r["ay"], r["bx"], r["by"], r["subj"], r["clip"])

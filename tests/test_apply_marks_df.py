@@ -3,18 +3,16 @@ apply_marks_df) against the scalar reference walk kernel/split._apply_marks_ref.
 
 Seeded random segments (both y directions, zero and non-zero counts, one int
 payload column) and random marks per segment: interior points, endpoints and
-repeats. Each mark form the split round emits is covered: packed (_sid, k)
-keys at shift 0 and coordinate-keyed (px, py) marks at shift 2^40. The
-comparison is the exact multiset of (ax, ay, bx, by, subj, clip, payload) with
-the closing merge skipped, so every sub-segment is seen as emitted."""
+repeats. The split round's one mark form, (_sid, px, py) keyed by the
+segment's `_sid`, is covered at shift 0 and at shift 2^40. The comparison is
+the exact multiset of (ax, ay, bx, by, subj, clip, payload) with the closing
+merge skipped, so every sub-segment is seen as emitted."""
 
 import numpy as np
 import pytest
 
 from ioverlay_spark.kernel.segments import Segments
 from ioverlay_spark.kernel.split import _apply_marks_ref
-
-KB, KS = 1 << 30, 1 << 31
 
 
 def _random_case(seed: int, shift: int):
@@ -35,7 +33,7 @@ def _random_case(seed: int, shift: int):
         ],
         axis=1,
     ).astype(np.int64)
-    # distinct segments: coordinate-keyed marks identify their segment
+    # distinct segments
     xy = xy[np.sort(np.unique(xy, axis=0, return_index=True)[1])] + shift
     n = len(xy)
     segs = Segments(
@@ -81,41 +79,26 @@ def _expected(segs: Segments, data: np.ndarray, marks) -> list[tuple]:
     return sorted(rows)
 
 
-def _seg_rows(segs, data, with_sid):
-    rows = []
-    for i in range(len(segs)):
-        r = tuple(
-            int(v[i]) for v in (segs.ax, segs.ay, segs.bx, segs.by, segs.subj, segs.clip)
-        ) + (int(data[i]),)
-        rows.append(r + (i,) if with_sid else r)
-    return rows
+def _seg_rows(segs, data):
+    """Segment rows with payload, `_sid` = the segment's index."""
+    return [
+        tuple(int(v[i]) for v in (segs.ax, segs.ay, segs.bx, segs.by, segs.subj, segs.clip))
+        + (int(data[i]), i)
+        for i in range(len(segs))
+    ]
 
 
-@pytest.mark.parametrize("form", ["packed", "wide"])
-def test_apply_marks_df_matches_reference(spark, form):
-    from ioverlay_spark.operators.distributed import apply_marks_df
+@pytest.mark.parametrize("shift", [0, 1 << 40], ids=["narrow", "wide"])
+def test_apply_marks_df_matches_reference(spark, shift):
+    from ioverlay_spark.operators.distributed import MARKS_SCHEMA, apply_marks_df
 
-    shift = 0 if form == "packed" else 1 << 40
     cols = ["ax", "ay", "bx", "by", "subj", "clip", "data"]
     for seed in range(3):
         segs, data, marks = _random_case(seed, shift)
-        if form == "packed":
-            seg_df = spark.createDataFrame(_seg_rows(segs, data, True), cols + ["_sid"])
-            rows = []
-            for i, x, y in marks:
-                yt = y if segs.by[i] >= segs.ay[i] else -y
-                rows.append((i, (x + KB) * KS + (yt + KB), False, False))
-            mark_df = spark.createDataFrame(rows, ["_sid", "k", "is_round", "col_ovl"])
-        else:
-            seg_df = spark.createDataFrame(_seg_rows(segs, data, False), cols)
-            rows = [
-                (int(segs.ax[i]), int(segs.ay[i]), int(segs.bx[i]), int(segs.by[i]), x, y,
-                 False, False)
-                for i, x, y in marks
-            ]
-            mark_df = spark.createDataFrame(
-                rows, ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"]
-            )
+        seg_df = spark.createDataFrame(_seg_rows(segs, data), cols + ["_sid"])
+        mark_df = spark.createDataFrame(
+            [(i, x, y, False, False) for i, x, y in marks], MARKS_SCHEMA
+        )
         out = apply_marks_df(seg_df, mark_df, {"data": "max(data)"}, skip_final_merge=True)
         assert out.columns == cols
         got = sorted(tuple(int(v) for v in r) for r in out.collect())

@@ -51,7 +51,8 @@ def test_connected_components_paths_agree(spark):
     """The single-task union-find path and the alternating-star label
     propagation path must produce identical (node, component) output —
     component = min node id — on a graph with chains, cycles, a star, and
-    isolated-pair components."""
+    isolated-pair components. The single-task path is one repartition(1)
+    mapInArrow: no grouped map and no Sort ahead of it."""
     import numpy as np
 
     from ioverlay_spark.operators.distributed_extract import connected_components
@@ -68,7 +69,11 @@ def test_connected_components_paths_agree(spark):
     edges += [(30_000 + 2 * i, 30_001 + 2 * i) for i in range(100)]
     rng.shuffle(edges)
     df = spark.createDataFrame([(int(u), int(v)) for u, v in edges], ["u", "v"])
-    small = connected_components(df).toPandas().sort_values("node").reset_index(drop=True)
+    one_task = connected_components(df)
+    plan = one_task._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInArrow" not in plan and "Sort" not in plan, plan
+    small = one_task.toPandas().sort_values("node").reset_index(drop=True)
     large = (
         connected_components(df, local_threshold=0)
         .toPandas()

@@ -555,22 +555,21 @@ def test_fused_apply_pack_plan_and_fills(spark):
     the boundary blobs hold exactly the scalar kernel's boundary fills."""
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
+        _checkpoint_segments,
         compute_fills_df,
         contours_to_segments_df,
         merge_segments_df,
         split_segments_df,
-        _count_and_bounds,
     )
 
     subj, clip = lines_net(48, 20)
     df = spark.createDataFrame(
         rings_to_contours_rows(subj, clip), ["role", "cid", "pts_x", "pts_y"]
     ).localCheckpoint()
-    merged = merge_segments_df(contours_to_segments_df(spark, df)).localCheckpoint()
-    bounds = _count_and_bounds(merged)
-    split = split_segments_df(
-        merged, pre_merged=True, bounds=bounds, checkpoint_last=False
+    merged, bounds = _checkpoint_segments(
+        merge_segments_df(contours_to_segments_df(spark, df))
     )
+    split = split_segments_df(merged, bounds=bounds, checkpoint_last=False)
     assert split.pending is not None
 
     fills = compute_fills_df(split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT)
@@ -620,9 +619,10 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     snap-rounding input that needs a second round (a non-terminal apply and
     its observed bounds; the rounds must grow the snap radius as the kernel
     does), the same through parquet checkpoints (checkpoint_dir) and shifted
-    by 2^40 (coordinate-keyed marks), and two thin strips crossing with 2^41
-    extents (XOR and INTERSECT): their segments are past the cell kernel's
-    int64 gate, so every candidate pair must reach the python-int solver."""
+    by 2^40, and two thin strips crossing with 2^41 extents (XOR and
+    INTERSECT): their segments are past the cell kernel's int64 gate, so
+    every candidate pair must reach the python-int solver. Every round ships
+    the one mark form, (_sid, px, py, is_round, col_ovl), at every width."""
     import ioverlay_spark.operators.distributed as dist
     from ioverlay_spark.options import FillRule, OverlayRule
 
@@ -630,8 +630,9 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     real_split_round = dist.split_round
 
     def counting_split_round(*args, **kwargs):
-        rounds.append(kwargs.get("packed"))
-        return real_split_round(*args, **kwargs)
+        marks, loads = real_split_round(*args, **kwargs)
+        rounds.append(marks.columns)
+        return marks, loads
 
     monkeypatch.setattr(dist, "split_round", counting_split_round)
     rule, ckpt = OverlayRule.XOR, None
@@ -666,7 +667,7 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
         assert len(rounds) == 1
     else:
         assert len(exp) > 0 and len(rounds) >= 2
-        assert rounds[0] is not case.startswith("wide")
+    assert all(cols == ["_sid", "px", "py", "is_round", "col_ovl"] for cols in rounds), rounds
     if case == "checkpoint_dir":
         assert (tmp_path / "split_r0").is_dir()
 
@@ -693,35 +694,28 @@ def _brute_marks(segs, radius):
     return out
 
 
-def _cell_kernel_marks(segs, packed, radius, rng):
+def _cell_kernel_marks(segs, radius, rng):
     """_find_marks_kernel's marks over `segs` (rows shuffled) as the
-    _brute_marks set; packed marks are decoded through their `_sid`."""
-    from ioverlay_spark.operators.distributed import _KB, _KS, _find_marks_kernel
+    _brute_marks set, each mark's segment found through its `_sid`."""
+    from ioverlay_spark.operators.distributed import _find_marks_kernel
 
     rows = [segs[i] for i in rng.permutation(len(segs))]
     sids = (np.arange(len(rows)) * 7 + 3).tolist()
     cols = dict(zip(("ax", "ay", "bx", "by"), map(list, zip(*rows))), _sid=sids)
     tbl = pa.table(cols, schema=pa.schema([(c, pa.int64()) for c in cols]))
-    out = _find_marks_kernel(tbl, packed=packed, radius=radius).to_pydict()
-    if packed:
-        seg = [rows[sids.index(i)] for i in out["_sid"]]
-        yt = [k % _KS - _KB for k in out["k"]]
-        px = [k // _KS - _KB for k in out["k"]]
-        py = [y if s[3] >= s[1] else -y for s, y in zip(seg, yt)]
-    else:
-        seg = list(zip(out["ax"], out["ay"], out["bx"], out["by"]))
-        px, py = out["px"], out["py"]
-    return set(zip(seg, px, py, out["is_round"], out["col_ovl"]))
+    out = _find_marks_kernel(tbl, radius=radius).to_pydict()
+    seg = [rows[sids.index(i)] for i in out["_sid"]]
+    return set(zip(seg, out["px"], out["py"], out["is_round"], out["col_ovl"]))
 
 
 def test_cell_kernel_matches_brute_force_cross_pair(monkeypatch):
-    """The distributed cell kernel (_find_marks_kernel), in both mark forms,
-    finds exactly the marks of the python-int cross_pair over every
-    bbox-overlapping pair: seeded random segments plus collinear chains,
-    T-junctions and a duplicated row, at 2^29, 2^33, 2^40 and 2^60 (packed
-    only where every coordinate is under 2^30 - 2). A small soup translated by
-    2^40 keeps every extent under the int64 gate, so it must give the
-    untranslated marks shifted, with no python-int cross_pair call."""
+    """The distributed cell kernel (_find_marks_kernel) finds exactly the
+    marks of the python-int cross_pair over every bbox-overlapping pair:
+    seeded random segments plus collinear chains, T-junctions and a
+    duplicated row, at 2^29, 2^33, 2^40 and 2^60, all in the one
+    (_sid, px, py) mark form. A small soup translated by 2^40 keeps every
+    extent under the int64 gate, so it must give the untranslated marks
+    shifted, with no python-int cross_pair call."""
     import ioverlay_spark.kernel.split as sp
     from ioverlay_spark.kernel.segments import Segments, build_segments
 
@@ -745,8 +739,7 @@ def test_cell_kernel_matches_brute_force_cross_pair(monkeypatch):
         for radius in (2, 1 << 24):
             exp = _brute_marks(segs, radius)
             assert len(exp) > 0
-            for packed in (False, True) if S < (1 << 30) - 2 else (False,):
-                assert _cell_kernel_marks(segs, packed, radius, rng) == exp, (e, radius, packed)
+            assert _cell_kernel_marks(segs, radius, rng) == exp, (e, radius)
 
     # every python-int cross_pair call runs split._orient, whichever module
     # bound the name cross_pair
@@ -764,26 +757,26 @@ def test_cell_kernel_matches_brute_force_cross_pair(monkeypatch):
     segs = list(zip(soup.ax.tolist(), soup.ay.tolist(), soup.bx.tolist(), soup.by.tolist()))
     t = 1 << 40
     moved = [tuple(v + t for v in s) for s in segs]
-    base = _cell_kernel_marks(segs, False, 2, rng)
+    base = _cell_kernel_marks(segs, 2, rng)
     assert base == _brute_marks(segs, 2) and len(base) > 0
     exp = {(tuple(v + t for v in s), x + t, y + t, r, c) for s, x, y, r, c in base}
     monkeypatch.setattr(sp, "_orient", counted)
-    assert _cell_kernel_marks(moved, False, 2, rng) == exp
+    assert _cell_kernel_marks(moved, 2, rng) == exp
     assert calls[0] == 0
 
 
-@pytest.mark.parametrize("form", ["packed", "wide"])
-def test_apply_marks_df_payload_matches_reference(spark, form):
+@pytest.mark.parametrize("shift", [0, 1 << 40], ids=["narrow", "wide"])
+def test_apply_marks_df_payload_matches_reference(spark, shift):
     """The one-exchange apply against the scalar walk _apply_marks_ref with a
     string payload column: every sub-segment carries its parent's payload,
-    unmarked segments pass through, marks whose key matches no segment are
+    unmarked segments pass through, marks whose `_sid` matches no segment are
     ignored, and a segment whose marks arrive in a different Arrow batch
-    (many marks per segment) is still split at all of them."""
+    (many marks per segment) is still split at all of them; at shift 0 and
+    at shift 2^40, in the one (_sid, px, py) mark form."""
     from ioverlay_spark.kernel.segments import Segments
     from ioverlay_spark.kernel.split import _apply_marks_ref
-    from ioverlay_spark.operators.distributed import _KB, _KS, apply_marks_df
+    from ioverlay_spark.operators.distributed import MARKS_SCHEMA, apply_marks_df
 
-    shift = 0 if form == "packed" else 1 << 40
     rng = np.random.default_rng(3)
     segs = [(0, 0, 1000, 0), (0, 0, 0, 1000), (0, 0, 600, 900), (5, 900, 905, 0), (7, 7, 9, 9)]
     segs = [tuple(v + shift for v in s) for s in segs]
@@ -799,23 +792,12 @@ def test_apply_marks_df_payload_matches_reference(spark, form):
     marks.append((3, shift + 5, shift + 900))  # an endpoint mark only
     rows = [s + c + (tag,) for s, c, tag in zip(segs, counts, tags)]
     cols = ["ax", "ay", "bx", "by", "subj", "clip", "tag"]
-    if form == "packed":
-        seg_df = spark.createDataFrame(
-            [r + (100 + i,) for i, r in enumerate(rows)], cols + ["_sid"]
-        )
-        mrows = []
-        for i, x, y in marks + [(7, 3, 3)]:  # _sid 107 matches no segment
-            ay, by = (segs[i][1], segs[i][3]) if i < len(segs) else (0, 1)
-            yt = y if by >= ay else -y
-            mrows.append((100 + i, (x + _KB) * _KS + (yt + _KB), False, False))
-        mark_df = spark.createDataFrame(mrows, ["_sid", "k", "is_round", "col_ovl"])
-    else:
-        seg_df = spark.createDataFrame(rows, cols)
-        mrows = [segs[i] + (x, y, False, False) for i, x, y in marks]
-        mrows.append((shift, shift, shift + 1, shift + 1, shift, shift, False, False))
-        mark_df = spark.createDataFrame(
-            mrows, ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"]
-        )
+    seg_df = spark.createDataFrame(
+        [r + (100 + i,) for i, r in enumerate(rows)], cols + ["_sid"]
+    )
+    # _sid 107 matches no segment
+    mrows = [(100 + i, x, y, False, False) for i, x, y in marks + [(7, shift, shift)]]
+    mark_df = spark.createDataFrame(mrows, MARKS_SCHEMA)
     out = apply_marks_df(seg_df, mark_df, {"tag": "max(tag)"}, skip_final_merge=True)
     got = sorted(tuple(r) for r in out.collect())
 

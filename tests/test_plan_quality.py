@@ -192,28 +192,25 @@ def test_apply_marks_plan_is_one_arrow_map(spark):
     mapInArrow running the numpy apply. No JVM chain machinery may come back:
     no array_sort / zip_with (the per-row chain sort and pairing), no Generate
     (the sub-segment explode) and no Window (a lead()-style pairing). Checked
-    for both mark forms: coordinate-keyed and packed (_sid, k)."""
-    from ioverlay_spark.operators.distributed import apply_marks_df
+    for the one (_sid, px, py) mark form at shift 0 and at shift 2^40."""
+    from ioverlay_spark.operators.distributed import MARKS_SCHEMA, apply_marks_df
 
-    segs = spark.createDataFrame(
-        [(0, 0, 100, 100, 1, 0)], ["ax", "ay", "bx", "by", "subj", "clip"]
-    )
-    wide = spark.createDataFrame(
-        [(0, 0, 100, 100, 50, 50, False, False)],
-        ["ax", "ay", "bx", "by", "px", "py", "is_round", "col_ovl"],
-    )
-    packed = spark.createDataFrame(
-        [(0, ((50 + (1 << 30)) << 31) + 50 + (1 << 30), False, False)],
-        ["_sid", "k", "is_round", "col_ovl"],
-    )
-    for s, marks in ((segs, wide), (segs.withColumn("_sid", F.lit(0).cast("long")), packed)):
-        df = apply_marks_df(s, marks)
+    for t in (0, 1 << 40):
+        segs = spark.createDataFrame(
+            [(t, t, t + 100, t + 100, 1, 0, 0)],
+            ["ax", "ay", "bx", "by", "subj", "clip", "_sid"],
+        )
+        marks = spark.createDataFrame([(0, t + 50, t + 50, False, False)], MARKS_SCHEMA)
+        df = apply_marks_df(segs, marks)
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         phys = plan_str(df)
         assert phys.count("MapInArrow") == 1, phys
         for bad in ("Generate", "array_sort", "ArraySort", "zip_with", "ZipWith", "Window"):
             assert bad not in opt and bad not in phys, bad
-        assert sorted(map(tuple, df.collect())) == [(0, 0, 50, 50, 1, 0), (50, 50, 100, 100, 1, 0)]
+        assert sorted(map(tuple, df.collect())) == [
+            (t, t, t + 50, t + 50, 1, 0),
+            (t + 50, t + 50, t + 100, t + 100, 1, 0),
+        ]
 
 
 def test_strip_assignment_has_no_interpreted_filter(spark):
