@@ -1,23 +1,32 @@
-"""End-to-end audit of the six reference perf scenarios added in round 4
-(performance/rust_app/src/test/test_{1,4,5,6,7,8}_*.rs; geometry re-derived in
-ioverlay_spark/scenarios.py, correctness oracles in tests/test_perf_scenarios.py).
+"""End-to-end audit of the reference perf scenarios: the six of
+performance/rust_app/src/test/test_{1,4,5,6,7,8}_*.rs (geometry re-derived in
+ioverlay_spark/scenarios.py, correctness oracles in tests/test_perf_scenarios.py)
+and the spiral self-union of test_3_spiral.rs (geometry re-derived from
+util.rs:181-227 below; SUBJECT / NON_ZERO on the i32-scale quantized band).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
     python audits/scenarios_audit.py not_overlap 256 512  # one scenario, chosen n
-    python audits/scenarios_audit.py windows 512 --spark  # distributed path (local[16])
+    python audits/scenarios_audit.py spiral 65536          # the spiral self-union
+    python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
     ... --reps 3
 
-Each row prints the measured wall (best of reps), the closed-form oracle verdict
-where one exists, and the reference's published i32 multithreading-on s/op for
-that n (the comment blocks in the test_*.rs files)."""
+Each row prints the measured wall (best of reps) with the CPU seconds of that
+rep (this process's threads on the scalar path; the driver, JVM and Python
+workers together with --spark), the closed-form oracle verdict where one
+exists, and the reference's published i32 multithreading-on s/op for that n
+(the comment blocks in the test_*.rs files)."""
+import math
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 import numpy as np
+from procs import ProcTree
 
 from ioverlay_spark import scenarios
 from ioverlay_spark.kernel import overlay, ring_area2
@@ -25,6 +34,7 @@ from ioverlay_spark.options import FillRule, OverlayRule
 
 # reference i32 MT-on seconds per op, keyed by n (comment blocks, test_*.rs)
 REF = {
+    "spiral": {65536: 0.0742, 262144: 0.3509, 524288: 0.7445},
     "not_overlap": {256: 0.036901, 512: 0.177118, 1024: 0.745187, 2048: 3.282416},
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
     "nested_squares": {16384: 0.322707, 32768: 0.653741, 65536: 2.410910},
@@ -34,6 +44,7 @@ REF = {
 }
 
 DEFAULT_NS = {
+    "spiral": [65536, 262144, 524288],
     "not_overlap": [256, 512, 1024],
     "windows": [128, 256, 512, 1024],
     "nested_squares": [16384, 32768],
@@ -43,6 +54,7 @@ DEFAULT_NS = {
 }
 
 RULES = {
+    "spiral": OverlayRule.SUBJECT,
     "not_overlap": OverlayRule.UNION,
     "windows": OverlayRule.DIFFERENCE,
     "nested_squares": OverlayRule.XOR,
@@ -51,7 +63,32 @@ RULES = {
     "wind_mill": OverlayRule.INTERSECT,
 }
 
-FLOAT_SCENARIOS = {"corrosion", "concentric"}
+FLOAT_SCENARIOS = {"corrosion", "concentric", "spiral"}
+
+
+def spiral(count: int, radius: float) -> np.ndarray:
+    """Zigzag spiral band (width 0.1 r, zigzag +-0.2 r) whose inner and outer
+    rails cross each other: one float ring of 4 * count points."""
+    a_path, b_path = [], []
+    a, r = 0.0, radius
+    w = 0.1 * radius
+    p0 = np.array([0.0, 0.0])
+    for i in range(count):
+        sx, sy = math.cos(a), math.sin(a)
+        rr = r + 0.2 * radius if i % 2 == 0 else r - 0.2 * radius
+        p = np.array([rr * sx, rr * sy])
+        d = p - p0
+        n = d / math.hypot(d[0], d[1])
+        t = np.array([w * -n[1], w * n[0]])
+        a_path.append(p0 + t)
+        a_path.append(p + t)
+        b_path.append(p0 - t)
+        b_path.append(p - t)
+        a += radius / r
+        r = radius * (1.0 + a / (2.0 * math.pi))
+        p0 = p
+    b_path.reverse()
+    return np.array(a_path + b_path)
 
 
 def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | None,
@@ -68,11 +105,13 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
         return count == 4 * n * n and (
             base_cell_area2 is None or area2 == n * n * base_cell_area2
         )
+    if name == "spiral":
+        return count == 1 and (rings is None or rings == 1)
     return None  # corrosion/concentric: no closed form; identities live in tests
 
 
 def build_int_inputs(name: str, n: int):
-    subj, clip = getattr(scenarios, name)(n)
+    subj, clip = ([spiral(n, 100.0)], []) if name == "spiral" else getattr(scenarios, name)(n)
     if name in FLOAT_SCENARIOS:
         from ioverlay_spark.functions.float_shell import NumpyFloatAdapter
 
@@ -90,18 +129,20 @@ def run_scalar(name: str, ns: list[int], reps: int):
     for n in ns:
         subj, clip = build_int_inputs(name, n)
         npolys = len(subj) + len(clip)
-        best, count, area2 = float("inf"), 0, 0
+        best, cpu, count, area2 = float("inf"), 0.0, 0, 0
         for _ in range(reps):
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), time.process_time()
             shapes = overlay(subj, clip, RULES[name], FillRule.NON_ZERO)
-            best = min(best, time.perf_counter() - t0)
+            wall = time.perf_counter() - t0
+            if wall < best:
+                best, cpu = wall, time.process_time() - c0
             count = sum(1 for _ in shapes)
             rings = sum(len(s) for s in shapes)
             area2 = sum(ring_area2(r) for s in shapes for r in s)
         ok = oracle(name, n, count, area2, base_cell, rings)
         ref = REF[name].get(n)
         print(
-            f"SCALAR {name} n={n} polys={npolys} wall={best:.3f}s shapes={count} "
+            f"SCALAR {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s shapes={count} "
             f"rings={rings} area2={area2} oracle={'n/a' if ok is None else ok} "
             f"ref_i32_mt={ref if ref is not None else 'n/a'}"
             + (f" ratio={best/ref:.1f}x" if ref else "")
@@ -109,23 +150,16 @@ def run_scalar(name: str, ns: list[int], reps: int):
 
 
 def run_spark(name: str, ns: list[int], reps: int, monolithic: bool = False):
-    from pyspark.sql import SparkSession
-
     from ioverlay_spark.operators.cluster_overlay import cluster_overlay
     from ioverlay_spark.operators.distributed import (
         contours_to_segments_df,
         distributed_overlay,
     )
+    from ioverlay_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
+    tree = ProcTree()
 
     def _noop(it):
         import ioverlay_spark.operators.distributed_extract  # noqa: F401
@@ -159,9 +193,9 @@ def run_spark(name: str, ns: list[int], reps: int, monolithic: bool = False):
             }
         )
         df = spark.createDataFrame(tbl).localCheckpoint(eager=True)
-        best, count, area2 = float("inf"), 0, 0
+        best, cpu, count, area2 = float("inf"), 0.0, 0, 0
         for _ in range(reps):
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), sum(tree.cpu().values())
             if monolithic:
                 out = distributed_overlay(
                     contours_to_segments_df(spark, df),
@@ -176,13 +210,15 @@ def run_spark(name: str, ns: list[int], reps: int, monolithic: bool = False):
             agg = out.selectExpr(
                 "count(*) AS rings", "sum(area2) AS area2", shapes_expr
             ).first()
-            best = min(best, time.perf_counter() - t0)
+            wall = time.perf_counter() - t0
+            if wall < best:
+                best, cpu = wall, sum(tree.cpu().values()) - c0
             count, area2 = agg["shapes"], int(agg["area2"])
             rings = agg["rings"]
         ok = oracle(name, n, count, area2, base_cell, rings)
         ref = REF[name].get(n)
         print(
-            f"SPARK {name} n={n} polys={npolys} wall={best:.3f}s shapes={count} "
+            f"SPARK {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s shapes={count} "
             f"rings={rings} area2={area2} oracle={'n/a' if ok is None else ok} "
             f"ref_i32_mt={ref if ref is not None else 'n/a'}"
             + (f" ratio={best/ref:.1f}x" if ref else "")

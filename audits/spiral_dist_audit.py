@@ -6,7 +6,7 @@ import numpy as np
 import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from spiral_audit import spiral
+from scenarios_audit import spiral
 from ioverlay_spark.session import get_spark
 
 n = int(sys.argv[1]) if len(sys.argv) > 1 else 262144

@@ -20,6 +20,9 @@ bbox-overlap graph over input contours:
 
 Hence running the kernel per component (as jobs of the batched tile kernel —
 the flagship's vectorized engine) is exactly equivalent to the monolithic run.
+The components come from the one bbox-overlap enumerator's spanning edges
+(overlap.overlap_edges: O(n log n) of them whatever the number of overlapping
+pairs) and a vectorized union-find, so any input labels in O(n log^2 n).
 This is the one-shot analogue of the reference's fragmentation insight
 (iOverlay/src/split/solver_fragment.rs grid independence), lifted from the
 split stage to the whole pipeline: a job whose geometry is a million disjoint
@@ -32,25 +35,36 @@ from __future__ import annotations
 
 import numpy as np
 
-# bail out of clustering when the per-cell pairing would materialize more than
-# this many candidate pairs — the geometry is not separable enough to pay off.
-PAIR_BUDGET = 32_000_000
-
-
-def ring_bboxes(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Per-ring closed bboxes via one reduceat over the concatenated points."""
-    counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
-    P = np.concatenate([np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in rings])
-    starts = np.zeros(len(rings), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    minx = np.minimum.reduceat(P[:, 0], starts)
-    maxx = np.maximum.reduceat(P[:, 0], starts)
-    miny = np.minimum.reduceat(P[:, 1], starts)
-    maxy = np.maximum.reduceat(P[:, 1], starts)
-    return minx, miny, maxx, maxy
-
-
 from .gcpause import gc_paused_fn
+from .overlap import overlap_edges
+
+
+def _cc_label_arrays(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized min-label connected components with pointer jumping (numpy,
+    O(E) per round, O(log diameter) rounds) — the python-dict DSU this replaces
+    was the extract stage's single-threaded bottleneck at ~1M edges (lines_net
+    audit, BENCH.md). Labels are indices into the SORTED unique node array, so
+    the converged minimum label is exactly the minimum node id.
+
+    Returns (nodes, parent): unique sorted node ids and, per node, the index of
+    its component's minimum node."""
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    ui, vi = inv[: len(u)], inv[len(u):]
+    parent = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        m = np.minimum(parent[ui], parent[vi])
+        new = parent.copy()
+        np.minimum.at(new, ui, m)
+        np.minimum.at(new, vi, m)
+        while True:
+            nn = new[new]
+            if np.array_equal(nn, new):
+                break
+            new = nn
+        if np.array_equal(new, parent):
+            break
+        parent = new
+    return nodes, parent
 
 
 @gc_paused_fn
@@ -59,98 +73,21 @@ def cluster_labels(
     miny: np.ndarray,
     maxx: np.ndarray,
     maxy: np.ndarray,
-    pair_budget: int = PAIR_BUDGET,
 ) -> np.ndarray | None:
     """Connected components of the exact closed-interval bbox-overlap graph.
 
     Returns dense labels (0..k-1, numbered by first appearance in input order)
-    or None when the input is not separable enough (pair budget exceeded, or a
-    single component). Grid cell = the largest bbox dimension, so every bbox
-    covers at most 2x2 cells and overlap implies a shared cell; per-cell
-    all-pairs candidates are filtered by exact overlap before the union-find
-    (over-merge would be safe but is avoided for cluster quality)."""
+    or None when the boxes form a single component (nothing to decompose)."""
     n = len(minx)
     if n < 2:
         return None
-    g = int(max(int((maxx - minx).max()), int((maxy - miny).max()), 1))
-    cx0 = minx // g
-    cx1 = maxx // g
-    cy0 = miny // g
-    cy1 = maxy // g
-    xoff, yoff = int(cx0.min()), int(cy0.min())
-    rid_parts = []
-    key_parts = []
-    # <=4 cover cells per ring: (x0|x1) x (y0|y1); dedupe via the dx/dy masks
-    base = np.arange(n, dtype=np.int64)
-    for dx in (0, 1):
-        selx = np.ones(n, dtype=bool) if dx == 0 else (cx1 > cx0)
-        cx = cx0 if dx == 0 else cx1
-        for dy in (0, 1):
-            sely = np.ones(n, dtype=bool) if dy == 0 else (cy1 > cy0)
-            m = selx & sely
-            if not m.any():
-                continue
-            cy = cy0 if dy == 0 else cy1
-            rid_parts.append(base[m])
-            # pack (cx, cy) into one int64 key; coords / g fit well under 2^31
-            key_parts.append(((cx[m] - xoff) << np.int64(32)) | (cy[m] - yoff))
-    rid = np.concatenate(rid_parts)
-    key = np.concatenate(key_parts)
-    # sort cover entries by cell: pack (key, rid) into one int64 for a direct
-    # sort (no indirection — ~7x an argsort) whenever the spans fit; the key's
-    # per-cell order of rids is irrelevant beyond determinism
-    xbits = max((int(cx1.max()) - xoff + 1).bit_length(), 1)
-    ybits = max((int(cy1.max()) - yoff + 1).bit_length(), 1)
-    rbits = max(int(n).bit_length(), 1)
-    if xbits + ybits + rbits <= 63:
-        # repack tight: ((cx' << ybits) | cy') << rbits | rid
-        tight = ((key >> np.int64(32)) << np.int64(ybits)) | (key & np.int64(0xFFFFFFFF))
-        packed = np.sort((tight << np.int64(rbits)) | rid)
-        rid = packed & np.int64((1 << rbits) - 1)
-        key = packed >> np.int64(rbits)
-    else:
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-        rid = rid[order]
-    # run lengths per cell
-    boundary = np.empty(len(key), dtype=bool)
-    boundary[0] = True
-    np.not_equal(key[1:], key[:-1], out=boundary[1:])
-    starts = np.flatnonzero(boundary)
-    lens = np.diff(np.append(starts, len(key)))
-    npairs = int((lens * (lens - 1) // 2).sum())
-    if npairs > pair_budget:
-        return None
-    if npairs:
-        # per-run all-pairs, vectorized per distinct run length (few of them)
-        u_parts, v_parts = [], []
-        for c in np.unique(lens):
-            if c < 2:
-                continue
-            idx = starts[lens == c]
-            ti, tj = np.triu_indices(int(c), k=1)
-            u_parts.append((idx[:, None] + ti[None, :]).ravel())
-            v_parts.append((idx[:, None] + tj[None, :]).ravel())
-        ui = rid[np.concatenate(u_parts)]
-        vi = rid[np.concatenate(v_parts)]
-        ov = (
-            (minx[ui] <= maxx[vi])
-            & (minx[vi] <= maxx[ui])
-            & (miny[ui] <= maxy[vi])
-            & (miny[vi] <= maxy[ui])
-        )
-        ui, vi = ui[ov], vi[ov]
-    else:
-        ui = vi = np.empty(0, dtype=np.int64)
-
+    ui, vi = overlap_edges(minx, maxx, miny, maxy)
     labels = np.arange(n, dtype=np.int64)
     if not len(ui):
         # no exact overlaps at all: every ring is its own cluster and arange is
         # already the dense first-appearance labeling — skip the O(n log n)
         # relabel (measured 2.4 s of a 9 s call at 2.1M disjoint rings)
         return labels
-    from ..operators.distributed_extract import _cc_label_arrays
-
     nodes, parent = _cc_label_arrays(ui, vi)
     labels[nodes] = nodes[parent]
     # dense relabel by first appearance (deterministic, input-order-stable)
@@ -165,28 +102,3 @@ def cluster_labels(
     rank = np.empty(k, dtype=np.int64)
     rank[np.argsort(order_of_first, kind="stable")] = np.arange(k, dtype=np.int64)
     return rank[inv]
-
-
-@gc_paused_fn
-def cluster_jobs(
-    subj: list[np.ndarray], clip: list[np.ndarray], pair_budget: int = PAIR_BUDGET
-) -> tuple[list[tuple[list[np.ndarray], list[np.ndarray]]], np.ndarray] | None:
-    """Decompose one (subj, clip) overlay job into independent cluster jobs.
-
-    Returns (jobs, labels) where jobs[c] holds cluster c's rings in input order,
-    or None when the job is not separable (single cluster / budget exceeded)."""
-    rings = [np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in subj] + [
-        np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in clip
-    ]
-    rings = [r for r in rings if len(r) >= 3]
-    nsubj = sum(1 for r in subj if len(np.asarray(r).reshape(-1, 2)) >= 3)
-    if len(rings) < 2:
-        return None
-    labels = cluster_labels(*ring_bboxes(rings), pair_budget=pair_budget)
-    if labels is None:
-        return None
-    k = int(labels.max()) + 1
-    jobs: list[tuple[list[np.ndarray], list[np.ndarray]]] = [([], []) for _ in range(k)]
-    for i, r in enumerate(rings):
-        jobs[int(labels[i])][0 if i < nsubj else 1].append(r)
-    return jobs, labels

@@ -22,6 +22,7 @@ import os
 import numpy as np
 
 from ..options import FillRule
+from .overlap import canonical_blocks
 from .segments import Segments
 
 SUBJ_TOP = 1
@@ -266,9 +267,9 @@ def _windings_segtree(
     _windings_sweep, VERDICT r03 #2).
 
     Each non-vertical segment covers the elementary x-intervals between its
-    doubled endpoints; the canonical decomposition assigns it to <=2 tree nodes
-    per level (the classic iterative l+=n/r+=n walk, vectorized across all
-    segments at once). Within a node every member spans the node's whole
+    doubled endpoints; the canonical decomposition (overlap.canonical_blocks,
+    shared with the bbox-overlap enumerator) assigns it to <=2 tree nodes per
+    level. Within a node every member spans the node's whole
     x-interval and no two members cross or touch there (post-split invariant),
     so members are TOTALLY y-ordered throughout the interval: they are sorted
     once by their exact rational y at the node midpoint (int64 floor + remainder
@@ -306,29 +307,13 @@ def _windings_segtree(
     lo_leaf = np.searchsorted(B, 2 * tax[mem])
     hi_leaf = np.searchsorted(B, 2 * tbx[mem])
 
-    # canonical decomposition, all segments in lockstep (<=2 nodes/level each)
-    left = lo_leaf + nP
-    right = hi_leaf + nP
-    nodes_parts: list[np.ndarray] = []
-    segs_parts: list[np.ndarray] = []
-    while True:
-        act = left < right
-        if not act.any():
-            break
-        ml = act & ((left & 1) == 1)
-        if ml.any():
-            nodes_parts.append(left[ml].copy())
-            segs_parts.append(mem[ml])
-        left = left + ml
-        mr = act & ((right & 1) == 1)
-        right = right - mr
-        if mr.any():
-            nodes_parts.append(right[mr].copy())
-            segs_parts.append(mem[mr])
-        left = left >> 1
-        right = right >> 1
-    node = np.concatenate(nodes_parts)
-    sid = np.concatenate(segs_parts)
+    # canonical decomposition (<=2 nodes per level each), heap-numbered
+    levels = [
+        canonical_blocks(lo_leaf, hi_leaf, k)
+        for k in range(int((hi_leaf - lo_leaf).max()).bit_length())
+    ]
+    node = np.concatenate([blk + (nP >> k) for k, (blk, _) in enumerate(levels)])
+    sid = mem[np.concatenate([own for _, own in levels])]
 
     # node x-interval midpoint (exact rational NUM/DEN, local coords); 2-key
     # sort (node, float y) — exact adjacent verification below repairs the

@@ -10,11 +10,11 @@ Semantics match the reference split stage:
 - repeat rounds while any intersection required rounding
   (iOverlay/src/split/solver_list.rs:27-64).
 
-One round's mark finding is `find_marks`: vectorized candidate-pair
-generation (x-sweep + bbox masks), then exact math through the vectorized
-int64 solver (cross_vec.cross_pairs_batch) whenever every segment's x/y
-extent is under 2^30, at any absolute position; beyond that the python-int
-scalar `cross_pair` per candidate pair. The list split (split_segments), the
+One round's mark finding is `find_marks`: every bbox-overlapping pair from
+overlap.overlap_pairs (the one bbox-overlap enumerator), then exact math
+through the vectorized int64 solver (cross_vec.cross_pairs_batch) whenever
+every segment's x/y extent is under 2^30, at any absolute position; beyond
+that the python-int scalar `cross_pair` per candidate pair. The list split (split_segments), the
 string split (string_slice.split_segments_string) and the Spark cell kernel
 (operators/distributed._find_marks_kernel, one grid cell per applyInArrow
 group, SURVEY.md A6) all call it.
@@ -22,10 +22,9 @@ group, SURVEY.md A6) all call it.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
+from .overlap import overlap_pairs
 from .segments import Segments, sort_and_merge
 
 
@@ -165,7 +164,7 @@ _SOLVE_BLOCK = 1 << 21  # candidate pairs per exact-solve block (bounds peak mem
 
 
 def find_marks(segs: Segments, radius: int, threads: int | None = None):
-    """One split round's marks: every bbox-overlapping pair (_candidate_pairs)
+    """One split round's marks: every bbox-overlapping pair (overlap_pairs)
     classified and intersected exactly with snap radius `radius` (cross_pair).
     Precondition: segs sorted by (a, b). Returns flat arrays (seg_idx, mx, my,
     is_round, col_ovl): mark k splits segment seg_idx[k] at (mx[k], my[k]);
@@ -177,7 +176,9 @@ def find_marks(segs: Segments, radius: int, threads: int | None = None):
     endpoints of a bbox-overlapping pair is < 2^31 at any absolute position,
     so the vectorized solver (cross_vec.cross_pairs_batch) is exact. Past the
     gate the python-int cross_pair solves every pair and col_ovl is True."""
-    pairs = _candidate_pairs(segs, threads)
+    pairs = overlap_pairs(
+        segs.ax, segs.bx, np.minimum(segs.ay, segs.by), np.maximum(segs.ay, segs.by), threads
+    )
     ci, cj = pairs[:, 0], pairs[:, 1]
 
     def extent(a, b):
@@ -209,297 +210,6 @@ def find_marks(segs: Segments, radius: int, threads: int | None = None):
         marks += [(i if which == 0 else j, x, y, rnd) for which, x, y in pm]
     m = np.array(marks, dtype=np.int64).reshape(-1, 4)
     return m[:, 0], m[:, 1], m[:, 2], m[:, 3].astype(bool), np.ones(len(m), dtype=bool)
-
-
-def _candidate_pairs_grid(
-    segs: Segments, ymin: np.ndarray, ymax: np.ndarray, est_x: int,
-    threads: int | None = None,
-) -> np.ndarray | None:
-    """Exact bbox-overlap candidate pairs via grid-cover co-cell pairing.
-
-    Two overlapping bboxes share every cell containing a point of their
-    intersection, so co-cell pairs are a SUPERSET of bbox-overlap pairs; the
-    final mask makes the result exact. The cell size is grown until the cover
-    fits a row budget (long segments cover many cells at small sizes). Returns
-    None when the within-cell pair total would not beat the x-window estimate
-    — the caller falls back."""
-    n = len(segs)
-    ax, bx = segs.ax, segs.bx
-    w = np.maximum(bx - ax, ymax - ymin)
-    # start at the median bbox dimension, grow until cover rows fit the budget
-    shift = max(int(np.median(w)), 1).bit_length()
-    budget = 8 * n
-    for _ in range(40):
-        wx = (bx >> shift) - (ax >> shift) + 1
-        wy = (ymax >> shift) - (ymin >> shift) + 1
-        c = wx * wy
-        total = int(c.sum())
-        if total <= budget:
-            break
-        shift += 1
-    else:
-        return None
-    # then SHRINK to the finest grid still inside the budget: when bbox sizes
-    # span decades (nested/concentric rings) the median start leaves a handful
-    # of giant cells holding ~everything, and within-cell enumeration goes
-    # quadratic no matter the window order — finer cells cut the crowding at
-    # the same cover-row cost (measured 11x on the nested_squares scenario)
-    while shift > 1:
-        wx2 = (bx >> (shift - 1)) - (ax >> (shift - 1)) + 1
-        wy2 = (ymax >> (shift - 1)) - (ymin >> (shift - 1)) + 1
-        c2 = wx2 * wy2
-        t2 = int(c2.sum())
-        if t2 > budget:
-            break
-        shift -= 1
-        wx, wy, c, total = wx2, wy2, c2, t2
-    cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(c)])
-    rep = np.repeat(np.arange(n, dtype=np.int64), c)
-    k = np.arange(total, dtype=np.int64) - cum[rep]
-    gx = (ax[rep] >> shift) + k // wy[rep]
-    gy = (ymin[rep] >> shift) + k % wy[rep]
-    key = (gx - gx.min()) * (int(gy.max() - gy.min()) + 1) + (gy - gy.min())
-    # cell-id sort: pack key|index into one uint64 and direct-sort when the bit
-    # budget fits (~7x an indirect stable argsort — measured; index in the low
-    # bits keeps it stable, so the output order is identical)
-    bits_idx = max(total - 1, 1).bit_length()
-    if total and int(key.max()).bit_length() + bits_idx <= 64:
-        packed = (key.astype(np.uint64) << np.uint64(bits_idx)) | np.arange(
-            total, dtype=np.uint64
-        )
-        packed.sort()
-        order = (packed & np.uint64((1 << bits_idx) - 1)).astype(np.int64)
-        key = (packed >> np.uint64(bits_idx)).astype(np.int64)
-    else:
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-    member = rep[order]
-    gx = gx[order]
-    gy = gy[order]
-    first = np.concatenate([[True], key[1:] != key[:-1]])
-    starts = np.flatnonzero(first)
-    bounds = np.concatenate([starts, [total]])
-    grp_of = np.cumsum(first) - 1  # O(total), replaces a searchsorted per row
-    # Within-cell Y-WINDOW enumeration (not all-pairs): sort each cell's
-    # members by ymin, then row r only pairs with the later rows whose
-    # ymin <= ymax_r — for j > r in ymin order, y-overlap holds iff
-    # ymin_j <= ymax_r, so the window is exactly the y-overlapping superset
-    # and stays CONTIGUOUS after r. Nested/concentric inputs (every segment
-    # sharing a coarse cell, y-disjoint bboxes) collapse from quadratic
-    # within-cell pairing to near-linear. Implemented as ONE global
-    # searchsorted over a group-lifted composite (each group's ymin block
-    # lifted by grp_of * OFFSET keeps the array globally sorted).
-    y0 = int(ymin.min())
-    yrange = int(ymax.max()) - y0 + 2
-    n_grp = int(grp_of[-1]) + 1 if total else 0
-    if total and n_grp * yrange < (1 << 62):
-        lift = grp_of * yrange
-        ysort = np.argsort(lift + (ymin[member] - y0), kind="stable")
-        member = member[ysort]
-        gx = gx[ysort]
-        gy = gy[ysort]
-        ylift = lift + (ymin[member] - y0)
-        hi = np.searchsorted(ylift, lift + (ymax[member] - y0), side="right")
-        pc = hi - np.arange(total, dtype=np.int64) - 1
-    else:
-        # wide-coordinate fallback: full triangular within-cell pairing
-        pc = bounds[grp_of + 1] - np.arange(total, dtype=np.int64) - 1
-    ptot = int(pc.sum())
-    if ptot >= est_x:
-        return None
-    pcum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(pc)])
-    # chunk budget: small enough that a big job yields ~3 chunks per worker
-    # thread (the mask work releases the GIL, see below) while keeping each
-    # chunk's materialized index arrays bounded (~2M rows max either way)
-    if threads is not None and threads > 0:
-        k = threads  # caller already runs inside a pool (strip-parallel path)
-    elif ptot >= 600_000:
-        k = min(8, os.cpu_count() or 1)
-    else:
-        k = 1
-    pair_budget = 2_000_000 if k <= 1 else max(250_000, ptot // (3 * k) + 1)
-    bnds = [0]
-    while bnds[-1] < total:
-        start = bnds[-1]
-        stop = int(np.searchsorted(pcum, pcum[start] + pair_budget, side="left"))
-        bnds.append(min(max(stop, start + 1), total))
-
-    def _pairs_chunk(se: tuple[int, int]) -> np.ndarray | None:
-        start, stop = se
-        cc = pc[start:stop]
-        tt = int(cc.sum())
-        if not tt:
-            return None
-        prow = np.repeat(np.arange(start, stop, dtype=np.int64), cc)
-        qrow = np.arange(tt, dtype=np.int64) - (pcum[prow] - pcum[start]) + prow + 1
-        pi = member[prow]
-        pj = member[qrow]
-        # emit-once rule (replaces sort-based dedup): a bbox-overlapping
-        # pair is kept only in the cell containing the min corner of its
-        # bbox INTERSECTION — that corner lies in both bboxes, so exactly
-        # one co-cell of the pair satisfies this; the exact-overlap mask
-        # below drops co-cell pairs whose bboxes do not overlap at all
-        mix = np.maximum(ax[pi], ax[pj]) >> shift
-        miy = np.maximum(ymin[pi], ymin[pj]) >> shift
-        m = (
-            (mix == gx[prow])
-            & (miy == gy[prow])
-            & (ax[pj] <= bx[pi])
-            & (ax[pi] <= bx[pj])
-            & (ymin[pj] <= ymax[pi])
-            & (ymax[pj] >= ymin[pi])
-        )
-        pi, pj = pi[m], pj[m]
-        if not len(pi):
-            return None
-        return np.stack([np.minimum(pi, pj), np.maximum(pi, pj)], axis=1)
-
-    spans = list(zip(bnds[:-1], bnds[1:]))
-    # the mask work is gather/bandwidth-bound numpy (GIL released): thread the
-    # chunks on the big scalar/one-task jobs (k sized with the budget above)
-    k = min(k, len(spans))
-    if k > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(k) as ex:
-            chunks = [c for c in ex.map(_pairs_chunk, spans) if c is not None]
-    else:
-        chunks = [c for c in map(_pairs_chunk, spans) if c is not None]
-    if not chunks:
-        return np.empty((0, 2), dtype=np.int64)
-    return np.concatenate(chunks, axis=0)
-
-
-def _candidate_pairs(segs: Segments, threads: int | None = None) -> np.ndarray:
-    """All index pairs (i<j) with overlapping bounding boxes.
-
-    Dispatcher: big jobs run x-strip-parallel (k independent enumerations on
-    threads, emit-once across strips via the bbox-intersection min-corner rule
-    — same idea as the within-grid emit-once below); everything else runs the
-    single-threaded core. threads=None sizes the pools from the host; callers
-    inside a Spark task pass threads=1 (every executor core already runs a
-    task), which never starts a thread pool."""
-    n = len(segs)
-    if n >= 48_000:
-        k = threads or min(8, os.cpu_count() or 1)
-        if k > 1:
-            out = _candidate_pairs_strips(segs, k)
-            if out is not None:
-                return out
-    return _candidate_pairs_core(segs, threads=threads)
-
-
-def _candidate_pairs_strips(segs: Segments, k: int) -> np.ndarray | None:
-    """Strip-parallel bbox-overlap pair enumeration.
-
-    Segments are assigned to every x-strip their bbox x-range overlaps
-    (borrowed members), each strip enumerates bbox-overlap pairs of its subset
-    with the single-threaded core, and a pair is KEPT only by the strip
-    containing max(ax_i, ax_j) — the x of its bbox-intersection min corner,
-    which lies in both bboxes, so exactly one strip keeps it and no pair is
-    missed (both members overlap that strip). Returns None (caller falls back)
-    when long segments would make Σ|subset| > 2.5 n. Pair SET identical to the
-    core's (order differs; callers treat pairs as a set — the grid path already
-    returns cell order)."""
-    n = len(segs)
-    ax, bx = segs.ax, segs.bx
-    qs = np.sort(ax)
-    edges = np.unique(qs[np.arange(1, k) * n // k])
-    if len(edges) == 0:
-        return None
-    lo_e = np.concatenate([[np.iinfo(np.int64).min], edges])
-    hi_e = np.concatenate([edges, [np.iinfo(np.int64).max]])
-    sa = qs
-    sb = np.sort(bx)
-    n_over = np.searchsorted(sa, hi_e, side="left") - np.searchsorted(
-        sb, lo_e, side="left"
-    )
-    if int(np.maximum(n_over, 0).sum()) > int(2.5 * n):
-        return None
-
-    def work(s: int) -> np.ndarray | None:
-        # bbox-x overlap with [lo, hi): ax < hi and bx >= lo
-        sub = np.flatnonzero((ax < hi_e[s]) & (bx >= lo_e[s]))
-        if len(sub) < 2:
-            return None
-        pr = _candidate_pairs_core(segs.take(sub), threads=1)
-        if not len(pr):
-            return None
-        gi = sub[pr[:, 0]]
-        gj = sub[pr[:, 1]]
-        mx = np.maximum(ax[gi], ax[gj])
-        keep = (mx >= lo_e[s]) & (mx < hi_e[s])
-        if not keep.any():
-            return None
-        return np.stack([gi[keep], gj[keep]], axis=1)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(min(k, len(edges) + 1)) as ex:
-        chunks = [c for c in ex.map(work, range(len(edges) + 1)) if c is not None]
-    if not chunks:
-        return np.empty((0, 2), dtype=np.int64)
-    return np.concatenate(chunks, axis=0)
-
-
-def _candidate_pairs_core(segs: Segments, threads: int | None = None) -> np.ndarray:
-    """All index pairs (i<j) with overlapping bounding boxes.
-
-    x-sweep pruning mirrors the reference list-split break on xj.a.x > xi.b.x
-    (iOverlay/src/split/solver_list.rs:36-44); y-range masks vectorized.
-    Precondition: segs sorted by (a, b)."""
-    n = len(segs)
-    if n < 2:
-        return np.empty((0, 2), dtype=np.int64)
-    ax, bx = segs.ax, segs.bx
-    ymin = np.minimum(segs.ay, segs.by)
-    ymax = np.maximum(segs.ay, segs.by)
-    if n <= 96:
-        # small case: one dense triangular mask beats the per-i loop
-        i, j = np.triu_indices(n, k=1)
-        m = (
-            (ax[j] <= bx[i])
-            & (ymin[j] <= ymax[i])
-            & (ymax[j] >= ymin[i])
-        )
-        return np.stack([i[m], j[m]], axis=1)
-    # vectorized enumeration of the per-i x-window [i+1, his[i]), chunked under a
-    # pair budget so skewed x-overlap (many segments sharing x-range) can't
-    # materialize multi-GB index arrays before the y-filter prunes
-    his = np.searchsorted(ax, bx, side="right")
-    i0 = np.arange(n, dtype=np.int64)
-    counts = np.maximum(his - i0 - 1, 0)
-    cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-    if cum[-1] == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    if cum[-1] > 32 * n:
-        # x-overlap alone overshoots badly (long diagonal chords: x-spans
-        # overlap while bboxes don't) — try grid-cover co-cell pairing, the
-        # scalar analogue of the reference's fragmentation
-        # (iOverlay/src/core/solver.rs is_fragmentation_required) and of the
-        # distributed cell cover; it returns an exact bbox-overlap pair set or
-        # None when the grid would not beat the x-window
-        g = _candidate_pairs_grid(segs, ymin, ymax, int(cum[-1]), threads=threads)
-        if g is not None:
-            return g
-    out = []
-    budget = 4_000_000
-    start = 0
-    while start < n:
-        stop = int(np.searchsorted(cum, cum[start] + budget, side="left"))
-        stop = min(max(stop, start + 1), n)
-        c = counts[start:stop]
-        tot = int(c.sum())
-        if tot:
-            i_rep = np.repeat(np.arange(start, stop, dtype=np.int64), c)
-            j = np.arange(tot, dtype=np.int64) - (cum[i_rep] - cum[start]) + i_rep + 1
-            m = (ymin[j] <= ymax[i_rep]) & (ymax[j] >= ymin[i_rep])
-            if m.any():
-                out.append(np.stack([i_rep[m], j[m]], axis=1))
-        start = stop
-    if not out:
-        return np.empty((0, 2), dtype=np.int64)
-    return np.concatenate(out, axis=0)
 
 
 def _apply_marks(
@@ -640,7 +350,7 @@ def split_segments(
 
     Radius progression 2^(start + k*step) capped at 2^60, matching Precision::HIGH
     defaults (iOverlay/src/core/solver.rs:47-51, iOverlay/src/split/snap_radius.rs).
-    `threads` goes to the pair enumeration (see _candidate_pairs)."""
+    `threads` goes to the pair enumeration (see overlap.overlap_pairs)."""
     segs = sort_and_merge(segs)
     exp = start
     for _ in range(max_rounds):

@@ -57,9 +57,9 @@ def _floor_div(col, g):
 
 
 def _local_labels_kernel(tbl):
-    """One-task clustering: the scalar exact bbox-overlap CC over all bboxes.
-    Budget-exceeded / single-component inputs collapse to one cluster (safe
-    over-merge — the caller's giant path handles them)."""
+    """One-task clustering: kernel/cluster.cluster_labels, the exact
+    bbox-overlap CC over all bboxes. A single-component input is one cluster
+    (cluster_labels returns None for it; the caller's giant path handles it)."""
     import numpy as np
     import pyarrow as pa
 

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.cluster import _cc_label_arrays
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
 from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch, _checkpoint_observed
 
@@ -65,34 +66,6 @@ def boundary_segments_df(fills: DataFrame, rule: OverlayRule) -> DataFrame:
     return df.where(
         member(F.col("s_top"), F.col("c_top")) != member(F.col("s_bot"), F.col("c_bot"))
     ).drop("s_top", "s_bot", "c_top", "c_bot")
-
-
-def _cc_label_arrays(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized min-label connected components with pointer jumping (numpy,
-    O(E) per round, O(log diameter) rounds) — the python-dict DSU this replaces
-    was the extract stage's single-threaded bottleneck at ~1M edges (lines_net
-    audit, BENCH.md). Labels are indices into the SORTED unique node array, so
-    the converged minimum label is exactly the minimum node id.
-
-    Returns (nodes, parent): unique sorted node ids and, per node, the index of
-    its component's minimum node."""
-    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    ui, vi = inv[: len(u)], inv[len(u):]
-    parent = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        m = np.minimum(parent[ui], parent[vi])
-        new = parent.copy()
-        np.minimum.at(new, ui, m)
-        np.minimum.at(new, vi, m)
-        while True:
-            nn = new[new]
-            if np.array_equal(nn, new):
-                break
-            new = nn
-        if np.array_equal(new, parent):
-            break
-        parent = new
-    return nodes, parent
 
 
 def _union_find_iter(batches):

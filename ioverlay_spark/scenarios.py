@@ -13,7 +13,7 @@ workloads end-to-end:
 - wind_mill                       test_8_wind_mill.rs:95-210
 
 (checkerboard, lines_net and spiral already have their own audited paths:
-bench.py flagship, audits/lines_net_audit.py, audits/spiral_audit.py.)
+bench.py flagship, audits/lines_net_audit.py, audits/scenarios_audit.py spiral.)
 
 All integer scenarios emit (k, 2) int64 arrays; float scenarios emit float64
 and are meant for the float shell (i32-scale adapter, like the reference's

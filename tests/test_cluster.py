@@ -8,8 +8,16 @@ import pytest
 
 from ioverlay_spark import scenarios
 from ioverlay_spark.kernel import build_graph, overlay
-from ioverlay_spark.kernel.cluster import cluster_jobs, cluster_labels, ring_bboxes
+from ioverlay_spark.kernel.cluster import cluster_labels
 from ioverlay_spark.options import FillRule, OverlayRule
+
+
+def ring_bboxes(rings):
+    """(minx, miny, maxx, maxy) of each ring."""
+    return tuple(
+        np.array([f(np.asarray(r)[:, c]) for r in rings], dtype=np.int64)
+        for f, c in ((np.min, 0), (np.min, 1), (np.max, 0), (np.max, 1))
+    )
 
 
 def canon(shapes):
@@ -57,9 +65,20 @@ class TestClusterLabels:
         labels = cluster_labels(*ring_bboxes(rings))
         assert labels[0] == labels[1] != labels[2]
 
-    def test_budget_bail(self):
-        rings = [sq(0, 0, 10 + i) for i in range(64)]  # all overlapping
-        assert cluster_labels(*ring_bboxes(rings), pair_budget=10) is None
+    def test_mutually_overlapping_is_one_component(self):
+        # 64 nested squares, every pair overlapping: one component => None
+        rings = [sq(0, 0, 10 + i) for i in range(64)]
+        assert cluster_labels(*ring_bboxes(rings)) is None
+
+    def test_windows_frames_are_separate_components(self):
+        # windows(10): 100 frames with one hole each; each frame+hole pair is
+        # its own component, numbered in input order
+        subj, clip = scenarios.windows(10)
+        labels = cluster_labels(*ring_bboxes(subj + clip))
+        assert labels is not None and labels.max() == 99
+        assert labels[: len(subj)].tolist() == list(range(100))
+        assert np.array_equal(np.sort(labels[len(subj) :]), np.arange(100))
+        assert np.array_equal(np.bincount(labels), np.full(100, 2))
 
     def test_labels_deterministic_dense(self):
         rng = np.random.default_rng(7)
@@ -126,12 +145,30 @@ class TestClusteredOverlayEquivalence:
         exp = monolithic(subj, clip, rule, FillRule.NON_ZERO)
         assert canon(got) == canon(exp)
 
-    def test_cluster_jobs_partition(self):
-        subj, clip = scenarios.windows(10)
-        decomp = cluster_jobs(subj, clip)
-        assert decomp is not None
-        jobs, labels = decomp
-        assert sum(len(j[0]) + len(j[1]) for j in jobs) == len(subj) + len(clip)
-        # windows: each frame+hole pair is its own cluster
-        assert len(jobs) == 100
-        assert all(len(j[0]) == 1 and len(j[1]) == 1 for j in jobs)
+
+def test_clustered_overlay_imports_no_spark():
+    """The clustered one-shot path is pure numpy: a fresh interpreter running
+    overlay() on >= CLUSTER_MIN_RINGS rings must not import pyspark or pandas."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import numpy as np\n"
+        "from ioverlay_spark.kernel import overlay\n"
+        "from ioverlay_spark.kernel.overlay import CLUSTER_MIN_RINGS\n"
+        "from ioverlay_spark.options import OverlayRule\n"
+        "sq = lambda x, y: np.array([[x, y], [x + 10, y], [x + 10, y + 10], [x, y + 10]])\n"
+        "subj = [sq(20 * i, 20 * j) for i in range(16) for j in range(10)]\n"
+        "clip = [sq(20 * i + 5, 20 * j + 5) for i in range(16) for j in range(10)]\n"
+        "assert len(subj) + len(clip) >= CLUSTER_MIN_RINGS\n"
+        "assert len(overlay(subj, clip, OverlayRule.UNION)) == 160\n"
+        "print(sorted(m for m in ('pyspark', 'pandas') if m in sys.modules))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "[]"

@@ -311,44 +311,6 @@ def test_sweep_fills_match_dense():
             assert np.array_equal(compute_fills(segs, fr), compute_fills_sweep(segs, fr))
 
 
-def test_grid_candidates_match_xwindow():
-    """_candidate_pairs_grid must return exactly the bbox-overlap pair set the
-    x-window enumeration produces (long diagonal chords trigger the grid)."""
-    import numpy as np
-
-    import ioverlay_spark.kernel.split as sp
-    from ioverlay_spark.kernel.segments import Segments, sort_and_merge
-
-    rng = np.random.default_rng(9)
-    for _ in range(10):
-        n = int(rng.integers(150, 500))
-        ax = rng.integers(-100000, 100000, n)
-        bx = ax + rng.integers(1, 80000, n)
-        ay = rng.integers(-100000, 100000, n)
-        by = ay + rng.integers(-80000, 80000, n)
-        s = sort_and_merge(
-            Segments(
-                ax.astype(np.int64),
-                ay.astype(np.int64),
-                bx.astype(np.int64),
-                np.where(by == ay, ay + 1, by).astype(np.int64),
-                np.ones(n, dtype=np.int64),
-                np.zeros(n, dtype=np.int64),
-            )
-        )
-        ymin = np.minimum(s.ay, s.by)
-        ymax = np.maximum(s.ay, s.by)
-        orig = sp._candidate_pairs_grid
-        sp._candidate_pairs_grid = lambda *a, **k: None
-        try:
-            xw = sp._candidate_pairs(s)
-        finally:
-            sp._candidate_pairs_grid = orig
-        g = sp._candidate_pairs_grid(s, ymin, ymax, 1 << 62)
-        assert g is not None
-        assert set(map(tuple, xw.tolist())) == set(map(tuple, g.tolist()))
-
-
 def test_apply_marks_matches_scalar_reference():
     """Vectorized _apply_marks must produce the same multiset of sub-segments
     as the scalar walk (endpoint marks, duplicates, reversed sub-directions)."""

@@ -1,12 +1,12 @@
 """Thread-count invariance of the chunked/threaded kernel paths.
 
-The scalar one-shot fill (segtree bisection), the grid candidate pair mask,
-and the fused extract's component walk all split work across a thread pool on
-large inputs. These tests force the threaded paths on inputs big enough to
+The scalar one-shot fill (segtree bisection) and the fused extract's
+component walk split work across a thread pool on large inputs (the
+bbox-overlap enumerator's threads are checked in tests/test_overlap_pairs.py). These tests force the threaded paths on inputs big enough to
 cross the auto-engage thresholds and assert BIT-IDENTICAL output vs the
 single-threaded run — the chunk boundaries must be invisible.
 
-No Spark session needed: all three kernels are pure numpy/Arrow functions.
+No Spark session needed: the kernels are pure numpy/Arrow functions.
 """
 
 from __future__ import annotations
@@ -53,34 +53,6 @@ def test_segtree_threaded_matches_single():
     f_tree = compute_fills_segtree(segs, FillRule.NON_ZERO, threads=8)
     f_sweep = compute_fills_sweep(segs, FillRule.NON_ZERO)
     assert np.array_equal(f_tree, f_sweep)
-
-
-def test_grid_candidates_threaded_matches_single(monkeypatch):
-    from ioverlay_spark.kernel import split as sp
-
-    segs = sort_and_merge(
-        build_segments(
-            [
-                np.array(
-                    [[i * 7, (i * 13) % 101], [i * 7 + 500, (i * 13) % 101 + 400],
-                     [i * 7 + 500, (i * 13) % 101 + 900], [i * 7, (i * 13) % 101 + 500]],
-                    dtype=np.int64,
-                )
-                for i in range(4000)
-            ],
-            True,
-        )
-    )
-    ymin = np.minimum(segs.ay, segs.by)
-    ymax = np.maximum(segs.ay, segs.by)
-    from ioverlay_spark.kernel import fill as fl
-
-    monkeypatch.setattr(fl, "_resolve_fill_threads", lambda t, n: 1)
-    p1 = sp._candidate_pairs_grid(segs, ymin, ymax, est_x=1 << 60)
-    monkeypatch.setattr(fl, "_resolve_fill_threads", lambda t, n: 8)
-    p8 = sp._candidate_pairs_grid(segs, ymin, ymax, est_x=1 << 60)
-    assert p1 is not None and p8 is not None
-    assert np.array_equal(p1, p8)
 
 
 @pytest.mark.parametrize("rule", [OverlayRule.INTERSECT, OverlayRule.UNION])
@@ -178,23 +150,6 @@ def test_segtree_strips_duplication_fallback():
     assert _windings_segtree_strips(segs, 8) is None
 
 
-def test_candidate_pairs_strips_matches_core():
-    """Strip-parallel bbox-pair enumeration returns exactly the core's pair
-    SET (emit-once across strips via the bbox-intersection min-corner rule)."""
-    from ioverlay_spark.kernel import split as sp
-
-    segs = _spiralish(30_000)
-    pc = _canon_pairs(sp._candidate_pairs_core(segs))
-    for k in (2, 8):
-        ps = sp._candidate_pairs_strips(segs, k)
-        assert ps is not None
-        assert np.array_equal(pc, _canon_pairs(ps))
-    s = _random_soup(60_000)
-    pc = _canon_pairs(sp._candidate_pairs_core(s))
-    ps = sp._candidate_pairs_strips(s, 8)
-    assert ps is not None and np.array_equal(pc, _canon_pairs(ps))
-
-
 def _canon_pairs(p: np.ndarray) -> np.ndarray:
     if not len(p):
         return p
@@ -220,16 +175,18 @@ def test_candidate_pairs_single_thread_starts_no_pool(monkeypatch):
     and returns exactly the pair set of the default dispatch."""
     import concurrent.futures
 
-    from ioverlay_spark.kernel import split as sp
+    from ioverlay_spark.kernel import overlap as ov
 
-    s = _random_soup(60_000)
-    assert len(s) >= 48_000  # large enough for the strip-parallel dispatch
-    want = sp._candidate_pairs(s)
+    s = _random_soup(80_000)
+    assert len(s) > ov._CHUNK  # large enough for the default to split into tasks
+    boxes = (s.ax, s.bx, np.minimum(s.ay, s.by), np.maximum(s.ay, s.by))
+    want = ov.overlap_pairs(*boxes)
 
     def no_pool(*args, **kwargs):
         raise AssertionError("threads=1 started a thread pool")
 
     monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", no_pool)
-    got = sp._candidate_pairs(s, threads=1)
+    monkeypatch.setattr(ov, "ThreadPoolExecutor", no_pool)
+    got = ov.overlap_pairs(*boxes, threads=1)
     assert want.shape == got.shape
     assert np.array_equal(_canon_pairs(want), _canon_pairs(got))
