@@ -2,13 +2,16 @@
 performance/rust_app/src/test/test_{1,4,5,6,7,8}_*.rs (geometry re-derived in
 ioverlay_spark/scenarios.py, correctness oracles in tests/test_perf_scenarios.py)
 and the spiral self-union of test_3_spiral.rs (geometry re-derived from
-util.rs:181-227 below; SUBJECT / NON_ZERO on the i32-scale quantized band).
+util.rs:181-227 below; SUBJECT / NON_ZERO on the i32-scale quantized band),
+plus hull_holes (one hull DIFFERENCE k^2 holes, the hole binder's row; no
+reference number).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
     python audits/scenarios_audit.py not_overlap 256 512  # one scenario, chosen n
     python audits/scenarios_audit.py spiral 65536          # the spiral self-union
     python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
+    python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that
@@ -37,6 +40,7 @@ REF = {
     "spiral": {65536: 0.0742, 262144: 0.3509, 524288: 0.7445},
     "not_overlap": {256: 0.036901, 512: 0.177118, 1024: 0.745187, 2048: 3.282416},
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
+    "hull_holes": {},
     "nested_squares": {16384: 0.322707, 32768: 0.653741, 65536: 2.410910},
     "corrosion": {64: 0.033293, 128: 0.133794, 256: 0.594231, 512: 2.297538},
     "concentric": {64: 0.034357, 128: 0.134210, 256: 0.563524, 512: 2.367582},
@@ -47,6 +51,7 @@ DEFAULT_NS = {
     "spiral": [65536, 262144, 524288],
     "not_overlap": [256, 512, 1024],
     "windows": [128, 256, 512, 1024],
+    "hull_holes": [64, 128, 256],
     "nested_squares": [16384, 32768],
     "corrosion": [64, 128, 256],
     "concentric": [64, 128, 256],
@@ -57,6 +62,7 @@ RULES = {
     "spiral": OverlayRule.SUBJECT,
     "not_overlap": OverlayRule.UNION,
     "windows": OverlayRule.DIFFERENCE,
+    "hull_holes": OverlayRule.DIFFERENCE,
     "nested_squares": OverlayRule.XOR,
     "corrosion": OverlayRule.DIFFERENCE,
     "concentric": OverlayRule.INTERSECT,
@@ -99,6 +105,11 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
     if name == "windows":
         # n^2 frame shapes, each hull + one hole ring
         return count == n * n and (rings is None or rings == 2 * n * n) and area2 == 600 * n * n
+    if name == "hull_holes":
+        # one shape: the hull and its n^2 holes
+        return count == 1 and (rings is None or rings == n * n + 1) and (
+            area2 == 2 * ((20 * n + 10) ** 2 - 100 * n * n)
+        )
     if name == "nested_squares":
         return count == 4 * n and area2 == 64 * n * n
     if name == "wind_mill":
@@ -217,11 +228,14 @@ def run_spark(name: str, ns: list[int], reps: int, monolithic: bool = False):
             rings = agg["rings"]
         ok = oracle(name, n, count, area2, base_cell, rings)
         ref = REF[name].get(n)
+        # a leading newline: Spark's console progress bar ends in a carriage
+        # return, so with stderr merged the row would not start a line
         print(
-            f"SPARK {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s shapes={count} "
+            f"\nSPARK {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s shapes={count} "
             f"rings={rings} area2={area2} oracle={'n/a' if ok is None else ok} "
             f"ref_i32_mt={ref if ref is not None else 'n/a'}"
-            + (f" ratio={best/ref:.1f}x" if ref else "")
+            + (f" ratio={best/ref:.1f}x" if ref else ""),
+            flush=True,
         )
     spark.stop()
 

@@ -48,8 +48,8 @@ from .extract import (
     bind_holes,
     boundary_mask,
     concat_rings,
+    extract_rings,
     pack_rings,
-    ring_area2,
     ring_gather_index,
     ring_starts,
     rule_inside,
@@ -67,18 +67,19 @@ Shapes = list[list[np.ndarray]]
 _COORD_CAP = 1 << 30  # beyond this, scalar path (object-int math) is required
 
 
-def _scalar_batch(jobs, rules, fill_rule, options) -> list[dict]:
-    """Per-job scalar kernel: [{rule: (shapes, areas)}] for each job."""
-
-    out = []
-    for subj, clip in jobs:
+def _scalar_flat(jobs, rules, fill_rule, options) -> dict:
+    """Per-job scalar kernel (build_graph + extract_rings, one slot per job),
+    bound by _bind_flat: {rule: flat tuple}."""
+    parts: dict = {rule: [] for rule in rules}
+    for j, (subj, clip) in enumerate(jobs):
         g = build_graph(subj, clip, fill_rule, options)
-        res = {}
         for rule in rules:
-            shapes = g.extract(rule)
-            res[rule] = (shapes, [[int(ring_area2(r)) for r in s] for s in shapes])
-        out.append(res)
-    return out
+            rings, a2 = extract_rings(g.segments, g.fills, rule, options)
+            parts[rule].append((rings._replace(slot=np.full(len(a2), j)), a2))
+    return {
+        rule: _bind_flat(concat_rings([r for r, _ in p]), np.concatenate([a for _, a in p]))
+        for rule, p in parts.items()
+    }
 
 
 def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = False):
@@ -870,76 +871,18 @@ _FLAT_EMPTY = (
 )
 
 
-def _shapes_to_flat(slot_shapes):
-    """[(slot, (shapes, areas))] -> flat tuple (python loop — fallback slots only)."""
-    slots, sids, cidxs, lens, a2 = [], [], [], [], []
-    pieces = []
-    for sl, (shapes, areas) in slot_shapes:
-        for sid, (shape, s_areas) in enumerate(zip(shapes, areas)):
-            for ci, (ring, a) in enumerate(zip(shape, s_areas)):
-                slots.append(sl)
-                sids.append(sid)
-                cidxs.append(ci)
-                lens.append(len(ring))
-                a2.append(a)
-                pieces.append(np.asarray(ring, dtype=np.int64).reshape(-1, 2))
-    if not slots:
-        return _FLAT_EMPTY
-    pts = np.concatenate(pieces) if pieces else np.empty((0, 2), dtype=np.int64)
-    return (
-        np.asarray(slots, dtype=np.int64),
-        np.asarray(sids, dtype=np.int64),
-        np.asarray(cidxs, dtype=np.int64),
-        np.asarray(lens, dtype=np.int64),
-        pts,
-        np.asarray(a2, dtype=np.int64),
-    )
-
-
-def _bind_flat(rings, a2, nj, fast_slot):
+def _bind_flat(rings, a2):
     """Hole binding of validated rings straight to the FLAT tuple (slot,
-    shape_id, contour_idx, lens, pts, area2) sorted by (slot, shape, contour).
-
-    Each slot's hulls, in walk order, are its shapes. Where a slot has holes
-    and at most one hull, and the fast walk served it, the binding is
-    vectorized: every hole goes to the lone hull (bind_holes with one hull
-    resolves every hole to it — walk-emitted holes lie strictly inside it)
-    and holes without a hull are dropped, as bind_holes drops them. Slots with
-    holes and several hulls, or walked by the scalar walk, run bind_holes."""
+    shape_id, contour_idx, lens, pts, area2) sorted by (slot, shape, contour):
+    one extract.bind_holes call over every slot (each slot's hulls, in walk
+    order, are its shapes; unbound holes are dropped)."""
     slot, hole, lens, x, y = rings
-    n = len(slot)
-    if n == 0:
+    if len(slot) == 0:
         return _FLAT_EMPTY
-    hulls = np.bincount(slot[~hole], minlength=nj)
-    holes = np.bincount(slot[hole], minlength=nj)
-    # rank within the slot in (hulls, then holes; walk order) order
-    order = np.lexsort((hole, slot))
-    so = slot[order]
-    rank = np.empty(n, dtype=np.int64)
-    rank[order] = np.arange(n) - np.searchsorted(so, so)
-    sid = np.where(hole, 0, rank)
-    cidx = np.where(hole, rank - hulls[slot] + 1, 0)
-    keep = ~hole | (hulls[slot] > 0)
-    pos = ring_starts(lens)
-    for sl in np.flatnonzero((holes > 0) & ((hulls > 1) | ~fast_slot)).tolist():
-        lo, hi = np.searchsorted(so, [sl, sl + 1])
-        members = order[lo:hi].tolist()
-        ring = {}
-        for i in members:
-            sl_i = slice(pos[i], pos[i] + lens[i])
-            ring[i] = list(zip(x[sl_i].tolist(), y[sl_i].tolist()))
-        ids = {id(r): i for i, r in ring.items()}
-        shapes = bind_holes(
-            [ring[i] for i in members if not hole[i]], [ring[i] for i in members if hole[i]]
-        )
-        keep[members] = False
-        for k, shape in enumerate(shapes):
-            for c, r in enumerate(shape):
-                i = ids[id(r)]
-                sid[i], cidx[i], keep[i] = k, c, True
-    e = np.flatnonzero(keep)
+    sid, cidx = bind_holes(rings)
+    e = np.flatnonzero(sid >= 0)
     o = e[np.lexsort((cidx[e], sid[e], slot[e]))]
-    pi = ring_gather_index(pos[o], lens[o])
+    pi = ring_gather_index(ring_starts(lens)[o], lens[o])
     return slot[o], sid[o], cidx[o], lens[o], np.stack([x[pi], y[pi]], axis=1), a2[o]
 
 
@@ -989,9 +932,7 @@ def _overlay_tail_flat(t, nj, rules, options):
         for rule in rules:
             walked[rule].append(pack_rings(*slow_acc[rule]))
     return {
-        rule: _bind_flat(
-            *validate_rings(concat_rings(walked[rule]), options), nj, fast_mask[rule]
-        )
+        rule: _bind_flat(*validate_rings(concat_rings(walked[rule]), options))
         for rule in rules
     }
 
@@ -1024,13 +965,9 @@ def overlay_batch_flat_out(
     if nj > 1:
         t = _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options)
     if nj == 1 or t is None:
-        res = _scalar_batch(
+        return _scalar_flat(
             _jobs_from_flat(P, counts, ring_job, ring_subj, nj), rules, fill_rule, options
         )
-        return {
-            rule: _shapes_to_flat([(j, res[j][rule]) for j in range(nj)])
-            for rule in rules
-        }
     return _overlay_tail_flat(t, nj, rules, options)
 
 

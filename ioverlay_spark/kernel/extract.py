@@ -13,7 +13,8 @@ Faithful re-derivation of the reference's extraction semantics:
   what merges region boundaries into self-touching contours at pinch nodes, matching the
   golden fixtures;
 - hole binding via the left-bottom anchor and the nearest segment strictly below
-  (iOverlay/src/bind/solver.rs:25-236), resolved transitively with an exact PIP fallback.
+  (iOverlay/src/bind/solver.rs:25-236): one vectorized ray shot per anchor on the
+  fill's segment tree, hole->hole parents resolved by pointer jumping.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from typing import NamedTuple
 import numpy as np
 
 from ..options import ContourDirection, OverlayOptions, OverlayRule
-from .fill import CLIP_BOTTOM, CLIP_TOP, SUBJ_BOTTOM, SUBJ_TOP
+from .fill import CLIP_BOTTOM, CLIP_TOP, SUBJ_BOTTOM, SUBJ_TOP, segtree_below, segtree_build
 from .segments import Segments
 
 
@@ -325,103 +326,6 @@ def simplify_ring(pts: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return pts
 
 
-def _point_in_ring(x: int, y: int, ring) -> bool:
-    """Exact even-odd ray cast (downward ray, [ax, bx) convention)."""
-    inside = False
-    n = len(ring)
-    for i in range(n):
-        ax, ay = int(ring[i][0]), int(ring[i][1])
-        bx, by = int(ring[(i + 1) % n][0]), int(ring[(i + 1) % n][1])
-        if ax > bx:
-            ax, ay, bx, by = bx, by, ax, ay
-        if ax <= x < bx:
-            if (by - ay) * (x - ax) < (y - ay) * (bx - ax):
-                inside = not inside
-    return inside
-
-
-def bind_holes(hulls: list, holes: list) -> list[list]:
-    """Assign each hole to its parent ring via the nearest segment strictly below the
-    hole's left-bottom anchor (reference ShapeBinder, iOverlay/src/bind/solver.rs:25-236),
-    resolving hole->hole transitively; PIP fallback."""
-    shapes = [[h] for h in hulls]
-    if not holes:
-        return shapes
-
-    # scanning copies: ndarray rings (the long-ring fast path) degrade python
-    # per-element indexing ~20x — normalize to lists for the binder's loops
-    # while `shapes` keeps the original objects for output
-    hulls = [r.tolist() if isinstance(r, np.ndarray) else r for r in hulls]
-    holes_scan = [r.tolist() if isinstance(r, np.ndarray) else r for r in holes]
-
-    seg_rows = []  # (ax, ay, bx, by, kind, ridx)
-    for kind, rings in ((0, hulls), (1, holes_scan)):
-        for ridx, ring in enumerate(rings):
-            n = len(ring)
-            ccw = ring_area2(ring) > 0
-            for i in range(n):
-                ax, ay = int(ring[i][0]), int(ring[i][1])
-                bx, by = int(ring[(i + 1) % n][0]), int(ring[(i + 1) % n][1])
-                if ax == bx:
-                    continue
-                if kind == 0:
-                    # the hull's INTERIOR must lie above the segment for it to be
-                    # a valid "first below the anchor" parent witness (reference
-                    # ShapeBinder reads the same from is_fill_top): a CCW ring
-                    # has interior above exactly its +x-traversed edges. Shared
-                    # face boundaries appear once per adjacent face with opposite
-                    # directions — this filter picks the face that contains the
-                    # anchor instead of an arbitrary one.
-                    if (ax < bx) != ccw:
-                        continue
-                if ax > bx:
-                    ax, ay, bx, by = bx, by, ax, ay
-                seg_rows.append((ax, ay, bx, by, kind, ridx))
-
-    anchors = []
-    for hidx, ring in enumerate(holes_scan):
-        k = min(range(len(ring)), key=lambda i: (int(ring[i][0]), int(ring[i][1])))
-        anchors.append((int(ring[k][0]), int(ring[k][1]), hidx))
-
-    parent_of_hole: dict[int, tuple[int, int]] = {}
-    for x, y, hidx in anchors:
-        best = None
-        for ax, ay, bx, by, kind, ridx in seg_rows:
-            if kind == 1 and ridx == hidx:
-                continue
-            if not (ax <= x < bx):
-                continue
-            den = bx - ax
-            num = ay * den + (by - ay) * (x - ax)
-            if num >= y * den:
-                continue
-            if best is None or num * best[1] > best[0] * den:
-                best = (num, den, kind, ridx)
-        if best is not None:
-            parent_of_hole[hidx] = (best[2], best[3])
-
-    def hull_of(hidx, depth=0):
-        if depth > len(holes) + 1:
-            return None
-        p = parent_of_hole.get(hidx)
-        if p is None:
-            return None
-        kind, ridx = p
-        if kind == 0:
-            return ridx
-        return hull_of(ridx, depth + 1)
-
-    for x, y, hidx in anchors:
-        hull_idx = hull_of(hidx)
-        if hull_idx is None:
-            containing = [i for i, h in enumerate(hulls) if _point_in_ring(x, y, h)]
-            if not containing:
-                continue
-            hull_idx = min(containing, key=lambda i: abs(ring_area2(hulls[i])))
-        shapes[hull_idx].append(holes[hidx])
-    return shapes
-
-
 class RingSet(NamedTuple):
     """Walked rings in CSR form: one flat x/y point array holding every ring's
     points contiguously in walk order (ring i starts at sum(lens[:i]); every
@@ -477,6 +381,162 @@ def pack_rings(contours: list, slots=None) -> RingSet:
         pts[:, 0],
         pts[:, 1],
     )
+
+
+def bind_holes(rings: RingSet) -> tuple[np.ndarray, np.ndarray]:
+    """Hole binding (reference ShapeBinder, iOverlay/src/bind/solver.rs:25-236):
+    each ring's (shape, contour index) within its slot, (-1, -1) for a hole
+    with no parent. A slot's hulls are its shapes in ring order; a bound
+    hole's contour is 1 + its rank among its shape's holes.
+
+    A hole's parent owns the nearest edge strictly below its lexmin anchor
+    among the other holes' edges and the hull edges with interior above (a
+    CCW hull's +x edges); exact ties go to the first edge in (hulls, holes;
+    ring order; edge order), and hole parents resolve to hulls by pointer
+    jumping. Slots never see each other's edges. A slot without hulls drops
+    its holes, and a slot with one hull takes them all."""
+    slot, hole, lens = rings.slot, rings.hole, rings.lens
+    n = len(lens)
+    shape = np.full(n, -1, dtype=np.int64)
+    contour = np.full(n, -1, dtype=np.int64)
+    if n == 0:
+        return shape, contour
+    sl = np.unique(slot, return_inverse=True)[1].ravel()
+    o = np.flatnonzero(~hole)
+    o = o[np.argsort(sl[o], kind="stable")]
+    so = sl[o]
+    shape[o] = np.arange(len(o)) - np.searchsorted(so, so)
+    contour[o] = 0
+    nh = np.bincount(so, minlength=int(sl.max()) + 1)
+    lone = np.full(len(nh), -1, dtype=np.int64)
+    lone[so] = o
+    parent = np.where(hole & (nh[sl] == 1), lone[sl], -1)
+    multi = np.zeros(len(nh), dtype=bool)
+    multi[sl[hole]] = True
+    R = np.flatnonzero((multi & (nh >= 2))[sl])
+    if len(R):
+        sub = take_rings(rings, R)._replace(slot=np.unique(sl[R], return_inverse=True)[1])
+        par = _ray_parents(sub)
+        m = hole[R] & (par >= 0)
+        parent[R[m]] = R[par[m]]
+    b = np.flatnonzero(hole & (parent >= 0))
+    shape[b] = shape[parent[b]]
+    # contour rank within (slot, shape), in ring order
+    b = b[np.lexsort((shape[b], sl[b]))]
+    k = np.arange(len(b))
+    new = np.ones(len(b), dtype=bool)
+    new[1:] = (sl[b][1:] != sl[b][:-1]) | (shape[b][1:] != shape[b][:-1])
+    contour[b] = k - np.maximum.accumulate(np.where(new, k, 0)) + 1
+    return shape, contour
+
+
+def _ray_parents(rings: RingSet) -> np.ndarray:
+    """bind_holes' ray shot over rings with compact slots: each ring's hull
+    (hulls map to themselves), -1 for an unbound hole. One vertical ray per
+    anchor on fill.segtree_build's tree over the member edges: each node on
+    the anchor's path offers the last member of its strictly-below prefix
+    (fill.segtree_below), and the highest by exact (floor, remainder)
+    compare wins. Each slot runs in local coordinates in its own x-tile;
+    operands are int64 under the fill's gate (4*extent^2 < 2^62), python ints
+    past it."""
+    sl, hole, lens, x, y = rings
+    n = len(lens)
+    pos = ring_starts(lens)
+    ring_of = np.repeat(np.arange(n, dtype=np.int64), lens)
+    nxt = np.arange(1, len(x) + 1, dtype=np.int64)
+    nxt[pos + lens - 1] = pos
+    # local coordinates (uint64 offsets from each slot's min corner: exact
+    # at any int64 span), one x-tile of width W per slot
+    ns = int(sl.max()) + 1
+    ps = sl[ring_of]
+    loc = []
+    for v in (x, y):
+        lo = np.full(ns, np.iinfo(np.int64).max)
+        np.minimum.at(lo, sl, np.minimum.reduceat(v, pos))
+        loc.append(v.astype(np.uint64) - lo[ps].astype(np.uint64))
+    ext = int(max(a.max() for a in loc))
+    W = ext + 1
+    wide = 4 * ext * ext >= 1 << 62 or 4 * ns * W >= 1 << 62
+    lx, ly = (a.astype(object if wide else np.int64) for a in loc)
+    tx = ps * W + lx
+    ccw = np.add.reduceat(lx * ly[nxt] - lx[nxt] * ly, pos) > 0
+    # member edges left to right, numbered in scan order (hulls, then holes;
+    # ring order; edge order), the exact-tie order. A hull edge counts only
+    # with the hull's interior above it: a face boundary shared by two faces
+    # then witnesses for the face that contains the anchor.
+    ph = hole[ring_of]
+    fwd = tx < tx[nxt]
+    e = np.flatnonzero((tx != tx[nxt]) & (ph | (fwd == ccw[ring_of])))
+    e = e[np.argsort(ph[e], kind="stable")]
+    f, en = fwd[e], nxt[e]
+    tree = segtree_build(
+        np.where(f, tx[e], tx[en]), np.where(f, ly[e], ly[en]),
+        np.where(f, tx[en], tx[e]), np.where(f, ly[en], ly[e]),
+    )
+    res = np.where(hole, -1, np.arange(n, dtype=np.int64))
+    hr = np.flatnonzero(hole)
+    if tree is None or not len(hr):
+        return res
+    # each hole's lexmin anchor, doubled
+    qx = np.minimum.reduceat(tx, pos)
+    qy = np.minimum.reduceat(np.where(tx == np.repeat(qx, lens), ly, ext), pos)
+    X, T = 2 * qx[hr], 2 * qy[hr]
+    PQ, PV, plo, lvl_off = segtree_below(tree, X, T)
+    enum0, edy, edt, eax2 = tree.enum0, tree.edy, tree.edt, tree.eax2
+
+    def y_at(c, Xc):
+        # doubled y of row c at doubled x Xc as exact (floor, remainder, den)
+        num = enum0[c] + edy[c] * (Xc - eax2[c])
+        d = edt[c].astype(num.dtype)
+        q = num // d
+        return q, num - q * d, d
+
+    nq = len(hr)
+    best = np.full(nq, -1, dtype=np.int64)  # winning member
+    bq, br, bd = (np.full(nq, v, dtype=enum0.dtype) for v in (0, 0, 1))
+    # one candidate per query and level, folded in level by level
+    for lo, hi in zip(lvl_off[:-1], lvl_off[1:]):
+        base = tree.start[PV[lo:hi]]
+        c = plo[lo:hi] - 1
+        v = np.flatnonzero(c >= base)
+        qi, c, base = PQ[lo:hi][v], c[v], base[v]
+        q, r, d = y_at(c, X[qi])
+        k = tree.sid[c]
+        # rows tied with the candidate at X are the run just before it
+        j, pj = np.arange(len(c)), c - 1
+        while len(j):
+            j = j[pj[j] >= base[j]]
+            q2, r2, d2 = y_at(pj[j], X[qi[j]])
+            j = j[(q2 == q[j]) & (r2 * d[j] == r[j] * d2)]
+            lt = j[tree.sid[pj[j]] < k[j]]
+            k[lt] = tree.sid[pj[lt]]
+            pj[j] -= 1
+        rl, rr = r * bd[qi], br[qi] * d
+        up = (best[qi] < 0) | (q > bq[qi]) | (
+            (q == bq[qi]) & ((rl > rr) | ((rl == rr) & (k < best[qi])))
+        )
+        qi, u = qi[up], np.flatnonzero(up)
+        best[qi], bq[qi], br[qi], bd[qi] = k[u], q[u], r[u], d[u]
+    got = best >= 0
+    res[hr[got]] = ring_of[e][best[got]]
+    # pointer jumping; hulls and the unbound sentinel n are fixed points
+    p = np.append(np.where(res < 0, n, res), n)
+    while not np.array_equal(p[p], p):
+        p = p[p]
+    return np.where(p[:n] == n, -1, p[:n])
+
+
+def bind_ring_lists(hulls: list, holes: list) -> list[list]:
+    """bind_holes over one slot's hull and hole lists (rings of points, or of
+    edges that start with their first point): [[hull, bound holes...]] per
+    hull, holding the given ring objects."""
+    shapes = [[h] for h in hulls]
+    if holes:
+        rings = [([p[:2] for p in r], h) for rs, h in ((hulls, False), (holes, True)) for r in rs]
+        for s, r in zip(bind_holes(pack_rings(rings))[0][len(hulls):].tolist(), holes):
+            if s >= 0:
+                shapes[s].append(r)
+    return shapes
 
 
 def _validate_ring(ring, options: OverlayOptions):
@@ -567,21 +627,11 @@ def validate_rings(rings: RingSet, options: OverlayOptions) -> tuple[RingSet, np
     return RingSet(rings.slot[idx], rings.hole[idx], new_lens[idx], x[pi], y[pi]), a2[idx]
 
 
-def extract_shapes(
-    segs: Segments,
-    fills: np.ndarray,
-    rule: OverlayRule,
-    options: OverlayOptions,
-    with_areas: bool = False,
-) -> list[list[np.ndarray]]:
-    """Full extraction: boundary filter -> reference walk -> validate_rings ->
-    hole binding.
-
-    Returns shapes: list of [hull, hole, hole, ...] rings as (n,2) int64 arrays.
-    with_areas=True returns a (shapes, areas) pair instead, areas holding each
-    ring's signed shoelace area2 in the shapes structure — the validation pass
-    computes it anyway, so consumers that emit area columns take it here
-    instead of re-walking every ring."""
+def extract_rings(
+    segs: Segments, fills: np.ndarray, rule: OverlayRule, options: OverlayOptions
+) -> tuple[RingSet, np.ndarray]:
+    """Boundary filter -> reference walk -> validate_rings: the kept rings
+    (slot 0) in walk order and their signed area2."""
     clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
     rings = None
     if len(segs) >= 4096:
@@ -591,18 +641,37 @@ def extract_shapes(
         rings = _fast_walk_contours(segs, fills, rule, clockwise_output)
     if rings is None:
         rings = pack_rings(walk_contours(segs, fills, rule, clockwise_output))
-    rings, a2 = validate_rings(rings, options)
+    return validate_rings(rings, options)
+
+
+def extract_shapes(
+    segs: Segments,
+    fills: np.ndarray,
+    rule: OverlayRule,
+    options: OverlayOptions,
+    with_areas: bool = False,
+) -> list[list[np.ndarray]]:
+    """Full extraction: extract_rings -> bind_holes.
+
+    Returns shapes: list of [hull, hole, hole, ...] rings as (n,2) int64 arrays.
+    with_areas=True returns a (shapes, areas) pair instead, areas holding each
+    ring's signed shoelace area2 in the shapes structure — the validation pass
+    computes it anyway, so consumers that emit area columns take it here
+    instead of re-walking every ring."""
+    rings, a2 = extract_rings(segs, fills, rule, options)
+    shape, _ = bind_holes(rings)
     pts = np.stack([rings.x, rings.y], axis=1)
     ends = np.cumsum(rings.lens).tolist()
     arrs = [pts[e - ln:e] for e, ln in zip(ends, rings.lens.tolist())]
     hole = rings.hole.tolist()
-    shapes = bind_holes(
-        [r for r, h in zip(arrs, hole) if not h], [r for r, h in zip(arrs, hole) if h]
-    )
-    if not with_areas:
-        return shapes
-    amap = {id(r): a for r, a in zip(arrs, a2.tolist())}
-    return shapes, [[amap[id(r)] for r in shape] for shape in shapes]
+    a2 = a2.tolist()
+    shapes = [[r] for r, h in zip(arrs, hole) if not h]
+    areas = [[a] for a, h in zip(a2, hole) if not h]
+    for r, a, h, s in zip(arrs, a2, hole, shape.tolist()):
+        if h and s >= 0:
+            shapes[s].append(r)
+            areas[s].append(a)
+    return (shapes, areas) if with_areas else shapes
 
 
 def _fast_walk_contours(segs, fills, rule, clockwise_output) -> RingSet | None:
@@ -789,7 +858,7 @@ def extract_shapes_ogc(
             holes.append(vr[0])
 
     if holes:
-        bound = bind_holes([s[0] for s in shapes], holes)
+        bound = bind_ring_lists([s[0] for s in shapes], holes)
         shapes = [shapes[i] + bound[i][1:] for i in range(len(shapes))]
     return [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes]
 
@@ -800,67 +869,27 @@ def walk_vectors(
     rule: OverlayRule,
     clockwise_output: bool = False,
 ) -> list[tuple[list[tuple[int, int, int, int, int]], bool]]:
-    """S8 edge-level walk: like walk_contours, but each traversed link emits a
-    DIRECTED edge (ax, ay, bx, by, fill) carrying its 4-bit SegmentFill
-    (reference build_shape_vectors, iOverlay/src/core/overlay.rs:260-298 +
-    vector/extract.rs). Edge k of a ring spans ring[k] -> ring[k+1] via the
-    k-th link selected by the walk; the fill is the link's SideFill
-    (iOverlay/src/vector/edge.rs:13-31): the raw SegmentFill when the edge is
-    traversed in the stored a<b direction (TOP = left), with left/right bits
-    swapped when traversed reversed. Returns [(edges, is_hole)]."""
-
-    def side(fill: int, forward: bool) -> int:
-        if forward:
-            return fill
-        return (((fill & 1) << 1) | ((fill & 2) >> 1)
-                | ((fill & 4) << 1) | ((fill & 8) >> 1))
-    mask = boundary_mask(fills, rule)
-    idx = np.flatnonzero(mask)
-    if len(idx) == 0:
-        return []
-    pts_a = list(zip(segs.ax[idx].tolist(), segs.ay[idx].tolist()))
-    pts_b = list(zip(segs.bx[idx].tolist(), segs.by[idx].tolist()))
-    bfills = fills[idx].tolist()
-    g = _LinkGraph(pts_a, pts_b, bfills)
-
-    visited = [False] * g.m
+    """S8 edge-level walk: walk_contours' rings as DIRECTED edges (ax, ay,
+    bx, by, fill) (reference build_shape_vectors,
+    iOverlay/src/core/overlay.rs:260-298 + vector/extract.rs). Edge k spans
+    ring[k] -> ring[k+1] along the link between them (a merged set has one
+    per node pair); its fill is the link's SideFill
+    (iOverlay/src/vector/edge.rs:13-31): the raw SegmentFill when the edge
+    runs the stored a<b direction (TOP = left), with left/right bits swapped
+    when reversed. Returns [(edges, is_hole)]; an isolated degenerate pair
+    walks to no edges."""
+    idx = np.flatnonzero(boundary_mask(fills, rule))
+    cols = (segs.ax[idx], segs.ay[idx], segs.bx[idx], segs.by[idx], fills[idx])
+    link = {((a, b), (c, d)): f for a, b, c, d, f in zip(*(v.tolist() for v in cols))}
     out = []
-    for start in range(g.m):
-        if visited[start]:
-            continue
-        top = g.left_top_link(start, visited)
-        hole = is_fill_top(g.fill[top], rule)
-        d = hole == clockwise_output
-        if d:
-            pts = [g.b[top]]
-            node = int(g.a_node[top])
-            last_node = int(g.b_node[top])
-        else:
-            pts = [g.a[top]]
-            node = int(g.b_node[top])
-            last_node = int(g.a_node[top])
-        visited[top] = True
-        lfills = [side(int(g.fill[top]), not d)]
-        last_link = g.next_link(top, last_node, not d, visited)
-        link = top
-        if last_link < 0:
-            out.append(([], hole))
-            continue
-        guard = 4 * g.m + 8
-        while link != last_link and guard > 0:
-            guard -= 1
-            link = g.next_link(link, node, d, visited)
-            if link < 0:
-                break
-            pts.append(g.node_pt[node])
-            lfills.append(side(int(g.fill[link]), int(g.a_node[link]) == node))
-            node = g.other(link, node)
-            visited[link] = True
-        n = len(pts)
-        edges = [
-            (pts[k][0], pts[k][1], pts[(k + 1) % n][0], pts[(k + 1) % n][1], lfills[k])
-            for k in range(n)
-        ]
+    for ring, hole in walk_contours(segs, fills, rule, clockwise_output):
+        edges = []
+        for p, q in zip(ring, ring[1:] + ring[:1]) if len(ring) > 1 else ():
+            f = link.get((p, q))
+            if f is None:
+                f = link[(q, p)]
+                f = ((f & 1) << 1) | ((f & 2) >> 1) | ((f & 4) << 1) | ((f & 8) >> 1)
+            edges.append((p[0], p[1], q[0], q[1], f))
         out.append((edges, hole))
     return out
 
@@ -881,25 +910,8 @@ def build_shape_vectors(
     g = build_graph(subj, clip, fill_rule, options)
     walked = walk_vectors(g.segments, g.fills, rule,
                           options.output_direction == ContourDirection.CLOCKWISE)
-    hulls, holes = [], []
-    for edges, hole in walked:
-        if len(edges) < 3:
-            continue
-        ring = [(e[0], e[1]) for e in edges]
-        if ring_area2(ring) == 0:
-            continue
-        (holes if hole else hulls).append(edges)
-    shapes = [[h] for h in hulls]
-    if holes:
-        bound = bind_holes([[(e[0], e[1]) for e in h] for h in hulls],
-                           [[(e[0], e[1]) for e in h] for h in holes])
-        ring_to_hole = { }
-        for hi, h in enumerate(holes):
-            key = tuple((e[0], e[1]) for e in h)
-            ring_to_hole[key] = hi
-        for si, sh in enumerate(bound):
-            for extra in sh[1:]:
-                hi = ring_to_hole.get(tuple(extra))
-                if hi is not None:
-                    shapes[si].append(holes[hi])
-    return shapes
+    walked = [
+        (edges, hole) for edges, hole in walked
+        if len(edges) >= 3 and ring_area2([(e[0], e[1]) for e in edges]) != 0
+    ]
+    return bind_ring_lists([e for e, h in walked if not h], [e for e, h in walked if h])

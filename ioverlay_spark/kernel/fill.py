@@ -18,6 +18,7 @@ the same formula the distributed x-strip pipeline uses (SURVEY.md A10).
 from __future__ import annotations
 
 import os
+from collections import namedtuple
 
 import numpy as np
 
@@ -259,48 +260,31 @@ def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
     return min(8, os.cpu_count() or 1)
 
 
-def _windings_segtree(
-    segs: Segments, threads: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized O((n+q) log^2 n) midpoint-ray windings via a segment tree over
-    x-intervals (the numpy replacement for the per-event python loop in
-    _windings_sweep, VERDICT r03 #2).
+# segtree_build's tree: leaf boundaries B (nL leaves padded to nP), CSR rows
+# per heap-numbered node (start/cnt), each row's segment index sid and its four
+# point-vs-segment predicate operands
+SegTree = namedtuple("SegTree", "B nL nP start cnt sid enum0 edy edt eax2")
+
+
+def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
+    """Segment tree over the non-vertical segments of a non-crossing set in
+    non-negative local coordinates (None when there are none).
 
     Each non-vertical segment covers the elementary x-intervals between its
     doubled endpoints; the canonical decomposition (overlap.canonical_blocks,
     shared with the bbox-overlap enumerator) assigns it to <=2 tree nodes per
-    level. Within a node every member spans the node's whole
-    x-interval and no two members cross or touch there (post-split invariant),
-    so members are TOTALLY y-ordered throughout the interval: they are sorted
-    once by their exact rational y at the node midpoint (int64 floor + remainder
-    key, float tiebreak, exact adjacent verification with a python re-sort of
-    the rare float-ambiguous nodes). A downward ray at doubled-x Xi then crosses,
-    within each node on Xi's root-to-leaf path, exactly a PREFIX of that node's
-    members (order is monotone at every x in the node), found by vectorized
-    binary search with the same exact integer point-vs-segment predicate as
-    _windings_below; per-node prefix weight sums finish the count.
+    level. Within a node every member spans the node's whole x-interval and no
+    two members cross there, so members are TOTALLY y-ordered throughout the
+    interval: they are sorted once by their exact rational y at the node
+    midpoint (int64 floor + remainder key, float tiebreak, exact adjacent
+    verification with a python re-sort of the rare float-ambiguous nodes).
 
-    Unlike the sweep this is ray-at-midpoint semantics (identical to
-    _windings_below), hence valid on strip SUBSETS too — the distributed
-    x-strip kernel can use it where the sweep is gated off (BENCH.md round-3
-    subset trap). int64-only: callers must have applied the 4*extent^2 < 2^62
-    gate (all products here are bounded by 8*extent^2 < 2^63 given that gate).
-    """
-    n = len(segs)
-    wind_s = np.zeros(n, dtype=np.int64)
-    wind_c = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return wind_s, wind_c
-    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-    x0 = min(int(ax.min()), int(bx.min()))
-    y0 = min(int(ay.min()), int(by.min()))
-    tax = ax - x0
-    tay = ay - y0
-    tbx = bx - x0
-    tby = by - y0
+    int64 operands need 4*extent^2 < 2^62 (all products here are bounded by
+    8*extent^2 < 2^63 given that gate); python-int (object) operand arrays run
+    the same code at any width."""
     mem = np.flatnonzero(tbx > tax)
     if len(mem) == 0:
-        return wind_s, wind_c
+        return None
     B = np.unique(np.concatenate([2 * tax[mem], 2 * tbx[mem]]))
     nL = len(B) - 1
     nP = 1 << max(0, int(nL - 1).bit_length())
@@ -346,7 +330,7 @@ def _windings_segtree(
     # order and are repaired by the exact adjacent verification below (which
     # runs either way). Falls back to the composite-float argsort when the bit
     # budget doesn't fit (huge node ids or pair counts).
-    yf = NUM / DEN
+    yf = (NUM / DEN).astype(np.float64, copy=False)
     ylo = float(yf.min())
     yspan = float(yf.max()) - ylo
     M = len(node)
@@ -384,11 +368,14 @@ def _windings_segtree(
     # adjacent checks sufficient): y_i <= y_j  <=>  (q, r*DEN-cross) ordered
     qk = NUM // DEN
     rk = NUM - qk * DEN
-    same = node[1:] == node[:-1]
-    inv = same & (
-        (qk[1:] < qk[:-1])
-        | ((qk[1:] == qk[:-1]) & (rk[:-1] * DEN[1:] > rk[1:] * DEN[:-1]))
-    )
+
+    def inversions():
+        return (node[1:] == node[:-1]) & (
+            (qk[1:] < qk[:-1])
+            | ((qk[1:] == qk[:-1]) & (rk[:-1] * DEN[1:] > rk[1:] * DEN[:-1]))
+        )
+
+    inv = inversions()
     if inv.any():
         # vectorized repair: gather ALL rows of the offending nodes (contiguous
         # ranges — node is sorted) and lexsort them by (node, qk, rk/DEN). qk
@@ -413,29 +400,26 @@ def _windings_segtree(
         qk[sub] = qk[sub_sorted]
         rk[sub] = rk[sub_sorted]
         DEN[sub] = DEN[sub_sorted]
-        inv2 = (node[1:] == node[:-1]) & (
-            (qk[1:] < qk[:-1])
-            | ((qk[1:] == qk[:-1]) & (rk[:-1] * DEN[1:] > rk[1:] * DEN[:-1]))
-        )
-        if inv2.any():
-            import functools
+        inv = inversions()
+    if inv.any():
+        import functools
 
-            for v in np.unique(node[:-1][inv2]).tolist():
-                s = int(np.searchsorted(node, v, side="left"))
-                e = int(np.searchsorted(node, v, side="right"))
+        for v in np.unique(node[:-1][inv]).tolist():
+            s = int(np.searchsorted(node, v, side="left"))
+            e = int(np.searchsorted(node, v, side="right"))
 
-                def _less(i, j):
-                    if qk[i] != qk[j]:
-                        return -1 if qk[i] < qk[j] else 1
-                    lhs = int(rk[i]) * int(DEN[j])
-                    rhs = int(rk[j]) * int(DEN[i])
-                    return -1 if lhs < rhs else (1 if lhs > rhs else 0)
+            def _less(i, j):
+                if qk[i] != qk[j]:
+                    return -1 if qk[i] < qk[j] else 1
+                lhs = int(rk[i]) * int(DEN[j])
+                rhs = int(rk[j]) * int(DEN[i])
+                return -1 if lhs < rhs else (1 if lhs > rhs else 0)
 
-                idx = sorted(range(s, e), key=functools.cmp_to_key(_less))
-                sid[s:e] = sid[idx]
-                qk[s:e] = qk[idx]
-                rk[s:e] = rk[idx]
-                DEN[s:e] = DEN[idx]
+            idx = sorted(range(s, e), key=functools.cmp_to_key(_less))
+            sid[s:e] = sid[idx]
+            qk[s:e] = qk[idx]
+            rk[s:e] = rk[idx]
+            DEN[s:e] = DEN[idx]
 
     # CSR over node-id space; predicate operands as four 1-D arrays (numpy's
     # 1-D integer gather is ~2x a 2-D row gather — measured) with pairs sorted
@@ -462,34 +446,30 @@ def _windings_segtree(
         edt = edt.astype(np.int32)
         edy = edy.astype(np.int32)
         eax2 = eax2.astype(np.int32)
-    # zero-weight sides (self-union: clip empty) skip their prefix sums and
-    # accumulation entirely
-    has_subj = bool(np.any(segs.subj))
-    has_clip = bool(np.any(segs.clip))
-    cs = (
-        np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(segs.subj[sid])])
-        if has_subj
-        else None
-    )
-    cc = (
-        np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(segs.clip[sid])])
-        if has_clip
-        else None
-    )
+    return SegTree(B, nL, nP, start, cnt, sid, enum0, edy, edt, eax2)
 
-    # queries: every segment's doubled midpoint; the root-to-leaf path is one
-    # broadcast shift matrix (all leaves share the tree depth), filtered to
-    # nonempty nodes. Queries are pre-sorted by LEAF (one small argsort), which
-    # makes PV monotone within every level block of the level-major reshape —
-    # the same gather locality the previous global 4M-element node argsort
-    # bought, at 1/10 the cost (nothing downstream needs a global order:
-    # start/cnt lookups are random-access and the accumulate is a bincount).
-    Xi = tax + tbx
-    Ti = tay + tby
-    p = np.searchsorted(B, Xi, side="right") - 1
+
+def segtree_below(
+    tree: SegTree, Xi, Ti, threads: int | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[int]]:
+    """Downward rays from the queries (doubled x Xi, doubled y Ti): in each
+    node on Xi's root-to-leaf path the members strictly below the query point
+    are a PREFIX (order is monotone at every x in the node), found by
+    vectorized binary search. Returns (PQ, PV, plo, lvl_off): per (query,
+    nonempty path node), the prefix end plo in the CSR rows, grouped by level
+    at [lvl_off[k], lvl_off[k + 1]) (a query at most once per level)."""
+    start, cnt = tree.start, tree.cnt
+    enum0, edy, edt, eax2 = tree.enum0, tree.edy, tree.edt, tree.eax2
+    nL, nP = tree.nL, tree.nP
+    # the root-to-leaf path is one broadcast shift matrix (all leaves share the
+    # tree depth), filtered to nonempty nodes. Queries are pre-sorted by LEAF
+    # (one small argsort), which makes PV monotone within every level block of
+    # the level-major reshape — the same gather locality the previous global
+    # 4M-element node argsort bought, at 1/10 the cost (nothing downstream
+    # needs a global order: start/cnt lookups are random-access and the
+    # accumulate is a bincount).
+    p = np.searchsorted(tree.B, Xi, side="right") - 1
     qs = np.flatnonzero((p >= 0) & (p < nL))
-    if len(qs) == 0:
-        return wind_s, wind_c
     qs = qs[np.argsort(p[qs], kind="stable")]
     levels = int(nP).bit_length()  # leaf v in [nP, 2nP) -> levels shifts to 1
     leaf = p[qs] + nP
@@ -498,13 +478,12 @@ def _windings_segtree(
     for lvl in range(levels):  # filter per level: ~half the node visits are
         v = leaf >> lvl  # empty, and this skips the 2-D broadcast copies
         m = cnt[v] > 0
-        if m.any():
-            pq_parts.append(qs[m])
-            pv_parts.append(v[m])
-    if not pq_parts:
-        return wind_s, wind_c
+        pq_parts.append(qs[m])
+        pv_parts.append(v[m])
+    lvl_off = np.cumsum([0] + [len(a) for a in pq_parts]).tolist()
     PQ = np.concatenate(pq_parts)
     PV = np.concatenate(pv_parts)
+
     def _bisect(sl: slice) -> np.ndarray:
         # vectorized binary search over each query's node-member prefix; the
         # mid-indexed gathers dominate (latency-bound), so callers may run
@@ -546,11 +525,53 @@ def _windings_segtree(
         with ThreadPoolExecutor(k) as ex:
             for sl, part in zip(slices, ex.map(_bisect, slices)):
                 plo[sl] = part
-    base = start[PV]
-    if has_subj:
-        wind_s += np.bincount(PQ, weights=(cs[plo] - cs[base]).astype(np.float64), minlength=n).astype(np.int64)
-    if has_clip:
-        wind_c += np.bincount(PQ, weights=(cc[plo] - cc[base]).astype(np.float64), minlength=n).astype(np.int64)
+    return PQ, PV, plo, lvl_off
+
+
+def _windings_segtree(
+    segs: Segments, threads: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized O((n+q) log^2 n) midpoint-ray windings on the segment tree
+    (segtree_build, segtree_below): every segment's doubled midpoint is a
+    query, and per-node prefix weight sums over each query's strictly-below
+    prefixes finish the count (the numpy replacement for the per-event python
+    loop in _windings_sweep, VERDICT r03 #2).
+
+    Unlike the sweep this is ray-at-midpoint semantics (identical to
+    _windings_below), hence valid on strip SUBSETS too — the distributed
+    x-strip kernel can use it where the sweep is gated off (BENCH.md round-3
+    subset trap). int64-only: callers must have applied the 4*extent^2 < 2^62
+    gate.
+    """
+    n = len(segs)
+    wind_s = np.zeros(n, dtype=np.int64)
+    wind_c = np.zeros(n, dtype=np.int64)
+    if n == 0:
+        return wind_s, wind_c
+    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
+    x0 = min(int(ax.min()), int(bx.min()))
+    y0 = min(int(ay.min()), int(by.min()))
+    tax = ax - x0
+    tay = ay - y0
+    tbx = bx - x0
+    tby = by - y0
+    tree = segtree_build(tax, tay, tbx, tby)
+    if tree is None:
+        return wind_s, wind_c
+    # zero-weight sides (self-union: clip empty) skip their prefix sums and
+    # accumulation entirely
+    has_subj = bool(np.any(segs.subj))
+    has_clip = bool(np.any(segs.clip))
+    PQ, PV, plo, _ = segtree_below(tree, tax + tbx, tay + tby, threads)
+    if not len(PQ):
+        return wind_s, wind_c
+    base = tree.start[PV]
+    for has, w, wind in ((has_subj, segs.subj, wind_s), (has_clip, segs.clip, wind_c)):
+        if has:
+            cs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(w[tree.sid])])
+            wind += np.bincount(
+                PQ, weights=(cs[plo] - cs[base]).astype(np.float64), minlength=n
+            ).astype(np.int64)
     return wind_s, wind_c
 
 

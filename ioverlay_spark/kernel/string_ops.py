@@ -15,7 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
-from .extract import bind_holes, ring_area2, simplify_ring
 from .segments import Segments, build_segments, sort_and_merge
 from .split import cross_pair, split_segments
 from .overlay import build_graph

@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..options import ContourDirection, FillRule, OverlayOptions
-from .extract import _LinkGraph, _nearest_link, bind_holes, ring_area2
+from .extract import _LinkGraph, _nearest_link, bind_ring_lists, ring_area2
 from .fill import SUBJ_BOTH, SUBJ_BOTTOM, SUBJ_TOP, _is_inside, _windings_below
 from .segments import Segments, _dedup_consecutive, _drop_collinear, build_segments
 from .split import find_marks
@@ -314,7 +314,7 @@ def slice_extract(
                 if clockwise_out != order:
                     lp = lp[::-1]
                 hulls.append(lp)
-    shapes = bind_holes(hulls, holes)
+    shapes = bind_ring_lists(hulls, holes)
     return [[np.array(r, dtype=np.int64) for r in shape] for shape in shapes]
 
 

@@ -20,16 +20,13 @@ it; this pipeline distributes every stage of the reference algorithm:
                                 strip against all segments crossing that strip);
                                 the fill kernel keeps the rule's boundary
                                 segments and packs them into binary blobs
-  A11-13 boundary + extract  -> ONE task labels components (numpy union-find)
-                                and walks every ring (fused CC + walk); past
-                                8 M boundary edges: connected components (one
-                                union-find task, or alternating
+  A11-14 extract + binding   -> ONE task labels components (numpy union-find),
+                                walks every ring and binds holes (the kernel's
+                                bind_holes); past 8 M boundary edges: connected
+                                components (one union-find task, or alternating
                                 large-star/small-star rounds) -> salted
-                                per-component kernel walk
-  A14    hole binding        -> distributed below-anchor scan (x-band equi-join,
-                                crossing parity + innermost argmax): a hole's
-                                innermost containing hull is its shape directly,
-                                no driver-side chain step
+                                per-component kernel walk -> distributed
+                                below-anchor scan binding (x-band equi-join)
 
 Skew: per-cell segment histograms pick the grid level; cells exceeding the hot
 threshold are salted to a finer sub-grid before the Arrow kernel (north rule).
@@ -866,12 +863,13 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
     A mapInArrow iterator: the caller's repartition(1) hands it every segment.
 
     Runs the scalar kernel's stages on the whole set: split_segments (the
-    vectorized exact solver, python-int past its int64 bound) and the fill
-    dispatcher compute_fills_windowed."""
-    from ..kernel.batch import _shapes_to_flat
-    from ..kernel.extract import extract_shapes
+    vectorized exact solver, python-int past its int64 bound), the fill
+    dispatcher compute_fills_windowed, then the fused extract's walk + bind
+    (distributed_extract._fused_extract_arrays) on the rule's boundary."""
+    from ..kernel.extract import boundary_mask
     from ..kernel.fill import compute_fills_windowed
     from ..kernel.split import split_segments
+    from .distributed_extract import _fused_extract_arrays
 
     def run(it):
         batches = list(it)
@@ -888,22 +886,11 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
         )
         segs = split_segments(segs, threads=1)
         fills = compute_fills_windowed(segs, fill_rule)
-        shapes_areas = extract_shapes(segs, fills, rule, options, with_areas=True)
-        _, sid, cidx, lens, pts, a2 = _shapes_to_flat([(0, shapes_areas)])
-        offs = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        po = pa.array(offs.astype(np.int32))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(sid),
-                pa.array(np.arange(len(sid), dtype=np.int64)),
-                pa.array(cidx > 0),
-                pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 0]))),
-                pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 1]))),
-                pa.array(a2),
-            ],
-            names=["shape_id", "ring_id", "is_hole", "pts_x", "pts_y", "area2"],
-        )
+        b = boundary_mask(fills, rule)
+        if b.any():
+            yield from _fused_extract_arrays(
+                rule, options, segs.ax[b], segs.ay[b], segs.bx[b], segs.by[b], fills[b]
+            ).to_batches()
 
     return run
 

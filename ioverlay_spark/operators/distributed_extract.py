@@ -3,17 +3,17 @@
 boundary filter  -> Column expressions over the fill bits (or the fill
                     kernel's boundary blobs, already filtered)
 fused extract    -> up to 8 M boundary edges: ONE task labels components
-                    (numpy union-find) and walks + validates every ring
+                    (numpy union-find), walks + validates every ring and
+                    binds holes (kernel.extract.bind_holes)
 components       -> past it: one union-find task (repartition(1).mapInArrow)
                     or alternating large-star / small-star label propagation
                     (O(log n) rounds; each round = two joins + aggregates)
 per-component    -> salted groupBy(_salt).applyInArrow running the exact
                     kernel walk on each component of the group
-hole binding     -> distributed "first segment strictly below the anchor" scan:
-                    anchors x hull segments equi-joined on x-bands, crossing
-                    parity + max on the exact rational y-at-x; a hole's
-                    innermost containing hull is its shape, so no chain step
-                    (reference ShapeBinder, iOverlay/src/bind/solver.rs:25-236)
+hole binding     -> past it: distributed "first segment strictly below the
+                    anchor" scan: anchors x hull segments equi-joined on
+                    x-bands, crossing parity + max on the exact rational
+                    y-at-x; a hole's innermost containing hull is its shape
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.cluster import _cc_label_arrays
+from ..kernel.extract import RingSet, bind_holes
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
 from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch, _checkpoint_observed
 
@@ -395,10 +396,11 @@ def _fused_extract_arrays(
     by: np.ndarray,
     fills_arr: np.ndarray,
 ) -> pa.Table:
-    """Single-task CC + walk FUSION for boundary sets up to the fused cap: one
-    task receives the whole boundary set, labels components in-kernel (numpy
-    union-find, the same _cc_label_arrays the one-task CC path uses) and walks
-    and validates rings immediately via the shared _extract_rings_core.
+    """Single-task CC + walk + bind FUSION for boundary sets up to the fused
+    cap: one task receives the whole boundary set, labels components in-kernel
+    (numpy union-find, the same _cc_label_arrays the one-task CC path uses),
+    walks and validates rings via the shared _extract_rings_core and binds
+    them with _bind_rings_table: RINGS_OUT_SCHEMA rows.
 
     Vs the broadcast-CC path this removes, per overlay: the edge shuffle to the
     CC task, the node->component broadcast build, the map-side hash join and
@@ -426,10 +428,29 @@ def _fused_extract_arrays(
     # this kernel owns the ONE task of its stage (repartition(1)) — the
     # rest of the executor is idle, so the component walk threads out
     threads = min(8, os.cpu_count() or 1)
-    return _extract_rings_core(
-        rule, options, comp_of_u, ax, ay, bx, by, fills_arr, 0,
-        threads=threads,
+    return _bind_rings_table(
+        _extract_rings_core(
+            rule, options, comp_of_u, ax, ay, bx, by, fills_arr, 0, threads=threads
+        )
     )
+
+
+def _bind_rings_table(tbl: pa.Table) -> pa.Table:
+    """In-kernel hole binding of one task's rings (RINGS_SCHEMA rows, bound as
+    one slot: a hole and its hull are different components) to
+    RINGS_OUT_SCHEMA rows: a hull's shape_id is its ring_id, a hole's is its
+    hull's, and unbound holes are dropped."""
+    px, py = (tbl.column(c).combine_chunks() for c in ("pts_x", "pts_y"))
+    hole = tbl.column("is_hole").to_numpy(zero_copy_only=False)
+    lens = np.diff(px.offsets.to_numpy())
+    shape, _ = bind_holes(
+        RingSet(np.zeros(len(lens), dtype=np.int64), hole, lens,
+                px.flatten().to_numpy(), py.flatten().to_numpy())
+    )
+    keep = np.flatnonzero(shape >= 0)
+    ids = tbl.column("ring_id").to_numpy()[~hole][shape[keep]]
+    out = tbl.select(RINGS_OUT_SCHEMA.fieldNames()[1:]).take(keep)
+    return out.add_column(0, "shape_id", pa.array(ids, type=pa.int64()))
 
 
 def _blob_boundary_arrays(tbl: pa.Table):
@@ -467,7 +488,7 @@ def _blob_boundary_arrays(tbl: pa.Table):
 
 def _fused_extract_blob_iter(rule: OverlayRule, options: OverlayOptions):
     """Single-task fused extract over BOUNDARY_BLOB_SCHEMA rows: unpack the
-    blobs (memcpy) and run the shared fused CC+walk kernel on the arrays."""
+    blobs (memcpy) and run the fused CC+walk+bind kernel on the arrays."""
 
     def it(batches):
         chunks = list(batches)
@@ -605,27 +626,30 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
     (guaranteed for disjoint result rings of one overlay)."""
     segs = _ring_segments_df(hulls.select("ring_id", "pts_x", "pts_y"))
     bounds = segs.agg(
-        F.min("ax").alias("x0"), F.max("bx").alias("x1")
+        F.min("ax").alias("x0"), F.max("bx").alias("x1"),
+        F.min(F.least("ay", "by")).alias("y0"),
     ).first()
     if bounds is None or bounds["x0"] is None:
         spark = hulls.sparkSession
         return spark.createDataFrame([], "hole_ring_id LONG, shape_id LONG")
-    x0, x1 = int(bounds["x0"]), int(bounds["x1"])
+    x0, x1, y0 = int(bounds["x0"]), int(bounds["x1"]), int(bounds["y0"])
     band = max(1, (x1 - x0 + n_bands - 1) // n_bands)
-    seg_b = segs.withColumn(
-        "band", F.explode(F.expr(f"sequence((ax - {x0}) DIV {band}, (bx - {x0}) DIV {band})"))
-    ).select(F.col("ring_id").alias("hull_ring_id"), "ax", "ay", "bx", "by", "band")
+    # coordinates relative to the hull segments' min corner (x0, y0): the
+    # products below then scale with the extent, not the offset
+    seg_b = segs.select(
+        F.col("ring_id").alias("hull_ring_id"),
+        *[(F.col(c) - o).alias(c) for c, o in zip(("ax", "ay", "bx", "by"), (x0, y0) * 2)],
+    ).withColumn("band", F.explode(F.expr(f"sequence(ax DIV {band}, bx DIV {band})")))
     anch = holes.select(
         F.col("ring_id").alias("hole_ring_id"),
-        "anchor_x",
-        "anchor_y",
-        F.expr(f"(anchor_x - {x0}) DIV {band}").alias("band"),
-    )
+        (F.col("anchor_x") - x0).alias("anchor_x"),
+        (F.col("anchor_y") - y0).alias("anchor_y"),
+    ).withColumn("band", F.expr(f"anchor_x DIV {band}"))
     j = anch.join(seg_b, "band").where(
         (F.col("ax") <= F.col("anchor_x")) & (F.col("anchor_x") < F.col("bx"))
     )
     # exact rational y-at-x: num/den with den = bx-ax > 0; strictly below test is
-    # num < anchor_y * den (int64-safe for |coords| < 2^30: products <= 2^62)
+    # num < anchor_y * den (int64-safe for extents < 2^30: products <= 2^62)
     num = F.col("ay") * (F.col("bx") - F.col("ax")) + (F.col("by") - F.col("ay")) * (
         F.col("anchor_x") - F.col("ax")
     )
@@ -686,8 +710,11 @@ def extract_shapes_df(
     n_edges_hint: an UPPER BOUND on the boundary row count when the caller
     knows one (the overlay pipeline's post-split row count). When it already
     clears the fused cap, the dispatch is decided without any job at all, and
-    the fused walk, the blobs' only reader, consumes the fill plan directly:
-    the fill stage and the walk run as one job with no checkpoint between."""
+    the fused walk, the blobs' only reader, consumes the fill plan directly.
+
+    Up to the fused cap the result is the fused kernel's lazy output (walk and
+    bind_holes in one task: no rings checkpoint, no binding join); past it the
+    salted walk's rings go through _bind_and_project."""
     from ..session import audit_desc
 
     if "xyf" not in fills.columns:
@@ -711,8 +738,9 @@ def extract_shapes_df(
         )
         cmax, n_edges = meta["m"], int(meta["n"] or 0)
     if n_edges <= _FUSED_EXTRACT_CAP:
-        # blob feed straight into ONE task that does CC + walk fused (node ids,
-        # labels and the vectorized component walk all in-kernel): the
+        # blob feed straight into ONE task that does CC + walk + bind fused
+        # (node ids, labels, the vectorized component walk and the hole
+        # binding all in-kernel): the
         # exchange moves ~n_partitions binary rows, no comp-map broadcast or
         # salt re-shuffle, and the task unpacks via np.frombuffer.
         # repartition(1) + mapInArrow instead of a constant-key grouped map:
@@ -720,11 +748,10 @@ def extract_shapes_df(
         # (measured ~6 s vs ~1 s for a 1 M-row noop); repartition(1), not
         # coalesce(1): the 64-way shuffle write parallelizes and it cannot
         # infect upstream lineage. Differential-tested equal to the salted path.
-        audit_desc(fills.sparkSession, "extract:fused blob walk+ckpt")
-        rings = b.repartition(1).mapInArrow(
-            _fused_extract_blob_iter(rule, options), schema=RINGS_SCHEMA
+        audit_desc(fills.sparkSession, "extract:fused blob walk+bind")
+        return b.repartition(1).mapInArrow(
+            _fused_extract_blob_iter(rule, options), schema=RINGS_OUT_SCHEMA
         )
-        return _bind_and_project(rings)
     # giant boundary set: unpack the blobs back to the per-segment row feed
     # for the salted multi-task plan below (rare — the fused cap is 8 M
     # edges; the unpack is a memcpy map over the checkpointed blobs)
@@ -759,9 +786,9 @@ def extract_shapes_df(
 
 
 def _bind_and_project(rings: DataFrame) -> DataFrame:
-    """Shared tail of both extract plans: checkpoint the raw rings (observing
-    their hole count in the same job), then hole->hull binding + the final
-    shape-id projection."""
+    """Tail of the salted extract plan (the fused kernel binds in-kernel):
+    checkpoint the raw rings (observing their hole count in the same job),
+    then bind_holes_df + the final shape-id projection."""
     rings, m = _checkpoint_observed(rings, [F.count_if("is_hole").alias("holes")])
     hulls = rings.where(~F.col("is_hole"))
     holes = rings.where(F.col("is_hole"))

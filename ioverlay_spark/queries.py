@@ -1126,11 +1126,12 @@ SELECT CAST({N} AS BIGINT) AS n, CAST({expect} AS BIGINT) AS total_area2
 
 @_register("distributed_holes")
 def _q_distributed_holes():
-    """Distributed extraction WITH hole binding (A13/A14 v2): a KxK grid of
+    """Distributed extraction WITH hole binding (A13/A14): a KxK grid of
     triple-nested concentric squares — subject = [outer, middle] (even-odd donut),
     clip = [inner], XOR. Each cell yields a donut (hull + bound hole) plus an
-    island hull INSIDE the hole, so binding must pick the innermost containing
-    hull among nested candidates, fully distributed (x-band ray cast; zero
+    island hull INSIDE the hole, so binding must pick the right hull among
+    nested candidates. At K=6 the boundary is far under the fused-extract cap,
+    so the one fused task binds in-kernel (kernel.extract.bind_holes; zero
     driver-side ring materialization). Oracle is the closed form."""
 
     K, S = 6, 64  # grid size, outer square edge; cells spaced 2*S apart

@@ -7,6 +7,7 @@ workloads end-to-end:
 
 - many_squares / not_overlap      test_1_not_overlap.rs:100-140, util.rs:33-57
 - many_windows / windows          test_4_windows.rs:97-126, util.rs:59-95
+- hull_holes                      no reference row: one hull, k^2 holes
 - concentric_squares / nested     test_5_nested_squares.rs:124-160, util.rs:97-140
 - corrosion                       test_6_corrosion.rs:97-168
 - concentric (rings + satellites) test_7_concentric.rs:97-172
@@ -74,6 +75,13 @@ def windows(n: int) -> tuple[list[np.ndarray], list[np.ndarray]]:
     offset = 30
     x = n * offset // 2
     return many_windows(-x, -x, 20, 10, offset, n)
+
+
+def hull_holes(k: int) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """One (20k+10)-unit square minus a k x k grid of 10-unit squares on a
+    20-unit pitch. DIFFERENCE keeps ONE shape with k^2 holes: one cluster,
+    so only the hole binder decides its cost."""
+    return [_SQUARE * (20 * k + 10)], many_squares(10, 10, 10, 20, k)
 
 
 def concentric_squares(a: int, n: int) -> tuple[list[np.ndarray], list[np.ndarray]]:

@@ -609,7 +609,8 @@ def _segments_df(spark, subj, clip):
     "case",
     [
         "no_marks", "empty", "snap_two_rounds", "checkpoint_dir", "wide_2e40",
-        "wide_strips_xor", "wide_strips_intersect",
+        "wide_strips_xor", "wide_strips_intersect", "far_hole_2e53",
+        "far_hole_2e53_salted",
     ],
 )
 def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_path, case):
@@ -622,8 +623,12 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     by 2^40, and two thin strips crossing with 2^41 extents (XOR and
     INTERSECT): their segments are past the cell kernel's int64 gate, so
     every candidate pair must reach the python-int solver. Every round ships
-    the one mark form, (_sid, px, py, is_round, col_ovl), at every width."""
+    the one mark form, (_sid, px, py, is_round, col_ovl), at every width.
+    far_hole_2e53: a 1,024-square minus its centred 512-square shifted by
+    2^53, whose hole must bind on the fused extract and, with the fused cap
+    at 0, on the salted extract's relational binder."""
     import ioverlay_spark.operators.distributed as dist
+    import ioverlay_spark.operators.distributed_extract as dx
     from ioverlay_spark.options import FillRule, OverlayRule
 
     rounds = []
@@ -647,6 +652,12 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
         clip = [[(-S, S - w), (S, -S), (S, -S + w), (-S, S)]]
         if case == "wide_strips_intersect":
             rule = OverlayRule.INTERSECT
+    elif case.startswith("far_hole"):
+        subj = shifted([[(0, 0), (1024, 0), (1024, 1024), (0, 1024)]], 1 << 53)
+        clip = shifted([[(256, 256), (768, 256), (768, 768), (256, 768)]], 1 << 53)
+        rule = OverlayRule.DIFFERENCE
+        if case.endswith("salted"):
+            monkeypatch.setattr(dx, "_FUSED_EXTRACT_CAP", 0)
     else:
         subj, clip = snap_case(1 << 40 if case == "wide_2e40" else 0)
         if case == "checkpoint_dir":
@@ -663,7 +674,7 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     exp = kernel_rings(subj, clip, rule, FillRule.EVEN_ODD)
     assert ring_multiset(out) == exp
     assert_holes_bound(out)
-    if case in ("no_marks", "empty"):
+    if case in ("no_marks", "empty") or case.startswith("far_hole"):
         assert len(rounds) == 1
     else:
         assert len(exp) > 0 and len(rounds) >= 2

@@ -23,9 +23,10 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from bind_oracle import point_in_ring
 
 from ioverlay_spark.kernel.buffering import LineCap, LineJoin, outline, stroke
-from ioverlay_spark.kernel.extract import _point_in_ring, ring_area2
+from ioverlay_spark.kernel.extract import ring_area2
 
 STROKE_DIR = Path("/root/reference/iOverlay/tests/stroke")
 OUTLINE_DIR = Path("/root/reference/iOverlay/tests/outline")
@@ -46,8 +47,8 @@ def _load(path: Path, key: str) -> list[np.ndarray]:
 
 def _in_shapes(x: int, y: int, shapes) -> bool:
     for shape in shapes:
-        if _point_in_ring(x, y, shape[0]) and not any(
-            _point_in_ring(x, y, hole) for hole in shape[1:]
+        if point_in_ring(x, y, shape[0]) and not any(
+            point_in_ring(x, y, hole) for hole in shape[1:]
         ):
             return True
     return False
