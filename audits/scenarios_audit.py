@@ -4,7 +4,10 @@ ioverlay_spark/scenarios.py, correctness oracles in tests/test_perf_scenarios.py
 and the spiral self-union of test_3_spiral.rs (geometry re-derived from
 util.rs:181-227 below; SUBJECT / NON_ZERO on the i32-scale quantized band),
 plus hull_holes (one hull DIFFERENCE k^2 holes, the hole binder's row; no
-reference number).
+reference number) and hull_holes_far (the same plus one disjoint hull of the
+same size, one hull-width to the right: the scalar overlay() clusters it into
+two jobs and runs the batch kernel, so the row times the batch fill on one
+big tile).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
@@ -12,6 +15,7 @@ Usage:
     python audits/scenarios_audit.py spiral 65536          # the spiral self-union
     python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
     python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
+    python audits/scenarios_audit.py hull_holes_far 64 128  # batch kernel, one big tile
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that
@@ -41,6 +45,7 @@ REF = {
     "not_overlap": {256: 0.036901, 512: 0.177118, 1024: 0.745187, 2048: 3.282416},
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
     "hull_holes": {},
+    "hull_holes_far": {},
     "nested_squares": {16384: 0.322707, 32768: 0.653741, 65536: 2.410910},
     "corrosion": {64: 0.033293, 128: 0.133794, 256: 0.594231, 512: 2.297538},
     "concentric": {64: 0.034357, 128: 0.134210, 256: 0.563524, 512: 2.367582},
@@ -52,6 +57,7 @@ DEFAULT_NS = {
     "not_overlap": [256, 512, 1024],
     "windows": [128, 256, 512, 1024],
     "hull_holes": [64, 128, 256],
+    "hull_holes_far": [64, 128],
     "nested_squares": [16384, 32768],
     "corrosion": [64, 128, 256],
     "concentric": [64, 128, 256],
@@ -63,6 +69,7 @@ RULES = {
     "not_overlap": OverlayRule.UNION,
     "windows": OverlayRule.DIFFERENCE,
     "hull_holes": OverlayRule.DIFFERENCE,
+    "hull_holes_far": OverlayRule.DIFFERENCE,
     "nested_squares": OverlayRule.XOR,
     "corrosion": OverlayRule.DIFFERENCE,
     "concentric": OverlayRule.INTERSECT,
@@ -110,6 +117,12 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
         return count == 1 and (rings is None or rings == n * n + 1) and (
             area2 == 2 * ((20 * n + 10) ** 2 - 100 * n * n)
         )
+    if name == "hull_holes_far":
+        # the hull_holes shape plus the far hull
+        side = 20 * n + 10
+        return count == 2 and (rings is None or rings == n * n + 2) and (
+            area2 == 2 * (2 * side * side - 100 * n * n)
+        )
     if name == "nested_squares":
         return count == 4 * n and area2 == 64 * n * n
     if name == "wind_mill":
@@ -122,7 +135,13 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
 
 
 def build_int_inputs(name: str, n: int):
-    subj, clip = ([spiral(n, 100.0)], []) if name == "spiral" else getattr(scenarios, name)(n)
+    if name == "spiral":
+        subj, clip = [spiral(n, 100.0)], []
+    elif name == "hull_holes_far":
+        subj, clip = scenarios.hull_holes(n)
+        subj = subj + [subj[0] + np.array([2 * (20 * n + 10), 0], dtype=np.int64)]
+    else:
+        subj, clip = getattr(scenarios, name)(n)
     if name in FLOAT_SCENARIOS:
         from ioverlay_spark.functions.float_shell import NumpyFloatAdapter
 

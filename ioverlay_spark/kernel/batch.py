@@ -4,10 +4,10 @@ pipeline pass.
 The per-pair kernel costs ~600us/pair in numpy-call overhead when jobs are tiny
 (10-segment polygons). This module amortizes it: every job of a batch is translated
 into its own disjoint x-tile (slot * W), all segments are concatenated, and
-sort/merge/split/fill run ONCE over the whole batch — the x-sweep candidate pruning
-and the x-span winding test never pair segments from different tiles, so results are
-bit-identical to running each job alone (differential-tested in
-tests/test_batch_kernel.py).
+sort/merge/split/fill run ONCE over the whole batch — the bbox-overlap candidate
+pairs never join segments from different tiles, and a fill ray never meets another
+tile's segment, so results are bit-identical to running each job alone
+(differential-tested in tests/test_batch_kernel.py).
 
 This is the engine's List-solver analog of the reference's job-level parallelism
 (rayon over jobs), re-expressed as data-level batching inside one Arrow batch:
@@ -24,7 +24,8 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
                   dedup/collinear path (iOverlay/src/segm/build.rs:35-127)
   split (A4-A9) — split.split_segments over the whole tiled batch (sort+merge,
                   bbox-overlap candidate pairs, vectorized exact cross solver)
-  fill (A10)    — _fills_batch: the midpoint ray-cast windowed by tile
+  fill (A10)    — fill.compute_fills_windowed over the whole tiled batch
+                  (threads=1): the scalar kernel's segment-tree fill
   extract       — vectorized degree-2 walk over the whole batch; tiles with pinch
                   points replay the scalar trigger loop, and tiles neither can serve
                   take the per-tile scalar walk; every walked ring then takes one
@@ -57,6 +58,7 @@ from .extract import (
     validate_rings,
     walk_contours,
 )
+from .fill import compute_fills_windowed
 from .overlay import build_graph
 from .segments import Segments, build_segments
 from .split import split_segments
@@ -120,83 +122,6 @@ def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = Fa
         # line) — callers use this to skip the post-apply coincident merge
         return keep, coll
     return keep
-
-
-def _fills_batch(segs: Segments, fill_rule: FillRule, tile_lo: np.ndarray) -> np.ndarray:
-    """Vectorized winding classification for the whole batch: each segment's downward
-    ray at its doubled midpoint x is summed against same-tile segments whose x-span
-    contains it (exactly fill._windings_below's math, windowed by tile). tile_lo[i] =
-    first segment index of segment i's tile (segments sorted by ax)."""
-    from .fill import _fill_bits
-
-    n = len(segs)
-    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-    Xi = ax + bx
-    Yi = ay + by
-    # candidate window: same-tile segments with 2*ax <= Xi (ax sorted)
-    hi = np.searchsorted(2 * ax, Xi, side="right")
-    counts = np.maximum(hi - tile_lo, 0)
-    total = int(counts.sum())
-    wind_s = np.zeros(n, dtype=np.int64)
-    wind_c = np.zeros(n, dtype=np.int64)
-    if total:
-        cum = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-        subj_f = segs.subj.astype(np.float64)
-        clip_f = segs.clip.astype(np.float64)
-
-        def _chunk(qlo: int, qhi: int):
-            # enumerate the [qlo, qhi) rows' windows; bincount with float
-            # weights replaces np.add.at (unbuffered ufunc.at is ~5-10x
-            # slower) — winding sums stay exact: |weights| are tiny ints and
-            # any partial sum is far under 2^53
-            cnt = counts[qlo:qhi]
-            tt = int(cum[qhi] - cum[qlo])
-            if not tt:
-                return None
-            q = np.repeat(np.arange(qlo, qhi, dtype=np.int64), cnt)
-            t = np.arange(tt, dtype=np.int64) - (cum[q] - cum[qlo]) + tile_lo[q]
-            dt = bx[t] - ax[t]
-            Xq = Xi[q]
-            m = (dt > 0) & (Xq < 2 * bx[t])  # non-vertical t, span upper bound
-            if not m.any():
-                return None
-            q, t, dt, Xq = q[m], t[m], dt[m], Xq[m]
-            num = 2 * ay[t] * dt + (by[t] - ay[t]) * (Xq - 2 * ax[t])
-            below = num < Yi[q] * dt
-            if not below.any():
-                return None
-            q, t = q[below], t[below]
-            q -= qlo
-            ln = qhi - qlo
-            ws = np.bincount(q, weights=subj_f[t], minlength=ln).astype(np.int64)
-            wc = np.bincount(q, weights=clip_f[t], minlength=ln).astype(np.int64)
-            return qlo, ln, ws, wc
-
-        # chunk by window totals: bounds peak temporaries to ~8 arrays x
-        # chunk pairs, and the chunks thread (pure numpy, GIL released)
-        from .fill import _resolve_fill_threads
-
-        target = 8_000_000
-        bnds = [0]
-        while bnds[-1] < n:
-            stop = int(np.searchsorted(cum, cum[bnds[-1]] + target, side="left"))
-            bnds.append(min(max(stop, bnds[-1] + 1), n))
-        spans = list(zip(bnds[:-1], bnds[1:]))
-        k = min(_resolve_fill_threads(None, total), len(spans))
-        if k > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(k) as ex:
-                results = list(ex.map(lambda se: _chunk(*se), spans))
-        else:
-            results = [_chunk(*se) for se in spans]
-        for r in results:
-            if r is None:
-                continue
-            qlo, ln, ws, wc = r
-            wind_s[qlo : qlo + ln] += ws
-            wind_c[qlo : qlo + ln] += wc
-    return _fill_bits(segs, wind_s, wind_c, fill_rule)
 
 
 _EMPTY = "empty"
@@ -355,12 +280,12 @@ def _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options):
         return None
     raw, off, y0, W = t
     segs = split_segments(raw, threads=1)
-    n = len(segs)
-    if n == 0:
+    if len(segs) == 0:
         return _EMPTY
     starts = np.searchsorted(segs.ax, np.arange(nj + 1, dtype=np.int64) * W)
-    seg_tile = np.searchsorted(starts, np.arange(n, dtype=np.int64), side="right") - 1
-    all_fills = _fills_batch(segs, fill_rule, starts[seg_tile])
+    # one fill over the whole batch: tiles are disjoint in x, so a ray never
+    # meets another tile's segment
+    all_fills = compute_fills_windowed(segs, fill_rule, threads=1)
     return segs, all_fills, starts, off, y0
 
 
@@ -370,8 +295,8 @@ def graph_batch(
     options: OverlayOptions = DEFAULT_OPTIONS,
 ):
     """Batched split+fill: per-job (Segments, fills) in ORIGINAL coordinates, via
-    one tiled split_segments + _fills_batch pass. Returns None when the batch needs
-    the scalar path (caller falls back to per-job build_graph)."""
+    one tiled split_segments + compute_fills_windowed pass. Returns None when the
+    batch needs the scalar path (caller falls back to per-job build_graph)."""
     nj = len(jobs)
     t = _tiled_graph(*_flatten_jobs(jobs), nj, fill_rule, options)
     if t is None:

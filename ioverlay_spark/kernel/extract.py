@@ -24,7 +24,15 @@ from typing import NamedTuple
 import numpy as np
 
 from ..options import ContourDirection, OverlayOptions, OverlayRule
-from .fill import CLIP_BOTTOM, CLIP_TOP, SUBJ_BOTTOM, SUBJ_TOP, segtree_below, segtree_build
+from .fill import (
+    CLIP_BOTTOM,
+    CLIP_TOP,
+    SUBJ_BOTTOM,
+    SUBJ_TOP,
+    int64_operands,
+    segtree_below,
+    segtree_build,
+)
 from .segments import Segments
 
 
@@ -437,8 +445,8 @@ def _ray_parents(rings: RingSet) -> np.ndarray:
     the anchor's path offers the last member of its strictly-below prefix
     (fill.segtree_below), and the highest by exact (floor, remainder)
     compare wins. Each slot runs in local coordinates in its own x-tile;
-    operands are int64 under the fill's gate (4*extent^2 < 2^62), python ints
-    past it."""
+    operands are int64 under the fill's gate (fill.int64_operands), python
+    ints past it."""
     sl, hole, lens, x, y = rings
     n = len(lens)
     pos = ring_starts(lens)
@@ -456,7 +464,9 @@ def _ray_parents(rings: RingSet) -> np.ndarray:
         loc.append(v.astype(np.uint64) - lo[ps].astype(np.uint64))
     ext = int(max(a.max() for a in loc))
     W = ext + 1
-    wide = 4 * ext * ext >= 1 << 62 or 4 * ns * W >= 1 << 62
+    # the ring orientation's lx*ly products bound a segment's x-length by the
+    # slot extent, so ext stands for both the y extent and the x-length
+    wide = not int64_operands(ns * W, ext, ext)
     lx, ly = (a.astype(object if wide else np.int64) for a in loc)
     tx = ps * W + lx
     ccw = np.add.reduceat(lx * ly[nxt] - lx[nxt] * ly, pos) > 0
@@ -625,6 +635,19 @@ def validate_rings(rings: RingSet, options: OverlayOptions) -> tuple[RingSet, np
         return rings, a2
     pi = ring_gather_index(src[idx], new_lens[idx])
     return RingSet(rings.slot[idx], rings.hole[idx], new_lens[idx], x[pi], y[pi]), a2[idx]
+
+
+def area2_int64(a2: np.ndarray) -> np.ndarray:
+    """validate_rings' area2 for a LONG area2 column: int64, or a ValueError
+    when a ring's doubled area does not fit (validate_rings keeps python ints
+    past the int64 range)."""
+    try:
+        return a2.astype(np.int64, copy=False)
+    except OverflowError:
+        raise ValueError(
+            f"ring area2 {max(a2.tolist(), key=abs)} is outside the int64 range "
+            "[-2^63, 2^63) of the LONG area2 column"
+        ) from None
 
 
 def extract_rings(

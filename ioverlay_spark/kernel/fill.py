@@ -11,8 +11,15 @@ group puts the vertical segment last, so its "top" accumulator is the west side)
 
 Instead of a sequential sweep, each segment's bottom winding is evaluated directly by
 an exact integer ray-cast at the segment midpoint (valid because after splitting the
-winding is constant along every segment interior). This is embarrassingly parallel —
-the same formula the distributed x-strip pipeline uses (SURVEY.md A10).
+winding is constant along every segment interior). A ray at x only meets segments
+whose x-span holds x, so the same answer comes out of any subset that keeps those
+segments: a distributed x-strip, or one tile of a batch whose jobs sit in disjoint
+x-tiles (SURVEY.md A10).
+
+compute_fills_windowed is the one fill every pipeline calls: a segment tree over
+the set in local coordinates, on int64 operands under int64_operands' gate and on
+python ints past it. compute_fills, the dense O(n^2) ray-cast, is the oracle the
+tests compare against.
 """
 
 from __future__ import annotations
@@ -107,144 +114,40 @@ def _is_inside(w: np.ndarray, rule: FillRule) -> np.ndarray:
 
 
 def compute_fills(segs: Segments, fill_rule: FillRule) -> np.ndarray:
-    """4-bit SegmentFill per segment (uint8)."""
+    """4-bit SegmentFill per segment (uint8) by the dense O(n^2) ray-cast: the
+    oracle compute_fills_windowed is tested against."""
     bot_s, bot_c = _windings_below(segs)
     return _fill_bits(segs, bot_s, bot_c, fill_rule)
 
 
-def _windings_sweep(segs: Segments) -> tuple[np.ndarray, np.ndarray]:
-    """O(n log n) sweep-line windings (the reference's scan-list shape,
-    iOverlay/src/build/sweep.rs, re-derived for the ray-at-midpoint
-    formulation). Only valid on POST-SPLIT sets (every compute_fills* caller):
-    no two segments cross or touch another's interior, so
+def int64_operands(ex: int, h: int, dx: int) -> bool:
+    """True when the segment tree's int64 products are exact on a set in
+    local coordinates with x extent ex, y extent h and longest segment x-length
+    dx (segtree_build, segtree_below, extract._ray_parents).
 
-      * the face immediately below a segment is CONSTANT along its open
-        interior (an arrangement vertex there would be a T-junction), and
-      * the bottom winding of a segment equals the bottom winding of its
-        below-neighbor at insertion plus that neighbor's directed weight —
-        winding propagates along a forest instead of being re-summed per ray.
+    Doubled and quadrupled x coordinates (leaf bounds, node midpoints 4*x)
+    need 4*ex < 2^63. Every product multiplies a segment's x-length by the y
+    extent or by another x-length, never two x extents: the node key
+    NUM = 4*ay*dt + dy*(m - 4*ax) and its parts are at most 4*h*dx, the
+    remainder compare rk_i*DEN_j at most 4*dx^2, the ray predicate at most
+    2*h*dx. max(h, dx)*dx < 2^60 keeps all of them under 2^62."""
+    return ex < 1 << 61 and max(h, dx) * dx < 1 << 60
 
-    The active list holds non-vertical segments in y-order (non-crossing ⇒
-    order is invariant while active), as a plain Python list with manual
-    binary search: every comparison is integer point-vs-segment
-    (num < T*dt — one side is always an integer event point, never
-    rational-vs-rational), exact in Python ints at ANY coordinate scale, which
-    is why this also replaces the object-int dense path for >2^31 extents.
-    Events at doubled-x: removals, then insertions (batch ordered by start-y
-    then slope for shared nodes), then vertical-segment midpoint queries."""
-    n = len(segs)
-    zs = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return zs, zs.copy()
-    ax = segs.ax.tolist()
-    ay = segs.ay.tolist()
-    bx = segs.bx.tolist()
-    by = segs.by.tolist()
-    ws = segs.subj.tolist()
-    wc = segs.clip.tolist()
-    # event key (X, kind, start-y): winding propagation requires same-X
-    # insertions to run BOTTOM-UP (a segment reads its below-neighbor's value,
-    # which must already be set); same-(X, y) runs share a start node and are
-    # slope-ordered below. Removal/query order within a batch is irrelevant.
-    events: list[tuple[int, int, int, int]] = []
-    for i in range(n):
-        if bx[i] > ax[i]:
-            events.append((2 * ax[i], 1, 2 * ay[i], i))
-            events.append((2 * bx[i], 0, 0, i))
-        else:
-            events.append((2 * ax[i], 2, 0, i))
-    events.sort()
-    # slope-sort shared-start insertion runs (rare, tiny): ascending dy/dt
-    k = 0
-    m = len(events)
-    while k < m:
-        if events[k][1] != 1:
-            k += 1
-            continue
-        e = k + 1
-        while e < m and events[e][:3] == events[k][:3]:
-            e += 1
-        if e - k > 1:
-            import functools
 
-            def _cmp(ea, eb):
-                i1, i2 = ea[3], eb[3]
-                lhs = (by[i1] - ay[i1]) * (bx[i2] - ax[i2])
-                rhs = (by[i2] - ay[i2]) * (bx[i1] - ax[i1])
-                return -1 if lhs < rhs else (1 if lhs > rhs else 0)
-
-            events[k:e] = sorted(events[k:e], key=functools.cmp_to_key(_cmp))
-        k = e
-    wind_s = [0] * n
-    wind_c = [0] * n
-    active: list[int] = []  # non-vertical indices, ascending y at current X
-
-    # comparisons inline: doubled-y of u at doubled-x X is
-    # (2*ay*dt + dy*(X-2*ax)) / dt; u is strictly below the integer doubled-y
-    # T iff num < T*dt (dt > 0) — one side is always an integer event point
-    for X, kind, _y0, i in events:
-        if kind == 0:
-            # remove i: locate by its END point (exact integer y), then scan the
-            # equal-y run (other segments ending at the same node) for identity
-            T = 2 * by[i]
-            lo, hi = 0, len(active)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                u = active[mid]
-                axu = ax[u]
-                ayu = ay[u]
-                dt = bx[u] - axu
-                if 2 * ayu * dt + (by[u] - ayu) * (X - 2 * axu) < T * dt:
-                    lo = mid + 1
-                else:
-                    hi = mid
-            j = lo
-            while active[j] != i:
-                j += 1
-            del active[j]
-        elif kind == 1:
-            # insert i at its START point; tiebreak shared starts by slope so
-            # the list is ordered just right of X
-            T = 2 * ay[i]
-            dti = bx[i] - ax[i]
-            dyi = by[i] - ay[i]
-            lo, hi = 0, len(active)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                u = active[mid]
-                axu = ax[u]
-                dt = bx[u] - axu
-                num = 2 * ay[u] * dt + (by[u] - ay[u]) * (X - 2 * axu)
-                rhs = T * dt
-                if num < rhs or (num == rhs and (by[u] - ay[u]) * dti < dyi * dt):
-                    lo = mid + 1
-                else:
-                    hi = mid
-            if lo:
-                u = active[lo - 1]
-                wind_s[i] = wind_s[u] + ws[u]
-                wind_c[i] = wind_c[u] + wc[u]
-            active.insert(lo, i)
-        else:
-            # vertical segment: ray at X = 2*ax, strictly-below count at the
-            # doubled midpoint height (no ties possible post-split)
-            T = ay[i] + by[i]
-            lo, hi = 0, len(active)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                u = active[mid]
-                axu = ax[u]
-                ayu = ay[u]
-                dt = bx[u] - axu
-                if 2 * ayu * dt + (by[u] - ayu) * (X - 2 * axu) < T * dt:
-                    lo = mid + 1
-                else:
-                    hi = mid
-            if lo:
-                u = active[lo - 1]
-                wind_s[i] = wind_s[u] + ws[u]
-                wind_c[i] = wind_c[u] + wc[u]
-    return np.array(wind_s, dtype=np.int64), np.array(wind_c, dtype=np.int64)
+def _local_operands(segs: Segments):
+    """(tax, tay, tbx, tby): offsets from the set's min corner, exact at any
+    int64 span (uint64 differences), as int64 under int64_operands and python
+    ints past it."""
+    x0 = np.int64(min(segs.ax.min(), segs.bx.min()))
+    y0 = np.int64(min(segs.ay.min(), segs.by.min()))
+    # int64 differences wrap past 2^63; their uint64 views are exact
+    loc = [segs.ax - x0, segs.ay - y0, segs.bx - x0, segs.by - y0]
+    uloc = tax, tay, tbx, tby = [v.view(np.uint64) for v in loc]
+    if int64_operands(
+        int(tbx.max()), max(int(tay.max()), int(tby.max())), int((tbx - tax).max())
+    ):
+        return loc
+    return [v.astype(object) for v in uloc]
 
 
 def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
@@ -252,7 +155,8 @@ def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
     for large jobs (the loop is gather-LATENCY-bound and numpy releases the
     GIL, so threads scale ~6-9x on it — measured; small jobs would pay pool
     overhead). Callers running inside an already-parallel executor (the
-    distributed strip fill) pass threads=1 explicitly."""
+    distributed strip fill, the tiled batch kernel, string slices) pass
+    threads=1 explicitly."""
     if threads is not None and threads > 0:
         return threads
     if n_pairs < 1_500_000:
@@ -279,9 +183,9 @@ def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
     midpoint (int64 floor + remainder key, float tiebreak, exact adjacent
     verification with a python re-sort of the rare float-ambiguous nodes).
 
-    int64 operands need 4*extent^2 < 2^62 (all products here are bounded by
-    8*extent^2 < 2^63 given that gate); python-int (object) operand arrays run
-    the same code at any width."""
+    int64 operands need int64_operands' gate (every product here is bounded
+    there); python-int (object) operand arrays run the same code at any
+    width."""
     mem = np.flatnonzero(tbx > tax)
     if len(mem) == 0:
         return None
@@ -340,8 +244,10 @@ def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
     if bits_frac >= 12:
         # fused (yf-ylo)*(fscale/denom) — one temporary instead of four; the
         # low-bit rounding difference vs the two-step form lands inside the
-        # fraction's resolution and is repaired by the exact verification
-        fscale = float(1 << bits_frac) / (yspan * (1.0 + 1e-6) + 1e-300)
+        # fraction's resolution and is repaired by the exact verification.
+        # One y level (yspan 0) keys every row 0: the scale would be inf and
+        # 0 * inf a NaN key
+        fscale = float(1 << bits_frac) / (yspan * (1.0 + 1e-6)) if yspan > 0 else 0.0
         sc = yf - ylo
         sc *= fscale
         fint = sc.astype(np.uint64)
@@ -534,32 +440,23 @@ def _windings_segtree(
     """Vectorized O((n+q) log^2 n) midpoint-ray windings on the segment tree
     (segtree_build, segtree_below): every segment's doubled midpoint is a
     query, and per-node prefix weight sums over each query's strictly-below
-    prefixes finish the count (the numpy replacement for the per-event python
-    loop in _windings_sweep, VERDICT r03 #2).
+    prefixes finish the count.
 
-    Unlike the sweep this is ray-at-midpoint semantics (identical to
-    _windings_below), hence valid on strip SUBSETS too — the distributed
-    x-strip kernel can use it where the sweep is gated off (BENCH.md round-3
-    subset trap). int64-only: callers must have applied the 4*extent^2 < 2^62
-    gate.
+    Ray-at-midpoint semantics (identical to _windings_below), hence valid on
+    strip SUBSETS and on tiled batches too. Operands are _local_operands': int64
+    under int64_operands' gate, python ints past it.
     """
     n = len(segs)
     wind_s = np.zeros(n, dtype=np.int64)
     wind_c = np.zeros(n, dtype=np.int64)
     if n == 0:
         return wind_s, wind_c
-    ax, ay, bx, by = segs.ax, segs.ay, segs.bx, segs.by
-    x0 = min(int(ax.min()), int(bx.min()))
-    y0 = min(int(ay.min()), int(by.min()))
-    tax = ax - x0
-    tay = ay - y0
-    tbx = bx - x0
-    tby = by - y0
+    tax, tay, tbx, tby = _local_operands(segs)
     tree = segtree_build(tax, tay, tbx, tby)
     if tree is None:
         return wind_s, wind_c
-    # zero-weight sides (self-union: clip empty) skip their prefix sums and
-    # accumulation entirely
+    # zero-weight sides (self-union, string fills: clip empty) skip their
+    # prefix sums and accumulation entirely
     has_subj = bool(np.any(segs.subj))
     has_clip = bool(np.any(segs.clip))
     PQ, PV, plo, _ = segtree_below(tree, tax + tbx, tay + tby, threads)
@@ -594,11 +491,16 @@ def _windings_segtree_strips(
     back to the single tree) when long segments would make Σ|subset| > 2.5 n —
     per-strip trees are smaller AND everything (sort, decomposition, bisection)
     runs in parallel, vs the single tree that threads only its bisection loop.
-    Bit-identical to the single tree (same predicate; differential-tested)."""
+    Bit-identical to the single tree (same predicate; differential-tested).
+    Sets past int64_operands' gate also return None: python-int trees hold the
+    GIL, so threads would not pay."""
     n = len(segs)
-    ax2 = 2 * segs.ax
-    bx2 = 2 * segs.bx
-    Xi = segs.ax + segs.bx
+    tax, _, tbx, _ = _local_operands(segs)
+    if tax.dtype == object:
+        return None
+    ax2 = 2 * tax
+    bx2 = 2 * tbx
+    Xi = tax + tbx
     qsort = np.sort(Xi)
     edges = np.unique(qsort[np.arange(1, k) * n // k])
     if len(edges) == 0:
@@ -641,24 +543,6 @@ def _windings_segtree_strips(
     return wind_s, wind_c
 
 
-def compute_fills_segtree(
-    segs: Segments, fill_rule: FillRule, threads: int | None = None
-) -> np.ndarray:
-    """Segment-tree fill (see _windings_segtree): vectorized, subset-safe."""
-    # one-shot scalar path (threads unset/≥2): strip-parallel trees when the
-    # job is big enough to amortize the pool (the Spark strip fill passes
-    # threads=1 and keeps the single tree — each task owns one core there)
-    k = threads if threads and threads > 0 else (
-        min(8, os.cpu_count() or 1) if len(segs) >= 48_000 else 1
-    )
-    if k > 1 and len(segs) >= 48_000:
-        res = _windings_segtree_strips(segs, k)
-        if res is not None:
-            return _fill_bits(segs, res[0], res[1], fill_rule)
-    wind_s, wind_c = _windings_segtree(segs, threads=threads)
-    return _fill_bits(segs, wind_s, wind_c, fill_rule)
-
-
 def _fill_bits(segs: Segments, wind_s, wind_c, fill_rule: FillRule) -> np.ndarray:
     top_s = wind_s + segs.subj
     top_c = wind_c + segs.clip
@@ -670,35 +554,25 @@ def _fill_bits(segs: Segments, wind_s, wind_c, fill_rule: FillRule) -> np.ndarra
     )
 
 
-def compute_fills_sweep(segs: Segments, fill_rule: FillRule) -> np.ndarray:
-    """Sweep-line fill (see _windings_sweep): exact at any coordinate scale."""
-    wind_s, wind_c = _windings_sweep(segs)
-    return _fill_bits(segs, wind_s, wind_c, fill_rule)
-
-
 def compute_fills_windowed(
-    segs: Segments,
-    fill_rule: FillRule,
-    allow_sweep: bool = True,
-    threads: int | None = None,
+    segs: Segments, fill_rule: FillRule, threads: int | None = None
 ) -> np.ndarray:
-    """Fill dispatcher. The segment tree serves every set whose products fit
-    int64 (4*extent^2 < 2^62, the gate _windings_segtree assumes). Wider sets
-    take an exact python-int pass: the O(n log n) sweep on a whole set, or the
-    dense object-int ray-cast when allow_sweep=False (the sweep is not valid on
-    strip SUBSETS — BENCH.md round-3 subset trap)."""
-    if len(segs) == 0:
+    """The fill: 4-bit SegmentFill per segment (uint8) from the segment-tree
+    windings (_windings_segtree), exact at any coordinate width and valid on
+    any subset that keeps every segment a ray can meet (strip subsets, tiled
+    batches).
+
+    threads=1 runs one tree on the calling thread (callers inside a Spark task
+    or a batch kernel). Unset, a one-shot of >= 48k segments builds
+    strip-parallel trees on a pool (_windings_segtree_strips) and a large
+    single tree threads its bisection loop (_resolve_fill_threads)."""
+    n = len(segs)
+    if n == 0:
         return np.zeros(0, dtype=np.uint8)
-    x0 = min(int(segs.ax.min()), int(segs.bx.min()))
-    y0 = min(int(segs.ay.min()), int(segs.by.min()))
-    extent = max(
-        int(segs.bx.max()) - x0,
-        int(segs.ay.max()) - y0,
-        int(segs.by.max()) - y0,
-        1,
+    k = threads if threads and threads > 0 else (
+        min(8, os.cpu_count() or 1) if n >= 48_000 else 1
     )
-    if 4 * extent * extent < (1 << 62):
-        return compute_fills_segtree(segs, fill_rule, threads=threads)
-    if allow_sweep:
-        return compute_fills_sweep(segs, fill_rule)
-    return compute_fills(segs, fill_rule)
+    res = _windings_segtree_strips(segs, k) if k > 1 and n >= 48_000 else None
+    if res is None:
+        res = _windings_segtree(segs, threads=threads)
+    return _fill_bits(segs, res[0], res[1], fill_rule)

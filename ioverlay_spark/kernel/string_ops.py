@@ -529,8 +529,9 @@ def slice_batch(
     """Batched slice_shape on the shared pipeline: every job's body+wall segment
     set is translated into its own disjoint x-tile, the string split fixpoint
     runs ONCE over the whole batch (the x-sweep candidate windows never pair
-    segments from different tiles), then fills + the slice walk run per job on
-    its un-offset tile slice. Bit-identical to per-job slice_shape: within a
+    segments from different tiles) and so does the fill (a ray never meets
+    another tile's segment), then the slice walk runs per job on its
+    un-offset tile slice. Bit-identical to per-job slice_shape: within a
     tile the sort order, candidate set, radius schedule and walk order equal
     the scalar run (extra global rounds are no-ops for tiles whose marks have
     dried up — same argument as kernel/batch.py)."""
@@ -580,6 +581,7 @@ def slice_batch(
         return [[] for _ in range(nj)]
     batch = split_segments_string(Segments.concat(parts))
     tile = batch.ax // W if len(batch) else np.zeros(0, dtype=np.int64)
+    fills = compute_string_fills(batch, fill_rule)
     out = []
     for j in range(nj):
         idx = np.flatnonzero(tile == j)
@@ -588,5 +590,5 @@ def slice_batch(
             continue
         s = batch.take(idx)
         s = Segments(s.ax - offs[j], s.ay, s.bx - offs[j], s.by, s.subj, s.clip)
-        out.append(slice_extract(s, compute_string_fills(s, fill_rule), options))
+        out.append(slice_extract(s, fills[idx], options))
     return out

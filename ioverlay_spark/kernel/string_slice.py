@@ -10,7 +10,8 @@ Reference mapping:
     bits (iOverlay/src/segm/string.rs:6-88, iOverlay/src/string/overlay.rs:128-281).
   - The SAME SplitSolver fixpoint as boolean overlay splits all segments
     together (iOverlay/src/string/overlay.rs:252-281 -> split/solver.rs).
-  - Fill sweep accumulates subj windings only; the string SegmentFill is
+  - The fill accumulates subj windings only (the boolean kernel's segment-tree
+    fill with clip weights zeroed); the string SegmentFill is
     subj_top | subj_bot << 1 | clip_bits << 2 (iOverlay/src/build/string.rs:90-150).
   - Slice extraction: working fills = fill & SUBJ_BOTH; every link is walked
     once per remaining subj side (walls inside the body carry SUBJ_BOTH and are
@@ -27,7 +28,7 @@ import numpy as np
 
 from ..options import ContourDirection, FillRule, OverlayOptions
 from .extract import _LinkGraph, _nearest_link, bind_ring_lists, ring_area2
-from .fill import SUBJ_BOTH, SUBJ_BOTTOM, SUBJ_TOP, _is_inside, _windings_below
+from .fill import SUBJ_BOTH, SUBJ_BOTTOM, SUBJ_TOP, compute_fills_windowed
 from .segments import Segments, _dedup_consecutive, _drop_collinear, build_segments
 from .split import find_marks
 
@@ -168,15 +169,14 @@ def split_segments_string(segs: Segments, max_rounds: int = 64) -> Segments:
 def compute_string_fills(segs: Segments, fill_rule: FillRule) -> np.ndarray:
     """String SegmentFill: subj winding classification on the two sides plus the
     segment's own wall-direction bits shifted into the clip nibble
-    (iOverlay/src/build/string.rs:90-150)."""
+    (iOverlay/src/build/string.rs:90-150). Valid on a tiled batch of jobs
+    disjoint in x, like the boolean fill; threads=1 since slice batches run
+    inside Spark tasks."""
     zero = np.zeros(len(segs), dtype=np.int64)
     tmp = Segments(segs.ax, segs.ay, segs.bx, segs.by, segs.subj, zero)
-    bot_s, _ = _windings_below(tmp)
-    top_s = bot_s + segs.subj
-    return (
-        _is_inside(top_s, fill_rule).astype(np.uint8) * SUBJ_TOP
-        | _is_inside(bot_s, fill_rule).astype(np.uint8) * SUBJ_BOTTOM
-        | (segs.clip.astype(np.uint8) << 2)
+    # zero clip weights leave the CLIP bits clear under every fill rule
+    return compute_fills_windowed(tmp, fill_rule, threads=1) | (
+        segs.clip.astype(np.uint8) << 2
     )
 
 

@@ -552,8 +552,8 @@ def _boundary_blob_batch(ax, ay, bx, by, fill) -> pa.RecordBatch:
 
 def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, boundary_rule):
     """Strip-fill core: arrays already sorted by strip id `s`; runs the
-    subset-safe fill dispatcher (kernel/fill.compute_fills_windowed) per
-    contiguous strip slice and keeps the home-strip rows.
+    subset-safe fill (kernel/fill.compute_fills_windowed) per contiguous
+    strip slice and keeps the home-strip rows.
 
     Without boundary_rule it yields FILL_SCHEMA batches, one row per segment.
     With boundary_rule it keeps only that rule's result-boundary segments and
@@ -579,7 +579,7 @@ def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, bound
         # threads=1: this kernel already runs on every executor thread in
         # parallel (one partition per strip group) — nested pools would
         # oversubscribe the box
-        fills = compute_fills_windowed(segs, fill_rule, allow_sweep=False, threads=1)
+        fills = compute_fills_windowed(segs, fill_rule, threads=1)
         mask = home
         if boundary_rule is not None:
             mask = mask & boundary_mask(fills.astype(np.uint8), boundary_rule)
@@ -726,9 +726,9 @@ def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = N
     rows of each strip in strip order, and run the strip-fill core.
 
     Per strip: windings of home segments against ALL segments crossing the
-    strip (compute fills on the union, keep rows for home segments only).
-    allow_sweep=False — a strip group is a SUBSET of the global segment set,
-    and only the ray-at-midpoint fill formulations are subset-safe."""
+    strip (compute fills on the union, keep rows for home segments only). A
+    strip group is a SUBSET of the global segment set; the fill's
+    ray-at-midpoint windings are exact on it at any coordinate width."""
 
     def it(batches):
         chunks = list(batches)
@@ -864,7 +864,7 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
 
     Runs the scalar kernel's stages on the whole set: split_segments (the
     vectorized exact solver, python-int past its int64 bound), the fill
-    dispatcher compute_fills_windowed, then the fused extract's walk + bind
+    compute_fills_windowed, then the fused extract's walk + bind
     (distributed_extract._fused_extract_arrays) on the rule's boundary."""
     from ..kernel.extract import boundary_mask
     from ..kernel.fill import compute_fills_windowed

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.cluster import _cc_label_arrays
-from ..kernel.extract import RingSet, bind_holes
+from ..kernel.extract import RingSet, area2_int64, bind_holes
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
 from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch, _checkpoint_observed
 
@@ -357,7 +357,7 @@ def _extract_rings_core(
     nring = len(rings.lens)
     if nring == 0:
         return _RINGS_ARROW_SCHEMA.empty_table()
-    a2 = np.concatenate([a for _, a in results]).astype(np.int64)
+    a2 = area2_int64(np.concatenate([a for _, a in results]))
 
     # lexicographic-min anchor per ring: min x, then min y among the points
     # at that x

@@ -76,6 +76,8 @@ def _shapes_batch(res, rule_objs, job_pid):
     RecordBatch: numpy arrays straight into Arrow, zero per-ring Python."""
     import pyarrow as pa
 
+    from ..kernel.extract import area2_int64
+
     job, sid, cidx, lens, pts, a2 = (
         np.concatenate(col) for col in zip(*(res[r] for r in rule_objs))
     )
@@ -104,7 +106,7 @@ def _shapes_batch(res, rule_objs, job_pid):
             pa.array(cidx.astype(np.int32)),
             pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 0]))),
             pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(pts[:, 1]))),
-            pa.array(a2.astype(np.int64, copy=False)),
+            pa.array(area2_int64(a2)),
         ],
         names=SHAPES_OUT_SCHEMA.fieldNames(),
     )

@@ -142,3 +142,39 @@ def test_batch_shifted_rects_with_holes():
             )
         jobs.append((subj, [rect(x1 + w // 3, y1 + h // 3, w, h)]))
     assert_batch_equals_scalar(jobs, FillRule.EVEN_ODD)
+
+
+def test_overlay_hull_holes_far_hull_through_batch(monkeypatch):
+    """overlay() of one hull with 16^2 holes plus a far disjoint hull clusters
+    into two jobs and runs through the batch kernel; its shapes equal
+    build_graph's extract of the whole input (rings compared from their
+    lexmin vertex, shapes order-free)."""
+    import ioverlay_spark.kernel.batch as batch
+    from ioverlay_spark.kernel.overlay import overlay
+    from ioverlay_spark.options import OverlayRule
+    from ioverlay_spark.scenarios import hull_holes
+
+    subj, clip = hull_holes(16)
+    subj = subj + [rect(1 << 20, 0, 330, 330)]
+    calls = []
+    flat_out = batch.overlay_batch_flat_out
+
+    def spy(P, counts, ring_job, ring_subj, nj, *rest):
+        calls.append(nj)
+        return flat_out(P, counts, ring_job, ring_subj, nj, *rest)
+
+    monkeypatch.setattr(batch, "overlay_batch_flat_out", spy)
+
+    def canon(shapes):
+        def ring(r):
+            r = np.asarray(r).tolist()
+            k = r.index(min(r))
+            return tuple(map(tuple, r[k:] + r[:k]))
+
+        return sorted((ring(s[0]), tuple(sorted(ring(h) for h in s[1:]))) for s in shapes)
+
+    got = overlay(subj, clip, OverlayRule.DIFFERENCE)
+    assert calls == [2]
+    want = build_graph(subj, clip).extract(OverlayRule.DIFFERENCE)
+    assert canon(got) == canon(want)
+    assert len(got) == 2 and sorted(len(s) for s in got) == [1, 257]

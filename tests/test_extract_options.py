@@ -152,3 +152,30 @@ def _has_collinear(ring) -> bool:
         if (bx - ax) * (cy - by) == (by - ay) * (cx - bx):
             return True
     return False
+
+
+def test_area2_past_int64_raises_value_error():
+    """A ring whose doubled area does not fit the LONG area2 column (a 2^40-side
+    square with a 2^39 hole: area2 ~2^81) raises a ValueError that names
+    area2, from the distributed fused extract and from the batch output
+    writer alike."""
+    from ioverlay_spark.operators.overlay_df import _shapes_batch
+    from ioverlay_spark.options import OverlayRule
+
+    s = 1 << 40
+    hull = _rect(0, 0, s, s)
+    hole = _rect(s // 4, s // 4, s // 2, s // 2)[::-1]
+    g = build_graph([hull, hole], [], FillRule.NON_ZERO)
+    rule = OverlayRule.SUBJECT
+    b = boundary_mask(g.fills, rule)
+    seg = g.segments
+    with pytest.raises(ValueError, match="area2.*int64"):
+        _fused_extract_arrays(
+            rule, OverlayOptions(), seg.ax[b], seg.ay[b], seg.bx[b], seg.by[b], g.fills[b]
+        )
+    res = overlay_batch_flat_out(
+        np.concatenate([hull, hole]), np.array([4, 4]), np.array([0, 0]),
+        np.array([True, True]), 1, [rule], FillRule.NON_ZERO,
+    )
+    with pytest.raises(ValueError, match="area2.*int64"):
+        _shapes_batch(res, [rule], np.array([7], dtype=np.int64))

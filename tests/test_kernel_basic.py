@@ -144,18 +144,13 @@ def test_windowed_fills_match_dense():
 
 
 def test_segtree_fills_match_dense():
-    """compute_fills_segtree (the vectorized segment-tree ray-shoot that
-    replaces the python sweep on dense int64-extent sets) must be bit-identical
-    to compute_fills on post-split sets — shared-node soups, verticals,
-    negative windings — AND on strip SUBSETS (ray-at-midpoint semantics, so the
-    r03 sweep-subset trap must not apply to it)."""
+    """compute_fills_windowed (the vectorized segment-tree ray-shoot) must be
+    bit-identical to compute_fills on post-split sets — shared-node soups,
+    verticals, negative windings — AND on strip SUBSETS (ray-at-midpoint
+    semantics, so the answer needs only the segments a ray can meet)."""
     import numpy as np
 
-    from ioverlay_spark.kernel.fill import (
-        compute_fills,
-        compute_fills_segtree,
-        compute_fills_windowed,
-    )
+    from ioverlay_spark.kernel.fill import compute_fills, compute_fills_windowed
     from ioverlay_spark.kernel.segments import Segments, build_segments
     from ioverlay_spark.kernel.split import split_segments
     from ioverlay_spark.options import FillRule
@@ -177,7 +172,7 @@ def test_segtree_fills_match_dense():
             )
         )
         for fr in FillRule:
-            assert np.array_equal(compute_fills(segs, fr), compute_fills_segtree(segs, fr))
+            assert np.array_equal(compute_fills(segs, fr), compute_fills_windowed(segs, fr))
         # subset safety: an arbitrary x-slice of the set (the distributed
         # strip kernel's shape) must still match the dense fill ON THE SUBSET
         if len(segs) >= 4:
@@ -189,12 +184,11 @@ def test_segtree_fills_match_dense():
             )
             assert np.array_equal(
                 compute_fills(sub, FillRule.NON_ZERO),
-                compute_fills_segtree(sub, FillRule.NON_ZERO),
+                compute_fills_windowed(sub, FillRule.NON_ZERO),
             )
 
-    # the dispatcher's branches: grid-like x-strip subsets (few distinct ray
-    # x positions per strip), then a set whose true extent is >= 2^30, where
-    # the int64 gate routes to the sweep (whole set) or dense pass (subset)
+    # grid-like x-strip subsets (few distinct ray x positions per strip), then
+    # a set whose true extent is >= 2^30, past the int64 gate
     def lines_net(n, a=20):
         w, s = a // 2, a * n // 2
         at = -s + w // 2 + a * np.arange(n)
@@ -217,20 +211,14 @@ def test_segtree_fills_match_dense():
         sub = net.take(keep)
         for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO):
             dense = compute_fills(sub, fr)
-            assert np.array_equal(dense, compute_fills_segtree(sub, fr))
-            assert np.array_equal(
-                dense, compute_fills_windowed(sub, fr, allow_sweep=False, threads=1)
-            )
+            assert np.array_equal(dense, compute_fills_windowed(sub, fr))
+            assert np.array_equal(dense, compute_fills_windowed(sub, fr, threads=1))
     net = lines_net(8)
     wide = Segments(
         net.ax << 30, net.ay << 30, net.bx << 30, net.by << 30, net.subj, net.clip
     )
     for fr in FillRule:
-        dense = compute_fills(wide, fr)
-        for allow_sweep in (True, False):
-            assert np.array_equal(
-                dense, compute_fills_windowed(wide, fr, allow_sweep=allow_sweep)
-            )
+        assert np.array_equal(compute_fills(wide, fr), compute_fills_windowed(wide, fr))
 
 
 def test_split_vec_gate_is_pair_local(monkeypatch):
@@ -280,22 +268,39 @@ def test_split_vec_gate_is_pair_local(monkeypatch):
     assert calls[0] == 0
 
 
-def test_sweep_fills_match_dense():
-    """compute_fills_sweep must be bit-identical to compute_fills on post-split
-    sets — dense shared-node soups, verticals, negative windings, and
-    >2^31-extent coordinates (the object-int territory the sweep replaces)."""
-    import numpy as np
+def _x_strip_subsets(segs, k=4):
+    """The distributed strip fill's subsets: per x-strip on midpoint quantiles,
+    every segment whose doubled x-span meets the strip, plus its home rows."""
+    X2 = segs.ax + segs.bx
+    edges = np.unique(np.quantile(X2, np.linspace(0, 1, k + 1)[1:-1], method="lower"))
+    strip = np.searchsorted(edges, X2, side="right")
+    lo_e = np.concatenate([[X2.min() - 1], edges])
+    hi_e = np.concatenate([edges, [X2.max() + 1]])
+    for s in range(len(lo_e)):
+        meet = (2 * segs.bx > lo_e[s]) & (2 * segs.ax < hi_e[s])
+        yield segs.take(np.flatnonzero(meet | (strip == s)))
 
-    from ioverlay_spark.kernel.fill import compute_fills, compute_fills_sweep
+
+def test_wide_fills_match_dense():
+    """compute_fills_windowed must be bit-identical to the dense compute_fills
+    on post-split sets — dense shared-node soups, verticals, negative
+    windings, small sets translated up to 2^58, and sets whose OWN extents are
+    2^31, 2^41 and 2^59 (past the int64 gate: python-int operands) — on whole
+    sets and on x-strip subsets."""
+    from ioverlay_spark.kernel.fill import compute_fills, compute_fills_windowed
     from ioverlay_spark.kernel.segments import Segments, build_segments
     from ioverlay_spark.kernel.split import split_segments
     from ioverlay_spark.options import FillRule
 
     rng = np.random.default_rng(3)
+    sets = []
     for trial in range(30):
         base = 0 if trial % 3 else int(rng.integers(1, 1 << 58))
         span = 40 if trial % 3 else 50
-        nring = int(rng.integers(1, 5))
+        sets.append((base, span, int(rng.integers(1, 5))))
+    for e in (31, 41, 59):
+        sets += [(0, 1 << (e - 1), 2), (-(1 << (e - 2)), 1 << (e - 1), 3)]
+    for base, span, nring in sets:
         mk = lambda: base + rng.integers(-span, span, (int(rng.integers(3, 9)), 2)).astype(
             np.int64
         )
@@ -308,7 +313,71 @@ def test_sweep_fills_match_dense():
             )
         )
         for fr in FillRule:
-            assert np.array_equal(compute_fills(segs, fr), compute_fills_sweep(segs, fr))
+            assert np.array_equal(compute_fills(segs, fr), compute_fills_windowed(segs, fr))
+        if len(segs) >= 4:
+            for sub in _x_strip_subsets(segs):
+                for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO):
+                    assert np.array_equal(
+                        compute_fills(sub, fr), compute_fills_windowed(sub, fr, threads=1)
+                    )
+
+
+def test_fill_gate_boundary(monkeypatch):
+    """int64_operands' constants (x extent < 2^61, max(H, Dx) * Dx < 2^60) are
+    where int64 stops, and both sides of the boundary equal the dense oracle.
+    A tiled batch whose x extent is >= 2^31 but whose H * Dx is small stays on
+    int64 operands."""
+    import ioverlay_spark.kernel.fill as fill
+    from ioverlay_spark.kernel.batch import _flatten_jobs, _tiled_graph
+    from ioverlay_spark.kernel.segments import Segments
+    from ioverlay_spark.options import DEFAULT_OPTIONS, FillRule
+
+    assert fill.int64_operands((1 << 61) - 1, 1 << 29, (1 << 30) - 1)
+    assert not fill.int64_operands(1 << 61, 1, 1)
+    assert fill.int64_operands(1 << 50, (1 << 40) - 1, 1 << 20)
+    assert not fill.int64_operands(1 << 50, 1 << 40, 1 << 20)
+    assert fill.int64_operands(1 << 50, 1, (1 << 30) - 1)
+    assert not fill.int64_operands(1 << 50, 1, 1 << 30)
+
+    dtypes = []
+    build = fill.segtree_build
+
+    def spy(tax, *rest):
+        dtypes.append(tax.dtype)
+        return build(tax, *rest)
+
+    monkeypatch.setattr(fill, "segtree_build", spy)
+
+    # a stack of sloped chords of x-length Dx = 2^20 over a y extent H of
+    # 2^40 - 1, then 2^40: H * Dx is just under, then at 2^60
+    def chords(h):
+        k = np.arange(8, dtype=np.int64)
+        ay = k * (h - 7) // 7
+        return Segments(
+            k * 3, ay, k * 3 + (1 << 20), ay + k, np.ones(8, np.int64), np.zeros(8, np.int64)
+        )
+
+    for h, want in (((1 << 40) - 1, np.int64), (1 << 40, object)):
+        segs = chords(h)
+        assert int(segs.by.max()) - int(segs.ay.min()) == h
+        dtypes.clear()
+        for fr in FillRule:
+            assert np.array_equal(fill.compute_fills(segs, fr), fill.compute_fills_windowed(segs, fr))
+        assert set(dtypes) == {np.dtype(want)}
+
+    # 16 jobs of thin 2^28-wide rectangles: tiled x extent ~2^32, H = 130
+    def rect(x, y, w, h):
+        return np.array([[x, y], [x + w, y], [x + w, y + h], [x, y + h]], dtype=np.int64)
+
+    w = 1 << 28
+    jobs = [([rect(0, 0, w, 100)], [rect(w // 2, 30 + j, w // 3, 100)]) for j in range(16)]
+    dtypes.clear()
+    segs, fills, *_ = _tiled_graph(
+        *_flatten_jobs(jobs), len(jobs), FillRule.EVEN_ODD, DEFAULT_OPTIONS
+    )
+    assert int(segs.bx.max()) - int(segs.ax.min()) >= 1 << 31
+    assert dtypes == [np.dtype(np.int64)]
+    assert np.array_equal(fills, fill.compute_fills(segs, FillRule.EVEN_ODD))
 
 
 def test_apply_marks_matches_scalar_reference():

@@ -18,8 +18,8 @@ import pytest
 from ioverlay_spark.kernel.fill import (
     FillRule,
     _windings_segtree,
-    compute_fills_segtree,
-    compute_fills_sweep,
+    compute_fills,
+    compute_fills_windowed,
 )
 from ioverlay_spark.kernel.segments import Segments, build_segments, sort_and_merge
 from ioverlay_spark.kernel.split import split_segments
@@ -49,10 +49,19 @@ def test_segtree_threaded_matches_single():
     w1 = _windings_segtree(segs, threads=1)
     w8 = _windings_segtree(segs, threads=8)
     assert np.array_equal(w1[0], w8[0]) and np.array_equal(w1[1], w8[1])
-    # and the segtree agrees with the sweep on the same set (exact oracle)
-    f_tree = compute_fills_segtree(segs, FillRule.NON_ZERO, threads=8)
-    f_sweep = compute_fills_sweep(segs, FillRule.NON_ZERO)
-    assert np.array_equal(f_tree, f_sweep)
+    # and the segtree agrees with the dense ray-cast (exact oracle). The set
+    # has ~740k segments, so the O(n^2) oracle runs on narrow x-windows: a
+    # row whose doubled midpoint x lies in [lo, hi) meets only segments with
+    # 2*ax < hi and 2*bx > lo, all kept in the window's subset
+    f_tree = compute_fills_windowed(segs, FillRule.NON_ZERO, threads=8)
+    X2 = segs.ax + segs.bx
+    for lo in np.quantile(X2, [0.2, 0.5, 0.8]).astype(np.int64):
+        hi = lo + 2_000
+        sub = np.flatnonzero((2 * segs.bx > lo) & (2 * segs.ax < hi))
+        home = (X2[sub] >= lo) & (X2[sub] < hi)
+        assert home.sum() > 1_000
+        dense = compute_fills(segs.take(sub), FillRule.NON_ZERO)
+        assert np.array_equal(f_tree[sub[home]], dense[home])
 
 
 @pytest.mark.parametrize("rule", [OverlayRule.INTERSECT, OverlayRule.UNION])
