@@ -4,10 +4,12 @@ ioverlay_spark/scenarios.py, correctness oracles in tests/test_perf_scenarios.py
 and the spiral self-union of test_3_spiral.rs (geometry re-derived from
 util.rs:181-227 below; SUBJECT / NON_ZERO on the i32-scale quantized band),
 plus hull_holes (one hull DIFFERENCE k^2 holes, the hole binder's row; no
-reference number) and hull_holes_far (the same plus one disjoint hull of the
+reference number), hull_holes_far (the same plus one disjoint hull of the
 same size, one hull-width to the right: the scalar overlay() clusters it into
 two jobs and runs the batch kernel, so the row times the batch fill on one
-big tile).
+big tile) and lines_net_xor (n vertical x n horizontal strips of width 10 at
+spacing 20, XOR: one tile whose every strip crossing is a degree-4 node, the
+contour trigger loop's largest single-tile case; no reference number).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
@@ -16,6 +18,7 @@ Usage:
     python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
     python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
     python audits/scenarios_audit.py hull_holes_far 64 128  # batch kernel, one big tile
+    python audits/scenarios_audit.py lines_net_xor 128 256  # trigger loop, one tile
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that
@@ -46,6 +49,7 @@ REF = {
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
     "hull_holes": {},
     "hull_holes_far": {},
+    "lines_net_xor": {},
     "nested_squares": {16384: 0.322707, 32768: 0.653741, 65536: 2.410910},
     "corrosion": {64: 0.033293, 128: 0.133794, 256: 0.594231, 512: 2.297538},
     "concentric": {64: 0.034357, 128: 0.134210, 256: 0.563524, 512: 2.367582},
@@ -58,6 +62,7 @@ DEFAULT_NS = {
     "windows": [128, 256, 512, 1024],
     "hull_holes": [64, 128, 256],
     "hull_holes_far": [64, 128],
+    "lines_net_xor": [128, 256],
     "nested_squares": [16384, 32768],
     "corrosion": [64, 128, 256],
     "concentric": [64, 128, 256],
@@ -70,6 +75,7 @@ RULES = {
     "windows": OverlayRule.DIFFERENCE,
     "hull_holes": OverlayRule.DIFFERENCE,
     "hull_holes_far": OverlayRule.DIFFERENCE,
+    "lines_net_xor": OverlayRule.XOR,
     "nested_squares": OverlayRule.XOR,
     "corrosion": OverlayRule.DIFFERENCE,
     "concentric": OverlayRule.INTERSECT,
@@ -125,6 +131,10 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
         )
     if name == "nested_squares":
         return count == 4 * n and area2 == 64 * n * n
+    if name == "lines_net_xor":
+        # the strips' union minus their n^2 crossing squares, w = 10, s = 10n
+        w, s = LINES_NET_A // 2, LINES_NET_A * n // 2
+        return area2 == 2 * (4 * n * w * s - 2 * n * n * w * w)
     if name == "wind_mill":
         return count == 4 * n * n and (
             base_cell_area2 is None or area2 == n * n * base_cell_area2
@@ -134,9 +144,25 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
     return None  # corrosion/concentric: no closed form; identities live in tests
 
 
+LINES_NET_A = 20
+
+
+def lines_net(n: int) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """n vertical (subject) x n horizontal (clip) strips of width a/2 at
+    spacing a, a = LINES_NET_A (the reference lines_net geometry)."""
+    a = LINES_NET_A
+    w, s = a // 2, a * n // 2
+    starts = range(-s + w // 2, -s + w // 2 + a * n, a)
+    subj = [np.array([(x, -s), (x + w, -s), (x + w, s), (x, s)]) for x in starts]
+    clip = [np.array([(-s, y), (s, y), (s, y + w), (-s, y + w)]) for y in starts]
+    return subj, clip
+
+
 def build_int_inputs(name: str, n: int):
     if name == "spiral":
         subj, clip = [spiral(n, 100.0)], []
+    elif name == "lines_net_xor":
+        subj, clip = lines_net(n)
     elif name == "hull_holes_far":
         subj, clip = scenarios.hull_holes(n)
         subj = subj + [subj[0] + np.array([2 * (20 * n + 10), 0], dtype=np.int64)]

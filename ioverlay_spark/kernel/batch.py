@@ -26,10 +26,10 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
                   bbox-overlap candidate pairs, vectorized exact cross solver)
   fill (A10)    — fill.compute_fills_windowed over the whole tiled batch
                   (threads=1): the scalar kernel's segment-tree fill
-  extract       — vectorized degree-2 walk over the whole batch; tiles with pinch
-                  points replay the scalar trigger loop, and tiles neither can serve
-                  take the per-tile scalar walk; every walked ring then takes one
-                  extract.validate_rings pass (A20) and the flat hole binding
+  extract       — extract.walk_rings over the whole batch per rule (the vectorized
+                  degree-2 walk for plain tiles, the python trigger loop for tiles
+                  with junctions or dangling ends), one extract.validate_rings
+                  pass (A20) and the flat hole binding
 """
 
 from __future__ import annotations
@@ -44,19 +44,14 @@ from ..options import (
     OverlayRule,
 )
 from .extract import (
-    RingSet,
-    _LinkGraph,
     bind_holes,
     boundary_mask,
     concat_rings,
     extract_rings,
-    pack_rings,
     ring_gather_index,
     ring_starts,
-    rule_inside,
-    take_rings,
     validate_rings,
-    walk_contours,
+    walk_rings,
 )
 from .fill import compute_fills_windowed
 from .overlay import build_graph
@@ -125,7 +120,6 @@ def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = Fa
 
 
 _EMPTY = "empty"
-_NO_RINGS = pack_rings([])
 
 
 def vectorized_ring_segments(ring_pts, ring_job, ring_subj, options=DEFAULT_OPTIONS):
@@ -323,462 +317,6 @@ def graph_batch(
     return out
 
 
-def _sim_walk_tiles(
-    tiles, tile_fast, link_slot, lax, lay, lbx, lby, a_node, b_node, inv, ends,
-    n_nodes, first_pos, deg, ent_links, ft, clockwise_output, max_ring,
-):
-    """Exact replay of the scalar trigger loop (extract.walk_contours +
-    left_top_link + next_link, iOverlay/src/core/extract.rs:400-583) for tiles
-    that contain a node of boundary degree > 2. The walk there is HISTORY-
-    dependent — next_link's rotation is the current ring's direction and both
-    scans filter by visited — so it cannot be a precomputed permutation; but
-    these tiles are tiny (a handful of rings each), the replay is plain python
-    over prefetched lists, and ring validation still runs vectorized in
-    validate_rings. Any unusual shape (dead end, over-cap ring) bails the tile
-    to the scalar path, which guarantees identical output.
-
-    Returns (slot, rank, hole, lens, x, y) for the walked rings, points in CSR
-    form and TILED coordinates (caller converts per job), or None."""
-    cwo = bool(clockwise_output)
-    m = len(lax)
-    AX = lax.tolist()
-    AY = lay.tolist()
-    BX = lbx.tolist()
-    BY = lby.tolist()
-    AN = a_node.tolist()
-    BN = b_node.tolist()
-    FP = first_pos.tolist()
-    DG = deg.tolist()
-    EL = ent_links.tolist()
-    FTL = ft.tolist()
-    nx_t = np.zeros(n_nodes, dtype=np.int64)
-    ny_t = np.zeros(n_nodes, dtype=np.int64)
-    nx_t[inv] = ends[:, 0]
-    ny_t[inv] = ends[:, 1]
-    NX = nx_t.tolist()
-    NY = ny_t.tolist()
-    VIS = bytearray(m)
-
-    def _left_top(lk):
-        nd = AN[lk]
-        t = lk
-        tax, tay, tbx, tby = AX[t], AY[t], BX[t], BY[t]
-        e0 = FP[nd]
-        for jj in range(e0, e0 + DG[nd]):
-            i = EL[jj]
-            if i == t:
-                continue
-            if (tbx - tax) * (BY[i] - tay) - (tby - tay) * (BX[i] - tax) < 0:
-                continue
-            if VIS[i]:
-                continue
-            t = i
-            tax, tay, tbx, tby = AX[t], AY[t], BX[t], BY[t]
-        return t
-
-    def _next_link(lk, nd, cw):
-        e0 = FP[nd]
-        dgn = DG[nd]
-        if dgn == 2:
-            i0 = EL[e0]
-            i1 = EL[e0 + 1]
-            if VIS[i0]:
-                return -1 if VIS[i1] else i1
-            if VIS[i1]:
-                return i0
-            cands = [i0, i1]
-        else:
-            cands = [EL[jj] for jj in range(e0, e0 + dgn) if not VIS[EL[jj]]]
-            if not cands:
-                return -1
-            if len(cands) == 1:
-                return cands[0]
-        cx0, cy0 = NX[nd], NY[nd]
-        if AN[lk] == nd:
-            vax, vay = BX[lk] - cx0, BY[lk] - cy0
-        else:
-            vax, vay = AX[lk] - cx0, AY[lk] - cy0
-        rf = 1 if cw else -1
-        best = cands[0]
-        if AN[best] == nd:
-            vbx, vby = BX[best] - cx0, BY[best] - cy0
-        else:
-            vbx, vby = AX[best] - cx0, AY[best] - cy0
-        ab180 = (vax * vby - vay * vbx) * rf >= 0
-        for lid in cands[1:]:
-            if AN[lid] == nd:
-                vpx, vpy = BX[lid] - cx0, BY[lid] - cy0
-            else:
-                vpx, vpy = AX[lid] - cx0, AY[lid] - cy0
-            ap180 = (vax * vpy - vay * vpx) * rf >= 0
-            if ab180 == ap180:
-                if (vpx * vby - vpy * vbx) * rf < 0:
-                    vbx, vby, best = vpx, vpy, lid
-            elif ab180:
-                ab180 = False
-                vbx, vby, best = vpx, vpy, lid
-        return best
-
-    lo_all = np.searchsorted(link_slot, tiles, side="left").tolist()
-    hi_all = np.searchsorted(link_slot, tiles, side="right").tolist()
-    o_slot: list[int] = []
-    o_rank: list[int] = []
-    o_hole: list[bool] = []
-    o_len: list[int] = []
-    flat_x: list[int] = []
-    flat_y: list[int] = []
-    for ti, lo_t, hi_t in zip(tiles.tolist(), lo_all, hi_all):
-        n0 = len(o_slot)
-        f0 = len(flat_x)
-        bail = False
-        rank_c = 0
-        for start in range(lo_t, hi_t):
-            if VIS[start]:
-                continue
-            top = _left_top(start)
-            hole_f = FTL[top]
-            dflag = hole_f == cwo
-            if dflag:
-                rx, ry = [BX[top]], [BY[top]]
-                nd = AN[top]
-                last_nd = BN[top]
-            else:
-                rx, ry = [AX[top]], [AY[top]]
-                nd = BN[top]
-                last_nd = AN[top]
-            VIS[top] = 1
-            last_link = _next_link(top, last_nd, not dflag)
-            if last_link < 0:
-                bail = True  # isolated degenerate pair
-                break
-            lk = top
-            guard = max_ring + 4
-            ok = True
-            while lk != last_link:
-                guard -= 1
-                if guard <= 0:
-                    ok = False
-                    break
-                nxt = _next_link(lk, nd, dflag)
-                if nxt < 0:
-                    ok = False
-                    break
-                lk = nxt
-                rx.append(NX[nd])
-                ry.append(NY[nd])
-                an = AN[lk]
-                nd = BN[lk] if an == nd else an
-                VIS[lk] = 1
-            if not ok or len(rx) > max_ring:
-                bail = True  # over-cap or pathological: whole tile -> scalar
-                break
-            o_slot.append(ti)
-            o_rank.append(rank_c)
-            o_hole.append(hole_f)
-            o_len.append(len(rx))
-            flat_x.extend(rx)
-            flat_y.extend(ry)
-            rank_c += 1
-        if bail:
-            tile_fast[ti] = False
-            del o_slot[n0:], o_rank[n0:], o_hole[n0:], o_len[n0:]
-            del flat_x[f0:], flat_y[f0:]
-    if not o_slot:
-        return None
-    return (
-        np.asarray(o_slot, dtype=np.int64),
-        np.asarray(o_rank, dtype=np.int64),
-        np.asarray(o_hole, dtype=bool),
-        np.asarray(o_len, dtype=np.int64),
-        np.asarray(flat_x, dtype=np.int64),
-        np.asarray(flat_y, dtype=np.int64),
-    )
-
-
-def _fast_contours_batch(
-    segs, mask, fills, starts, rule, clockwise_output, off, y0, max_ring=256
-):
-    """Vectorized degree-2 ring walk over a WHOLE batch for one rule.
-
-    When every node of a tile's boundary graph has degree exactly 2 (the common
-    case: simple faces, no pinch points), the reference walk's next-link choice
-    is forced at every step — only the start link (min id, scan order), the
-    left-top pick and the direction bit need the scalar rules, and those
-    vectorize. Produces contours BIT-IDENTICAL to walk_contours (differential-
-    tested); tiles with any higher-degree node, a self-referential node, or a
-    ring longer than max_ring are reported for the scalar path.
-
-    Returns (tile_fast: bool per slot, the fast slots' rings as a RingSet in
-    per-job coordinates and scalar walk order: by slot, then trigger order)."""
-
-    pos = np.flatnonzero(mask)
-    m = len(pos)
-    nslots = len(starts) - 1
-    tile_fast = np.ones(nslots, dtype=bool)
-    if m == 0:
-        return tile_fast, _NO_RINGS
-    lax, lay = segs.ax[pos], segs.ay[pos]
-    lbx, lby = segs.bx[pos], segs.by[pos]
-    lfill = fills[pos]
-    # slot of each link (starts index the FULL segment array)
-    link_slot = np.searchsorted(starts, pos, side="right") - 1
-
-    # node ids over interleaved endpoints (a0, b0, a1, b1, ...) — tiles are
-    # x-disjoint so points never collide across tiles
-    ends = np.empty((2 * m, 2), dtype=np.int64)
-    ends[0::2, 0], ends[0::2, 1] = lax, lay
-    ends[1::2, 0], ends[1::2, 1] = lbx, lby
-    # ONE stable int64 argsort yields BOTH the node ids (inverse of unique)
-    # AND the per-node entry order: entries sorted by key with stable
-    # tie-break ARE argsort(inv, kind="stable"). The structured-pair
-    # np.unique + separate stable argsort this replaces were the walk's two
-    # dominant sorts (~2.8 s of a 3.7 s kernel at 1 M links, lines_net audit);
-    # pairs pack into one int64 whenever both spans fit 2^31 (always, for
-    # in-cap coordinate grids). Wider spans keep the structured path.
-    mnx = int(ends[:, 0].min())
-    mny = int(ends[:, 1].min())
-    spanx = int(ends[:, 0].max()) - mnx
-    spany = int(ends[:, 1].max()) - mny
-    # NARROW (int32) mode: the walk is memory-bandwidth-bound (pointer-doubling
-    # gathers + ring-buffer writes), and at 16 parallel workers the shared bus
-    # is the limiter — halving every id/coordinate word measurably restores the
-    # 4->16 scaling the int64 version lost. Ids fit int32 whenever m < 2^30
-    # (always: batches are Arrow-batch-sized); coordinates fit int32 whenever
-    # the tiled spans do (the same condition as the packed sort key).
-    idt = np.int32 if m < (1 << 30) else np.int64
-    narrow = spanx < (1 << 31) and spany < (1 << 31) and idt is np.int32
-    if spanx < (1 << 31) and spany < (1 << 31):
-        key = (ends[:, 0] - mnx) * (spany + 1) + (ends[:, 1] - mny)
-        order = np.argsort(key, kind="stable")
-        sk = key[order]
-        ng = np.empty(len(sk), dtype=bool)
-        ng[0] = True
-        ng[1:] = sk[1:] != sk[:-1]
-        inv = np.empty(len(sk), dtype=idt)
-        inv[order] = np.cumsum(ng, dtype=idt) - idt(1)
-    else:
-        v = ends.view([("x", np.int64), ("y", np.int64)]).ravel()
-        _, inv = np.unique(v, return_inverse=True)
-        order = np.argsort(inv, kind="stable")
-        inv = inv.astype(idt, copy=False)
-    a_node = np.ascontiguousarray(inv[0::2])
-    b_node = np.ascontiguousarray(inv[1::2])
-    deg = np.bincount(inv).astype(idt, copy=False)
-    # incidence entries per node, in scalar scan order (entry index): `order`
-    # (computed with the node ids above) is already argsort(inv, kind="stable")
-    link_of_entry = np.repeat(np.arange(m, dtype=idt), 2)
-    n_nodes = len(deg)
-    first_pos = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(deg)])[:-1]
-    ok2 = deg == 2
-
-    def _slow_nodes(nodes):
-        """Route every tile touching these node ids to the scalar walk."""
-        if len(nodes) == 0:
-            return
-        ent_b = np.isin(inv, nodes)
-        if ent_b.any():
-            tile_fast[np.unique(link_slot[np.flatnonzero(ent_b) >> 1])] = False
-
-    # dangling boundary ends (degenerate fills) keep the scalar path
-    _slow_nodes(np.flatnonzero(deg == 1))
-    # tiles with ANY higher-degree node (XOR crossings, union pinch points)
-    # are served by an exact per-tile replay of the scalar trigger loop below
-    # (round 4): the walk there is history-dependent (next_link's rotation is
-    # the ring's own direction and left_top/next_link filter by visited), so
-    # it cannot be a precomputed permutation — but those tiles are a tiny
-    # python loop each, and their ring VALIDATION still vectorizes.
-    sim_tile = np.zeros(nslots, dtype=bool)
-    multi = np.flatnonzero(deg > 2)
-    if len(multi):
-        ent_b = np.isin(inv, multi)
-        sim_tile[np.unique(link_slot[np.flatnonzero(ent_b) >> 1])] = True
-
-    # degree-2 incidence tables (l12 for the left-top pick, partner entries
-    # for the pointer-doubling successor)
-    l12 = np.full((n_nodes, 2), -1, dtype=idt)
-    nodes2 = np.flatnonzero(ok2)
-    p0 = order[first_pos[nodes2]]
-    p1 = order[first_pos[nodes2] + 1]
-    l12[nodes2, 0] = link_of_entry[p0]
-    l12[nodes2, 1] = link_of_entry[p1]
-    # a node whose two entries are the same link (degenerate) -> slow tile
-    same2 = (p0 >> 1) == (p1 >> 1)
-    if same2.any():
-        _slow_nodes(nodes2[same2])
-        p0 = p0[~same2]
-        p1 = p1[~same2]
-
-    if not tile_fast.any() or not tile_fast[link_slot].any():
-        tile_fast[:] = False
-        return tile_fast, _NO_RINGS
-
-    # directed edges: id = 2*link + bit, bit=0 -> to_node = a_node, bit=1 ->
-    # b_node. A directed edge's id IS its link's entry id at its to_node, so
-    # the degree-2 successor is partner ^ 1 (continue out the partner's other
-    # end); entries at non-degree-2 nodes keep a harmless self-partner (their
-    # tiles are slow or replayed by the sim).
-    partner = np.arange(2 * m, dtype=idt)
-    partner[p0] = p1.astype(idt, copy=False)
-    partner[p1] = p0.astype(idt, copy=False)
-    ids = np.arange(2 * m, dtype=idt)
-    dlink = ids >> 1
-    dbit = ids & 1
-    to_node = np.where(dbit == 1, b_node[dlink], a_node[dlink])
-    perm = partner ^ idt(1)
-
-    # cycle labeling: min link id reachable (pointer doubling)
-    val = dlink.copy()
-    p = perm.copy()
-    for _ in range(int(np.ceil(np.log2(max(2 * m, 2)))) + 1):
-        val = np.minimum(val, val[p])
-        p = p[p]
-    # ring length per start = (#directed ids with this label) / 2
-    counts = np.bincount(val, minlength=m)
-    ring_len = (counts // 2).astype(idt, copy=False)
-    start_links = np.flatnonzero(counts).astype(idt, copy=False)  # labels are link ids
-    # cap: huge rings take the scalar path
-    big = start_links[ring_len[start_links] > max_ring]
-    if len(big):
-        tile_fast[np.unique(link_slot[big])] = False
-
-    fast_links = tile_fast[link_slot]
-    start_links = start_links[fast_links[start_links]]
-    # sim tiles' labels are garbage (self-partner bounces at multi nodes chop
-    # their cycles); the replay below produces their rings instead
-    if sim_tile.any():
-        start_links = start_links[~sim_tile[link_slot[start_links]]]
-
-    s = start_links
-    lens = ring_len[s].astype(np.int64)
-    nrings = len(s)
-
-    if nrings:
-        # left-top pick at the start link (degree-2 specialization of the
-        # scalar left_top_link scan — every node on a non-sim fast tile is
-        # degree 2). The scan is ORDER-DEPENDENT: with incidence order
-        # [start, o] the result is o iff c1 >= 0; with [o, start] the scan may
-        # flip to o (c1 >= 0) and then back to start (c2 >= 0), so the result
-        # is o iff c1 >= 0 and c2 < 0. c1 = cross(b_s - a_s, b_o - a_s) tests
-        # o against the start link; c2 = cross(b_o - a_o, b_s - a_o) tests
-        # start against o.
-        sa_node = a_node[s]
-        first_is_start = l12[sa_node, 0] == s
-        o_at = np.where(first_is_start, l12[sa_node, 1], l12[sa_node, 0])
-        c1 = (lbx[s] - lax[s]) * (lby[o_at] - lay[s]) - (lby[s] - lay[s]) * (
-            lbx[o_at] - lax[s]
-        )
-        c2 = (lbx[o_at] - lax[o_at]) * (lby[s] - lay[o_at]) - (
-            lby[o_at] - lay[o_at]
-        ) * (lbx[s] - lax[o_at])
-        pick_o = np.where(first_is_start, c1 >= 0, (c1 >= 0) & (c2 < 0))
-        top = np.where(pick_o, o_at, s)
-        s_top = (lfill[top] & 1) != 0  # SUBJ_TOP
-        c_top = (lfill[top] & 4) != 0  # CLIP_TOP
-        hole = rule_inside(s_top, c_top, rule)
-        d = hole == clockwise_output
-        # first ring point + starting directed edge
-        first_node = np.where(d, b_node[top], a_node[top])
-        cur = np.where(d, 2 * top + 0, 2 * top + 1)  # toward a_node when d
-        L_max = int(lens.max())
-    else:
-        hole = np.empty(0, dtype=bool)
-        first_node = np.empty(0, dtype=idt)
-        L_max = 1
-
-    # node point lookup (any entry of the node); narrow mode stores coordinates
-    # relative to (mnx, mny) in int32 — converted back to per-job int64 after
-    # the walk, so downstream (validation) sees identical values
-    cdt = np.int32 if narrow else np.int64
-    node_x = np.zeros(n_nodes, dtype=cdt)
-    node_y = np.zeros(n_nodes, dtype=cdt)
-    if narrow:
-        node_x[inv] = ends[:, 0] - mnx
-        node_y[inv] = ends[:, 1] - mny
-    else:
-        node_x[inv] = ends[:, 0]
-        node_y[inv] = ends[:, 1]
-
-    if L_max <= 64:
-        # short rings (the common batch shape): per-step column writes into a
-        # (rings x L_max) buffer, then one mask compress to CSR
-        buf_x = np.empty((nrings, L_max), dtype=cdt)
-        buf_y = np.empty((nrings, L_max), dtype=cdt)
-        buf_x[:, 0] = node_x[first_node]
-        buf_y[:, 0] = node_y[first_node]
-        for step in range(1, L_max):
-            tn = to_node[cur]
-            buf_x[:, step] = node_x[tn]
-            buf_y[:, step] = node_y[tn]
-            cur = perm[cur]
-        pm = np.arange(L_max) < lens[:, None]
-        x, y = buf_x[pm], buf_y[pm]
-    else:
-        # LONG rings (e.g. one 400k-point spiral ring): the per-step python
-        # loop would run L_max iterations, so compute each directed edge's
-        # RANK from its ring's start edge by pointer-doubling list ranking
-        # (O(m log m) vectorized) and scatter points straight to CSR.
-        # Ranks follow the INVERSE permutation from each edge back to its
-        # ring's absorbing start edge; the reverse-direction orbit of a ring
-        # shares its label but never reaches the absorbing edge, so its
-        # ranks blow past the ring length and the <= L-2 filter drops it.
-        pos = ring_starts(lens)
-        x = np.empty(int(lens.sum()), dtype=cdt)
-        y = np.empty(len(x), dtype=cdt)
-        x[pos] = node_x[first_node]
-        y[pos] = node_y[first_node]
-        m2 = 2 * m
-        ids2 = np.arange(m2, dtype=idt)
-        ip = np.empty(m2, dtype=idt)
-        ip[perm] = ids2
-        ip[cur] = cur  # absorb at each fast ring's start edge
-        dist = np.where(ip == ids2, idt(0), idt(1))
-        p = ip
-        for _ in range(int(np.ceil(np.log2(max(m2, 2)))) + 1):
-            dist = dist + dist[p]
-            p = p[p]
-        ring_row = np.full(m, -1, dtype=idt)
-        ring_row[s] = np.arange(nrings, dtype=idt)
-        rows_e = ring_row[val]
-        ok = rows_e >= 0
-        ok[ok] &= dist[ok] <= lens[rows_e[ok]] - 2
-        ee = np.flatnonzero(ok)
-        tn = to_node[ee]
-        at = pos[rows_e[ee]] + 1 + dist[ee]
-        x[at] = node_x[tn]
-        y[at] = node_y[tn]
-
-    # back to per-job int64 coordinates; rings are in scalar walk order
-    # (ascending start link, so by slot too)
-    r_slot = link_slot[s].astype(np.int64)
-    x = np.repeat((mnx if narrow else 0) - off[r_slot], lens) + x
-    y = np.add(y, (mny if narrow else 0) + y0, dtype=np.int64)
-    rings = RingSet(r_slot, hole, lens, x, y)
-
-    # ---- order-sensitive tiles: exact replay of the scalar trigger loop -----
-    if (sim_tile & tile_fast).any():
-        sim = _sim_walk_tiles(
-            np.flatnonzero(sim_tile & tile_fast), tile_fast, link_slot,
-            lax, lay, lbx, lby, a_node, b_node, inv, ends, n_nodes,
-            first_pos, deg, link_of_entry[order],
-            rule_inside((lfill & 1) != 0, (lfill & 4) != 0, rule),
-            clockwise_output, max_ring,
-        )
-        if sim is not None:
-            s_slot, s_rank, s_hole, s_lens, s_x, s_y = sim
-            rings = RingSet(
-                np.concatenate([r_slot, s_slot]),
-                np.concatenate([hole, s_hole]),
-                np.concatenate([lens, s_lens]),
-                np.concatenate([x, s_x - np.repeat(off[s_slot], s_lens)]),
-                np.concatenate([y, s_y + y0]),
-            )
-            # scalar trigger order: ascending start link per slot (sim tiles
-            # recorded their replayed trigger rank)
-            emit_rank = np.concatenate([s.astype(np.int64), s_rank])
-            rings = take_rings(rings, np.lexsort((emit_rank, rings.slot)))
-    return tile_fast, rings
-
-
 # ---- FLAT output tail ------------------------------------------------------
 # (job, shape_id, contour_idx, lens, pts, area2) arrays instead of per-ring
 # python lists/dicts: the emission side of the Arrow workers and the scalar
@@ -811,53 +349,19 @@ def _bind_flat(rings, a2):
     return slot[o], sid[o], cidx[o], lens[o], np.stack([x[pi], y[pi]], axis=1), a2[o]
 
 
-def _overlay_tail_flat(t, nj, rules, options):
+def _overlay_tail_flat(t, rules, options):
     """Extraction over split+filled tiled parts -> {rule: flat tuple} sorted by
-    (job, shape, contour). Per rule, the vectorized degree-2 walk serves every
-    tile it can and the scalar walk the rest; all walked rings then take one
-    validate_rings pass and _bind_flat."""
+    (job, shape, contour): per rule one extract.walk_rings over every tile,
+    one validate_rings pass and _bind_flat."""
     if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
     segs, all_fills, starts, off, y0 = t
     clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
-    rule_masks = {rule: boundary_mask(all_fills, rule) for rule in rules}
-    walked: dict = {}
-    fast_mask: dict = {}
-    for rule in rules:
-        fast_mask[rule], rings = _fast_contours_batch(
-            segs, rule_masks[rule], all_fills, starts, rule, clockwise_output, off, y0
-        )
-        walked[rule] = [rings]
-
-    any_slow = np.zeros(nj, dtype=bool)
-    for rule in rules:
-        any_slow |= ~fast_mask[rule]
-    nonempty = np.diff(starts) > 0
-    slow_slots = np.flatnonzero(any_slow & nonempty)
-    if len(slow_slots):
-        # job-local endpoint lists for EVERY link, adjusted batch-wide in numpy;
-        # per tile these are list slices feeding ONE _LinkGraph shared by every
-        # rule's walk (dead links pre-visited per rule)
-        link_off = np.repeat(off, np.diff(starts))
-        all_pa = list(zip((segs.ax - link_off).tolist(), (segs.ay + y0).tolist()))
-        all_pb = list(zip((segs.bx - link_off).tolist(), (segs.by + y0).tolist()))
-        all_fl = all_fills.tolist()
-        slow_acc: dict = {rule: ([], []) for rule in rules}
-        for slot in slow_slots.tolist():
-            lo, hi = int(starts[slot]), int(starts[slot + 1])
-            g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
-            for rule in rules:
-                if fast_mask[rule][slot]:
-                    continue
-                contours = walk_contours(
-                    None, None, rule, clockwise_output, rule_masks[rule][lo:hi], g
-                )
-                slow_acc[rule][0].extend(contours)
-                slow_acc[rule][1].extend([slot] * len(contours))
-        for rule in rules:
-            walked[rule].append(pack_rings(*slow_acc[rule]))
     return {
-        rule: _bind_flat(*validate_rings(concat_rings(walked[rule]), options))
+        rule: _bind_flat(*validate_rings(walk_rings(
+            segs, boundary_mask(all_fills, rule), all_fills, starts, rule,
+            clockwise_output, off, y0,
+        ), options))
         for rule in rules
     }
 
@@ -886,19 +390,17 @@ def overlay_batch_flat_out(
     rules = [OverlayRule(r) for r in rules]
     if nj == 0:
         return {rule: _FLAT_EMPTY for rule in rules}
-    t = None
-    if nj > 1:
-        t = _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options)
-    if nj == 1 or t is None:
+    t = _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options)
+    if t is None:
         return _scalar_flat(
             _jobs_from_flat(P, counts, ring_job, ring_subj, nj), rules, fill_rule, options
         )
-    return _overlay_tail_flat(t, nj, rules, options)
+    return _overlay_tail_flat(t, rules, options)
 
 
 def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
     """Reassemble (subj_rings, clip_rings) jobs from the flat ring layout — only
-    for the scalar fallback (one job, or coords beyond _COORD_CAP)."""
+    for the scalar fallback (coords beyond _COORD_CAP)."""
     S = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
     jobs: list[tuple[list, list]] = [([], []) for _ in range(nj)]
     for r in range(len(counts)):

@@ -11,7 +11,9 @@ Faithful re-derivation of the reference's extraction semantics:
   rotation depends on hole/hull and output direction
   (iOverlay/src/core/extract.rs:479-583, iOverlay/src/core/nearest_vector.rs) — this is
   what merges region boundaries into self-touching contours at pinch nodes, matching the
-  golden fixtures;
+  golden fixtures. walk_rings is the one walk: a vectorized degree-2 walk for slots
+  whose boundary is plain cycles, one python trigger loop over the flat _LinkGraph
+  for every other slot;
 - hole binding via the left-bottom anchor and the nearest segment strictly below
   (iOverlay/src/bind/solver.rs:25-236): one vectorized ray shot per anchor on the
   fill's segment tree, hole->hole parents resolved by pointer jumping.
@@ -77,226 +79,6 @@ def _cross(ux, uy, vx, vy):
     return ux * vy - uy * vx
 
 
-def _nearest_link(c, va, cands, clockwise: bool):
-    """NearestVector (iOverlay/src/core/nearest_vector.rs): among candidate links at
-    node c, the nearest to vector va by the given rotation. cands: [(ox, oy, link_id)]
-    with (ox, oy) = the candidate's other endpoint."""
-    rf = 1 if clockwise else -1
-    ox, oy, best = cands[0]
-    vbx, vby = ox - c[0], oy - c[1]
-    ab180 = _cross(va[0], va[1], vbx, vby) * rf >= 0
-    for ox, oy, lid in cands[1:]:
-        vpx, vpy = ox - c[0], oy - c[1]
-        ap180 = _cross(va[0], va[1], vpx, vpy) * rf >= 0
-        if ab180 == ap180:
-            if _cross(vpx, vpy, vbx, vby) * rf < 0:
-                vbx, vby, best = vpx, vpy, lid
-        elif ab180:
-            ab180 = False
-            vbx, vby, best = vpx, vpy, lid
-    return best
-
-
-class _LinkGraph:
-    """Boundary links + node incidence, mirroring OverlayGraph (nodes/links)."""
-
-    def __init__(self, pts_a, pts_b, fills):
-        self.a = pts_a  # list[(x, y)]
-        self.b = pts_b
-        self.fill = fills
-        m = self.m = len(pts_a)
-        if m < 256:
-            # tiny graph (the batched-kernel common case): dict insertion beats
-            # the np.unique/argsort constant costs by a wide margin.
-            # a_node/b_node/visited stay PLAIN PYTHON lists throughout the walk:
-            # every read in the walk loop is a scalar access from Python, where
-            # numpy scalar indexing costs ~10x a list index
-            node_ids: dict[tuple[int, int], int] = {}
-            incid: list[list[int]] = []
-            node_pt: list[tuple[int, int]] = []
-            self.a_node = [0] * m
-            self.b_node = [0] * m
-            for e in range(m):
-                for end, arr in ((pts_a[e], self.a_node), (pts_b[e], self.b_node)):
-                    nid = node_ids.get(end)
-                    if nid is None:
-                        nid = len(node_ids)
-                        node_ids[end] = nid
-                        incid.append([])
-                        node_pt.append(end)
-                    arr[e] = nid
-                    incid[nid].append(e)
-            self.incid = incid
-            self.node_pt = node_pt
-            return
-        # large graph: vectorized node building — first-occurrence-ordered unique
-        # endpoint ids (identical to the dict loop: endpoints scanned in
-        # (a0, b0, a1, b1, ...) order)
-        ends = np.empty((2 * m, 2), dtype=np.int64)
-        ends[0::2] = np.asarray(pts_a, dtype=np.int64).reshape(m, 2)
-        ends[1::2] = np.asarray(pts_b, dtype=np.int64).reshape(m, 2)
-        v = ends.view([("x", np.int64), ("y", np.int64)]).ravel()
-        uniq, first, inv = np.unique(v, return_index=True, return_inverse=True)
-        order = np.argsort(first, kind="stable")
-        rank = np.empty_like(order)
-        rank[order] = np.arange(len(order))
-        node = rank[inv]
-        self.a_node = node[0::2].tolist()
-        self.b_node = node[1::2].tolist()
-        n_nodes = len(uniq)
-        link_of = np.repeat(np.arange(m, dtype=np.int64), 2)
-        grp = np.argsort(node, kind="stable")
-        counts = np.bincount(node, minlength=n_nodes)
-        # slice a plain python list per node — np.split would allocate one
-        # numpy array per node, ~10x the cost at mega-graph scale
-        sl = link_of[grp].tolist()
-        offs = np.concatenate(([0], np.cumsum(counts))).tolist()
-        self.incid = [sl[offs[i]:offs[i + 1]] for i in range(n_nodes)]
-        pts_first = ends[first[order]]
-        self.node_pt = list(map(tuple, pts_first.tolist()))
-
-    def other(self, link: int, node: int) -> int:
-        return int(self.b_node[link]) if self.a_node[link] == node else int(self.a_node[link])
-
-    def other_pt(self, link: int, node: int):
-        return self.b[link] if self.a_node[link] == node else self.a[link]
-
-    def next_link(self, link: int, node: int, clockwise: bool, visited) -> int:
-        """Reference next_link (iOverlay/src/core/extract.rs:479-583)."""
-        inc = self.incid[node]
-        if len(inc) == 2:
-            # degree-2 node (the overwhelming case): the incoming link is
-            # already visited, so at most one candidate remains
-            i0, i1 = inc
-            if visited[i0]:
-                return -1 if visited[i1] else i1
-            if visited[i1]:
-                return i0
-            cands = inc
-        else:
-            cands = [i for i in inc if not visited[i]]
-        if not cands:
-            return -1
-        if len(cands) == 1:
-            return cands[0]
-        c = self.node_pt[node]
-        # va = back along the incoming link
-        if self.a_node[link] == node:
-            apt = self.b[link]
-        else:
-            apt = self.a[link]
-        va = (apt[0] - c[0], apt[1] - c[1])
-        cl = [(self.other_pt(i, node)[0], self.other_pt(i, node)[1], i) for i in cands]
-        return _nearest_link(c, va, cl, clockwise)
-
-    def left_top_link(self, link: int, visited) -> int:
-        """Reference find_left_top_link (iOverlay/src/core/extract.rs:400-470): at the
-        start link's a-node, the unvisited link with the topmost direction."""
-        node = int(self.a_node[link])
-        top = link
-        ta = self.a[top]
-        tb = self.b[top]
-        for i in self.incid[node]:
-            if i == top:
-                continue
-            cb = self.b[i]
-            # skip if cb is clockwise of (ta -> tb)
-            if _cross(tb[0] - ta[0], tb[1] - ta[1], cb[0] - ta[0], cb[1] - ta[1]) < 0:
-                continue
-            if visited[i]:
-                continue
-            top = i
-            ta = self.a[top]
-            tb = self.b[top]
-        return top
-
-
-def walk_contours(
-    segs: Segments,
-    fills: np.ndarray,
-    rule: OverlayRule,
-    clockwise_output: bool,
-    boundary: np.ndarray | None = None,
-    graph: "_LinkGraph | None" = None,
-) -> list[tuple[list[tuple[int, int]], bool]]:
-    """Extract all contours for a rule. Returns [(ring_points, is_hole)].
-
-    boundary: optional precomputed boundary_mask(fills, rule) — the batch kernel
-    computes it once per rule over a whole batch and slices per tile.
-
-    graph: optional prebuilt _LinkGraph over ALL of segs' links (the batch
-    kernel builds ONE per tile and reuses it for every rule): non-boundary
-    links start pre-visited, which yields identical walks — candidate lists
-    are filtered by `visited`, and the relative order of the surviving links
-    matches the boundary-subset graph exactly."""
-    mask = boundary_mask(fills, rule) if boundary is None else boundary
-    if graph is not None:
-        if not mask.any():
-            return []
-        g = graph
-        visited = np.logical_not(mask).tolist()
-    else:
-        idx = np.flatnonzero(mask)
-        if len(idx) == 0:
-            return []
-        pts_a = list(zip(segs.ax[idx].tolist(), segs.ay[idx].tolist()))
-        pts_b = list(zip(segs.bx[idx].tolist(), segs.by[idx].tolist()))
-        bfills = fills[idx].tolist()
-        g = _LinkGraph(pts_a, pts_b, bfills)
-        visited = [False] * g.m
-    out: list[tuple[list[tuple[int, int]], bool]] = []
-
-    for start in range(g.m):
-        if visited[start]:
-            continue
-        top = g.left_top_link(start, visited)
-        hole = is_fill_top(g.fill[top], rule)
-        d = hole == clockwise_output
-
-        if d:
-            ring = [g.b[top]]
-            node = int(g.a_node[top])
-            last_node = int(g.b_node[top])
-        else:
-            ring = [g.a[top]]
-            node = int(g.b_node[top])
-            last_node = int(g.a_node[top])
-        visited[top] = True
-
-        last_link = g.next_link(top, last_node, not d, visited)
-        link = top
-        if last_link < 0:
-            # isolated degenerate pair; nothing to close
-            out.append((ring, hole))
-            continue
-        guard = 4 * g.m + 8
-        # hot loop: degree-2 advance inlined (the incoming link is visited, so
-        # exactly one candidate remains) — falls back to next_link for true
-        # junction nodes
-        incid, a_node, b_node, node_pt = g.incid, g.a_node, g.b_node, g.node_pt
-        while link != last_link and guard > 0:
-            guard -= 1
-            inc = incid[node]
-            if len(inc) == 2:
-                i0, i1 = inc
-                if visited[i0]:
-                    nxt = -1 if visited[i1] else i1
-                elif visited[i1]:
-                    nxt = i0
-                else:
-                    nxt = g.next_link(link, node, d, visited)
-            else:
-                nxt = g.next_link(link, node, d, visited)
-            if nxt < 0:
-                break
-            link = nxt
-            ring.append(node_pt[node])
-            node = b_node[link] if a_node[link] == node else a_node[link]
-            visited[link] = True
-        out.append((ring, hole))
-    return out
-
-
 def ring_area2(pts) -> int:
     """Signed shoelace *2 in exact Python ints (CCW positive)."""
     n = len(pts)
@@ -338,9 +120,8 @@ class RingSet(NamedTuple):
     """Walked rings in CSR form: one flat x/y point array holding every ring's
     points contiguously in walk order (ring i starts at sum(lens[:i]); every
     ring has at least one point), plus each ring's slot (job or component id)
-    and the walk's hole flag. The vectorized degree-2 walk
-    (batch._fast_contours_batch) emits it directly, the scalar walk through
-    pack_rings, and validate_rings checks it for every extract stage."""
+    and the walk's hole flag. walk_rings emits it for every extract stage and
+    validate_rings checks it."""
 
     slot: np.ndarray  # int64 per ring
     hole: np.ndarray  # bool per ring
@@ -389,6 +170,465 @@ def pack_rings(contours: list, slots=None) -> RingSet:
         pts[:, 0],
         pts[:, 1],
     )
+
+
+_NO_RINGS = pack_rings([])
+
+
+# below this many boundary links a walk builds its link graph with a python
+# dict and runs every slot through the trigger loop: the numpy node-id pass
+# and the cycle walk cost a fixed ~0.2-0.5 ms, several times the whole walk
+# of a small graph
+_PY_GRAPH_LINKS = 128
+
+
+class _LinkGraph:
+    """Boundary links and their node incidence as flat python lists, mirroring
+    OverlayGraph (nodes/links): link i runs (ax[i], ay[i]) -> (bx[i], by[i])
+    from node an[i] to node bn[i]; node k sits at (nx[k], ny[k]) and its links
+    are ent[first[k]:first[k + 1]], in ascending (link, end) order, the
+    reference's incidence order. Every field is a plain python list: the walk
+    reads one scalar at a time, where numpy scalar indexing costs ~10x a list
+    index."""
+
+    __slots__ = ("m", "ax", "ay", "bx", "by", "an", "bn", "nx", "ny", "first", "ent")
+
+    def __init__(self, ax, ay, bx, by, an, bn, nx, ny, first, ent):
+        self.m = len(ax)
+        self.ax, self.ay, self.bx, self.by = ax, ay, bx, by
+        self.an, self.bn, self.nx, self.ny = an, bn, nx, ny
+        self.first, self.ent = first, ent
+
+    def other(self, link: int, node: int) -> int:
+        an = self.an[link]
+        return self.bn[link] if an == node else an
+
+    def next_link(self, link: int, node: int, clockwise: bool, visited) -> int:
+        """Reference next_link (iOverlay/src/core/extract.rs:479-583): the
+        unvisited link at node, the nearest by rotation when several remain."""
+        cands = [i for i in self.ent[self.first[node]:self.first[node + 1]] if not visited[i]]
+        if len(cands) > 1:
+            return _nearest_link(self, link, node, cands, clockwise)
+        return cands[0] if cands else -1
+
+    def left_top_link(self, link: int, visited) -> int:
+        """Reference find_left_top_link (iOverlay/src/core/extract.rs:400-470): at the
+        start link's a-node, the unvisited link with the topmost direction."""
+        ax, ay, bx, by = self.ax, self.ay, self.bx, self.by
+        node = self.an[link]
+        top = link
+        tax, tay, tbx, tby = ax[top], ay[top], bx[top], by[top]
+        for i in self.ent[self.first[node]:self.first[node + 1]]:
+            if i == top:
+                continue
+            # skip if b_i is clockwise of (a_top -> b_top)
+            if (tbx - tax) * (by[i] - tay) - (tby - tay) * (bx[i] - tax) < 0:
+                continue
+            if visited[i]:
+                continue
+            top = i
+            tax, tay, tbx, tby = ax[top], ay[top], bx[top], by[top]
+        return top
+
+
+def _nearest_link(g: _LinkGraph, link: int, node: int, cands, clockwise: bool) -> int:
+    """NearestVector (iOverlay/src/core/nearest_vector.rs): among candidate
+    links at node, the nearest to the vector back along the incoming link by
+    the given rotation."""
+    ax, ay, bx, by, an = g.ax, g.ay, g.bx, g.by, g.an
+    cx, cy = g.nx[node], g.ny[node]
+    if an[link] == node:
+        vax, vay = bx[link] - cx, by[link] - cy
+    else:
+        vax, vay = ax[link] - cx, ay[link] - cy
+    rf = 1 if clockwise else -1
+    best = cands[0]
+    if an[best] == node:
+        vbx, vby = bx[best] - cx, by[best] - cy
+    else:
+        vbx, vby = ax[best] - cx, ay[best] - cy
+    ab180 = (vax * vby - vay * vbx) * rf >= 0
+    for lid in cands[1:]:
+        if an[lid] == node:
+            vpx, vpy = bx[lid] - cx, by[lid] - cy
+        else:
+            vpx, vpy = ax[lid] - cx, ay[lid] - cy
+        ap180 = (vax * vpy - vay * vpx) * rf >= 0
+        if ab180 == ap180:
+            if (vpx * vby - vpy * vbx) * rf < 0:
+                vbx, vby, best = vpx, vpy, lid
+        elif ab180:
+            ab180 = False
+            vbx, vby, best = vpx, vpy, lid
+    return best
+
+
+def _node_pass(lax, lay, lbx, lby):
+    """Node ids over the interleaved link endpoints (a0, b0, a1, b1, ...):
+    (inv, order, ends, mnx, mny, narrow). inv is each endpoint entry's node
+    (nodes numbered in sorted point order), order the entries grouped by node
+    in entry order (= argsort(inv, kind="stable")), ends the (2m, 2) entry
+    points. narrow: ids and coordinates relative to (mnx, mny) fit int32.
+
+    ONE stable int64 argsort yields both the node ids and the per-node entry
+    order whenever both spans fit 2^31 (points pack into one int64 key);
+    wider spans take a structured np.unique."""
+    m = len(lax)
+    ends = np.empty((2 * m, 2), dtype=np.int64)
+    ends[0::2, 0], ends[0::2, 1] = lax, lay
+    ends[1::2, 0], ends[1::2, 1] = lbx, lby
+    mnx, mny = int(ends[:, 0].min()), int(ends[:, 1].min())
+    spanx = int(ends[:, 0].max()) - mnx
+    spany = int(ends[:, 1].max()) - mny
+    # int32 ids and coordinates halve the walk's memory traffic, which bounds
+    # it under many parallel workers
+    idt = np.int32 if m < (1 << 30) else np.int64
+    packed = spanx < (1 << 31) and spany < (1 << 31)
+    if packed:
+        key = (ends[:, 0] - mnx) * (spany + 1) + (ends[:, 1] - mny)
+        order = np.argsort(key, kind="stable")
+        sk = key[order]
+        ng = np.empty(len(sk), dtype=bool)
+        ng[0] = True
+        ng[1:] = sk[1:] != sk[:-1]
+        inv = np.empty(len(sk), dtype=idt)
+        inv[order] = np.cumsum(ng, dtype=idt) - idt(1)
+    else:
+        v = ends.view([("x", np.int64), ("y", np.int64)]).ravel()
+        _, inv = np.unique(v, return_inverse=True)
+        order = np.argsort(inv, kind="stable")
+        inv = inv.astype(idt, copy=False)
+    return inv, order, ends, mnx, mny, packed and idt is np.int32
+
+
+def link_graph(lax, lay, lbx, lby) -> _LinkGraph:
+    """The _LinkGraph over links with these int64 endpoint columns: nodes from
+    a python dict below _PY_GRAPH_LINKS links, else from the numpy node-id
+    pass."""
+    m = len(lax)
+    ax, ay, bx, by = lax.tolist(), lay.tolist(), lbx.tolist(), lby.tolist()
+    if m >= _PY_GRAPH_LINKS:
+        inv, order, ends, _, _, _ = _node_pass(lax, lay, lbx, lby)
+        return _pass_graph(ax, ay, bx, by, inv, order, ends, _csr_first(inv))
+    ids: dict = {}
+    an, bn = [0] * m, [0] * m
+    incid: list = []
+    for e in range(m):
+        for p, arr in (((ax[e], ay[e]), an), ((bx[e], by[e]), bn)):
+            k = ids.get(p)
+            if k is None:
+                k = ids[p] = len(incid)
+                incid.append([])
+            arr[e] = k
+            incid[k].append(e)
+    first = [0]
+    for inc in incid:
+        first.append(first[-1] + len(inc))
+    pts = list(ids)
+    return _LinkGraph(
+        ax, ay, bx, by, an, bn, [p[0] for p in pts], [p[1] for p in pts], first,
+        [e for inc in incid for e in inc],
+    )
+
+
+def _csr_first(inv) -> np.ndarray:
+    """Each node's first entry in _node_pass's entry order (CSR offsets)."""
+    deg = np.bincount(inv)
+    first = np.zeros(len(deg) + 1, dtype=np.int64)
+    np.cumsum(deg, out=first[1:])
+    return first
+
+
+def _pass_graph(ax, ay, bx, by, inv, order, ends, first) -> _LinkGraph:
+    """The _LinkGraph of _node_pass's node ids and entry order."""
+    nx = np.empty(len(first) - 1, dtype=np.int64)
+    ny = np.empty(len(first) - 1, dtype=np.int64)
+    nx[inv], ny[inv] = ends[:, 0], ends[:, 1]
+    return _LinkGraph(
+        ax, ay, bx, by, inv[0::2].tolist(), inv[1::2].tolist(), nx.tolist(),
+        ny.tolist(), first.tolist(), (order >> 1).tolist(),
+    )
+
+
+def _trigger_loop(g: _LinkGraph, spans, hole_at, clockwise: bool) -> RingSet:
+    """The reference trigger loop (iOverlay/src/core/extract.rs:64-230) over
+    links [lo, hi) of each (slot, lo, hi) span: start at the first unvisited
+    link, refine to the left-top link, classify hole vs hull by hole_at (per
+    link: is the result on its TOP side), then walk with next_link until the
+    ring closes. An isolated pair emits its one-point ring, a dead end closes
+    the ring where it stops. Rings in the graph's coordinates, in span order
+    then trigger order."""
+    ax, ay, bx, by, an, bn = g.ax, g.ay, g.bx, g.by, g.an, g.bn
+    nx, ny, first, ent = g.nx, g.ny, g.first, g.ent
+    next_link = g.next_link
+    vis = bytearray(g.m)
+    guard0 = 4 * g.m + 8
+    o_slot: list[int] = []
+    o_hole: list[bool] = []
+    o_len: list[int] = []
+    fx: list[int] = []
+    fy: list[int] = []
+    for slot, lo, hi in spans:
+        for start in range(lo, hi):
+            if vis[start]:
+                continue
+            top = g.left_top_link(start, vis)
+            hole = hole_at[top]
+            d = hole == clockwise
+            if d:
+                fx.append(bx[top])
+                fy.append(by[top])
+                node, last_node = an[top], bn[top]
+            else:
+                fx.append(ax[top])
+                fy.append(ay[top])
+                node, last_node = bn[top], an[top]
+            vis[top] = 1
+            n = 1
+            last_link = next_link(top, last_node, not d, vis)
+            link = top
+            # an isolated pair (no last link) walks no step
+            guard = guard0 if last_link >= 0 else 0
+            while link != last_link and guard > 0:
+                guard -= 1
+                e0 = first[node]
+                if first[node + 1] - e0 == 2:
+                    # degree-2 node: the incoming link is visited, so at most
+                    # one candidate remains
+                    i0, i1 = ent[e0], ent[e0 + 1]
+                    if vis[i0]:
+                        nxt = -1 if vis[i1] else i1
+                    elif vis[i1]:
+                        nxt = i0
+                    else:
+                        nxt = next_link(link, node, d, vis)
+                else:
+                    nxt = next_link(link, node, d, vis)
+                if nxt < 0:
+                    break
+                link = nxt
+                fx.append(nx[node])
+                fy.append(ny[node])
+                n += 1
+                a = an[link]
+                node = bn[link] if a == node else a
+                vis[link] = 1
+            o_slot.append(slot)
+            o_hole.append(hole)
+            o_len.append(n)
+    return RingSet(
+        np.array(o_slot, dtype=np.int64), np.array(o_hole, dtype=bool),
+        np.array(o_len, dtype=np.int64), np.array(fx, dtype=np.int64),
+        np.array(fy, dtype=np.int64),
+    )
+
+
+def walk_rings(segs, mask, fills, starts, rule: OverlayRule, clockwise: bool,
+               off, y0) -> RingSet:
+    """The reference contour walk over the boundary links (mask) of a batch of
+    slots: slot k owns segments [starts[k], starts[k + 1]) and no endpoint is
+    shared across slots. Returns every slot's rings in scalar trigger order
+    (by slot, then trigger order), in slot coordinates (x - off[slot],
+    y + y0).
+
+    A slot whose boundary graph has only degree-2 nodes, no node met twice by
+    one link, is a disjoint set of cycles: the walk is forced at every step,
+    only the start link (min id), the left-top pick and the direction bit need
+    the reference rules, and those vectorize, at any ring length. Every other
+    slot (junctions of degree > 2, dangling degree-1 ends, same-link nodes)
+    runs the python trigger loop over the node pass's CSR incidence: there the
+    walk is history-dependent (next_link's rotation is the ring's own
+    direction and both scans filter by visited). Graphs under
+    _PY_GRAPH_LINKS links take the trigger loop whole."""
+    pos = np.flatnonzero(mask)
+    m = len(pos)
+    if m == 0:
+        return _NO_RINGS
+    lax, lay, lbx, lby = segs.ax[pos], segs.ay[pos], segs.bx[pos], segs.by[pos]
+    lfill = fills[pos]
+    hole_at = rule_inside((lfill & SUBJ_TOP) != 0, (lfill & CLIP_TOP) != 0, rule)
+    link_slot = np.searchsorted(starts, pos, side="right") - 1
+    if m < _PY_GRAPH_LINKS:
+        g = link_graph(lax, lay, lbx, lby)
+        loop = np.unique(link_slot)
+        rings = _trigger_loop(g, _slot_spans(link_slot, loop), hole_at.tolist(), clockwise)
+    else:
+        inv, order, ends, mnx, mny, narrow = _node_pass(lax, lay, lbx, lby)
+        first = _csr_first(inv)
+        # the two entries of every degree-2 node; a node met twice by one
+        # link is no cycle step
+        odd = np.diff(first) != 2
+        nodes2 = np.flatnonzero(~odd)
+        p0, p1 = order[first[nodes2]], order[first[nodes2] + 1]
+        same = (p0 >> 1) == (p1 >> 1)
+        odd[nodes2[same]] = True
+        p0, p1 = p0[~same], p1[~same]
+        loop_slot = np.zeros(len(starts) - 1, dtype=bool)
+        loop_slot[link_slot[np.flatnonzero(odd[inv]) >> 1]] = True
+        plain = ~loop_slot[link_slot]
+        parts = []
+        if plain.any():
+            parts.append(_cycle_walk(
+                lax, lay, lbx, lby, hole_at, link_slot, plain, inv, order, ends,
+                first, p0, p1, mnx, mny, narrow, clockwise,
+            ))
+        loop = np.flatnonzero(loop_slot)
+        if len(loop):
+            g = _pass_graph(lax.tolist(), lay.tolist(), lbx.tolist(), lby.tolist(),
+                            inv, order, ends, first)
+            parts.append(_trigger_loop(
+                g, _slot_spans(link_slot, loop), hole_at.tolist(), clockwise
+            ))
+        rings = parts[0]
+        if len(parts) > 1:
+            rings = take_rings(concat_rings(parts), np.argsort(
+                np.concatenate([p.slot for p in parts]), kind="stable"
+            ))
+    return rings._replace(
+        x=rings.x - np.repeat(off[rings.slot], rings.lens), y=rings.y + y0
+    )
+
+
+def _slot_spans(link_slot, slots):
+    """(slot, lo, hi) link ranges of the given ascending slots."""
+    lo = np.searchsorted(link_slot, slots, side="left").tolist()
+    hi = np.searchsorted(link_slot, slots, side="right").tolist()
+    return zip(slots.tolist(), lo, hi)
+
+
+def _cycle_walk(lax, lay, lbx, lby, hole_at, link_slot, plain, inv, order, ends,
+                first, p0, p1, mnx, mny, narrow, clockwise) -> RingSet:
+    """walk_rings' vectorized walk of the plain slots' cycles (links where
+    plain): rings in tiled coordinates, by slot, then start link."""
+    m = len(lax)
+    idt = inv.dtype.type
+    a_node = np.ascontiguousarray(inv[0::2])
+    b_node = np.ascontiguousarray(inv[1::2])
+    # directed edges: id = 2*link + bit, bit=0 -> to_node = a_node, bit=1 ->
+    # b_node. A directed edge's id IS its link's entry id at its to_node, so
+    # the degree-2 successor is partner ^ 1 (continue out the partner's other
+    # end); entries at other nodes keep a harmless self-partner (their slots
+    # take the trigger loop).
+    partner = np.arange(2 * m, dtype=idt)
+    partner[p0] = p1.astype(idt, copy=False)
+    partner[p1] = p0.astype(idt, copy=False)
+    ids = np.arange(2 * m, dtype=idt)
+    dlink = ids >> 1
+    to_node = np.where((ids & 1) == 1, b_node[dlink], a_node[dlink])
+    perm = partner ^ idt(1)
+
+    # cycle labeling: min link id reachable (pointer doubling)
+    val = dlink.copy()
+    p = perm.copy()
+    for _ in range(int(np.ceil(np.log2(max(2 * m, 2)))) + 1):
+        val = np.minimum(val, val[p])
+        p = p[p]
+    # ring length per start = (#directed ids with this label) / 2
+    counts = np.bincount(val, minlength=m)
+    s = np.flatnonzero(counts).astype(idt, copy=False)  # labels are link ids
+    s = s[plain[s]]
+    lens = (counts[s] // 2).astype(np.int64)
+    nrings = len(s)
+
+    # left-top pick at the start link (degree-2 specialization of
+    # left_top_link). The scan is ORDER-DEPENDENT: with incidence order
+    # [start, o] the result is o iff c1 >= 0; with [o, start] the scan may
+    # flip to o (c1 >= 0) and then back to start (c2 >= 0), so the result is
+    # o iff c1 >= 0 and c2 < 0. c1 = cross(b_s - a_s, b_o - a_s) tests o
+    # against o. Spans under 2^31 (narrow) keep the products under 2^62;
+    # wider spans take python ints, O(rings).
+    e = first[a_node[s]]
+    l0, l1 = order[e] >> 1, order[e + 1] >> 1
+    first_is_start = l0 == s
+    o_at = np.where(first_is_start, l1, l0)
+    wide = (lambda v: v) if narrow else (lambda v: v.astype(object))
+    sax, say, sbx, sby = (wide(v[s]) for v in (lax, lay, lbx, lby))
+    oax, oay, obx, oby = (wide(v[o_at]) for v in (lax, lay, lbx, lby))
+    c1 = (sbx - sax) * (oby - say) - (sby - say) * (obx - sax)
+    c2 = (obx - oax) * (sby - oay) - (oby - oay) * (sbx - oax)
+    top = np.where(np.where(first_is_start, c1 >= 0, (c1 >= 0) & (c2 < 0)), o_at, s)
+    hole = hole_at[top]
+    d = hole == clockwise
+    # first ring point + starting directed edge
+    first_node = np.where(d, b_node[top], a_node[top])
+    cur = np.where(d, 2 * top + 0, 2 * top + 1)  # toward a_node when d
+    L_max = int(lens.max())
+
+    # node point lookup; narrow mode stores coordinates relative to (mnx, mny)
+    # in int32
+    cdt = np.int32 if narrow else np.int64
+    n_nodes = len(first) - 1
+    node_x = np.empty(n_nodes, dtype=cdt)
+    node_y = np.empty(n_nodes, dtype=cdt)
+    node_x[inv] = ends[:, 0] - (mnx if narrow else 0)
+    node_y[inv] = ends[:, 1] - (mny if narrow else 0)
+
+    if L_max <= 64:
+        # short rings (the common batch shape): per-step column writes into a
+        # (rings x L_max) buffer, then one mask compress to CSR
+        buf_x = np.empty((nrings, L_max), dtype=cdt)
+        buf_y = np.empty((nrings, L_max), dtype=cdt)
+        buf_x[:, 0] = node_x[first_node]
+        buf_y[:, 0] = node_y[first_node]
+        for step in range(1, L_max):
+            tn = to_node[cur]
+            buf_x[:, step] = node_x[tn]
+            buf_y[:, step] = node_y[tn]
+            cur = perm[cur]
+        pm = np.arange(L_max) < lens[:, None]
+        x, y = buf_x[pm], buf_y[pm]
+    else:
+        # LONG rings (e.g. one 400k-point spiral ring): the per-step loop
+        # would run L_max iterations, so compute each directed edge's RANK
+        # from its ring's start edge by pointer-doubling list ranking
+        # (O(m log m) vectorized) and scatter points straight to CSR. Ranks
+        # follow the INVERSE permutation from each edge back to its ring's
+        # absorbing start edge; the reverse-direction orbit of a ring shares
+        # its label but never reaches the absorbing edge, so its ranks blow
+        # past the ring length and the <= L-2 filter drops it.
+        rpos = ring_starts(lens)
+        x = np.empty(int(lens.sum()), dtype=cdt)
+        y = np.empty(len(x), dtype=cdt)
+        x[rpos] = node_x[first_node]
+        y[rpos] = node_y[first_node]
+        m2 = 2 * m
+        ids2 = np.arange(m2, dtype=idt)
+        ip = np.empty(m2, dtype=idt)
+        ip[perm] = ids2
+        ip[cur] = cur  # absorb at each ring's start edge
+        dist = np.where(ip == ids2, idt(0), idt(1))
+        p = ip
+        for _ in range(int(np.ceil(np.log2(max(m2, 2)))) + 1):
+            dist = dist + dist[p]
+            p = p[p]
+        ring_row = np.full(m, -1, dtype=idt)
+        ring_row[s] = np.arange(nrings, dtype=idt)
+        rows_e = ring_row[val]
+        ok = rows_e >= 0
+        ok[ok] &= dist[ok] <= lens[rows_e[ok]] - 2
+        ee = np.flatnonzero(ok)
+        tn = to_node[ee]
+        at = rpos[rows_e[ee]] + 1 + dist[ee]
+        x[at] = node_x[tn]
+        y[at] = node_y[tn]
+    return RingSet(
+        link_slot[s].astype(np.int64), hole, lens,
+        np.add(x, mnx if narrow else 0, dtype=np.int64),
+        np.add(y, mny if narrow else 0, dtype=np.int64),
+    )
+
+
+def walk_contours(segs: Segments, fills: np.ndarray, rule: OverlayRule,
+                  clockwise_output: bool) -> list[tuple[list[tuple[int, int]], bool]]:
+    """walk_rings over one segment set as [(ring_points, is_hole)], the view
+    walk_vectors reads."""
+    r = walk_rings(
+        segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)]), rule,
+        clockwise_output, np.zeros(1, dtype=np.int64), 0,
+    )
+    pts = list(zip(r.x.tolist(), r.y.tolist()))
+    ends = np.cumsum(r.lens).tolist()
+    return [(pts[e - n:e], h) for e, n, h in zip(ends, r.lens.tolist(), r.hole.tolist())]
 
 
 def bind_holes(rings: RingSet) -> tuple[np.ndarray, np.ndarray]:
@@ -655,15 +895,10 @@ def extract_rings(
 ) -> tuple[RingSet, np.ndarray]:
     """Boundary filter -> reference walk -> validate_rings: the kept rings
     (slot 0) in walk order and their signed area2."""
-    clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
-    rings = None
-    if len(segs) >= 4096:
-        # big single-job graphs (e.g. a spiral's 400k-link ring): try the
-        # vectorized degree-2 walk before the per-link python loop; graphs it
-        # cannot serve return None and fall through
-        rings = _fast_walk_contours(segs, fills, rule, clockwise_output)
-    if rings is None:
-        rings = pack_rings(walk_contours(segs, fills, rule, clockwise_output))
+    rings = walk_rings(
+        segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)]), rule,
+        options.output_direction == ContourDirection.CLOCKWISE, np.zeros(1, dtype=np.int64), 0,
+    )
     return validate_rings(rings, options)
 
 
@@ -697,39 +932,22 @@ def extract_shapes(
     return (shapes, areas) if with_areas else shapes
 
 
-def _fast_walk_contours(segs, fills, rule, clockwise_output) -> RingSet | None:
-    """walk_contours' rings as a RingSet (slot 0, identical rings in identical
-    order) via the batch kernel's vectorized degree-2 walk over ONE whole
-    segment set (unbounded ring length — long rings take its list-ranking
-    branch), or None when the graph has nodes the fast walk cannot serve (the
-    caller then runs the scalar walk)."""
-    from .batch import _fast_contours_batch
-
-    tile_fast, rings = _fast_contours_batch(
-        segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)], dtype=np.int64),
-        rule, clockwise_output, np.zeros(1, dtype=np.int64), 0, max_ring=1 << 62,
-    )
-    return rings if tile_fast[0] else None
-
-
 class _StartPath:
     """StartPathData (iOverlay/src/core/extract.rs:279-300)."""
 
     __slots__ = ("begin", "node_id", "link_id", "last_node_id")
 
-    def __init__(self, g: "_LinkGraph", direction: bool, link_id: int):
+    def __init__(self, g: _LinkGraph, direction: bool, link_id: int):
         self.link_id = link_id
         if direction:
-            self.begin = g.b[link_id]
-            self.node_id = int(g.a_node[link_id])
-            self.last_node_id = int(g.b_node[link_id])
+            self.begin = (g.bx[link_id], g.by[link_id])
+            self.node_id, self.last_node_id = g.an[link_id], g.bn[link_id]
         else:
-            self.begin = g.a[link_id]
-            self.node_id = int(g.b_node[link_id])
-            self.last_node_id = int(g.a_node[link_id])
+            self.begin = (g.ax[link_id], g.ay[link_id])
+            self.node_id, self.last_node_id = g.bn[link_id], g.an[link_id]
 
 
-def _find_contour(g: "_LinkGraph", start: _StartPath, clockwise: bool,
+def _find_contour(g: _LinkGraph, start: _StartPath, clockwise: bool,
                   state: int, visited: np.ndarray) -> list[tuple[int, int]]:
     """find_contour over a VisitState array (0 = unvisited, anything else =
     visited); marks walked links with `state`
@@ -745,7 +963,7 @@ def _find_contour(g: "_LinkGraph", start: _StartPath, clockwise: bool,
         link = g.next_link(link, node, clockwise, visited)
         if link < 0:
             break
-        ring.append(g.node_pt[node])
+        ring.append((g.nx[node], g.ny[node]))
         node = g.other(link, node)
         visited[link] = state
     return ring
@@ -836,9 +1054,8 @@ def extract_shapes_ogc(
     idx = np.flatnonzero(mask)
     if len(idx) == 0:
         return []
-    pts_a = list(zip(segs.ax[idx].tolist(), segs.ay[idx].tolist()))
-    pts_b = list(zip(segs.bx[idx].tolist(), segs.by[idx].tolist()))
-    g = _LinkGraph(pts_a, pts_b, fills[idx].tolist())
+    g = link_graph(segs.ax[idx], segs.ay[idx], segs.bx[idx], segs.by[idx])
+    fl = fills[idx].tolist()
 
     visited = np.zeros(g.m, dtype=np.int8)
     shapes: list[list] = []
@@ -850,7 +1067,7 @@ def extract_shapes_ogc(
             li += 1
             continue
         top = g.left_top_link(li, visited)
-        hole = is_fill_top(g.fill[top], rule)
+        hole = is_fill_top(fl[top], rule)
         direction = hole == is_cw
         start = _StartPath(g, direction, top)
         if hole:

@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..options import ContourDirection, FillRule, OverlayOptions
-from .extract import _LinkGraph, _nearest_link, bind_ring_lists, ring_area2
+from .extract import _LinkGraph, _nearest_link, bind_ring_lists, link_graph, ring_area2
 from .fill import SUBJ_BOTH, SUBJ_BOTTOM, SUBJ_TOP, compute_fills_windowed
 from .segments import Segments, _dedup_consecutive, _drop_collinear, build_segments
 from .split import find_marks
@@ -202,44 +202,36 @@ def _is_move_possible(fill: int, is_a: bool, clockwise: bool) -> bool:
 
 def _find_nearest(g: _LinkGraph, work, target: int, node: int, clockwise: bool) -> int:
     # (iOverlay/src/string/extract.rs:131-230)
-    cands = []
-    for lid in g.incid[node]:
-        if lid == target:
-            continue
-        is_a = int(g.a_node[lid]) == node
-        if _is_move_possible(int(work[lid]), is_a, clockwise):
-            cands.append(lid)
+    cands = [
+        lid for lid in g.ent[g.first[node]:g.first[node + 1]]
+        if lid != target and _is_move_possible(int(work[lid]), g.an[lid] == node, clockwise)
+    ]
     if not cands:
-        is_a = int(g.a_node[target]) == node
-        if _is_move_possible(int(work[target]), is_a, clockwise):
+        if _is_move_possible(int(work[target]), g.an[target] == node, clockwise):
             return target
         raise RuntimeError("string slice walk: no move found")
     if len(cands) == 1:
         return cands[0]
-    c = g.node_pt[node]
-    apt = g.b[target] if int(g.a_node[target]) == node else g.a[target]
-    va = (apt[0] - c[0], apt[1] - c[1])
-    cl = [(g.other_pt(i, node)[0], g.other_pt(i, node)[1], i) for i in cands]
-    return _nearest_link(c, va, cl, clockwise)
+    return _nearest_link(g, target, node, cands, clockwise)
 
 
 def _get_path(g: _LinkGraph, work, start: int, clockwise: bool) -> list[tuple[int, int]]:
     # (iOverlay/src/string/extract.rs:93-129)
     link_id = start
-    node_id = int(g.b_node[start])
-    last = int(g.a_node[start])
-    path = [g.a[start]]
+    node_id = g.bn[start]
+    last = g.an[start]
+    path = [(g.ax[start], g.ay[start])]
     work[start] = _visit_fill(int(work[start]), True, clockwise)
     while node_id != last:
         link_id = _find_nearest(g, work, link_id, node_id, clockwise)
-        is_a = int(g.a_node[link_id]) == node_id
+        is_a = g.an[link_id] == node_id
         work[link_id] = _visit_fill(int(work[link_id]), is_a, clockwise)
         if is_a:
-            path.append(g.a[link_id])
-            node_id = int(g.b_node[link_id])
+            path.append((g.ax[link_id], g.ay[link_id]))
+            node_id = g.bn[link_id]
         else:
-            path.append(g.b[link_id])
-            node_id = int(g.a_node[link_id])
+            path.append((g.bx[link_id], g.by[link_id]))
+            node_id = g.an[link_id]
     return path
 
 
@@ -285,9 +277,7 @@ def slice_extract(
     n = len(segs)
     if n == 0:
         return []
-    pts_a = list(zip(segs.ax.tolist(), segs.ay.tolist()))
-    pts_b = list(zip(segs.bx.tolist(), segs.by.tolist()))
-    g = _LinkGraph(pts_a, pts_b, fills)
+    g = link_graph(segs.ax, segs.ay, segs.bx, segs.by)
     work = (fills & SUBJ_BOTH).astype(np.int64)
     clockwise_out = options.output_direction == ContourDirection.CLOCKWISE
     hulls: list[list[tuple[int, int]]] = []

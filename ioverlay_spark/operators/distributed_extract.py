@@ -10,10 +10,10 @@ components       -> past it: one union-find task (repartition(1).mapInArrow)
                     (O(log n) rounds; each round = two joins + aggregates)
 per-component    -> salted groupBy(_salt).applyInArrow running the exact
                     kernel walk on each component of the group
-hole binding     -> past it: distributed "first segment strictly below the
+hole binding     -> past it: distributed "segments strictly below the
                     anchor" scan: anchors x hull segments equi-joined on
-                    x-bands, crossing parity + max on the exact rational
-                    y-at-x; a hole's innermost containing hull is its shape
+                    x-bands, an exact DECIMAL below test and crossing parity;
+                    a hole's smallest containing hull is its shape
 """
 
 from __future__ import annotations
@@ -260,8 +260,8 @@ def _extract_rings_core(
     threads: int = 1,
 ) -> pa.Table:
     """Shared walk + Arrow emission over (component-labeled) boundary segments:
-    walk every component, validate_rings, take each kept ring's lexmin
-    anchor, emit Arrow.
+    one extract.walk_rings call per chunk of components (slot = component),
+    validate_rings, take each kept ring's lexmin anchor, emit Arrow.
 
     threads > 1 splits the components into contiguous chunks walked on a
     thread pool — exact: components never share an endpoint, so every
@@ -273,15 +273,12 @@ def _extract_rings_core(
     keeps threads=1."""
     from types import SimpleNamespace
 
-    from ..kernel.batch import _fast_contours_batch
     from ..kernel.extract import (
-        _LinkGraph,
         boundary_mask,
         concat_rings,
-        pack_rings,
         ring_starts,
         validate_rings,
-        walk_contours,
+        walk_rings,
     )
 
     clockwise = options.output_direction == ContourDirection.CLOCKWISE
@@ -300,39 +297,16 @@ def _extract_rings_core(
 
     def _chunk_rings(c0: int, c1: int):
         """Validated rings (slot = component index) + area2 of components
-        [c0, c1)."""
-        lo_r, hi_r = int(bounds[c0]), int(bounds[c1])
-        c_ax, c_ay = axv[lo_r:hi_r], ayv[lo_r:hi_r]
-        c_bx, c_by = bxv[lo_r:hi_r], byv[lo_r:hi_r]
-        c_fills, c_bmask = fills_arr[lo_r:hi_r], bmask[lo_r:hi_r]
-        c_bounds = bounds[c0 : c1 + 1] - lo_r
-        # VECTORIZED degree-2 walk via the batch kernel's _fast_contours_batch
-        # with slot = component: components never share an endpoint (they are
-        # connectivity classes over exact endpoints), so the "tiles never
-        # share points" invariant holds with zero per-slot offsets.
-        # Components it cannot serve (pinch nodes, rings > cap) take the
-        # scalar walk — bit-identical rings either way (the batch kernel's
-        # differential guarantee).
-        comp_fast, rings = _fast_contours_batch(
-            SimpleNamespace(ax=c_ax, ay=c_ay, bx=c_bx, by=c_by),
-            c_bmask, c_fills, c_bounds, rule, clockwise,
+        [c0, c1): one walk_rings call with slot = component (components never
+        share an endpoint: they are connectivity classes over exact
+        endpoints), zero per-slot offsets."""
+        lo, hi = int(bounds[c0]), int(bounds[c1])
+        rings = walk_rings(
+            SimpleNamespace(ax=axv[lo:hi], ay=ayv[lo:hi], bx=bxv[lo:hi], by=byv[lo:hi]),
+            bmask[lo:hi], fills_arr[lo:hi], bounds[c0 : c1 + 1] - lo, rule, clockwise,
             np.zeros(c1 - c0, dtype=np.int64), 0,
         )
-        parts = [rings]
-        slow = np.flatnonzero(~comp_fast).tolist()
-        if slow:
-            all_pa = list(zip(c_ax.tolist(), c_ay.tolist()))
-            all_pb = list(zip(c_bx.tolist(), c_by.tolist()))
-            all_fl = c_fills.tolist()
-            contours, slots = [], []
-            for ci in slow:
-                lo, hi = int(c_bounds[ci]), int(c_bounds[ci + 1])
-                g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
-                walked = walk_contours(None, None, rule, clockwise, c_bmask[lo:hi], g)
-                contours.extend(walked)
-                slots.extend([ci] * len(walked))
-            parts.append(pack_rings(contours, slots))
-        rings, a2 = validate_rings(concat_rings(parts), options)
+        rings, a2 = validate_rings(rings, options)
         return rings._replace(slot=rings.slot + c0), a2
 
     k = max(1, min(int(threads), ncomp))
@@ -399,8 +373,9 @@ def _fused_extract_arrays(
     """Single-task CC + walk + bind FUSION for boundary sets up to the fused
     cap: one task receives the whole boundary set, labels components in-kernel
     (numpy union-find, the same _cc_label_arrays the one-task CC path uses),
-    walks and validates rings via the shared _extract_rings_core and binds
-    them with _bind_rings_table: RINGS_OUT_SCHEMA rows.
+    walks and validates rings via the shared _extract_rings_core (one
+    extract.walk_rings call per thread chunk, any ring length) and binds them
+    with _bind_rings_table: RINGS_OUT_SCHEMA rows.
 
     Vs the broadcast-CC path this removes, per overlay: the edge shuffle to the
     CC task, the node->component broadcast build, the map-side hash join and
@@ -574,12 +549,14 @@ def _wide_node_ids(b: DataFrame) -> DataFrame:
 
 
 def _ring_segments_df(rings: DataFrame) -> DataFrame:
-    """Ring polylines -> normalized non-vertical segments (ring_id, ax, ay, bx, by).
-    Map-side only: edge pairs built inside the array columns (index i paired with
-    (i+1) mod n) then exploded — no window, no shuffle. Vertical segments drop
-    out naturally (the downward-ray test uses the half-open span [ax, bx))."""
+    """Ring polylines -> normalized non-vertical segments (ax, ay, bx, by), each
+    carrying its ring's other columns. Map-side only: edge pairs built inside
+    the array columns (index i paired with (i+1) mod n) then exploded — no
+    window, no shuffle. Vertical segments drop out naturally (the downward-ray
+    test uses the half-open span [ax, bx))."""
+    keys = [c for c in rings.columns if c not in ("pts_x", "pts_y")]
     pairs = rings.where(F.size("pts_x") >= 2).select(
-        "ring_id",
+        *keys,
         F.explode(
             F.expr(
                 "transform(sequence(0, size(pts_x) - 1), i -> struct("
@@ -590,7 +567,7 @@ def _ring_segments_df(rings: DataFrame) -> DataFrame:
         ).alias("e"),
     )
     nxt = pairs.select(
-        "ring_id",
+        *keys,
         F.col("e.p0x").alias("p0x"),
         F.col("e.p0y").alias("p0y"),
         F.col("e.p1x").alias("p1x"),
@@ -598,7 +575,7 @@ def _ring_segments_df(rings: DataFrame) -> DataFrame:
     ).where(F.col("p0x") != F.col("p1x"))
     fwd = F.col("p0x") < F.col("p1x")
     return nxt.select(
-        "ring_id",
+        *keys,
         F.when(fwd, F.col("p0x")).otherwise(F.col("p1x")).alias("ax"),
         F.when(fwd, F.col("p0y")).otherwise(F.col("p1y")).alias("ay"),
         F.when(fwd, F.col("p1x")).otherwise(F.col("p0x")).alias("bx"),
@@ -614,17 +591,20 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
     re-expressed relationally):
       1. hull segments explode into x-bands (bbox cover on x) — map-side;
       2. hole anchors equi-join their band (the only wide shuffle);
-      3. exact integer below-test (cross-multiplied rational, no floats);
-      4. per (hole, hull): crossing parity = containment, max scaled y-below =
-         distance ordering; innermost containing hull = argmax y-below.
-    This merges the reference's "first segment strictly under the anchor" with
-    containment parity, so hole->hole chains resolve without iteration (a hole's
-    innermost CONTAINING HULL is its parent directly).
+      3. exact strictly-below test in DECIMAL(38,0);
+      4. per (hole, hull): crossing parity = containment; the innermost
+         containing hull is the one with the smallest |area2| (ties by ring
+         id).
+    Containing hulls of one overlay's disjoint rings are nested, so the
+    smallest is the innermost, and a hole's innermost CONTAINING HULL is its
+    parent directly: hole->hole chains resolve without iteration.
 
-    Returns (hole_ring_id, shape_id). Holes contained by no hull are dropped
-    (caller decides). Precondition: anchors do not lie exactly on hull segments
-    (guaranteed for disjoint result rings of one overlay)."""
-    segs = _ring_segments_df(hulls.select("ring_id", "pts_x", "pts_y"))
+    hulls: (ring_id, pts_x, pts_y, area2) rows; holes: (ring_id, anchor_x,
+    anchor_y) rows. Returns (hole_ring_id, shape_id). Holes contained by no
+    hull are dropped (caller decides). Precondition: anchors do not lie
+    exactly on hull segments (guaranteed for disjoint result rings of one
+    overlay)."""
+    segs = _ring_segments_df(hulls.select("ring_id", "area2", "pts_x", "pts_y"))
     bounds = segs.agg(
         F.min("ax").alias("x0"), F.max("bx").alias("x1"),
         F.min(F.least("ay", "by")).alias("y0"),
@@ -638,6 +618,7 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
     # products below then scale with the extent, not the offset
     seg_b = segs.select(
         F.col("ring_id").alias("hull_ring_id"),
+        F.abs(F.col("area2").cast("decimal(20,0)")).alias("hull_area"),
         *[(F.col(c) - o).alias(c) for c, o in zip(("ax", "ay", "bx", "by"), (x0, y0) * 2)],
     ).withColumn("band", F.explode(F.expr(f"sequence(ax DIV {band}, bx DIV {band})")))
     anch = holes.select(
@@ -648,35 +629,25 @@ def bind_holes_df(hulls: DataFrame, holes: DataFrame, n_bands: int = 256) -> Dat
     j = anch.join(seg_b, "band").where(
         (F.col("ax") <= F.col("anchor_x")) & (F.col("anchor_x") < F.col("bx"))
     )
-    # exact rational y-at-x: num/den with den = bx-ax > 0; strictly below test is
-    # num < anchor_y * den (int64-safe for extents < 2^30: products <= 2^62)
-    num = F.col("ay") * (F.col("bx") - F.col("ax")) + (F.col("by") - F.col("ay")) * (
-        F.col("anchor_x") - F.col("ax")
-    )
-    den = F.col("bx") - F.col("ax")
-    below = j.withColumn("num", num).withColumn("den", den).where(
-        F.col("num") < F.col("anchor_y") * F.col("den")
-    )
-    # 2^18 fixed-point y-at-x for the innermost ordering (ties broken by ring id).
-    # Overflow-safe decomposition: num can reach coord*den ~ 2^60 for wide grids,
-    # so num*2^18 would overflow — split into floor-quotient and remainder first
-    # (q <= 2^30 -> q*2^18 <= 2^48; r < den <= 2^31 -> r*2^18 < 2^49). pmod keeps
-    # the decomposition floor-consistent (monotone) for negative num.
-    # Parity of crossings = containment.
-    scaled = F.expr(
-        "((num - pmod(num, den)) DIV den) * 262144 + (pmod(num, den) * 262144) DIV den"
+    # strictly below: y-at-x = num / den with den = bx - ax > 0, so the test
+    # is num < anchor_y * den; shifted extents stay below 2^62, so every
+    # product stays below 2^125 and fits DECIMAL(38,0)
+    d = {
+        c: F.col(c).cast("decimal(38,0)")
+        for c in ("ax", "ay", "bx", "by", "anchor_x", "anchor_y")
+    }
+    den = d["bx"] - d["ax"]
+    below = j.where(
+        d["ay"] * den + (d["by"] - d["ay"]) * (d["anchor_x"] - d["ax"]) < d["anchor_y"] * den
     )
     per_hull = (
-        below.groupBy("hole_ring_id", "hull_ring_id")
-        .agg(
-            F.count("*").alias("n_cross"),
-            F.max(scaled).alias("y_below"),
-        )
+        below.groupBy("hole_ring_id", "hull_ring_id", "hull_area")
+        .agg(F.count("*").alias("n_cross"))
         .where(F.col("n_cross") % 2 == 1)
     )
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("hole_ring_id").orderBy(F.desc("y_below"), F.asc("hull_ring_id"))
+    w = Window.partitionBy("hole_ring_id").orderBy("hull_area", "hull_ring_id")
     return (
         per_hull.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

@@ -107,6 +107,38 @@ def assert_flat_matches(jobs, fill_rule, shuffle_seed=None):
             assert got_per_job[j] == want, f"job {j} rule {rule.value}"
 
 
+def test_one_job_batch_runs_on_the_calling_thread(monkeypatch):
+    """A one-job batch takes the tiled kernel (threads=1): a job of 52k
+    segments (two stars, a bar across the first), past the fill's 48k
+    strip-pool bound for threads=None, runs with every thread pool patched to
+    raise and equals the scalar kernel ring for ring."""
+    import concurrent.futures
+
+    from ioverlay_spark.kernel import overlap
+
+    jobs = [([star(0, 0, 10**6, 9 * 10**5, 13_000), rect(-10**5, -50, 2 * 10**5, 100)],
+             [star(2_500_000, 0, 10**6, 9 * 10**5, 13_000)])]
+    g = build_graph(*jobs[0], FillRule.NON_ZERO)
+    want = {}
+    for rule in RULES:
+        shapes, areas = extract_shapes(g.segments, g.fills, rule, DEFAULT_OPTIONS, True)
+        want[rule] = [
+            (s, c, np.asarray(ring).tolist(), int(a))
+            for s, (shape, s_areas) in enumerate(zip(shapes, areas))
+            for c, (ring, a) in enumerate(zip(shape, s_areas))
+        ]
+
+    def no_pool(*args, **kwargs):
+        raise AssertionError("one-job batch started a thread pool")
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", no_pool)
+    monkeypatch.setattr(overlap, "ThreadPoolExecutor", no_pool)
+    P, counts, ring_job, ring_subj, nj = flatten_jobs(jobs)
+    flat = overlay_batch_flat_out(P, counts, ring_job, ring_subj, nj, RULES, FillRule.NON_ZERO)
+    for rule in RULES:
+        assert flat_to_jobs(flat[rule], 1)[0] == want[rule], rule.value
+
+
 @pytest.mark.parametrize("fill_rule", [FillRule.EVEN_ODD, FillRule.NON_ZERO])
 def test_flat_out_random_stars(fill_rule):
     rnd = random.Random(37)

@@ -316,12 +316,12 @@ def test_hole_binding_nested_innermost(spark):
     from ioverlay_spark.operators.distributed_extract import bind_holes_df
 
     def sq(rid, x0, y0, s):
-        return (rid, [x0, x0 + s, x0 + s, x0], [y0, y0, y0 + s, y0 + s])
+        return (rid, [x0, x0 + s, x0 + s, x0], [y0, y0, y0 + s, y0 + s], 2 * s * s)
 
     # hull 1 (big), hull 2 (island inside hull 1's hole), hull 3 (far away)
     hulls = spark.createDataFrame(
         [sq(1, 0, 0, 100), sq(2, 40, 40, 20), sq(3, 1000, 1000, 10)],
-        ["ring_id", "pts_x", "pts_y"],
+        ["ring_id", "pts_x", "pts_y", "area2"],
     )
     holes = spark.createDataFrame(
         [
@@ -610,7 +610,7 @@ def _segments_df(spark, subj, clip):
     [
         "no_marks", "empty", "snap_two_rounds", "checkpoint_dir", "wide_2e40",
         "wide_strips_xor", "wide_strips_intersect", "far_hole_2e53",
-        "far_hole_2e53_salted",
+        "far_hole_2e53_salted", "nested_2e40_salted",
     ],
 )
 def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_path, case):
@@ -626,7 +626,10 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     the one mark form, (_sid, px, py, is_round, col_ovl), at every width.
     far_hole_2e53: a 1,024-square minus its centred 512-square shifted by
     2^53, whose hole must bind on the fused extract and, with the fused cap
-    at 0, on the salted extract's relational binder."""
+    at 0, on the salted extract's relational binder. nested_2e40_salted:
+    a 2^40-extent hull with a hole holding an island with its own hole, XOR
+    on the salted extract, whose binder's below test and innermost pick must
+    stay exact at that width."""
     import ioverlay_spark.operators.distributed as dist
     import ioverlay_spark.operators.distributed_extract as dx
     from ioverlay_spark.options import FillRule, OverlayRule
@@ -658,6 +661,18 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
         rule = OverlayRule.DIFFERENCE
         if case.endswith("salted"):
             monkeypatch.setattr(dx, "_FUSED_EXTRACT_CAP", 0)
+    elif case == "nested_2e40_salted":
+        # nested slope-1 strips inset by k/16 in x and in vertical offset:
+        # 2^40 extents whose area2 still fits LONG
+        S, T = 1 << 40, 1 << 16
+
+        def strip(k):
+            x0, x1, lo, hi = k * S // 16, (16 - k) * S // 16, k * T // 16, (16 - k) * T // 16
+            return [(x0, x0 + lo), (x1, x1 + lo), (x1, x1 + hi), (x0, x0 + hi)]
+
+        subj = [strip(0), strip(6)]
+        clip = [strip(4), strip(7)]
+        monkeypatch.setattr(dx, "_FUSED_EXTRACT_CAP", 0)
     else:
         subj, clip = snap_case(1 << 40 if case == "wide_2e40" else 0)
         if case == "checkpoint_dir":
@@ -674,7 +689,7 @@ def test_distributed_overlay_edge_cases_match_kernel(spark, monkeypatch, tmp_pat
     exp = kernel_rings(subj, clip, rule, FillRule.EVEN_ODD)
     assert ring_multiset(out) == exp
     assert_holes_bound(out)
-    if case in ("no_marks", "empty") or case.startswith("far_hole"):
+    if case in ("no_marks", "empty", "nested_2e40_salted") or case.startswith("far_hole"):
         assert len(rounds) == 1
     else:
         assert len(exp) > 0 and len(rounds) >= 2

@@ -433,103 +433,53 @@ def test_apply_marks_matches_scalar_reference():
         assert canon(_apply_marks(s, marks)) == canon(_apply_marks_ref(s, marks))
 
 
-def _ring_set_contours(rings):
-    """A RingSet as walk_contours-style [(ring_points, is_hole)]."""
-    out, o = [], 0
-    for n, hole in zip(rings.lens.tolist(), rings.hole.tolist()):
-        out.append((list(zip(rings.x[o:o + n].tolist(), rings.y[o:o + n].tolist())), hole))
-        o += n
-    return out
-
-
 def test_fast_walk_contours_matches_scalar():
-    """extract_shapes' vectorized degree-2 fast walk (incl. the list-ranking
-    long-ring branch, rings > 64 points) must be contour-for-contour identical
-    to walk_contours; pinch graphs must fall back (None)."""
-    import numpy as np
-
-    from ioverlay_spark.kernel.extract import _fast_walk_contours, walk_contours
-    from ioverlay_spark.kernel.fill import compute_fills
-    from ioverlay_spark.kernel.segments import Segments, build_segments
-    from ioverlay_spark.kernel.split import split_segments
-    from ioverlay_spark.options import FillRule, OverlayRule
-
-    def compare(segs, fills, rule):
-        fast = _fast_walk_contours(segs, fills, rule, False)
-        walk = walk_contours(segs, fills, rule, False)
-        if fast is None:
-            return None
-        assert _ring_set_contours(fast) == [
-            ([tuple(p) for p in ring], hole) for ring, hole in walk
-        ]
-        return True
+    """walk_rings' vectorized degree-2 walk (incl. the list-ranking long-ring
+    branch, rings > 64 points) and its trigger loop (pinch nodes of random
+    soups) are contour-for-contour identical to the oracle walk of
+    tests/walk_oracle.py, alone and as slots of one batch, on both graph
+    builds (test_walk_rings._check). Fills come from
+    the segment tree (test_wide_fills_match_dense pins tree = dense)."""
+    from test_walk_rings import _cases, _check, _graph
 
     # one long ring (> 64 points: exercises the list-ranking branch)
     t = np.linspace(0, 2 * np.pi, 300, endpoint=False)
     ring = np.stack(
         [np.round(10000 * np.cos(t)), np.round(10000 * np.sin(t))], axis=1
     ).astype(np.int64)
-    segs = split_segments(build_segments([ring], True))
-    assert compare(segs, compute_fills(segs, FillRule.NON_ZERO), OverlayRule.SUBJECT)
-
     # hull + hole
     sq = lambda s: np.array([[-s, -s], [s, -s], [s, s], [-s, s]], dtype=np.int64)
-    segs = split_segments(
-        Segments.concat(
-            [build_segments([sq(100)], True), build_segments([sq(50)[::-1]], True)]
-        )
-    )
-    assert compare(segs, compute_fills(segs, FillRule.NON_ZERO), OverlayRule.SUBJECT)
+    _check(_cases([_graph([ring], []), _graph([sq(100), sq(50)[::-1]], [])],
+                  OverlayRule.SUBJECT), OverlayRule.SUBJECT)
 
-    # degree-4 pinch (XOR corner touch): the round-4 IN-sector involution
-    # serves it vectorized — must match the scalar walk exactly
+    # degree-4 pinch (XOR corner touch): the trigger loop serves it
     a = np.array([[0, 0], [100, 0], [100, 100], [0, 100]], dtype=np.int64)
     b = np.array([[100, 100], [200, 100], [200, 200], [100, 200]], dtype=np.int64)
-    segs = split_segments(
-        Segments.concat([build_segments([a], True), build_segments([b], False)])
-    )
-    assert compare(segs, compute_fills(segs, FillRule.EVEN_ODD), OverlayRule.XOR)
+    _check(_cases([_graph([a], [b], FillRule.EVEN_ODD)], OverlayRule.XOR), OverlayRule.XOR)
 
-    # random soups across rules
+    # random soups across rules and both output orientations
     rng = np.random.default_rng(31)
-    for trial in range(15):
-        mk = lambda npts, span: rng.integers(-span, span, (npts, 2)).astype(np.int64)
-        segs = split_segments(
-            Segments.concat(
-                [
-                    build_segments([mk(int(rng.integers(3, 80)), 300) for _ in range(3)], True),
-                    build_segments([mk(int(rng.integers(3, 80)), 300) for _ in range(2)], False),
-                ]
-            )
-        )
-        fills = compute_fills(segs, FillRule.NON_ZERO)
-        for rule in (OverlayRule.UNION, OverlayRule.INTERSECT, OverlayRule.XOR):
-            compare(segs, fills, rule)
+    mk = lambda npts, span: rng.integers(-span, span, (npts, 2)).astype(np.int64)
+    graphs = [
+        _graph([mk(int(rng.integers(3, 80)), 300) for _ in range(3)],
+               [mk(int(rng.integers(3, 80)), 300) for _ in range(2)])
+        for _ in range(15)
+    ]
+    for rule in (OverlayRule.UNION, OverlayRule.INTERSECT, OverlayRule.XOR):
+        for cw in (False, True):
+            _check(_cases(graphs, rule), rule, cw)
 
 
 def test_fast_walk_pinch_dense_matches_scalar():
-    """Adversarial differential for the round-4 sim-walk path: grid-aligned
-    rect soups (shared corners => degree-4/6/8 pinch nodes on many tiles) and
-    fans of triangles through one point (a single very-high-degree node). The
-    fast walk must serve these withOUT falling back and emit contours
-    bit-identical to walk_contours (reference trigger order included)."""
-    import numpy as np
-
-    from ioverlay_spark.kernel.extract import _fast_walk_contours, walk_contours
-    from ioverlay_spark.kernel.fill import compute_fills
-    from ioverlay_spark.kernel.segments import Segments, build_segments
-    from ioverlay_spark.kernel.split import split_segments
-    from ioverlay_spark.options import FillRule, OverlayRule
-
-    def compare(segs, fills, rule):
-        fast = _fast_walk_contours(segs, fills, rule, False)
-        walk = walk_contours(segs, fills, rule, False)
-        assert fast is not None  # sim path must serve pinch graphs
-        assert _ring_set_contours(fast) == [
-            ([tuple(p) for p in ring], hole) for ring, hole in walk
-        ]
+    """Adversarial differential for walk_rings' trigger loop: grid-aligned
+    rect soups (shared corners => degree-4/6/8 pinch nodes) and fans of
+    triangles through one point (a single very-high-degree node) walk
+    bit-identical to the oracle walk (reference trigger order included),
+    alone and as slots of one batch."""
+    from test_walk_rings import _cases, _check, _graph
 
     rng = np.random.default_rng(20260818)
+    rects = []
     for trial in range(60):
         nr = int(rng.integers(2, 7))
         rs, rc = [], []
@@ -543,19 +493,12 @@ def test_fast_walk_pinch_dense_matches_scalar():
             (rs if i % 2 == 0 else rc).append(r)
         if not rc:
             rc.append(np.array([[0, 0], [25, 0], [25, 25], [0, 25]], dtype=np.int64))
-        segs = split_segments(
-            Segments.concat([build_segments(rs, True), build_segments(rc, False)])
-        )
-        for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO):
-            fills = compute_fills(segs, fr)
-            for rule in (
-                OverlayRule.XOR,
-                OverlayRule.UNION,
-                OverlayRule.INTERSECT,
-                OverlayRule.DIFFERENCE,
-            ):
-                compare(segs, fills, rule)
+        rects += [_graph(rs, rc, fr) for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO)]
+    for rule in (OverlayRule.XOR, OverlayRule.UNION, OverlayRule.INTERSECT,
+                 OverlayRule.DIFFERENCE):
+        _check(_cases(rects, rule), rule)
 
+    fans = []
     for trial in range(20):
         k = int(rng.integers(3, 9))
         ang = np.sort(rng.uniform(0, 2 * np.pi, k))
@@ -566,15 +509,7 @@ def test_fast_walk_pinch_dense_matches_scalar():
                 200 * np.array([np.cos(a0 + 0.3), np.sin(a0 + 0.3)])
             ).astype(np.int64)
             tris.append(np.array([[0, 0], list(p1), list(p2)], dtype=np.int64))
-        segs = split_segments(
-            Segments.concat(
-                [
-                    build_segments(tris[::2], True),
-                    build_segments(tris[1::2] or [tris[0]], False),
-                ]
-            )
-        )
-        for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO):
-            fills = compute_fills(segs, fr)
-            for rule in (OverlayRule.XOR, OverlayRule.UNION):
-                compare(segs, fills, rule)
+        fans += [_graph(tris[::2], tris[1::2] or [tris[0]], fr)
+                 for fr in (FillRule.EVEN_ODD, FillRule.NON_ZERO)]
+    for rule in (OverlayRule.XOR, OverlayRule.UNION):
+        _check(_cases(fans, rule), rule)

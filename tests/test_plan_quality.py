@@ -165,7 +165,8 @@ def test_hole_binding_band_join_is_equi(spark):
     from ioverlay_spark.operators.distributed_extract import bind_holes_df
 
     hulls = spark.createDataFrame(
-        [(1, [0, 100, 100, 0], [0, 0, 100, 100])], ["ring_id", "pts_x", "pts_y"]
+        [(1, [0, 100, 100, 0], [0, 0, 100, 100], 20000)],
+        ["ring_id", "pts_x", "pts_y", "area2"],
     )
     holes = spark.createDataFrame([(10, 50, 50)], ["ring_id", "anchor_x", "anchor_y"])
     df = bind_holes_df(hulls, holes)

@@ -1,0 +1,154 @@
+"""Differential test of kernel.extract.walk_rings against the python trigger
+loop it replaced (tests/walk_oracle.py): exact rings, hole flags and order,
+over one slot and over many slots shifted into disjoint x-tiles, on both
+graph builds (_PY_GRAPH_LINKS patched to 0 sends every graph through the
+numpy node pass, a huge value every graph through the python-built one).
+_check is shared with test_kernel_basic's random-soup and pinch-dense
+differentials; this module keeps the degenerate, long-ring and
+wide-coordinate cases."""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+from walk_oracle import walk_contours
+
+from ioverlay_spark.kernel import extract
+from ioverlay_spark.kernel.extract import boundary_mask, walk_rings
+from ioverlay_spark.kernel.fill import compute_fills_windowed
+from ioverlay_spark.kernel.segments import Segments, build_segments
+from ioverlay_spark.kernel.split import split_segments
+from ioverlay_spark.options import FillRule, OverlayRule
+
+RULES = (OverlayRule.UNION, OverlayRule.INTERSECT, OverlayRule.XOR, OverlayRule.DIFFERENCE)
+
+
+def _contours(rings):
+    out, o = [], 0
+    for n, hole in zip(rings.lens.tolist(), rings.hole.tolist()):
+        out.append((list(zip(rings.x[o:o + n].tolist(), rings.y[o:o + n].tolist())), hole))
+        o += n
+    return out
+
+
+def _check(cases, rule, clockwise=False):
+    """walk_rings over each (segs, fills, mask) case alone and over all cases
+    as slots of one tiled batch equals the oracle's per-case walk, on both
+    graph builds."""
+    want = [walk_contours(s, f, rule, clockwise, mk) for s, f, mk in cases]
+    for links in (0, 1 << 62):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(extract, "_PY_GRAPH_LINKS", links)
+            _check_build(cases, want, rule, clockwise)
+
+
+def _check_build(cases, want, rule, clockwise):
+    for (s, f, mk), w in zip(cases, want):
+        r = walk_rings(s, mk, f, np.array([0, len(s)]), rule, clockwise,
+                       np.zeros(1, dtype=np.int64), 0)
+        assert _contours(r) == w
+    # the batch: case k shifted to x-tile k, y shifted by -y0
+    lo = min((int(s.ax.min()) for s, _, _ in cases if len(s)), default=0)
+    hi = max((int(s.bx.max()) for s, _, _ in cases if len(s)), default=0)
+    W, y0 = hi - lo + 8, -3
+    off = np.arange(len(cases), dtype=np.int64) * W - lo
+    cols = [np.concatenate([getattr(s, c) + (off[k] if c[1] == "x" else -y0)
+                            for k, (s, _, _) in enumerate(cases)])
+            for c in ("ax", "ay", "bx", "by")]
+    n = np.array([len(s) for s, _, _ in cases])
+    starts = np.concatenate([[0], np.cumsum(n)])
+    z = np.zeros(int(starts[-1]), dtype=np.int64)
+    r = walk_rings(
+        Segments(*cols, z, z), np.concatenate([mk for _, _, mk in cases]),
+        np.concatenate([f for _, f, _ in cases]), starts, rule, clockwise, off, y0,
+    )
+    got = _contours(r)
+    slot = r.slot.tolist()
+    assert slot == sorted(slot)
+    for k, w in enumerate(want):
+        assert [c for c, sl in zip(got, slot) if sl == k] == w
+
+
+def _graph(subj, clip, fill_rule=FillRule.NON_ZERO):
+    segs = split_segments(Segments.concat(
+        [build_segments(subj, True), build_segments(clip, False)]
+    ))
+    return segs, compute_fills_windowed(segs, fill_rule)
+
+
+def _cases(graphs, rule):
+    return [(s, f, boundary_mask(f, rule)) for s, f in graphs]
+
+
+def test_degenerate_fills():
+    """Random fills on a crossing soup make boundary sets with dangling
+    degree-1 ends and isolated links (one-point rings, dead ends)."""
+    rng = np.random.default_rng(7)
+    cases = []
+    for _ in range(12):
+        s, _ = _graph([rng.integers(-40, 40, (int(rng.integers(4, 30)), 2))], [])
+        f = rng.integers(0, 16, len(s)).astype(np.uint8)
+        cases.append((s, f, rng.random(len(s)) < 0.6))
+    for rule in RULES:
+        _check(cases, rule)
+    # a lone link and a path: the one-point ring and the dead end
+    lone = Segments(*(np.array(v, dtype=np.int64) for v in
+                      ([0, 5, 6], [0, 0, 1], [3, 6, 9], [4, 1, 3], [1, 1, 1], [0, 0, 0])))
+    f = np.full(3, 1, dtype=np.uint8)
+    _check([(lone, f, np.ones(3, dtype=bool))], OverlayRule.UNION)
+
+
+def test_long_rings_in_a_batch():
+    """300-vertex circles next to small pinch jobs: rings past 256 points in a
+    many-slot batch."""
+    t = np.linspace(0, 2 * np.pi, 300, endpoint=False)
+    circ = lambda r, cx: np.stack(
+        [np.round(cx + r * np.cos(t)), np.round(r * np.sin(t))], axis=1
+    ).astype(np.int64)
+    sq = lambda x, y, s: np.array([[x, y], [x + s, y], [x + s, y + s], [x, y + s]])
+    graphs = [
+        _graph([circ(10000, 0)], [circ(6000, 5000)]),
+        _graph([sq(0, 0, 100)], [sq(100, 100, 100)]),
+        _graph([circ(9000, 0)], []),
+        _graph([sq(0, 0, 100), sq(50, 50, 100)], [sq(25, 25, 100)]),
+    ]
+    for rule in RULES:
+        _check(_cases(graphs, rule), rule)
+
+
+@pytest.mark.parametrize("base", [(1 << 31) - 500, (1 << 41) + 12345])
+def test_wide_coordinates(base):
+    """Coordinates near 2^31 and 2^41 (the packed node key and the int32
+    narrow mode stop at 2^31 spans)."""
+    rng = np.random.default_rng(base % 1000)
+    graphs = []
+    for _ in range(4):
+        rs = []
+        for _ in range(4):
+            x0, y0 = (rng.integers(0, 6, 2) * 40).astype(np.int64)
+            rs.append(np.array([[x0, y0], [x0 + 80, y0], [x0 + 80, y0 + 40], [x0, y0 + 40]]))
+        s, f = _graph(rs[::2], rs[1::2], FillRule.EVEN_ODD)
+        graphs.append((Segments(s.ax, s.ay + base, s.bx, s.by + base, s.subj, s.clip), f))
+    far = np.array([[0, 0], [1 << 32, 0], [1 << 32, 1 << 31], [0, 1 << 31]], dtype=np.int64)
+    graphs.append(_graph([far + base], [far // 2 + base]))
+    for rule in RULES:
+        _check(_cases(graphs, rule), rule)
+
+
+@pytest.mark.parametrize("rot", [0.0, 0.37, 1.1])
+def test_wide_many_vertex_rings(rot):
+    """Regular polygons of 200 and 150 vertices with radii near 2^40: the
+    left-top pick's corner cross products reach ~2^66, past int64."""
+    def ngon(n, r, cx=0):
+        t = rot + np.linspace(0, 2 * np.pi, n, endpoint=False)
+        return np.stack([np.round(cx + r * np.cos(t)), np.round(r * np.sin(t))],
+                        axis=1).astype(np.int64)
+
+    graphs = [
+        _graph([ngon(200, 1 << 40), ngon(150, 1 << 39)[::-1]], []),
+        _graph([ngon(200, 1 << 40)], [ngon(160, 3 << 38, 1 << 39)]),
+        _graph([ngon(130, 1 << 41)], []),
+    ]
+    for rule in RULES:
+        for cw in (False, True):
+            _check(_cases(graphs, rule), rule, cw)
