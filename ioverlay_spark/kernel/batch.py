@@ -66,10 +66,11 @@ _COORD_CAP = 1 << 30  # beyond this, scalar path (object-int math) is required
 
 def _scalar_flat(jobs, rules, fill_rule, options) -> dict:
     """Per-job scalar kernel (build_graph + extract_rings, one slot per job),
-    bound by _bind_flat: {rule: flat tuple}."""
+    bound by _bind_flat: {rule: flat tuple}. It runs inside Spark tasks, so on
+    the calling thread (threads=1) like _tiled_graph."""
     parts: dict = {rule: [] for rule in rules}
     for j, (subj, clip) in enumerate(jobs):
-        g = build_graph(subj, clip, fill_rule, options)
+        g = build_graph(subj, clip, fill_rule, options, threads=1)
         for rule in rules:
             rings, a2 = extract_rings(g.segments, g.fills, rule, options)
             parts[rule].append((rings._replace(slot=np.full(len(a2), j)), a2))

@@ -42,7 +42,11 @@ def build_graph(
     clip: list[np.ndarray],
     fill_rule: FillRule = FillRule.EVEN_ODD,
     options: OverlayOptions = DEFAULT_OPTIONS,
+    threads: int | None = None,
 ) -> OverlayGraph:
+    """Split and fill one job's rings into an OverlayGraph. `threads` goes to
+    the split's pair enumeration and to the fill; None sizes their pools from
+    the host, 1 (callers inside a Spark task) starts none."""
     rings = [np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in subj] + [
         np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in clip
     ]
@@ -72,8 +76,8 @@ def build_graph(
     else:
         ax, ay, bx, by, s, c, _ = t
         segs = Segments(ax, ay, bx, by, s, c)
-    segs = split_segments(segs)  # sorts + merges first (A1/A2), then splits
-    fills = compute_fills_windowed(segs, fill_rule)
+    segs = split_segments(segs, threads=threads)  # sorts + merges first (A1/A2), then splits
+    fills = compute_fills_windowed(segs, fill_rule, threads=threads)
     return OverlayGraph(segs, fills, options)
 
 

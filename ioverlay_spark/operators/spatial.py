@@ -1,13 +1,20 @@
 """DataFrame-native spatial operators over any bigint-id table: deterministic geometry
 derivation, cell covers, point-in-polygon join, tile assignment, kNN.
 
-All builders are pure Column expressions (whole-stage codegen) except the overlay
-kernel; joins are cell-key equi-joins (shuffle hash / broadcast by Catalyst+AQE),
-never theta joins — the pattern that survives 1000-executor scale (SURVEY.md §2.7).
+All builders are pure Column expressions (whole-stage codegen) except the
+broadcast-grid kNN; joins are cell-key equi-joins (shuffle hash / broadcast by
+Catalyst+AQE), never theta joins — the pattern that survives 1000-executor scale
+(SURVEY.md §2.7). knn_broadcast_grid joins nothing: one mapInArrow runs over the
+points' own partitions against a broadcast center grid. Only an exchange-free
+point side with fewer partitions than the context's default parallelism is
+round-robin repartitioned to that many first.
 """
 
 from __future__ import annotations
 
+from collections import namedtuple
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -127,177 +134,162 @@ def rect_centers(rects: DataFrame, level: int = 6) -> DataFrame:
     )
 
 
+KNN_SCHEMA = "p_id long, r_id long, d2 long, rnk long"
+
+# the automatic grid holds at most this many cells: a level-9 table over the
+# whole 2^20 grid
+_KNN_MAX_CELLS = 1 << 18
+# candidate (point, center) pairs one top-k pass materialises at most
+_KNN_CHUNK = 1 << 21
+
+# Centers bucketed by grid cell: cell (gx, gy) of the doubled coordinate x2 is
+# gx = (x2 - x0) >> shift; its centers are rows offs[gx*ny+gy]:offs[gx*ny+gy+1]
+# of (cid, cx2, cy2); rank is each center's position in r_id order.
+KnnGrid = namedtuple("KnnGrid", "x0 y0 shift nx ny offs cid cx2 cy2 rank")
+
+
+def knn_grid(cid, cx2, cy2, level: int | None = None) -> KnnGrid:
+    """Bucket centers (doubled coordinates) into a dense cell grid over their
+    bounding box. Cells are 2^(GRID_BITS - level) wide; unset, `level` is the
+    finest whose grid has at most two cells per center (at most
+    _KNN_MAX_CELLS), so a cell holds one center or two on uniform data."""
+    cid, cx2, cy2 = (np.asarray(a, dtype=np.int64) for a in (cid, cx2, cy2))
+    x0, y0 = (int(a.min()) if len(a) else 0 for a in (cx2, cy2))
+    wx, wy = (int(a.max()) - o if len(a) else 0 for a, o in ((cx2, x0), (cy2, y0)))
+    if level is None:
+        cap = max(1, min(2 * len(cid), _KNN_MAX_CELLS))
+        shift = 0
+        while ((wx >> shift) + 1) * ((wy >> shift) + 1) > cap:
+            shift += 1
+    else:
+        shift = GRID_BITS + 1 - level  # doubled coordinates
+    nx, ny = (wx >> shift) + 1, (wy >> shift) + 1
+    cell = ((cx2 - x0) >> shift) * ny + ((cy2 - y0) >> shift)
+    order = np.argsort(cell, kind="stable")
+    offs = np.zeros(nx * ny + 1, dtype=np.int64)
+    np.cumsum(np.bincount(cell, minlength=nx * ny), out=offs[1:])
+    cid = cid[order]
+    rank = np.empty(len(cid), dtype=np.int64)
+    rank[np.argsort(cid, kind="stable")] = np.arange(len(cid))
+    return KnnGrid(x0, y0, shift, nx, ny, offs, cid, cx2[order], cy2[order], rank)
+
+
+def _ranges(starts, counts):
+    """Concatenated aranges starts[i]:starts[i]+counts[i]."""
+    ends = np.cumsum(counts)
+    return np.arange(ends[-1] if len(ends) else 0) + np.repeat(starts - ends + counts, counts)
+
+
+def knn_batch(g: KnnGrid, p_id, px, py, k: int):
+    """Exact k nearest centers of each point: (p_id, r_id, d2, rnk), d2 the
+    squared distance in doubled coordinates, ties broken by r_id.
+
+    Round h gathers the (2h+1)^2 cell block around each unsettled point's cell
+    (clamped to the grid, so a point outside it starts at the nearest edge
+    cell) and ranks the candidates. Every center outside the block lies more
+    than h cells' width away, so a point is settled once it holds k
+    candidates with the k-th within that width, or once its block covers the
+    grid. h doubles each round; the gather runs in chunks of at most
+    _KNN_CHUNK candidates."""
+    p_id = np.asarray(p_id, dtype=np.int64)
+    px2, py2 = 2 * np.asarray(px, dtype=np.int64), 2 * np.asarray(py, dtype=np.int64)
+    gx = np.clip((px2 - g.x0) >> g.shift, 0, g.nx - 1)
+    gy = np.clip((py2 - g.y0) >> g.shift, 0, g.ny - 1)
+    out = []
+    rb = max(len(g.cid) - 1, 0).bit_length()
+    todo = np.arange(len(px2))
+    h = 1
+    while len(todo):
+        xl, xh = np.maximum(gx[todo] - h, 0), np.minimum(gx[todo] + h, g.nx - 1)
+        yl, yh = np.maximum(gy[todo] - h, 0), np.minimum(gy[todo] + h, g.ny - 1)
+        whole = (xh - xl + 1 == g.nx) & (yh - yl + 1 == g.ny)
+        # the block's rows of cells are contiguous runs of the sorted centers
+        nrow = xh - xl + 1
+        rp = np.repeat(np.arange(len(todo)), nrow)
+        base = _ranges(xl, nrow) * g.ny
+        a, b = g.offs[base + yl[rp]], g.offs[base + yh[rp] + 1]
+        cpp = np.bincount(rp, weights=b - a, minlength=len(todo)).astype(np.int64)
+        rows = np.r_[0, np.cumsum(nrow)]
+        cut = np.searchsorted(np.cumsum(cpp), np.arange(_KNN_CHUNK, int(cpp.sum()), _KNN_CHUNK))
+        settled = np.zeros(len(todo), dtype=bool)
+        safe2 = min((h << g.shift) ** 2, np.iinfo(np.int64).max)
+        for lo, hi in zip(np.r_[0, cut], np.r_[cut, len(todo)]):
+            r0, r1 = rows[lo], rows[hi]
+            cnt = b[r0:r1] - a[r0:r1]
+            pi = np.repeat(rp[r0:r1], cnt)
+            ci = _ranges(a[r0:r1], cnt)
+            tp = todo[pi]
+            d2 = (px2[tp] - g.cx2[ci]) ** 2 + (py2[tp] - g.cy2[ci]) ** 2
+            # one argsort of the packed key (point, d2, r_id rank) when it fits
+            # in 63 bits, else the three-key lexsort
+            rk, db = g.rank[ci], int(d2.max(initial=0)).bit_length()
+            if int(hi - lo).bit_length() + db + rb <= 63:
+                o = np.argsort(((pi - lo) << (db + rb)) | (d2 << rb) | rk)
+            else:
+                o = np.lexsort((rk, d2, pi))
+            pi, ci, d2 = pi[o], ci[o], d2[o]
+            c = cpp[lo:hi]
+            first = np.cumsum(c) - c
+            pos = np.arange(len(pi)) - np.repeat(first, c)
+            kth = np.append(d2, 0)[np.minimum(first + k - 1, len(d2))]
+            settled[lo:hi] = whole[lo:hi] | ((c >= k) & (kth <= safe2))
+            emit = (pos < k) & settled[pi]
+            out.append((p_id[todo[pi[emit]]], g.cid[ci[emit]], d2[emit], pos[emit] + 1))
+        todo = todo[~settled]
+        h *= 2
+    if not out:
+        return [np.empty(0, np.int64)] * 4
+    return [np.concatenate(col) for col in zip(*out)]
+
+
 def knn_broadcast_grid(
     points: DataFrame,
     centers: DataFrame,
     k: int = 3,
     level: int | None = None,
 ) -> DataFrame:
-    """Exact kNN with a BROADCAST center grid — the right physical plan when the
-    center set fits in memory (here ~MBs): centers are bucketed into a sorted cell
-    grid once, broadcast to every executor, and each partition of points answers
-    its queries map-side in vectorized numpy (cell-block gather + ring expansion
-    for stragglers). NO shuffle at all; scales linearly with point partitions.
+    """Exact kNN against a broadcast center grid, for center sets that fit in
+    memory: the driver collects the centers (Arrow), buckets them into a cell
+    grid sized from their bounding box and count (knn_grid), broadcasts it,
+    and one mapInArrow answers each batch of points in numpy (knn_batch).
 
-    centers: (r_id, cx2, cy2) doubled coordinates. Returns (p_id, r_id, d2, rnk).
+    The map runs over the points' own partitions, with no join and no
+    shuffle. Only a point side with fewer partitions than the context's
+    default parallelism (say a one-row-group parquet scan) is first spread by
+    one round-robin repartition to that many; a point side whose plan holds
+    an exchange keeps the partitions it gives.
+
+    points: (p_id, px, py); centers: (r_id, cx2, cy2) doubled coordinates.
+    Returns (p_id, r_id, d2, rnk): each point's k nearest centers (fewer when
+    there are fewer centers), d2 in doubled coordinates, ties broken by r_id.
     """
     from ..session import ship_package
 
-    ship_package(points.sparkSession)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
     spark = points.sparkSession
-    ctr = centers.select("r_id", "cx2", "cy2").toPandas()
-    n_centers = len(ctr)
-    if level is None:
-        level = knn_auto_level(n_centers)
-    shift = GRID_BITS - level
-    n_axis = 1 << level
-    cell_size = 1 << shift
-
-    c_id = ctr["r_id"].to_numpy(np.int64)
-    c_x2 = ctr["cx2"].to_numpy(np.int64)
-    c_y2 = ctr["cy2"].to_numpy(np.int64)
-    c_cell = (c_x2 >> (shift + 1)) * n_axis + (c_y2 >> (shift + 1))
-    order = np.argsort(c_cell, kind="stable")
-    c_id, c_x2, c_y2, c_cell = c_id[order], c_x2[order], c_y2[order], c_cell[order]
-    # CSR offsets over the dense cell space
-    starts = np.searchsorted(c_cell, np.arange(n_axis * n_axis, dtype=np.int64), side="left")
-    ends = np.searchsorted(c_cell, np.arange(n_axis * n_axis, dtype=np.int64), side="right")
-    bc = spark.sparkContext.broadcast((c_id, c_x2, c_y2, starts, ends))
+    ship_package(spark)
+    ctr = centers.select(*(F.col(c).cast("long") for c in ("r_id", "cx2", "cy2"))).toArrow()
+    grid = knn_grid(*(ctr.column(i).to_numpy() for i in range(3)), level)
+    bc = spark.sparkContext.broadcast(grid)
 
     def kernel(batches):
+        import pyarrow as pa
+
         from .. import zipcache  # noqa: F401  (package import installs it in the worker)
 
-        cid, cx2, cy2, st, en = bc.value
+        g = bc.value
+        for batch in batches:
+            cols = knn_batch(g, *(batch.column(i).to_numpy() for i in range(3)), k)
+            yield pa.RecordBatch.from_arrays(cols, names=["p_id", "r_id", "d2", "rnk"])
 
-        def gather_block(pcx, pcy, h):
-            """candidate (point_idx, center_idx) pairs for (2h+1)^2 blocks."""
-            pi_list, ci_list = [], []
-            for dx in range(-h, h + 1):
-                qx = pcx + dx
-                okx = (qx >= 0) & (qx < n_axis)
-                for dy in range(-h, h + 1):
-                    qy = pcy + dy
-                    ok = okx & (qy >= 0) & (qy < n_axis)
-                    cells = np.where(ok, qx * n_axis + qy, 0)
-                    s = np.where(ok, st[cells], 0)
-                    e = np.where(ok, en[cells], 0)
-                    cnt = e - s
-                    tot = int(cnt.sum())
-                    if tot == 0:
-                        continue
-                    pi = np.repeat(np.arange(len(pcx)), cnt)
-                    # ragged slice gather: for each point, centers s[i]:e[i]
-                    ci = np.repeat(s, cnt) + (
-                        np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    )
-                    pi_list.append(pi)
-                    ci_list.append(ci)
-            if not pi_list:
-                return (np.empty(0, np.int64), np.empty(0, np.int64))
-            return np.concatenate(pi_list), np.concatenate(ci_list)
-
-        for pdf in batches:
-            p_id = pdf["p_id"].to_numpy(np.int64)
-            px2 = 2 * pdf["px"].to_numpy(np.int64)
-            py2 = 2 * pdf["py"].to_numpy(np.int64)
-            pcx = (px2 >> (shift + 1)).astype(np.int64)
-            pcy = (py2 >> (shift + 1)).astype(np.int64)
-            m = len(p_id)
-            out_p, out_r, out_d = [], [], []
-            todo = np.arange(m)
-            h = 1
-            while len(todo) and h < n_axis:
-                pi, ci = gather_block(pcx[todo], pcy[todo], h)
-                settled_mask = np.zeros(len(todo), dtype=bool)
-                if len(pi):
-                    d2 = (px2[todo][pi] - cx2[ci]) ** 2 + (py2[todo][pi] - cy2[ci]) ** 2
-                    # per-point top-k via lexsort on (point, d2, center id)
-                    so = np.lexsort((cid[ci], d2, pi))
-                    pi_s, ci_s, d2_s = pi[so], ci[so], d2[so]
-                    # rank within point groups
-                    grp_start = np.flatnonzero(
-                        np.concatenate(([True], pi_s[1:] != pi_s[:-1]))
-                    )
-                    rank = np.arange(len(pi_s)) - np.repeat(
-                        grp_start, np.diff(np.concatenate((grp_start, [len(pi_s)])))
-                    )
-                    topk = rank < k
-                    # settle: count per point >= k and k-th distance <= (h*cell)^2
-                    safe2 = (2 * cell_size * h) ** 2
-                    cnt_pp = np.bincount(pi_s, minlength=len(todo))
-                    kth = np.full(len(todo), np.iinfo(np.int64).max, dtype=np.int64)
-                    kth_rows = topk & (
-                        rank == np.minimum(cnt_pp[pi_s] - 1, k - 1)
-                    )
-                    kth[pi_s[kth_rows]] = d2_s[kth_rows]
-                    settled_mask = (cnt_pp >= k) & (kth <= safe2)
-                    emit = topk & settled_mask[pi_s]
-                    out_p.append(p_id[todo][pi_s[emit]])
-                    out_r.append(cid[ci_s[emit]])
-                    out_d.append(d2_s[emit])
-                todo = todo[~settled_mask]
-                h *= 2
-            if len(todo):
-                # brute against all centers for the stragglers
-                for t in todo:
-                    d2 = (px2[t] - cx2) ** 2 + (py2[t] - cy2) ** 2
-                    so = np.lexsort((cid, d2))[: min(k, len(cid))]
-                    out_p.append(np.full(len(so), p_id[t], dtype=np.int64))
-                    out_r.append(cid[so])
-                    out_d.append(d2[so])
-            if out_p:
-                op = np.concatenate(out_p)
-                orr = np.concatenate(out_r)
-                od = np.concatenate(out_d)
-                so = np.lexsort((orr, od, op))
-                op, orr, od = op[so], orr[so], od[so]
-                gs = np.flatnonzero(np.concatenate(([True], op[1:] != op[:-1])))
-                rnk = (
-                    np.arange(len(op))
-                    - np.repeat(gs, np.diff(np.concatenate((gs, [len(op)]))))
-                    + 1
-                )
-                yield pd.DataFrame(
-                    {"p_id": op, "r_id": orr, "d2": od, "rnk": rnk.astype(np.int64)}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "p_id": pd.Series([], dtype="int64"),
-                        "r_id": pd.Series([], dtype="int64"),
-                        "d2": pd.Series([], dtype="int64"),
-                        "rnk": pd.Series([], dtype="int64"),
-                    }
-                )
-
-    schema = StructType(
-        [
-            StructField("p_id", LongType()),
-            StructField("r_id", LongType()),
-            StructField("d2", LongType()),
-            StructField("rnk", LongType()),
-        ]
-    )
-    try:
-        n_in = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_in = 64
-    return points.repartition(n_in).mapInPandas(kernel, schema=schema)
-
-
-def knn_auto_level(n_centers: int, target_per_cell: int = 8) -> int:
-    """Cell level so that ~target_per_cell centers land per occupied cell.
-
-    Centers span [0, 2^19) per axis (a quarter of the 2^20 grid per axis), so the
-    occupied cell count at `level` is (2^level / 2)^2."""
-    import math
-
-    level = round(math.log2(max(n_centers, 1) / target_per_cell) / 2) + 1
-    return max(3, min(9, level))
+    pts = points.select(*(F.col(c).cast("long") for c in ("p_id", "px", "py")))
+    n = spark.sparkContext.defaultParallelism
+    # counting the partitions of a plan with an exchange would run its stages
+    # now (AQE plans them by running them), so such a side keeps the
+    # partitions it gives; other plans count theirs without running a job
+    exchange = "Exchange" in pts._jdf.queryExecution().executedPlan().toString()
+    if not exchange and pts.rdd.getNumPartitions() < n:
+        pts = pts.repartition(n)
+    return pts.mapInArrow(kernel, schema=KNN_SCHEMA)
 
 
 def knn_cell_ring(

@@ -139,6 +139,39 @@ def test_one_job_batch_runs_on_the_calling_thread(monkeypatch):
         assert flat_to_jobs(flat[rule], 1)[0] == want[rule], rule.value
 
 
+def test_past_cap_job_runs_on_the_calling_thread(monkeypatch):
+    """A job with coordinates past the tiled kernel's 2^30 cap takes the
+    per-job scalar fallback inside the batch kernel, which also runs on the
+    calling thread: the two-star job above, moved to 2^31, runs with every
+    thread pool patched to raise and equals build_graph + extract_shapes."""
+    import concurrent.futures
+
+    from ioverlay_spark.kernel import overlap
+
+    d = 1 << 31
+    jobs = [([star(d, d, 10**6, 9 * 10**5, 13_000), rect(d - 10**5, d - 50, 2 * 10**5, 100)],
+             [star(d + 2_500_000, d, 10**6, 9 * 10**5, 13_000)])]
+    g = build_graph(*jobs[0], FillRule.NON_ZERO)
+    want = {}
+    for rule in RULES:
+        shapes, areas = extract_shapes(g.segments, g.fills, rule, DEFAULT_OPTIONS, True)
+        want[rule] = [
+            (s, c, np.asarray(ring).tolist(), int(a))
+            for s, (shape, s_areas) in enumerate(zip(shapes, areas))
+            for c, (ring, a) in enumerate(zip(shape, s_areas))
+        ]
+
+    def no_pool(*args, **kwargs):
+        raise AssertionError("past-cap batch started a thread pool")
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", no_pool)
+    monkeypatch.setattr(overlap, "ThreadPoolExecutor", no_pool)
+    P, counts, ring_job, ring_subj, nj = flatten_jobs(jobs)
+    flat = overlay_batch_flat_out(P, counts, ring_job, ring_subj, nj, RULES, FillRule.NON_ZERO)
+    for rule in RULES:
+        assert flat_to_jobs(flat[rule], 1)[0] == want[rule], rule.value
+
+
 @pytest.mark.parametrize("fill_rule", [FillRule.EVEN_ODD, FillRule.NON_ZERO])
 def test_flat_out_random_stars(fill_rule):
     rnd = random.Random(37)

@@ -49,14 +49,29 @@ def test_knn_broadcast_grid_has_no_join_or_shuffle(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    pts = derive_points(docs, "doc_id")
     ctr = rect_centers(derive_rects(docs, "doc_id")).select("r_id", "cx2", "cy2")
-    df = knn_broadcast_grid(pts, ctr, k=3)
-    p = plan_str(df)
-    # the center grid travels as an sc.broadcast inside the python kernel — the
-    # Spark plan itself must contain no join and no shuffle exchange
+    n = spark.sparkContext.defaultParallelism
+
+    # the center grid travels as an sc.broadcast inside one Arrow map over the
+    # points' own partitions: no join and no exchange
+    spread = derive_points(spark.range(0, 4096, 1, n), "id")
+    p = plan_str(knn_broadcast_grid(spread, ctr, k=3))
     assert "Join" not in p
-    assert "Exchange" not in p or "rangepartitioning" not in p.lower()
+    assert "MapInArrow" in p and "MapInPandas" not in p
+    assert "Exchange" not in p
+
+    # a one-partition point side is spread by exactly one round-robin exchange
+    one = derive_points(spark.range(0, 4096, 1, 1), "id")
+    p = plan_str(knn_broadcast_grid(one, ctr, k=3))
+    assert "Join" not in p
+    assert "MapInArrow" in p and "MapInPandas" not in p
+    assert p.count("Exchange") == 1 and p.count(f"RoundRobinPartitioning({n})") == 1
+
+    # a point side that ends in a shuffle keeps its partitions: no exchange is added
+    ids = spark.range(0, 4096, 1, 2).selectExpr("id % 1000 AS id").distinct()
+    shuffled = derive_points(ids, "id")
+    p = plan_str(knn_broadcast_grid(shuffled, ctr, k=3))
+    assert p.count("Exchange") == 1 and "RoundRobinPartitioning" not in p
 
 
 def test_overlay_rows_zero_shuffle(spark):
