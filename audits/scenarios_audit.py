@@ -9,7 +9,7 @@ same size, one hull-width to the right: the scalar overlay() clusters it into
 two jobs and runs the batch kernel, so the row times the batch fill on one
 big tile) and lines_net_xor (n vertical x n horizontal strips of width 10 at
 spacing 20, XOR: one tile whose every strip crossing is a degree-4 node, the
-contour trigger loop's largest single-tile case; no reference number).
+vectorized junction walk's largest single-tile case; no reference number).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
@@ -18,7 +18,7 @@ Usage:
     python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
     python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
     python audits/scenarios_audit.py hull_holes_far 64 128  # batch kernel, one big tile
-    python audits/scenarios_audit.py lines_net_xor 128 256  # trigger loop, one tile
+    python audits/scenarios_audit.py lines_net_xor 128 256  # junction walk, one tile
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that

@@ -27,9 +27,10 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
   fill (A10)    — fill.compute_fills_windowed over the whole tiled batch
                   (threads=1): the scalar kernel's segment-tree fill
   extract       — extract.walk_rings over the whole batch per rule (the vectorized
-                  degree-2 walk for plain tiles, the python trigger loop for tiles
-                  with junctions or dangling ends), one extract.validate_rings
-                  pass (A20) and the flat hole binding
+                  cycle walk for every tile it proves, junction tiles included;
+                  the python trigger loop for tiles with dangling ends,
+                  zero-length links or a left-top pick among several links), one
+                  extract.validate_rings pass (A20) and the flat hole binding
 """
 
 from __future__ import annotations

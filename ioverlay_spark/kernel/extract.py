@@ -11,9 +11,10 @@ Faithful re-derivation of the reference's extraction semantics:
   rotation depends on hole/hull and output direction
   (iOverlay/src/core/extract.rs:479-583, iOverlay/src/core/nearest_vector.rs) — this is
   what merges region boundaries into self-touching contours at pinch nodes, matching the
-  golden fixtures. walk_rings is the one walk: a vectorized degree-2 walk for slots
-  whose boundary is plain cycles, one python trigger loop over the flat _LinkGraph
-  for every other slot;
+  golden fixtures. walk_rings is the one walk: a vectorized cycle walk that pairs
+  the links at every node, junctions included, by next_link's own rotation, and one
+  python trigger loop over a flat _LinkGraph for the slots it cannot prove (dangling
+  ends, zero-length links, left-top picks among several links);
 - hole binding via the left-bottom anchor and the nearest segment strictly below
   (iOverlay/src/bind/solver.rs:25-236): one vectorized ray shot per anchor on the
   fill's segment tree, hole->hole parents resolved by pointer jumping.
@@ -35,6 +36,7 @@ from .fill import (
     segtree_below,
     segtree_build,
 )
+from .cluster import _cc_label_arrays
 from .segments import Segments
 
 
@@ -431,15 +433,18 @@ def walk_rings(segs, mask, fills, starts, rule: OverlayRule, clockwise: bool,
     (by slot, then trigger order), in slot coordinates (x - off[slot],
     y + y0).
 
-    A slot whose boundary graph has only degree-2 nodes, no node met twice by
-    one link, is a disjoint set of cycles: the walk is forced at every step,
-    only the start link (min id), the left-top pick and the direction bit need
-    the reference rules, and those vectorize, at any ring length. Every other
-    slot (junctions of degree > 2, dangling degree-1 ends, same-link nodes)
-    runs the python trigger loop over the node pass's CSR incidence: there the
-    walk is history-dependent (next_link's rotation is the ring's own
-    direction and both scans filter by visited). Graphs under
-    _PY_GRAPH_LINKS links take the trigger loop whole."""
+    next_link turns to the link adjacent to the incoming one in the ring's
+    rotation whenever that link is still unvisited, so a walk that never
+    meets a visited neighbour follows a static successor, junctions
+    included: _cycle_walk builds it for both rotations, keeps the cycles the
+    trigger loop would start in their own rotation and walks them all
+    vectorized, at any ring length, for every slot where it can prove the
+    trigger loop walks exactly those cycles. The other slots (zero-length
+    links, two links leaving a node in one direction, dangling ends, odd
+    degrees, a walk that would meet a visited neighbour, a ring start with
+    more than one link after it at its a-node) run the python trigger loop
+    over a _LinkGraph of their own links. Graphs under _PY_GRAPH_LINKS links
+    take the trigger loop whole."""
     pos = np.flatnonzero(mask)
     m = len(pos)
     if m == 0:
@@ -449,41 +454,24 @@ def walk_rings(segs, mask, fills, starts, rule: OverlayRule, clockwise: bool,
     hole_at = rule_inside((lfill & SUBJ_TOP) != 0, (lfill & CLIP_TOP) != 0, rule)
     link_slot = np.searchsorted(starts, pos, side="right") - 1
     if m < _PY_GRAPH_LINKS:
-        g = link_graph(lax, lay, lbx, lby)
-        loop = np.unique(link_slot)
-        rings = _trigger_loop(g, _slot_spans(link_slot, loop), hole_at.tolist(), clockwise)
+        parts, sel = [], np.arange(m)
     else:
-        inv, order, ends, mnx, mny, narrow = _node_pass(lax, lay, lbx, lby)
-        first = _csr_first(inv)
-        # the two entries of every degree-2 node; a node met twice by one
-        # link is no cycle step
-        odd = np.diff(first) != 2
-        nodes2 = np.flatnonzero(~odd)
-        p0, p1 = order[first[nodes2]], order[first[nodes2] + 1]
-        same = (p0 >> 1) == (p1 >> 1)
-        odd[nodes2[same]] = True
-        p0, p1 = p0[~same], p1[~same]
-        loop_slot = np.zeros(len(starts) - 1, dtype=bool)
-        loop_slot[link_slot[np.flatnonzero(odd[inv]) >> 1]] = True
-        plain = ~loop_slot[link_slot]
-        parts = []
-        if plain.any():
-            parts.append(_cycle_walk(
-                lax, lay, lbx, lby, hole_at, link_slot, plain, inv, order, ends,
-                first, p0, p1, mnx, mny, narrow, clockwise,
-            ))
-        loop = np.flatnonzero(loop_slot)
-        if len(loop):
-            g = _pass_graph(lax.tolist(), lay.tolist(), lbx.tolist(), lby.tolist(),
-                            inv, order, ends, first)
-            parts.append(_trigger_loop(
-                g, _slot_spans(link_slot, loop), hole_at.tolist(), clockwise
-            ))
-        rings = parts[0]
-        if len(parts) > 1:
-            rings = take_rings(concat_rings(parts), np.argsort(
-                np.concatenate([p.slot for p in parts]), kind="stable"
-            ))
+        rings, loop_slot = _cycle_walk(
+            lax, lay, lbx, lby, hole_at, link_slot, len(starts) - 1, clockwise
+        )
+        parts, sel = [rings], np.flatnonzero(loop_slot[link_slot])
+    if len(sel):
+        # the loop slots' links, contiguous per slot
+        ls = link_slot[sel]
+        g = link_graph(lax[sel], lay[sel], lbx[sel], lby[sel])
+        parts.append(_trigger_loop(
+            g, _slot_spans(ls, np.unique(ls)), hole_at[sel].tolist(), clockwise
+        ))
+    rings = parts[0]
+    if len(parts) > 1:
+        rings = take_rings(concat_rings(parts), np.argsort(
+            np.concatenate([p.slot for p in parts]), kind="stable"
+        ))
     return rings._replace(
         x=rings.x - np.repeat(off[rings.slot], rings.lens), y=rings.y + y0
     )
@@ -496,72 +484,157 @@ def _slot_spans(link_slot, slots):
     return zip(slots.tolist(), lo, hi)
 
 
-def _cycle_walk(lax, lay, lbx, lby, hole_at, link_slot, plain, inv, order, ends,
-                first, p0, p1, mnx, mny, narrow, clockwise) -> RingSet:
-    """walk_rings' vectorized walk of the plain slots' cycles (links where
-    plain): rings in tiled coordinates, by slot, then start link."""
+def _doubling_rounds(n: int) -> int:
+    """Pointer-doubling rounds that reach every element of an n-element
+    cycle."""
+    return max(n - 1, 1).bit_length() + 1
+
+
+def _cycle_walk(lax, lay, lbx, lby, hole_at, link_slot, nslots, clockwise):
+    """walk_rings' vectorized walk: (the rings of the slots it proves, in
+    tiled coordinates, by slot then start link; a per-slot bool, True for
+    the slots left to the trigger loop).
+
+    Directed edge e = 2*link + end arrives at the node of that link end (the
+    node pass's entry e). rot_cw[e] / rot_ccw[e] is the entry adjacent to e
+    at its node, clockwise / counter-clockwise, in exact angle order of the
+    links' directions out of the node (the partner at a degree-2 node); the
+    successor of e in rotation c is rot_c[e] ^ 1, out along the adjacent
+    link. Reversed, the clockwise cycles are the counter-clockwise ones, so
+    one labelling (each cycle's min directed id) names both: a ccw cycle by
+    the cw label of its reversed edges.
+
+    The trigger loop starts a ring at the min unvisited link s, picks the
+    left-top link at s's a-node and walks its rotation d. For each cycle-min
+    link s this computes that pick among s and the links after it at the
+    node (every link below s is visited by then), and s is a valid start
+    when at most one link follows s there and the d cycle through the pick
+    has min link s. A slot is proven when the kept starts' cycles hold each
+    of its links exactly once. Then, start by start, the trigger loop
+    starts at exactly the kept starts in min-link order: a pick's other
+    link, when it wins, lies on s's own cycle and is still unvisited, and
+    each next_link step finds the adjacent link unvisited, as it lies
+    further on the ring being walked."""
     m = len(lax)
+    inv, order, ends, mnx, mny, narrow = _node_pass(lax, lay, lbx, lby)
+    first = _csr_first(inv)
     idt = inv.dtype.type
-    a_node = np.ascontiguousarray(inv[0::2])
-    b_node = np.ascontiguousarray(inv[1::2])
-    # directed edges: id = 2*link + bit, bit=0 -> to_node = a_node, bit=1 ->
-    # b_node. A directed edge's id IS its link's entry id at its to_node, so
-    # the degree-2 successor is partner ^ 1 (continue out the partner's other
-    # end); entries at other nodes keep a harmless self-partner (their slots
-    # take the trigger loop).
-    partner = np.arange(2 * m, dtype=idt)
-    partner[p0] = p1.astype(idt, copy=False)
-    partner[p1] = p0.astype(idt, copy=False)
     ids = np.arange(2 * m, dtype=idt)
-    dlink = ids >> 1
-    to_node = np.where((ids & 1) == 1, b_node[dlink], a_node[dlink])
-    perm = partner ^ idt(1)
-
-    # cycle labeling: min link id reachable (pointer doubling)
-    val = dlink.copy()
-    p = perm.copy()
-    for _ in range(int(np.ceil(np.log2(max(2 * m, 2)))) + 1):
-        val = np.minimum(val, val[p])
-        p = p[p]
-    # ring length per start = (#directed ids with this label) / 2
-    counts = np.bincount(val, minlength=m)
-    s = np.flatnonzero(counts).astype(idt, copy=False)  # labels are link ids
-    s = s[plain[s]]
-    lens = (counts[s] // 2).astype(np.int64)
-    nrings = len(s)
-
-    # left-top pick at the start link (degree-2 specialization of
-    # left_top_link). The scan is ORDER-DEPENDENT: with incidence order
-    # [start, o] the result is o iff c1 >= 0; with [o, start] the scan may
-    # flip to o (c1 >= 0) and then back to start (c2 >= 0), so the result is
-    # o iff c1 >= 0 and c2 < 0. c1 = cross(b_s - a_s, b_o - a_s) tests o
-    # against o. Spans under 2^31 (narrow) keep the products under 2^62;
-    # wider spans take python ints, O(rings).
-    e = first[a_node[s]]
-    l0, l1 = order[e] >> 1, order[e + 1] >> 1
-    first_is_start = l0 == s
-    o_at = np.where(first_is_start, l1, l0)
+    a_node = inv[0::2]
+    b_node = inv[1::2]
+    loop_slot = np.zeros(nslots, dtype=bool)
+    loop_slot[link_slot[a_node == b_node]] = True
     wide = (lambda v: v) if narrow else (lambda v: v.astype(object))
+
+    # rotations: a degree-2 node's two entries pair up; every other node's
+    # entries take their exact angle order (half plane, then cross sign),
+    # sorted by a float angle and checked pair by pair in exact arithmetic
+    deg = np.diff(first)
+    node_s = inv[order]
+    two = deg[node_s] == 2
+    e2 = order[two]
+    rot_cw = ids.copy()
+    rot_cw[e2[0::2]] = e2[1::2]
+    rot_cw[e2[1::2]] = e2[0::2]
+    rot_ccw = rot_cw.copy()
+    jp = np.flatnonzero(~two)
+    junction_slot = np.zeros(nslots, dtype=bool)
+    if len(jp):
+        ej, nj = order[jp], node_s[jp]
+        junction_slot[link_slot[ej >> 1]] = True
+        lj, rev = ej >> 1, (ej & 1) == 1
+        dx = wide(lbx[lj]) - wide(lax[lj])
+        dy = wide(lby[lj]) - wide(lay[lj])
+        dx, dy = np.where(rev, -dx, dx), np.where(rev, -dy, dy)
+        half = ((dy < 0) | ((dy == 0) & (dx < 0))).astype(bool)
+        ang = np.arctan2(dy.astype(np.float64), dx.astype(np.float64))
+        k = np.lexsort((np.where(ang < 0, ang + 2 * np.pi, ang), half, nj))
+        ej, dx, dy, half = ej[k], dx[k], dy[k], half[k]
+        pair = (nj[1:] == nj[:-1]) & (half[1:] == half[:-1])
+        cr = dx[:-1] * dy[1:] - dy[:-1] * dx[1:]
+        loop_slot[link_slot[ej[1:][pair & (cr <= 0).astype(bool)] >> 1]] = True
+        i = np.arange(len(ej))
+        gs = i - (jp - first[nj])  # each entry's node group start in ej
+        last = gs + deg[nj] - 1
+        rot_ccw[ej] = ej[np.where(i == last, gs, i + 1)]
+        rot_cw[ej] = ej[np.where(i == gs, last, i - 1)]
+
+    # cycle labelling: each directed edge's min directed id along its
+    # clockwise cycle, by pointer doubling. A round that changes no label
+    # ends it: each label is then constant along its 2^k-jump orbit, whose
+    # 2^k-windows tile the cycle, so it is the cycle's min.
+    val = ids.copy()
+    p = rot_cw ^ idt(1)
+    for _ in range(_doubling_rounds(2 * m)):
+        nv = np.minimum(val, val[p])
+        if np.array_equal(nv, val):
+            break
+        val = nv
+        p = p[p]
+
+    # every cycle-min link s: the left-top pick among s and the links after
+    # it at its a-node (c1 tests o against s, which comes first in the
+    # incidence order), the ring's rotation d and its first directed edge
+    is_min = np.zeros(m, dtype=bool)
+    is_min[val >> 1] = True
+    s = np.flatnonzero(is_min).astype(idt, copy=False)
+    epos = np.empty(2 * m, dtype=idt)
+    epos[order] = ids
+    at_end = first[a_node[s] + 1] - 1
+    after = at_end - epos[2 * s]
+    o = (order[at_end] >> 1).astype(idt, copy=False)
     sax, say, sbx, sby = (wide(v[s]) for v in (lax, lay, lbx, lby))
-    oax, oay, obx, oby = (wide(v[o_at]) for v in (lax, lay, lbx, lby))
-    c1 = (sbx - sax) * (oby - say) - (sby - say) * (obx - sax)
-    c2 = (obx - oax) * (sby - oay) - (oby - oay) * (sbx - oax)
-    top = np.where(np.where(first_is_start, c1 >= 0, (c1 >= 0) & (c2 < 0)), o_at, s)
-    hole = hole_at[top]
-    d = hole == clockwise
-    # first ring point + starting directed edge
+    c1 = (sbx - sax) * (wide(lby[o]) - say) - (sby - say) * (wide(lbx[o]) - sax)
+    top = np.where((after == 1) & (c1 >= 0), o, s)
+    d = hole_at[top] == clockwise
+    cur = np.where(d, 2 * top, 2 * top + 1)
+    cyc = np.where(d, val[cur], val[cur ^ 1])
+    valid = (after <= 1) & ((cyc >> 1) == s)
+    # the trigger loop's starts: rings that share a node pair its links in
+    # one rotation, so every ring of a connected component takes the
+    # rotation picked at the component's min link, where its first ring
+    # starts. Components join the two directions' cw cycles of each link;
+    # a slot without junctions has one cycle per component.
+    kept = valid
+    jl = np.flatnonzero(junction_slot[link_slot])
+    if len(jl):
+        nodes, parent = _cc_label_arrays(val[2 * jl], val[2 * jl + 1])
+        js = np.flatnonzero(junction_slot[link_slot[s]])
+        cmin = nodes[parent[np.searchsorted(nodes, val[2 * s[js]])]] >> 1
+        d_at = np.zeros(m, dtype=bool)
+        d_at[s] = d
+        kept = valid.copy()
+        kept[js] &= d[js] == d_at[cmin]
+    kept_cw = np.zeros(2 * m, dtype=bool)
+    kept_cw[cyc[kept & d]] = True
+    kept_ccw = np.zeros(2 * m, dtype=bool)
+    kept_ccw[cyc[kept & ~d]] = True
+
+    # each link's kept directed edge: cw cycles hold it as labelled, ccw
+    # cycles as the reverse of the labelled edge
+    v0, v1 = val[0::2], val[1::2]
+    t0, t1, f0, f1 = kept_cw[v0], kept_cw[v1], kept_ccw[v0], kept_ccw[v1]
+    cover = t0.astype(np.int8) + t1 + f0 + f1
+    loop_slot[link_slot[cover != 1]] = True
+    ok = kept & ~loop_slot[link_slot[s]]
+    s, top, d, cyc = s[ok], top[ok], d[ok], cyc[ok]
+    nrings = len(s)
+    if nrings == 0:
+        return _NO_RINGS, loop_slot
+    lens = np.bincount(val, minlength=2 * m)[cyc].astype(np.int64)
+    links = np.arange(m, dtype=idt)
+    e = 2 * links + (t1 | f0)
+    nxt = (np.where(t0 | t1, rot_cw[e], rot_ccw[e]) >> 1).astype(idt, copy=False)
+    to_node = inv[e]
     first_node = np.where(d, b_node[top], a_node[top])
-    cur = np.where(d, 2 * top + 0, 2 * top + 1)  # toward a_node when d
     L_max = int(lens.max())
 
     # node point lookup; narrow mode stores coordinates relative to (mnx, mny)
     # in int32
     cdt = np.int32 if narrow else np.int64
-    n_nodes = len(first) - 1
-    node_x = np.empty(n_nodes, dtype=cdt)
-    node_y = np.empty(n_nodes, dtype=cdt)
-    node_x[inv] = ends[:, 0] - (mnx if narrow else 0)
-    node_y[inv] = ends[:, 1] - (mny if narrow else 0)
+    e0 = order[first[:-1]]  # one entry per node
+    node_x = (ends[:, 0][e0] - (mnx if narrow else 0)).astype(cdt)
+    node_y = (ends[:, 1][e0] - (mny if narrow else 0)).astype(cdt)
 
     if L_max <= 64:
         # short rings (the common batch shape): per-step column writes into a
@@ -570,52 +643,51 @@ def _cycle_walk(lax, lay, lbx, lby, hole_at, link_slot, plain, inv, order, ends,
         buf_y = np.empty((nrings, L_max), dtype=cdt)
         buf_x[:, 0] = node_x[first_node]
         buf_y[:, 0] = node_y[first_node]
+        cl = top
         for step in range(1, L_max):
-            tn = to_node[cur]
+            tn = to_node[cl]
             buf_x[:, step] = node_x[tn]
             buf_y[:, step] = node_y[tn]
-            cur = perm[cur]
+            cl = nxt[cl]
         pm = np.arange(L_max) < lens[:, None]
         x, y = buf_x[pm], buf_y[pm]
     else:
         # LONG rings (e.g. one 400k-point spiral ring): the per-step loop
-        # would run L_max iterations, so compute each directed edge's RANK
-        # from its ring's start edge by pointer-doubling list ranking
-        # (O(m log m) vectorized) and scatter points straight to CSR. Ranks
-        # follow the INVERSE permutation from each edge back to its ring's
-        # absorbing start edge; the reverse-direction orbit of a ring shares
-        # its label but never reaches the absorbing edge, so its ranks blow
-        # past the ring length and the <= L-2 filter drops it.
+        # would run L_max iterations, so rank each link from its ring's start
+        # link by pointer-doubling list ranking on the inverse successor
+        # (absorbing at the start links; links of loop slots are fixed
+        # points) and scatter points straight to CSR
+        good = ~loop_slot[link_slot]
+        nxt = np.where(good, nxt, links)
         rpos = ring_starts(lens)
         x = np.empty(int(lens.sum()), dtype=cdt)
         y = np.empty(len(x), dtype=cdt)
         x[rpos] = node_x[first_node]
         y[rpos] = node_y[first_node]
-        m2 = 2 * m
-        ids2 = np.arange(m2, dtype=idt)
-        ip = np.empty(m2, dtype=idt)
-        ip[perm] = ids2
-        ip[cur] = cur  # absorb at each ring's start edge
-        dist = np.where(ip == ids2, idt(0), idt(1))
-        p = ip
-        for _ in range(int(np.ceil(np.log2(max(m2, 2)))) + 1):
+        p = np.empty(m, dtype=idt)
+        p[nxt] = links
+        p[top] = top
+        dist = (p != links).astype(idt)
+        for _ in range(_doubling_rounds(m)):
+            pp = p[p]
+            if np.array_equal(pp, p):
+                break
             dist = dist + dist[p]
-            p = p[p]
+            p = pp
         ring_row = np.full(m, -1, dtype=idt)
         ring_row[s] = np.arange(nrings, dtype=idt)
-        rows_e = ring_row[val]
-        ok = rows_e >= 0
-        ok[ok] &= dist[ok] <= lens[rows_e[ok]] - 2
-        ee = np.flatnonzero(ok)
-        tn = to_node[ee]
-        at = rpos[rows_e[ee]] + 1 + dist[ee]
-        x[at] = node_x[tn]
-        y[at] = node_y[tn]
+        # each link's ring: the row of its kept cycle's start
+        rows = np.where(good, ring_row[np.where(t0 | f0, v0, v1) >> 1], -1)
+        sel = np.flatnonzero(rows >= 0)
+        sel = sel[dist[sel] <= lens[rows[sel]] - 2]
+        at = rpos[rows[sel]] + 1 + dist[sel]
+        x[at] = node_x[to_node[sel]]
+        y[at] = node_y[to_node[sel]]
     return RingSet(
-        link_slot[s].astype(np.int64), hole, lens,
+        link_slot[s].astype(np.int64), hole_at[top], lens,
         np.add(x, mnx if narrow else 0, dtype=np.int64),
         np.add(y, mny if narrow else 0, dtype=np.int64),
-    )
+    ), loop_slot
 
 
 def walk_contours(segs: Segments, fills: np.ndarray, rule: OverlayRule,

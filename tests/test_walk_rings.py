@@ -47,7 +47,17 @@ def _check_build(cases, want, rule, clockwise):
         r = walk_rings(s, mk, f, np.array([0, len(s)]), rule, clockwise,
                        np.zeros(1, dtype=np.int64), 0)
         assert _contours(r) == w
-    # the batch: case k shifted to x-tile k, y shifted by -y0
+    r = _walk_batch(cases, rule, clockwise)
+    got, slot = _contours(r), r.slot.tolist()
+    assert slot == sorted(slot)
+    for k, w in enumerate(want):
+        assert [c for c, sl in zip(got, slot) if sl == k] == w
+
+
+def _walk_batch(cases, rule, clockwise=False):
+    """walk_rings over (segs, fills, mask) cases as the slots of one tiled
+    batch, case k shifted to x-tile k and y shifted by -y0 (rings come back
+    in case coordinates)."""
     lo = min((int(s.ax.min()) for s, _, _ in cases if len(s)), default=0)
     hi = max((int(s.bx.max()) for s, _, _ in cases if len(s)), default=0)
     W, y0 = hi - lo + 8, -3
@@ -58,15 +68,10 @@ def _check_build(cases, want, rule, clockwise):
     n = np.array([len(s) for s, _, _ in cases])
     starts = np.concatenate([[0], np.cumsum(n)])
     z = np.zeros(int(starts[-1]), dtype=np.int64)
-    r = walk_rings(
+    return walk_rings(
         Segments(*cols, z, z), np.concatenate([mk for _, _, mk in cases]),
         np.concatenate([f for _, f, _ in cases]), starts, rule, clockwise, off, y0,
     )
-    got = _contours(r)
-    slot = r.slot.tolist()
-    assert slot == sorted(slot)
-    for k, w in enumerate(want):
-        assert [c for c, sl in zip(got, slot) if sl == k] == w
 
 
 def _graph(subj, clip, fill_rule=FillRule.NON_ZERO):
@@ -150,5 +155,150 @@ def test_wide_many_vertex_rings(rot):
         _graph([ngon(130, 1 << 41)], []),
     ]
     for rule in RULES:
+        for cw in (False, True):
+            _check(_cases(graphs, rule), rule, cw)
+
+
+def _rect(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.int64)
+
+
+# a diamond hole whose bottom corner touches the frame's bottom edge at (50, 0)
+_DIAMOND = np.array([[50, 0], [70, 20], [50, 40], [30, 20]], dtype=np.int64)
+
+
+def _pinch_graphs():
+    """Hull and hole rings meeting at one node: a hole touching its hull,
+    two holes touching at a corner, and even-odd frames with both next to a
+    clip square."""
+    return [
+        _graph([_rect(0, 0, 100, 100)], [_DIAMOND]),
+        _graph([_rect(0, 0, 100, 100)], [_rect(20, 20, 50, 50), _rect(50, 50, 80, 80)]),
+        _graph([_rect(0, 0, 100, 100), _rect(20, 20, 50, 50), _rect(50, 50, 80, 80)],
+               [_rect(90, 0, 140, 40)], FillRule.EVEN_ODD),
+        _graph([_rect(0, 0, 100, 100), _DIAMOND, _rect(50, 50, 80, 80),
+                _rect(20, 40, 50, 50)], [_rect(90, 0, 140, 40)], FillRule.EVEN_ODD),
+    ]
+
+
+def _flagship_graphs(n, seed):
+    """L-hexagon x rect jobs shaped like the flagship workload's: axis-aligned
+    crossings, corner touches and containment at small sizes."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for _ in range(n):
+        x1, y1 = (int(v) for v in rng.integers(0, 64, 2))
+        x2, y2 = x1 + int(rng.integers(8, 64)), y1 + int(rng.integers(8, 64))
+        xm, ym = (x1 + x2) // 2, (y1 + y2) // 2
+        hexa = np.array([[x1, y1], [x2, y1], [x2, ym], [xm, ym], [xm, y2], [x1, y2]])
+        cx1, cy1 = x1 + int(rng.integers(-16, 48)), y1 + int(rng.integers(-16, 48))
+        if rng.random() < 0.3:  # a corner on the hexagon's inner corner
+            cx1, cy1 = xm, ym
+        cx2, cy2 = cx1 + int(rng.integers(4, 64)), cy1 + int(rng.integers(4, 64))
+        out.append(_graph([hexa], [_rect(cx1, cy1, cx2, cy2)], FillRule.EVEN_ODD))
+    return out
+
+
+def _lines_net(n):
+    """n vertical (subject) x n horizontal (clip) strips of width 10 at
+    spacing 20: under XOR every strip crossing is a degree-4 node."""
+    s = 10 * n
+    starts = range(-s + 5, -s + 5 + 20 * n, 20)
+    return _graph([_rect(x, -s, x + 10, s) for x in starts],
+                  [_rect(-s, y, s, y + 10) for y in starts])
+
+
+@pytest.mark.parametrize("rule", [OverlayRule.UNION, OverlayRule.XOR, OverlayRule.DIFFERENCE])
+@pytest.mark.parametrize("cw", [False, True])
+def test_junction_hull_hole_rings(rule, cw):
+    """Hull and hole rings through one node walk as the oracle does: a hull
+    that merges a touching hole into one self-touching ring, holes that meet
+    at a corner, under both output orientations."""
+    _check(_cases(_pinch_graphs(), rule), rule, cw)
+
+
+def test_flagship_shaped_batch():
+    """L-hexagon x rect jobs as one batch: XOR crossings make degree-4 nodes
+    in a quarter or so of the slots."""
+    graphs = _flagship_graphs(96, 5)
+    for rule in (OverlayRule.INTERSECT, OverlayRule.UNION, OverlayRule.XOR):
+        for cw in (False, True):
+            _check(_cases(graphs, rule), rule, cw)
+
+
+@pytest.mark.parametrize("base", [(1 << 31) - 500, (1 << 41) + 12345])
+def test_wide_junctions(base):
+    """Junction slots whose spans pass 2^31 (the int64 angle and left-top
+    products give way to python ints): corner-touch XOR squares and holes
+    meeting at a corner, scaled past 2^31 and shifted to base."""
+    graphs = []
+    for sub, clip in (
+        ([_rect(0, 0, 2, 2)], [_rect(2, 2, 4, 4)]),
+        ([_rect(0, 0, 4, 4)], [_rect(1, 1, 2, 2), _rect(2, 2, 3, 3)]),
+        ([_rect(0, 0, 4, 2)], [_rect(2, 0, 3, 1), _rect(2, 1, 4, 3)]),
+    ):
+        k = (1 << 31) + 7
+        graphs.append(_graph([r * k + base for r in sub], [r * k + base for r in clip]))
+    for rule in (OverlayRule.XOR, OverlayRule.DIFFERENCE, OverlayRule.UNION):
+        for cw in (False, True):
+            _check(_cases(graphs, rule), rule, cw)
+
+
+def _loop_spans(cases, rule, batch=True):
+    """How many slots walk_rings sends to the python trigger loop, with every
+    graph on the numpy node pass."""
+    spans = []
+    loop = extract._trigger_loop
+
+    def counting(g, sp, hole_at, clockwise):
+        sp = list(sp)
+        spans.extend(sp)
+        return loop(g, sp, hole_at, clockwise)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(extract, "_trigger_loop", counting)
+        mp.setattr(extract, "_PY_GRAPH_LINKS", 0)
+        if batch:
+            _walk_batch(cases, rule)
+        else:
+            for s, f, mk in cases:
+                walk_rings(s, mk, f, np.array([0, len(s)]), rule, False,
+                           np.zeros(1, dtype=np.int64), 0)
+    return len(spans)
+
+
+def test_junction_routing():
+    """Junction slots take the vectorized walk: a flagship-shaped XOR batch,
+    the XOR strip net and the pinch cases send no slot to the trigger loop; a
+    fan of triangles through one point, whose left-top pick there sees more
+    than two links, still goes to it."""
+    flag = _cases(_flagship_graphs(96, 11), OverlayRule.XOR)
+    assert _loop_spans(flag, OverlayRule.XOR) == 0
+    net = _cases([_lines_net(16)], OverlayRule.XOR)
+    assert _loop_spans(net, OverlayRule.XOR, batch=False) == 0
+    for rule in (OverlayRule.UNION, OverlayRule.XOR, OverlayRule.DIFFERENCE):
+        assert _loop_spans(_cases(_pinch_graphs(), rule), rule) == 0
+    # the walks above passed through junctions
+    deg4 = np.unique(np.concatenate([
+        np.stack([s.ax[mk], s.ay[mk]], 1) for s, _, mk in net
+    ] + [np.stack([s.bx[mk], s.by[mk]], 1) for s, _, mk in net]), axis=0, return_counts=True)[1]
+    assert (deg4 == 4).sum() >= 16 * 16
+    tris = [np.array([[0, 0], [200, 10 * k - 40], [200, 10 * k - 35]]) for k in range(8)]
+    fan = _cases([_graph(tris[::2], tris[1::2])], OverlayRule.UNION)
+    assert _loop_spans(fan, OverlayRule.UNION) == 1
+    _check(fan, OverlayRule.UNION)
+
+
+def test_float_tied_angles():
+    """Three links leave one node at angles a float atan2 cannot tell apart
+    (directions (-K, K), (-K-1, K), (-K-2, K), K = 2^55), in incidence order
+    opposite to their exact angle order: the exact pairwise check catches the
+    float sort and the slot keeps the oracle's rings."""
+    k = 1 << 55
+    a = np.array([[0, 0], [-k, 0], [0, -k]], dtype=np.int64)
+    b = np.array([[0, 0], [0, k], [-k, k]], dtype=np.int64)
+    c = np.array([[0, 0], [-(k + 1), k], [-(k + 2), k]], dtype=np.int64)
+    graphs = [_graph([a, c], [b])]
+    for rule in (OverlayRule.UNION, OverlayRule.XOR):
         for cw in (False, True):
             _check(_cases(graphs, rule), rule, cw)
