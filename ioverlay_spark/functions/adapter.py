@@ -19,9 +19,10 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+if TYPE_CHECKING:  # the numpy float path imports this module without pyspark
+    from pyspark.sql import Column, DataFrame
 
 # target integer extent ~2^29: products of two coordinate diffs stay << 2^63
 TARGET_BITS = 29
@@ -47,6 +48,8 @@ class FloatAdapter:
         # reference FloatPointAdapter uses Rust f64::round = half AWAY from zero
         # (iOverlay/src/float/*); floor(v+0.5) would send negative exact halves
         # toward +inf instead
+        from pyspark.sql import functions as F
+
         return (
             F.when(v >= 0, F.floor(v + F.lit(0.5)))
             .otherwise(-F.floor(-v + F.lit(0.5)))
@@ -54,20 +57,20 @@ class FloatAdapter:
         )
 
     def quantize_x(self, col: Column) -> Column:
-        return self._round_half_away((col - F.lit(self.offset_x)) * F.lit(self.scale))
+        return self._round_half_away((col - self.offset_x) * self.scale)
 
     def quantize_y(self, col: Column) -> Column:
-        return self._round_half_away((col - F.lit(self.offset_y)) * F.lit(self.scale))
+        return self._round_half_away((col - self.offset_y) * self.scale)
 
     def dequantize_x(self, col: Column) -> Column:
-        return col.cast("double") / F.lit(self.scale) + F.lit(self.offset_x)
+        return col.cast("double") / self.scale + self.offset_x
 
     def dequantize_y(self, col: Column) -> Column:
-        return col.cast("double") / F.lit(self.scale) + F.lit(self.offset_y)
+        return col.cast("double") / self.scale + self.offset_y
 
     def dequantize_area2(self, col: Column) -> Column:
         """Doubled-area in float units from doubled-area in int units."""
-        return col.cast("double") / F.lit(self.scale * self.scale)
+        return col.cast("double") / (self.scale * self.scale)
 
 
 def fixed_scale_adapter(grid_size: float) -> FloatAdapter:
@@ -81,6 +84,7 @@ def fit_adapter(df: DataFrame, x_cols: list[str], y_cols: list[str]) -> FloatAda
 
     Columns may be DOUBLE scalars or ARRAY<DOUBLE>; arrays contribute their
     element-wise min/max."""
+    from pyspark.sql import functions as F
 
     def mins_maxs(cols):
         aggs = []

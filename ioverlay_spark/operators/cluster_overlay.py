@@ -59,23 +59,21 @@ def _floor_div(col, g):
 def _local_labels_kernel(tbl):
     """One-task clustering: kernel/cluster.cluster_labels, the exact
     bbox-overlap CC over all bboxes. A single-component input is one cluster
-    (cluster_labels returns None for it; the caller's giant path handles it)."""
+    (cluster_labels returns None for it; the caller's giant path handles it).
+    Returns one (cid, cluster, cluster_npts) RecordBatch."""
     import numpy as np
-    import pyarrow as pa
 
+    from ..arrow_np import record_batch, to_np
     from ..kernel.cluster import cluster_labels
 
-    cid = tbl.column("cid").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    cols = [
-        tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        for c in ("minx", "miny", "maxx", "maxy")
-    ]
-    npts = tbl.column("npts").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    cid, minx, miny, maxx, maxy, npts = (
+        to_np(tbl.column(c), np.int64, c) for c in ("cid", "minx", "miny", "maxx", "maxy", "npts")
+    )
+    names = ["cid", "cluster", "cluster_npts"]
     n = len(cid)
     if n == 0:
-        empty = pa.array(np.empty(0, dtype=np.int64))
-        return pa.table({"cid": empty, "cluster": empty, "cluster_npts": empty})
-    labels = cluster_labels(*cols)
+        return record_batch([cid, cid, npts], names=names)
+    labels = cluster_labels(minx, miny, maxx, maxy)
     if labels is None:
         labels = np.zeros(n, dtype=np.int64)
     k = int(labels.max()) + 1
@@ -83,19 +81,46 @@ def _local_labels_kernel(tbl):
         # all-singleton labeling (labels are dense first-appearance, so k == n
         # means identity): every contour is its own cluster — skip the ufunc.at
         # group reductions, which cost ~1 s at 2M rings
-        return pa.table({"cid": pa.array(cid), "cluster": pa.array(cid),
-                         "cluster_npts": pa.array(npts)})
+        return record_batch([cid, cid, npts], names=names)
     min_cid = np.full(k, np.iinfo(np.int64).max, dtype=np.int64)
     np.minimum.at(min_cid, labels, cid)
     tot = np.zeros(k, dtype=np.int64)
     np.add.at(tot, labels, npts)
-    return pa.table(
-        {
-            "cid": pa.array(cid),
-            "cluster": pa.array(min_cid[labels]),
-            "cluster_npts": pa.array(tot[labels]),
-        }
-    )
+    return record_batch([cid, min_cid[labels], tot[labels]], names=names)
+
+
+def _bbox_kernel(it):
+    """(cid, pts_x, pts_y) batches -> (cid, minx, maxx, miny, maxy, npts):
+    per-batch numpy reduceat over the list offsets."""
+    import numpy as np
+
+    from .. import zipcache  # noqa: F401  (package import installs it in the worker)
+    from ..arrow_np import list_np, record_batch, to_np
+
+    for rb in it:
+        if rb.num_rows == 0:
+            continue
+        out = {"cid": to_np(rb.column("cid"), np.int64, "cid")}
+        for axis in ("x", "y"):
+            offs, vals = list_np(rb.column(f"pts_{axis}"), f"pts_{axis}")
+            starts = offs[:-1]
+            out[f"min{axis}"] = np.minimum.reduceat(vals, starts)
+            out[f"max{axis}"] = np.maximum.reduceat(vals, starts)
+            if axis == "x":
+                out["npts"] = np.diff(offs)
+        names = ["cid", "minx", "maxx", "miny", "maxy", "npts"]
+        yield record_batch([out[k] for k in names], names=names)
+
+
+def _one_task_labels(it):
+    """cluster_labels_df's one-task path: every bbox batch of the single
+    partition through _local_labels_kernel."""
+    import pyarrow as pa
+
+    batches = list(it)
+    if not batches:
+        return
+    yield _local_labels_kernel(pa.Table.from_batches(batches).combine_chunks())
 
 
 def cluster_labels_df(
@@ -134,38 +159,6 @@ def cluster_labels_df(
         ]
     )
 
-    def _bbox_kernel(it):
-        import numpy as np
-        import pyarrow as pa
-
-        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
-
-        for rb in it:
-            ncols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            nrows = rb.num_rows
-            if nrows == 0:
-                continue
-            cid = ncols["cid"].to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            out = {"cid": cid}
-            for axis in ("x", "y"):
-                col = ncols[f"pts_{axis}"]
-                offs = np.asarray(col.offsets, dtype=np.int64)
-                vals = np.asarray(col.values, dtype=np.int64)
-                # normalize sliced/shared buffers: reduceat's last group runs to
-                # the END of vals, so the buffer must stop at offs[-1]
-                if offs[0] != 0 or offs[-1] != len(vals):
-                    vals = vals[offs[0]:offs[-1]]
-                    offs = offs - offs[0]
-                starts = offs[:-1]
-                out[f"min{axis}"] = np.minimum.reduceat(vals, starts)
-                out[f"max{axis}"] = np.maximum.reduceat(vals, starts)
-                if axis == "x":
-                    out["npts"] = np.diff(offs)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out[k]) for k in ("cid", "minx", "maxx", "miny", "maxy", "npts")],
-                names=["cid", "minx", "maxx", "miny", "maxy", "npts"],
-            )
-
     bb = (
         contours.where(F.size("pts_x") >= 3)
         .select("cid", "pts_x", "pts_y")
@@ -182,19 +175,9 @@ def cluster_labels_df(
             ]
         )
 
-        def _one_task(it):
-            import pyarrow as pa
-
-            batches = list(it)
-            if not batches:
-                return
-            tbl = pa.Table.from_batches(batches).combine_chunks()
-            out = _local_labels_kernel(tbl)
-            yield from out.to_batches()
-
         # coalesce(1) over the checkpointed bbox frame is a NARROW read of the
         # in-memory partitions — no 84 MB shuffle write+read like groupBy(_g)
-        return bb.coalesce(1).mapInArrow(_one_task, schema=schema)
+        return bb.coalesce(1).mapInArrow(_one_task_labels, schema=schema)
     ext = bb.agg(
         F.max(F.col("maxx") - F.col("minx")).alias("w"),
         F.max(F.col("maxy") - F.col("miny")).alias("h"),

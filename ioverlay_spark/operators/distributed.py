@@ -38,7 +38,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -51,6 +50,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..arrow_np import (
+    binary_from_np,
+    blobs_np,
+    from_np,
+    record_batch,
+    to_np,
+    valid_np,
+)
 from ..kernel.segments import Segments
 from ..kernel.split import _apply_marks, find_marks
 from ..options import FillRule, OverlayOptions, OverlayRule
@@ -99,9 +106,9 @@ _MARKS_ARROW_SCHEMA = pa.schema(
 )
 
 
-def _np_col(tbl, name: str) -> np.ndarray:
-    """One Arrow table/batch column as an int64 numpy array."""
-    return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+def _np_col(tbl, name: str, dtype=np.int64) -> np.ndarray:
+    """One Arrow table/batch column as a numpy array (int64 by default)."""
+    return to_np(tbl.column(name), dtype, name)
 
 
 def _find_marks_kernel(tbl: pa.Table, radius: int = 2) -> pa.Table:
@@ -119,7 +126,7 @@ def _find_marks_kernel(tbl: pa.Table, radius: int = 2) -> pa.Table:
     segs = Segments(ax[order], ay[order], bx[order], by[order], z, z)
     si, mx, my, rnd, col = find_marks(segs, radius, threads=1)
     cols = [_np_col(tbl, "_sid")[order[si]], mx, my, rnd, col]
-    return pa.Table.from_arrays([pa.array(c) for c in cols], schema=_MARKS_ARROW_SCHEMA)
+    return pa.Table.from_batches([record_batch(cols, schema=_MARKS_ARROW_SCHEMA)])
 
 
 def _bounds_aggs() -> list:
@@ -286,26 +293,29 @@ def _apply_union(tbl: pa.Table, payload: list[str] | tuple[str, ...] = ()):
     `payload` columns copied onto every sub-segment from its parent (the
     reference's default split hook, iOverlay/src/core/edge_data.rs:5-19).
 
-    Marks find their segments by an Arrow hash join on `_sid`. The numpy
+    Marks find their segments by a sorted match on `_sid`, unique per
+    segment (a mark whose `_sid` names no segment is dropped). The numpy
     _apply_marks kernel drops endpoint and duplicate marks (a pair spanning a
     cell border is found in every shared cell), orders each chain along its
     segment and renormalizes it."""
-    is_seg = pc.is_valid(tbl.column("subj"))
-    seg_t = tbl.filter(is_seg)
+    is_seg = valid_np(tbl.column("subj"))
+    seg_t = tbl.filter(from_np(is_seg))
+    mark_t = tbl.filter(from_np(~is_seg))
     segs = Segments(*(_np_col(seg_t, c) for c in SEG_COLS))
-    index = seg_t.select(["_sid"]).append_column("_i", pa.array(np.arange(len(seg_t))))
-    hit = tbl.filter(pc.invert(is_seg)).select(["_sid", "px", "py"])
-    hit = hit.join(index, "_sid", join_type="inner", use_threads=False)
-    marks = (_np_col(hit, "_i"), _np_col(hit, "px"), _np_col(hit, "py"))
+    seg_sid, mark_sid = _np_col(seg_t, "_sid"), _np_col(mark_t, "_sid")
+    order = np.argsort(seg_sid)
+    pos = np.searchsorted(seg_sid, mark_sid, sorter=order)
+    hit = pos < len(order)
+    hit[hit] = seg_sid[order[pos[hit]]] == mark_sid[hit]
+    marks = (order[pos[hit]], _np_col(mark_t, "px")[hit], _np_col(mark_t, "py")[hit])
     segs, parent = _apply_marks(segs, marks, parents=True)
-    return segs, (seg_t.select(list(payload)).take(parent) if payload else None)
+    return segs, (seg_t.select(list(payload)).take(from_np(parent)) if payload else None)
 
 
-def _apply_rows(rows: DataFrame, payload: list[StructField] = ()) -> DataFrame:
-    """The apply stage over _union_marks rows: one mapInArrow running
-    _apply_union per partition (a segment and its marks may arrive in
-    different Arrow batches), emitting SEG_COLS + the `payload` fields."""
-    names = [f.name for f in payload]
+def _apply_iter(names: list[str]):
+    """_apply_rows' mapInArrow iterator: _apply_union over the whole
+    partition (a segment and its marks may arrive in different Arrow
+    batches), emitting SEG_COLS + the `names` payload columns."""
 
     def it(batches):
         chunks = list(batches)
@@ -314,13 +324,19 @@ def _apply_rows(rows: DataFrame, payload: list[StructField] = ()) -> DataFrame:
         segs, extra = _apply_union(pa.Table.from_batches(chunks), names)
         if not len(segs):
             return
-        cols = [pa.array(getattr(segs, c)) for c in SEG_COLS]
+        cols = [getattr(segs, c) for c in SEG_COLS]
         if extra is not None:
             cols += extra.columns
-        yield from pa.Table.from_arrays(cols, names=SEG_COLS + names).to_batches()
+        yield record_batch(cols, names=SEG_COLS + names)
 
+    return it
+
+
+def _apply_rows(rows: DataFrame, payload: list[StructField] = ()) -> DataFrame:
+    """The apply stage over _union_marks rows: one mapInArrow running
+    _apply_union per partition, emitting SEG_COLS + the `payload` fields."""
     schema = StructType([StructField(c, LongType()) for c in SEG_COLS] + list(payload))
-    return rows.mapInArrow(it, schema=schema)
+    return rows.mapInArrow(_apply_iter([f.name for f in payload]), schema=schema)
 
 
 def apply_marks_df(
@@ -535,16 +551,16 @@ def _boundary_blob_batch(ax, ay, bx, by, fill) -> pa.RecordBatch:
     words narrow to int32 when the actual values fit (the reader re-widens)."""
     cmax = max(int(np.abs(c).max(initial=0)) for c in (ax, ay, bx, by))
     cdt = np.int32 if cmax < 2**31 else np.int64
-    blob = (
-        b"".join(c.astype(cdt, copy=False).tobytes() for c in (ax, ay, bx, by))
-        + fill.astype(np.uint8, copy=False).tobytes()
+    blob = np.concatenate(
+        [np.ascontiguousarray(c, dtype=cdt).view(np.uint8) for c in (ax, ay, bx, by)]
+        + [fill.astype(np.uint8, copy=False)]
     )
-    return pa.RecordBatch.from_arrays(
+    return record_batch(
         [
-            pa.array([len(ax)], type=pa.int64()),
-            pa.array([cdt().itemsize], type=pa.int32()),
-            pa.array([cmax], type=pa.int64()),
-            pa.array([blob], type=pa.binary()),
+            np.array([len(ax)], dtype=np.int64),
+            np.array([cdt().itemsize], dtype=np.int32),
+            np.array([cmax], dtype=np.int64),
+            binary_from_np(blob, [0, len(blob)]),
         ],
         names=["cnt", "wc", "cmax", "xyf"],
     )
@@ -605,9 +621,7 @@ def _fill_strips_sorted(ax, ay, bx, by, subj, clip, is_home, s, fill_rule, bound
     if boundary_rule is not None:
         yield _boundary_blob_batch(*cols)
         return
-    yield from pa.Table.from_arrays(
-        [pa.array(c) for c in cols], schema=_FILL_ARROW_SCHEMA
-    ).to_batches()
+    yield record_batch(cols, schema=_FILL_ARROW_SCHEMA)
 
 
 # packed strip-chain shuffle rows: one row per (upstream partition, strip)
@@ -686,38 +700,38 @@ def _pack_arrays(segs: Segments, E: np.ndarray) -> pa.RecordBatch:
     ) if len(ax) else 0
     cdt = np.int32 if cmax < 2**31 else np.int64
     wdt = np.int32 if wmax < 2**31 else np.int64
-    AX = ax[rep].astype(cdt, copy=False)
-    AY = ay[rep].astype(cdt, copy=False)
-    BX = bx[rep].astype(cdt, copy=False)
-    BY = by[rep].astype(cdt, copy=False)
-    SU = subj[rep].astype(wdt, copy=False)
-    CL = clip[rep].astype(wdt, copy=False)
-    HM = home.astype(np.uint8)
-    sb = np.flatnonzero(np.concatenate([[True], strip_s[1:] != strip_s[:-1]]))
-    se = np.append(sb, total)
-    r_strip, r_cnt, r_xy, r_sc, r_hm = [], [], [], [], []
-    for i in range(len(sb)):
-        lo, hi = int(se[i]), int(se[i + 1])
-        r_strip.append(int(strip_s[lo]))
-        r_cnt.append(hi - lo)
-        r_xy.append(
-            np.concatenate([AX[lo:hi], AY[lo:hi], BX[lo:hi], BY[lo:hi]]).tobytes()
-        )
-        r_sc.append(np.concatenate([SU[lo:hi], CL[lo:hi]]).tobytes())
-        r_hm.append(HM[lo:hi].tobytes())
-    k = len(r_strip)
-    return pa.RecordBatch.from_arrays(
+    sb = np.flatnonzero(np.concatenate([[total > 0], strip_s[1:] != strip_s[:-1]]))
+    cnt = np.diff(np.append(sb, total))
+    return record_batch(
         [
-            pa.array(np.asarray(r_strip, dtype=np.int32)),
-            pa.array(np.asarray(r_cnt, dtype=np.int64)),
-            pa.array(np.full(k, cdt().itemsize, dtype=np.int32)),
-            pa.array(np.full(k, wdt().itemsize, dtype=np.int32)),
-            pa.array(r_xy, type=pa.binary()),
-            pa.array(r_sc, type=pa.binary()),
-            pa.array(r_hm, type=pa.binary()),
+            strip_s[sb].astype(np.int32),
+            cnt,
+            np.full(len(sb), cdt().itemsize, dtype=np.int32),
+            np.full(len(sb), wdt().itemsize, dtype=np.int32),
+            _strip_blob([ax, ay, bx, by], rep, cdt, sb, cnt),
+            _strip_blob([subj, clip], rep, wdt, sb, cnt),
+            _strip_blob([home], None, np.uint8, sb, cnt),
         ],
         names=["strip", "cnt", "wc", "ww", "xy", "sc", "hm"],
     )
+
+
+def _strip_blob(cols, rep, dt, starts, counts) -> pa.Array:
+    """One binary row per strip: with the strip-sorted columns g = col[rep]
+    (col itself when rep is None), strip i's row is g0[s:e] | g1[s:e] | ...
+    as `dt` words, s:e = starts[i]:starts[i] + counts[i]; one scatter per
+    column into one buffer, no per-row bytes."""
+    m, total = len(cols), int(counts.sum())
+    seg = np.repeat(np.arange(len(starts)), counts)
+    step = counts[seg]
+    # word j of column c lands at m * starts[s] + c * counts[s] + (j - starts[s])
+    dest = (m - 1) * starts[seg] + np.arange(total)
+    out = np.empty(m * total, dtype=dt)
+    for col in cols:
+        out[dest] = col if rep is None else col[rep]
+        dest += step
+    offs = m * np.dtype(dt).itemsize * np.append(starts, total)
+    return binary_from_np(out, offs, "packed strip blobs")
 
 
 def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = None):
@@ -737,13 +751,13 @@ def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = N
         tbl = pa.Table.from_batches(chunks).combine_chunks()
         if not len(tbl):
             return
-        strips = tbl.column("strip").to_numpy(zero_copy_only=False).astype(np.int64)
-        cnts = tbl.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64)
-        wcs = tbl.column("wc").to_numpy(zero_copy_only=False)
-        wws = tbl.column("ww").to_numpy(zero_copy_only=False)
-        xyc = tbl.column("xy")
-        scc = tbl.column("sc")
-        hmc = tbl.column("hm")
+        strips = _np_col(tbl, "strip")
+        cnts = _np_col(tbl, "cnt")
+        wcs = _np_col(tbl, "wc")
+        wws = _np_col(tbl, "ww")
+        xyd, xyo = blobs_np(tbl.column("xy"), "xy")
+        scd, sco = blobs_np(tbl.column("sc"), "sc")
+        hmd, hmo = blobs_np(tbl.column("hm"), "hm")
         order = np.argsort(strips, kind="stable")
         p_ax, p_ay, p_bx, p_by, p_su, p_cl, p_hm, p_s = (
             [], [], [], [], [], [], [], []
@@ -752,15 +766,15 @@ def _packed_fill_iter(fill_rule: FillRule, boundary_rule: OverlayRule | None = N
             n = int(cnts[r])
             cdt = np.int32 if int(wcs[r]) == 4 else np.int64
             wdt = np.int32 if int(wws[r]) == 4 else np.int64
-            xy = np.frombuffer(xyc[r].as_py(), dtype=cdt).astype(np.int64, copy=False)
-            sc = np.frombuffer(scc[r].as_py(), dtype=wdt).astype(np.int64, copy=False)
+            xy = np.frombuffer(xyd, cdt, 4 * n, int(xyo[r])).astype(np.int64, copy=False)
+            sc = np.frombuffer(scd, wdt, 2 * n, int(sco[r])).astype(np.int64, copy=False)
             p_ax.append(xy[:n])
             p_ay.append(xy[n : 2 * n])
             p_bx.append(xy[2 * n : 3 * n])
             p_by.append(xy[3 * n :])
             p_su.append(sc[:n])
             p_cl.append(sc[n:])
-            p_hm.append(np.frombuffer(hmc[r].as_py(), dtype=np.uint8))
+            p_hm.append(hmd[hmo[r] : hmo[r + 1]])
             p_s.append(np.full(n, strips[r], dtype=np.int64))
         yield from _fill_strips_sorted(
             np.concatenate(p_ax), np.concatenate(p_ay),
@@ -836,7 +850,7 @@ def compute_fills_df(
         frac = min(1.0, 400_000 / max(n, 1)) if n is not None else 1.0
         if frac < 1.0:
             mids = mids.sample(fraction=frac, seed=7)
-        vals = mids.toPandas()["mx2"].to_numpy(np.int64)
+        vals = to_np(mids.toArrow().column("mx2"), np.int64)
         if len(vals):
             qs = np.quantile(
                 vals, [i / n_strips for i in range(1, n_strips)], method="lower"
@@ -878,12 +892,7 @@ def _local_overlay_kernel(rule: OverlayRule, fill_rule: FillRule, options: Overl
         tbl = pa.Table.from_batches(batches)
         if tbl.num_rows == 0:
             return
-        segs = Segments(
-            *(
-                tbl.column(c).to_numpy().astype(np.int64, copy=False)
-                for c in ("ax", "ay", "bx", "by", "subj", "clip")
-            )
-        )
+        segs = Segments(*(_np_col(tbl, c) for c in SEG_COLS))
         segs = split_segments(segs, threads=1)
         fills = compute_fills_windowed(segs, fill_rule)
         b = boundary_mask(fills, rule)

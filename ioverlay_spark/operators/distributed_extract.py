@@ -21,7 +21,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,10 +32,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..arrow_np import blobs_np, from_np, list_from_np, list_np, record_batch
 from ..kernel.cluster import _cc_label_arrays
 from ..kernel.extract import RingSet, area2_int64, bind_holes
 from ..options import ContourDirection, FillRule, OverlayOptions, OverlayRule
-from .distributed import BOUNDARY_BLOB_SCHEMA, _boundary_blob_batch, _checkpoint_observed
+from .distributed import (
+    BOUNDARY_BLOB_SCHEMA,
+    _boundary_blob_batch,
+    _checkpoint_observed,
+    _np_col,
+)
 
 
 def boundary_segments_df(fills: DataFrame, rule: OverlayRule) -> DataFrame:
@@ -81,11 +86,8 @@ def _union_find_iter(batches):
     tbl = pa.Table.from_batches(chunks)
     if not len(tbl):
         return
-    u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    nodes, parent = _cc_label_arrays(u, v)
-    out = pa.table({"node": pa.array(nodes), "component": pa.array(nodes[parent])})
-    yield from out.to_batches()
+    nodes, parent = _cc_label_arrays(_np_col(tbl, "u"), _np_col(tbl, "v"))
+    yield record_batch([nodes, nodes[parent]], names=["node", "component"])
 
 
 def connected_components(
@@ -208,17 +210,13 @@ _RINGS_ARROW_SCHEMA = pa.schema(
 )
 
 
-def _col_np(tbl: pa.Table, name: str, dtype=np.int64) -> np.ndarray:
-    return tbl.column(name).to_numpy(zero_copy_only=False).astype(dtype, copy=False)
-
-
 def _extract_kernel(rule: OverlayRule, options: OverlayOptions):
     """Kernel over a SALT group holding MANY components (one grouped-map call
     per component would pay per-group Arrow overhead x millions of components;
     salting bounds the group count while each component is still walked alone).
 
     Arrow-native (applyInArrow): input columns land zero-copy in numpy, and the
-    rings go back as pa.ListArray built straight from the validated CSR ring
+    rings go back as Arrow list columns built straight from the validated CSR ring
     set (_extract_rings_core) — the per-ring .tolist() materialization this
     replaces was over half the kernel's wall-clock at 262k rings (lines_net
     audit, BENCH.md round 4)."""
@@ -228,18 +226,18 @@ def _extract_kernel(rule: OverlayRule, options: OverlayOptions):
         # node ids reach ~2^62, so comp * K overflows int64): compose from the
         # salt-group id (disjoint across kernel invocations) and a local counter
         salt = (
-            int(tbl.column("_salt")[0].as_py())
+            int(_np_col(tbl, "_salt")[0])
             if "_salt" in tbl.column_names and len(tbl)
             else 0
         )
         if not len(tbl):
-            return _RINGS_ARROW_SCHEMA.empty_table()
-        comp_arr = _col_np(tbl, "component")
-        axv = _col_np(tbl, "ax")
-        ayv = _col_np(tbl, "ay")
-        bxv = _col_np(tbl, "bx")
-        byv = _col_np(tbl, "by")
-        fills_arr = _col_np(tbl, "fill", np.uint8)
+            return pa.Table.from_batches([], schema=_RINGS_ARROW_SCHEMA)
+        comp_arr = _np_col(tbl, "component")
+        axv = _np_col(tbl, "ax")
+        ayv = _np_col(tbl, "ay")
+        bxv = _np_col(tbl, "bx")
+        byv = _np_col(tbl, "by")
+        fills_arr = _np_col(tbl, "fill", np.uint8)
         return _extract_rings_core(
             rule, options, comp_arr, axv, ayv, bxv, byv, fills_arr, salt
         )
@@ -330,7 +328,7 @@ def _extract_rings_core(
     rings = concat_rings([r for r, _ in results])
     nring = len(rings.lens)
     if nring == 0:
-        return _RINGS_ARROW_SCHEMA.empty_table()
+        return pa.Table.from_batches([], schema=_RINGS_ARROW_SCHEMA)
     a2 = area2_int64(np.concatenate([a for _, a in results]))
 
     # lexicographic-min anchor per ring: min x, then min y among the points
@@ -342,20 +340,18 @@ def _extract_rings_core(
     anchor_y = np.minimum.reduceat(np.where(at_min, y, np.iinfo(np.int64).max), pos)
 
     ring_ids = salt * (1 << 40) + np.arange(1, nring + 1, dtype=np.int64)
-    off_arr = pa.array(np.append(pos, len(x)).astype(np.int32))
-    return pa.Table.from_arrays(
-        [
-            pa.array(comps[rings.slot]),
-            pa.array(ring_ids),
-            pa.array(rings.hole),
-            pa.ListArray.from_arrays(off_arr, pa.array(x)),
-            pa.ListArray.from_arrays(off_arr, pa.array(y)),
-            pa.array(a2),
-            pa.array(anchor_x),
-            pa.array(anchor_y),
-        ],
-        schema=_RINGS_ARROW_SCHEMA,
-    )
+    offs = np.append(pos, len(x))
+    cols = [
+        comps[rings.slot],
+        ring_ids,
+        rings.hole,
+        list_from_np(offs, x, "extract rings"),
+        list_from_np(offs, y, "extract rings"),
+        a2,
+        anchor_x,
+        anchor_y,
+    ]
+    return pa.Table.from_batches([record_batch(cols, schema=_RINGS_ARROW_SCHEMA)])
 
 
 _NODE_CAP = 1 << 30  # same bound as kernel.batch._COORD_CAP: packing is exact below it
@@ -415,17 +411,15 @@ def _bind_rings_table(tbl: pa.Table) -> pa.Table:
     one slot: a hole and its hull are different components) to
     RINGS_OUT_SCHEMA rows: a hull's shape_id is its ring_id, a hole's is its
     hull's, and unbound holes are dropped."""
-    px, py = (tbl.column(c).combine_chunks() for c in ("pts_x", "pts_y"))
-    hole = tbl.column("is_hole").to_numpy(zero_copy_only=False)
-    lens = np.diff(px.offsets.to_numpy())
-    shape, _ = bind_holes(
-        RingSet(np.zeros(len(lens), dtype=np.int64), hole, lens,
-                px.flatten().to_numpy(), py.flatten().to_numpy())
-    )
+    offs, px = list_np(tbl.column("pts_x"), "pts_x")
+    _, py = list_np(tbl.column("pts_y"), "pts_y")
+    hole = _np_col(tbl, "is_hole", bool)
+    lens = np.diff(offs)
+    shape, _ = bind_holes(RingSet(np.zeros(len(lens), dtype=np.int64), hole, lens, px, py))
     keep = np.flatnonzero(shape >= 0)
-    ids = tbl.column("ring_id").to_numpy()[~hole][shape[keep]]
-    out = tbl.select(RINGS_OUT_SCHEMA.fieldNames()[1:]).take(keep)
-    return out.add_column(0, "shape_id", pa.array(ids, type=pa.int64()))
+    ids = _np_col(tbl, "ring_id")[~hole][shape[keep]]
+    out = tbl.select(RINGS_OUT_SCHEMA.fieldNames()[1:]).take(from_np(keep))
+    return out.add_column(0, "shape_id", from_np(ids, np.int64))
 
 
 def _blob_boundary_arrays(tbl: pa.Table):
@@ -434,21 +428,21 @@ def _blob_boundary_arrays(tbl: pa.Table):
     arrays — np.frombuffer memcpy per row, one concatenate per column.
     Word sizes may differ per row (per-partition narrowing); concatenate
     upcasts, then a final astype pins int64."""
-    cnts = tbl.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64)
-    wcs = tbl.column("wc").to_numpy(zero_copy_only=False)
-    xyf = tbl.column("xyf")
+    cnts = _np_col(tbl, "cnt")
+    wcs = _np_col(tbl, "wc")
+    data, offs = blobs_np(tbl.column("xyf"), "xyf")
     axs, ays, bxs, bys, fls = [], [], [], [], []
     for r in range(len(tbl)):
         n = int(cnts[r])
         w = int(wcs[r])
-        buf = xyf[r].as_py()
+        o = int(offs[r])
         cdt = np.int32 if w == 4 else np.int64
-        xy = np.frombuffer(buf, dtype=cdt, count=4 * n)
+        xy = np.frombuffer(data, dtype=cdt, count=4 * n, offset=o)
         axs.append(xy[:n])
         ays.append(xy[n : 2 * n])
         bxs.append(xy[2 * n : 3 * n])
         bys.append(xy[3 * n :])
-        fls.append(np.frombuffer(buf, dtype=np.uint8, offset=4 * n * w, count=n))
+        fls.append(data[o + 4 * n * w : o + 4 * n * w + n])
     if not axs:
         z = np.zeros(0, np.int64)
         return z, z, z, z, np.zeros(0, np.uint8)
@@ -491,15 +485,8 @@ def _blob_rows_iter(batches):
         ax, ay, bx, by, fl = _blob_boundary_arrays(tbl)
         if not len(ax):
             continue
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ax),
-                pa.array(ay),
-                pa.array(bx),
-                pa.array(by),
-                pa.array(fl.astype(np.int32)),
-            ],
-            names=["ax", "ay", "bx", "by", "fill"],
+        yield record_batch(
+            [ax, ay, bx, by, fl.astype(np.int32)], names=["ax", "ay", "bx", "by", "fill"]
         )
 
 
@@ -514,8 +501,8 @@ def _pack_boundary_rows_iter(batches):
     if not len(tbl):
         return
     yield _boundary_blob_batch(
-        _col_np(tbl, "ax"), _col_np(tbl, "ay"), _col_np(tbl, "bx"), _col_np(tbl, "by"),
-        _col_np(tbl, "fill", np.uint8),
+        _np_col(tbl, "ax"), _np_col(tbl, "ay"), _np_col(tbl, "bx"), _np_col(tbl, "by"),
+        _np_col(tbl, "fill", np.uint8),
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..arrow_np import record_batch, to_np
 from ..functions.exprgen import (
     GRID_BITS,
     cell_expr,
@@ -242,6 +243,21 @@ def knn_batch(g: KnnGrid, p_id, px, py, k: int):
     return [np.concatenate(col) for col in zip(*out)]
 
 
+def _knn_kernel(bc, k: int):
+    """knn_broadcast_grid's mapInArrow iterator: knn_batch per Arrow batch of
+    (p_id, px, py) against the grid `bc.value` (a broadcast KnnGrid)."""
+
+    def kernel(batches):
+        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
+
+        g = bc.value
+        for batch in batches:
+            cols = knn_batch(g, *(to_np(batch.column(i)) for i in range(3)), k)
+            yield record_batch(cols, names=["p_id", "r_id", "d2", "rnk"])
+
+    return kernel
+
+
 def knn_broadcast_grid(
     points: DataFrame,
     centers: DataFrame,
@@ -268,18 +284,8 @@ def knn_broadcast_grid(
     spark = points.sparkSession
     ship_package(spark)
     ctr = centers.select(*(F.col(c).cast("long") for c in ("r_id", "cx2", "cy2"))).toArrow()
-    grid = knn_grid(*(ctr.column(i).to_numpy() for i in range(3)), level)
+    grid = knn_grid(*(to_np(ctr.column(i)) for i in range(3)), level)
     bc = spark.sparkContext.broadcast(grid)
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        from .. import zipcache  # noqa: F401  (package import installs it in the worker)
-
-        g = bc.value
-        for batch in batches:
-            cols = knn_batch(g, *(batch.column(i).to_numpy() for i in range(3)), k)
-            yield pa.RecordBatch.from_arrays(cols, names=["p_id", "r_id", "d2", "rnk"])
 
     pts = points.select(*(F.col(c).cast("long") for c in ("p_id", "px", "py")))
     n = spark.sparkContext.defaultParallelism
@@ -289,7 +295,7 @@ def knn_broadcast_grid(
     exchange = "Exchange" in pts._jdf.queryExecution().executedPlan().toString()
     if not exchange and pts.rdd.getNumPartitions() < n:
         pts = pts.repartition(n)
-    return pts.mapInArrow(kernel, schema=KNN_SCHEMA)
+    return pts.mapInArrow(_knn_kernel(bc, k), schema=KNN_SCHEMA)
 
 
 def knn_cell_ring(
