@@ -9,7 +9,10 @@ same size, one hull-width to the right: the scalar overlay() clusters it into
 two jobs and runs the batch kernel, so the row times the batch fill on one
 big tile) and lines_net_xor (n vertical x n horizontal strips of width 10 at
 spacing 20, XOR: one tile whose every strip crossing is a degree-4 node, the
-vectorized junction walk's largest single-tile case; no reference number).
+vectorized junction walk's largest single-tile case; no reference number) and
+not_overlap_far (not_overlap moved by (2^40, -2^40), with not_overlap's
+closed form: the batch kernel's tiles are position-independent, so the row
+should read as not_overlap's).
 
 Usage:
     python audits/scenarios_audit.py                      # all scenarios, default ladders, scalar kernel
@@ -19,6 +22,7 @@ Usage:
     python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
     python audits/scenarios_audit.py hull_holes_far 64 128  # batch kernel, one big tile
     python audits/scenarios_audit.py lines_net_xor 128 256  # junction walk, one tile
+    python audits/scenarios_audit.py not_overlap_far 128    # not_overlap far from the origin
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that
@@ -46,6 +50,7 @@ from ioverlay_spark.options import FillRule, OverlayRule
 REF = {
     "spiral": {65536: 0.0742, 262144: 0.3509, 524288: 0.7445},
     "not_overlap": {256: 0.036901, 512: 0.177118, 1024: 0.745187, 2048: 3.282416},
+    "not_overlap_far": {},
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
     "hull_holes": {},
     "hull_holes_far": {},
@@ -59,6 +64,7 @@ REF = {
 DEFAULT_NS = {
     "spiral": [65536, 262144, 524288],
     "not_overlap": [256, 512, 1024],
+    "not_overlap_far": [128, 256],
     "windows": [128, 256, 512, 1024],
     "hull_holes": [64, 128, 256],
     "hull_holes_far": [64, 128],
@@ -72,6 +78,7 @@ DEFAULT_NS = {
 RULES = {
     "spiral": OverlayRule.SUBJECT,
     "not_overlap": OverlayRule.UNION,
+    "not_overlap_far": OverlayRule.UNION,
     "windows": OverlayRule.DIFFERENCE,
     "hull_holes": OverlayRule.DIFFERENCE,
     "hull_holes_far": OverlayRule.DIFFERENCE,
@@ -112,7 +119,7 @@ def spiral(count: int, radius: float) -> np.ndarray:
 
 def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | None,
            rings: int | None = None):
-    if name == "not_overlap":
+    if name in ("not_overlap", "not_overlap_far"):
         exp = n * n + (n - 1) * (n - 1)
         return count == exp and area2 == 200 * exp
     if name == "windows":
@@ -163,6 +170,11 @@ def build_int_inputs(name: str, n: int):
         subj, clip = [spiral(n, 100.0)], []
     elif name == "lines_net_xor":
         subj, clip = lines_net(n)
+    elif name == "not_overlap_far":
+        far = np.array([1 << 40, -(1 << 40)], dtype=np.int64)
+        subj, clip = (
+            [r + far for r in rings] for rings in scenarios.not_overlap(n)
+        )
     elif name == "hull_holes_far":
         subj, clip = scenarios.hull_holes(n)
         subj = subj + [subj[0] + np.array([2 * (20 * n + 10), 0], dtype=np.int64)]

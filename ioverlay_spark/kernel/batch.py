@@ -3,11 +3,14 @@ pipeline pass.
 
 The per-pair kernel costs ~600us/pair in numpy-call overhead when jobs are tiny
 (10-segment polygons). This module amortizes it: every job of a batch is translated
-into its own disjoint x-tile (slot * W), all segments are concatenated, and
-sort/merge/split/fill run ONCE over the whole batch — the bbox-overlap candidate
-pairs never join segments from different tiles, and a fill ray never meets another
-tile's segment, so results are bit-identical to running each job alone
-(differential-tested in tests/test_batch_kernel.py).
+into its own disjoint x-tile (slot * W) with its y starting at 0, all segments are
+concatenated, and sort/merge/split/fill run ONCE over the whole batch — the
+bbox-overlap candidate pairs never join segments from different tiles, and a fill
+ray never meets another tile's segment, so results are bit-identical to running
+each job alone (differential-tested in tests/test_batch_kernel.py). Every gate
+downstream measures extents, not positions, so where the jobs sit does not change
+the path they take; a batch whose tiles would leave int64 runs as consecutive
+chunks of jobs (_tile_place).
 
 This is the engine's List-solver analog of the reference's job-level parallelism
 (rayon over jobs), re-expressed as data-level batching inside one Arrow batch:
@@ -47,38 +50,17 @@ from ..options import (
 from .extract import (
     bind_holes,
     boundary_mask,
-    concat_rings,
-    extract_rings,
     ring_gather_index,
     ring_starts,
     validate_rings,
     walk_rings,
 )
 from .fill import compute_fills_windowed
-from .overlay import build_graph
 from .segments import Segments, build_segments
 from .split import split_segments
 from .gcpause import gc_paused_fn
 
 Shapes = list[list[np.ndarray]]
-
-_COORD_CAP = 1 << 30  # beyond this, scalar path (object-int math) is required
-
-
-def _scalar_flat(jobs, rules, fill_rule, options) -> dict:
-    """Per-job scalar kernel (build_graph + extract_rings, one slot per job),
-    bound by _bind_flat: {rule: flat tuple}. It runs inside Spark tasks, so on
-    the calling thread (threads=1) like _tiled_graph."""
-    parts: dict = {rule: [] for rule in rules}
-    for j, (subj, clip) in enumerate(jobs):
-        g = build_graph(subj, clip, fill_rule, options, threads=1)
-        for rule in rules:
-            rings, a2 = extract_rings(g.segments, g.fills, rule, options)
-            parts[rule].append((rings._replace(slot=np.full(len(a2), j)), a2))
-    return {
-        rule: _bind_flat(concat_rings([r for r, _ in p]), np.concatenate([a for _, a in p]))
-        for rule, p in parts.items()
-    }
 
 
 def interacting_mask(ax, ay, bx, by, cx, cy, dx_, dy_, with_collinear: bool = False):
@@ -129,8 +111,7 @@ def vectorized_ring_segments(ring_pts, ring_job, ring_subj, options=DEFAULT_OPTI
     winding counts and per-segment job ids. Clean rings build entirely in numpy;
     dirty rings (dup/collinear vertices) take the reference-exact scalar cleanup.
 
-    Returns (ax, ay, bx, by, subj, clip, ejob), _EMPTY, or None (coords too large
-    for int64-safe batch math — caller must use the scalar path)."""
+    Returns (ax, ay, bx, by, subj, clip, ejob) or _EMPTY."""
     nr = len(ring_pts)
     if nr == 0:
         return _EMPTY
@@ -143,12 +124,16 @@ def vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options=DEFAUL
     """vectorized_ring_segments over an already-FLAT ring layout: P is the
     (total_pts, 2) int64 stack of every ring's points, counts the per-ring point
     counts — the shape Arrow list columns decode to with zero per-row Python
-    (operators/overlay_df.py's mapInArrow worker)."""
+    (operators/overlay_df.py's mapInArrow worker).
+
+    The duplicate and collinear tests read offsets from each ring's own min
+    corner (uint64 differences: exact at any position). A ring whose extent
+    reaches 2^31 counts as dirty, so the collinear cross is exact in int64 on
+    every clean ring."""
     nr = len(counts)
     if nr == 0 or len(P) == 0:
         return _EMPTY
-    if int(np.abs(P).max(initial=0)) >= _COORD_CAP:
-        return None
+    P = np.asarray(P, dtype=np.int64)
     S = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
     ring_of = np.repeat(np.arange(nr, dtype=np.int64), counts)
     idx = np.arange(len(P), dtype=np.int64)
@@ -156,15 +141,22 @@ def vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options=DEFAUL
     end = S[ring_of + 1]
     nxt = np.where(idx + 1 == end, start, idx + 1)
 
-    # dirty ring = any consecutive duplicate or (unless preserved) collinear vertex
+    # dirty ring = any consecutive duplicate or (unless preserved) collinear
+    # vertex, or an extent of 2^31 or more
     dirty = np.zeros(nr, dtype=bool)
     dirty[counts < 3] = True
+    ne = np.flatnonzero(counts)
+    corner = np.zeros((nr, 2), dtype=np.int64)
+    corner[ne] = np.minimum.reduceat(P, S[ne], axis=0)
+    L = P.view(np.uint64) - corner[ring_of].view(np.uint64)
+    dirty[ne[np.maximum.reduceat(L.max(axis=1), S[ne]) >= 1 << 31]] = True
+    L = L.view(np.int64)
     dup = np.all(P == P[nxt], axis=1)
     dirty[ring_of[dup]] = True
     if not options.preserve_input_collinear:
         prv = np.where(idx == start, end - 1, idx - 1)
-        a = P - P[prv]
-        b = P - P[nxt]
+        a = L - L[prv]
+        b = L - L[nxt]
         cr = a[:, 0] * b[:, 1] - a[:, 1] * b[:, 0]
         dirty[ring_of[cr == 0]] = True
 
@@ -237,52 +229,70 @@ def _flatten_jobs(jobs):
     return P, counts, np.asarray(ring_job, dtype=np.int64), np.asarray(ring_subj, dtype=bool)
 
 
-def _tile_place(t, nj):
-    """Translate each job's segments into its own disjoint x-tile (slot * W)."""
+def _tile_place(ax, ay, bx, by, ejob, nj):
+    """Tile placement shared by the batch kernels (a < b segment endpoints,
+    ejob each segment's job): (xoff, yoff, W, per). Job j moves by
+    (xoff[j], yoff[j]) into x-tile k = j % per of its chunk, [k * W,
+    (k + 1) * W), with its min corner at (k * W + 2, 0). Tiles never share an
+    x, so no stage pairs segments or casts a ray across jobs, and each job's
+    y starts at 0, so a gate that reads a chunk's y extent sees one job's
+    height. W is the widest job plus 8; chunks of per = max(1, 2^62 // W)
+    consecutive jobs keep their tiles inside int64. A job 2^62 or more wide,
+    alone in its chunk, keeps its x; one 2^63 or more tall keeps its y.
+    Offsets wrap in int64: placed and restored coordinates are exact."""
+    lo = np.full((2, nj), np.iinfo(np.int64).max)
+    hi = np.full((2, nj), np.iinfo(np.int64).min)
+    np.minimum.at(lo[0], ejob, ax)  # a < b lexicographically: ax is the min x
+    np.maximum.at(hi[0], ejob, bx)
+    np.minimum.at(lo[1], ejob, np.minimum(ay, by))
+    np.maximum.at(hi[1], ejob, np.maximum(ay, by))
+    absent = hi[0] < lo[0]
+    lo[:, absent] = hi[:, absent] = 0
+    # extents as uint64 differences: exact at any int64 span
+    ext = hi.view(np.uint64) - lo.view(np.uint64)
+    W = int(ext[0].max()) + 8
+    per = max(1, (1 << 62) // W)
+    step = W if per > 1 else 0
+    xoff = np.where(ext[0] < 1 << 62, np.arange(nj) % per * step + 2 - lo[0], 0)
+    yoff = np.where(ext[1] < 1 << 63, -lo[1], 0)
+    return xoff, yoff, W, per
+
+
+def _placed_chunks(t, nj):
+    """The placed chunks of an ingested batch t = (ax, ay, bx, by, subj, clip,
+    ejob): (j0, segs, xoff, yoff, W) per chunk of jobs [j0, j0 + len(xoff)),
+    segs in tiled coordinates, xoff / yoff the chunk's per-slot offsets."""
     ax, ay, bx, by, subj, clip, ejob = t
-
-    # ---- tile placement -----------------------------------------------------
-    BIG = np.int64(1 << 62)
-    minx = np.full(nj, BIG, dtype=np.int64)
-    maxx = np.full(nj, -BIG, dtype=np.int64)
-    np.minimum.at(minx, ejob, ax)  # a<b lexicographic => ax is the segment min x
-    np.maximum.at(maxx, ejob, bx)
-    present = maxx >= minx
-    minx[~present] = 0
-    maxx[~present] = 0
-    W = int((maxx - minx).max(initial=0)) + 8
-    y0 = int(min(ay.min(), by.min()))
-    H = int(max(ay.max(), by.max())) - y0 + 1
-    if W * max(H, 1) >= (1 << 60) or W * nj >= (1 << 62):
-        return None
-    off = np.arange(nj, dtype=np.int64) * W + 2 - minx
-    ax = ax + off[ejob]
-    bx = bx + off[ejob]
-    ay = ay - y0
-    by = by - y0
-    return Segments(ax, ay, bx, by, subj, clip), off, y0, W
+    xoff, yoff, W, per = _tile_place(ax, ay, bx, by, ejob, nj)
+    dx, dy = xoff[ejob], yoff[ejob]
+    segs = Segments(ax + dx, ay + dy, bx + dx, by + dy, subj, clip)
+    if per >= nj:
+        yield 0, segs, xoff, yoff, W
+        return
+    o = np.argsort(ejob, kind="stable")
+    cut = np.searchsorted(ejob[o], np.arange(0, nj + per, per)).tolist()
+    for j0, lo, hi in zip(range(0, nj, per), cut, cut[1:]):
+        yield j0, segs.take(o[lo:hi]), xoff[j0:j0 + per], yoff[j0:j0 + per], W
 
 
-def _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options):
-    """Ingest + tile placement + split + fill: one tiled pass over a whole
-    batch in the flat ring layout. Returns (segs, all_fills, starts, off, y0)
-    in TILED coordinates, _EMPTY, or None (huge coords / overflow risk: caller
-    must take the scalar path)."""
-    t = vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options)
-    if t is None or t == _EMPTY:
-        return t
-    t = _tile_place(t, nj)
-    if t is None:
-        return None
-    raw, off, y0, W = t
+def _slot_starts(ax, nslots, W):
+    """Slot k's first row in tiled segments sorted by ax, k in [0, nslots]."""
+    inner = np.searchsorted(ax, np.arange(1, nslots, dtype=np.int64) * W)
+    return np.concatenate([[0], inner, [len(ax)]]).astype(np.int64)
+
+
+def _tiled_graph(raw, nslots, W, fill_rule):
+    """Split + fill of one placed chunk: (segs, fills, starts) in tiled
+    coordinates, slot k owning segments [starts[k], starts[k + 1]), or
+    _EMPTY."""
     segs = split_segments(raw, threads=1)
     if len(segs) == 0:
         return _EMPTY
-    starts = np.searchsorted(segs.ax, np.arange(nj + 1, dtype=np.int64) * W)
-    # one fill over the whole batch: tiles are disjoint in x, so a ray never
+    # one fill over the whole chunk: tiles are disjoint in x, so a ray never
     # meets another tile's segment
-    all_fills = compute_fills_windowed(segs, fill_rule, threads=1)
-    return segs, all_fills, starts, off, y0
+    return segs, compute_fills_windowed(segs, fill_rule, threads=1), _slot_starts(
+        segs.ax, nslots, W
+    )
 
 
 def graph_batch(
@@ -291,31 +301,25 @@ def graph_batch(
     options: OverlayOptions = DEFAULT_OPTIONS,
 ):
     """Batched split+fill: per-job (Segments, fills) in ORIGINAL coordinates, via
-    one tiled split_segments + compute_fills_windowed pass. Returns None when the
-    batch needs the scalar path (caller falls back to per-job build_graph)."""
+    one tiled split_segments + compute_fills_windowed pass per chunk."""
     nj = len(jobs)
-    t = _tiled_graph(*_flatten_jobs(jobs), nj, fill_rule, options)
-    if t is None:
-        return None
-    empty = Segments(*[np.empty(0, dtype=np.int64)] * 6)
+    empty = (Segments.empty(), np.empty(0, dtype=np.uint8))
+    out = [empty] * nj
+    t = vectorized_ring_segments_flat(*_flatten_jobs(jobs), options)
     if t == _EMPTY:
-        return [(empty, np.empty(0, dtype=np.uint8)) for _ in range(nj)]
-    segs, all_fills, starts, off, y0 = t
-    out = []
-    for slot in range(nj):
-        lo, hi = int(starts[slot]), int(starts[slot + 1])
-        if lo == hi:
-            out.append((empty, np.empty(0, dtype=np.uint8)))
+        return out
+    for j0, raw, xoff, yoff, W in _placed_chunks(t, nj):
+        g = _tiled_graph(raw, len(xoff), W, fill_rule)
+        if g == _EMPTY:
             continue
-        sub = Segments(
-            segs.ax[lo:hi] - int(off[slot]),
-            segs.ay[lo:hi] + y0,
-            segs.bx[lo:hi] - int(off[slot]),
-            segs.by[lo:hi] + y0,
-            segs.subj[lo:hi],
-            segs.clip[lo:hi],
-        )
-        out.append((sub, all_fills[lo:hi]))
+        segs, fills, starts = g
+        for k, (lo, hi) in enumerate(zip(starts.tolist(), starts[1:].tolist())):
+            if lo < hi:
+                dx, dy = xoff[k], yoff[k]
+                out[j0 + k] = (Segments(
+                    segs.ax[lo:hi] - dx, segs.ay[lo:hi] - dy, segs.bx[lo:hi] - dx,
+                    segs.by[lo:hi] - dy, segs.subj[lo:hi], segs.clip[lo:hi],
+                ), fills[lo:hi])
     return out
 
 
@@ -351,18 +355,19 @@ def _bind_flat(rings, a2):
     return slot[o], sid[o], cidx[o], lens[o], np.stack([x[pi], y[pi]], axis=1), a2[o]
 
 
-def _overlay_tail_flat(t, rules, options):
-    """Extraction over split+filled tiled parts -> {rule: flat tuple} sorted by
-    (job, shape, contour): per rule one extract.walk_rings over every tile,
-    one validate_rings pass and _bind_flat."""
+def _overlay_tail_flat(t, xoff, yoff, rules, options):
+    """Extraction over one split+filled placed chunk -> {rule: flat tuple}
+    sorted by (slot, shape, contour), rings back in job coordinates: per rule
+    one extract.walk_rings over every tile, one validate_rings pass and
+    _bind_flat."""
     if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
-    segs, all_fills, starts, off, y0 = t
+    segs, all_fills, starts = t
     clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
     return {
         rule: _bind_flat(*validate_rings(walk_rings(
             segs, boundary_mask(all_fills, rule), all_fills, starts, rule,
-            clockwise_output, off, y0,
+            clockwise_output, xoff, yoff,
         ), options))
         for rule in rules
     }
@@ -385,30 +390,24 @@ def overlay_batch_flat_out(
     {rule: (job, shape_id, contour_idx, lens, pts, area2)} where pts is the
     (sum(lens), 2) int64 concatenation of every output ring in (job, shape_id,
     contour_idx) order. Each job's rings and areas equal the per-job scalar
-    kernel's (build_graph + extract_shapes(..., with_areas=True)): both check
-    their walked rings with extract.validate_rings. Jobs need not be
-    pre-sorted in ring_job. Falls back to the scalar kernel per job when
-    coordinates are large enough to need python-int math batch-wide."""
+    kernel's (build_graph + extract_shapes(..., with_areas=True)) at any
+    coordinate width: both check their walked rings with
+    extract.validate_rings. Jobs need not be pre-sorted in ring_job."""
     rules = [OverlayRule(r) for r in rules]
-    if nj == 0:
+    t = _EMPTY if nj == 0 else vectorized_ring_segments_flat(
+        P, counts, ring_job, ring_subj, options
+    )
+    if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
-    t = _tiled_graph(P, counts, ring_job, ring_subj, nj, fill_rule, options)
-    if t is None:
-        return _scalar_flat(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj), rules, fill_rule, options
-        )
-    return _overlay_tail_flat(t, rules, options)
-
-
-def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
-    """Reassemble (subj_rings, clip_rings) jobs from the flat ring layout — only
-    for the scalar fallback (coords beyond _COORD_CAP)."""
-    S = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(counts)])
-    jobs: list[tuple[list, list]] = [([], []) for _ in range(nj)]
-    for r in range(len(counts)):
-        tgt = jobs[int(ring_job[r])]
-        (tgt[0] if ring_subj[r] else tgt[1]).append(P[S[r]:S[r + 1]])
-    return jobs
+    parts: dict = {rule: [] for rule in rules}
+    for j0, raw, xoff, yoff, W in _placed_chunks(t, nj):
+        g = _tiled_graph(raw, len(xoff), W, fill_rule)
+        for rule, flat in _overlay_tail_flat(g, xoff, yoff, rules, options).items():
+            parts[rule].append((flat[0] + j0, *flat[1:]))
+    return {
+        rule: p[0] if len(p) == 1 else tuple(np.concatenate(c) for c in zip(*p))
+        for rule, p in parts.items()
+    }
 
 
 def _flat_to_job_shapes(flat, nj: int) -> list[Shapes]:

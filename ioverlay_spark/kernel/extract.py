@@ -426,12 +426,12 @@ def _trigger_loop(g: _LinkGraph, spans, hole_at, clockwise: bool) -> RingSet:
 
 
 def walk_rings(segs, mask, fills, starts, rule: OverlayRule, clockwise: bool,
-               off, y0) -> RingSet:
+               xoff, yoff) -> RingSet:
     """The reference contour walk over the boundary links (mask) of a batch of
     slots: slot k owns segments [starts[k], starts[k + 1]) and no endpoint is
     shared across slots. Returns every slot's rings in scalar trigger order
-    (by slot, then trigger order), in slot coordinates (x - off[slot],
-    y + y0).
+    (by slot, then trigger order), in slot coordinates (x - xoff[slot],
+    y - yoff[slot], wrapping in int64 like the placement that added them).
 
     next_link turns to the link adjacent to the incoming one in the ring's
     rotation whenever that link is still unvisited, so a walk that never
@@ -473,7 +473,8 @@ def walk_rings(segs, mask, fills, starts, rule: OverlayRule, clockwise: bool,
             np.concatenate([p.slot for p in parts]), kind="stable"
         ))
     return rings._replace(
-        x=rings.x - np.repeat(off[rings.slot], rings.lens), y=rings.y + y0
+        x=rings.x - np.repeat(xoff[rings.slot], rings.lens),
+        y=rings.y - np.repeat(yoff[rings.slot], rings.lens),
     )
 
 
@@ -694,9 +695,10 @@ def walk_contours(segs: Segments, fills: np.ndarray, rule: OverlayRule,
                   clockwise_output: bool) -> list[tuple[list[tuple[int, int]], bool]]:
     """walk_rings over one segment set as [(ring_points, is_hole)], the view
     walk_vectors reads."""
+    z = np.zeros(1, dtype=np.int64)
     r = walk_rings(
         segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)]), rule,
-        clockwise_output, np.zeros(1, dtype=np.int64), 0,
+        clockwise_output, z, z,
     )
     pts = list(zip(r.x.tolist(), r.y.tolist()))
     ends = np.cumsum(r.lens).tolist()
@@ -882,34 +884,42 @@ def validate_rings(rings: RingSet, options: OverlayOptions) -> tuple[RingSet, np
     simplified. Returns the kept rings in input order, simplified ones
     substituted, and their signed shoelace area2 (CCW positive).
 
-    Exactness: while a ring's |coords| are < 2^30 (4*mx^2 < 2^62), every
-    shoelace term and collinearity cross is exact in int64, and the per-ring
-    term sum is taken in 32-bit hi/lo halves whose sums cannot overflow at any
-    ring length; the high word then tells exactly whether area2 fits int64.
-    Dirty rings, rings past that coordinate bound and rings whose area2 does
-    not fit take the scalar _validate_ring (python ints). Dropping a duplicate
-    or collinear vertex never changes the shoelace sum."""
+    Exactness: both tests read offsets from each ring's own min corner
+    (uint64 differences: exact at any position; neither the shoelace sum nor
+    a cross changes under translation). While a ring's extent is < 2^31,
+    every shoelace term and collinearity cross of its offsets is exact in
+    int64, and the per-ring term sum is taken in 32-bit hi/lo halves whose
+    sums cannot overflow at any ring length; the high word then tells exactly
+    whether area2 fits int64. Dirty rings, rings past that extent and rings
+    whose area2 does not fit take the scalar _validate_ring (python ints).
+    Dropping a duplicate or collinear vertex never changes the shoelace
+    sum."""
     lens = rings.lens
     n = len(lens)
     if n == 0:
         return rings, np.empty(0, dtype=np.int64)
     x, y = rings.x, rings.y
     pos = ring_starts(lens)
+    lx, ly = (
+        v.view(np.uint64) - np.repeat(np.minimum.reduceat(v, pos), lens).view(np.uint64)
+        for v in (x, y)
+    )
+    ext = np.maximum.reduceat(np.maximum(lx, ly), pos)
+    lx, ly = lx.view(np.int64), ly.view(np.int64)
     last = pos + lens - 1
     nxt = np.arange(1, len(x) + 1, dtype=np.int64)
     nxt[last] = pos
-    x1, y1 = x[nxt], y[nxt]
-    terms = x * y1 - x1 * y
+    x1, y1 = lx[nxt], ly[nxt]
+    terms = lx * y1 - x1 * ly
     hi = terms >> 32
     lo = np.add.reduceat(terms - (hi << 32), pos)
     hi = np.add.reduceat(hi, pos) + (lo >> 32)
     a2 = (hi << 32) + (lo & 0xFFFFFFFF)
-    mx = np.maximum.reduceat(np.maximum(np.abs(x), np.abs(y)), pos)
-    scalar = (mx >= 1 << 30) | (hi < -(1 << 31)) | (hi >= 1 << 31)
+    scalar = (ext >= 1 << 31) | (hi < -(1 << 31)) | (hi >= 1 << 31)
     if not options.preserve_output_collinear:
         prv = np.arange(-1, len(x) - 1, dtype=np.int64)
         prv[pos] = last
-        cr = (x - x[prv]) * (y1 - y) - (y - y[prv]) * (x1 - x)
+        cr = (lx - lx[prv]) * (y1 - ly) - (ly - ly[prv]) * (x1 - lx)
         bad = np.flatnonzero(cr == 0)  # duplicates included: they cross to 0
         scalar[np.searchsorted(pos, bad, side="right") - 1] = True
     long_enough = lens >= 3
@@ -967,9 +977,10 @@ def extract_rings(
 ) -> tuple[RingSet, np.ndarray]:
     """Boundary filter -> reference walk -> validate_rings: the kept rings
     (slot 0) in walk order and their signed area2."""
+    z = np.zeros(1, dtype=np.int64)
     rings = walk_rings(
         segs, boundary_mask(fills, rule), fills, np.array([0, len(segs)]), rule,
-        options.output_direction == ContourDirection.CLOCKWISE, np.zeros(1, dtype=np.int64), 0,
+        options.output_direction == ContourDirection.CLOCKWISE, z, z,
     )
     return validate_rings(rings, options)
 
@@ -1043,22 +1054,6 @@ def _find_contour(g: _LinkGraph, start: _StartPath, clockwise: bool,
 
 # VisitState codes (extract_ogc.rs VisitState)
 _UNVISITED, _SKIPPED, _HULL_V, _HOLE_V = 0, 1, 2, 3
-
-
-def _skip_contour(g, start: _StartPath, clockwise: bool, state: int, visited) -> None:
-    # (iOverlay/src/core/extract_ogc.rs:176-211)
-    link = start.link_id
-    node = start.node_id
-    visited[link] = state
-    last_link = g.next_link(link, start.last_node_id, not clockwise, visited)
-    guard = 4 * g.m + 8
-    while link != last_link and guard > 0:
-        guard -= 1
-        link = g.next_link(link, node, clockwise, visited)
-        if link < 0:
-            break
-        node = g.other(link, node)
-        visited[link] = state
 
 
 def _collect_shape(g, start: _StartPath, clockwise: bool, visited,
@@ -1143,7 +1138,7 @@ def extract_shapes_ogc(
         direction = hole == is_cw
         start = _StartPath(g, direction, top)
         if hole:
-            _skip_contour(g, start, trav, _HOLE_V, visited)
+            _find_contour(g, start, trav, _HOLE_V, visited)
             any_holes = True
             continue
         shape = _collect_shape(g, start, trav, visited, options)

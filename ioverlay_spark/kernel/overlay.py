@@ -17,7 +17,7 @@ import numpy as np
 from ..options import DEFAULT_OPTIONS, FillRule, OverlayOptions, OverlayRule
 from .extract import extract_shapes
 from .fill import compute_fills_windowed
-from .segments import Segments, build_segments, sort_and_merge
+from .segments import Segments
 from .split import split_segments
 
 Shapes = list[list[np.ndarray]]  # shapes -> rings (hull first) -> (n,2) int64
@@ -50,28 +50,17 @@ def build_graph(
     rings = [np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in subj] + [
         np.asarray(r, dtype=np.int64).reshape(-1, 2) for r in clip
     ]
-    t = None
-    if rings:
-        # batched ingest (one numpy pass over all rings; dirty rings take the
-        # reference-exact scalar cleanup inside) — the per-ring python loop in
-        # build_segments was ~20% of large monolithic one-shots. Falls back to
-        # the scalar path only for coords beyond the int64-safe batch cap.
-        from .batch import _EMPTY, vectorized_ring_segments
+    from .batch import _EMPTY, vectorized_ring_segments
 
-        t = vectorized_ring_segments(
-            rings,
-            np.zeros(len(rings), dtype=np.int64),
-            [True] * len(subj) + [False] * len(clip),
-            options,
-        )
-    if t is None:
-        segs = Segments.concat(
-            [
-                build_segments(subj, True, options.preserve_input_collinear),
-                build_segments(clip, False, options.preserve_input_collinear),
-            ]
-        )
-    elif isinstance(t, str):  # _EMPTY
+    # batched ingest: one numpy pass over all rings; dirty rings take the
+    # reference-exact scalar cleanup inside
+    t = vectorized_ring_segments(
+        rings,
+        np.zeros(len(rings), dtype=np.int64),
+        [True] * len(subj) + [False] * len(clip),
+        options,
+    )
+    if t == _EMPTY:
         segs = Segments.empty()
     else:
         ax, ay, bx, by, s, c, _ = t

@@ -249,6 +249,9 @@ def slice_shape(
 # (the kernel/batch.py disjoint-x-tile trick applied to the string pipeline)
 
 
+_CLIP_MAX_COORD = 1 << 30  # clip_paths_batch's coordinate bound (see its docstring)
+
+
 def clip_paths_batch(
     jobs: list[tuple[list[np.ndarray], np.ndarray]],
     fill_rule: FillRule = FillRule.NON_ZERO,
@@ -261,9 +264,14 @@ def clip_paths_batch(
     bit-identical per tile), and the per-sub-edge O(edges x segments) python loops
     of the scalar kernel (_split_path_edges / _winding_below / _on_polygon_boundary)
     become windowed vectorized passes. Bit-identical to per-job clip_path
-    (differential-tested); falls back to the scalar path on huge coordinates."""
-    from .batch import _COORD_CAP
+    (differential-tested).
 
+    The boundary pass (orientation crosses of path sub-edges against body
+    segments) and the winding pass (the midpoint ray's numerator) multiply
+    TILED coordinates in int64, so unlike the overlay batch this kernel is
+    not position-independent: a batch with any body or path |coordinate| at
+    or past _CLIP_MAX_COORD = 2^30, or whose tiles span too far, runs the
+    per-job clip_path instead."""
     nj = len(jobs)
     if nj == 0:
         return []
@@ -288,13 +296,10 @@ def clip_paths_batch(
         for ring in body:
             ring_pts.append(np.asarray(ring, dtype=np.int64).reshape(-1, 2))
             ring_job.append(j)
-        pts = np.asarray(path, dtype=np.int64).reshape(-1, 2)
-        path_pts.append(pts)
-        if len(pts) and int(np.abs(pts).max()) >= _COORD_CAP:
-            return scalar()
-    t = vectorized_ring_segments(ring_pts, ring_job, [True] * len(ring_pts))
-    if t is None:
+        path_pts.append(np.asarray(path, dtype=np.int64).reshape(-1, 2))
+    if any(len(p) and int(np.abs(p).max()) >= _CLIP_MAX_COORD for p in ring_pts + path_pts):
         return scalar()
+    t = vectorized_ring_segments(ring_pts, ring_job, [True] * len(ring_pts))
     if t == _EMPTY:
         return scalar()  # no body segments anywhere: keep scalar semantics exactly
     sax, say, sbx, sby, ssubj, sclip, sjob = t
@@ -527,68 +532,46 @@ def slice_batch(
     options: OverlayOptions = OverlayOptions(),
 ) -> list[list[list[np.ndarray]]]:
     """Batched slice_shape on the shared pipeline: every job's body+wall segment
-    set is translated into its own disjoint x-tile, the string split fixpoint
-    runs ONCE over the whole batch (the x-sweep candidate windows never pair
-    segments from different tiles) and so does the fill (a ray never meets
-    another tile's segment), then the slice walk runs per job on its
-    un-offset tile slice. Bit-identical to per-job slice_shape: within a
-    tile the sort order, candidate set, radius schedule and walk order equal
-    the scalar run (extra global rounds are no-ops for tiles whose marks have
-    dried up — same argument as kernel/batch.py)."""
-    from .batch import _COORD_CAP
-    from .segments import Segments
+    set is placed in its own x-tile by the overlay batch's placement
+    (batch._tile_place, chunked the same way), the string split fixpoint
+    runs ONCE per chunk (the x-sweep candidate windows never pair segments
+    from different tiles) and so does the fill (a ray never meets another
+    tile's segment), then the slice walk runs per job on its restored tile
+    slice. Bit-identical to per-job slice_shape at any coordinate width:
+    within a tile the sort order, candidate set, radius schedule and walk
+    order equal the scalar run (extra global rounds are no-ops for tiles
+    whose marks have dried up — same argument as kernel/batch.py), and the
+    split, string fill and python-int slice_extract are exact at any
+    width."""
+    from .batch import _placed_chunks, _slot_starts
     from .string_slice import (
         build_string_segments,
         compute_string_fills,
         slice_extract,
-        slice_shape_shared,
         split_segments_string,
     )
 
     nj = len(jobs)
-    if nj == 0:
-        return []
+    out: list[list[list[np.ndarray]]] = [[] for _ in range(nj)]
     seg_list = [
         build_string_segments(b, ps, options.preserve_input_collinear)
         for b, ps in jobs
     ]
-    W = 0
-    maxabs = 0
-    x0s = []
-    for s in seg_list:
-        if len(s) == 0:
-            x0s.append(0)
-            continue
-        x0 = int(min(s.ax.min(), s.bx.min()))
-        x1 = int(max(s.ax.max(), s.bx.max()))
-        x0s.append(x0)
-        W = max(W, x1 - x0)
-        maxabs = max(
-            maxabs,
-            int(np.abs(s.ax).max()), int(np.abs(s.bx).max()),
-            int(np.abs(s.ay).max()), int(np.abs(s.by).max()),
-        )
-    W += 4  # pad: tiles must not touch
-    if maxabs + nj * W >= _COORD_CAP:
-        return [slice_shape_shared(b, ps, fill_rule, options) for b, ps in jobs]
-    offs = [j * W - x0s[j] for j in range(nj)]
-    parts = [
-        Segments(s.ax + offs[j], s.ay, s.bx + offs[j], s.by, s.subj, s.clip)
-        for j, s in enumerate(seg_list)
-        if len(s)
-    ]
-    if not parts:
-        return [[] for _ in range(nj)]
-    batch = split_segments_string(Segments.concat(parts))
-    tile = batch.ax // W if len(batch) else np.zeros(0, dtype=np.int64)
-    fills = compute_string_fills(batch, fill_rule)
-    out = []
-    for j in range(nj):
-        idx = np.flatnonzero(tile == j)
-        if len(idx) == 0:
-            out.append([])
-            continue
-        s = batch.take(idx)
-        s = Segments(s.ax - offs[j], s.ay, s.bx - offs[j], s.by, s.subj, s.clip)
-        out.append(slice_extract(s, fills[idx], options))
+    segs = Segments.concat(seg_list)
+    if len(segs) == 0:
+        return out
+    ejob = np.repeat(np.arange(nj), [len(s) for s in seg_list])
+    t = (segs.ax, segs.ay, segs.bx, segs.by, segs.subj, segs.clip, ejob)
+    for j0, raw, xoff, yoff, W in _placed_chunks(t, nj):
+        batch = split_segments_string(raw)
+        fills = compute_string_fills(batch, fill_rule)
+        starts = _slot_starts(batch.ax, len(xoff), W).tolist()
+        for k, (lo, hi) in enumerate(zip(starts, starts[1:])):
+            if lo < hi:
+                dx, dy = xoff[k], yoff[k]
+                s = Segments(
+                    batch.ax[lo:hi] - dx, batch.ay[lo:hi] - dy, batch.bx[lo:hi] - dx,
+                    batch.by[lo:hi] - dy, batch.subj[lo:hi], batch.clip[lo:hi],
+                )
+                out[j0 + k] = slice_extract(s, fills[lo:hi], options)
     return out

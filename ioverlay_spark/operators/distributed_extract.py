@@ -299,10 +299,10 @@ def _extract_rings_core(
         share an endpoint: they are connectivity classes over exact
         endpoints), zero per-slot offsets."""
         lo, hi = int(bounds[c0]), int(bounds[c1])
+        z = np.zeros(c1 - c0, dtype=np.int64)
         rings = walk_rings(
             SimpleNamespace(ax=axv[lo:hi], ay=ayv[lo:hi], bx=bxv[lo:hi], by=byv[lo:hi]),
-            bmask[lo:hi], fills_arr[lo:hi], bounds[c0 : c1 + 1] - lo, rule, clockwise,
-            np.zeros(c1 - c0, dtype=np.int64), 0,
+            bmask[lo:hi], fills_arr[lo:hi], bounds[c0 : c1 + 1] - lo, rule, clockwise, z, z,
         )
         rings, a2 = validate_rings(rings, options)
         return rings._replace(slot=rings.slot + c0), a2
@@ -354,7 +354,7 @@ def _extract_rings_core(
     return pa.Table.from_batches([record_batch(cols, schema=_RINGS_ARROW_SCHEMA)])
 
 
-_NODE_CAP = 1 << 30  # same bound as kernel.batch._COORD_CAP: packing is exact below it
+_NODE_CAP = 1 << 30  # the 2^30-biased node packing is exact for |coords| below it
 
 
 def _fused_extract_arrays(
@@ -508,8 +508,8 @@ def _pack_boundary_rows_iter(batches):
 
 def _node_expr(x: str, y: str) -> F.Column:
     # 2^30-biased packing of a point into one long node id: ids live in
-    # [0, 2^62) — exact (collision-free) for |coords| < 2^30, the engine-wide
-    # int64-product coordinate cap. Wider grids take _wide_node_ids (exact
+    # [0, 2^62) — exact (collision-free) for |coords| < _NODE_CAP = 2^30.
+    # Wider grids take _wide_node_ids (exact
     # dense ids via a distinct-points dim), never a silent collision
     # (VERDICT r02 Wrong #3).
     return (F.col(x) + F.lit(_NODE_CAP)) * F.lit(2 * _NODE_CAP) + (F.col(y) + F.lit(_NODE_CAP))

@@ -594,7 +594,6 @@ def _q_ogc_union_pinch():
         import pandas as pd
 
         from .kernel.extract import extract_shapes_ogc, ring_area2
-        from .kernel.overlay import build_graph
         from .options import DEFAULT_OPTIONS, FillRule, OverlayRule
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -616,11 +615,6 @@ def _q_ogc_union_pinch():
                 ids.append(int(t.doc_id))
             # one batched split+fill pass; OGC extraction stays per job
             graphs = graph_batch(jobs, FillRule.NON_ZERO)
-            if graphs is None:
-                graphs = [
-                    (g.segments, g.fills)
-                    for g in (build_graph(b, c, FillRule.NON_ZERO) for b, c in jobs)
-                ]
             rows = []
             for d, (segs, fills) in zip(ids, graphs):
                 shapes = extract_shapes_ogc(segs, fills, OverlayRule.SUBJECT, DEFAULT_OPTIONS)

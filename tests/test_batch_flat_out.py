@@ -2,9 +2,11 @@
 area2 arrays) vs the per-job scalar kernel (build_graph + extract_shapes(...,
 with_areas=True)) — ring sets, ordering, and areas must be BIT-IDENTICAL (the
 batch is an execution strategy, not an approximation), across random stars,
-holes, degenerates, multi-hull slots that force the per-slot fallback,
-unsorted ring_job layouts, the vectorized walk, its scalar-trigger replay and
-the scalar-walk fallback.
+holes, degenerates, multi-hull slots with holes (bind_holes' ray shot),
+unsorted ring_job layouts, long rings, jobs far from the origin and jobs as
+wide as int64 (batches that run as several chunks). The batch also takes the
+same path wherever its jobs sit: moved jobs give the moved output with the
+same scalar-fallback call counts.
 Also covers overlay()'s >=256-ring clustered flat route vs the monolithic
 graph, order-canonically (output shape order is not contract, kernel/overlay.py
 docstring)."""
@@ -140,10 +142,9 @@ def test_one_job_batch_runs_on_the_calling_thread(monkeypatch):
 
 
 def test_past_cap_job_runs_on_the_calling_thread(monkeypatch):
-    """A job with coordinates past the tiled kernel's 2^30 cap takes the
-    per-job scalar fallback inside the batch kernel, which also runs on the
-    calling thread: the two-star job above, moved to 2^31, runs with every
-    thread pool patched to raise and equals build_graph + extract_shapes."""
+    """A job far from the origin runs the same tiled kernel on the calling
+    thread: the two-star job above, moved to 2^31, runs with every thread
+    pool patched to raise and equals build_graph + extract_shapes."""
     import concurrent.futures
 
     from ioverlay_spark.kernel import overlap
@@ -162,7 +163,7 @@ def test_past_cap_job_runs_on_the_calling_thread(monkeypatch):
         ]
 
     def no_pool(*args, **kwargs):
-        raise AssertionError("past-cap batch started a thread pool")
+        raise AssertionError("far batch started a thread pool")
 
     monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", no_pool)
     monkeypatch.setattr(overlap, "ThreadPoolExecutor", no_pool)
@@ -170,6 +171,105 @@ def test_past_cap_job_runs_on_the_calling_thread(monkeypatch):
     flat = overlay_batch_flat_out(P, counts, ring_job, ring_subj, nj, RULES, FillRule.NON_ZERO)
     for rule in RULES:
         assert flat_to_jobs(flat[rule], 1)[0] == want[rule], rule.value
+
+
+def _translation_jobs():
+    """Seeded flagship L-hexagon x rect jobs, stars, rects with holes, a ring
+    with duplicate and collinear vertices and side-by-side rects whose union
+    keeps a collinear vertex (both take the scalar cleanups)."""
+    rnd = random.Random(53)
+    jobs = []
+    for _ in range(24):
+        x1, y1 = rnd.randrange(0, 1 << 19), rnd.randrange(0, 1 << 19)
+        x2, y2 = x1 + rnd.randrange(256, 8192), y1 + rnd.randrange(256, 8192)
+        xm, ym = (x1 + x2) // 2, (y1 + y2) // 2
+        hexagon = np.array(
+            [[x1, y1], [x2, y1], [x2, ym], [xm, ym], [xm, y2], [x1, y2]], dtype=np.int64
+        )
+        cx, cy = x1 + rnd.randrange(0, 6000), y1 + rnd.randrange(0, 6000)
+        w, h = rnd.randrange(200, 4096), rnd.randrange(200, 4096)
+        jobs.append(([hexagon], [rect(cx, cy, w, h)]))
+    for _ in range(12):
+        cx, cy = rnd.randrange(0, 100000), rnd.randrange(0, 100000)
+        jobs.append(([star(cx, cy, 3000, 800, rnd.randrange(3, 9), rnd.random())],
+                     [star(cx + 400, cy - 300, 2500, 1500, rnd.randrange(3, 9), rnd.random())]))
+    for _ in range(8):
+        x, y = rnd.randrange(0, 100000), rnd.randrange(0, 100000)
+        jobs.append(([rect(x, y, 2000, 2000), rect(x + 500, y + 500, 800, 800)[::-1].copy()],
+                     [rect(x + 300, y + 300, 1500, 1500)]))
+    dirty = np.array(
+        [[0, 0], [50, 0], [100, 0], [100, 0], [100, 100], [0, 100]], dtype=np.int64
+    )
+    jobs.append(([dirty], [rect(50, 50, 100, 100)]))
+    jobs.append(([rect(0, 0, 10, 10)], [rect(10, 0, 10, 10)]))
+    return jobs
+
+
+def test_batch_is_translation_invariant(monkeypatch):
+    """Where a batch sits does not change the path it takes: moved by
+    (2^30, 0), (2^40, -2^40) and (-2^61, 2^61), every rule's flat output is
+    the unmoved output shifted (slot, shape, contour, lens, points in order,
+    area2), with as many scalar ring validations, scalar ingest cleanups and
+    python-int orientation tests as unmoved. The second batch adds a job
+    2^31 wide, whose crossings take the python-int split."""
+    from collections import Counter
+
+    from ioverlay_spark.kernel import batch, extract, split
+
+    calls = Counter()
+
+    def count(mod, name):
+        f = getattr(mod, name)
+
+        def counted(*a, **k):
+            calls[name] += 1
+            return f(*a, **k)
+
+        monkeypatch.setattr(mod, name, counted)
+
+    count(extract, "_validate_ring")
+    count(batch, "build_segments")
+    count(split, "_orient")
+    plain = _translation_jobs()
+    wide = ([rect(0, 0, 1 << 31, 10)], [rect(1 << 30, -5, 10, 20), rect(3, 3, 100, 2)])
+    for jobs in (plain, [wide] + plain[:3]):
+        P, counts, ring_job, ring_subj, nj = flatten_jobs(jobs, shuffle_seed=3)
+        calls.clear()
+        base = overlay_batch_flat_out(P, counts, ring_job, ring_subj, nj, RULES)
+        base_calls = dict(calls)
+        assert base_calls["build_segments"] > 0 and base_calls["_validate_ring"] > 0
+        assert (base_calls.get("_orient", 0) > 0) == (jobs[0] is wide)
+        for dx, dy in ((1 << 30, 0), (1 << 40, -(1 << 40)), (-(1 << 61), 1 << 61)):
+            calls.clear()
+            moved = overlay_batch_flat_out(
+                P + np.array([dx, dy], dtype=np.int64), counts, ring_job, ring_subj, nj, RULES
+            )
+            assert dict(calls) == base_calls, (dx, dy)
+            for rule in RULES:
+                b, m = base[rule], moved[rule]
+                for k in (0, 1, 2, 3, 5):
+                    assert np.array_equal(b[k], m[k]), (dx, dy, rule.value, k)
+                assert np.array_equal(b[4] + np.array([dx, dy]), m[4]), (dx, dy, rule.value)
+
+
+def test_batch_at_full_int64_width():
+    """A job spanning x in [-2^63 + 4, 2^63 - 4] runs in its own chunk with
+    its own coordinates, between two small jobs, and equals build_graph +
+    extract_shapes on every rule, area2 values past int64 included; jobs
+    2^60 wide run in chunks of three."""
+    lo, hi = -(1 << 63) + 4, (1 << 63) - 4
+    mid = ([np.array([[lo, -5], [hi, -7], [hi, 9], [lo, 3]], dtype=np.int64)],
+           [np.array([[-10, lo], [20, lo], [30, hi], [-15, hi]], dtype=np.int64)])
+    jobs = [([rect(0, 0, 10, 10)], [rect(5, 5, 10, 10)]), mid,
+            ([rect(100, 100, 50, 50)], [rect(120, 90, 10, 100)])]
+    assert_flat_matches(jobs, FillRule.EVEN_ODD)
+    flat = overlay_batch_flat_out(*flatten_jobs(jobs), [OverlayRule.UNION])
+    assert max(abs(int(a)) for a in flat[OverlayRule.UNION][5]) >= 1 << 63
+    w = 1 << 60
+    assert_flat_matches(
+        [([rect(j * 7, 0, w, 100)], [rect(w // 3, 30 + j, 1000, 100)]) for j in range(7)],
+        FillRule.NON_ZERO,
+    )
 
 
 @pytest.mark.parametrize("fill_rule", [FillRule.EVEN_ODD, FillRule.NON_ZERO])
@@ -188,9 +288,9 @@ def test_flat_out_random_stars(fill_rule):
 
 
 def test_flat_out_holes_multihull_degenerate():
-    """Multi-hull-with-holes slots force the batch tail's per-slot bind_holes
-    binding; rings past the vectorized walk's 256-point cap force the scalar
-    walk; both must merge back in exact order."""
+    """Slots with several hulls and holes take bind_holes' ray shot, slots
+    with one hull its shortcut; rings of 300 links come back whole; all must
+    come back in exact order."""
     rnd = random.Random(41)
     jobs = []
     for _ in range(25):
@@ -200,7 +300,7 @@ def test_flat_out_holes_multihull_degenerate():
         jobs.append(([outer, hole], [rect(x + 300, y + 300, 1500, 1500)]))
     for _ in range(25):
         # two disjoint donuts in ONE job -> >=2 hulls each with a hole:
-        # exercises the hulls_kept>1 fallback inside the fast tail
+        # the hole binding's ray shot picks each hole's hull
         x, y = rnd.randrange(0, 100000), rnd.randrange(0, 100000)
         subj = [
             rect(x, y, 1000, 1000), rect(x + 200, y + 200, 600, 600)[::-1].copy(),
@@ -210,7 +310,7 @@ def test_flat_out_holes_multihull_degenerate():
         jobs.append((subj, [rect(x - 100, y - 100, 7000, 1200)]))
     for _ in range(5):
         # a 300-vertex circle around a small clip: SUBJECT, UNION, XOR and
-        # DIFFERENCE keep a ring over the cap, so their tiles walk in python
+        # DIFFERENCE keep a 300-link ring
         x, y = rnd.randrange(0, 100000), rnd.randrange(0, 100000)
         jobs.append(([star(x, y, 5000, 5000, 150, rnd.random())],
                      [rect(x - 1000, y - 1000, 2000, 2000)]))

@@ -3,7 +3,7 @@
 `cross_pairs_batch` must emit exactly the marks (as a multiset per pair, with
 is_round flags) that per-pair `split.cross_pair` emits, over every pair class:
 proper crosses (exact + rounded), T-junctions, collinear overlays, snap cases,
-and near-`_COORD_CAP` coordinates that exercise the i128 scalar fallback.
+and long skewed segments near 2^29 that exercise the i128 scalar fallback.
 """
 
 from __future__ import annotations
@@ -94,7 +94,7 @@ def test_snap_radius_paths():
 
 
 def test_overflow_fallback_rows_match():
-    # coordinates near _COORD_CAP with long skewed segments: the general-case
+    # coordinates near 2^29 with long skewed segments: the general-case
     # kx = |a1x|*|xy_b| overflows int64 and must route through python-int math
     c = (1 << 29) - 1
     pairs = [

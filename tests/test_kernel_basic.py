@@ -328,7 +328,12 @@ def test_fill_gate_boundary(monkeypatch):
     A tiled batch whose x extent is >= 2^31 but whose H * Dx is small stays on
     int64 operands."""
     import ioverlay_spark.kernel.fill as fill
-    from ioverlay_spark.kernel.batch import _flatten_jobs, _tiled_graph
+    from ioverlay_spark.kernel.batch import (
+        _flatten_jobs,
+        _placed_chunks,
+        _tiled_graph,
+        vectorized_ring_segments_flat,
+    )
     from ioverlay_spark.kernel.segments import Segments
     from ioverlay_spark.options import DEFAULT_OPTIONS, FillRule
 
@@ -365,16 +370,16 @@ def test_fill_gate_boundary(monkeypatch):
             assert np.array_equal(fill.compute_fills(segs, fr), fill.compute_fills_windowed(segs, fr))
         assert set(dtypes) == {np.dtype(want)}
 
-    # 16 jobs of thin 2^28-wide rectangles: tiled x extent ~2^32, H = 130
+    # 16 jobs of thin 2^28-wide rectangles: tiled x extent ~2^32, H <= 145
     def rect(x, y, w, h):
         return np.array([[x, y], [x + w, y], [x + w, y + h], [x, y + h]], dtype=np.int64)
 
     w = 1 << 28
     jobs = [([rect(0, 0, w, 100)], [rect(w // 2, 30 + j, w // 3, 100)]) for j in range(16)]
     dtypes.clear()
-    segs, fills, *_ = _tiled_graph(
-        *_flatten_jobs(jobs), len(jobs), FillRule.EVEN_ODD, DEFAULT_OPTIONS
-    )
+    t = vectorized_ring_segments_flat(*_flatten_jobs(jobs), DEFAULT_OPTIONS)
+    ((_, raw, xoff, _, W),) = _placed_chunks(t, len(jobs))
+    segs, fills, _ = _tiled_graph(raw, len(xoff), W, FillRule.EVEN_ODD)
     assert int(segs.bx.max()) - int(segs.ax.min()) >= 1 << 31
     assert dtypes == [np.dtype(np.int64)]
     assert np.array_equal(fills, fill.compute_fills(segs, FillRule.EVEN_ODD))

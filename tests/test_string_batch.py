@@ -106,7 +106,11 @@ def test_slice_batch_bit_identical():
             ys = y0 + h // 3
             cuts.append(np.array([[x0 - 16, ys], [x0 + w + 16, ys]], np.int64))
         jobs.append((body, cuts))
-    scalar = [slice_shape(b, ps) for b, ps in jobs]
-    batched = slice_batch(jobs)
-    for i, (s, b) in enumerate(zip(scalar, batched)):
-        assert _shape_key(s) == _shape_key(b), f"job {i} diverged"
+    # the same jobs moved by 2^40: the batch places them like the overlay batch
+    d = 1 << 40
+    far = [([r + d for r in b], [p + d for p in ps]) for b, ps in jobs]
+    for case in (jobs, far):
+        scalar = [slice_shape(b, ps) for b, ps in case]
+        batched = slice_batch(case)
+        for i, (s, b) in enumerate(zip(scalar, batched)):
+            assert _shape_key(s) == _shape_key(b), f"job {i} diverged"

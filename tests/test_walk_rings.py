@@ -44,8 +44,8 @@ def _check(cases, rule, clockwise=False):
 
 def _check_build(cases, want, rule, clockwise):
     for (s, f, mk), w in zip(cases, want):
-        r = walk_rings(s, mk, f, np.array([0, len(s)]), rule, clockwise,
-                       np.zeros(1, dtype=np.int64), 0)
+        z = np.zeros(1, dtype=np.int64)
+        r = walk_rings(s, mk, f, np.array([0, len(s)]), rule, clockwise, z, z)
         assert _contours(r) == w
     r = _walk_batch(cases, rule, clockwise)
     got, slot = _contours(r), r.slot.tolist()
@@ -56,13 +56,14 @@ def _check_build(cases, want, rule, clockwise):
 
 def _walk_batch(cases, rule, clockwise=False):
     """walk_rings over (segs, fills, mask) cases as the slots of one tiled
-    batch, case k shifted to x-tile k and y shifted by -y0 (rings come back
-    in case coordinates)."""
+    batch, case k shifted to x-tile k and up by yoff[k] (rings come back in
+    case coordinates)."""
     lo = min((int(s.ax.min()) for s, _, _ in cases if len(s)), default=0)
     hi = max((int(s.bx.max()) for s, _, _ in cases if len(s)), default=0)
-    W, y0 = hi - lo + 8, -3
+    W = hi - lo + 8
     off = np.arange(len(cases), dtype=np.int64) * W - lo
-    cols = [np.concatenate([getattr(s, c) + (off[k] if c[1] == "x" else -y0)
+    yoff = np.arange(len(cases), dtype=np.int64) * 5 + 3
+    cols = [np.concatenate([getattr(s, c) + (off[k] if c[1] == "x" else yoff[k])
                             for k, (s, _, _) in enumerate(cases)])
             for c in ("ax", "ay", "bx", "by")]
     n = np.array([len(s) for s, _, _ in cases])
@@ -70,7 +71,7 @@ def _walk_batch(cases, rule, clockwise=False):
     z = np.zeros(int(starts[-1]), dtype=np.int64)
     return walk_rings(
         Segments(*cols, z, z), np.concatenate([mk for _, _, mk in cases]),
-        np.concatenate([f for _, f, _ in cases]), starts, rule, clockwise, off, y0,
+        np.concatenate([f for _, f, _ in cases]), starts, rule, clockwise, off, yoff,
     )
 
 
@@ -262,8 +263,8 @@ def _loop_spans(cases, rule, batch=True):
             _walk_batch(cases, rule)
         else:
             for s, f, mk in cases:
-                walk_rings(s, mk, f, np.array([0, len(s)]), rule, False,
-                           np.zeros(1, dtype=np.int64), 0)
+                z = np.zeros(1, dtype=np.int64)
+                walk_rings(s, mk, f, np.array([0, len(s)]), rule, False, z, z)
     return len(spans)
 
 
