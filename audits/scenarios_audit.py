@@ -7,9 +7,12 @@ plus hull_holes (one hull DIFFERENCE k^2 holes, the hole binder's row; no
 reference number), hull_holes_far (the same plus one disjoint hull of the
 same size, one hull-width to the right: the scalar overlay() clusters it into
 two jobs and runs the batch kernel, so the row times the batch fill on one
-big tile) and lines_net_xor (n vertical x n horizontal strips of width 10 at
-spacing 20, XOR: one tile whose every strip crossing is a degree-4 node, the
-vectorized junction walk's largest single-tile case; no reference number) and
+big tile), lines_net (n vertical x n horizontal strips of width 10 at spacing
+20, INTERSECT, test_2_lines_net.rs: n^2 squares of area 100; one component,
+so the scalar overlay() runs the monolithic split, fill and walk on it),
+lines_net_xor (the same strips, XOR: one tile whose every strip crossing is a
+degree-4 node, the vectorized junction walk's largest single-tile case; no
+reference number) and
 not_overlap_far (not_overlap moved by (2^40, -2^40), with not_overlap's
 closed form: the batch kernel's tiles are position-independent, so the row
 should read as not_overlap's).
@@ -21,15 +24,18 @@ Usage:
     python audits/scenarios_audit.py windows 512 --spark  # distributed path (session.get_spark)
     python audits/scenarios_audit.py hull_holes 64 --spark --monolithic  # one hull, 64^2 holes
     python audits/scenarios_audit.py hull_holes_far 64 128  # batch kernel, one big tile
+    python audits/scenarios_audit.py lines_net 512 1024   # monolithic one-shot, peak RSS
     python audits/scenarios_audit.py lines_net_xor 128 256  # junction walk, one tile
     python audits/scenarios_audit.py not_overlap_far 128    # not_overlap far from the origin
     ... --reps 3
 
 Each row prints the measured wall (best of reps) with the CPU seconds of that
-rep (this process's threads on the scalar path; the driver, JVM and Python
+rep (the row's own threads on the scalar path; the driver, JVM and Python
 workers together with --spark), the closed-form oracle verdict where one
 exists, and the reference's published i32 multithreading-on s/op for that n
-(the comment blocks in the test_*.rs files)."""
+(the comment blocks in the test_*.rs files). A scalar row runs in its own
+child process and also prints that process's peak RSS (ru_maxrss), so one
+row's high-water mark never carries into the next."""
 import math
 import os
 import sys
@@ -51,6 +57,7 @@ REF = {
     "spiral": {65536: 0.0742, 262144: 0.3509, 524288: 0.7445},
     "not_overlap": {256: 0.036901, 512: 0.177118, 1024: 0.745187, 2048: 3.282416},
     "not_overlap_far": {},
+    "lines_net": {1024: 0.1452, 2048: 0.6222, 4096: 2.6878},
     "windows": {128: 0.010892, 256: 0.049875, 512: 0.224817, 1024: 1.007965},
     "hull_holes": {},
     "hull_holes_far": {},
@@ -65,6 +72,7 @@ DEFAULT_NS = {
     "spiral": [65536, 262144, 524288],
     "not_overlap": [256, 512, 1024],
     "not_overlap_far": [128, 256],
+    "lines_net": [256, 512],
     "windows": [128, 256, 512, 1024],
     "hull_holes": [64, 128, 256],
     "hull_holes_far": [64, 128],
@@ -79,6 +87,7 @@ RULES = {
     "spiral": OverlayRule.SUBJECT,
     "not_overlap": OverlayRule.UNION,
     "not_overlap_far": OverlayRule.UNION,
+    "lines_net": OverlayRule.INTERSECT,
     "windows": OverlayRule.DIFFERENCE,
     "hull_holes": OverlayRule.DIFFERENCE,
     "hull_holes_far": OverlayRule.DIFFERENCE,
@@ -138,6 +147,9 @@ def oracle(name: str, n: int, count: int, area2: int, base_cell_area2: int | Non
         )
     if name == "nested_squares":
         return count == 4 * n and area2 == 64 * n * n
+    if name == "lines_net":
+        # one 10 x 10 square per strip crossing
+        return count == n * n and (rings is None or rings == n * n) and area2 == 200 * n * n
     if name == "lines_net_xor":
         # the strips' union minus their n^2 crossing squares, w = 10, s = 10n
         w, s = LINES_NET_A // 2, LINES_NET_A * n // 2
@@ -168,7 +180,7 @@ def lines_net(n: int) -> tuple[list[np.ndarray], list[np.ndarray]]:
 def build_int_inputs(name: str, n: int):
     if name == "spiral":
         subj, clip = [spiral(n, 100.0)], []
-    elif name == "lines_net_xor":
+    elif name in ("lines_net", "lines_net_xor"):
         subj, clip = lines_net(n)
     elif name == "not_overlap_far":
         far = np.array([1 << 40, -(1 << 40)], dtype=np.int64)
@@ -189,32 +201,47 @@ def build_int_inputs(name: str, n: int):
     return subj, clip
 
 
-def run_scalar(name: str, ns: list[int], reps: int):
+def _scalar_row(name: str, n: int, reps: int) -> str:
+    """One scalar row, meant to run in a fresh child process."""
+    import resource
+
     base_cell = None
     if name == "wind_mill":
         s1 = overlay(*scenarios.wind_mill(1), RULES[name], FillRule.NON_ZERO)
         base_cell = sum(ring_area2(r) for sh in s1 for r in sh)
+    subj, clip = build_int_inputs(name, n)
+    npolys = len(subj) + len(clip)
+    best, cpu, count, area2 = float("inf"), 0.0, 0, 0
+    for _ in range(reps):
+        t0, c0 = time.perf_counter(), time.process_time()
+        shapes = overlay(subj, clip, RULES[name], FillRule.NON_ZERO)
+        wall = time.perf_counter() - t0
+        if wall < best:
+            best, cpu = wall, time.process_time() - c0
+        count = sum(1 for _ in shapes)
+        rings = sum(len(s) for s in shapes)
+        area2 = sum(ring_area2(r) for s in shapes for r in s)
+        del shapes
+    peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024  # KiB on Linux
+    ok = oracle(name, n, count, area2, base_cell, rings)
+    ref = REF[name].get(n)
+    return (
+        f"SCALAR {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s "
+        f"peak_rss={peak:.0f}MB shapes={count} "
+        f"rings={rings} area2={area2} oracle={'n/a' if ok is None else ok} "
+        f"ref_i32_mt={ref if ref is not None else 'n/a'}"
+        + (f" ratio={best/ref:.1f}x" if ref else "")
+    )
+
+
+def run_scalar(name: str, ns: list[int], reps: int):
+    import multiprocessing
+
+    # spawn, not fork: a forked child inherits this process's high-water mark
+    ctx = multiprocessing.get_context("spawn")
     for n in ns:
-        subj, clip = build_int_inputs(name, n)
-        npolys = len(subj) + len(clip)
-        best, cpu, count, area2 = float("inf"), 0.0, 0, 0
-        for _ in range(reps):
-            t0, c0 = time.perf_counter(), time.process_time()
-            shapes = overlay(subj, clip, RULES[name], FillRule.NON_ZERO)
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best, cpu = wall, time.process_time() - c0
-            count = sum(1 for _ in shapes)
-            rings = sum(len(s) for s in shapes)
-            area2 = sum(ring_area2(r) for s in shapes for r in s)
-        ok = oracle(name, n, count, area2, base_cell, rings)
-        ref = REF[name].get(n)
-        print(
-            f"SCALAR {name} n={n} polys={npolys} wall={best:.3f}s cpu={cpu:.3f}s shapes={count} "
-            f"rings={rings} area2={area2} oracle={'n/a' if ok is None else ok} "
-            f"ref_i32_mt={ref if ref is not None else 'n/a'}"
-            + (f" ratio={best/ref:.1f}x" if ref else "")
-        )
+        with ctx.Pool(1) as pool:
+            print(pool.apply(_scalar_row, (name, n, reps)), flush=True)
 
 
 def run_spark(name: str, ns: list[int], reps: int, monolithic: bool = False):

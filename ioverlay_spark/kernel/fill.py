@@ -20,6 +20,15 @@ compute_fills_windowed is the one fill every pipeline calls: a segment tree over
 the set in local coordinates, on int64 operands under int64_operands' gate and on
 python ints past it. compute_fills, the dense O(n^2) ray-cast, is the oracle the
 tests compare against.
+
+Working set: a tree of M members holds about 36 B per member, and its build
+peaks near 63 B per member (segtree_build drops each temporary after its last
+use). Queries go to the tree in blocks of at most _PAIR_BLOCK (query, node)
+pairs, so the bisection state is bounded by the block, not by the set. A
+threaded one-shot splits the set into at least n / _STRIP_TARGET x-strips and
+holds at most `threads` strip trees at a time. The two constants trade memory
+for per-call python overhead (_PAIR_BLOCK) and for long segments copied into
+several strips (_STRIP_TARGET).
 """
 
 from __future__ import annotations
@@ -151,7 +160,8 @@ def _local_operands(segs: Segments):
 
 
 def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
-    """Thread count for the segtree's bisection loop. None = auto: engage only
+    """Thread count for the segtree's bisection loop (segtree_below's slices,
+    _windings_segtree's query blocks). None = auto: engage only
     for large jobs (the loop is gather-LATENCY-bound and numpy releases the
     GIL, so threads scale ~6-9x on it — measured; small jobs would pay pool
     overhead). Callers running inside an already-parallel executor (the
@@ -163,6 +173,18 @@ def _resolve_fill_threads(threads: int | None, n_pairs: int) -> int:
         return 1
     return min(8, os.cpu_count() or 1)
 
+
+# (query, node) pairs per segtree_below call in _windings_segtree, at most: a
+# block takes _PAIR_BLOCK // depth queries, since a query meets at most one
+# node per level. Smaller blocks bound the working set tighter and pay more
+# python overhead per query; sizing by pairs rather than queries keeps the
+# numpy calls of a shallow tree (one pair per query) as large as a deep one's.
+_PAIR_BLOCK = 1 << 17
+# segments per strip tree in _windings_segtree_strips: a one-shot of n
+# segments cuts at least n / _STRIP_TARGET strips, so k threads hold k strip
+# trees of O(_STRIP_TARGET) members. Smaller strips bound the working set
+# tighter and copy more long segments into several strips.
+_STRIP_TARGET = 1 << 16
 
 # segtree_build's tree: leaf boundaries B (nL leaves padded to nP), CSR rows
 # per heap-numbered node (start/cnt), each row's segment index sid and its four
@@ -183,50 +205,59 @@ def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
     midpoint (int64 floor + remainder key, float tiebreak, exact adjacent
     verification with a python re-sort of the rare float-ambiguous nodes).
 
+    The build holds at most five member-sized (8-byte) arrays at a time: each
+    temporary is dropped, or reused in place, once its last reader has run.
     int64 operands need int64_operands' gate (every product here is bounded
     there); python-int (object) operand arrays run the same code at any
     width."""
     mem = np.flatnonzero(tbx > tax)
     if len(mem) == 0:
         return None
-    B = np.unique(np.concatenate([2 * tax[mem], 2 * tbx[mem]]))
+    ax2, bx2 = 2 * tax[mem], 2 * tbx[mem]
+    B = np.unique(np.concatenate([ax2, bx2]))
     nL = len(B) - 1
     nP = 1 << max(0, int(nL - 1).bit_length())
-    lo_leaf = np.searchsorted(B, 2 * tax[mem])
-    hi_leaf = np.searchsorted(B, 2 * tbx[mem])
+    lo_leaf = np.searchsorted(B, ax2)
+    hi_leaf = np.searchsorted(B, bx2)
+    del ax2, bx2
 
-    # canonical decomposition (<=2 nodes per level each), heap-numbered
-    levels = [
-        canonical_blocks(lo_leaf, hi_leaf, k)
-        for k in range(int((hi_leaf - lo_leaf).max()).bit_length())
-    ]
-    node = np.concatenate([blk + (nP >> k) for k, (blk, _) in enumerate(levels)])
-    sid = mem[np.concatenate([own for _, own in levels])]
-
-    # node x-interval midpoint (exact rational NUM/DEN, local coords); 2-key
-    # sort (node, float y) — exact adjacent verification below repairs the
-    # rare float-ambiguous nodes
-    depth = np.frexp(node.astype(np.float64))[1] - 1  # floor(log2 node), exact
-    szlog = (int(nP).bit_length() - 1) - depth
-    nlo = (node << szlog) - nP
-    nhi = np.minimum(nlo + (np.int64(1) << szlog), nL)
-    # NUM = 4*tay[sid]*edt + edy*(m_num - 4*tax[sid]), built in place: the
-    # expression form allocates ~8 M-sized temporaries (page-fault bound on
-    # one-shots); this form touches 3. Products identical (int64 throughout).
-    edt = (tbx - tax)[sid]
-    edy = (tby - tay)[sid]
-    NUM = B[nlo]
-    NUM += B[nhi]  # m_num
+    # canonical decomposition (<=2 nodes per level each), heap-numbered: a
+    # level-k block blk is node blk + (nP >> k) over leaves
+    # [lo, hi) = [blk << k, min((blk + 1) << k, nL)), and m_num = B[lo] + B[hi]
+    # is four times its x-interval midpoint
+    node_parts, own_parts, num_parts = [], [], []
+    for k in range(int((hi_leaf - lo_leaf).max()).bit_length()):
+        blk, own = canonical_blocks(lo_leaf, hi_leaf, k)
+        lo = blk << k
+        m_num = B[lo]
+        m_num += B[np.minimum(lo + (1 << k), nL)]
+        blk += nP >> k
+        node_parts.append(blk)
+        own_parts.append(own)
+        num_parts.append(m_num)
+    del lo_leaf, hi_leaf, blk, own, lo, m_num
+    node = np.concatenate(node_parts)
+    del node_parts
+    sid = np.concatenate(own_parts)
+    del own_parts
+    sid = mem[sid]
+    NUM = np.concatenate(num_parts)
+    del num_parts
+    # node x-interval midpoint (exact rational NUM/DEN, local coords):
+    # NUM = 4*tay[sid]*edt + edy*(m_num - 4*tax[sid]), DEN = 2*edt, built in
+    # place on one scratch array (int64 throughout, or python ints)
     tmp = tax[sid]
     tmp <<= 2  # 4*tax[sid] (local coords are >= 0)
     NUM -= tmp
-    NUM *= edy
+    np.take(tby - tay, sid, out=tmp)  # edy
+    NUM *= tmp
     np.take(tay, sid, out=tmp)
     tmp <<= 2
-    tmp *= edt
+    DEN = (tbx - tax)[sid]  # edt
+    tmp *= DEN
     NUM += tmp
     del tmp
-    DEN = 2 * edt
+    DEN *= 2
     # (node, y) sort. Fast path: pack node | y-fraction | index into ONE uint64
     # and np.sort it — a direct sort of packed keys is ~7x an indirect float
     # argsort (measured). Node bits lead, so node grouping is exact by
@@ -248,32 +279,43 @@ def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
         # One y level (yspan 0) keys every row 0: the scale would be inf and
         # 0 * inf a NaN key
         fscale = float(1 << bits_frac) / (yspan * (1.0 + 1e-6)) if yspan > 0 else 0.0
-        sc = yf - ylo
-        sc *= fscale
-        fint = sc.astype(np.uint64)
-        del sc
-        np.minimum(fint, np.uint64((1 << bits_frac) - 1), out=fint)
-        key = node.astype(np.uint64)
-        key <<= np.uint64(bits_frac + bits_idx)
-        fint <<= np.uint64(bits_idx)
-        key |= fint
-        del fint
+        yf -= ylo
+        yf *= fscale
+        key = yf.astype(np.uint64)
+        del yf
+        np.minimum(key, np.uint64((1 << bits_frac) - 1), out=key)
+        key <<= np.uint64(bits_idx)
+        hi = node.astype(np.uint64)
+        del node
+        hi <<= np.uint64(bits_frac + bits_idx)
+        key |= hi
+        del hi
         key |= np.arange(M, dtype=np.uint64)
         key.sort()
-        order = (key & np.uint64((1 << bits_idx) - 1)).astype(np.int64)
+        # the sorted keys carry both the sorted node column and the order
+        node = (key >> np.uint64(bits_frac + bits_idx)).view(np.int64)
+        key &= np.uint64((1 << bits_idx) - 1)
+        order = key.view(np.int64)
+        del key
     else:
         frac = (yf - ylo) / (yspan * (1.0 + 1e-6) + 1e-300)
         order = np.argsort(node + frac, kind="stable")
+        del frac
         if not np.all(np.diff(node[order]) >= 0):
             order = np.lexsort((yf, node))
-    node = node[order]
+        del yf
+        node = node[order]
     sid = sid[order]
     NUM = NUM[order]
     DEN = DEN[order]
+    del order
     # exact adjacent verification of the float order (transitivity makes
     # adjacent checks sufficient): y_i <= y_j  <=>  (q, r*DEN-cross) ordered
     qk = NUM // DEN
-    rk = NUM - qk * DEN
+    tmp = qk * DEN
+    NUM -= tmp
+    rk = NUM  # remainder, in NUM's storage
+    del NUM, tmp
 
     def inversions():
         return (node[1:] == node[:-1]) & (
@@ -330,28 +372,30 @@ def segtree_build(tax, tay, tbx, tby) -> SegTree | None:
     # CSR over node-id space; predicate operands as four 1-D arrays (numpy's
     # 1-D integer gather is ~2x a 2-D row gather — measured) with pairs sorted
     # by node below so the gathers are quasi-sequential
+    del qk, rk, DEN
     n_nodes = 2 * nP
     cnt = np.bincount(node, minlength=n_nodes)
+    del node
     start = np.zeros(n_nodes + 1, dtype=np.int64)
     np.cumsum(cnt, out=start[1:])
-    edt = (tbx - tax)[sid]
-    enum0 = 2 * tay[sid] * edt
-    edy = (tby - tay)[sid]
-    eax2 = 2 * tax[sid]
     # bisection gathers are the fill's hot loop and memory-latency-bound: when
     # doubled local coordinates fit int32 (always under the 2^30 grid; the
     # wide-coordinate path keeps int64) narrow the three coordinate-scale
     # operand arrays — numpy upcasts int32*int64 -> int64 inside the predicate,
     # so every product is computed in int64 exactly as before (bit-identical;
     # pinned by the fill differentials). enum0 is a coordinate PRODUCT and
-    # stays int64 unconditionally.
+    # stays int64 unconditionally. Narrowing the per-segment columns before
+    # the gather leaves no member-sized int64 copy behind.
     cmax2 = 2 * max(
         (int(a.max()) for a in (tax, tay, tbx, tby) if len(a)), default=0
     )
+    dt, dy, ax2 = tbx - tax, tby - tay, 2 * tax
     if 0 < cmax2 < 2**31:
-        edt = edt.astype(np.int32)
-        edy = edy.astype(np.int32)
-        eax2 = eax2.astype(np.int32)
+        dt, dy, ax2 = (v.astype(np.int32) for v in (dt, dy, ax2))
+    edt, edy, eax2 = dt[sid], dy[sid], ax2[sid]
+    enum0 = tay[sid]
+    enum0 *= 2
+    enum0 *= edt
     return SegTree(B, nL, nP, start, cnt, sid, enum0, edy, edt, eax2)
 
 
@@ -388,14 +432,16 @@ def segtree_below(
         pv_parts.append(v[m])
     lvl_off = np.cumsum([0] + [len(a) for a in pq_parts]).tolist()
     PQ = np.concatenate(pq_parts)
+    del pq_parts
     PV = np.concatenate(pv_parts)
+    del pv_parts, qs, leaf, v, m
 
     def _bisect(sl: slice) -> np.ndarray:
         # vectorized binary search over each query's node-member prefix; the
         # mid-indexed gathers dominate (latency-bound), so callers may run
         # several slices on threads — numpy releases the GIL here
         PVs = PV[sl]
-        plo = start[PVs].copy()
+        plo = start[PVs]
         phi = plo + cnt[PVs]
         Xq = Xi[PQ[sl]]
         Tq = Ti[PQ[sl]]
@@ -442,6 +488,13 @@ def _windings_segtree(
     query, and per-node prefix weight sums over each query's strictly-below
     prefixes finish the count.
 
+    The queries, sorted by leaf once, go to segtree_below in blocks of
+    _PAIR_BLOCK // depth, and each block's windings are added as it
+    finishes: the (query, node) pair arrays hold at most _PAIR_BLOCK pairs,
+    not the whole set's. threads > 1 (or None on a large set,
+    _resolve_fill_threads) runs the blocks on a pool, so that many blocks
+    are live at once.
+
     Ray-at-midpoint semantics (identical to _windings_below), hence valid on
     strip SUBSETS and on tiled batches too. Operands are _local_operands': int64
     under int64_operands' gate, python ints past it.
@@ -455,28 +508,57 @@ def _windings_segtree(
     tree = segtree_build(tax, tay, tbx, tby)
     if tree is None:
         return wind_s, wind_c
+    Xi, Ti = tax + tbx, tay + tby
+    del tax, tay, tbx, tby
     # zero-weight sides (self-union, string fills: clip empty) skip their
     # prefix sums and accumulation entirely
-    has_subj = bool(np.any(segs.subj))
-    has_clip = bool(np.any(segs.clip))
-    PQ, PV, plo, _ = segtree_below(tree, tax + tbx, tay + tby, threads)
-    if not len(PQ):
-        return wind_s, wind_c
-    base = tree.start[PV]
-    for has, w, wind in ((has_subj, segs.subj, wind_s), (has_clip, segs.clip, wind_c)):
-        if has:
-            cs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(w[tree.sid])])
-            wind += np.bincount(
-                PQ, weights=(cs[plo] - cs[base]).astype(np.float64), minlength=n
+    sides = [
+        (np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(w[tree.sid])]), wind)
+        for w, wind in ((segs.subj, wind_s), (segs.clip, wind_c))
+        if np.any(w)
+    ]
+    p = np.searchsorted(tree.B, Xi, side="right") - 1
+    qs = np.flatnonzero((p >= 0) & (p < tree.nL))
+    qs = qs[np.argsort(p[qs], kind="stable")]
+    del p
+
+    levels = int(tree.nP).bit_length()
+    step = max(1, _PAIR_BLOCK // levels)
+
+    def block(b: int):
+        q = qs[b : b + step]
+        PQ, PV, plo, _ = segtree_below(tree, Xi[q], Ti[q], threads=1)
+        base = tree.start[PV]
+        return q, [
+            np.bincount(
+                PQ, weights=(cs[plo] - cs[base]).astype(np.float64), minlength=len(q)
             ).astype(np.int64)
+            for cs, _ in sides
+        ]
+
+    def add(parts) -> None:
+        for q, sums in parts:
+            for (_, wind), sm in zip(sides, sums):
+                wind[q] += sm
+
+    blocks = range(0, len(qs), step)
+    # about half of a query's root-to-leaf nodes hold members
+    k = _resolve_fill_threads(threads, len(qs) * (levels // 2))
+    if k <= 1 or len(blocks) <= 1:
+        add(map(block, blocks))
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(min(k, len(blocks))) as ex:
+            add(ex.map(block, blocks))
     return wind_s, wind_c
 
 
 def _windings_segtree_strips(
     segs: Segments, k: int
 ) -> tuple[np.ndarray, np.ndarray] | None:
-    """Strip-parallel _windings_segtree: k independent segment trees over
-    x-strips, run on threads.
+    """Strip-parallel _windings_segtree: independent segment trees over
+    x-strips, run on a pool of k threads.
 
     Correctness rests on the same subset-safety the distributed x-strip fill
     uses: a downward ray at doubled-x Xi crosses segment t iff
@@ -486,49 +568,60 @@ def _windings_segtree_strips(
     tree answers its own queries with no cross-strip information needed.
     Borrowed members (x-interval overlaps the strip, midpoint outside) get
     queried too; their answers are DISCARDED — their own strip computes them
-    against the full relevant subset. Strips split at query-midpoint quantiles
-    (balanced query load); the duplication guard returns None (caller falls
-    back to the single tree) when long segments would make Σ|subset| > 2.5 n —
+    against the full relevant subset. Bit-identical to the single tree (same
+    predicate; differential-tested).
+
+    Strips split at query-midpoint quantiles (balanced query load), and there
+    are max(k, ceil(n / _STRIP_TARGET)) of them, so at most k strip trees of
+    O(_STRIP_TARGET) members each are live at once. Every segment's strips
+    are one run; the subsets are cut from one stable sort of (segment, strip)
+    copies by strip. The duplication guard returns None (caller falls back to
+    the single tree) when long segments would make the copies exceed 2.5 n —
     per-strip trees are smaller AND everything (sort, decomposition, bisection)
-    runs in parallel, vs the single tree that threads only its bisection loop.
-    Bit-identical to the single tree (same predicate; differential-tested).
+    runs in parallel, vs the single tree that threads only its query blocks.
     Sets past int64_operands' gate also return None: python-int trees hold the
     GIL, so threads would not pay."""
     n = len(segs)
     tax, _, tbx, _ = _local_operands(segs)
     if tax.dtype == object:
         return None
-    ax2 = 2 * tax
-    bx2 = 2 * tbx
     Xi = tax + tbx
-    qsort = np.sort(Xi)
-    edges = np.unique(qsort[np.arange(1, k) * n // k])
+    n_strips = max(k, -(-n // _STRIP_TARGET))
+    edges = np.unique(np.sort(Xi)[np.arange(1, n_strips) * n // n_strips])
     if len(edges) == 0:
         return None
-    sid = np.searchsorted(edges, Xi, side="right")
     n_strips = len(edges) + 1
-    # duplication guard: subset size per strip via sorted-endpoint counting
-    sa = np.sort(ax2)
-    sb = np.sort(bx2)
-    lo_e = np.concatenate([[np.iinfo(np.int64).min], edges])
-    hi_e = np.concatenate([edges, [np.iinfo(np.int64).max]])
-    n_over = (
-        np.searchsorted(sa, hi_e, side="left")  # ax2 < hi
-        - np.searchsorted(sb, lo_e, side="right")  # minus bx2 <= lo
-    )
-    if int(np.maximum(n_over, 0).sum()) > int(2.5 * n):
+    # strip run of each segment: first strip with 2*ax < hi, last with
+    # 2*bx > lo; a vertical segment on an edge reaches none of them and keeps
+    # only its home strip (the one holding its midpoint)
+    home = np.searchsorted(edges, Xi, side="right")
+    s_lo = np.searchsorted(edges, 2 * tax, side="right")
+    s_hi = np.searchsorted(edges, 2 * tbx, side="left")
+    del Xi, tax, tbx
+    copies = np.maximum(s_hi, s_lo) - s_lo + 1
+    total = int(copies.sum())
+    if total > int(2.5 * n):
         return None
+    rep = np.repeat(np.arange(n, dtype=np.int64), copies)
+    strip = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(copies) - copies, copies)
+    strip += s_lo[rep]
+    order = np.argsort(strip, kind="stable")
+    rep = rep[order]
+    strip = strip[order]
+    del order
+    is_home = strip == home[rep]
+    bounds = np.searchsorted(strip, np.arange(n_strips + 1))
+    del strip
     wind_s = np.zeros(n, dtype=np.int64)
     wind_c = np.zeros(n, dtype=np.int64)
 
     def work(s: int):
-        sub = np.flatnonzero(
-            ((bx2 > lo_e[s]) & (ax2 < hi_e[s])) | (sid == s)
-        )
-        if not len(sub):
+        lo, hi = bounds[s], bounds[s + 1]
+        if lo == hi:
             return None
+        sub = rep[lo:hi]
         ws, wc = _windings_segtree(segs.take(sub), threads=1)
-        keep = sid[sub] == s
+        keep = is_home[lo:hi]
         return sub[keep], ws[keep], wc[keep]
 
     from concurrent.futures import ThreadPoolExecutor
@@ -565,7 +658,12 @@ def compute_fills_windowed(
     threads=1 runs one tree on the calling thread (callers inside a Spark task
     or a batch kernel). Unset, a one-shot of >= 48k segments builds
     strip-parallel trees on a pool (_windings_segtree_strips) and a large
-    single tree threads its bisection loop (_resolve_fill_threads)."""
+    single tree runs its query blocks on a pool (_resolve_fill_threads).
+
+    Working set beyond the input and the result: one tree's build (about
+    63 B per member) plus one block of at most _PAIR_BLOCK query-node pairs
+    on one thread; with strips, that times the pool's threads, for trees of
+    O(_STRIP_TARGET) segments each."""
     n = len(segs)
     if n == 0:
         return np.zeros(0, dtype=np.uint8)

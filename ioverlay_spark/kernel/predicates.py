@@ -100,8 +100,9 @@ def relate(
     segs = sort_and_merge(
         Segments.concat([build_segments(subj, True), build_segments(clip, False)])
     )
-    segs = split_segments(segs, threads=1)  # runs per pair inside relate_df tasks
-    fills = compute_fills_windowed(segs, fill_rule)
+    # runs per pair inside relate_df tasks: no thread pools
+    segs = split_segments(segs, threads=1)
+    fills = compute_fills_windowed(segs, fill_rule, threads=1)
     return Relation(segs, fills)
 
 

@@ -58,23 +58,25 @@ def _drop_collinear(pts: np.ndarray) -> np.ndarray:
     vertex p1 is dropped when cross(p1-p0, p1-p2) == 0 (straight-through AND spikes).
     """
     pts = np.asarray(pts, dtype=np.int64).reshape(-1, 2)
-    # int64 cross products of diffs are exact only below 2^31 magnitude; beyond that,
-    # compute in Python-int (object) space to avoid wraparound
-    big = len(pts) > 0 and int(np.abs(pts).max()) >= (1 << 30)
+    if len(pts) < 3:
+        return pts[:0]
+    # crosses on offsets from the ring's own min corner (uint64 differences:
+    # exact at any position); int64 products of their differences are exact
+    # while the ring's extent stays below 2^31, python ints (object) past it
+    x, y = (c.view(np.uint64) - c.min().view(np.uint64) for c in (pts[:, 0], pts[:, 1]))
+    wide = int(max(x.max(), y.max())) >= 1 << 31
+    x, y = (c.astype(object) if wide else c.view(np.int64) for c in (x, y))
+    kept = np.arange(len(pts))
     while True:
-        n = len(pts)
-        if n < 3:
+        if len(kept) < 3:
             return pts[:0]
-        work = pts.astype(object) if big else pts
-        prev = np.roll(work, 1, axis=0)
-        nxt = np.roll(work, -1, axis=0)
-        a = work - prev  # p1 - p0
-        b = work - nxt  # p1 - p2
-        cross = a[:, 0] * b[:, 1] - a[:, 1] * b[:, 0]
-        keep = cross != 0
+        # cross(p1 - p0, p1 - p2) at every vertex p1
+        dx0, dy0 = x - np.roll(x, 1), y - np.roll(y, 1)
+        dx2, dy2 = x - np.roll(x, -1), y - np.roll(y, -1)
+        keep = dx0 * dy2 - dy0 * dx2 != 0
         if keep.all():
-            return pts
-        pts = pts[keep]
+            return pts if len(kept) == len(pts) else pts[kept]
+        kept, x, y = kept[keep], x[keep], y[keep]
 
 
 def _dedup_consecutive(pts: np.ndarray) -> np.ndarray:

@@ -44,6 +44,41 @@ class TestSegments:
         merged = sort_and_merge(type(a).concat([a, b]))
         assert len(merged) == 0
 
+    def test_drop_collinear_gates_on_extent(self, monkeypatch):
+        """The dirty-ring cleanup works on offsets from the ring's own min
+        corner: a far copy of a ring cleans to the same ring, shifted, on int64
+        crosses; only an extent of 2^31 or more takes python ints."""
+        from ioverlay_spark.kernel import segments
+
+        rolled = []
+
+        class NpSpy:
+            def __getattr__(self, name):
+                return getattr(np, name)
+
+            def roll(self, a, *args, **kw):
+                rolled.append(a.dtype)
+                return np.roll(a, *args, **kw)
+
+        monkeypatch.setattr(segments, "np", NpSpy())
+        t = np.linspace(0.0, 2 * np.pi, 20_000, endpoint=False)
+        ring = np.round(np.stack([np.cos(t), np.sin(t)], axis=1) * 1e7).astype(np.int64)
+        ring = np.insert(ring, 7, ring[7], axis=0)  # one duplicate vertex
+        near = segments._drop_collinear(ring)
+        assert 0 < len(near) < len(ring)
+        shift = np.array([1 << 40, -(1 << 40)], dtype=np.int64)
+        rolled.clear()
+        far = segments._drop_collinear(ring + shift)
+        assert np.array_equal(far, near + shift)
+        assert rolled and np.dtype(object) not in rolled
+        # a 2^40-wide square with a collinear vertex: python-int crosses
+        big = np.array([[0, 0], [1 << 39, 0], [1 << 40, 0], [1 << 40, 1 << 40], [0, 1 << 40]])
+        rolled.clear()
+        assert segments._drop_collinear(big).tolist() == [
+            [0, 0], [1 << 40, 0], [1 << 40, 1 << 40], [0, 1 << 40]
+        ]
+        assert set(rolled) == {np.dtype(object)}
+
 
 class TestSplit:
     def test_crossing_squares_split(self):

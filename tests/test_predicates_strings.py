@@ -51,6 +51,42 @@ class TestPredicates:
         r = relate([], sq(0, 0, 10))
         assert not r.within and r.disjoint
 
+    def test_large_pair_starts_no_thread_pool(self, monkeypatch):
+        """relate runs once per pair inside relate_df tasks, so a pair past
+        the fill's strip threshold (48k segments) must still start no pool."""
+        import concurrent.futures
+
+        from ioverlay_spark.kernel import fill, predicates
+
+        pools, strips, sizes = [], [], []
+        real_pool = concurrent.futures.ThreadPoolExecutor
+        real_strips = fill._windings_segtree_strips
+        real_fill = predicates.compute_fills_windowed
+
+        def fill_spy(segs, *a, **k):
+            sizes.append(len(segs))
+            return real_fill(segs, *a, **k)
+
+        def pool_spy(*a, **k):
+            pools.append(a)
+            return real_pool(*a, **k)
+
+        def strips_spy(*a, **k):
+            strips.append(a[1:])
+            return real_strips(*a, **k)
+
+        monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", pool_spy)
+        monkeypatch.setattr(fill, "_windings_segtree_strips", strips_spy)
+        monkeypatch.setattr(predicates, "compute_fills_windowed", fill_spy)
+        # two 25,000-vertex circles overlapping by half a radius
+        t = np.linspace(0.0, 2 * np.pi, 25_000, endpoint=False)
+        ring = np.stack([np.cos(t), np.sin(t)], axis=1) * 100_000_000
+        a = np.round(ring).astype(np.int64)
+        r = relate([a], [a + np.array([50_000_000, 0])])
+        assert sizes and sizes[0] >= 50_000
+        assert r.interiors_intersect and not r.within
+        assert pools == [] and strips == []
+
 
 class TestClip:
     def test_cross_clip(self):
